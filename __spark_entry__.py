@@ -17773,26 +17773,6 @@ _SQL_DEDUP_STREAM_NEARDUP_DOCUMENTS = _stream_neardup_sql()
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
-# Family index (one line per name-prefix; counts are maintained by
-# tests/test_registry_sample.py::test_family_index_matches_census —
-# run `python tools/check_oracle.py <sf> --family <prefix>` for a slice):
-#   reference parity ........ flagship(1) f*(18) a1(3) a7(2) j(1)
-#                             j3(1) w1(2) w5(1) staged(5) batched(1)
-#   text/quality/lm ......... text(18) quality(5) lm(1) pii(1)
-#   dedup/similarity ........ dedup(23) ann(5) pq(3) emb(5) bitext(1)
-#                             cluster(1) er(1) fuzzy(3) retrieval(6)
-#   pipeline/curation ....... pipe(33) pipeline(1) curation(2) dsir(2)
-#                             enc(1) features(5) classify(2)
-#   events/timeseries ....... events(13) ts(24) asof(4) range(1)
-#                             funnel(1) attrib(1) bandit(1)
-#   analytics/metrics ....... analytics(26) metrics(13) profile(8)
-#                             sketch(5) basket(2) rec(1)
-#   ml/graph/spatial ........ ml(10) graph(8) spatial(3)
-#   multimodal/web ingest ... mm(42) mq(2) wds(1) pdf(1) html(1)
-#                             robots(1) charset(1) warc(1) web(3)
-#                             sitemap(1)
-#   storage/ops ............. cdc(5) dq(4) io(1) ivm(1) layout(2)
-#                             privacy(5)
 
 _QUERIES: dict = {
     "flagship_supplier_scoring": (_flagship, _FLAGSHIP_SQL),
@@ -18451,101 +18431,14 @@ _QUERIES: dict = {
 }
 
 
-# The driver's correctness gate samples the FIRST 50 keys of queries().
-# Insertion order of _QUERIES froze that sample at the round-1/2 wave, so
-# later operator families never earned a driver-verified green row.  This
-# curated sample is emitted first: ~15 reference-parity cores plus one
-# query per post-r2 family (dedup exact/minhash/simhash/embedding, ANN/
-# IVF/PQ, k-means, event windows/sessionize, as-of/range join, pipeline
-# decontam/BPE/packing/mixture, LM scoring, multimodal decode/probe/
-# WebDataset/PDF, web ingest HTML/WARC, graph, timeseries, sketch,
-# metrics, CDC, privacy, spatial, streaming batch-twin).  All 50 carry
-# value oracles.  The remaining keys follow in original insertion order —
-# the full registry is unchanged as a set.
-#: Round-10 rotation (VERDICT r9 task 2): 35 of the 50 keys are queries
-#: that have NEVER had a driver-verified artifact row (absent from every
-#: CORRECTNESS_r*.json through r09), while the flagship and one anchor
-#: per §2 core family stay pinned.  Rotate ~20 keys per round toward the
-#: never-verified tail; keep tests/test_registry_sample.py green.
-_DRIVER_SAMPLE = [
-    # reference-parity core (SURVEY §2.1-2.8): flagship + one anchor
-    # per family (criteria/agg/join/window/staged/batched); the A-family
-    # anchor rotated to the never-verified GK-sketch quantile path
-    "flagship_supplier_scoring",
-    "f1_linear_supplier",
-    "f11_bonus_tiers_part",
-    "a1_approx_quantiles_lineitem",
-    "j3_zscore_orders",
-    "w1_eval_rank_part",
-    "w5_winner_part",
-    "staged_threshold_orders",
-    "batched_linear_orders",
-    # r11 additions the driver has never verified (VERDICT r11 task 3's
-    # explicit list)
-    "mm_truepeak_documents",
-    "mm_mp3_inventory_documents",
-    "mm_mp4_inventory_documents",
-    "mm_ogg_inventory_documents",
-    "mm_webp_inventory_documents",
-    "mm_media_census_documents",
-    "dedup_span_removal_documents",
-    "dedup_incremental_minhash_documents",
-    "privacy_ccn_luhn_documents",
-    "emb_hard_negatives_embeddings",
-    # never-driver-verified breadth across the remaining families
-    # (+ the r12 census-routed funnel headliner)
-    "pipe_media_funnel_documents",
-    "dedup_keep_best_documents",
-    "mq_image_quality_documents",
-    "mm_jpeg_decode_documents",
-    "mm_webp_decode_documents",
-    "mm_mp3_sideinfo_documents",
-    "mm_audio_fingerprint_documents",
-    "mm_video_signature_documents",
-    "ts_changepoint_events",
-    "ts_km_summary_events",
-    "analytics_ab_test_events",
-    "analytics_gini_orders",
-    "graph_triangles_events",
-    "ml_gbm_stumps_lineitem",
-    "ml_knn_embeddings",
-    "retrieval_ndcg_embeddings",
-    "pipe_contamination_report_documents",
-    "pipe_split_documents",
-    "sketch_hll_by_group_documents",
-    "dq_audit_orders",
-    "fuzzy_join_supplier_names",
-    "io_footer_stats_orders",
-    "text_zipf_slope_documents",
-    # per-family continuity anchors (stay driver-verified every round;
-    # mm_audio_curation is the r11 composition headliner kept warm)
-    "dedup_exact_documents",
-    "dedup_minhash_candidates_documents",
-    "events_tumbling_hour",
-    "dedup_stream_neardup_documents",
-    "warc_ingest_documents",
-    "graph_lpa_lineitem",
-    "lm_perplexity_documents",
-    "mm_audio_curation_documents",
-]
-
-
-def _sampled_first(d: dict) -> dict:
-    """Reorder ``d`` so _DRIVER_SAMPLE keys come first (sample order),
-    followed by every other key in original insertion order."""
-    head = {k: d[k] for k in _DRIVER_SAMPLE if k in d}
-    return head | {k: v for k, v in d.items() if k not in head}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ extensions)."""
-    return _sampled_first({name: fn for name, (fn, _) in _QUERIES.items()})
+    return {name: fn for name, (fn, _) in _QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (None-oracle queries omitted)."""
-    return _sampled_first(
-        {name: sql for name, (_, sql) in _QUERIES.items() if sql is not None})
+    return {name: sql for name, (_, sql) in _QUERIES.items() if sql is not None}
 
 
 def deep_queries() -> dict[str, tuple]:
