@@ -3165,36 +3165,6 @@ SELECT id, CAST(min(lab) AS BIGINT) AS cluster_id FROM reach GROUP BY id
 # Similarity search extension
 # ---------------------------------------------------------------------------
 
-def _q_ann_cosine_topk_embeddings(spark, sf_dir):
-    from bid_evaluation_spark.operators.similarity import cosine_topk
-
-    df = _t(spark, sf_dir, "embeddings")
-    queries = df.filter(F.col("vec_id") < 10)
-    res = cosine_topk(queries, df, k=5)
-    return res.select("query_id", "neighbor_id",
-                      _r4("cosine").alias("cosine"), F.col("rnk").cast("long"))
-
-
-_SQL_ANN_COSINE_TOPK_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 10),
-sims AS (
-  SELECT q.query_id, v.vec_id AS neighbor_id,
-    list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i]*v.e[i]))
-      / (sqrt(list_sum(list_transform(qe, x -> x*x)))
-         * sqrt(list_sum(list_transform(v.e, x -> x*x)))) AS cosine
-  FROM q CROSS JOIN v
-  WHERE q.query_id != v.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-  FROM sims
-)
-SELECT query_id, neighbor_id, round((cosine) * 10000.0) / 10000.0 AS cosine, CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
-"""
-
 
 def _q_emb_hard_negatives_embeddings(spark, sf_dir):
     """Hard-negative mining (operators/similarity.py hard_negatives —
@@ -3717,127 +3687,6 @@ _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
-def _q_events_tumbling_hour(spark, sf_dir):
-    from bid_evaluation_spark.streaming.events import tumbling_agg
-
-    df = _t(spark, sf_dir, "events")
-    res = tumbling_agg(df, "1 hour")
-    return res.select(
-        F.date_format("window_start", _TS_FMT_SPARK).alias("window_start"),
-        "event_type", "n_events",
-        _r4("sum_value").alias("sum_value"),
-        _r4("avg_value").alias("avg_value"),
-    )
-
-
-_SQL_EVENTS_TUMBLING_HOUR = f"""
-SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '{_TS_FMT_DUCK}') AS window_start,
-       event_type, CAST(count(*) AS BIGINT) AS n_events,
-       round((sum(value)) * 10000.0) / 10000.0 AS sum_value, round((avg(value)) * 10000.0) / 10000.0 AS avg_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def _q_events_sliding_6h_1h(spark, sf_dir):
-    from bid_evaluation_spark.streaming.events import sliding_agg
-
-    df = _t(spark, sf_dir, "events")
-    res = sliding_agg(df, "6 hours", "1 hour")
-    return res.select(
-        F.date_format("window_start", _TS_FMT_SPARK).alias("window_start"),
-        "event_type", "n_events",
-        _r4("sum_value").alias("sum_value"),
-    )
-
-
-_SQL_EVENTS_SLIDING_6H_1H = f"""
-WITH exploded AS (
-  SELECT e.*, unnest(generate_series(
-    date_trunc('hour', ts) - INTERVAL 5 HOUR,
-    date_trunc('hour', ts), INTERVAL 1 HOUR)) AS ws
-  FROM events e
-)
-SELECT strftime(ws, '{_TS_FMT_DUCK}') AS window_start, event_type,
-       CAST(count(*) AS BIGINT) AS n_events, round((sum(value)) * 10000.0) / 10000.0 AS sum_value
-FROM exploded GROUP BY 1, 2
-"""
-
-
-def _q_events_sessionize_30m(spark, sf_dir):
-    from bid_evaluation_spark.streaming.events import sessionize
-
-    df = _t(spark, sf_dir, "events")
-    res = sessionize(df, gap_seconds=1800)
-    return res.select(
-        "user_id",
-        F.date_format("session_start", _TS_FMT_SPARK + ".SSSSSS").alias("session_start"),
-        "n_events",
-        _r4("sum_value").alias("sum_value"),
-    )
-
-
-_SQL_EVENTS_SESSIONIZE_30M = """
-WITH seq AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN prev_ts IS NULL
-                 OR (epoch(ts) - epoch(prev_ts)) > 1800 THEN 1 ELSE 0 END AS is_new
-  FROM seq
-),
-sessions AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-)
-SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       CAST(count(*) AS BIGINT) AS n_events, round((sum(value)) * 10000.0) / 10000.0 AS sum_value
-FROM sessions GROUP BY user_id, session_id
-"""
-
-
-def _q_events_session_window_30m(spark, sf_dir):
-    """Native ``session_window`` sessionization (streaming-capable twin of
-    ``events_sessionize_30m``; boundary closes at gap >= 30 min)."""
-    from bid_evaluation_spark.streaming.events import session_window_agg
-
-    df = _t(spark, sf_dir, "events")
-    res = session_window_agg(df, "30 minutes")
-    return res.select(
-        "user_id",
-        F.date_format("session_start", _TS_FMT_SPARK + ".SSSSSS").alias("session_start"),
-        F.date_format("session_end", _TS_FMT_SPARK + ".SSSSSS").alias("session_end"),
-        "n_events",
-        _r4("sum_value").alias("sum_value"),
-    )
-
-
-# session_window semantics: a session ends when the next event's gap is
-# >= the 30-minute gap (window end = last_ts + gap, intervals [start, end))
-_SQL_EVENTS_SESSION_WINDOW_30M = """
-WITH seq AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN prev_ts IS NULL
-                 OR (epoch(ts) - epoch(prev_ts)) >= 1800 THEN 1 ELSE 0 END AS is_new
-  FROM seq
-),
-sessions AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-)
-SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round((sum(value)) * 10000.0) / 10000.0 AS sum_value
-FROM sessions GROUP BY user_id, session_id
-"""
-
-
 def _q_f6_custom_udf_supplier(spark, sf_dir):
     """F6 CustomCriterion: user ``(values, stats) -> scores`` pandas function
     executed as an Arrow-vectorized pandas UDF with the collected stats dict
@@ -3951,54 +3800,6 @@ ORDER BY event_type
 """
 
 
-def _q_events_funnel_sessions(spark, sf_dir):
-    """Session conversion funnel (streaming/events.py session_funnel):
-    gap-based sessions (30 min), presence counts for view → click →
-    purchase depths. Pure session counts (longs) — the oracle rebuilds the
-    identical session ids and containment flags."""
-    from bid_evaluation_spark.streaming.events import session_funnel
-
-    df = _t(spark, sf_dir, "events")
-    return session_funnel(df, stages=("view", "click", "purchase"),
-                          gap_seconds=1800)
-
-
-_SQL_EVENTS_FUNNEL_SESSIONS = """
-WITH seq AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN prev_ts IS NULL
-                 OR (epoch(ts) - epoch(prev_ts)) > 1800 THEN 1 ELSE 0 END AS is_new
-  FROM seq
-),
-numbered AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-),
-sflags AS (
-  SELECT user_id, sid,
-         max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS s0,
-         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS s1,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS s2
-  FROM numbered GROUP BY user_id, sid
-),
-d AS (
-  SELECT sum(CASE WHEN s0 = 1 THEN 1 ELSE 0 END) AS d0,
-         sum(CASE WHEN s0 + s1 = 2 THEN 1 ELSE 0 END) AS d1,
-         sum(CASE WHEN s0 + s1 + s2 = 3 THEN 1 ELSE 0 END) AS d2
-  FROM sflags
-)
-SELECT CAST(1 AS INT) AS depth, 'view' AS stage, CAST(d0 AS BIGINT) AS n_sessions FROM d
-UNION ALL
-SELECT CAST(2 AS INT), 'click', CAST(d1 AS BIGINT) FROM d
-UNION ALL
-SELECT CAST(3 AS INT), 'purchase', CAST(d2 AS BIGINT) FROM d
-"""
-
-
 def _q_asof_click_purchase_events(spark, sf_dir):
     """As-of join: every click event enriched with the user's most recent
     purchase at-or-before it (union+window — one shuffle on user_id; DuckDB
@@ -4069,56 +3870,6 @@ ASOF LEFT JOIN
              CASE WHEN round(value * 100) % 3 = 0 THEN NULL ELSE value END AS value
       FROM events WHERE event_type = 'purchase') r
   ON l.user_id = r.user_id AND l.ts >= r.ts
-"""
-
-
-def _q_range_join_event_sessions(spark, sf_dir):
-    """Range (interval) join: every event matched to its 30-min session
-    interval via bucketed equi-join (no theta-join cross product); the oracle
-    is the plain inequality join over the identical session CTE."""
-    from bid_evaluation_spark.operators.asof import range_join
-    from bid_evaluation_spark.streaming.events import sessionize
-
-    ev = _t(spark, sf_dir, "events")
-    sessions = sessionize(ev, gap_seconds=1800)
-    res = range_join(
-        ev.select("event_id", "user_id", "ts"),
-        sessions.select("user_id", "session_start", "session_end", "n_events"),
-        point_col="ts", start_col="session_start", end_col="session_end",
-        by=["user_id"], bucket_width=1800.0,
-    )
-    return res.select(
-        "event_id", "user_id",
-        F.date_format("session_start", _TS_FMT_SPARK + ".SSSSSS").alias("session_start"),
-        F.col("n_events").cast("long").alias("session_n_events"),
-    )
-
-
-_SQL_RANGE_JOIN_EVENT_SESSIONS = """
-WITH seq AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN prev_ts IS NULL
-                 OR (epoch(ts) - epoch(prev_ts)) > 1800 THEN 1 ELSE 0 END AS is_new
-  FROM seq
-),
-numbered AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-),
-sessions AS (
-  SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-         count(*) AS n_events
-  FROM numbered GROUP BY user_id, session_id
-)
-SELECT e.event_id, e.user_id,
-       strftime(s.session_start, '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       CAST(s.n_events AS BIGINT) AS session_n_events
-FROM events e JOIN sessions s
-  ON e.user_id = s.user_id AND e.ts BETWEEN s.session_start AND s.session_end
 """
 
 
@@ -10368,7 +10119,6 @@ def _q_analytics_quantile_match_orders(spark, sf_dir):
     return res.select("o_orderkey", _r4("matched").alias("matched"))
 
 
-
 _SQL_ANALYTICS_QUANTILE_MATCH_ORDERS = f"""
 WITH la AS (
   SELECT quantile_cont(CAST(o_totalprice AS DOUBLE), [{_QM_QS}]) AS qa
@@ -10841,41 +10591,6 @@ SELECT lang, token, est, exact FROM ranked WHERE rn <= 5
 """
 
 
-def _q_events_sessionize_capped(spark, sf_dir):
-    """Gap + max-duration sessionization (split after 30 min idle OR 4000 s
-    since session start). The cap makes assignment inherently sequential —
-    one Arrow kernel per key over (key, epoch, tiebreak) triples; the
-    oracle replays the exact recurrence as a DuckDB RECURSIVE CTE stepping
-    event-by-event per user, so even this non-window operator carries a
-    full value oracle."""
-    from bid_evaluation_spark.streaming.events import sessionize_capped
-
-    ev = _t(spark, sf_dir, "events")
-    res = sessionize_capped(ev, gap_seconds=1800, max_session_seconds=4000)
-    return res.select("user_id", "event_id", "session_id")
-
-
-_SQL_EVENTS_SESSIONIZE_CAPPED = """
-WITH RECURSIVE e AS (
-  SELECT user_id, event_id, CAST(epoch(ts) AS DOUBLE) AS t,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS i
-  FROM events WHERE ts IS NOT NULL
-),
-r(user_id, i, event_id, t, sess, start_t) AS (
-  SELECT user_id, i, event_id, t, 1, t FROM e WHERE i = 1
-  UNION ALL
-  SELECT e.user_id, e.i, e.event_id, e.t,
-    CASE WHEN e.t - r.t > 1800 OR e.t - r.start_t > 4000
-         THEN r.sess + 1 ELSE r.sess END,
-    CASE WHEN e.t - r.t > 1800 OR e.t - r.start_t > 4000
-         THEN e.t ELSE r.start_t END
-  FROM r JOIN e ON e.user_id = r.user_id AND e.i = r.i + 1
-)
-SELECT user_id, event_id, CAST(sess AS BIGINT) AS session_id FROM r
-"""
-
-
 def _q_analytics_weighted_median_lineitem(spark, sf_dir):
     """Quantity-weighted price quantiles per return flag (the
     token-weighted median-length question in TPC-H clothes): one
@@ -11168,60 +10883,6 @@ q AS (
   FROM orders, b
 )
 SELECT o_orderkey, CAST({_ZO_TERMS} AS BIGINT) AS zkey FROM q
-"""
-
-
-def _q_ts_concurrency_events(spark, sf_dir):
-    """Sweep-line concurrency over 30-min user sessions: how many sessions
-    are simultaneously open at every boundary instant (closed intervals —
-    zero-length single-event sessions count at their instant). Boundaries
-    collapse to distinct instants in one partial-agg shuffle; the prefix
-    sum runs bucket-partitioned with driver-carried offsets — no
-    unpartitioned window, no self-join."""
-    from bid_evaluation_spark.operators.timeseries import concurrency_timeline
-    from bid_evaluation_spark.streaming.events import sessionize
-
-    ev = _t(spark, sf_dir, "events")
-    sessions = sessionize(ev, gap_seconds=1800)
-    res = concurrency_timeline(sessions, "session_start", "session_end",
-                               buckets=16)
-    return res.select(F.col("ts").cast("double").alias("ts"), "net",
-                      "concurrency")
-
-
-_SQL_TS_CONCURRENCY_EVENTS = """
-WITH seq AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN prev_ts IS NULL
-                 OR (epoch(ts) - epoch(prev_ts)) > 1800 THEN 1 ELSE 0 END AS is_new
-  FROM seq
-),
-numbered AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-),
-sessions AS (
-  SELECT user_id, min(ts) AS session_start, max(ts) AS session_end
-  FROM numbered GROUP BY user_id, session_id
-),
-deltas AS (
-  SELECT CAST(epoch(session_start) AS DOUBLE) AS ts, 1 AS d FROM sessions
-  UNION ALL
-  SELECT CAST(epoch(session_end) AS DOUBLE) AS ts, -1 AS d FROM sessions
-),
-net AS (
-  SELECT ts, CAST(sum(d) AS BIGINT) AS net,
-         sum(CASE WHEN d < 0 THEN 1 ELSE 0 END) AS ends
-  FROM deltas GROUP BY ts
-)
-SELECT ts, net,
-  CAST(sum(net) OVER (ORDER BY ts ROWS UNBOUNDED PRECEDING) + ends
-       AS BIGINT) AS concurrency
-FROM net
 """
 
 
@@ -12331,53 +11992,6 @@ FROM c
 """
 
 
-def _q_funnel_window_events(spark, sf_dir):
-    """Strict-order time-bounded funnel view→click→purchase within 7
-    days of the first view (streaming/events.py window_funnel —
-    ClickHouse windowFunnel semantics): greedy-earliest chained
-    min-aggregates, every pass keyed on the user. The oracle replays the
-    same greedy picks with QUALIFY row_number."""
-    from bid_evaluation_spark.streaming.events import window_funnel
-
-    ev = _t(spark, sf_dir, "events")
-    return window_funnel(ev, ["view", "click", "purchase"],
-                         horizon_seconds=604800.0)
-
-
-_SQL_FUNNEL_WINDOW_EVENTS = """
-WITH ev AS (
-  SELECT user_id AS u, event_type AS e,
-         CAST(epoch_us(ts) AS DOUBLE) / 1000000.0 AS t,
-         CAST(event_id AS DOUBLE) AS b
-  FROM events
-),
-s1 AS (
-  SELECT u, t, b FROM (
-    SELECT u, t, b, row_number() OVER (PARTITION BY u ORDER BY t, b) AS rn
-    FROM ev WHERE e = 'view') WHERE rn = 1
-),
-s2 AS (
-  SELECT s1.u, s1.t AS t1, s1.b AS b1, n.t, n.b
-  FROM s1 JOIN ev n ON n.u = s1.u AND n.e = 'click'
-    AND (n.t, n.b) > (s1.t, s1.b) AND n.t <= s1.t + 604800.0
-  QUALIFY row_number() OVER (PARTITION BY s1.u ORDER BY n.t, n.b) = 1
-),
-s3 AS (
-  SELECT s2.u, s2.t1, n.t, n.b
-  FROM s2 JOIN ev n ON n.u = s2.u AND n.e = 'purchase'
-    AND (n.t, n.b) > (s2.t, s2.b) AND n.t <= s2.t1 + 604800.0
-  QUALIFY row_number() OVER (PARTITION BY s2.u ORDER BY n.t, n.b) = 1
-)
-SELECT s1.u AS user_id,
-  CAST(1 + CASE WHEN s2.u IS NOT NULL THEN 1 ELSE 0 END
-         + CASE WHEN s3.u IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-    AS depth,
-  round(s1.t * 1e6) / 1e6 + 0.0 AS t_first,
-  round(coalesce(s3.t, s2.t, s1.t) * 1e6) / 1e6 + 0.0 AS t_last
-FROM s1 LEFT JOIN s2 ON s1.u = s2.u LEFT JOIN s3 ON s1.u = s3.u
-"""
-
-
 def _q_ivm_join_delta_orders(spark, sf_dir):
     """Incremental join maintenance (operators/ivm.py join_insert_delta):
     customer/orders split into base + insert batches by key arithmetic;
@@ -13238,49 +12852,6 @@ FROM best WHERE rk = 1
 """
 
 
-def _q_events_top_paths(spark, sf_dir):
-    """Top session journeys (streaming/events.py top_paths): 30-minute
-    gap sessions, first 3 events per session in (ts, event_id) order
-    rendered 'a>b>c', top-20 paths by frequency with path-asc
-    tiebreak. The prefix cut happens BEFORE any collection so no
-    session materializes more than max_len elements. The oracle
-    replays sessionization, the rn≤3 cut and the ordered string_agg."""
-    from bid_evaluation_spark.streaming.events import top_paths
-
-    ev = _t(spark, sf_dir, "events")
-    return top_paths(ev, gap_seconds=1800, max_len=3, k=20)
-
-
-_SQL_EVENTS_TOP_PATHS = """
-WITH m AS (
-  SELECT user_id, ts, event_type, event_id,
-    CASE WHEN lag(ts) OVER w IS NULL
-              OR (epoch(ts) - epoch(lag(ts) OVER w)) > 1800
-         THEN 1 ELSE 0 END AS is_new
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-  FROM m
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, sid
-                               ORDER BY ts, event_id) AS rn
-  FROM s
-),
-p AS (
-  SELECT user_id, sid, string_agg(event_type, '>' ORDER BY rn) AS path
-  FROM r WHERE rn <= 3 GROUP BY user_id, sid
-),
-c AS (SELECT path, count(*) AS n_sessions FROM p GROUP BY path)
-SELECT path, CAST(n_sessions AS BIGINT) AS n_sessions, CAST(rnk AS BIGINT) AS rnk
-FROM (SELECT *, row_number() OVER (ORDER BY n_sessions DESC, path) AS rnk
-      FROM c)
-WHERE rnk <= 20
-"""
-
-
 def _q_ml_knn_embeddings(spark, sf_dir):
     """kNN classification (operators/classify.py knn_classify): 1-in-37
     held-out queries, majority label among the 5 cosine-nearest
@@ -13446,48 +13017,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY grp
                                    ORDER BY d2 DESC, x, y) AS rnk
       FROM scored)
 WHERE rnk <= 20
-"""
-
-
-def _q_events_conversion_latency(spark, sf_dir):
-    """Time-to-convert summary view→purchase within 24 h
-    (streaming/events.py conversion_latency): per-user first-view /
-    first-subsequent-purchase latencies, exact interpolated p50/p90
-    over the bounded per-user table. The oracle replays the two
-    conditional min-aggregations and quantile_cont (same linear
-    interpolation as Spark percentile)."""
-    from bid_evaluation_spark.streaming.events import conversion_latency
-
-    ev = _t(spark, sf_dir, "events")
-    return conversion_latency(ev, "view", "purchase",
-                              horizon_seconds=86400.0)
-
-
-_SQL_EVENTS_CONVERSION_LATENCY = """
-WITH a AS (
-  SELECT user_id, min(epoch(ts)) AS ta FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-),
-b AS (
-  SELECT user_id, epoch(ts) AS tb FROM events
-  WHERE event_type = 'purchase'
-),
-conv AS (
-  SELECT a.user_id, a.ta,
-         min(CASE WHEN b.tb >= a.ta
-                       AND b.tb <= a.ta + CAST(86400 AS DOUBLE)
-                  THEN b.tb END) AS tc
-  FROM a LEFT JOIN b ON a.user_id = b.user_id
-  GROUP BY a.user_id, a.ta
-),
-lat AS (SELECT tc - ta AS l FROM conv)
-SELECT CAST(count(*) AS BIGINT) AS n_from,
-  CAST(count(l) AS BIGINT) AS n_converted,
-  round(CAST(count(l) AS DOUBLE) / CAST(count(*) AS DOUBLE) * 1e4) / 1e4
-    + 0.0 AS conv_rate,
-  round((quantile_cont(l, 0.5)) * 1e4) / 1e4 + 0.0 AS p50_s,
-  round((quantile_cont(l, 0.9)) * 1e4) / 1e4 + 0.0 AS p90_s
-FROM lat
 """
 
 
@@ -16404,59 +15933,6 @@ FROM documents JOIN g ON g.c = doc_id % 6
 """
 
 
-def _q_mm_stream_census_documents(spark, sf_dir):
-    """STREAMING media census (streaming/census.py — the continuous-
-    ingest twin of mm_media_census): the 17-class census corpus
-    arrives as THREE ordered micro-batches (doc_id % 3) processed
-    through the restart-safe versioned-state accumulator, incl. one
-    deliberately REPLAYED batch id (must be skipped, or every count
-    in the replayed slice doubles and the oracle fails). Output = the
-    final persisted totals per (media_type, container). Oracle:
-    closed-form class counts. State is bounded by route kinds (~13
-    rows), never corpus size."""
-    import os
-    import tempfile
-
-    from bid_evaluation_spark.streaming.census import (
-        StreamingMediaCensus)
-
-    # r12 opt: the payload fixture feeds 4 process_batch calls, each of
-    # which evaluates its batch twice (census delta + row count) — 8
-    # regenerations of every encoded payload without the persist
-    media = _media_census_fixture(spark, sf_dir).persist()
-    try:
-        with tempfile.TemporaryDirectory(dir="/tmp") as root:
-            c = StreamingMediaCensus(spark, os.path.join(root, "st"))
-            for b in range(3):
-                batch = media.filter(F.col("media_id") % 3 == b)
-                c.process_batch(batch, batch_id=b, query_token="q")
-                if b == 1:                    # crash-window replay
-                    c.process_batch(batch, batch_id=b, query_token="q")
-            out = c.counts().collect()
-    finally:
-        media.unpersist()
-    return spark.createDataFrame(
-        out, "media_type string, container string, n_files long")
-
-
-_SQL_MM_STREAM_CENSUS_DOCUMENTS = """
-WITH g(c, mt, cont) AS (VALUES
-  (0, 'image', 'png'),   (1, 'image', 'jpeg'),
-  (2, 'image', 'gif'), (3, 'image', 'tiff'),
-  (4, 'image', 'bmp'),   (5, 'image', 'netpbm'),
-  (6, 'audio', 'wav'),   (7, 'audio', 'flac'),
-  (8, 'audio', 'ogg'), (9, 'audio', 'mpeg'),
-  (10, 'video', 'mp4'), (11, 'video', 'avi'),
-  (12, 'document', 'pdf'), (13, 'text', 'html'),
-  (14, 'text', 'plain'), (15, 'unknown', 'binary'),
-  (16, 'image', 'webp'))
-SELECT g.mt AS media_type, g.cont AS container,
-  CAST(count(*) AS BIGINT) AS n_files
-FROM documents d JOIN g ON g.c = d.doc_id % 17
-GROUP BY g.mt, g.cont
-"""
-
-
 def _q_mm_webp_anim_documents(spark, sf_dir):
     """Animated-WebP TIMELINE inventory (operators/webp.py
     parse_webp_animation — VP8X animation flag + ANIM loop count +
@@ -16900,56 +16376,6 @@ SELECT threshold, CAST(bands AS BIGINT) AS bands,
          AS threshold_est_r4,
        round(obj * 10000.0) / 10000.0 AS objective_r4
 FROM ranked WHERE rk = 1
-"""
-
-
-def _q_retrieval_maxsim_embeddings(spark, sf_dir):
-    """ColBERT-style MaxSim late interaction
-    (operators/lateinteraction.py — Σ_q max_d cos per token pair,
-    native zip_with/aggregate math, broadcast query tokens, two
-    partial-aggregated groupBys): token table derived from embeddings
-    (doc = vec_id div 4, token = vec_id % 4), queries = docs 0..7,
-    self-doc excluded, k=5. The oracle replays the ENTIRE scoring —
-    per-token cosine, per-query-token max, per-doc sum, ranking — in
-    DuckDB list math; only the final score is r4-rounded."""
-    from bid_evaluation_spark.operators.lateinteraction import maxsim_topk
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.expr("vec_id div 4").cast("long").alias("doc_id"),
-        (F.col("vec_id") % 4).cast("long").alias("token_idx"),
-        F.col("embedding").cast("array<double>").alias("vec"))
-    queries = (emb.filter(F.col("doc_id") < 8)
-               .select(F.col("doc_id").alias("query_id"),
-                       "token_idx", "vec"))
-    top = maxsim_topk(emb, queries, k=5, exclude_self=True)
-    return top.select("query_id", "doc_id",
-                      _r4("maxsim").alias("maxsim_r4"), "rnk")
-
-
-_SQL_RETRIEVAL_MAXSIM_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-tok AS (SELECT vec_id // 4 AS d, vec_id % 4 AS t, e FROM v),
-q AS (SELECT d AS qid, t AS qt, e AS qe FROM tok WHERE d < 8),
-per_qt AS (
-  SELECT q.qid, tok.d, q.qt,
-         MAX(list_sum(list_transform(generate_series(1, len(qe)),
-                                     i -> qe[i] * tok.e[i]))
-             / (sqrt(list_sum(list_transform(qe, x -> x * x)))
-                * sqrt(list_sum(list_transform(tok.e, x -> x * x)))))
-           AS m
-  FROM q JOIN tok ON tok.d != q.qid
-  GROUP BY q.qid, tok.d, q.qt
-),
-scores AS (SELECT qid, d, SUM(m) AS s FROM per_qt GROUP BY qid, d),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY qid
-                               ORDER BY s DESC, d ASC) AS rnk
-  FROM scores
-)
-SELECT qid AS query_id, d AS doc_id,
-       round(s * 10000.0) / 10000.0 AS maxsim_r4,
-       CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
 """
 
 
@@ -17637,71 +17063,6 @@ HAVING count(*) >= 2
 """
 
 
-def _q_dedup_stream_hashdup_documents(spark, sf_dir):
-    """Batch twin of the streaming PERCEPTUAL-HASH near-dup filter
-    (streaming/hashdup.py StreamingHashNearDup / hash_neardup_mark_ordered
-    — the media counterpart of the text twin below, serving image dHash /
-    audio fingerprint / video signature streams): planted 50-cluster
-    fixture hashes (cluster base = golden-ratio multiply mod 2^64, member
-    m flips two m-derived bits, so intra-cluster hamming <= 4 and clusters
-    sit far apart), each doc flagged iff a lower-id doc shares one of the
-    8 pigeonhole bands AND verifies bit_count(xor) <= 6, smallest witness
-    as dup_of. The oracle REPLAYS the whole pipeline in DuckDB — HUGEINT
-    wrap-around multiply, bit flips, band extraction, banded join, xor
-    popcount — so a bug in Java long wrap semantics, band layout, the
-    verify threshold, or witness minimization breaks the hash match."""
-    from bid_evaluation_spark.streaming.hashdup import (
-        hash_neardup_mark_ordered)
-
-    gold = 0x9E3779B97F4A7C15 - (1 << 64)  # signed-long golden ratio
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").alias("media_id"),
-                  F.expr(f"""
-      CASE WHEN doc_id div 50 > 0 THEN
-        (((doc_id % 50) + 1) * {gold}L)
-          ^ shiftleft(1L, cast((5 * (doc_id div 50) + 1) % 64 AS INT))
-          ^ shiftleft(1L, cast((11 * (doc_id div 50) + 3) % 64 AS INT))
-      ELSE ((doc_id % 50) + 1) * {gold}L END""").alias("fp64")))
-    return hash_neardup_mark_ordered(df, id_col="media_id",
-                                     hash_col="fp64", max_hamming=6)
-
-
-_SQL_DEDUP_STREAM_HASHDUP_DOCUMENTS = """
-WITH h0 AS (
-  SELECT doc_id,
-    ((CAST(doc_id % 50 + 1 AS HUGEINT)
-      * CAST(11400714819323198485 AS HUGEINT))
-     % (CAST(1 AS HUGEINT) << 64)) AS u0,
-    doc_id // 50 AS m
-  FROM documents
-),
-h AS (
-  SELECT doc_id,
-    CASE WHEN m > 0 THEN xor(xor(u0,
-        CAST(1 AS HUGEINT) << CAST((5 * m + 1) % 64 AS INTEGER)),
-        CAST(1 AS HUGEINT) << CAST((11 * m + 3) % 64 AS INTEGER))
-    ELSE u0 END AS u
-  FROM h0
-),
-bands AS (
-  SELECT doc_id, u, b.b AS band, (u >> (8 * b.b)) % 256 AS key
-  FROM h, UNNEST(generate_series(0, 7)) AS b(b)
-),
-pairs AS (
-  SELECT a.doc_id AS id, MIN(l.doc_id) AS dup_of
-  FROM bands a JOIN bands l
-    ON a.band = l.band AND a.key = l.key AND l.doc_id < a.doc_id
-  WHERE bit_count(CAST(xor(a.u, l.u)
-        - CASE WHEN xor(a.u, l.u) >= CAST(1 AS HUGEINT) << 63
-               THEN CAST(1 AS HUGEINT) << 64
-               ELSE CAST(0 AS HUGEINT) END AS BIGINT)) <= 6
-  GROUP BY a.doc_id
-)
-SELECT d.doc_id AS media_id, p.dup_of IS NOT NULL AS is_near_dup, p.dup_of
-FROM documents d LEFT JOIN pairs p ON d.doc_id = p.id
-"""
-
-
 def _q_dedup_stream_neardup_documents(spark, sf_dir):
     """Batch twin of the streaming near-dup filter
     (streaming/neardup.py StreamingNearDup; operators/dedup.py
@@ -17855,8 +17216,6 @@ _QUERIES: dict = {
                                   _SQL_DEDUP_EMBEDDING_DOCUMENTS),
     "dedup_embedding_clusters": (_q_dedup_embedding_clusters,
                                  _SQL_DEDUP_EMBEDDING_CLUSTERS),
-    "ann_cosine_topk_embeddings": (_q_ann_cosine_topk_embeddings,
-                                   _SQL_ANN_COSINE_TOPK_EMBEDDINGS),
     "emb_hard_negatives_embeddings": (_q_emb_hard_negatives_embeddings,
                                       _SQL_EMB_HARD_NEGATIVES_EMBEDDINGS),
     "dedup_keepmin_embeddings": (_q_dedup_keepmin_embeddings,
@@ -17874,20 +17233,11 @@ _QUERIES: dict = {
     "ann_ivf_pretrained_topk_embeddings": (
         _q_ann_ivf_pretrained_topk_embeddings,
         _SQL_ANN_IVF_PRETRAINED_TOPK_EMBEDDINGS),
-    "events_tumbling_hour": (_q_events_tumbling_hour, _SQL_EVENTS_TUMBLING_HOUR),
-    "events_sliding_6h_1h": (_q_events_sliding_6h_1h, _SQL_EVENTS_SLIDING_6H_1H),
-    "events_sessionize_30m": (_q_events_sessionize_30m, _SQL_EVENTS_SESSIONIZE_30M),
-    "events_session_window_30m": (_q_events_session_window_30m,
-                                  _SQL_EVENTS_SESSION_WINDOW_30M),
     "events_json_props": (_q_events_json_props, _SQL_EVENTS_JSON_PROPS),
-    "events_funnel_sessions": (_q_events_funnel_sessions,
-                               _SQL_EVENTS_FUNNEL_SESSIONS),
     "asof_click_purchase_events": (_q_asof_click_purchase_events,
                                    _SQL_ASOF_CLICK_PURCHASE_EVENTS),
     "asof_null_payload_events": (_q_asof_null_payload_events,
                                  _SQL_ASOF_NULL_PAYLOAD_EVENTS),
-    "range_join_event_sessions": (_q_range_join_event_sessions,
-                                  _SQL_RANGE_JOIN_EVENT_SESSIONS),
     "pipe_decontaminate_documents": (_q_pipe_decontaminate_documents,
                                      _SQL_PIPE_DECONTAMINATE_DOCUMENTS),
     "pipe_decontaminate_bloom_documents": (
@@ -18165,8 +17515,6 @@ _QUERIES: dict = {
                                _SQL_ANALYTICS_TREND_EVENTS),
     "sketch_hll_by_group_documents": (_q_sketch_hll_by_group_documents,
                                       _SQL_SKETCH_HLL_BY_GROUP_DOCUMENTS),
-    "ts_concurrency_events": (_q_ts_concurrency_events,
-                              _SQL_TS_CONCURRENCY_EVENTS),
     "layout_zorder_orders": (_q_layout_zorder_orders,
                              _SQL_LAYOUT_ZORDER_ORDERS),
     "metrics_calibration_embeddings": (_q_metrics_calibration_embeddings,
@@ -18180,8 +17528,6 @@ _QUERIES: dict = {
     "analytics_weighted_median_lineitem": (
         _q_analytics_weighted_median_lineitem,
         _SQL_ANALYTICS_WEIGHTED_MEDIAN_LINEITEM),
-    "events_sessionize_capped": (_q_events_sessionize_capped,
-                                 _SQL_EVENTS_SESSIONIZE_CAPPED),
     "sketch_cms_by_group_documents": (_q_sketch_cms_by_group_documents,
                                       _SQL_SKETCH_CMS_BY_GROUP_DOCUMENTS),
     "graph_triangles_events": (_q_graph_triangles_events,
@@ -18264,8 +17610,6 @@ _QUERIES: dict = {
                                _SQL_TS_NELSON_AALEN_EVENTS),
     "analytics_poisson_events": (_q_analytics_poisson_events,
                                  _SQL_ANALYTICS_POISSON_EVENTS),
-    "funnel_window_events": (_q_funnel_window_events,
-                             _SQL_FUNNEL_WINDOW_EVENTS),
     "ivm_join_delta_orders": (_q_ivm_join_delta_orders,
                               _SQL_IVM_JOIN_DELTA_ORDERS),
     "pipeline_quantile2pass_lineitem": (_q_pipeline_quantile2pass_lineitem,
@@ -18291,13 +17635,10 @@ _QUERIES: dict = {
                              _SQL_ANALYTICS_SRM_EVENTS),
     "ts_changepoint_events": (_q_ts_changepoint_events,
                               _SQL_TS_CHANGEPOINT_EVENTS),
-    "events_top_paths": (_q_events_top_paths, _SQL_EVENTS_TOP_PATHS),
     "ml_knn_embeddings": (_q_ml_knn_embeddings, _SQL_ML_KNN_EMBEDDINGS),
     "cdc_pit_orders": (_q_cdc_pit_orders, _SQL_CDC_PIT_ORDERS),
     "profile_mahalanobis_lineitem": (_q_profile_mahalanobis_lineitem,
                                      _SQL_PROFILE_MAHALANOBIS_LINEITEM),
-    "events_conversion_latency": (_q_events_conversion_latency,
-                                  _SQL_EVENTS_CONVERSION_LATENCY),
     "ts_logrank_events": (_q_ts_logrank_events, _SQL_TS_LOGRANK_EVENTS),
     "ts_anomaly_events": (_q_ts_anomaly_events, _SQL_TS_ANOMALY_EVENTS),
     "layout_compaction_orders": (_q_layout_compaction_orders,
@@ -18360,8 +17701,6 @@ _QUERIES: dict = {
                                _SQL_TEXT_ENTROPY_DOCUMENTS),
     "text_winnow_pairs_documents": (_q_text_winnow_pairs_documents,
                                     _SQL_TEXT_WINNOW_PAIRS_DOCUMENTS),
-    "dedup_stream_hashdup_documents": (_q_dedup_stream_hashdup_documents,
-                                       _SQL_DEDUP_STREAM_HASHDUP_DOCUMENTS),
     "dedup_stream_neardup_documents": (_q_dedup_stream_neardup_documents,
                                        _SQL_DEDUP_STREAM_NEARDUP_DOCUMENTS),
     "dedup_homoglyph_documents": (_q_dedup_homoglyph_documents,
@@ -18390,8 +17729,6 @@ _QUERIES: dict = {
                                       _SQL_MM_ORIENT_NORMALIZE_DOCUMENTS),
     "mm_bmp_decode_documents": (_q_mm_bmp_decode_documents,
                                 _SQL_MM_BMP_DECODE_DOCUMENTS),
-    "retrieval_maxsim_embeddings": (_q_retrieval_maxsim_embeddings,
-                                    _SQL_RETRIEVAL_MAXSIM_EMBEDDINGS),
     "dedup_lsh_tune_documents": (_q_dedup_lsh_tune_documents,
                                  _SQL_DEDUP_LSH_TUNE_DOCUMENTS),
     "a1_approx_quantiles_lineitem": (_q_a1_approx_quantiles_lineitem,
@@ -18420,8 +17757,6 @@ _QUERIES: dict = {
                                   _SQL_MM_MP3_SIDEINFO_DOCUMENTS),
     "mm_webp_anim_documents": (_q_mm_webp_anim_documents,
                                _SQL_MM_WEBP_ANIM_DOCUMENTS),
-    "mm_stream_census_documents": (_q_mm_stream_census_documents,
-                                   _SQL_MM_STREAM_CENSUS_DOCUMENTS),
     "mm_media_census_documents": (_q_mm_media_census_documents,
                                   _SQL_MM_MEDIA_CENSUS_DOCUMENTS),
     "mm_melspec_documents": (_q_mm_melspec_documents,

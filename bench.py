@@ -159,20 +159,8 @@ def bench_decontaminate_bloom_documents(spark, sf_dir):
                                threshold=0.3))
 
 
-def bench_events_sliding(spark, sf_dir):
-    from bid_evaluation_spark.sources.io import load_table
-    from bid_evaluation_spark.streaming.events import sliding_agg
-
-    df = load_table(spark, sf_dir, "events")
-    _force(sliding_agg(df, "6 hours", "1 hour"))
 
 
-def bench_events_sessionize(spark, sf_dir):
-    from bid_evaluation_spark.sources.io import load_table
-    from bid_evaluation_spark.streaming.events import sessionize
-
-    df = load_table(spark, sf_dir, "events")
-    _force(sessionize(df, gap_seconds=1800))
 
 
 def bench_quality_repetition(spark, sf_dir):
@@ -331,8 +319,6 @@ BENCHES = {
     "decontaminate_documents": bench_decontaminate_documents,
     "decontaminate_auto_documents": bench_decontaminate_auto_documents,
     "decontaminate_bloom_documents": bench_decontaminate_bloom_documents,
-    "events_sliding": bench_events_sliding,
-    "events_sessionize": bench_events_sessionize,
     "quality_repetition": bench_quality_repetition,
     "rolling_features_events": bench_rolling_features_events,
     "nb_classify_documents": bench_nb_classify_documents,
