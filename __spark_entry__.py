@@ -1263,362 +1263,6 @@ FROM toks
 """
 
 
-def _q_mm_image_features_documents(spark, sf_dir):
-    """Multimodal plumbing over real parquet: treat the document text bytes as
-    an opaque binary payload and run the Arrow-batched mapInPandas feature
-    kernel (deterministic stub decode). Oracle checks the portable outputs
-    (byte length + sha256); mean_luma/embedding are covered by unit tests."""
-    from bid_evaluation_spark.operators.multimodal import extract_image_features
-
-    df = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-    feats = extract_image_features(df, fake=True)
-    return feats.select("media_id", "n_bytes", "sha256")
-
-
-_SQL_MM_IMAGE_FEATURES_DOCUMENTS = """
-SELECT doc_id AS media_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       sha256(text) AS sha256
-FROM documents
-"""
-
-
-def _q_mm_image_decode_documents(spark, sf_dir):
-    """REAL image decode end-to-end: deterministic grayscale PNGs are encoded
-    per doc (pixel(x,y) = (x + 7y + doc_id) mod 256, dims derived from
-    doc_id), shipped as binary payloads, and decoded by the pure-stdlib PNG
-    kernel — width/height from IHDR, mean luma from the actual pixels. The
-    oracle reproduces the expected values arithmetically, so a decode bug
-    (filters, strides, chunk parsing) breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.multimodal import extract_image_features
-    from bid_evaluation_spark.operators.png import encode_png
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + int(d) % 5, 6 + int(d) % 3
-                img = ((np.arange(w)[None, :] + 7 * np.arange(h)[:, None]
-                        + int(d)) % 256).astype(np.uint8)
-                payloads.append(encode_png(img))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_image_features(media, fake=False, strict=True)
-    return feats.select("media_id", "width", "height",
-                        _r4("mean_luma").alias("mean_luma"))
-
-
-_SQL_MM_IMAGE_DECODE_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, CAST(8 + doc_id % 5 AS BIGINT) AS w,
-         CAST(6 + doc_id % 3 AS BIGINT) AS h
-  FROM documents
-)
-SELECT doc_id AS media_id, w AS width, h AS height,
-  round(list_avg(flatten(list_transform(generate_series(0, h - 1),
-          y -> list_transform(generate_series(0, w - 1),
-          x -> CAST((x + 7*y + doc_id) % 256 AS DOUBLE))))) * 10000.0)
-    / 10000.0 AS mean_luma
-FROM dims
-"""
-
-
-def _q_mm_audio_decode_documents(spark, sf_dir):
-    """REAL audio decode end-to-end: deterministic square-wave WAVs are
-    encoded per doc (amplitude exactly 0.5, half-period and length derived
-    from doc_id), shipped as binary payloads, and decoded by the pure-stdlib
-    WAV kernel. Square waves make every feature closed-form — RMS is exactly
-    16383/32768 after 16-bit quantization, zero-crossings are (n-1)//h — so
-    the DuckDB oracle reproduces them arithmetically and any decode bug
-    (header parse, scaling, channel handling) breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.multimodal import extract_audio_features
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 800 + int(d) % 5 * 400
-                h = 10 + int(d) % 7 * 2
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                payloads.append(encode_wav(0.5 * sgn, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_audio_features(media, strict=True)
-    return feats.select("media_id", "sample_rate", "duration_ms",
-                        _r4("rms").alias("rms"), "zero_crossings")
-
-
-_SQL_MM_AUDIO_DECODE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id,
-         800 + (doc_id % 5) * 400 AS n,
-         10 + (doc_id % 7) * 2 AS h
-  FROM documents
-)
-SELECT doc_id AS media_id,
-  CAST(8000 AS BIGINT) AS sample_rate,
-  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-  round((16383.0 / 32768.0) * 10000.0) / 10000.0 AS rms,
-  CAST((n - 1) // h AS BIGINT) AS zero_crossings
-FROM p
-"""
-
-
-def _q_mm_flac_decode_documents(spark, sf_dir):
-    """REAL compressed-audio decode end-to-end: the same deterministic
-    square waves as ``mm_audio_decode_documents``, but container-encoded
-    as FLAC (fixed-order-2 predictor + Rice residuals — the compressed
-    path, not verbatim) by the pure-stdlib encoder and decoded by the
-    pure-stdlib FLAC decoder (operators/flac.py, written from the public
-    RFC 9639 spec; CRC-8/CRC-16 verified per frame). FLAC is lossless and
-    both containers quantize floats identically (truncation), so the
-    arithmetic oracle is the SAME closed form as the WAV query — any
-    decode bug (bit reader, Rice, predictor reconstruction, CRC, scaling)
-    breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.flac import encode_flac
-    from bid_evaluation_spark.operators.multimodal import extract_audio_features
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 400 + int(d) % 5 * 200
-                h = 10 + int(d) % 7 * 2
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                payloads.append(encode_flac(0.5 * sgn, rate=8000,
-                                            strategy="fixed"))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_audio_features(media, strict=True)
-    return feats.select("media_id", "sample_rate", "duration_ms",
-                        _r4("rms").alias("rms"), "zero_crossings")
-
-
-_SQL_MM_FLAC_DECODE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id,
-         400 + (doc_id % 5) * 200 AS n,
-         10 + (doc_id % 7) * 2 AS h
-  FROM documents
-)
-SELECT doc_id AS media_id,
-  CAST(8000 AS BIGINT) AS sample_rate,
-  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-  round((16383.0 / 32768.0) * 10000.0) / 10000.0 AS rms,
-  CAST((n - 1) // h AS BIGINT) AS zero_crossings
-FROM p
-"""
-
-
-def _q_mm_g711_decode_documents(spark, sf_dir):
-    """REAL LOSSY-codec audio decode end-to-end: the same deterministic
-    square waves as ``mm_audio_decode_documents``, companded through ITU-T
-    G.711 — μ-law (WAV format tag 7) for even doc_ids, A-law (tag 6) for
-    odd — by the pure-stdlib codec (operators/g711.py, Sun g711.c
-    semantics, bit-exact vs CPython's audioop) and decoded back through
-    the multimodal dispatch seam. G.711 is LOSSY, but deterministically
-    so: the ±16383 square-wave levels land on companding outputs ±16764
-    (μ) / ±16128 (A) — constants pinned by tests/test_g711_adpcm.py — so
-    the oracle stays a closed form and any companding bug (segment
-    search, bias, mask, container tag routing) breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.g711 import encode_wav_g711
-    from bid_evaluation_spark.operators.multimodal import extract_audio_features
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 800 + int(d) % 5 * 400
-                h = 10 + int(d) % 7 * 2
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                law = "ulaw" if int(d) % 2 == 0 else "alaw"
-                payloads.append(encode_wav_g711(0.5 * sgn, rate=8000,
-                                                law=law))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_audio_features(media, strict=True)
-    return feats.select("media_id", "sample_rate", "duration_ms",
-                        _r4("rms").alias("rms"), "zero_crossings")
-
-
-_SQL_MM_G711_DECODE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id,
-         800 + (doc_id % 5) * 400 AS n,
-         10 + (doc_id % 7) * 2 AS h
-  FROM documents
-)
-SELECT doc_id AS media_id,
-  CAST(8000 AS BIGINT) AS sample_rate,
-  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-  round(CASE WHEN doc_id % 2 = 0 THEN 16764.0 / 32768.0
-             ELSE 16128.0 / 32768.0 END * 10000.0) / 10000.0 AS rms,
-  CAST((n - 1) // h AS BIGINT) AS zero_crossings
-FROM p
-"""
-
-
-def _q_mm_adpcm_decode_documents(spark, sf_dir):
-    """REAL ADAPTIVE-lossy audio decode end-to-end: the square-wave
-    fixtures encoded as IMA ADPCM (WAV format tag 0x11 — 4 bits/sample,
-    89-step adaptive table; operators/adpcm.py, nibble-exact vs CPython's
-    audioop IMA coder) and decoded through the multimodal dispatch seam.
-    Unlike G.711, the decoded waveform depends on the step-index
-    trajectory, so per-class RMS has no closed form: the oracle carries a
-    frozen 35-row golden table (one per (doc_id%5, doc_id%7) fixture
-    class), computed ONCE by the same pure-Python codec outside Spark and
-    pinned in the SQL — any later codec or plumbing regression breaks the
-    hash match. Zero-crossings survive ADPCM exactly (the coder tracks a
-    ±16383 square well within half a period), so they stay closed-form."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.adpcm import encode_wav_adpcm
-    from bid_evaluation_spark.operators.multimodal import extract_audio_features
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 800 + int(d) % 5 * 400
-                h = 10 + int(d) % 7 * 2
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                payloads.append(encode_wav_adpcm(0.5 * sgn, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_audio_features(media, strict=True)
-    return feats.select("media_id", "sample_rate", "duration_ms",
-                        _r4("rms").alias("rms"), "zero_crossings")
-
-
-_SQL_MM_ADPCM_DECODE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, doc_id % 5 AS a, doc_id % 7 AS b,
-         800 + (doc_id % 5) * 400 AS n,
-         10 + (doc_id % 7) * 2 AS h
-  FROM documents
-),
-golden(a, b, rms) AS (VALUES
-  (0, 0, 0.4805), (0, 1, 0.4704), (0, 2, 0.4842), (0, 3, 0.4898),
-  (0, 4, 0.4848), (0, 5, 0.4786), (0, 6, 0.4825),
-  (1, 0, 0.4802), (1, 1, 0.4701), (1, 2, 0.4839), (1, 3, 0.4903),
-  (1, 4, 0.4865), (1, 5, 0.479),  (1, 6, 0.4822),
-  (2, 0, 0.4801), (2, 1, 0.47),   (2, 2, 0.4832), (2, 3, 0.49),
-  (2, 4, 0.4855), (2, 5, 0.479),  (2, 6, 0.482),
-  (3, 0, 0.4806), (3, 1, 0.4696), (3, 2, 0.4837), (3, 3, 0.4909),
-  (3, 4, 0.488),  (3, 5, 0.4788), (3, 6, 0.4816),
-  (4, 0, 0.4806), (4, 1, 0.4695), (4, 2, 0.4834), (4, 3, 0.4904),
-  (4, 4, 0.4868), (4, 5, 0.479),  (4, 6, 0.4812))
-SELECT doc_id AS media_id,
-  CAST(8000 AS BIGINT) AS sample_rate,
-  CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-  CAST(golden.rms AS DOUBLE) AS rms,
-  CAST((n - 1) // h AS BIGINT) AS zero_crossings
-FROM p JOIN golden ON p.a = golden.a AND p.b = golden.b
-"""
-
-
-def _q_mm_audio_fingerprint_documents(spark, sf_dir):
-    """Audio fingerprinting (operators/audiofp.py — Haitsma-Kalker-shaped
-    frame-energy gradient bits, the audio leg of the per-modality dedup
-    set next to MinHash/SimHash/dHash): deterministic integer-sawtooth
-    WAVs (sample k = ((a*k+b) mod 97 - 48)/64 with a,b,n derived from
-    doc_id) are encoded per doc and fingerprinted through the full audio
-    dispatch. Every quantity is integer-exact end-to-end — the encoder
-    truncates to int16, decoded samples are pcm/2^30-scaled integers,
-    frame energies are integer sums below 2^53 — so the DuckDB oracle
-    reproduces the energies, the gradient bits, and the MSB-first signed
-    64-bit packing arithmetically; any bug in decode scaling, framing,
-    bit order, or two's-complement packing breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.audiofp import audio_fingerprint
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                a = 1 + int(d) % 5
-                b = int(d) % 11
-                n = 2048 + int(d) % 4 * 256
-                k = np.arange(n)
-                s = (((a * k + b) % 97) - 48) / 64.0
-                payloads.append(encode_wav(s, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return audio_fingerprint(media, frame=256, strict=True)
-
-
-_SQL_MM_AUDIO_FINGERPRINT_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, 1 + doc_id % 5 AS a, doc_id % 11 AS b,
-         (2048 + (doc_id % 4) * 256) // 256 AS nf
-  FROM documents
-),
-e AS (
-  SELECT doc_id, nf, u.i AS i,
-    list_sum(list_transform(list_transform(generate_series(0, 255),
-      j -> CAST(trunc((((a * (i * 256 + j) + b) % 97) - 48)
-                      * 32767.0 / 64.0) AS BIGINT)),
-      v -> v * v)) AS en
-  FROM p, UNNEST(generate_series(0, nf - 1)) AS u(i)
-),
-bits AS (
-  SELECT doc_id, nf, i,
-    CASE WHEN lead(en) OVER (PARTITION BY doc_id ORDER BY i) > en
-         THEN 1 ELSE 0 END AS bit
-  FROM e
-),
-packed AS (
-  SELECT doc_id, nf,
-    SUM(CAST(bit AS HUGEINT) * (CAST(1 AS HUGEINT) << (63 - i))) AS v
-  FROM bits WHERE i < nf - 1
-  GROUP BY doc_id, nf
-)
-SELECT doc_id AS media_id, CAST(nf AS BIGINT) AS n_frames,
-  CAST(v - CASE WHEN v >= CAST(1 AS HUGEINT) << 63
-               THEN CAST(1 AS HUGEINT) << 64
-               ELSE CAST(0 AS HUGEINT) END AS BIGINT) AS fp64
-FROM packed
-"""
-
-
 def _q_sitemap_urls_documents(spark, sf_dir):
     """Sitemap discovery parsing (operators/sitemap.py — sitemaps.org
     protocol, the crawl-discovery leg next to robots/linkgraph): doc
@@ -2001,686 +1645,6 @@ SELECT doc_id, 'doc ' || CAST(doc_id AS VARCHAR) AS title, txt AS text,
   CAST(length(txt) AS BIGINT) AS n_chars,
   CAST(nl AS BIGINT) AS n_links, CAST(0 AS BIGINT) AS n_images
 FROM t
-"""
-
-
-def _q_pdf_text_documents(spark, sf_dir):
-    """PDF text extraction (operators/pdf.py — the document-ingest leg of
-    the media seams: unencrypted + Flate/plain streams + simple-font
-    Tj/TJ, the machine-generated majority; composite fonts/encryption
-    documented out of scope): each doc's text, projected to printable
-    ASCII and wrapped with parens + a trailing backslash (forcing the
-    §7.3.4.2 string-escape round trip), is written into a real
-    xref+FlateDecode PDF by the fixture encoder and extracted back by
-    the Spark kernel. The oracle rebuilds the expected string with SQL
-    concatenation — a bug in stream discovery, zlib handling, operator
-    tokenization, or escape decoding changes text/n_chars and breaks
-    the hash match."""
-    import re as _re
-
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.pdf import (
-        encode_pdf, extract_pdf_text_features)
-
-    docs = _docs_par(spark, sf_dir, "doc_id", "text")
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                proj = _re.sub(r"[^ -~]", "", text or "")
-                page = f"doc {int(d)}: ({proj})\\"
-                payloads.append(encode_pdf([page]))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return extract_pdf_text_features(media, strict=True)
-
-
-_SQL_PDF_TEXT_DOCUMENTS = """
-WITH expected AS (
-  SELECT doc_id,
-    'doc ' || CAST(doc_id AS VARCHAR) || ': ('
-      || regexp_replace(COALESCE(text, ''), '[^ -~]', '', 'g')
-      || ')' || chr(92) AS t
-  FROM documents
-)
-SELECT doc_id AS media_id,
-  CAST(1 AS BIGINT) AS n_pages, CAST(1 AS BIGINT) AS n_streams,
-  CAST(length(t) AS BIGINT) AS n_chars, t AS text
-FROM expected
-"""
-
-
-def _q_mm_bilinear_resize_documents(spark, sf_dir):
-    """Bilinear resize, align_corners=False (operators/resize.py — the
-    model-front-end convention next to the integer-exact NN kernel):
-    AFFINE fixture images (pixel(x,y) = doc_id%50 + x + 2y, no mod wrap)
-    make the interpolation EXACT — bilinear of a linear field is the
-    field — so every output pixel is base + px(x') + 2·py(y') with
-    px = (x'+0.5)·w/out − 0.5, and downscaling to 5×4 keeps every source
-    position unclamped. The oracle reproduces the resized mean AND both
-    corner samples; the corners pin the half-pixel-center convention
-    (align_corners=True or NN sampling yields different corners even
-    though the mean of an affine field survives any symmetric scheme)."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.resize import (
-        bilinear_resize, resize_bilinear_features)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + int(d) % 5, 6 + int(d) % 3
-                img = (int(d) % 50 + np.arange(w)[None, :]
-                       + 2 * np.arange(h)[:, None]).astype(np.uint8)
-                payloads.append(encode_png(img[:, :, None]))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = resize_bilinear_features(media, out_w=5, out_h=4, strict=True)
-
-    # corner samples via a second tiny kernel pass over the same fixture
-    def corners(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + int(d) % 5, 6 + int(d) % 3
-                img = (int(d) % 50 + np.arange(w)[None, :]
-                       + 2 * np.arange(h)[:, None]).astype(np.float64)
-                out = bilinear_resize(img, 5, 4)
-                rows.append({"media_id": int(d),
-                             "corner00": float(out[0, 0]),
-                             "corner_last": float(out[3, 4])})
-            yield pd.DataFrame(rows, columns=["media_id", "corner00",
-                                              "corner_last"])
-
-    cdf = docs.mapInPandas(
-        corners, "media_id long, corner00 double, corner_last double")
-    return (feats.join(cdf, "media_id")
-            .select("media_id", "width", "height",
-                    _r4("resized_mean").alias("resized_mean"),
-                    _r4("corner00").alias("corner00"),
-                    _r4("corner_last").alias("corner_last")))
-
-
-_SQL_MM_BILINEAR_RESIZE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, doc_id % 50 AS base,
-         8 + doc_id % 5 AS w, 6 + doc_id % 3 AS h
-  FROM documents
-)
-SELECT doc_id AS media_id,
-  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-  -- mean of an affine field under half-pixel sampling = field mean
-  round((base + (w - 1) / 2.0 + (h - 1)) * 10000.0) / 10000.0
-    AS resized_mean,
-  round((base + (0.5 * (w / 5.0) - 0.5)
-              + 2 * (0.5 * (h / 4.0) - 0.5)) * 10000.0) / 10000.0
-    AS corner00,
-  round((base + (4.5 * (w / 5.0) - 0.5)
-              + 2 * (3.5 * (h / 4.0) - 0.5)) * 10000.0) / 10000.0
-    AS corner_last
-FROM p
-"""
-
-
-def _q_mm_probe_documents(spark, sf_dir):
-    """Header-only media probing (operators/probe.py — the ffprobe-shaped
-    manifest pass that runs before any decode; touches tens of header
-    bytes per payload): payload modality cycles with doc_id%3 — PNG
-    image / PCM WAV audio / mono Y4M video, with dims, rates and frame
-    counts all doc-derived — and the probe must classify each container
-    and extract width/height/sample_rate/n_units/duration_ms from
-    headers alone; every column is a closed form the oracle reproduces.
-    Tests cover the other ten containers (JPEG/GIF/PNM/G.711/ADPCM/
-    FLAC/AVI/tar) and the corrupt→null-format contract."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.probe import probe_media
-    from bid_evaluation_spark.operators.wav import encode_wav
-    from bid_evaluation_spark.operators.y4m import encode_y4m
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 3 == 0:
-                    w, h = 8 + d % 5, 6 + d % 4
-                    img = np.zeros((h, w, 1), dtype=np.uint8)
-                    payloads.append(encode_png(img))
-                elif d % 3 == 1:
-                    n = 400 + d % 5 * 200
-                    payloads.append(encode_wav(np.zeros(n), rate=8000))
-                else:
-                    w, h = 8 + d % 4 * 2, 6 + d % 3 * 2
-                    nf = 2 + d % 4
-                    frames = [np.zeros((h, w), dtype=np.uint8)] * nf
-                    payloads.append(encode_y4m(frames, fps_num=5,
-                                               fps_den=1, mono=True))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return probe_media(media)
-
-
-_SQL_MM_PROBE_DOCUMENTS = """
-SELECT doc_id AS media_id,
-  CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'wav-pcm'
-       ELSE 'y4m' END AS format,
-  CASE doc_id % 3 WHEN 0 THEN CAST(8 + doc_id % 5 AS BIGINT)
-       WHEN 2 THEN CAST(8 + (doc_id % 4) * 2 AS BIGINT) END AS width,
-  CASE doc_id % 3 WHEN 0 THEN CAST(6 + doc_id % 4 AS BIGINT)
-       WHEN 2 THEN CAST(6 + (doc_id % 3) * 2 AS BIGINT) END AS height,
-  CASE doc_id % 3 WHEN 1 THEN CAST(8000 AS BIGINT) END AS sample_rate,
-  CASE doc_id % 3
-       WHEN 1 THEN CAST(400 + (doc_id % 5) * 200 AS BIGINT)
-       WHEN 2 THEN CAST(2 + doc_id % 4 AS BIGINT) END AS n_units,
-  CASE doc_id % 3
-       WHEN 1 THEN CAST((400 + (doc_id % 5) * 200) * 1000 // 8000 AS BIGINT)
-       WHEN 2 THEN CAST((2 + doc_id % 4) * 200 AS BIGINT) END AS duration_ms
-FROM documents
-"""
-
-
-def _q_mm_resample_documents(spark, sf_dir):
-    """Anti-aliased polyphase resampling (operators/resample.py —
-    windowed-sinc upfirdn, the operator that closes the 'needs a DSP
-    library' seam the decimator documented): the square-wave fixtures
-    downsampled 8 kHz → 3 kHz THROUGH Nyquist, so the RMS depends on how
-    many odd harmonics the anti-alias filter keeps per fixture class —
-    naive every-k-th decimation aliases them back and misses the golden
-    values. The oracle carries a frozen 35-row golden table (one per
-    (doc_id%5, doc_id%7) class, computed once by the same pure-numpy
-    resampler offline, 14 distinct values) plus the exact ceil-length
-    convention; zero-crossing-free columns keep it deterministic."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.resample import resample_audio
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 800 + int(d) % 5 * 400
-                h = 10 + int(d) % 7 * 2
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                payloads.append(encode_wav(0.5 * sgn, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    out = resample_audio(media, out_rate=3000, strict=True)
-    return out.select("media_id", "in_rate", "out_rate", "n_in", "n_out",
-                      _r4("rms").alias("rms"))
-
-
-_SQL_MM_RESAMPLE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, doc_id % 5 AS a, doc_id % 7 AS b,
-         800 + (doc_id % 5) * 400 AS n
-  FROM documents
-),
-golden(a, b, rms) AS (VALUES
-  (0,0,0.4785),(0,1,0.4764),(0,2,0.4803),(0,3,0.4848),(0,4,0.4849),
-  (0,5,0.4877),(0,6,0.4888),
-  (1,0,0.4785),(1,1,0.4766),(1,2,0.4808),(1,3,0.4848),(1,4,0.485),
-  (1,5,0.4877),(1,6,0.4889),
-  (2,0,0.4785),(2,1,0.4765),(2,2,0.4808),(2,3,0.4848),(2,4,0.4851),
-  (2,5,0.4877),(2,6,0.489),
-  (3,0,0.4785),(3,1,0.4765),(3,2,0.4808),(3,3,0.4848),(3,4,0.4849),
-  (3,5,0.4877),(3,6,0.489),
-  (4,0,0.4785),(4,1,0.4765),(4,2,0.4808),(4,3,0.4848),(4,4,0.485),
-  (4,5,0.4877),(4,6,0.4889))
-SELECT doc_id AS media_id,
-  CAST(8000 AS BIGINT) AS in_rate, CAST(3000 AS BIGINT) AS out_rate,
-  CAST(n AS BIGINT) AS n_in,
-  CAST((n * 3 + 7) // 8 AS BIGINT) AS n_out,
-  CAST(golden.rms AS DOUBLE) AS rms
-FROM p JOIN golden ON p.a = golden.a AND p.b = golden.b
-"""
-
-
-def _q_wds_tar_roundtrip_documents(spark, sf_dir):
-    """WebDataset tar-shard codec (sources/webdataset.py — the de-facto
-    multimodal training-data container: POSIX tar shards of adjacent
-    ``<key>.<ext>`` members, shard = unit of parallelism): each doc is
-    packed into a 3-sample shard (key ``<doc_id:08d>-<j>``, members
-    ``txt`` = the document text bytes and ``cls`` = a per-sample label)
-    and decoded straight back, with the OUTPUT taken from the decoded
-    members — so member naming, adjacency grouping, sizes, and content
-    all pass through the codec. The oracle reproduces keys, UTF-8 byte
-    lengths, and labels arithmetically; the binaryFile ingest path and
-    the distributed sink are covered by tests/test_webdataset.py."""
-    import pandas as pd
-
-    from bid_evaluation_spark.sources.webdataset import (
-        decode_tar_shard, encode_tar_shard)
-
-    docs = _docs_par(spark, sf_dir, "doc_id", "text")
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                txt = (text or "").encode("utf-8")
-                samples = [{"__key__": f"{int(d):08d}-{j}", "txt": txt,
-                            "cls": str((int(d) + j) % 7).encode()}
-                           for j in range(3)]
-                for s in decode_tar_shard(encode_tar_shard(samples)):
-                    rows.append({"key": s["__key__"],
-                                 "n_txt": len(s["txt"]),
-                                 "cls": int(s["cls"])})
-            yield pd.DataFrame(rows, columns=["key", "n_txt", "cls"])
-
-    return docs.mapInPandas(kernel, "key string, n_txt long, cls long")
-
-
-_SQL_WDS_TAR_ROUNDTRIP_DOCUMENTS = """
-SELECT printf('%08d-%d', doc_id, u.j) AS key,
-  CAST(octet_length(encode(COALESCE(text, ''))) AS BIGINT) AS n_txt,
-  CAST((doc_id + u.j) % 7 AS BIGINT) AS cls
-FROM documents, UNNEST(generate_series(0, 2)) AS u(j)
-"""
-
-
-def _q_mq_image_quality_documents(spark, sf_dir):
-    """Image quality gates (operators/mediaquality.py — the multimodal
-    counterpart of the Gopher/C4 text filters): contrast, gradient
-    sharpness, dark/bright fractions over REAL decoded pixels. Fixture is
-    the mm_image_decode PNG ramp (pixel(x,y) = (x + 7y + doc_id) mod 256),
-    whose every feature has a closed form the oracle reproduces: the
-    mod-256 ramp makes |horizontal diff| 1-or-255 and |vertical diff|
-    7-or-249 exactly at the wrap points, and the dark/bright counts are
-    integer pixel counts."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mediaquality import image_quality
-    from bid_evaluation_spark.operators.png import encode_png
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + int(d) % 5, 6 + int(d) % 3
-                img = ((np.arange(w)[None, :] + 7 * np.arange(h)[:, None]
-                        + int(d)) % 256).astype(np.uint8)
-                payloads.append(encode_png(img[:, :, None]))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    q = image_quality(media, strict=True)
-    return q.select("media_id", "width", "height",
-                    _r4("contrast").alias("contrast"),
-                    _r4("sharpness").alias("sharpness"),
-                    _r4("dark_frac").alias("dark_frac"),
-                    _r4("bright_frac").alias("bright_frac"))
-
-
-_SQL_MQ_IMAGE_QUALITY_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, 8 + doc_id % 5 AS w, 6 + doc_id % 3 AS h
-  FROM documents
-),
-px AS (
-  SELECT doc_id, w, h,
-    flatten(list_transform(generate_series(0, h - 1),
-      y -> list_transform(generate_series(0, w - 1),
-      x -> (x + 7 * y + doc_id) % 256))) AS v
-  FROM dims
-),
-feats AS (
-  SELECT doc_id, w, h,
-    sqrt(list_avg(list_transform(v, e -> CAST(e * e AS DOUBLE)))
-         - list_avg(list_transform(v, e -> CAST(e AS DOUBLE))) ^ 2)
-      AS contrast,
-    -- horizontal: within a row, consecutive ramp values differ by 1
-    -- except at the 255->0 wrap (|diff| = 255)
-    (list_sum(flatten(list_transform(generate_series(0, h - 1),
-        y -> list_transform(generate_series(0, w - 2),
-        x -> CAST(abs(((x + 1 + 7*y + doc_id) % 256)
-                      - ((x + 7*y + doc_id) % 256)) AS DOUBLE)))))
-       / (h * (w - 1))
-     + list_sum(flatten(list_transform(generate_series(0, h - 2),
-        y -> list_transform(generate_series(0, w - 1),
-        x -> CAST(abs(((x + 7*(y+1) + doc_id) % 256)
-                      - ((x + 7*y + doc_id) % 256)) AS DOUBLE)))))
-       / ((h - 1) * w)) AS sharpness,
-    list_sum(list_transform(v, e -> CASE WHEN e < 16 THEN 1.0 ELSE 0.0 END))
-      / (w * h) AS dark_frac,
-    list_sum(list_transform(v, e -> CASE WHEN e >= 240 THEN 1.0 ELSE 0.0 END))
-      / (w * h) AS bright_frac
-  FROM px
-)
-SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
-  CAST(h AS BIGINT) AS height,
-  round(contrast * 10000.0) / 10000.0 AS contrast,
-  round(sharpness * 10000.0) / 10000.0 AS sharpness,
-  round(dark_frac * 10000.0) / 10000.0 AS dark_frac,
-  round(bright_frac * 10000.0) / 10000.0 AS bright_frac
-FROM feats
-"""
-
-
-def _q_mq_audio_quality_documents(spark, sf_dir):
-    """Audio quality gates over REAL decoded samples: silence ratio,
-    clipping ratio, DC offset, peak, crest factor. Square-wave fixtures
-    with doc-derived amplitude a = 0.25·(1 + doc_id%4): PCM quantization
-    makes the level trunc(a·32767) exactly, so peak is closed-form,
-    clip_ratio is 1.0 exactly when a = 1.0 (32767/32768 ≥ 0.99) else 0.0,
-    crest factor is exactly 0 dB (|x| constant ⇒ rms = peak, float-exact
-    through square/mean/sqrt — see operators/mediaquality.py), and the
-    DC offset is the half-period remainder the oracle sums outright."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mediaquality import audio_quality
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 800 + int(d) % 5 * 400
-                h = 10 + int(d) % 7 * 2
-                a = 0.25 * (1 + int(d) % 4)
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                payloads.append(encode_wav(a * sgn, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    q = audio_quality(media, strict=True)
-    return q.select("media_id", "n_samples",
-                    _r4("silence_ratio").alias("silence_ratio"),
-                    _r4("clip_ratio").alias("clip_ratio"),
-                    _r4("dc_offset").alias("dc_offset"),
-                    _r4("peak").alias("peak"),
-                    _r4("crest_db").alias("crest_db"))
-
-
-_SQL_MQ_AUDIO_QUALITY_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id,
-         800 + (doc_id % 5) * 400 AS n,
-         10 + (doc_id % 7) * 2 AS h,
-         CAST(trunc(0.25 * (1 + doc_id % 4) * 32767.0) AS BIGINT) AS lvl
-  FROM documents
-),
-dc AS (
-  SELECT doc_id, n, h, lvl,
-    list_sum(list_transform(generate_series(0, n - 1),
-      k -> CASE WHEN (k // h) % 2 = 0 THEN 1 ELSE -1 END)) AS signsum
-  FROM p
-)
-SELECT doc_id AS media_id, CAST(n AS BIGINT) AS n_samples,
-  CAST(0.0 AS DOUBLE) AS silence_ratio,
-  CAST(CASE WHEN lvl / 32768.0 >= 0.99 THEN 1.0 ELSE 0.0 END AS DOUBLE)
-    AS clip_ratio,
-  round((CAST(signsum AS DOUBLE) * (lvl / 32768.0) / n) * 10000.0)
-    / 10000.0 AS dc_offset,
-  round((lvl / 32768.0) * 10000.0) / 10000.0 AS peak,
-  CAST(0.0 AS DOUBLE) AS crest_db
-FROM dc
-"""
-
-
-def _q_mm_video_signature_documents(spark, sf_dir):
-    """Video fingerprinting (operators/videofp.py — per-frame dHash +
-    majority-bit signature, the video leg of the per-modality dedup set):
-    deterministic 9x8 Y4M clips (pixel(x,y) of frame k =
-    (7x² + 13y + 5k + 3·doc_id) mod 256, nf = 2 + doc_id%4 frames). At
-    exactly 9x8 the dHash's 8x9 pooling grid is the IDENTITY map
-    (pinned by tests), so every hash bit is a raw adjacent-pixel
-    comparison the oracle reproduces arithmetically — then the majority
-    vote per bit position and the signed-64 MSB-first packing. A bug in
-    the frame decode, dHash bit order, majority tie rule, or
-    two's-complement overflow at bit 63 breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.videofp import (
-        video_dhash_frames, video_signature)
-    from bid_evaluation_spark.operators.y4m import encode_y4m
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                frames = [((7 * np.arange(9)[None, :] ** 2
-                            + 13 * np.arange(8)[:, None]
-                            + 5 * k + 3 * int(d)) % 256).astype(np.uint8)
-                          for k in range(2 + int(d) % 4)]
-                payloads.append(encode_y4m(frames, fps_num=5, fps_den=1,
-                                           mono=True))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return video_signature(video_dhash_frames(media, strict=True))
-
-
-_SQL_MM_VIDEO_SIGNATURE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, 2 + doc_id % 4 AS nf FROM documents
-),
-bits AS (
-  SELECT doc_id, nf, u.k AS k, r.r AS r, c.c AS c,
-    CASE WHEN (7*c.c*c.c + 13*r.r + 5*u.k + 3*doc_id) % 256
-            < (7*(c.c+1)*(c.c+1) + 13*r.r + 5*u.k + 3*doc_id) % 256
-         THEN 1 ELSE 0 END AS bit
-  FROM p,
-       UNNEST(generate_series(0, nf - 1)) AS u(k),
-       UNNEST(generate_series(0, 7)) AS r(r),
-       UNNEST(generate_series(0, 7)) AS c(c)
-),
-maj AS (
-  SELECT doc_id, nf, r, c,
-    CASE WHEN 2 * SUM(bit) > nf THEN 1 ELSE 0 END AS mbit
-  FROM bits GROUP BY doc_id, nf, r, c
-),
-packed AS (
-  SELECT doc_id, nf,
-    SUM(CAST(mbit AS HUGEINT)
-        * (CAST(1 AS HUGEINT) << (63 - (r * 8 + c)))) AS v
-  FROM maj GROUP BY doc_id, nf
-)
-SELECT doc_id AS media_id, CAST(nf AS BIGINT) AS n_frames,
-  CAST(v - CASE WHEN v >= CAST(1 AS HUGEINT) << 63
-               THEN CAST(1 AS HUGEINT) << 64
-               ELSE CAST(0 AS HUGEINT) END AS BIGINT) AS sig64
-FROM packed
-"""
-
-
-def _q_mm_mjpeg_avi_frames_documents(spark, sf_dir):
-    """REAL LOSSY-video decode end-to-end: per-doc MJPEG AVI clips —
-    every frame a standalone baseline JPEG in a RIFF AVI container
-    (operators/avi.py) — sampled by the same frame kernel as Y4M via
-    magic-byte dispatch. Frames are blockwise-constant grayscale (8x8
-    block (bx,by) of frame k holds (11*bx + 5*by + 7*k + doc_id) mod 256)
-    under the flat q=1 table, so the lossy path is bit-exact (pure-DC
-    blocks survive quantization) and the oracle reproduces every sampled
-    frame's dimensions and mean luma arithmetically — a bug anywhere in
-    the RIFF walk, strh fps parse, per-frame JPEG decode, or tick→frame
-    mapping breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-    from bid_evaluation_spark.operators.multimodal import sample_frames
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                wb, hb = 1 + int(d) % 3, 1 + int(d) % 2
-                frames = []
-                for k in range(2 + int(d) % 3):
-                    blocks = ((11 * np.arange(wb)[None, :]
-                               + 5 * np.arange(hb)[:, None]
-                               + 7 * k + int(d)) % 256)
-                    frames.append(np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                                  .astype(np.uint8))
-                payloads.append(encode_avi_mjpeg(frames, fps_num=5,
-                                                 fps_den=1, qtable=1))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads,
-                                "duration_ms": pd.array([None] * len(pdf),
-                                                        dtype="Int64")})
-
-    media = docs.mapInPandas(
-        gen, "media_id long, payload binary, duration_ms long")
-    frames = sample_frames(media, every_ms=200, strict=True)
-    return frames.select("media_id", "frame_index", "frame_ts_ms",
-                         "width", "height",
-                         _r4("frame_mean_luma").alias("frame_mean_luma"))
-
-
-_SQL_MM_MJPEG_AVI_FRAMES_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, 1 + doc_id % 3 AS wb, 1 + doc_id % 2 AS hb,
-         2 + doc_id % 3 AS nf
-  FROM documents
-),
-f AS (
-  SELECT doc_id, wb, hb, u.k FROM p, UNNEST(generate_series(0, nf - 1)) AS u(k)
-)
-SELECT doc_id AS media_id, CAST(k AS BIGINT) AS frame_index,
-  CAST(k * 200 AS BIGINT) AS frame_ts_ms,
-  CAST(8 * wb AS BIGINT) AS width, CAST(8 * hb AS BIGINT) AS height,
-  round(list_avg(flatten(list_transform(generate_series(0, hb - 1),
-          by -> list_transform(generate_series(0, wb - 1),
-          bx -> CAST((11*bx + 5*by + 7*k + doc_id) % 256 AS DOUBLE))))) * 10000.0)
-    / 10000.0 AS frame_mean_luma
-FROM f
-"""
-
-
-def _q_mm_video_frames_documents(spark, sf_dir):
-    """REAL video decode end-to-end: deterministic Y4M clips are encoded per
-    doc (frame k pixel(x,y) = (x + 3y + 5k + doc_id) mod 256, dims/length
-    derived from doc_id, 5 fps), shipped as binary payloads, and sampled at
-    a 200 ms cadence by the pure-stdlib Y4M kernel — dimensions from the
-    stream header, per-frame mean luma from the actual planes. The oracle
-    reproduces every sampled frame arithmetically, so a decode bug (header
-    parse, plane strides, chroma skip, tick→frame mapping) breaks the
-    hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.multimodal import sample_frames
-    from bid_evaluation_spark.operators.y4m import encode_y4m
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + int(d) % 4 * 2, 6 + int(d) % 3 * 2
-                frames = [((np.arange(w)[None, :] + 3 * np.arange(h)[:, None]
-                            + 5 * k + int(d)) % 256).astype(np.uint8)
-                          for k in range(3 + int(d) % 4)]
-                payloads.append(encode_y4m(frames, fps_num=5, fps_den=1))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads,
-                                "duration_ms": pd.array([None] * len(pdf),
-                                                        dtype="Int64")})
-
-    media = docs.mapInPandas(
-        gen, "media_id long, payload binary, duration_ms long")
-    frames = sample_frames(media, every_ms=200, strict=True)
-    return frames.select("media_id", "frame_index", "frame_ts_ms",
-                         "width", "height",
-                         _r4("frame_mean_luma").alias("frame_mean_luma"))
-
-
-_SQL_MM_VIDEO_FRAMES_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, 8 + (doc_id % 4) * 2 AS w, 6 + (doc_id % 3) * 2 AS h,
-         3 + doc_id % 4 AS nf
-  FROM documents
-),
-f AS (
-  SELECT doc_id, w, h, u.k FROM p, UNNEST(generate_series(0, nf - 1)) AS u(k)
-)
-SELECT doc_id AS media_id, CAST(k AS BIGINT) AS frame_index,
-  CAST(k * 200 AS BIGINT) AS frame_ts_ms,
-  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-  round(list_avg(flatten(list_transform(generate_series(0, h - 1),
-          y -> list_transform(generate_series(0, w - 1),
-          x -> CAST((x + 3*y + 5*k + doc_id) % 256 AS DOUBLE))))) * 10000.0)
-    / 10000.0 AS frame_mean_luma
-FROM f
-"""
-
-
-def _q_mm_jpeg_decode_documents(spark, sf_dir):
-    """REAL compressed-codec decode end-to-end: deterministic baseline JPEGs
-    are encoded per doc — blockwise-constant grayscale (8x8 block (bx,by)
-    holds (11*bx + 5*by + doc_id) mod 256, grid dims derived from doc_id)
-    with a flat q=1 quantization table, so every block's DCT is pure DC and
-    survives quantize/dequantize bit-exactly. The pure-stdlib JPEG kernel
-    (operators/jpeg.py: marker parse, DHT Huffman decode, dequant, IDCT)
-    recovers the exact pixels; the oracle reproduces width/height/mean-luma
-    arithmetically, so any decode bug breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-    from bid_evaluation_spark.operators.multimodal import extract_image_features
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                wb, hb = 1 + int(d) % 3, 1 + int(d) % 2
-                blocks = ((11 * np.arange(wb)[None, :]
-                           + 5 * np.arange(hb)[:, None] + int(d)) % 256)
-                img = np.repeat(np.repeat(blocks, 8, 0), 8, 1).astype(np.uint8)
-                payloads.append(encode_jpeg(img, qtable=1))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_image_features(media, fake=False, strict=True)
-    return feats.select("media_id", "width", "height",
-                        _r4("mean_luma").alias("mean_luma"))
-
-
-_SQL_MM_JPEG_DECODE_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, 1 + doc_id % 3 AS wb, 1 + doc_id % 2 AS hb
-  FROM documents
-)
-SELECT doc_id AS media_id,
-  CAST(8 * wb AS BIGINT) AS width, CAST(8 * hb AS BIGINT) AS height,
-  round(list_avg(flatten(list_transform(generate_series(0, hb - 1),
-          by -> list_transform(generate_series(0, wb - 1),
-          bx -> CAST((11*bx + 5*by + doc_id) % 256 AS DOUBLE))))) * 10000.0)
-    / 10000.0 AS mean_luma
-FROM dims
 """
 
 
@@ -6766,117 +5730,6 @@ FROM noised
 """
 
 
-def _q_mm_image_resize_documents(spark, sf_dir):
-    """Nearest-neighbor image resize on the REAL decode path
-    (multimodal.py resize_image_features): the same formula PNGs as
-    mm_image_decode, resized to 4×4 with integer-exact sampling
-    (⌊x·w/out⌋) — the oracle replays every sampled coordinate and the
-    resized mean arithmetically, so a resample-index bug breaks the
-    hash."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.multimodal import (
-        resize_image_features)
-    from bid_evaluation_spark.operators.png import encode_png
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + int(d) % 5, 6 + int(d) % 3
-                img = ((np.arange(w)[None, :] + 7 * np.arange(h)[:, None]
-                        + int(d)) % 256).astype(np.uint8)
-                payloads.append(encode_png(img))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = resize_image_features(media, out_w=4, out_h=4, strict=True)
-    return res.select("media_id", "width", "height", "out_w", "out_h",
-                      _r4("resized_mean_luma").alias("resized_mean_luma"))
-
-
-_SQL_MM_IMAGE_RESIZE_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, 8 + doc_id % 5 AS w, 6 + doc_id % 3 AS h FROM documents
-),
-grid AS (
-  SELECT doc_id, w, h,
-    ((x.i * w) // 4 + 7 * ((y.i * h) // 4) + doc_id) % 256 AS px
-  FROM dims,
-       (SELECT unnest(generate_series(0, 3)) AS i) x,
-       (SELECT unnest(generate_series(0, 3)) AS i) y
-)
-SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
-  CAST(h AS BIGINT) AS height,
-  CAST(4 AS BIGINT) AS out_w, CAST(4 AS BIGINT) AS out_h,
-  round(avg(CAST(px AS DOUBLE)) * 10000.0) / 10000.0
-    AS resized_mean_luma
-FROM grid GROUP BY doc_id, w, h
-"""
-
-
-def _q_mm_audio_decimate_documents(spark, sf_dir):
-    """Integer audio decimation on the REAL decode path (multimodal.py
-    decimate_audio_features): the same square-wave WAVs as
-    mm_audio_decode, decimated ×3 — surviving samples, output rate, RMS
-    (amplitude-constant ⇒ exactly 16383/32768) and the decimated
-    zero-crossing count are all closed-form in (doc_id, factor), so the
-    oracle replays the whole decimation arithmetically."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.multimodal import (
-        decimate_audio_features)
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 800 + int(d) % 5 * 400
-                h = 10 + int(d) % 7 * 2
-                sgn = 1 - 2 * ((np.arange(n) // h) % 2)
-                payloads.append(encode_wav(0.5 * sgn, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = decimate_audio_features(media, factor=3, strict=True)
-    return res.select("media_id", "sample_rate", "out_rate", "n_in",
-                      "n_out", _r4("rms").alias("rms"), "zero_crossings")
-
-
-_SQL_MM_AUDIO_DECIMATE_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, 800 + doc_id % 5 * 400 AS n, 10 + doc_id % 7 * 2 AS h
-  FROM documents
-),
-counts AS (SELECT doc_id, n, h, (n + 2) // 3 AS n_out FROM dims),
-zc AS (
-  SELECT c.doc_id,
-    count(*) FILTER (WHERE ((i.i * 3 // c.h) % 2)
-                     != (((i.i - 1) * 3 // c.h) % 2)) AS z
-  FROM counts c,
-       (SELECT unnest(generate_series(1, 800)) AS i) i
-  WHERE i.i <= c.n_out - 1
-  GROUP BY c.doc_id
-)
-SELECT c.doc_id AS media_id,
-  CAST(8000 AS BIGINT) AS sample_rate,
-  CAST(8000 // 3 AS BIGINT) AS out_rate,
-  CAST(c.n AS BIGINT) AS n_in, CAST(c.n_out AS BIGINT) AS n_out,
-  round((16383.0 / 32768.0) * 10000.0) / 10000.0 AS rms,
-  CAST(zc.z AS BIGINT) AS zero_crossings
-FROM counts c JOIN zc ON zc.doc_id = c.doc_id
-"""
-
-
 def _q_analytics_poststrat_orders(spark, sf_dir):
     """Post-stratified mean (analytics.py post_stratified_mean): a
     deliberately mix-drifted sample (urgent orders half-dropped) repaired
@@ -7125,305 +5978,6 @@ SELECT s.doc_id,
   round(s.dup_ratio * 10000.0) / 10000.0 + 0.0 AS dup_ratio,
   round(exp(-p.avg_logprob) * 10000.0) / 10000.0 + 0.0 AS ppl
 FROM surv s LEFT JOIN per_doc p USING (doc_id)
-"""
-
-
-def _q_pipe_media_funnel_documents(spark, sf_dir):
-    """Census-routed MULTIMODAL curation funnel (operators/
-    mediafunnel.py — r12 verdict task 1): a mixed-payload corpus goes
-    through magic-byte census → per-modality processing → ONE unified
-    keep/drop manifest, with the payload read exactly once. 19 classes
-    (d % 19), every payload built by the repo's OWN encoder, each
-    tripping exactly one route+gate:
-
-    images — 0 PNG texture (canonical), 1 BMP of the SAME pixels
-    (cross-container duplicate: the census routes both to the image
-    decoder, so they share a dHash and dedup), 2 flat JPEG
-    (low_contrast — gated out BEFORE dedup, removing the dHash-0 hot
-    key), 3 tiny GIF (too_small), 13 WebP (inventory dims, null dHash
-    — the documented coded-pixel seam), 15 truncated PNG
-    (undecodable); audio — 4 burst speech (keep), 5 silence
-    (no_speech), 6 hot tone (loudness), 18 one short burst in 2 s
-    (low_speech_ratio), 10 MP3 inventory (keep), 12 two-hour Ogg
-    (too_long); video — 11 mid-moov-truncated MP4 (damaged), 17 Y4M
-    (keep); text — 7 prose (keep), 8 two tokens (short_text), 9 HTML
-    extract (keep), 16 digits (low_alpha); 14 binary junk
-    (unknown_route).
-
-    Image dedup is exact-dHash groupBy→min (LINEAR, no pairwise
-    join); dup_of = the class-{0,1} group's min doc_id. Oracle: frozen
-    per-class feature goldens (computed once by the same kernels
-    outside Spark) + full verdict-precedence replay."""
-    from bid_evaluation_spark.operators.mediafunnel import media_funnel
-
-    media = _media_funnel_fixture(spark, sf_dir)
-    res = media_funnel(media)
-    return res.select(
-        "media_id", "media_type", "container", "width", "height",
-        (_r4("contrast") + F.lit(0.0)).alias("contrast"),
-        "duration_ms",
-        (_r4("speech_ratio") + F.lit(0.0)).alias("speech_ratio"),
-        (_r4("integrated_lufs") + F.lit(0.0)).alias("integrated_lufs"),
-        "n_tokens",
-        (_r4("alpha_ratio") + F.lit(0.0)).alias("alpha_ratio"),
-        "dup_of", "keep", "drop_reason")
-
-
-def _media_funnel_fixture(spark, sf_dir):
-    """The 19-class mixed-payload corpus both funnel queries share."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.bmp import encode_bmp
-    from bid_evaluation_spark.operators.gif import encode_gif
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-    from bid_evaluation_spark.operators.mp3 import build_mp3
-    from bid_evaluation_spark.operators.mp4 import build_mp4
-    from bid_evaluation_spark.operators.ogg import build_ogg
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.wav import encode_wav
-    from bid_evaluation_spark.operators.webp import build_webp
-    from bid_evaluation_spark.operators.y4m import encode_y4m
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        grad = ((np.add.outer(np.arange(12) * 23, np.arange(16) * 41)
-                 * 7) % 211).astype(np.uint8)
-        t = np.arange(int(8000 * 1.2)) / 8000.0
-        speech = (0.1 * np.sin(2 * np.pi * 300 * t)
-                  * ((t % 0.6) < 0.4).astype(float))
-        t1 = np.arange(8000) / 8000.0
-        t2 = np.arange(16000) / 8000.0
-        lowr = (0.1 * np.sin(2 * np.pi * 300 * t2)
-                * ((t2 >= 0.5) & (t2 < 0.65)).astype(float))
-        mp4_full = build_mp4(duration=2000,
-                             tracks=[("vide", "avc1", 32, 24)])
-        fixed = {
-            0: encode_png(grad),
-            1: encode_bmp(np.repeat(grad[:, :, None], 3, axis=2)),
-            2: encode_jpeg(np.full((16, 16), 128, dtype=np.uint8)),
-            3: encode_gif(np.full((4, 4, 3), 200, dtype=np.uint8)),
-            4: encode_wav(speech, rate=8000),
-            5: encode_wav(np.zeros(8000), rate=8000),
-            6: encode_wav(0.9 * np.sin(2 * np.pi * 1000 * t1),
-                          rate=8000),
-            7: ("the quick brown fox jumps over the lazy dog "
-                * 4).encode(),
-            8: b"ok sure",
-            9: (b"<html><head><title>T</title></head><body><p>a tidy "
-                b"page of twenty five plain words for the extraction "
-                b"route to count as body text here</p>"
-                b"<a href=\"x\">link</a></body></html>"),
-            10: build_mp3([9] * 40),
-            11: mp4_full[:len(mp4_full) // 2],
-            12: build_ogg("opus", rate=48000, pre_skip=0,
-                          final_granule=48000 * 7200, n_audio_pages=2),
-            13: build_webp("lossy", width=64, height=48),
-            14: b"\x00\xfe\x80\xff raw junk \x81\x82",
-            15: encode_png(grad)[:20],
-            16: b"12345 67890 ++-- 1029 38 47 56",
-            17: encode_y4m([np.full((16, 16), i * 40, dtype=np.uint8)
-                            for i in range(3)], fps_num=10),
-            18: encode_wav(lowr, rate=8000),
-        }
-        for pdf_ in batches:
-            yield pd.DataFrame({
-                "media_id": pdf_["doc_id"],
-                "payload": [fixed[int(d) % 19] for d in pdf_["doc_id"]],
-            })
-
-    return docs.mapInPandas(gen, "media_id long, payload binary")
-
-
-_SQL_PIPE_MEDIA_FUNNEL_DOCUMENTS = """
-WITH g(c, mt, cont, w, h, contrast, dur, sr, lufs, nt, ar, reason)
-AS (VALUES
-  (0, 'image', 'png',  16, 12, 61.0624, NULL, NULL, NULL, NULL, NULL,
-   NULL),
-  (1, 'image', 'bmp',  16, 12, 61.0624, NULL, NULL, NULL, NULL, NULL,
-   NULL),
-  (2, 'image', 'jpeg', 16, 16, 0.0, NULL, NULL, NULL, NULL, NULL,
-   'low_contrast'),
-  (3, 'image', 'gif',   4,  4, 0.0, NULL, NULL, NULL, NULL, NULL,
-   'too_small'),
-  (4, 'audio', 'wav', NULL, NULL, NULL, 1200, 0.6933, -25.1645, NULL,
-   NULL, NULL),
-  (5, 'audio', 'wav', NULL, NULL, NULL, 1000, 0.0, NULL, NULL, NULL,
-   'no_speech'),
-  (6, 'audio', 'wav', NULL, NULL, NULL, 1000, 0.976, -3.9063, NULL,
-   NULL, 'loudness'),
-  (7, 'text', 'plain', NULL, NULL, NULL, NULL, NULL, NULL, 36, 1.0,
-   NULL),
-  (8, 'text', 'plain', NULL, NULL, NULL, NULL, NULL, NULL, 2, 1.0,
-   'short_text'),
-  (9, 'text', 'html', NULL, NULL, NULL, NULL, NULL, NULL, 19, 1.0,
-   NULL),
-  (10, 'audio', 'mpeg', NULL, NULL, NULL, 1044, NULL, NULL, NULL,
-   NULL, NULL),
-  (11, 'video', 'mp4', NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-   NULL, 'damaged'),
-  (12, 'audio', 'ogg', NULL, NULL, NULL, 7200000, NULL, NULL, NULL,
-   NULL, 'too_long'),
-  (13, 'image', 'webp', 64, 48, NULL, NULL, NULL, NULL, NULL, NULL,
-   NULL),
-  (14, 'unknown', 'binary', NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-   NULL, 'unknown_route'),
-  (15, 'image', 'png', NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-   NULL, 'undecodable'),
-  (16, 'text', 'plain', NULL, NULL, NULL, NULL, NULL, NULL, 7, 0.0,
-   'low_alpha'),
-  (17, 'video', 'y4m', 16, 16, NULL, 300, NULL, NULL, NULL, NULL,
-   NULL),
-  (18, 'audio', 'wav', NULL, NULL, NULL, 2000, 0.088, -28.8138, NULL,
-   NULL, 'low_speech_ratio')),
-base AS (SELECT doc_id, doc_id % 19 AS c FROM documents),
-cmin AS (SELECT min(doc_id) AS m FROM base WHERE c IN (0, 1))
-SELECT b.doc_id AS media_id, g.mt AS media_type,
-  g.cont AS container,
-  CAST(g.w AS BIGINT) AS width, CAST(g.h AS BIGINT) AS height,
-  CAST(g.contrast AS DOUBLE) + 0.0 AS contrast,
-  CAST(g.dur AS BIGINT) AS duration_ms,
-  CAST(g.sr AS DOUBLE) + 0.0 AS speech_ratio,
-  CAST(g.lufs AS DOUBLE) + 0.0 AS integrated_lufs,
-  CAST(g.nt AS BIGINT) AS n_tokens,
-  CAST(g.ar AS DOUBLE) + 0.0 AS alpha_ratio,
-  CAST(CASE WHEN g.c IN (0, 1) AND b.doc_id > (SELECT m FROM cmin)
-            THEN (SELECT m FROM cmin) END AS BIGINT) AS dup_of,
-  (g.reason IS NULL
-   AND NOT (g.c IN (0, 1) AND b.doc_id > (SELECT m FROM cmin)))
-    AS keep,
-  CASE WHEN g.c IN (0, 1) AND b.doc_id > (SELECT m FROM cmin)
-       THEN 'duplicate' ELSE g.reason END AS drop_reason
-FROM base b JOIN g ON g.c = b.c
-"""
-
-
-def _q_pipe_media_funnel_report_documents(spark, sf_dir):
-    """Funnel YIELD REPORT (r12): the corpus-level rollup a curation
-    run publishes — per (media_type, drop_reason) file counts over
-    the 19-class funnel corpus (drop_reason null = kept). One
-    partial-aggregated groupBy on the funnel output; the oracle
-    replays every cell from class arithmetic, including the dedup
-    split (the class-{0,1} group keeps exactly ONE canonical image —
-    the corpus-min doc — and marks the rest duplicate)."""
-    from bid_evaluation_spark.operators.mediafunnel import media_funnel
-
-    media = _media_funnel_fixture(spark, sf_dir)
-    return (media_funnel(media)
-            .groupBy("media_type", "drop_reason")
-            .agg(F.count(F.lit(1)).alias("n_files")))
-
-
-_SQL_PIPE_MEDIA_FUNNEL_REPORT_DOCUMENTS = """
-WITH base AS (SELECT doc_id, doc_id % 19 AS c FROM documents),
-cnt AS (SELECT c, count(*) AS n FROM base GROUP BY c),
-m(c, mt, reason) AS (VALUES
-  (2, 'image', 'low_contrast'), (3, 'image', 'too_small'),
-  (4, 'audio', NULL), (5, 'audio', 'no_speech'),
-  (6, 'audio', 'loudness'), (7, 'text', NULL),
-  (8, 'text', 'short_text'), (9, 'text', NULL),
-  (10, 'audio', NULL), (11, 'video', 'damaged'),
-  (12, 'audio', 'too_long'), (13, 'image', NULL),
-  (14, 'unknown', 'unknown_route'), (15, 'image', 'undecodable'),
-  (16, 'text', 'low_alpha'), (17, 'video', NULL),
-  (18, 'audio', 'low_speech_ratio')),
-cells AS (
-  SELECT m.mt, m.reason, cnt.n
-  FROM cnt JOIN m ON m.c = cnt.c
-  UNION ALL
-  SELECT 'image', NULL, 1
-  UNION ALL
-  SELECT 'image', 'duplicate',
-    (SELECT sum(n) FROM cnt WHERE c IN (0, 1)) - 1
-)
-SELECT mt AS media_type, reason AS drop_reason,
-  CAST(sum(n) AS BIGINT) AS n_files
-FROM cells GROUP BY mt, reason
-"""
-
-
-def _q_pipe_wds_funnel_documents(spark, sf_dir):
-    """WebDataset → media funnel COMPOSITION (r12): the end-to-end
-    shape of multimodal training-data curation — tar shards of
-    adjacent ``<key>.<ext>`` samples (sources/webdataset.py) are
-    decoded into (media_id, payload) rows and pushed through the
-    census-routed funnel (operators/mediafunnel.py), so shard
-    adjacency, member extraction, magic-byte routing, per-modality
-    gates, image dedup, and the precedence verdict are certified as
-    ONE pipeline. Each doc packs a 4-sample shard: j=0 a PNG texture
-    IDENTICAL across all docs (the whole corpus dedups to the global
-    min media_id — keep-lowest at corpus scope), j=1 a speech WAV
-    (keep; frozen funnel goldens), j=2 a two-token text (short_text),
-    j=3 binary junk (unknown_route). media_id = doc_id*4 + j.
-    Oracle: closed-form verdicts + the corpus-min dup_of replay."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mediafunnel import media_funnel
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.wav import encode_wav
-    from bid_evaluation_spark.sources.webdataset import (
-        decode_tar_shard, encode_tar_shard)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        grad = ((np.add.outer(np.arange(12) * 23, np.arange(16) * 41)
-                 * 7) % 211).astype(np.uint8)
-        t = np.arange(int(8000 * 1.2)) / 8000.0
-        speech = (0.1 * np.sin(2 * np.pi * 300 * t)
-                  * ((t % 0.6) < 0.4).astype(float))
-        members = [("png", encode_png(grad)),
-                   ("wav", encode_wav(speech, rate=8000)),
-                   ("txt", b"ok sure"),
-                   ("bin", b"\x00\xfe\x80\xff junk \x81")]
-        for pdf_ in batches:
-            rows = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                shard = encode_tar_shard(
-                    [{"__key__": f"{d:08d}-{j}", ext: payload}
-                     for j, (ext, payload) in enumerate(members)])
-                # the decode side of the composition: adjacency
-                # grouping + member extraction back to payload rows
-                for j, s in enumerate(decode_tar_shard(shard)):
-                    ext = [e for e in s if e != "__key__"][0]
-                    rows.append({"media_id": d * 4 + j,
-                                 "payload": s[ext]})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = media_funnel(media)
-    return res.select(
-        "media_id", "media_type", "container", "duration_ms",
-        (_r4("speech_ratio") + F.lit(0.0)).alias("speech_ratio"),
-        "n_tokens", "dup_of", "keep", "drop_reason")
-
-
-_SQL_PIPE_WDS_FUNNEL_DOCUMENTS = """
-WITH base AS (
-  SELECT doc_id, u.j AS j, doc_id * 4 + u.j AS media_id
-  FROM documents, UNNEST(generate_series(0, 3)) AS u(j)
-),
-cmin AS (SELECT min(doc_id) * 4 AS m FROM documents)
-SELECT media_id,
-  CASE j WHEN 0 THEN 'image' WHEN 1 THEN 'audio' WHEN 2 THEN 'text'
-         ELSE 'unknown' END AS media_type,
-  CASE j WHEN 0 THEN 'png' WHEN 1 THEN 'wav' WHEN 2 THEN 'plain'
-         ELSE 'binary' END AS container,
-  CAST(CASE j WHEN 1 THEN 1200 END AS BIGINT) AS duration_ms,
-  CAST(CASE j WHEN 1 THEN 0.6933 END AS DOUBLE) + 0.0
-    AS speech_ratio,
-  CAST(CASE j WHEN 2 THEN 2 END AS BIGINT) AS n_tokens,
-  CAST(CASE WHEN j = 0 AND media_id > (SELECT m FROM cmin)
-            THEN (SELECT m FROM cmin) END AS BIGINT) AS dup_of,
-  (j = 1 OR (j = 0 AND media_id = (SELECT m FROM cmin))) AS keep,
-  CASE WHEN j = 0 AND media_id > (SELECT m FROM cmin)
-         THEN 'duplicate'
-       WHEN j = 2 THEN 'short_text'
-       WHEN j = 3 THEN 'unknown_route' END AS drop_reason
-FROM base
 """
 
 
@@ -14585,61 +13139,6 @@ FROM s3
 """
 
 
-def _q_mm_netpbm_decode_documents(spark, sf_dir):
-    """REAL color-image decode through the Netpbm (P6 PPM) codec
-    (operators/netpbm.py): deterministic RGB rasters are encoded per doc
-    (R=(x+doc) mod 256, G=(y+2·doc) mod 256, B=(x+y) mod 256, dims from
-    doc_id), shipped as binary payloads, and decoded by the pure-stdlib
-    kernel — width/height from the header, mean Rec. 601 luma from the
-    actual pixels. The oracle reproduces the luma arithmetically, so a
-    header-parse or channel-order bug breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.multimodal import (
-        extract_image_features)
-    from bid_evaluation_spark.operators.netpbm import encode_ppm
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 6 + d % 4, 5 + d % 3
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                img = np.stack([(x + d) % 256 + 0 * y,
-                                (y + 2 * d) % 256 + 0 * x,
-                                (x + y) % 256], axis=2).astype(np.uint8)
-                payloads.append(encode_ppm(img))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_image_features(media, fake=False, strict=True)
-    return feats.select("media_id", "width", "height",
-                        _r4("mean_luma").alias("mean_luma"))
-
-
-_SQL_MM_NETPBM_DECODE_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, CAST(6 + doc_id % 4 AS BIGINT) AS w,
-         CAST(5 + doc_id % 3 AS BIGINT) AS h
-  FROM documents
-)
-SELECT doc_id AS media_id, w AS width, h AS height,
-  round(list_avg(flatten(list_transform(generate_series(0, h - 1),
-          y -> list_transform(generate_series(0, w - 1),
-          x -> 0.299 * CAST((x + doc_id) % 256 AS DOUBLE)
-             + 0.587 * CAST((y + 2 * doc_id) % 256 AS DOUBLE)
-             + 0.114 * CAST((x + y) % 256 AS DOUBLE))))) * 10000.0)
-    / 10000.0 AS mean_luma
-FROM dims
-"""
-
-
 def _q_dedup_homoglyph_documents(spark, sf_dir):
     """Homoglyph/confusable dedup (operators/confusable.py — fixed
     UTS#39-style mapping, NATIVE Column transform: regexp_replace +
@@ -14726,425 +13225,6 @@ FROM sk JOIN wit USING (skeleton)
 _SQL_DEDUP_HOMOGLYPH_DOCUMENTS = _sql_dedup_homoglyph_documents()
 
 
-def _q_mm_scenecut_documents(spark, sf_dir):
-    """Video scene-cut detection (operators/scenecut.py — 16-bin luma
-    histogram L1 detector): per doc a Y4M clip of 1+doc_id%4 flat-luma
-    shots, shot i running 2+(doc_id+i)%3 frames at luma bin
-    1+((doc_id*7+i*5)%14) — adjacent shots always land in different
-    bins (5 is coprime-enough to 14), so every boundary is a
-    full-mass histogram jump and the cut set is exactly the shot
-    boundaries. Output is the exploded per-shot manifest
-    (media_id, shot_index, shot_start, shot_len); the oracle rebuilds
-    it with a lateral generate_series + prefix-sum window, so the
-    detector's cut LOCATIONS (not just counts) gate the hash."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.scenecut import scene_cuts
-    from bid_evaluation_spark.operators.y4m import encode_y4m
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = []
-                for i in range(1 + d % 4):
-                    v = 16 * (1 + ((d * 7 + i * 5) % 14)) + 3
-                    frames += [np.full((24, 32), v, dtype=np.uint8)] \
-                        * (2 + (d + i) % 3)
-                payloads.append(encode_y4m(frames))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    cuts = scene_cuts(media, strict=True)
-    starts = F.concat(F.array(F.lit(0)), F.col("cut_frames"))
-    exploded = cuts.select(
-        "media_id", F.posexplode("shot_lengths").alias("shot_index",
-                                                       "shot_len"),
-        starts.alias("_starts"))
-    return exploded.select(
-        "media_id",
-        F.col("shot_index").cast("long").alias("shot_index"),
-        F.element_at("_starts", F.col("shot_index") + 1)
-        .cast("long").alias("shot_start"),
-        F.col("shot_len").cast("long").alias("shot_len"))
-
-
-_SQL_MM_SCENECUT_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, 1 + doc_id % 4 AS s FROM documents
-),
-shots AS (
-  SELECT doc_id, i AS shot_index, 2 + (doc_id + i) % 3 AS shot_len
-  FROM p, UNNEST(generate_series(0, s - 1)) AS t(i)
-)
-SELECT doc_id AS media_id,
-       CAST(shot_index AS BIGINT) AS shot_index,
-       CAST(COALESCE(SUM(shot_len) OVER (
-            PARTITION BY doc_id ORDER BY shot_index
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            AS BIGINT) AS shot_start,
-       CAST(shot_len AS BIGINT) AS shot_len
-FROM shots
-"""
-
-
-def _q_mm_phash_documents(spark, sf_dir):
-    """DCT perceptual hash (operators/phash.py — the low-frequency
-    complement of dHash, convention pinned in the module: 32×32
-    half-pixel bilinear, orthonormal DCT-II, 8×8 block, AC-median
-    threshold, MSB-first signed packing): deterministic gradient+blob
-    PNGs per (doc_id%5, doc_id%7) class through the full
-    decode→luma→hash kernel. The oracle carries a frozen 35-class
-    golden hash table computed ONCE by the same codec chain outside
-    Spark — every stage (PNG decode, luma, resize weights, DCT, median
-    split, bit packing) gates the exact 64-bit values."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.phash import image_phash
-    from bid_evaluation_spark.operators.png import encode_png
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                a, b = int(d) % 5, int(d) % 7
-                y, x = np.mgrid[0:64, 0:48]
-                img = np.clip(
-                    90 + x * (0.5 + 0.1 * a)
-                    + 50 * np.exp(-((x - (10 + 3 * b)) ** 2
-                                    + (y - (12 + 2 * a)) ** 2) / 250.0),
-                    0, 255).astype(np.uint8)
-                payloads.append(encode_png(img))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return image_phash(media, strict=True)
-
-
-_SQL_MM_PHASH_DOCUMENTS = """
-WITH golden(a, b, h) AS (VALUES
-  (0, 0, -9169117463449747656), (0, 1, -9169117463449748166),
-  (0, 2, -9169117463449747910), (0, 3, -9169117463449747662),
-  (0, 4, -9169116363938185668), (0, 5, -9181259180786422941),
-  (0, 6, -8028346476433609877),
-  (1, 0, -9169113065403237318), (1, 1, -9169117463449748418),
-  (1, 2, -9169115264426493636), (1, 3, -9169106468333471693),
-  (1, 4, -9169100970842705102), (1, 5, -9181265782016940693),
-  (1, 6, -8028335481317332374),
-  (2, 0, -9169259300449732584), (2, 1, -9169259300449732560),
-  (2, 2, -9169259300449734600), (2, 3, -9169259300449800141),
-  (2, 4, -9169259300450520525), (2, 5, -9181315260040451217),
-  (2, 6, -8028393755433604245),
-  (3, 0, -9169259300449732584), (3, 1, -9169259300449928648),
-  (3, 2, -9169259300449800134), (3, 3, -9169259300450190276),
-  (3, 4, -9169259300466575816), (3, 5, -9181315260040384667),
-  (3, 6, -8028393755433603477),
-  (4, 0, -9169259300450191299), (4, 1, -9169259300450190276),
-  (4, 2, -9169259300449800134), (4, 3, -9169259300517366727),
-  (4, 4, -9169259300600726990), (4, 5, -9181315255879369887),
-  (4, 6, -8028393755433537694))
-SELECT doc_id AS media_id, CAST(golden.h AS BIGINT) AS phash
-FROM documents
-JOIN golden ON doc_id % 5 = golden.a AND doc_id % 7 = golden.b
-"""
-
-
-def _q_mm_video_neardup_documents(spark, sf_dir):
-    """END-TO-END video near-dup (operators/videodedup.py): MJPEG-AVI
-    decode → histogram scene cuts → per-shot DCT pHash (ONE Arrow
-    kernel, payload dropped immediately) → banded-Hamming shot join →
-    per-video-pair shared-shot verdicts. The composition the r9 verdict
-    asked for (task 3) — shot manifests as join keys across the
-    decode/segment/hash/join seams.
-
-    Fixture (fixed witness set doc_id < 80, constant across SFs like
-    the audio-match fixture): class c = d%8, 2+d%2 shots, shot i's
-    frames are one flat-bin cosine-textured image (luma bin
-    1+(c+5i)%14, texture amplitude ±7 stays strictly inside the 16-wide
-    bin, so adjacent shots are full-mass histogram jumps ≥3 bins apart
-    even after JPEG loss) repeated 2+(d+i)%2 times. Same class ⇒
-    identical shot content ⇒ Hamming 0; the 20 (c,i) golden hashes
-    (computed ONCE outside Spark by the same AVI→JPEG→pHash chain) are
-    ≥7 bits apart pairwise, so near-dup pairs are exactly same-class
-    video pairs. The oracle replays the ENTIRE near-dup decision
-    (bit_count(xor()) ≤ 6 join + pair aggregation) on the golden
-    table — thresholds and counts are value-gated, not trusted."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-    from bid_evaluation_spark.operators.videodedup import (
-        shot_phashes, video_neardup)
-
-    docs = _docs_par(spark, sf_dir).filter(F.col("doc_id") < 80)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c, n = d % 8, 2 + d % 2
-                y, x = np.mgrid[0:24, 0:32]
-                frames = []
-                for i in range(n):
-                    b = 1 + (c + 5 * i) % 14
-                    p = np.round(7 * np.cos(2 * np.pi * x * (1 + c) / 32)
-                                 * np.cos(2 * np.pi * y * (1 + i) / 24))
-                    frames += [(16 * b + 8 + p).astype(np.uint8)] \
-                        * (2 + (d + i) % 2)
-                payloads.append(encode_avi_mjpeg(frames, quality=90))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return video_neardup(shot_phashes(media, strict=True))
-
-
-_SQL_MM_VIDEO_NEARDUP_DOCUMENTS = """
-WITH golden(c, i, h) AS (VALUES
-  (0, 0, -134146356233324212), (0, 1, -1305980208803619320),
-  (1, 0, -2893324645559275431), (1, 1, -3279375923410399097),
-  (1, 2, -6351786339979470844),
-  (2, 0, -7188178206281906243), (2, 1, -8940022983405485727),
-  (3, 0, -7133711112498719360), (3, 1, -9009687484056434520),
-  (3, 2, -9163204606019799776),
-  (4, 0, -3397975769532921341), (4, 1, -8563096752311591914),
-  (5, 0, -3328172011211302672), (5, 1, -8661028612448007156),
-  (5, 2, -7901049483713227390),
-  (6, 0, -8397290229375551552), (6, 1, -4265109097861838584),
-  (7, 0, -2927806912766322729), (7, 1, -9018645858658277339),
-  (7, 2, -3038427998835092224)),
-shots AS (
-  SELECT doc_id AS media_id, t.i AS shot_index, doc_id % 8 AS c
-  FROM documents, UNNEST(generate_series(0, 1 + doc_id % 2)) AS t(i)
-  WHERE doc_id < 80
-),
-hashed AS (
-  SELECT s.media_id, s.shot_index, CAST(g.h AS BIGINT) AS phash
-  FROM shots s JOIN golden g ON g.c = s.c AND g.i = s.shot_index
-)
-SELECT a.media_id AS media_id_a, b.media_id AS media_id_b,
-       CAST(COUNT(*) AS BIGINT) AS n_shared_shots
-FROM hashed a JOIN hashed b
-  ON a.media_id < b.media_id
- AND bit_count(xor(a.phash, b.phash)) <= 6
-GROUP BY 1, 2
-"""
-
-
-def _q_mm_tiff_decode_documents(spark, sf_dir):
-    """Baseline TIFF decode (operators/tiff.py — stdlib IFD walker +
-    PackBits, both byte orders): per doc a 20×24 image whose pixel
-    formula is pixel(x,y,ch) = (3x + 7y + 11c + 13ch) % 251 with class
-    c = doc_id % 12 (gray for c<8, RGB for c≥8), PackBits-compressed
-    for odd doc_id, big-endian for doc_id % 4 == 2, striped every 6
-    rows — decode must invert ALL of it. Output (width, height,
-    channels, pix_sum); the oracle is FIRST-PRINCIPLES: DuckDB
-    recomputes the pixel sum from the same closed-form formula via
-    generate_series, no frozen goldens anywhere."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.tiff import decode_tiff, encode_tiff
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        y, x = np.mgrid[0:20, 0:24]
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 12
-                if c < 8:
-                    img = ((3 * x + 7 * y + 11 * c) % 251).astype(np.uint8)
-                else:
-                    img = np.stack([(3 * x + 7 * y + 11 * c + 13 * ch)
-                                    % 251 for ch in range(3)],
-                                   axis=2).astype(np.uint8)
-                payloads.append(encode_tiff(
-                    img, packbits=bool(d % 2), big_endian=(d % 4 == 2),
-                    rows_per_strip=6))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_tiff(bytes(p))
-                rows.append({
-                    "media_id": int(mid),
-                    "width": img.shape[1], "height": img.shape[0],
-                    "channels": 1 if img.ndim == 2 else img.shape[2],
-                    "pix_sum": int(img.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "channels", "pix_sum"])
-
-    return media.mapInPandas(
-        decode, "media_id long, width long, height long, "
-                "channels long, pix_sum long")
-
-
-_SQL_MM_TIFF_DECODE_DOCUMENTS = """
-WITH cls AS (
-  SELECT c.c, ch.ch,
-         SUM((3 * x.x + 7 * y.y + 11 * c.c + 13 * ch.ch) % 251) AS s
-  FROM UNNEST(generate_series(0, 11)) AS c(c),
-       UNNEST(generate_series(0, 2)) AS ch(ch),
-       UNNEST(generate_series(0, 23)) AS x(x),
-       UNNEST(generate_series(0, 19)) AS y(y)
-  GROUP BY c.c, ch.ch
-),
-per_class AS (
-  SELECT c,
-         CASE WHEN c < 8 THEN MAX(CASE WHEN ch = 0 THEN s END)
-              ELSE SUM(s) END AS pix_sum,
-         CASE WHEN c < 8 THEN 1 ELSE 3 END AS channels
-  FROM cls GROUP BY c
-)
-SELECT doc_id AS media_id,
-       CAST(24 AS BIGINT) AS width, CAST(20 AS BIGINT) AS height,
-       CAST(p.channels AS BIGINT) AS channels,
-       CAST(p.pix_sum AS BIGINT) AS pix_sum
-FROM documents JOIN per_class p ON p.c = doc_id % 12
-"""
-
-
-def _q_mm_exif_documents(spark, sf_dir):
-    """EXIF extraction (operators/exif.py — shared TIFF IFD walker
-    over the JPEG APP1 block): per doc a JPEG whose EXIF carries
-    make='maker-'||d%5, model='model-'||d%7, orientation=1+d%8, and —
-    iff d%3==0 — GPS at lat=(d%80)+(d%4)*0.25 (southern for d%2),
-    lon=(d%160)+(d%4)*0.25 (western for d%5<2). Quarter-degree values
-    are exact in the DMS rational round-trip AND in binary floats, so
-    the oracle rebuilds the decimal coordinates closed-form — no
-    goldens, no rounding seams."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.exif import (
-        build_exif_app1, exif_metadata, insert_app1)
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-
-    docs = _docs_par(spark, sf_dir)
-    base_img = np.tile(np.arange(0, 240, 15, dtype=np.uint8), (16, 1))
-
-    def gen(batches):
-        plain = encode_jpeg(base_img)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                gps = None
-                if d % 3 == 0:
-                    lat = (d % 80) + (d % 4) * 0.25
-                    lon = (d % 160) + (d % 4) * 0.25
-                    gps = (-lat if d % 2 else lat,
-                           -lon if d % 5 < 2 else lon)
-                payloads.append(insert_app1(plain, build_exif_app1(
-                    make=f"maker-{d % 5}", model=f"model-{d % 7}",
-                    orientation=1 + d % 8, gps=gps)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return exif_metadata(media).select(
-        "media_id", "make", "model",
-        F.col("orientation").cast("long").alias("orientation"),
-        "has_gps", "lat", "lon")
-
-
-_SQL_MM_EXIF_DOCUMENTS = """
-SELECT doc_id AS media_id,
-       'maker-' || (doc_id % 5) AS make,
-       'model-' || (doc_id % 7) AS model,
-       CAST(1 + doc_id % 8 AS BIGINT) AS orientation,
-       doc_id % 3 = 0 AS has_gps,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN
-         CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END
-         * ((doc_id % 80) + (doc_id % 4) * 0.25)
-       END AS DOUBLE) AS lat,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN
-         CASE WHEN doc_id % 5 < 2 THEN -1 ELSE 1 END
-         * ((doc_id % 160) + (doc_id % 4) * 0.25)
-       END AS DOUBLE) AS lon
-FROM documents
-"""
-
-
-def _q_privacy_exif_scrub_documents(spark, sf_dir):
-    """GPS scrubbing (operators/exif.py scrub_gps — zero the GPS IFD
-    in place, blank the IFD0 pointer, no re-layout): same fixture as
-    mm_exif; output re-extracts metadata AFTER the scrub. The oracle
-    is the privacy CONTRACT stated closed-form: had_gps ⇔ d%3==0,
-    has_gps always false afterwards, lat null, and the non-GPS
-    metadata (make, orientation) byte-preserved."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.exif import (
-        build_exif_app1, exif_metadata, exif_scrub_gps, insert_app1)
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-
-    docs = _docs_par(spark, sf_dir)
-    base_img = np.tile(np.arange(0, 240, 15, dtype=np.uint8), (16, 1))
-
-    def gen(batches):
-        plain = encode_jpeg(base_img)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                gps = None
-                if d % 3 == 0:
-                    lat = (d % 80) + (d % 4) * 0.25
-                    lon = (d % 160) + (d % 4) * 0.25
-                    gps = (-lat if d % 2 else lat,
-                           -lon if d % 5 < 2 else lon)
-                payloads.append(insert_app1(plain, build_exif_app1(
-                    make=f"maker-{d % 5}", model=f"model-{d % 7}",
-                    orientation=1 + d % 8, gps=gps)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    fixture = docs.mapInPandas(gen, "media_id long, payload binary")
-    scrubbed = exif_scrub_gps(fixture)
-    # had_gps rides through the metadata kernel, so the fixture
-    # generator + scrub run ONCE in one lineage (the former
-    # re-association join duplicated the whole payload subtree under
-    # both sides — r12 optimization, guide §2.4)
-    meta = exif_metadata(scrubbed, passthrough=["had_gps"])
-    return meta.select("media_id", "had_gps", "has_gps",
-                       F.col("lat").alias("lat_after"),
-                       "make",
-                       F.col("orientation").cast("long")
-                       .alias("orientation"))
-
-
-_SQL_PRIVACY_EXIF_SCRUB_DOCUMENTS = """
-SELECT doc_id AS media_id,
-       doc_id % 3 = 0 AS had_gps,
-       FALSE AS has_gps,
-       CAST(NULL AS DOUBLE) AS lat_after,
-       'maker-' || (doc_id % 5) AS make,
-       CAST(1 + doc_id % 8 AS BIGINT) AS orientation
-FROM documents
-"""
-
-
 #: unigram fixture morphemes — composed words make EM allocate mass to
 #: the planted pieces, and the closed-form construction keeps the
 #: training corpus IDENTICAL at every SF (witness ids 0..199)
@@ -15219,1040 +13299,6 @@ SELECT doc_id,
        CAST(g.n_char_fallbacks AS BIGINT) AS n_char_fallbacks,
        '3168a272403aeec5' AS vocab_fp
 FROM documents JOIN golden g ON g.c = doc_id % 8
-"""
-
-
-def _q_mm_orient_normalize_documents(spark, sf_dir):
-    """EXIF/TIFF orientation normalization (operators/exif.py
-    apply_orientation — the rotate-before-hash step: portrait and
-    landscape shots of the same photo must hash identically): per doc
-    a LOSSLESS TIFF (pixel p(x,y) = (3x+7y+11c)%251, c=d%12, 20×24)
-    tagged Orientation = 1+d%8; the query decodes, reads the tag from
-    IFD0, normalizes, and emits output dims + a position-WEIGHTED sum
-    Σ out[i,j]·(1+j+3i) that distinguishes every one of the eight
-    transforms. FIRST-PRINCIPLES oracle: DuckDB replays the coordinate
-    mapping of each orientation case over the closed-form pixel
-    formula — no goldens, and any wrong flip/transpose breaks the
-    weighted sum."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.exif import apply_orientation
-    from bid_evaluation_spark.operators.tiff import (
-        T_ORIENTATION, decode_tiff, encode_tiff, tiff_ifd0)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        y, x = np.mgrid[0:20, 0:24]
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                img = ((3 * x + 7 * y + 11 * (d % 12)) % 251) \
-                    .astype(np.uint8)
-                payloads.append(encode_tiff(img,
-                                            orientation=1 + d % 8))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-
-    def normalize(batches):
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(p)
-                o = tiff_ifd0(raw).get(T_ORIENTATION, [1])[0]
-                out = apply_orientation(decode_tiff(raw), o)
-                i, j = np.mgrid[0:out.shape[0], 0:out.shape[1]]
-                rows.append({
-                    "media_id": int(mid),
-                    "out_w": out.shape[1], "out_h": out.shape[0],
-                    "wsum": int((out.astype(np.int64)
-                                 * (1 + j + 3 * i)).sum()),
-                })
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "out_w", "out_h", "wsum"])
-
-    return media.mapInPandas(
-        normalize, "media_id long, out_w long, out_h long, wsum long")
-
-
-_SQL_MM_ORIENT_NORMALIZE_DOCUMENTS = """
-WITH px AS (
-  SELECT c.c, o.o, x.x, y.y,
-         (3 * x.x + 7 * y.y + 11 * c.c) % 251 AS p,
-         CASE o.o                     -- normalized row index i
-           WHEN 1 THEN y.y      WHEN 2 THEN y.y
-           WHEN 3 THEN 19 - y.y WHEN 4 THEN 19 - y.y
-           WHEN 5 THEN x.x      WHEN 6 THEN x.x
-           WHEN 7 THEN 23 - x.x WHEN 8 THEN 23 - x.x
-         END AS i,
-         CASE o.o                     -- normalized column index j
-           WHEN 1 THEN x.x      WHEN 2 THEN 23 - x.x
-           WHEN 3 THEN 23 - x.x WHEN 4 THEN x.x
-           WHEN 5 THEN y.y      WHEN 6 THEN 19 - y.y
-           WHEN 7 THEN 19 - y.y WHEN 8 THEN y.y
-         END AS j
-  FROM UNNEST(generate_series(0, 11)) AS c(c),
-       UNNEST(generate_series(1, 8)) AS o(o),
-       UNNEST(generate_series(0, 23)) AS x(x),
-       UNNEST(generate_series(0, 19)) AS y(y)
-),
-cls AS (
-  SELECT c, o, SUM(p * (1 + j + 3 * i)) AS wsum
-  FROM px GROUP BY c, o
-)
-SELECT doc_id AS media_id,
-       CAST(CASE WHEN 1 + doc_id % 8 >= 5 THEN 20 ELSE 24 END
-            AS BIGINT) AS out_w,
-       CAST(CASE WHEN 1 + doc_id % 8 >= 5 THEN 24 ELSE 20 END
-            AS BIGINT) AS out_h,
-       CAST(g.wsum AS BIGINT) AS wsum
-FROM documents
-JOIN cls g ON g.c = doc_id % 12 AND g.o = 1 + doc_id % 8
-"""
-
-
-def _q_mm_loudness_documents(spark, sf_dir):
-    """Gated integrated loudness (operators/loudness.py — BS.1770
-    two-stage gate, unweighted at the 8 kHz fixture rate, divergence
-    documented in the module): per doc a 2 s 400 Hz tone at amplitude
-    (1+d%6)/10 followed by 1 s of digital silence — the silence blocks
-    die at the absolute gate, the tone→silence straddle blocks survive
-    deterministically, and the tone is block-exact (20 cycles per
-    400 ms block). Oracle: frozen 6-class golden of (n_blocks,
-    n_gated_blocks, r4 LUFS) computed ONCE by this same decode→block→
-    gate chain; the ungated analytic value -0.691+10·log10(a²/200)
-    cross-checks the goldens in tests."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.loudness import clip_loudness
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        t = np.arange(16000)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                amp = (1 + int(d) % 6) / 10.0
-                x = np.concatenate([
-                    amp * np.sin(2 * np.pi * 400 * t / 8000.0),
-                    np.zeros(8000)])
-                payloads.append(encode_wav(x, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = clip_loudness(media, strict=True)
-    return res.select("media_id", "n_blocks", "n_gated_blocks",
-                      _r4("integrated_lufs").alias("lufs_r4"))
-
-
-_SQL_MM_LOUDNESS_DOCUMENTS = """
-WITH golden(c, n_blocks, n_gated, lufs) AS (VALUES
-  (0, 27, 20, -24.0424), (1, 27, 20, -18.0207), (2, 27, 20, -14.4986),
-  (3, 27, 20, -11.9994), (4, 27, 20, -10.0612), (5, 27, 20, -8.4775))
-SELECT doc_id AS media_id,
-       CAST(g.n_blocks AS BIGINT) AS n_blocks,
-       CAST(g.n_gated AS BIGINT) AS n_gated_blocks,
-       CAST(g.lufs AS DOUBLE) AS lufs_r4
-FROM documents JOIN golden g ON g.c = doc_id % 6
-"""
-
-
-def _q_mm_loudness_kw_documents(spark, sf_dir):
-    """K-WEIGHTED gated loudness (operators/loudness.py — the full
-    BS.1770 measurement: shelf+RLB biquads derived at the 8 kHz
-    fixture rate from the published prototype, verified against the
-    spec's 48 kHz tables in tests): per doc a 2 s tone at class
-    frequency [100,300,500,1000,2000,3000] Hz (block-exact: f·0.4 is
-    an integer cycle count) and amplitude 0.3+0.1·class, then 1 s of
-    silence. The class FREQUENCY makes the weighting load-bearing —
-    the 2/3 kHz classes read ~+3/+4 dB over unweighted via the shelf,
-    100 Hz reads low via the high-pass — so a no-op weighting can't
-    pass. Oracle: frozen 6-class golden computed ONCE by this same
-    encode→decode→K-weight→block→gate chain; tests cross-check the
-    filter against the analytic |H(e^jw)| response and the spec's
-    997 Hz/48 kHz −3.01 LUFS calibration tone."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.loudness import clip_loudness
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-    freqs = [100, 300, 500, 1000, 2000, 3000]
-
-    def gen(batches):
-        t = np.arange(16000)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                c = int(d) % 6
-                amp = (1 + c) / 10.0 + 0.2
-                x = np.concatenate([
-                    amp * np.sin(2 * np.pi * freqs[c] * t / 8000.0),
-                    np.zeros(8000)])
-                payloads.append(encode_wav(x, rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = clip_loudness(media, strict=True, weighting="k")
-    return res.select("media_id", "n_blocks", "n_gated_blocks",
-                      _r4("integrated_lufs").alias("lufs_r4"))
-
-
-_SQL_MM_LOUDNESS_KW_DOCUMENTS = """
-WITH golden(c, n_blocks, n_gated, lufs) AS (VALUES
-  (0, 27, 21, -15.4158), (1, 27, 21, -11.8754), (2, 27, 21, -9.8243),
-  (3, 27, 21, -7.7668), (4, 27, 21, -3.6442), (5, 27, 21, -1.749))
-SELECT doc_id AS media_id,
-       CAST(g.n_blocks AS BIGINT) AS n_blocks,
-       CAST(g.n_gated AS BIGINT) AS n_gated_blocks,
-       CAST(g.lufs AS DOUBLE) AS lufs_r4
-FROM documents JOIN golden g ON g.c = doc_id % 6
-"""
-
-
-def _q_mm_audio_curation_documents(spark, sf_dir):
-    """END-TO-END audio curation (operators/audiocuration.py — the r10
-    verdict's task-5 composition, extended r12 per verdict task 7 with
-    the BS.1770-4 true-peak gate and polyphase rate normalization):
-    decode → true peak on the stored waveform → resample to 8 kHz →
-    energy VAD → K-weighted BS.1770 gated loudness → log-mel moments →
-    landmark dedup, ONE Arrow decode pass per clip, content gates as
-    native predicates, dedup as a landmark-hash equi-join over
-    content-passing clips only, verdict as a precedence CASE
-    (undecodable → no_speech → low_speech_ratio → loudness →
-    true_peak_over → duplicate → keep).
-
-    Fixture (fixed witness set doc_id < 120, constant across SFs):
-    class c = d%12 picks a signal that trips exactly one gate —
-    silence (no_speech), −39 LUFS quiet bursts (loudness-low), −3.3
-    LUFS hot tone (loudness-high, only ABOVE the gate because the
-    K-shelf adds +3.2 dB at 2 kHz — a no-op weighting flips the
-    verdict), keepable bursts at 500/1000/3000 Hz (classes 3/6/7;
-    every doc beyond the class minimum is an exact duplicate), a
-    12 % speech-ratio clip, junk bytes (undecodable), sub-threshold
-    bursts (no_speech), plus the two r12 classes: c10 = class-3
-    bursts with a rate/4, phase-π/4 inter-sample-over transient in
-    the first gap (every SAMPLE ≤0.78, true peak 1.1 = +0.83 dBTP —
-    a sample-peak fake passes it, the gate must not), and c11 = the
-    class-6 recording STORED AT 16 kHz (duplicate only because
-    target_rate=8000 resamples it before the landmark stage; its
-    dup_of=6 row value-asserts the cross-rate path). c10 also
-    value-asserts the gate order: its landmarks contain class 3's,
-    but dup_of stays NULL because the tp gate removes it from the
-    dedup set. Same-class clips are identical ⇒ landmark self-votes
-    ≥1092 at offset 0; cross-class vote mass is 0 except the designed
-    c11↔c6 match, so min_votes=50 separates perfectly. Oracle: frozen
-    12-class feature goldens computed ONCE by the same decode→peak→
-    resample→VAD→K-weight→gate→mel chain, plus a FULL SQL replay of
-    the verdict precedence and the dup_of = class-minimum rule."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.audiocuration import audio_curation
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir).filter(F.col("doc_id") < 120)
-
-    def gen(batches):
-        R = 8000
-
-        def tone(n, amp, f, rate=R, phase=0.0):
-            return amp * np.sin(2 * np.pi * f * np.arange(n) / rate
-                                + phase)
-
-        def bursts(on, off, reps, amp, f, rate=R):
-            return np.concatenate(sum(
-                [[tone(on, amp, f, rate), np.zeros(off)]
-                 for _ in range(reps)], []))
-
-        def sig(c):
-            if c == 0:
-                return np.zeros(16000)
-            if c == 1:
-                return bursts(4000, 2000, 3, 0.02, 500)
-            if c == 2:
-                return tone(16000, 0.7, 2000)
-            if c == 3:
-                return bursts(4000, 2000, 3, 0.3, 500)
-            if c == 4:
-                return np.concatenate([tone(2800, 0.3, 500),
-                                       np.zeros(20000)])
-            if c == 6:
-                return bursts(3200, 1600, 4, 0.45, 1000)
-            if c == 7:
-                return tone(12000, 0.25, 3000)
-            if c == 8:
-                return bursts(4000, 2000, 3, 0.005, 500)
-            if c == 10:
-                x = bursts(4000, 2000, 3, 0.3, 500)
-                x[4100:4900] = tone(800, 1.1, R / 4, phase=np.pi / 4)
-                return x
-            if c == 11:                 # class-6 recording at 16 kHz
-                return bursts(6400, 3200, 4, 0.45, 1000, rate=16000)
-            return tone(16000, 0.9, 2500)          # c == 9
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                c = int(d) % 12
-                payloads.append(
-                    b"junk!" if c == 5
-                    else encode_wav(sig(c),
-                                    rate=16000 if c == 11 else R))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = audio_curation(media, min_votes=50, target_rate=8000)
-    return res.select("media_id", "decode_ok", "duration_ms",
-                      _r4("true_peak_dbtp").alias("tp_r4"),
-                      "n_segments", "speech_ms",
-                      _r4("speech_ratio").alias("ratio_r4"),
-                      _r4("integrated_lufs").alias("lufs_r4"),
-                      _r4("mel_std_mean").alias("mel_r4"),
-                      "dup_of", "keep", "drop_reason")
-
-
-_SQL_MM_AUDIO_CURATION_DOCUMENTS = """
-WITH golden(c, ok, dur, tp, nseg, sp, ratio, lufs, mel) AS (VALUES
-  (0, true, 2000, NULL,     0, 0,    0.0,    NULL,     0.0),
-  (1, true, 2250, -33.9766, 3, 1504, 0.6684, -39.0177, 2.4246),
-  (2, true, 2000, -3.0986,  1, 1984, 0.992,  -3.3057,  0.0),
-  (3, true, 2250, -10.4497, 3, 1584, 0.704,  -15.4889, 3.0836),
-  (4, true, 2850, -10.4496, 1, 352,  0.1235, -16.9327, 2.1183),
-  (5, false, NULL, NULL, NULL, NULL, NULL,   NULL,     NULL),
-  (6, true, 2400, -6.9001,  4, 1680, 0.7,    -11.6106, 3.349),
-  (7, true, 1500, -12.0423, 1, 1472, 0.9813, -11.5139, 0.0),
-  (8, true, 2250, -46.0537, 0, 0,    0.0,    -51.0941, 2.1429),
-  (9, true, 2000, -0.9155,  1, 1984, 0.992,  -0.5409,  0.0),
-  -- r12: sample-legal inter-sample over (+0.92 dBTP) on class-3 bursts
-  (10, true, 2250, 0.9154,  3, 1696, 0.7538, -10.5106, 3.3403),
-  -- r12: the class-6 recording stored at 16 kHz, rate-normalized
-  (11, true, 2400, -6.9279, 4, 1680, 0.7,    -11.6109, 3.3364))
-SELECT d.doc_id AS media_id,
-       g.ok AS decode_ok,
-       CAST(g.dur AS BIGINT) AS duration_ms,
-       CAST(g.tp AS DOUBLE) AS tp_r4,
-       CAST(g.nseg AS BIGINT) AS n_segments,
-       CAST(g.sp AS BIGINT) AS speech_ms,
-       CAST(g.ratio AS DOUBLE) AS ratio_r4,
-       CAST(g.lufs AS DOUBLE) AS lufs_r4,
-       CAST(g.mel AS DOUBLE) AS mel_r4,
-       CAST(CASE WHEN g.c IN (3, 6, 7) AND d.doc_id > g.c THEN g.c
-                 WHEN g.c = 11 THEN 6 END AS BIGINT) AS dup_of,
-       (g.c IN (3, 6, 7) AND d.doc_id = g.c) AS keep,
-       CASE WHEN g.c = 5 THEN 'undecodable'
-            WHEN g.c IN (0, 8) THEN 'no_speech'
-            WHEN g.c = 4 THEN 'low_speech_ratio'
-            WHEN g.c IN (1, 2, 9) THEN 'loudness'
-            WHEN g.c = 10 THEN 'true_peak_over'
-            WHEN g.c = 11 THEN 'duplicate'
-            WHEN d.doc_id > g.c THEN 'duplicate'
-       END AS drop_reason
-FROM documents d JOIN golden g ON g.c = d.doc_id % 12
-WHERE d.doc_id < 120
-"""
-
-
-def _q_mm_mp3_inventory_documents(spark, sf_dir):
-    """MP3 frame-header INVENTORY (operators/mp3.py — ISO 11172-3/
-    13818-3 header walk: sync/version/layer/bitrate/rate tables,
-    padding, ID3v2 syncsafe skip, ID3v1, Xing VBR tag, desync-tolerant
-    truncation counting). Per doc a synthesized stream whose class
-    (d%8) exercises one branch each: CBR with doc-dependent frame
-    count, VBR+Xing, MPEG2.5 Layer III, Layer II, Layer I, junk bytes,
-    a truncated tail, MPEG2 stereo+Xing. The oracle is CLOSED-FORM —
-    every output column (incl. integer-division durations) recomputed
-    from doc_id arithmetic; no frozen goldens."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mp3 import build_mp3, mp3_inventory
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 8
-                if c == 0:
-                    p = build_mp3([9] * (4 + d % 5),
-                                  id3v2_bytes=100 if d % 2 else 0,
-                                  id3v1=d % 3 == 0)
-                elif c == 1:
-                    p = build_mp3([9, 11] * 3, xing_frames=6)
-                elif c == 2:
-                    p = build_mp3([3] * 8, version=0, sr_idx=2)
-                elif c == 3:
-                    p = build_mp3([6] * 5, layer=2)
-                elif c == 4:
-                    p = build_mp3([9] * 10, layer=1)
-                elif c == 5:
-                    p = b"this is not an mpeg stream at all"
-                elif c == 6:
-                    p = build_mp3([9] * 3) + b"junktail"
-                else:
-                    p = build_mp3([8] * 7, version=2, sr_idx=1,
-                                  mode=0, xing_frames=7)
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return mp3_inventory(media)
-
-
-_SQL_MM_MP3_INVENTORY_DOCUMENTS = """
-WITH d AS (SELECT doc_id, doc_id % 8 AS c FROM documents)
-SELECT doc_id AS media_id,
-  CAST(CASE c WHEN 0 THEN 4 + doc_id % 5 WHEN 1 THEN 6 WHEN 2 THEN 8
-              WHEN 3 THEN 5 WHEN 4 THEN 10 WHEN 5 THEN 0 WHEN 6 THEN 3
-              ELSE 7 END AS BIGINT) AS n_frames,
-  CASE c WHEN 2 THEN 'MPEG2.5' WHEN 5 THEN NULL WHEN 7 THEN 'MPEG2'
-         ELSE 'MPEG1' END AS version,
-  CAST(CASE c WHEN 3 THEN 2 WHEN 4 THEN 1 WHEN 5 THEN NULL
-              ELSE 3 END AS INT) AS layer,
-  CAST(CASE c WHEN 2 THEN 8000 WHEN 5 THEN NULL WHEN 7 THEN 24000
-              ELSE 44100 END AS INT) AS sample_rate,
-  CAST(CASE c
-    WHEN 0 THEN (4 + doc_id % 5) * 1152 * 1000 // 44100
-    WHEN 1 THEN 6 * 1152 * 1000 // 44100
-    WHEN 2 THEN 8 * 576 * 1000 // 8000
-    WHEN 3 THEN 5 * 1152 * 1000 // 44100
-    WHEN 4 THEN 10 * 384 * 1000 // 44100
-    WHEN 5 THEN 0
-    WHEN 6 THEN 3 * 1152 * 1000 // 44100
-    ELSE 7 * 576 * 1000 // 24000 END AS BIGINT) AS duration_ms,
-  CASE c WHEN 1 THEN false WHEN 5 THEN NULL ELSE true END AS is_cbr,
-  CAST(CASE c WHEN 0 THEN 128 WHEN 1 THEN 128 WHEN 2 THEN 24
-              WHEN 3 THEN 96 WHEN 4 THEN 288 WHEN 5 THEN NULL
-              WHEN 6 THEN 128 ELSE 64 END AS INT) AS bitrate_kbps_min,
-  CAST(CASE c WHEN 1 THEN 192 WHEN 2 THEN 24 WHEN 3 THEN 96
-              WHEN 4 THEN 288 WHEN 5 THEN NULL WHEN 7 THEN 64
-              ELSE 128 END AS INT) AS bitrate_kbps_max,
-  CAST(CASE c WHEN 1 THEN 6 WHEN 7 THEN 7 END AS BIGINT) AS xing_frames,
-  (c = 0 AND doc_id % 2 = 1) AS has_id3v2,
-  (c = 0 AND doc_id % 3 = 0) AS has_id3v1,
-  (c NOT IN (5, 6)) AS clean
-FROM d
-"""
-
-
-def _q_mm_mp4_inventory_documents(spark, sf_dir):
-    """MP4/ISO-BMFF box inventory (operators/mp4.py — 14496-12 box
-    walk: ftyp brand, mvhd v0/v1 timescale→duration, per-trak hdlr +
-    stsd sample-entry fourcc, tkhd 16.16 dimensions, damage-tolerant
-    salvage). Classes (d%6): AV mp42 with doc-dependent duration,
-    v1-mvhd audio-only M4A, live (duration 0) HEVC video, junk bytes,
-    a mid-moov truncation (ftyp salvaged, clean=false), a 3-track
-    vide+soun+text file. Oracle: CLOSED-FORM — every column from
-    doc_id arithmetic, no frozen goldens."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mp4 import build_mp4, mp4_inventory
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 6
-                if c == 0:
-                    p = build_mp4(brand="mp42", timescale=1000,
-                                  duration=1000 + (d % 7) * 500,
-                                  tracks=[("vide", "avc1", 640, 360),
-                                          ("soun", "mp4a", 0, 0)])
-                elif c == 1:
-                    p = build_mp4(brand="M4A ", timescale=90000,
-                                  duration=90000 * (30 + d % 10),
-                                  mvhd_version=1,
-                                  tracks=[("soun", "mp4a", 0, 0)])
-                elif c == 2:
-                    p = build_mp4(brand="isom", duration=0,
-                                  tracks=[("vide", "hev1",
-                                           1920, 1080)])
-                elif c == 3:
-                    p = b"certainly not an iso-bmff container"
-                elif c == 4:
-                    full = build_mp4(brand="mp42", duration=5000,
-                                     tracks=[("vide", "avc1",
-                                              320, 240)])
-                    p = full[:28]       # ftyp + 4 bytes of moov header
-                else:
-                    p = build_mp4(brand="isom", duration=60000,
-                                  tracks=[("vide", "avc1", 1280, 720),
-                                          ("soun", "mp4a", 0, 0),
-                                          ("text", "tx3g", 0, 0)])
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return mp4_inventory(media)
-
-
-_SQL_MM_MP4_INVENTORY_DOCUMENTS = """
-WITH d AS (SELECT doc_id, doc_id % 6 AS c FROM documents)
-SELECT doc_id AS media_id,
-  (c <> 3) AS is_mp4,
-  CASE c WHEN 0 THEN 'mp42' WHEN 1 THEN 'M4A ' WHEN 2 THEN 'isom'
-         WHEN 4 THEN 'mp42' WHEN 5 THEN 'isom' END AS major_brand,
-  CAST(CASE c WHEN 0 THEN 1000 + (doc_id % 7) * 500
-              WHEN 1 THEN (30 + doc_id % 10) * 1000
-              WHEN 2 THEN 0 WHEN 5 THEN 60000 END AS BIGINT)
-    AS duration_ms,
-  CAST(CASE c WHEN 0 THEN 2 WHEN 1 THEN 1 WHEN 2 THEN 1
-              WHEN 5 THEN 3 ELSE 0 END AS INT) AS n_tracks,
-  CASE c WHEN 0 THEN 'avc1' WHEN 2 THEN 'hev1' WHEN 5 THEN 'avc1'
-         END AS video_codec,
-  CASE c WHEN 0 THEN 'mp4a' WHEN 1 THEN 'mp4a' WHEN 5 THEN 'mp4a'
-         END AS audio_codec,
-  CAST(CASE c WHEN 0 THEN 640 WHEN 2 THEN 1920 WHEN 5 THEN 1280
-         END AS DOUBLE) AS width,
-  CAST(CASE c WHEN 0 THEN 360 WHEN 2 THEN 1080 WHEN 5 THEN 720
-         END AS DOUBLE) AS height,
-  CASE c WHEN 0 THEN 'vide,soun' WHEN 1 THEN 'soun' WHEN 2 THEN 'vide'
-         WHEN 5 THEN 'vide,soun,text' END AS track_types,
-  (c NOT IN (3, 4)) AS clean
-FROM d
-"""
-
-
-def _q_mm_ogg_inventory_documents(spark, sf_dir):
-    """Ogg container inventory (operators/ogg.py — RFC 3533 page walk
-    + Vorbis I / OggOpus id headers; Opus granules are ALWAYS 48 kHz
-    minus pre-skip, Vorbis granules are PCM samples at the stream
-    rate — both timescale rules exercised). Classes (d%5): Opus with
-    doc-dependent duration, Vorbis likewise, FLAC-in-Ogg (codec known,
-    duration unknowable from pages), junk bytes, a truncated stream
-    whose duration falls back to the last intact audio page's granule.
-    Oracle: CLOSED-FORM from doc_id arithmetic."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.ogg import build_ogg, ogg_inventory
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 5
-                if c == 0:
-                    p = build_ogg("opus", rate=16000, channels=2,
-                                  pre_skip=312,
-                                  final_granule=48000 * (5 + d % 6)
-                                  + 312, n_audio_pages=2)
-                elif c == 1:
-                    p = build_ogg("vorbis", rate=44100, channels=1,
-                                  final_granule=44100 * (2 + d % 4))
-                elif c == 2:
-                    p = build_ogg("flac", final_granule=1000)
-                elif c == 3:
-                    p = b"not an ogg bitstream"
-                else:
-                    full = build_ogg("opus", rate=48000, channels=1,
-                                     pre_skip=312,
-                                     final_granule=48000)
-                    p = full[:-5]          # EOS page loses its tail
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return ogg_inventory(media)
-
-
-_SQL_MM_OGG_INVENTORY_DOCUMENTS = """
-WITH d AS (SELECT doc_id, doc_id % 5 AS c FROM documents)
-SELECT doc_id AS media_id,
-  (c <> 3) AS is_ogg,
-  CASE c WHEN 0 THEN 'opus' WHEN 1 THEN 'vorbis' WHEN 2 THEN 'flac'
-         WHEN 4 THEN 'opus' END AS codec,
-  CAST(CASE c WHEN 0 THEN 16000 WHEN 1 THEN 44100 WHEN 4 THEN 48000
-         END AS INT) AS sample_rate,
-  CAST(CASE c WHEN 0 THEN 2 WHEN 1 THEN 1 WHEN 4 THEN 1
-         END AS INT) AS channels,
-  CAST(CASE c WHEN 0 THEN 4 WHEN 1 THEN 3 WHEN 2 THEN 3 WHEN 3 THEN 0
-              WHEN 4 THEN 2 END AS INT) AS n_pages,
-  CAST(CASE c WHEN 3 THEN 0 ELSE 1 END AS INT) AS n_streams,
-  CAST(CASE c WHEN 0 THEN (5 + doc_id % 6) * 1000
-              WHEN 1 THEN (2 + doc_id % 4) * 1000
-              WHEN 4 THEN (24000 - 312) * 1000 // 48000
-         END AS BIGINT) AS duration_ms,
-  (c NOT IN (3, 4)) AS clean
-FROM d
-"""
-
-
-def _q_mm_webp_inventory_documents(spark, sf_dir):
-    """WebP container inventory (operators/webp.py — RIFF chunk walk +
-    VP8/VP8L/VP8X headers: 14-bit lossy dims behind the 9D012A start
-    code, the lossless 0x2F bitfield with its alpha flag, the extended
-    flag byte + 24-bit canvas dims, odd-size chunk padding, damage
-    salvage). Classes (d%5): lossy with doc-dependent dims,
-    lossless+alpha, extended animated+EXIF, junk, truncation. Oracle:
-    CLOSED-FORM from doc_id arithmetic."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.webp import (build_webp,
-                                                     webp_inventory)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 5
-                if c == 0:
-                    p = build_webp("lossy", width=64 + d % 9 * 16,
-                                   height=48 + d % 7 * 16)
-                elif c == 1:
-                    p = build_webp("lossless", width=100, height=50,
-                                   alpha=True)
-                elif c == 2:
-                    p = build_webp("extended", width=1920,
-                                   height=1080, animated=True,
-                                   exif=True)
-                elif c == 3:
-                    p = b"certainly not a webp"
-                else:
-                    p = build_webp("lossy", width=32, height=24)[:20]
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return webp_inventory(media)
-
-
-_SQL_MM_WEBP_INVENTORY_DOCUMENTS = """
-WITH d AS (SELECT doc_id, doc_id % 5 AS c FROM documents)
-SELECT doc_id AS media_id,
-  (c <> 3) AS is_webp,
-  CASE c WHEN 0 THEN 'lossy' WHEN 1 THEN 'lossless'
-         WHEN 2 THEN 'extended' END AS format,
-  CAST(CASE c WHEN 0 THEN 64 + doc_id % 9 * 16 WHEN 1 THEN 100
-              WHEN 2 THEN 1920 END AS INT) AS width,
-  CAST(CASE c WHEN 0 THEN 48 + doc_id % 7 * 16 WHEN 1 THEN 50
-              WHEN 2 THEN 1080 END AS INT) AS height,
-  (c = 1) AS has_alpha,
-  (c = 2) AS is_animated,
-  (c = 2) AS has_exif,
-  false AS has_xmp,
-  CAST(CASE c WHEN 2 THEN 3 WHEN 3 THEN 0 WHEN 4 THEN 0 ELSE 1 END
-       AS INT) AS n_chunks,
-  (c <> 4) AS clean   -- junk is not-a-webp, not DAMAGE; truncation is
-FROM d
-"""
-
-
-def _q_mm_webp_decode_documents(spark, sf_dir):
-    """VP8L lossless WebP PIXEL decode (operators/vp8l.py — r12
-    verdict task 4: canonical prefix codes, LZ77 backrefs, color
-    cache, all 4 transforms), wired into the image dispatch seam so
-    WebP rows get real dHash/contrast through the funnel manifest.
-    Classes (d % 6): 0 plain-coded texture; 1 the SAME pixels coded
-    through subtract-green + Select-predictor + 4-bit color cache
-    (100 vs 718 bytes — identical dHash/contrast goldens, so a
-    payload-hash fake decode cannot pass); 2 8-color palette
-    (delta-coded, bundled); 3 VP8 LOSSY (the documented coded-pixel
-    seam: inventory dims, null pixels); 4 truncated VP8L (salvaged
-    header, clean=false); 5 constant-row image (LZ77 RLE path,
-    gradient dHash 0). Oracle: frozen per-class goldens through the
-    same kernels outside Spark."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mediafunnel import (
-        funnel_manifest)
-    from bid_evaluation_spark.operators.vp8l import encode_webp_lossless
-    from bid_evaluation_spark.operators.webp import build_webp
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        grad = ((np.add.outer(np.arange(12) * 23, np.arange(16) * 41)
-                 * 7) % 211).astype(np.uint8)
-        pal = (((np.add.outer(np.arange(10) * 3, np.arange(14) * 5)
-                 * 13) % 8) * 31).astype(np.uint8)
-        rows = np.repeat((np.arange(12) * 20 % 256)[:, None], 16,
-                         axis=1).astype(np.uint8)
-        fixed = {
-            0: encode_webp_lossless(grad),
-            1: encode_webp_lossless(grad, subtract_green=True,
-                                    predictor=11, cache_bits=4),
-            2: encode_webp_lossless(pal, palette=True),
-            3: build_webp("lossy", width=40, height=30),
-            4: encode_webp_lossless(grad)[:24],
-            5: encode_webp_lossless(rows),
-        }
-        for pdf_ in batches:
-            yield pd.DataFrame({
-                "media_id": pdf_["doc_id"],
-                "payload": [fixed[int(d) % 6] for d in pdf_["doc_id"]],
-            })
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return funnel_manifest(media).select(
-        "media_id", "media_type", "container", "decode_ok", "clean",
-        "width", "height",
-        (_r4("contrast") + F.lit(0.0)).alias("contrast"), "dhash")
-
-
-_SQL_MM_WEBP_DECODE_DOCUMENTS = """
-WITH g(c, ok, clean, w, h, contrast, dhash) AS (VALUES
-  (0, true, true, 16, 12, 61.0624, -4879132701358006888),
-  (1, true, true, 16, 12, 61.0624, -4879132701358006888),
-  (2, true, true, 14, 10, 70.7047, -902059556661627021),
-  (3, true, true, 40, 30, NULL, NULL),
-  (4, true, false, NULL, NULL, NULL, NULL),
-  (5, true, true, 16, 12, 69.0411, 0))
-SELECT doc_id AS media_id, 'image' AS media_type,
-  'webp' AS container, g.ok AS decode_ok, g.clean AS clean,
-  CAST(g.w AS BIGINT) AS width, CAST(g.h AS BIGINT) AS height,
-  CAST(g.contrast AS DOUBLE) + 0.0 AS contrast,
-  CAST(g.dhash AS BIGINT) AS dhash
-FROM documents JOIN g ON g.c = doc_id % 6
-"""
-
-
-def _q_mm_webp_anim_documents(spark, sf_dir):
-    """Animated-WebP TIMELINE inventory (operators/webp.py
-    parse_webp_animation — VP8X animation flag + ANIM loop count +
-    per-ANMF 24-bit duration walk): the census a curation pass gates
-    GIF-successor content on (frame count, wall duration, loop
-    policy) without decoding frame payloads. Classes (d % 5):
-    0 multi-frame with doc-derived frame count/durations/loop;
-    1 single full-canvas frame; 2 static lossy (not animated);
-    3 junk; 4 truncated mid-ANMF (frames before the cut counted,
-    clean=false). Oracle: CLOSED-FORM from doc_id arithmetic."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.webp import (
-        build_webp, build_webp_animation, webp_animation_inventory)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                c = d % 5
-                if c == 0:
-                    n = 2 + d % 4
-                    dur = 40 + d % 20
-                    p = build_webp_animation(
-                        [(2 * i, 0, 24, 16, dur) for i in range(n)],
-                        canvas_w=64, canvas_h=32,
-                        loop_count=d % 10)
-                elif c == 1:
-                    p = build_webp_animation(
-                        [(0, 0, 48, 48, 1000)], canvas_w=48,
-                        canvas_h=48, loop_count=1)
-                elif c == 2:
-                    p = build_webp("lossy", width=32, height=24)
-                elif c == 3:
-                    p = b"not riff at all"
-                else:
-                    full = build_webp_animation(
-                        [(0, 0, 8, 8, 100)] * 3, canvas_w=8,
-                        canvas_h=8, loop_count=2)
-                    p = full[:-10]        # third ANMF loses its tail
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return webp_animation_inventory(media)
-
-
-_SQL_MM_WEBP_ANIM_DOCUMENTS = """
-WITH d AS (SELECT doc_id, doc_id % 5 AS c FROM documents)
-SELECT doc_id AS media_id,
-  (c <> 3) AS is_webp,
-  (c IN (0, 1, 4)) AS is_animated,
-  CAST(CASE c WHEN 0 THEN doc_id % 10 WHEN 1 THEN 1 WHEN 4 THEN 2
-       END AS INT) AS loop_count,
-  CAST(CASE c WHEN 0 THEN 2 + doc_id % 4 WHEN 1 THEN 1
-              WHEN 2 THEN 0 WHEN 3 THEN 0 WHEN 4 THEN 2
-       END AS INT) AS n_frames,
-  CAST(CASE c WHEN 0 THEN (2 + doc_id % 4) * (40 + doc_id % 20)
-              WHEN 1 THEN 1000 WHEN 4 THEN 200
-       END AS BIGINT) AS total_duration_ms,
-  CAST(CASE c WHEN 0 THEN 64 WHEN 1 THEN 48 WHEN 4 THEN 8
-       END AS INT) AS canvas_w,
-  CAST(CASE c WHEN 0 THEN 32 WHEN 1 THEN 48 WHEN 4 THEN 8
-       END AS INT) AS canvas_h,
-  (c <> 4) AS clean   -- junk is not-a-webp, not DAMAGE
-FROM d
-"""
-
-
-def _q_mm_mp3_sideinfo_documents(spark, sf_dir):
-    """MP3 Layer III SIDE-INFO census (operators/mp3dec.py — the r12
-    decode tier, verdict task 6 partial credit: side info + bit
-    reservoir + scalefactors + requantization + alias/IMDCT are
-    implemented and spec-math-tested; the ISO Annex-B spectral
-    Huffman TABLES remain the documented r13 data seam). Every
-    payload is a complete frame from the repo's own builder with
-    side-info fields DERIVED FROM doc_id, so the oracle replays the
-    whole bit layout arithmetically. Classes (d % 5): 0 mono normal
-    blocks; 1 stereo mixed-short (window switching, spec-fixed
-    region counts); 2 stereo start block; 3 junk (not a frame);
-    4 frame truncated mid-side-info (header verdict survives,
-    fields null)."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mp3dec import (
-        build_l3_frame, sideinfo_inventory)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        def gr(d, ws=0, bt=0, mixed=0):
-            g = {"part2_3_length": 500 + d % 1000,
-                 "big_values": d % 288,
-                 "global_gain": 100 + d % 100,
-                 "scalefac_compress": d % 16,
-                 "window_switching": ws, "block_type": bt,
-                 "mixed_block_flag": mixed,
-                 "table_select": [7, 9] + ([] if ws else [11]),
-                 "subblock_gain": [d % 8, (d + 1) % 8, 0],
-                 "region0_count": 4, "region1_count": 3,
-                 "preflag": d % 2, "scalefac_scale": (d // 2) % 2,
-                 "count1table_select": 0}
-            return g
-
-        def info(d, nch, ws=0, bt=0, mixed=0):
-            return {"main_data_begin": d % 512, "private_bits": 0,
-                    "scfsi": [[0, 0, 0, 0]] * nch,
-                    "granules": [[gr(d, ws, bt, mixed)] * nch,
-                                 [gr(d + 7)] * nch]}
-
-        for pdf_ in batches:
-            payloads = []
-            for d in pdf_["doc_id"]:
-                d = int(d)
-                c = d % 5
-                if c == 0:
-                    p = build_l3_frame(info(d, 1), 1)
-                elif c == 1:
-                    p = build_l3_frame(info(d, 2, ws=1, bt=2,
-                                            mixed=1), 2)
-                elif c == 2:
-                    p = build_l3_frame(info(d, 2, ws=1, bt=1), 2)
-                elif c == 3:
-                    p = b"definitely not an mpeg frame"
-                else:
-                    p = build_l3_frame(info(d, 1), 1)[:12]
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf_["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return sideinfo_inventory(media)
-
-
-_SQL_MM_MP3_SIDEINFO_DOCUMENTS = """
-WITH d AS (SELECT doc_id, doc_id % 5 AS c FROM documents)
-SELECT doc_id AS media_id,
-  (c <> 3) AS is_l3,
-  CAST(CASE WHEN c IN (0, 4) THEN 1 WHEN c IN (1, 2) THEN 2
-       END AS BIGINT) AS nch,
-  CAST(CASE WHEN c IN (0, 1, 2) THEN doc_id % 512
-       END AS BIGINT) AS main_data_begin,
-  CAST(CASE WHEN c IN (0, 1, 2) THEN 500 + doc_id % 1000
-       END AS BIGINT) AS g0_part2_3_length,
-  CAST(CASE WHEN c IN (0, 1, 2) THEN doc_id % 288
-       END AS BIGINT) AS g0_big_values,
-  CAST(CASE WHEN c IN (0, 1, 2) THEN 100 + doc_id % 100
-       END AS BIGINT) AS g0_global_gain,
-  CAST(CASE WHEN c IN (0, 1, 2) THEN doc_id % 16
-       END AS BIGINT) AS g0_scalefac_compress,
-  CASE WHEN c IN (0, 1, 2) THEN (c IN (1, 2)) END
-    AS g0_window_switching,
-  CAST(CASE WHEN c = 0 THEN 0 WHEN c = 1 THEN 2 WHEN c = 2 THEN 1
-       END AS BIGINT) AS g0_block_type,
-  CASE WHEN c IN (0, 1, 2) THEN (c = 1) END AS g0_mixed_block,
-  CAST(CASE WHEN c IN (0, 1, 2) THEN 100 + (doc_id + 7) % 100
-       END AS BIGINT) AS g1_global_gain,
-  CASE WHEN c IN (0, 1, 2) THEN ((doc_id + 7) % 2 = 1) END
-    AS g1_preflag,
-  CASE WHEN c IN (0, 1, 2) THEN (((doc_id + 7) // 2) % 2 = 1) END
-    AS g1_scalefac_scale
-FROM d
-"""
-
-
-def _q_mm_media_census_documents(spark, sf_dir):
-    """Corpus media-type CENSUS (operators/mediatype.py — the magic-
-    byte router at the TOP of the multimodal funnel): 17 classes, one
-    per in-repo container family — PNG/JPEG/GIF/TIFF/BMP/Netpbm/WebP images,
-    WAV/FLAC/Ogg-Opus/bare-MP3 audio, MP4/MJPEG-AVI video, PDF, HTML,
-    plain text, binary junk — every payload built by the repo's OWN
-    encoder for that format, so the census and the codecs gate each
-    other. RIFF form-type splitting (WAV vs AVI), offset-4 ftyp, and
-    table-validated MPEG sync are all load-bearing. Oracle:
-    CLOSED-FORM class constants."""
-    from bid_evaluation_spark.operators.mediatype import media_census
-
-    return media_census(_media_census_fixture(spark, sf_dir))
-
-
-def _media_census_fixture(spark, sf_dir):
-    """The 17-class census corpus shared by the batch census query
-    and its streaming twin."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-    from bid_evaluation_spark.operators.bmp import encode_bmp
-    from bid_evaluation_spark.operators.flac import encode_flac
-    from bid_evaluation_spark.operators.gif import encode_gif
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-    from bid_evaluation_spark.operators.mediatype import media_census
-    from bid_evaluation_spark.operators.mp3 import build_mp3
-    from bid_evaluation_spark.operators.mp4 import build_mp4
-    from bid_evaluation_spark.operators.netpbm import encode_pgm
-    from bid_evaluation_spark.operators.ogg import build_ogg
-    from bid_evaluation_spark.operators.pdf import encode_pdf
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.tiff import encode_tiff
-    from bid_evaluation_spark.operators.wav import encode_wav
-    from bid_evaluation_spark.operators.webp import build_webp
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        img = np.full((8, 8), 100, dtype=np.uint8)
-        rgb = np.full((8, 8, 3), 100, dtype=np.uint8)
-        x = 0.2 * np.sin(2 * np.pi * 400 * np.arange(4000) / 8000.0)
-        fixed = {
-            0: encode_png(img), 1: encode_jpeg(img),
-            2: encode_gif(rgb), 3: encode_tiff(img),
-            4: encode_bmp(rgb), 5: encode_pgm(img),
-            6: encode_wav(x, rate=8000),
-            7: encode_flac((x * 30000).astype(np.int16), rate=8000),
-            8: build_ogg("opus", final_granule=48312),
-            9: build_mp3([9] * 2),
-            10: build_mp4(duration=1000,
-                          tracks=[("vide", "avc1", 32, 24)]),
-            11: encode_avi_mjpeg([img] * 2),
-            12: encode_pdf(["hello"]),
-            13: b"<html><body>a page</body></html>",
-            14: b"just some plain utf-8 prose, no markup",
-            15: b"\x00\xfe\x80\xff raw binary garbage \x81\x82",
-            16: build_webp("lossy", width=64, height=48),
-        }
-        for pdf_ in batches:
-            yield pd.DataFrame({
-                "media_id": pdf_["doc_id"],
-                "payload": [fixed[int(d) % 17] for d in pdf_["doc_id"]],
-            })
-
-    return docs.mapInPandas(gen, "media_id long, payload binary")
-
-
-_SQL_MM_MEDIA_CENSUS_DOCUMENTS = """
-WITH golden(c, mt, cont, det) AS (VALUES
-  (0, 'image', 'png', ''),   (1, 'image', 'jpeg', ''),
-  (2, 'image', 'gif', 'GIF89a'), (3, 'image', 'tiff', 'le'),
-  (4, 'image', 'bmp', ''),   (5, 'image', 'netpbm', 'P5'),
-  (6, 'audio', 'wav', ''),   (7, 'audio', 'flac', ''),
-  (8, 'audio', 'ogg', 'opus'), (9, 'audio', 'mpeg', 'layer3'),
-  (10, 'video', 'mp4', 'isom'), (11, 'video', 'avi', ''),
-  (12, 'document', 'pdf', '1.4'), (13, 'text', 'html', ''),
-  (14, 'text', 'plain', ''), (15, 'unknown', 'binary', ''),
-  (16, 'image', 'webp', 'lossy'))
-SELECT doc_id AS media_id, g.mt AS media_type,
-       g.cont AS container, g.det AS detail
-FROM documents JOIN golden g ON g.c = doc_id % 17
-"""
-
-
-def _q_mm_truepeak_documents(spark, sf_dir):
-    """BS.1770-4 TRUE PEAK (operators/loudness.py true_peak — ideal
-    bandlimited 4× interpolation via rfft zero-padding, the spec's
-    Annex-2 oversampled-peak measure): per doc a 1 s tone whose class
-    picks (freq, amp, phase). Classes 4/5 put the crest BETWEEN
-    samples (rate/4 at phase π/4 — sample peak 0.707·A), so the true
-    peak reads ~3 dB above the sample peak, and class 5 (A=1.05) is an
-    INTER-SAMPLE OVER: every stored sample is legal (−2.59 dBFS) but
-    the true peak is +0.42 dBTP — the clip a resampler will clip.
-    A sample-peak-only implementation cannot produce these rows.
-    Oracle: frozen 6-class goldens through the same
-    encode→decode→interpolate chain."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.loudness import clip_true_peak
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        R = 8000
-        t = np.arange(R)
-
-        def sig(c):
-            if c == 0:
-                return np.zeros(R)
-            if c == 1:
-                return 0.5 * np.sin(2 * np.pi * 100 * t / R)
-            if c == 2:
-                return 0.8 * np.sin(2 * np.pi * 500 * t / R)
-            if c == 3:
-                return 0.6 * np.sin(2 * np.pi * 1900 * t / R)
-            if c == 4:
-                return 0.7 * np.sin(2 * np.pi * 2000 * t / R
-                                    + np.pi / 4)
-            return 1.05 * np.sin(2 * np.pi * 2000 * t / R + np.pi / 4)
-
-        for pdf in batches:
-            payloads = [encode_wav(sig(int(d) % 6), rate=R)
-                        for d in pdf["doc_id"]]
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    res = clip_true_peak(media, strict=True)
-    return res.select("media_id",
-                      _r4("sample_peak_db").alias("sp_r4"),
-                      _r4("true_peak_dbtp").alias("tp_r4"),
-                      "intersample_over")
-
-
-_SQL_MM_TRUEPEAK_DOCUMENTS = """
-WITH golden(c, sp, tp, over) AS (VALUES
-  (0, NULL, NULL, NULL),
-  (1, -6.0211, -6.0211, false),
-  (2, -1.9387, -1.9387, false),
-  (3, -4.4373, -4.4373, false),
-  (4, -6.1091, -3.0988, false),
-  (5, -2.5869, 0.4234, true))
-SELECT doc_id AS media_id,
-       CAST(g.sp AS DOUBLE) AS sp_r4,
-       CAST(g.tp AS DOUBLE) AS tp_r4,
-       g.over AS intersample_over
-FROM documents JOIN golden g ON g.c = doc_id % 6
 """
 
 
@@ -16376,496 +13422,6 @@ SELECT threshold, CAST(bands AS BIGINT) AS bands,
          AS threshold_est_r4,
        round(obj * 10000.0) / 10000.0 AS objective_r4
 FROM ranked WHERE rk = 1
-"""
-
-
-def _q_mm_bmp_decode_documents(spark, sf_dir):
-    """BMP decode (operators/bmp.py — BITMAPINFOHEADER BI_RGB, 24-bit
-    BGR + 8-bit paletted, row padding, bottom-up AND top-down): pixel
-    formula p(x,y,ch) = (5x + 3y + 7c + 11ch) % 241 with c = d%9;
-    paletted gray (p with ch=0 on all three channels) for d%4==1,
-    top-down rows for d%3==0 — decode must normalize all of it.
-    FIRST-PRINCIPLES oracle: the pixel sum is recomputed closed-form in
-    DuckDB via generate_series."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.bmp import decode_bmp, encode_bmp
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        y, x = np.mgrid[0:18, 0:22]
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = d % 9
-                td = d % 3 == 0
-                if d % 4 == 1:
-                    img = ((5 * x + 3 * y + 7 * c) % 241) \
-                        .astype(np.uint8)
-                    payloads.append(encode_bmp(img, top_down=td,
-                                               paletted=True))
-                else:
-                    img = np.stack([(5 * x + 3 * y + 7 * c + 11 * ch)
-                                    % 241 for ch in range(3)],
-                                   axis=2).astype(np.uint8)
-                    payloads.append(encode_bmp(img, top_down=td))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_bmp(bytes(p))
-                rows.append({"media_id": int(mid),
-                             "width": img.shape[1],
-                             "height": img.shape[0],
-                             "pix_sum": int(img.astype(np.int64).sum())})
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "pix_sum"])
-
-    return media.mapInPandas(
-        decode, "media_id long, width long, height long, pix_sum long")
-
-
-_SQL_MM_BMP_DECODE_DOCUMENTS = """
-WITH cls AS (
-  SELECT c.c, ch.ch,
-         SUM((5 * x.x + 3 * y.y + 7 * c.c + 11 * ch.ch) % 241) AS s
-  FROM UNNEST(generate_series(0, 8)) AS c(c),
-       UNNEST(generate_series(0, 2)) AS ch(ch),
-       UNNEST(generate_series(0, 21)) AS x(x),
-       UNNEST(generate_series(0, 17)) AS y(y)
-  GROUP BY c.c, ch.ch
-),
-per_mode AS (
-  -- paletted gray replicates channel 0 across RGB; color sums all 3
-  SELECT c, 3 * MAX(CASE WHEN ch = 0 THEN s END) AS gray_sum,
-         SUM(s) AS color_sum
-  FROM cls GROUP BY c
-)
-SELECT doc_id AS media_id,
-       CAST(22 AS BIGINT) AS width, CAST(18 AS BIGINT) AS height,
-       CAST(CASE WHEN doc_id % 4 = 1 THEN p.gray_sum
-                 ELSE p.color_sum END AS BIGINT) AS pix_sum
-FROM documents JOIN per_mode p ON p.c = doc_id % 9
-"""
-
-
-def _q_mm_vad_segments_documents(spark, sf_dir):
-    """Energy VAD (operators/vad.py — frame-RMS threshold + hangover
-    morphology): per doc a WAV of 1+d%3 tone bursts (burst i spans
-    3+(d+i)%4 frames, separated by 3+(d+i)%3 silent frames, leading
-    silence 2+d%2). With 256/128 frame geometry ANY tone overlap
-    activates a frame at the -40 dB default (closed-form: a burst over
-    frames [a,b) activates [a-1,b)), and gaps ≥3 frames never bridge —
-    so segment starts/lengths are EXACT integers the oracle rebuilds
-    with a prefix-sum window. The dB column is intentionally excluded:
-    boundaries are the contract; loudness is float plumbing tested in
-    the unit suite."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.vad import speech_segments
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                parts = [np.zeros(128 * (2 + d % 2))]
-                for i in range(1 + d % 3):
-                    t = np.arange(128 * (3 + (d + i) % 4))
-                    parts.append(0.5 * np.sin(2 * np.pi * 440 * t
-                                              / 8000.0))
-                    parts.append(np.zeros(128 * (3 + (d + i) % 3)))
-                parts.append(np.zeros(384))
-                x = np.concatenate(parts)
-                payloads.append(encode_wav(
-                    (np.clip(x, -1, 1) * 32000).astype(np.int16),
-                    rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return speech_segments(media, strict=True).select(
-        "media_id", "seg_index", "start_frame", "n_frames",
-        "start_ms", "dur_ms")
-
-
-_SQL_MM_VAD_SEGMENTS_DOCUMENTS = """
-WITH p AS (SELECT doc_id AS d, 1 + doc_id % 3 AS k FROM documents),
-seg AS (
-  SELECT d, u.i AS seg_index,
-         3 + (d + u.i) % 4 AS t,
-         3 + (d + u.i) % 3 AS g
-  FROM p, UNNEST(generate_series(0, k - 1)) AS u(i)
-),
-acc AS (
-  SELECT d, seg_index, t,
-         (2 + d % 2) + COALESCE(SUM(t + g) OVER (
-              PARTITION BY d ORDER BY seg_index
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS a
-  FROM seg
-)
-SELECT d AS media_id, CAST(seg_index AS BIGINT) AS seg_index,
-       CAST(a - 1 AS BIGINT) AS start_frame,
-       CAST(t + 1 AS BIGINT) AS n_frames,
-       CAST((a - 1) * 16 AS BIGINT) AS start_ms,
-       CAST((t + 1) * 16 AS BIGINT) AS dur_ms
-FROM acc
-"""
-
-
-def _q_mm_melspec_documents(spark, sf_dir):
-    """Log-mel features (operators/melspec.py — Hann rFFT power →
-    HTK triangular filterbank → per-band moments): per doc a
-    bin-centered tone of class c = d%10 (freq (6+11c)·31.25 Hz), 2048
-    samples + flush. The oracle carries a frozen 10-class × 8-band
-    golden table of the r4-rounded moments computed ONCE by the same
-    kernel chain — FFT windowing, mel edges, log floor and the moment
-    math all gate the exact values."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.melspec import mel_features
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        t = np.arange(2048 + 384)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                c = int(d) % 10
-                f = (6 + 11 * c) * 31.25
-                x = 0.5 * np.sin(2 * np.pi * f * t / 8000.0)
-                x[2048:] = 0.0
-                payloads.append(encode_wav(
-                    (np.clip(x, -1, 1) * 32000).astype(np.int16),
-                    rate=8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = mel_features(media, strict=True)
-    return feats.select(
-        "media_id", "band",
-        _r4("mel_mean").alias("mel_mean_r4"),
-        _r4("mel_std").alias("mel_std_r4"))
-
-
-_SQL_MM_MELSPEC_DOCUMENTS = """
-WITH golden(c, band, m, s) AS (VALUES
-  (0, 0, 2.3533, 4.3681),
-  (0, 1, 1.7609, 4.1589),
-  (0, 2, 1.5219, 4.0744),
-  (0, 3, 1.1526, 3.9438),
-  (0, 4, 1.0069, 3.8923),
-  (0, 5, 0.7999, 3.8189),
-  (0, 6, 0.7083, 3.7865),
-  (0, 7, 0.6264, 3.7574),
-  (1, 0, -0.039, 3.527),
-  (1, 1, 1.8968, 4.2066),
-  (1, 2, 2.3114, 4.3534),
-  (1, 3, 0.4576, 3.6973),
-  (1, 4, 1.2646, 3.9833),
-  (1, 5, 1.4087, 4.0342),
-  (1, 6, 1.1048, 3.9267),
-  (1, 7, 1.1477, 3.9418),
-  (2, 0, 0.5989, 3.7474),
-  (2, 1, -0.9182, 3.2312),
-  (2, 2, 1.5462, 4.0824),
-  (2, 3, 2.3823, 4.3785),
-  (2, 4, 0.2678, 3.6319),
-  (2, 5, 0.9262, 3.8634),
-  (2, 6, 1.4309, 4.0421),
-  (2, 7, 1.3343, 4.0078),
-  (3, 0, 0.4507, 3.695),
-  (3, 1, 0.4355, 3.6895),
-  (3, 2, 0.84, 3.833),
-  (3, 3, 1.8632, 4.1948),
-  (3, 4, 2.3243, 4.3579),
-  (3, 5, 1.1376, 3.9379),
-  (3, 6, 0.9364, 3.8672),
-  (3, 7, 1.3323, 4.0072),
-  (4, 0, 1.1066, 3.9276),
-  (4, 1, 0.5479, 3.7294),
-  (4, 2, 0.3415, 3.6563),
-  (4, 3, 0.3925, 3.6744),
-  (4, 4, 2.1349, 4.2909),
-  (4, 5, 2.1889, 4.31),
-  (4, 6, 0.7558, 3.8031),
-  (4, 7, 1.5506, 4.0842),
-  (5, 0, -0.3509, 3.412),
-  (5, 1, 0.2822, 3.6354),
-  (5, 2, 0.2925, 3.6391),
-  (5, 3, 0.6173, 3.754),
-  (5, 4, 1.0696, 3.9141),
-  (5, 5, 2.3504, 4.3671),
-  (5, 6, 1.985, 4.2378),
-  (5, 7, 0.9366, 3.8673),
-  (6, 0, 0.5164, 3.7188),
-  (6, 1, 0.518, 3.7193),
-  (6, 2, -0.1117, 3.4963),
-  (6, 3, 0.8606, 3.8406),
-  (6, 4, 1.4901, 4.0629),
-  (6, 5, 1.8223, 4.1803),
-  (6, 6, 2.3307, 4.3601),
-  (6, 7, 1.0779, 3.9169),
-  (7, 0, 1.4177, 4.0374),
-  (7, 1, 1.1632, 3.9475),
-  (7, 2, 0.6638, 3.7708),
-  (7, 3, 0.4841, 3.7069),
-  (7, 4, 0.495, 3.7107),
-  (7, 5, 0.8037, 3.8199),
-  (7, 6, 2.2942, 4.3472),
-  (7, 7, 2.0183, 4.2496),
-  (8, 0, 0.2332, 3.6181),
-  (8, 1, 0.5167, 3.7187),
-  (8, 2, 1.12, 3.9321),
-  (8, 3, 1.4442, 4.0467),
-  (8, 4, 1.181, 3.9537),
-  (8, 5, 0.6004, 3.748),
-  (8, 6, 1.86, 4.1937),
-  (8, 7, 2.3378, 4.3626),
-  (9, 0, 0.0988, 3.5706),
-  (9, 1, 1.0874, 3.9205),
-  (9, 2, 0.6961, 3.7825),
-  (9, 3, 0.8294, 3.8294),
-  (9, 4, 0.6924, 3.7806),
-  (9, 5, 1.5461, 4.0828),
-  (9, 6, 1.0419, 3.9044),
-  (9, 7, 2.3394, 4.3632))
-SELECT doc_id AS media_id, CAST(band AS BIGINT) AS band,
-       CAST(m AS DOUBLE) AS mel_mean_r4,
-       CAST(s AS DOUBLE) AS mel_std_r4
-FROM documents JOIN golden ON golden.c = doc_id % 10
-"""
-
-
-def _q_mm_audio_match_documents(spark, sf_dir):
-    """Spectral-landmark audio RETRIEVAL (operators/audiomatch.py —
-    Wang/Shazam constellation: Hann rFFT peaks → (f1,f2,dt) landmark
-    hashes → ONE equi-join + offset-histogram vote): 35 indexed melody
-    clips (even doc_id < 70; 8 bin-centered PRNG tones each) and 35
-    query snippets (odd doc_id < 70: a gain-scaled middle cut of the
-    even neighbor's clip). The fixture set is FIXED across SFs — like
-    the quadratic-truth dedup sub-corpus, correctness runs on a
-    constant witness set while the operator's scale story (hash
-    equi-join, no pairwise clip scan) is plan-audited. Every true match
-    concentrates exactly 264 votes at the closed-form cut offset
-    ((d%3)+1)*8 frames; the deterministic collision ceiling of these
-    pure-tone fixtures is 168 votes, so min_votes=220 admits exactly
-    the 35 true pairs — any FFT/peak/hash/vote regression changes the
-    vote mass and breaks the row/hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.audiomatch import (
-        audio_landmarks, match_clips)
-    from bid_evaluation_spark.operators.wav import encode_wav
-
-    docs = _docs_par(spark, sf_dir).filter(F.col("doc_id") < 70)
-
-    def melody(d):
-        rng = np.random.default_rng(1000 + (d - d % 2))
-        bins = rng.choice(np.arange(12, 112), size=8, replace=False)
-        t = np.arange(1024)
-        return np.concatenate(
-            [0.5 * np.sin(2 * np.pi * (b * 31.25) * t / 8000.0)
-             for b in bins])
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                x = melody(d)
-                if d % 2 == 1:                       # query: scaled snippet
-                    off = ((d % 3) + 1) * 1024
-                    x = 0.3 * x[off:off + 3072]
-                rows.append({"media_id": d, "is_query": d % 2 == 1,
-                             "payload": encode_wav(
-                                 (np.clip(x, -1, 1) * 32000)
-                                 .astype(np.int16), rate=8000)})
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "is_query", "payload"])
-
-    media = docs.mapInPandas(
-        gen, "media_id long, is_query boolean, payload binary")
-    # r13 opt (guide §2.4/§5): the landmark manifest fed BOTH sides of
-    # the match join and the is_query side re-ran the fixture-gen
-    # kernel — the decode+FFT subtree executed twice and gen four
-    # times. Persist the (tiny) manifest once (tracked, swept by
-    # release_all) and split on media_id parity, which IS is_query by
-    # construction (gen sets is_query = d % 2 == 1). Values unchanged.
-    from bid_evaluation_spark.operators.cache import track_cached
-    lms = audio_landmarks(media).persist()
-    return track_cached(
-        match_clips(
-            lms.filter(F.col("media_id") % 2 == 0)
-               .select("media_id", "lm_hash", "t"),
-            lms.filter(F.col("media_id") % 2 == 1)
-               .select("media_id", "lm_hash", "t"),
-            min_votes=220),
-        [lms])
-
-
-_SQL_MM_AUDIO_MATCH_DOCUMENTS = """
-SELECT doc_id AS query_id,
-       doc_id - 1 AS index_id,
-       CAST(((doc_id % 3) + 1) * 8 AS INT) AS offset,
-       CAST(264 AS BIGINT) AS votes
-FROM documents
-WHERE doc_id < 70 AND doc_id % 2 = 1
-"""
-
-
-def _q_mm_mp2_decode_documents(spark, sf_dir):
-    """PERCEPTUAL-family lossy audio decode end-to-end: deterministic
-    tone fixtures (freq class doc_id%7, length+amplitude class doc_id%5)
-    encoded as MPEG-1 Audio Layer II (operators/mp2.py — ISO frame
-    header/sizing/layout/scalefactors/grouped quantizers; exact-PR MDCT
-    filterbank substituted for the standard's tabulated 512-tap window,
-    documented) and decoded through the multimodal dispatch seam
-    (sync-word branch in decode_audio). Lossy + padded-to-frame output
-    means no closed forms: the oracle carries a frozen 35-row golden
-    table (rms to 4 decimals, zero-crossing count over the full decoded
-    signal incl. filterbank ringing) computed ONCE by the same codec
-    outside Spark — any codec, dispatch, or padding regression breaks
-    the hash match. duration_ms IS closed-form: 1152-sample frames,
-    ceil(ceil(n/32)/36)*36 blocks of 32 at 32 kHz."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.mp2 import encode_mp2
-    from bid_evaluation_spark.operators.multimodal import extract_audio_features
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                a, b = int(d) % 5, int(d) % 7
-                n = 2048 + a * 1024
-                t = np.arange(n)
-                x = (0.3 + 0.05 * a) * np.sin(
-                    2 * np.pi * 250 * (1 + b) * t / 32000.0)
-                payloads.append(encode_mp2(x, rate=32000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_audio_features(media, strict=True)
-    return feats.select("media_id", "sample_rate", "duration_ms",
-                        _r4("rms").alias("rms"), "zero_crossings")
-
-
-_SQL_MM_MP2_DECODE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, doc_id % 5 AS a, doc_id % 7 AS b,
-         2048 + (doc_id % 5) * 1024 AS n
-  FROM documents
-),
-golden(a, b, rms, zc) AS (VALUES
-  (0, 0, 0.2001, 52), (0, 1, 0.2, 90), (0, 2, 0.2, 118),
-  (0, 3, 0.1999, 158), (0, 4, 0.2001, 190), (0, 5, 0.2, 222),
-  (0, 6, 0.2, 254),
-  (1, 0, 0.2333, 78), (1, 1, 0.2333, 126), (1, 2, 0.2334, 172),
-  (1, 3, 0.2332, 222), (1, 4, 0.2333, 270), (1, 5, 0.2336, 316),
-  (1, 6, 0.2333, 366),
-  (2, 0, 0.2667, 92), (2, 1, 0.2665, 158), (2, 2, 0.2667, 222),
-  (2, 3, 0.2666, 282), (2, 4, 0.2666, 348), (2, 5, 0.2667, 414),
-  (2, 6, 0.2668, 478),
-  (3, 0, 0.3002, 92), (3, 1, 0.3002, 182), (3, 2, 0.3001, 270),
-  (3, 3, 0.3, 350), (3, 4, 0.3001, 428), (3, 5, 0.3, 508),
-  (3, 6, 0.3002, 590),
-  (4, 0, 0.3333, 126), (4, 1, 0.3336, 220), (4, 2, 0.3332, 318),
-  (4, 3, 0.3333, 414), (4, 4, 0.3335, 508), (4, 5, 0.3335, 606),
-  (4, 6, 0.3333, 702))
-SELECT doc_id AS media_id,
-  CAST(32000 AS BIGINT) AS sample_rate,
-  -- padded decode length: blocks of 32 rounded up to whole 36-block
-  -- frames, i.e. whole 1152-sample frames
-  CAST((((n + 31) // 32 + 35) // 36) * 36 * 32 * 1000 // 32000
-       AS BIGINT) AS duration_ms,
-  CAST(golden.rms AS DOUBLE) AS rms,
-  CAST(golden.zc AS BIGINT) AS zero_crossings
-FROM p JOIN golden ON p.a = golden.a AND p.b = golden.b
-"""
-
-
-def _q_mm_gif_decode_documents(spark, sf_dir):
-    """REAL entropy-coded image decode through the GIF codec
-    (operators/gif.py): per doc a 4-color palette raster
-    (palette_i = ((16i+d)%256, (32i+2d)%256, (48i+d)%256), index
-    (x+2y+d)%4, dims from doc_id) is LZW-encoded — odd docs with
-    mid-stream CLEAR floods, even docs as one literal run — shipped as
-    binary GIF payloads and decoded by the pure-stdlib kernel
-    (sub-block reassembly, LSB-first variable-width codes, palette
-    mapping). The oracle reproduces width/height/mean Rec. 601 luma
-    arithmetically from the generating formula, so a bit-unpacking,
-    width-schedule or palette bug breaks the hash match."""
-    import numpy as np
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.gif import encode_gif
-    from bid_evaluation_spark.operators.multimodal import (
-        extract_image_features)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 5, 4 + d % 4
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                idx = (x + 2 * y + d) % 4
-                pal = np.array(
-                    [[(16 * i + d) % 256, (32 * i + 2 * d) % 256,
-                      (48 * i + d) % 256] for i in range(4)],
-                    dtype=np.uint8)
-                payloads.append(encode_gif(pal[idx],
-                                           clear_every=7 if d % 2 else 0))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = extract_image_features(media, fake=False, strict=True)
-    return feats.select("media_id", "width", "height",
-                        _r4("mean_luma").alias("mean_luma"))
-
-
-_SQL_MM_GIF_DECODE_DOCUMENTS = """
-WITH dims AS (
-  SELECT doc_id, CAST(5 + doc_id % 5 AS BIGINT) AS w,
-         CAST(4 + doc_id % 4 AS BIGINT) AS h
-  FROM documents
-)
-SELECT doc_id AS media_id, w AS width, h AS height,
-  round(list_avg(flatten(list_transform(generate_series(0, h - 1),
-          y -> list_transform(generate_series(0, w - 1),
-          x -> 0.299 * CAST((16 * ((x + 2 * y + doc_id) % 4) + doc_id)
-                            % 256 AS DOUBLE)
-             + 0.587 * CAST((32 * ((x + 2 * y + doc_id) % 4) + 2 * doc_id)
-                            % 256 AS DOUBLE)
-             + 0.114 * CAST((48 * ((x + 2 * y + doc_id) % 4) + doc_id)
-                            % 256 AS DOUBLE))))) * 10000.0)
-    / 10000.0 AS mean_luma
-FROM dims
 """
 
 
@@ -17193,10 +13749,6 @@ _QUERIES: dict = {
                                    _SQL_TEXT_FINGERPRINT_DOCUMENTS),
     "staged_quality_documents": (_q_staged_quality_documents,
                                  _SQL_STAGED_QUALITY_DOCUMENTS),
-    "mm_image_features_documents": (_q_mm_image_features_documents,
-                                    _SQL_MM_IMAGE_FEATURES_DOCUMENTS),
-    "mm_image_decode_documents": (_q_mm_image_decode_documents,
-                                  _SQL_MM_IMAGE_DECODE_DOCUMENTS),
     "dedup_exact_documents": (_q_dedup_exact_documents, _SQL_DEDUP_EXACT_DOCUMENTS),
     "dedup_incremental_documents": (_q_dedup_incremental_documents,
                                     _SQL_DEDUP_INCREMENTAL_DOCUMENTS),
@@ -17286,28 +13838,6 @@ _QUERIES: dict = {
                                       _SQL_PIPE_PACK_SEQUENCES_DOCUMENTS),
     "pipe_end_to_end_documents": (_q_pipe_end_to_end_documents,
                                   _SQL_PIPE_END_TO_END_DOCUMENTS),
-    "mm_flac_decode_documents": (_q_mm_flac_decode_documents,
-                                 _SQL_MM_FLAC_DECODE_DOCUMENTS),
-    "mm_g711_decode_documents": (_q_mm_g711_decode_documents,
-                                 _SQL_MM_G711_DECODE_DOCUMENTS),
-    "mm_adpcm_decode_documents": (_q_mm_adpcm_decode_documents,
-                                  _SQL_MM_ADPCM_DECODE_DOCUMENTS),
-    "mm_mjpeg_avi_frames_documents": (_q_mm_mjpeg_avi_frames_documents,
-                                      _SQL_MM_MJPEG_AVI_FRAMES_DOCUMENTS),
-    "mm_audio_fingerprint_documents": (_q_mm_audio_fingerprint_documents,
-                                       _SQL_MM_AUDIO_FINGERPRINT_DOCUMENTS),
-    "mm_video_signature_documents": (_q_mm_video_signature_documents,
-                                     _SQL_MM_VIDEO_SIGNATURE_DOCUMENTS),
-    "wds_tar_roundtrip_documents": (_q_wds_tar_roundtrip_documents,
-                                    _SQL_WDS_TAR_ROUNDTRIP_DOCUMENTS),
-    "mm_resample_documents": (_q_mm_resample_documents,
-                              _SQL_MM_RESAMPLE_DOCUMENTS),
-    "mm_probe_documents": (_q_mm_probe_documents,
-                           _SQL_MM_PROBE_DOCUMENTS),
-    "mm_bilinear_resize_documents": (_q_mm_bilinear_resize_documents,
-                                     _SQL_MM_BILINEAR_RESIZE_DOCUMENTS),
-    "pdf_text_documents": (_q_pdf_text_documents,
-                           _SQL_PDF_TEXT_DOCUMENTS),
     "html_text_documents": (_q_html_text_documents,
                             _SQL_HTML_TEXT_DOCUMENTS),
     "robots_filter_documents": (_q_robots_filter_documents,
@@ -17320,16 +13850,6 @@ _QUERIES: dict = {
                                 _SQL_WEB_LINKGRAPH_DOCUMENTS),
     "sitemap_urls_documents": (_q_sitemap_urls_documents,
                                _SQL_SITEMAP_URLS_DOCUMENTS),
-    "mq_image_quality_documents": (_q_mq_image_quality_documents,
-                                   _SQL_MQ_IMAGE_QUALITY_DOCUMENTS),
-    "mq_audio_quality_documents": (_q_mq_audio_quality_documents,
-                                   _SQL_MQ_AUDIO_QUALITY_DOCUMENTS),
-    "mm_audio_decode_documents": (_q_mm_audio_decode_documents,
-                                  _SQL_MM_AUDIO_DECODE_DOCUMENTS),
-    "mm_video_frames_documents": (_q_mm_video_frames_documents,
-                                  _SQL_MM_VIDEO_FRAMES_DOCUMENTS),
-    "mm_jpeg_decode_documents": (_q_mm_jpeg_decode_documents,
-                                 _SQL_MM_JPEG_DECODE_DOCUMENTS),
     "quality_repetition_documents": (_q_quality_repetition_documents,
                                      _SQL_QUALITY_REPETITION_DOCUMENTS),
     "quality_gopher_documents": (_q_quality_gopher_documents,
@@ -17417,21 +13937,10 @@ _QUERIES: dict = {
                                _SQL_PRIVACY_KANON_CUSTOMER),
     "privacy_dp_counts_documents": (_q_privacy_dp_counts_documents,
                                     _SQL_PRIVACY_DP_COUNTS_DOCUMENTS),
-    "mm_image_resize_documents": (_q_mm_image_resize_documents,
-                                  _SQL_MM_IMAGE_RESIZE_DOCUMENTS),
-    "mm_audio_decimate_documents": (_q_mm_audio_decimate_documents,
-                                    _SQL_MM_AUDIO_DECIMATE_DOCUMENTS),
     "analytics_poststrat_orders": (_q_analytics_poststrat_orders,
                                    _SQL_ANALYTICS_POSTSTRAT_ORDERS),
     "metrics_psi_timeline_events": (_q_metrics_psi_timeline_events,
                                     _SQL_METRICS_PSI_TIMELINE_EVENTS),
-    "pipe_media_funnel_documents": (_q_pipe_media_funnel_documents,
-                                    _SQL_PIPE_MEDIA_FUNNEL_DOCUMENTS),
-    "pipe_wds_funnel_documents": (_q_pipe_wds_funnel_documents,
-                                  _SQL_PIPE_WDS_FUNNEL_DOCUMENTS),
-    "pipe_media_funnel_report_documents": (
-        _q_pipe_media_funnel_report_documents,
-        _SQL_PIPE_MEDIA_FUNNEL_REPORT_DOCUMENTS),
     "pipe_curation_funnel_documents": (_q_pipe_curation_funnel_documents,
                                        _SQL_PIPE_CURATION_FUNNEL_DOCUMENTS),
     "analytics_did_events": (_q_analytics_did_events,
@@ -17693,8 +14202,6 @@ _QUERIES: dict = {
                                       _SQL_TEXT_SCRIPT_PROFILE_DOCUMENTS),
     "retrieval_mmr_embeddings": (_q_retrieval_mmr_embeddings,
                                  _SQL_RETRIEVAL_MMR_EMBEDDINGS),
-    "mm_netpbm_decode_documents": (_q_mm_netpbm_decode_documents,
-                                   _SQL_MM_NETPBM_DECODE_DOCUMENTS),
     "dedup_lsh_recall_documents": (_q_dedup_lsh_recall_documents,
                                    _SQL_DEDUP_LSH_RECALL_DOCUMENTS),
     "text_entropy_documents": (_q_text_entropy_documents,
@@ -17705,62 +14212,12 @@ _QUERIES: dict = {
                                        _SQL_DEDUP_STREAM_NEARDUP_DOCUMENTS),
     "dedup_homoglyph_documents": (_q_dedup_homoglyph_documents,
                                   _SQL_DEDUP_HOMOGLYPH_DOCUMENTS),
-    "mm_gif_decode_documents": (_q_mm_gif_decode_documents,
-                                _SQL_MM_GIF_DECODE_DOCUMENTS),
-    "mm_mp2_decode_documents": (_q_mm_mp2_decode_documents,
-                                _SQL_MM_MP2_DECODE_DOCUMENTS),
-    "mm_audio_match_documents": (_q_mm_audio_match_documents,
-                                 _SQL_MM_AUDIO_MATCH_DOCUMENTS),
-    "mm_phash_documents": (_q_mm_phash_documents,
-                           _SQL_MM_PHASH_DOCUMENTS),
-    "mm_scenecut_documents": (_q_mm_scenecut_documents,
-                              _SQL_MM_SCENECUT_DOCUMENTS),
-    "mm_video_neardup_documents": (_q_mm_video_neardup_documents,
-                                   _SQL_MM_VIDEO_NEARDUP_DOCUMENTS),
-    "mm_tiff_decode_documents": (_q_mm_tiff_decode_documents,
-                                 _SQL_MM_TIFF_DECODE_DOCUMENTS),
-    "mm_exif_documents": (_q_mm_exif_documents,
-                          _SQL_MM_EXIF_DOCUMENTS),
-    "privacy_exif_scrub_documents": (_q_privacy_exif_scrub_documents,
-                                     _SQL_PRIVACY_EXIF_SCRUB_DOCUMENTS),
-    "mm_vad_segments_documents": (_q_mm_vad_segments_documents,
-                                  _SQL_MM_VAD_SEGMENTS_DOCUMENTS),
-    "mm_orient_normalize_documents": (_q_mm_orient_normalize_documents,
-                                      _SQL_MM_ORIENT_NORMALIZE_DOCUMENTS),
-    "mm_bmp_decode_documents": (_q_mm_bmp_decode_documents,
-                                _SQL_MM_BMP_DECODE_DOCUMENTS),
     "dedup_lsh_tune_documents": (_q_dedup_lsh_tune_documents,
                                  _SQL_DEDUP_LSH_TUNE_DOCUMENTS),
     "a1_approx_quantiles_lineitem": (_q_a1_approx_quantiles_lineitem,
                                      _SQL_A1_APPROX_QUANTILES_LINEITEM),
     "text_blocklist_documents": (_q_text_blocklist_documents,
                                  _SQL_TEXT_BLOCKLIST_DOCUMENTS),
-    "mm_loudness_documents": (_q_mm_loudness_documents,
-                              _SQL_MM_LOUDNESS_DOCUMENTS),
-    "mm_loudness_kw_documents": (_q_mm_loudness_kw_documents,
-                                 _SQL_MM_LOUDNESS_KW_DOCUMENTS),
-    "mm_audio_curation_documents": (_q_mm_audio_curation_documents,
-                                    _SQL_MM_AUDIO_CURATION_DOCUMENTS),
-    "mm_truepeak_documents": (_q_mm_truepeak_documents,
-                              _SQL_MM_TRUEPEAK_DOCUMENTS),
-    "mm_mp3_inventory_documents": (_q_mm_mp3_inventory_documents,
-                                   _SQL_MM_MP3_INVENTORY_DOCUMENTS),
-    "mm_mp4_inventory_documents": (_q_mm_mp4_inventory_documents,
-                                   _SQL_MM_MP4_INVENTORY_DOCUMENTS),
-    "mm_ogg_inventory_documents": (_q_mm_ogg_inventory_documents,
-                                   _SQL_MM_OGG_INVENTORY_DOCUMENTS),
-    "mm_webp_inventory_documents": (_q_mm_webp_inventory_documents,
-                                    _SQL_MM_WEBP_INVENTORY_DOCUMENTS),
-    "mm_webp_decode_documents": (_q_mm_webp_decode_documents,
-                                 _SQL_MM_WEBP_DECODE_DOCUMENTS),
-    "mm_mp3_sideinfo_documents": (_q_mm_mp3_sideinfo_documents,
-                                  _SQL_MM_MP3_SIDEINFO_DOCUMENTS),
-    "mm_webp_anim_documents": (_q_mm_webp_anim_documents,
-                               _SQL_MM_WEBP_ANIM_DOCUMENTS),
-    "mm_media_census_documents": (_q_mm_media_census_documents,
-                                  _SQL_MM_MEDIA_CENSUS_DOCUMENTS),
-    "mm_melspec_documents": (_q_mm_melspec_documents,
-                             _SQL_MM_MELSPEC_DOCUMENTS),
     "pipe_unigram_documents": (_q_pipe_unigram_documents,
                                _SQL_PIPE_UNIGRAM_DOCUMENTS),
 }

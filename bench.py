@@ -252,28 +252,10 @@ def bench_ivfpq_embeddings(spark, sf_dir):
                       k=10, nprobe=4))
 
 
-def bench_video_neardup_documents(spark, sf_dir):
-    """Round-10 composition: AVI decode→cuts→shot pHash→banded join."""
-    import __spark_entry__ as e
-
-    _force(e.queries()["mm_video_neardup_documents"](spark, sf_dir))
 
 
-def bench_maxsim_embeddings(spark, sf_dir):
-    """Round-10 late-interaction rerank (native zip_with/aggregate)."""
-    import __spark_entry__ as e
-
-    _force(e.queries()["retrieval_maxsim_embeddings"](spark, sf_dir))
 
 
-def bench_audio_curation_documents(spark, sf_dir):
-    """Round-11 composition: ONE decode pass (VAD+K-loudness+mel+
-    landmarks) → native gates → landmark equi-join dedup → verdict."""
-    import __spark_entry__ as e
-    from bid_evaluation_spark.operators.cache import release_all
-
-    _force(e.queries()["mm_audio_curation_documents"](spark, sf_dir))
-    release_all()                 # the query persists its manifest
 
 
 def bench_span_removal_documents(spark, sf_dir):
@@ -287,23 +269,8 @@ def bench_span_removal_documents(spark, sf_dir):
     _force(remove_duplicated_spans(df, span=10, stride=3))
 
 
-def bench_media_funnel_documents(spark, sf_dir):
-    """Round-12 census-routed funnel: ONE Arrow pass (sniff + routed
-    decode + features) → native gates → linear dHash dedup →
-    precedence verdict over a 19-class mixed-payload corpus."""
-    import __spark_entry__ as e
-    from bid_evaluation_spark.operators.cache import release_all
-
-    _force(e.queries()["pipe_media_funnel_documents"](spark, sf_dir))
-    release_all()                 # the funnel persists its manifest
 
 
-def bench_webp_decode_documents(spark, sf_dir):
-    """Round-12 VP8L pixel decode through the funnel manifest kernel
-    (canonical prefix codes + transforms + LZ77 per row)."""
-    import __spark_entry__ as e
-
-    _force(e.queries()["mm_webp_decode_documents"](spark, sf_dir))
 
 
 BENCHES = {
@@ -327,12 +294,7 @@ BENCHES = {
     "pareto_frontier_part": bench_pareto_frontier_part,
     "lm_perplexity_documents": bench_lm_perplexity_documents,
     "ivfpq_embeddings": bench_ivfpq_embeddings,
-    "video_neardup_documents": bench_video_neardup_documents,
-    "maxsim_embeddings": bench_maxsim_embeddings,
-    "audio_curation_documents": bench_audio_curation_documents,
     "span_removal_documents": bench_span_removal_documents,
-    "media_funnel_documents": bench_media_funnel_documents,
-    "webp_decode_documents": bench_webp_decode_documents,
 }
 
 
