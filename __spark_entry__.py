@@ -1263,391 +1263,6 @@ FROM toks
 """
 
 
-def _q_sitemap_urls_documents(spark, sf_dir):
-    """Sitemap discovery parsing (operators/sitemap.py — sitemaps.org
-    protocol, the crawl-discovery leg next to robots/linkgraph): doc
-    classes cycle the protocol surface — doc_id%7==0 is a 2-child
-    sitemapindex, else doc_id%11==0 is corrupt bytes (must yield ONE
-    visible null-kind row), else a urlset of 1+doc_id%5 urls carrying
-    lastmod always, changefreq on even urls, binary-exact priorities
-    (i%4)/4; every third doc gzip-compressed (mtime-pinned writer). The
-    oracle rebuilds the full entry table from doc_id arithmetic with a
-    lateral generate_series, so kind detection, gzip sniffing, field
-    extraction, null handling, and the one-row-per-corrupt-payload
-    contract all gate the hash."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.sitemap import (
-        sitemap_entries, write_sitemapindex, write_urlset)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                gz = d % 3 == 0
-                if d % 7 == 0:
-                    payloads.append(write_sitemapindex(
-                        [f"http://h{d % 10}.example/s{j}.xml"
-                         for j in range(2)], compress=gz))
-                elif d % 11 == 0:
-                    payloads.append(b"garbage not xml <")
-                else:
-                    urls = []
-                    for i in range(1 + d % 5):
-                        u = {"loc": f"http://h{d % 10}.example/u{i}",
-                             "lastmod": f"2026-02-{10 + i:02d}",
-                             "priority": (i % 4) / 4.0}
-                        if i % 2 == 0:
-                            u["changefreq"] = "daily"
-                        urls.append(u)
-                    payloads.append(write_urlset(urls, compress=gz))
-            yield pd.DataFrame({"sitemap_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    maps = docs.mapInPandas(gen, "sitemap_id long, payload binary")
-    return sitemap_entries(maps)
-
-
-_SQL_SITEMAP_URLS_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, doc_id % 10 AS h, doc_id % 5 AS n5,
-         doc_id % 7 AS m7, doc_id % 11 AS m11
-  FROM documents
-),
-urlsets AS (
-  SELECT doc_id AS sitemap_id, 'urlset' AS kind,
-         'http://h' || h || '.example/u' || i AS loc,
-         '2026-02-' || lpad(CAST(10 + i AS VARCHAR), 2, '0') AS lastmod,
-         CASE WHEN i % 2 = 0 THEN 'daily' END AS changefreq,
-         CAST(i % 4 AS DOUBLE) / 4 AS priority
-  FROM p, UNNEST(generate_series(0, n5)) AS t(i)
-  WHERE m7 <> 0 AND m11 <> 0
-),
-indexes AS (
-  SELECT doc_id AS sitemap_id, 'sitemapindex' AS kind,
-         'http://h' || h || '.example/s' || j || '.xml' AS loc,
-         CAST(NULL AS VARCHAR) AS lastmod,
-         CAST(NULL AS VARCHAR) AS changefreq,
-         CAST(NULL AS DOUBLE) AS priority
-  FROM p, UNNEST(generate_series(0, 1)) AS t(j)
-  WHERE m7 = 0
-),
-corrupt AS (
-  SELECT doc_id AS sitemap_id, CAST(NULL AS VARCHAR) AS kind,
-         CAST(NULL AS VARCHAR) AS loc, CAST(NULL AS VARCHAR) AS lastmod,
-         CAST(NULL AS VARCHAR) AS changefreq,
-         CAST(NULL AS DOUBLE) AS priority
-  FROM p WHERE m7 <> 0 AND m11 = 0
-)
-SELECT * FROM urlsets
-UNION ALL SELECT * FROM indexes
-UNION ALL SELECT * FROM corrupt
-"""
-
-
-def _q_web_linkgraph_documents(spark, sf_dir):
-    """Host-level link graph (operators/linkgraph.py — the crawl-frontier
-    / PageRank-input leg completing the web-ingest family): each doc is
-    a page at http://h{doc_id%10}.example/p/{doc_id} whose anchors
-    exercise every resolution rule — an absolute link to the next host,
-    a relative "/self" (resolves to the OWN host), a protocol-relative
-    "//host/y" (doc_id%3==0), a rel=nofollow absolute link (doc_id%4==0,
-    must be extracted-but-EXCLUDED from the graph), and a mailto: that
-    must never appear. The oracle rebuilds the expected edge multiset
-    from doc_id arithmetic alone, so a bug in anchor parsing, urljoin
-    resolution, scheme filtering, nofollow handling, or host lowering
-    changes counts or keys and breaks the hash."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.linkgraph import (
-        extract_links, host_graph)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            urls, pages = [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                urls.append(f"http://h{d % 10}.example/p/{d}")
-                html = (f'<a href="HTTP://H{(d + 1) % 10}.EXAMPLE/x">a</a>'
-                        '<a href="/self">s</a>'
-                        '<a href="mailto:x@y.example">m</a>')
-                if d % 3 == 0:
-                    html += f'<a href="//h{(d + 2) % 10}.example/y">p</a>'
-                if d % 4 == 0:
-                    html += (f'<a rel="nofollow" '
-                             f'href="http://h{(d + 1) % 10}.example/nf">n</a>')
-                pages.append(html)
-            yield pd.DataFrame({"url": urls, "html": pages})
-
-    pages = docs.mapInPandas(gen, "url string, html string")
-    return host_graph(extract_links(pages))
-
-
-# NOTE the uppercase HTTP://H{..}.EXAMPLE absolute link above: scheme
-# matching and host output must both be case-insensitive (hosts
-# lowercased), which the oracle's lowercase host labels enforce.
-_SQL_WEB_LINKGRAPH_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id % 10 AS src, doc_id FROM documents
-),
-edges AS (
-  SELECT 'h' || src || '.example' AS src_host,
-         'h' || ((doc_id + 1) % 10) || '.example' AS dst_host
-  FROM p
-  UNION ALL
-  SELECT 'h' || src || '.example', 'h' || src || '.example' FROM p
-  UNION ALL
-  SELECT 'h' || src || '.example', 'h' || ((doc_id + 2) % 10) || '.example'
-  FROM p WHERE doc_id % 3 = 0
-)
-SELECT src_host, dst_host, COUNT(*) AS n_links
-FROM edges GROUP BY src_host, dst_host
-"""
-
-
-def _q_warc_ingest_documents(spark, sf_dir):
-    """WARC ingest (sources/warc.py — the Common Crawl / ISO 28500
-    container) composed with HTML extraction: each doc's ASCII-projected
-    text is wrapped in a page, packed into a gzip-member-per-record WARC
-    response (status 200/404 by parity) by the fixture encoder, then the
-    reader must split records, strip the HTTP message, surface
-    status/URL, and the HTML leg recovers the text. Everything is a
-    closed form for the oracle — a bug in record framing,
-    Content-Length slicing, gzip member handling, or HTTP header
-    stripping breaks the hash. The binaryFile shard path + truncation
-    salvage are covered by tests/test_warc.py."""
-    import html as _html
-    import re as _re
-
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.html import extract_html_text
-    from bid_evaluation_spark.sources.warc import decode_warc, encode_warc
-
-    docs = _docs_par(spark, sf_dir, "doc_id", "text")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                proj = _re.sub(r"[^ -~]", "", text or "")
-                page = f"<p>{_html.escape(proj)}</p>".encode("ascii")
-                warc = encode_warc(
-                    [{"type": "response",
-                      "url": f"https://ex.com/doc/{d}",
-                      "status": 200 if d % 2 == 0 else 404,
-                      "payload": page}],
-                    compress=True)
-                recs, n_bad = decode_warc(warc)
-                r = recs[0]
-                out_text = extract_html_text(
-                    r["payload"].decode("ascii"))["text"]
-                rows.append({"doc_id": d, "url": r["url"],
-                             "http_status": r["http_status"],
-                             "n_bad": n_bad, "text": out_text,
-                             "n_chars": len(out_text)})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "url", "http_status", "n_bad", "text",
-                "n_chars"])
-
-    return docs.mapInPandas(
-        gen, "doc_id long, url string, http_status int, n_bad int, "
-             "text string, n_chars long")
-
-
-_SQL_WARC_INGEST_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id,
-    trim(regexp_replace(
-      regexp_replace(COALESCE(text, ''), '[^ -~]', '', 'g'),
-      ' +', ' ', 'g')) AS proj
-  FROM documents
-)
-SELECT doc_id,
-  'https://ex.com/doc/' || CAST(doc_id AS VARCHAR) AS url,
-  CAST(CASE WHEN doc_id % 2 = 0 THEN 200 ELSE 404 END AS INTEGER)
-    AS http_status,
-  CAST(0 AS INTEGER) AS n_bad,
-  proj AS text,
-  CAST(length(proj) AS BIGINT) AS n_chars
-FROM p
-"""
-
-
-def _q_charset_decode_documents(spark, sf_dir):
-    """Charset sniffing (operators/encoding.py — the WHATWG-shaped
-    bytes→text ladder: BOM, strict UTF-8, cp1252, latin-1): each doc's
-    ASCII projection is shipped in a doc_id%4-selected wire encoding —
-    pure ASCII / UTF-8 with an appended 'é' / BOM'd UTF-16-LE with an
-    appended 'Ω' / cp1252 with appended smart quotes (invalid UTF-8) —
-    and the detector must label the rung and decode the exact text.
-    The oracle rebuilds both as closed forms (the Unicode suffixes are
-    literal in the SQL); a bug in BOM precedence, the strict-UTF-8
-    gate, or the cp1252 fallback breaks the hash."""
-    import codecs as _codecs
-    import re as _re
-
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.encoding import detect_decode_text
-
-    docs = _docs_par(spark, sf_dir, "doc_id", "text")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                proj = _re.sub(r"[^ -~]", "", text or "")
-                k = d % 4
-                if k == 0:
-                    payload = proj.encode("ascii")
-                elif k == 1:
-                    payload = (proj + "é").encode("utf-8")
-                elif k == 2:
-                    payload = _codecs.BOM_UTF16_LE \
-                        + (proj + "Ω").encode("utf-16-le")
-                else:
-                    payload = proj.encode("ascii") + b"\x93\x94"
-                rows.append({"doc_id": d, "payload": payload})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(gen, "doc_id long, payload binary")
-    return detect_decode_text(media)
-
-
-_SQL_CHARSET_DECODE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, doc_id % 4 AS k,
-    regexp_replace(COALESCE(text, ''), '[^ -~]', '', 'g') AS proj
-  FROM documents
-)
-SELECT doc_id,
-  CASE k WHEN 0 THEN 'ascii' WHEN 1 THEN 'utf-8'
-         WHEN 2 THEN 'utf-16-le' ELSE 'cp1252' END AS encoding,
-  CAST(CASE k
-    WHEN 0 THEN length(proj)
-    WHEN 1 THEN length(proj) + 2
-    WHEN 2 THEN 2 * length(proj) + 4
-    ELSE length(proj) + 2 END AS BIGINT) AS n_bytes,
-  CASE k WHEN 0 THEN proj WHEN 1 THEN proj || 'é'
-         WHEN 2 THEN proj || 'Ω'
-         ELSE proj || chr(8220) || chr(8221) END AS text
-FROM p
-"""
-
-
-def _q_robots_filter_documents(spark, sf_dir):
-    """robots.txt compliance filtering (operators/robots.py — stdlib
-    urllib.robotparser, 1996-draft first-matching-rule semantics): per
-    doc, a robots file that allows the /p<a>/ok subtree but disallows
-    the rest of /p<a>/ (Allow BEFORE Disallow — order is the semantics)
-    with a doc-derived Crawl-delay; even docs probe a /p<b>/ url
-    (allowed iff b != a), odd docs probe the carved-out /p<a>/ok path
-    (always allowed). All three outputs are closed forms; a bug in rule
-    ordering, prefix matching, or delay parsing breaks the hash."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.robots import robots_filter
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                a, b = d % 5, d % 3
-                robots = (f"User-agent: *\nAllow: /p{a}/ok\n"
-                          f"Disallow: /p{a}/\nCrawl-delay: {1 + d % 4}\n")
-                url = (f"https://ex.com/p{b}/x" if d % 2 == 0
-                       else f"https://ex.com/p{a}/ok/y")
-                rows.append({"doc_id": d, "url": url,
-                             "robots_txt": robots})
-            yield pd.DataFrame(rows, columns=["doc_id", "url",
-                                              "robots_txt"])
-
-    pairs = docs.mapInPandas(
-        gen, "doc_id long, url string, robots_txt string")
-    return robots_filter(pairs, agent="trainbot", strict=True)
-
-
-_SQL_ROBOTS_FILTER_DOCUMENTS = """
-SELECT doc_id,
-  CASE WHEN doc_id % 2 = 1 THEN TRUE
-       ELSE doc_id % 3 != doc_id % 5 END AS allowed,
-  CAST(1 + doc_id % 4 AS DOUBLE) AS crawl_delay
-FROM documents
-"""
-
-
-def _q_html_text_documents(spark, sf_dir):
-    """HTML → text extraction (operators/html.py — the web-ingest leg,
-    stdlib html.parser): each doc's ASCII-projected text is HTML-escaped
-    into a page with a title, a heading, a styled head, a script block
-    that must vanish, doc_id%4 inline anchors, and a tail paragraph. The
-    extractor must decode entities, skip script/style subtrees, break on
-    block tags, collapse whitespace runs, and count href anchors — the
-    oracle rebuilds title/text/counts with SQL string ops, so a bug in
-    any of those changes the full-text hash."""
-    import html as _html
-
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.html import extract_html_features
-
-    docs = _docs_par(spark, sf_dir, "doc_id", "text")
-
-    def gen(batches):
-        import re as _re
-        for pdf in batches:
-            pages = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                proj = _re.sub(r"[^ -~]", "", text or "")
-                pages.append(
-                    f"<html><head><title>doc {int(d)}</title>"
-                    "<style>p{color:red}</style></head>"
-                    f"<body><h1>doc {int(d)}</h1>"
-                    f"<p>{_html.escape(proj)}</p>"
-                    "<script>var t = '<p>not text</p>';</script>"
-                    + '<a href="/l">l</a>' * (int(d) % 4)
-                    + "<p>tail</p></body></html>")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "html": pages})
-
-    pages = docs.mapInPandas(gen, "doc_id long, html string")
-    return extract_html_features(pages, strict=True)
-
-
-_SQL_HTML_TEXT_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id,
-    trim(regexp_replace(
-      regexp_replace(COALESCE(text, ''), '[^ -~]', '', 'g'),
-      ' +', ' ', 'g')) AS proj,
-    doc_id % 4 AS nl
-  FROM documents
-),
-t AS (
-  SELECT doc_id, nl,
-    'doc ' || CAST(doc_id AS VARCHAR)
-    || CASE WHEN proj = '' THEN '' ELSE chr(10) || proj END
-    || CASE WHEN nl = 0 THEN '' ELSE chr(10) || repeat('l', nl) END
-    || chr(10) || 'tail' AS txt
-  FROM p
-)
-SELECT doc_id, 'doc ' || CAST(doc_id AS VARCHAR) AS title, txt AS text,
-  CAST(length(txt) AS BIGINT) AS n_chars,
-  CAST(nl AS BIGINT) AS n_links, CAST(0 AS BIGINT) AS n_images
-FROM t
-"""
-
-
 def _q_text_token_count_documents(spark, sf_dir):
     from bid_evaluation_spark.operators.text import bpe_ish_token_count, token_count
 
@@ -4393,50 +4008,6 @@ FROM q
 """
 
 
-def _q_web_url_features_documents(spark, sf_dir):
-    """Crawl-curation URL features (operators/web.py): deterministic URLs
-    synthesized per doc_id (scheme/host/path-depth/query-params all
-    closed-form in the id), parsed by the JVM ``parse_url`` expression —
-    map-only, codegen, no Python. The oracle never parses anything: it
-    recomputes every feature from the same id arithmetic, so a parse_url
-    semantics drift (host casing, empty-query handling, path splitting)
-    breaks the hash."""
-    from bid_evaluation_spark.operators.web import with_url_features
-
-    d = F.col("doc_id")
-    url = F.concat(
-        F.when(d % 2 == 0, F.lit("https")).otherwise(F.lit("http")),
-        F.lit("://"),
-        F.when(d % 5 == 0, F.lit("cdn.")).otherwise(F.lit("www.")),
-        F.lit("Site"), (d % 20).cast("string"),
-        F.when(d % 3 == 0, F.lit(".org")).otherwise(F.lit(".com")),
-        F.lit("/"), F.repeat(F.lit("p/"), (d % 4).cast("int")),
-        F.when(d % 3 == 0, F.lit(""))
-         .when(d % 3 == 1, F.lit("?a=1"))
-         .otherwise(F.lit("?a=1&b=2")))
-    df = _t(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
-    res = with_url_features(df)
-    return res.select("doc_id", "url_host", "url_domain",
-                      F.col("url_path_depth").cast("long")
-                      .alias("url_path_depth"),
-                      F.col("url_n_params").cast("long")
-                      .alias("url_n_params"), "url_is_https")
-
-
-_SQL_WEB_URL_FEATURES_DOCUMENTS = """
-SELECT doc_id,
-  (CASE WHEN doc_id % 5 = 0 THEN 'cdn.' ELSE 'www.' END)
-    || 'site' || CAST(doc_id % 20 AS VARCHAR)
-    || (CASE WHEN doc_id % 3 = 0 THEN '.org' ELSE '.com' END) AS url_host,
-  'site' || CAST(doc_id % 20 AS VARCHAR)
-    || (CASE WHEN doc_id % 3 = 0 THEN '.org' ELSE '.com' END) AS url_domain,
-  CAST(doc_id % 4 AS BIGINT) AS url_path_depth,
-  CAST(doc_id % 3 AS BIGINT) AS url_n_params,
-  doc_id % 2 = 0 AS url_is_https
-FROM documents
-"""
-
-
 def _q_retrieval_rrf_hybrid_documents(spark, sf_dir):
     """Hybrid retrieval via Reciprocal Rank Fusion (retrieval.py rrf_fuse,
     Cormack et al. SIGIR 2009): lexical BM25 top-100 for
@@ -4889,50 +4460,6 @@ SELECT doc_id,
   CAST(2 AS BIGINT) AS n_ccn_candidates,
   CAST(1 AS BIGINT) AS n_ccn_valid
 FROM lu
-"""
-
-
-def _q_web_canonical_url_documents(spark, sf_dir):
-    """URL canonicalization (operators/web.py canonical_url): synthesized
-    URLs exercise every normalization branch — case noise, default vs
-    non-default ports, trailing slashes, fragments, tracking params,
-    argument order. The oracle never parses a URL: it recomputes the
-    canonical string from the same doc_id arithmetic, so any parse_url or
-    filtering drift breaks the hash."""
-    from bid_evaluation_spark.operators.web import canonical_url
-
-    d = F.col("doc_id")
-    url = F.concat(
-        F.when(d % 2 == 0, F.lit("https")).otherwise(F.lit("http")),
-        F.lit("://"),
-        F.when(d % 3 == 0, F.lit("WWW.Site")).otherwise(F.lit("www.site")),
-        (d % 20).cast("string"),
-        F.when(d % 3 == 0, F.lit(".COM")).otherwise(F.lit(".com")),
-        F.when(d % 7 == 0, F.lit(":443")).otherwise(F.lit("")),
-        F.lit("/"), F.repeat(F.lit("p/"), (d % 4).cast("int")),
-        F.when(d % 5 == 0, F.lit(""))
-         .when(d % 5 == 1, F.lit("?utm_source=x"))
-         .when(d % 5 == 2, F.lit("?b=2&a=1"))
-         .when(d % 5 == 3, F.lit("?b=2&utm_campaign=y&a=1"))
-         .otherwise(F.lit("?a=1")),
-        F.when(d % 2 == 0, F.lit("#sec")).otherwise(F.lit("")))
-    df = _t(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
-    return df.select("doc_id", canonical_url(F.col("url"))
-                     .alias("canonical_url"))
-
-
-_SQL_WEB_CANONICAL_URL_DOCUMENTS = """
-SELECT doc_id,
-  (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END)
-  || '://www.site' || CAST(doc_id % 20 AS VARCHAR) || '.com'
-  || (CASE WHEN doc_id % 7 = 0 AND doc_id % 2 = 1 THEN ':443' ELSE '' END)
-  || (CASE WHEN doc_id % 4 = 0 THEN ''
-           ELSE '/' || rtrim(repeat('p/', CAST(doc_id % 4 AS INT)), '/')
-      END)
-  || (CASE WHEN doc_id % 5 IN (2, 3) THEN '?a=1&b=2'
-           WHEN doc_id % 5 = 4 THEN '?a=1'
-           ELSE '' END) AS canonical_url
-FROM documents
 """
 
 
@@ -5856,129 +5383,6 @@ SELECT strftime(t.bs, '{{fmt}}') AS bucket_start,
 FROM tot t JOIN (SELECT bs, sum(term) AS psi FROM terms GROUP BY bs) s
   ON s.bs = t.bs
 """.replace("{fmt}", _TS_FMT_DUCK)
-
-
-def _q_pipe_curation_funnel_documents(spark, sf_dir):
-    """The composed curation funnel as ONE oracled query: synthesized
-    crawl URLs → canonical-URL dedup (keep-min) → span-duplication
-    filter (dup_ratio ≤ 0.6) → bigram-LM perplexity on the survivors
-    (trained on their even-id half). Each stage is an individually
-    oracled operator; this query certifies the COMPOSITION end-to-end —
-    the example_llm_curation.py pipeline under the correctness gate."""
-    from bid_evaluation_spark.operators.cache import track_cached
-    from bid_evaluation_spark.operators.lm import perplexity, train_bigram_lm
-    from bid_evaluation_spark.operators.spans import duplicated_span_stats
-    from bid_evaluation_spark.operators.web import url_dedup
-
-    d = F.col("doc_id")
-    url = F.concat(F.lit("https://www.site"), (d % 25).cast("string"),
-                   F.lit(".com/page/"), (d % 50).cast("string"),
-                   F.when(d % 2 == 0, F.lit("?utm_source=feed"))
-                    .otherwise(F.lit("")))
-    docs = _t(spark, sf_dir, "documents").withColumn("url", url)
-    # r13 opt: kept_urls feeds TWO consumers inside the survivors
-    # subtree (span stats + the join-back) — unpersisted, the url-dedup
-    # groupBy+join ran twice per materialization
-    kept_urls = url_dedup(docs).select("doc_id", "text").persist()
-
-    stats = duplicated_span_stats(kept_urls, span=10, stride=5)
-    # r12 opt: survivors feeds FOUR consumers (LM unigram + bigram
-    # training, perplexity scoring, the final projection) — unpersisted,
-    # the url-dedup + span-stats subtree re-ran once per consumer
-    survivors = (kept_urls.join(
-        stats.filter(F.col("dup_ratio") <= 0.6)
-        .select("doc_id", "dup_ratio"), "doc_id")).persist()
-
-    uni, big = train_bigram_lm(survivors.filter(d % 2 == 0))
-    scored = perplexity(survivors, uni, big)
-    return track_cached(
-        survivors.select("doc_id", "dup_ratio")
-        .join(scored.select("doc_id", "ppl"), "doc_id")
-        .select("doc_id",
-                (_r4("dup_ratio") + F.lit(0.0)).alias("dup_ratio"),
-                (_r4("ppl") + F.lit(0.0)).alias("ppl")),
-        [kept_urls, survivors])
-
-
-_SQL_PIPE_CURATION_FUNNEL_DOCUMENTS = """
-WITH canon AS (
-  SELECT doc_id, text,
-    'https://www.site' || CAST(doc_id % 25 AS VARCHAR) || '.com/page/'
-      || CAST(doc_id % 50 AS VARCHAR) AS curl
-  FROM documents
-),
-kept AS (
-  SELECT c.doc_id, c.text
-  FROM canon c
-  JOIN (SELECT curl, min(doc_id) AS keep_id FROM canon GROUP BY curl) k
-    ON c.curl = k.curl AND c.doc_id = k.keep_id
-),
-toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM kept
-),
-occ AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-    CAST(('0x' || substr(md5(array_to_string(t[i:i+9], ' ') || 'span'),
-                         1, 15)) AS BIGINT) AS h,
-    doc_id * 1073741824 + CAST(i AS BIGINT) AS key
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 9, 5)) AS i
-        FROM toks WHERE len(t) >= 10)
-),
-firsts AS (SELECT h, min(key) AS first FROM occ GROUP BY h),
-spanstats AS (
-  SELECT o.doc_id,
-    CAST(sum(CAST(o.key > f.first AS BIGINT)) AS DOUBLE)
-      / CAST(count(*) AS DOUBLE) AS dup_ratio
-  FROM occ o JOIN firsts f USING (h)
-  GROUP BY o.doc_id
-),
-surv AS (
-  SELECT k.doc_id, k.text, COALESCE(s.dup_ratio, 0.0) AS dup_ratio
-  FROM kept k LEFT JOIN spanstats s USING (doc_id)
-  WHERE COALESCE(s.dup_ratio, 0.0) <= 0.6
-),
-stoks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM surv
-),
-train_pairs AS (
-  SELECT t[i] AS w1, t[i + 1] AS w2
-  FROM (SELECT t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM stoks WHERE doc_id % 2 = 0)
-),
-uni AS (
-  SELECT w1, COUNT(*) AS c1
-  FROM (SELECT unnest(t) AS w1 FROM stoks WHERE doc_id % 2 = 0)
-  GROUP BY w1
-),
-big AS (SELECT w1, w2, COUNT(*) AS c2 FROM train_pairs GROUP BY w1, w2),
-v AS (SELECT COUNT(*) AS vocab FROM uni),
-score_pairs AS (
-  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM stoks)
-),
-lp AS (
-  SELECT p.doc_id,
-    ln((COALESCE(big.c2, 0) + 0.5)
-       / (COALESCE(uni.c1, 0) + 0.5 * (SELECT vocab FROM v))) AS lp
-  FROM score_pairs p
-  LEFT JOIN big ON p.w1 = big.w1 AND p.w2 = big.w2
-  LEFT JOIN uni ON p.w1 = uni.w1
-),
-per_doc AS (
-  SELECT doc_id, AVG(lp) AS avg_logprob FROM lp GROUP BY doc_id
-)
-SELECT s.doc_id,
-  round(s.dup_ratio * 10000.0) / 10000.0 + 0.0 AS dup_ratio,
-  round(exp(-p.avg_logprob) * 10000.0) / 10000.0 + 0.0 AS ppl
-FROM surv s LEFT JOIN per_doc p USING (doc_id)
-"""
 
 
 def _q_analytics_did_events(spark, sf_dir):
@@ -13838,18 +13242,6 @@ _QUERIES: dict = {
                                       _SQL_PIPE_PACK_SEQUENCES_DOCUMENTS),
     "pipe_end_to_end_documents": (_q_pipe_end_to_end_documents,
                                   _SQL_PIPE_END_TO_END_DOCUMENTS),
-    "html_text_documents": (_q_html_text_documents,
-                            _SQL_HTML_TEXT_DOCUMENTS),
-    "robots_filter_documents": (_q_robots_filter_documents,
-                                _SQL_ROBOTS_FILTER_DOCUMENTS),
-    "charset_decode_documents": (_q_charset_decode_documents,
-                                 _SQL_CHARSET_DECODE_DOCUMENTS),
-    "warc_ingest_documents": (_q_warc_ingest_documents,
-                              _SQL_WARC_INGEST_DOCUMENTS),
-    "web_linkgraph_documents": (_q_web_linkgraph_documents,
-                                _SQL_WEB_LINKGRAPH_DOCUMENTS),
-    "sitemap_urls_documents": (_q_sitemap_urls_documents,
-                               _SQL_SITEMAP_URLS_DOCUMENTS),
     "quality_repetition_documents": (_q_quality_repetition_documents,
                                      _SQL_QUALITY_REPETITION_DOCUMENTS),
     "quality_gopher_documents": (_q_quality_gopher_documents,
@@ -13876,8 +13268,6 @@ _QUERIES: dict = {
     "analytics_cohens_kappa_documents": (
         _q_analytics_cohens_kappa_documents,
         _SQL_ANALYTICS_COHENS_KAPPA_DOCUMENTS),
-    "web_url_features_documents": (_q_web_url_features_documents,
-                                   _SQL_WEB_URL_FEATURES_DOCUMENTS),
     "lm_perplexity_documents": (_q_lm_perplexity_documents,
                                 _SQL_LM_PERPLEXITY_DOCUMENTS),
     "dsir_weights_documents": (_q_dsir_weights_documents,
@@ -13901,8 +13291,6 @@ _QUERIES: dict = {
         _SQL_DEDUP_INCREMENTAL_MINHASH_DOCUMENTS),
     "privacy_ccn_luhn_documents": (_q_privacy_ccn_luhn_documents,
                                    _SQL_PRIVACY_CCN_LUHN_DOCUMENTS),
-    "web_canonical_url_documents": (_q_web_canonical_url_documents,
-                                    _SQL_WEB_CANONICAL_URL_DOCUMENTS),
     "analytics_krippendorff_documents": (
         _q_analytics_krippendorff_documents,
         _SQL_ANALYTICS_KRIPPENDORFF_DOCUMENTS),
@@ -13941,8 +13329,6 @@ _QUERIES: dict = {
                                    _SQL_ANALYTICS_POSTSTRAT_ORDERS),
     "metrics_psi_timeline_events": (_q_metrics_psi_timeline_events,
                                     _SQL_METRICS_PSI_TIMELINE_EVENTS),
-    "pipe_curation_funnel_documents": (_q_pipe_curation_funnel_documents,
-                                       _SQL_PIPE_CURATION_FUNNEL_DOCUMENTS),
     "analytics_did_events": (_q_analytics_did_events,
                              _SQL_ANALYTICS_DID_EVENTS),
     "ts_transitions_events": (_q_ts_transitions_events,
