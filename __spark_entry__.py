@@ -594,67 +594,6 @@ FROM events GROUP BY event_type
 """
 
 
-def _q_a7_salted_group_totals_events(spark, sf_dir):
-    """Skew-resilient two-phase salted aggregation — must be result-identical
-    to the plain groupBy (same oracle SQL as ``a7_group_totals_events``)."""
-    from bid_evaluation_spark.operators.skew import salted_agg
-
-    df = _t(spark, sf_dir, "events")
-    res = salted_agg(
-        df, ["event_type"],
-        {"n_events": ("count", "value"), "sum_value": ("sum", "value")},
-        salt_buckets=16,
-    )
-    return res.select(
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.round("sum_value", 4).alias("sum_value"),
-    )
-
-
-def _q_j_salted_join_orders(spark, sf_dir):
-    """Skew-rescued salted equi-join (operators/skew.py salted_join, new
-    r6): orders joined to a per-custkey-band dimension through the
-    salt-exploded build side — must be row-identical to the plain inner
-    join, which IS the oracle SQL. The salt column never escapes (dropped
-    before return), so the result is deterministic despite the rand()
-    salt draw. Grouped to a bounded output for a stable hash."""
-    from bid_evaluation_spark.operators.skew import salted_join
-
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", (F.col("o_custkey") % 23).alias("band"),
-        F.col("o_totalprice").cast("double").alias("price"))
-    dim = _t(spark, sf_dir, "customer").select(
-        (F.col("c_custkey") % 23).alias("band"),
-        F.col("c_acctbal").cast("double").alias("bal")
-    ).groupBy("band").agg(F.round(F.avg("bal"), 4).alias("band_bal"))
-    joined = salted_join(orders, dim, ["band"], salt_buckets=8)
-    return (joined.groupBy("band")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum("price"), 2).alias("sum_price"),
-                 F.round(F.max("band_bal"), 4).alias("band_bal"))
-            .select("band", "n_orders", "sum_price", "band_bal"))
-
-
-_SQL_J_SALTED_JOIN_ORDERS = """
-WITH dim AS (
-  SELECT c_custkey % 23 AS band,
-         round(avg(CAST(c_acctbal AS DOUBLE)) * 10000.0) / 10000.0
-           AS band_bal
-  FROM customer GROUP BY c_custkey % 23
-),
-j AS (
-  SELECT o.o_orderkey, o.o_custkey % 23 AS band,
-         CAST(o.o_totalprice AS DOUBLE) AS price, d.band_bal
-  FROM orders o JOIN dim d ON o.o_custkey % 23 = d.band
-)
-SELECT band, CAST(count(*) AS BIGINT) AS n_orders,
-       round(sum(price) * 100.0) / 100.0 AS sum_price,
-       round(max(band_bal) * 10000.0) / 10000.0 AS band_bal
-FROM j GROUP BY band
-"""
-
-
 def _q_j3_zscore_orders(spark, sf_dir):
     from bid_evaluation_spark.plans.stats import compute_stats
 
@@ -2262,9 +2201,6 @@ FROM ranked WHERE rnk <= 5
 # Streaming-equivalent window aggregations over events
 # ---------------------------------------------------------------------------
 
-_TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-_TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
-
 
 def _q_f6_custom_udf_supplier(spark, sf_dir):
     """F6 CustomCriterion: user ``(values, stats) -> scores`` pandas function
@@ -2376,79 +2312,6 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 ORDER BY event_type
-"""
-
-
-def _q_asof_click_purchase_events(spark, sf_dir):
-    """As-of join: every click event enriched with the user's most recent
-    purchase at-or-before it (union+window — one shuffle on user_id; DuckDB
-    expresses the identical operator as a native ASOF LEFT JOIN)."""
-    from bid_evaluation_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value")
-    res = asof_join(clicks, purchases, on="ts", by="user_id",
-                    right_cols=["value"])
-    return res.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK + ".SSSSSS").alias("ts"),
-        F.date_format("ts_right", _TS_FMT_SPARK + ".SSSSSS").alias("purchase_ts"),
-        _r4("value_right").alias("purchase_value"),
-    )
-
-
-_SQL_ASOF_CLICK_PURCHASE_EVENTS = """
-SELECT l.event_id, l.user_id,
-       strftime(l.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-       strftime(r.ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-       round((r.value) * 10000.0) / 10000.0 AS purchase_value
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') l
-ASOF LEFT JOIN
-     (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
-  ON l.user_id = r.user_id AND l.ts >= r.ts
-"""
-
-
-def _q_asof_null_payload_events(spark, sf_dir):
-    """As-of join where the matched right row can carry a NULL payload field:
-    purchase values divisible by 3 cents are nulled out, so a correct as-of
-    must attach (NULL value, that row's ts) — a per-column
-    ``last(ignorenulls)`` fill would smuggle in an OLDER purchase's value.
-    Exercises the single-struct payload carry in ``operators/asof.py``."""
-    from bid_evaluation_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts",
-        F.when(F.round(F.col("value") * 100) % 3 == 0, F.lit(None))
-         .otherwise(F.col("value")).alias("value"),
-    )
-    res = asof_join(clicks, purchases, on="ts", by="user_id",
-                    right_cols=["value"])
-    return res.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK + ".SSSSSS").alias("ts"),
-        F.date_format("ts_right", _TS_FMT_SPARK + ".SSSSSS").alias("purchase_ts"),
-        _r4("value_right").alias("purchase_value"),
-    )
-
-
-_SQL_ASOF_NULL_PAYLOAD_EVENTS = """
-SELECT l.event_id, l.user_id,
-       strftime(l.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-       strftime(r.ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-       round((r.value) * 10000.0) / 10000.0 AS purchase_value
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') l
-ASOF LEFT JOIN
-     (SELECT user_id, ts,
-             CASE WHEN round(value * 100) % 3 = 0 THEN NULL ELSE value END AS value
-      FROM events WHERE event_type = 'purchase') r
-  ON l.user_id = r.user_id AND l.ts >= r.ts
 """
 
 
@@ -3165,136 +3028,6 @@ LEFT JOIN (SELECT doc_id, count(*) AS cnt, avg(nll) AS mean_nll
 """
 
 
-def _q_profile_columns_documents(spark, sf_dir):
-    """One-pass column profiling (nulls, cardinalities, top-3 frequent
-    values with deterministic ties), flattened one row per (column, rank)
-    for the hash compare. The oracle rebuilds the identical unpivot +
-    frequency ranking in SQL."""
-    from bid_evaluation_spark.operators.profile import column_profile
-
-    df = _t(spark, sf_dir, "documents")
-    p = column_profile(df, ["lang", "source", "n_chars"], top_k=3)
-    return p.select(
-        "column", "n_rows", "n_null", "n_distinct",
-        F.posexplode("top_values").alias("pos", "tv"),
-    ).select(
-        "column", "n_rows", "n_null", "n_distinct",
-        (F.col("pos") + 1).cast("long").alias("r"),
-        F.col("tv.value").alias("value"),
-        F.col("tv.n").cast("long").alias("n_top"),
-    )
-
-
-_SQL_PROFILE_COLUMNS_DOCUMENTS = """
-WITH long AS (
-  SELECT 'lang' AS col, CAST(lang AS VARCHAR) AS value FROM documents
-  UNION ALL SELECT 'source', CAST(source AS VARCHAR) FROM documents
-  UNION ALL SELECT 'n_chars', CAST(n_chars AS VARCHAR) FROM documents
-),
-freq AS (SELECT col, value, count(*) AS n FROM long GROUP BY col, value),
-tall AS (
-  SELECT col, sum(n) AS n_rows,
-         coalesce(sum(n) FILTER (WHERE value IS NULL), 0) AS n_null,
-         count(*) FILTER (WHERE value IS NOT NULL) AS n_distinct
-  FROM freq GROUP BY col
-),
-top AS (
-  SELECT col, value, n,
-         row_number() OVER (PARTITION BY col ORDER BY n DESC, value ASC) AS r
-  FROM freq WHERE value IS NOT NULL
-)
-SELECT t.col AS column, CAST(t.n_rows AS BIGINT) AS n_rows,
-       CAST(t.n_null AS BIGINT) AS n_null,
-       CAST(t.n_distinct AS BIGINT) AS n_distinct,
-       CAST(p.r AS BIGINT) AS r, p.value, CAST(p.n AS BIGINT) AS n_top
-FROM tall t JOIN top p USING (col)
-WHERE p.r <= 3
-"""
-
-
-def _q_profile_validate_documents(spark, sf_dir):
-    """Declarative data-quality rules (operators/profile.py validate_rules,
-    the dbt-test shape): five rule kinds over documents in ONE fused
-    aggregate; the oracle recomputes each rule as a scalar SELECT."""
-    from bid_evaluation_spark.operators.profile import validate_rules
-
-    df = _t(spark, sf_dir, "documents")
-    return validate_rules(df, [
-        {"kind": "not_null", "column": "text"},
-        {"kind": "unique", "column": "doc_id"},
-        {"kind": "accepted_values", "column": "lang",
-         "values": ["en", "de", "es", "fr", "zh"]},
-        {"kind": "range", "column": "n_chars", "min": 1, "max": 100000},
-        {"kind": "regex", "column": "lang", "pattern": "[a-z]{2}"},
-    ])
-
-
-_SQL_PROFILE_VALIDATE_DOCUMENTS = """
-SELECT 'not_null_text' AS rule, 'not_null' AS kind, 'text' AS "column",
-       CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_violations,
-       CAST(count(*) AS BIGINT) AS n_checked
-FROM documents
-UNION ALL
-SELECT 'unique_doc_id', 'unique', 'doc_id',
-       CAST(count(doc_id) - count(DISTINCT doc_id) AS BIGINT),
-       CAST(count(doc_id) AS BIGINT)
-FROM documents
-UNION ALL
-SELECT 'accepted_values_lang', 'accepted_values', 'lang',
-       CAST(sum(CASE WHEN lang IS NOT NULL
-                      AND lang NOT IN ('en','de','es','fr','zh')
-                     THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(lang) AS BIGINT)
-FROM documents
-UNION ALL
-SELECT 'range_n_chars', 'range', 'n_chars',
-       CAST(sum(CASE WHEN n_chars IS NOT NULL
-                      AND (n_chars < 1 OR n_chars > 100000)
-                     THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(n_chars) AS BIGINT)
-FROM documents
-UNION ALL
-SELECT 'regex_lang', 'regex', 'lang',
-       CAST(sum(CASE WHEN lang IS NOT NULL
-                      AND NOT regexp_full_match(lang, '[a-z]{2}')
-                     THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(lang) AS BIGINT)
-FROM documents
-"""
-
-
-def _q_profile_histogram_events(spark, sf_dir):
-    """Exact equi-width histogram of the event value column (8 buckets,
-    empty buckets materialized, top edge inclusive). The oracle recomputes
-    the identical bucket arithmetic in SQL."""
-    from bid_evaluation_spark.operators.profile import numeric_histogram
-
-    df = _t(spark, sf_dir, "events")
-    h = numeric_histogram(df, ["value"], bins=8)
-    return h.select("column", "bucket", _r4("lo").alias("lo"),
-                    _r4("hi").alias("hi"), F.col("n").cast("long").alias("n"))
-
-
-_SQL_PROFILE_HISTOGRAM_EVENTS = """
-WITH b AS (
-  SELECT min(value) AS lo, max(value) AS hi, (max(value) - min(value)) / 8 AS w
-  FROM events
-),
-bk AS (SELECT u.k AS bucket FROM (SELECT 1) one, UNNEST(generate_series(0, 7)) AS u(k)),
-cnt AS (
-  SELECT CAST(CASE WHEN b.w = 0 THEN 0
-              ELSE least(floor((e.value - b.lo) / b.w), 7) END AS INTEGER) AS bucket,
-         count(*) AS n
-  FROM events e, b WHERE e.value IS NOT NULL GROUP BY 1
-)
-SELECT 'value' AS column, CAST(bk.bucket AS INTEGER) AS bucket,
-       round((b.lo + bk.bucket * b.w) * 10000.0) / 10000.0 AS lo,
-       round((b.lo + (bk.bucket + 1) * b.w) * 10000.0) / 10000.0 AS hi,
-       CAST(coalesce(cnt.n, 0) AS BIGINT) AS n
-FROM bk CROSS JOIN b LEFT JOIN cnt USING (bucket)
-"""
-
-
 def _q_pipe_chunk_documents(spark, sf_dir):
     """Overlapping token-window chunking (32-token windows, 8-token overlap):
     map-side posexplode, no shuffle; every doc yields >= 1 chunk."""
@@ -3814,118 +3547,6 @@ SELECT doc_id,
   CAST(len(regexp_extract_all(text,
     '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS BIGINT) AS n_phone
 FROM seeded
-"""
-
-
-def _q_features_robust_z_events(spark, sf_dir):
-    """Median/MAD robust z-scores per event type (operators/features.py
-    robust_zscores): two grouped percentile passes broadcast back, map-only
-    scoring. The oracle mirrors the identical quantile and
-    (x-med)/(1.4826·mad) arithmetic (double-cast literal)."""
-    from bid_evaluation_spark.operators.features import robust_zscores
-
-    df = _t(spark, sf_dir, "events")
-    res = robust_zscores(df, "value", group_col="event_type")
-    return res.select("event_id", "event_type",
-                      _r4("robust_z").alias("robust_z"))
-
-
-_SQL_FEATURES_ROBUST_Z_EVENTS = """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS m FROM events GROUP BY event_type
-),
-mad AS (
-  SELECT e.event_type, quantile_cont(abs(e.value - med.m), 0.5) AS d
-  FROM events e JOIN med USING (event_type) GROUP BY e.event_type
-)
-SELECT e.event_id, e.event_type,
-       round(((e.value - med.m) / (CAST(1.4826 AS DOUBLE) * mad.d))
-             * 10000.0) / 10000.0 AS robust_z
-FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)
-"""
-
-
-def _q_features_sequences_events(spark, sf_dir):
-    """Per-user ordered event-type sequences (operators/features.py
-    event_sequences), capped at 50 — behavior-sequence training-data
-    assembly. Deterministic via struct array_sort (ts, event_id tiebreak);
-    the oracle is string_agg with the identical ORDER BY."""
-    from bid_evaluation_spark.operators.features import event_sequences
-
-    df = _t(spark, sf_dir, "events")
-    return event_sequences(df, max_len=50).orderBy("user_id")
-
-
-_SQL_FEATURES_SEQUENCES_EVENTS = """
-WITH ordered AS (
-  SELECT user_id, event_type,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS rn,
-         count(*) OVER (PARTITION BY user_id) AS n
-  FROM events
-)
-SELECT user_id, CAST(max(n) AS BIGINT) AS n_events,
-       string_agg(CASE WHEN rn <= 50 THEN event_type END, ','
-                  ORDER BY rn) AS seq
-FROM ordered GROUP BY user_id ORDER BY user_id
-"""
-
-
-def _q_features_rolling_events(spark, sf_dir):
-    """Per-user time-series features + forward label over the event log:
-    lag/delta/inter-arrival, trailing-5 rolling stats, next-event value and
-    gap. All windows share one (user) partitioning + (ts, event_id)
-    ordering — a single shuffle, deterministic under timestamp ties."""
-    from bid_evaluation_spark.operators.features import (
-        forward_labels, rolling_features)
-
-    df = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
-    res = forward_labels(rolling_features(df, windows=(5,)))
-    return res.select(
-        "event_id", "user_id", "row_index",
-        _r4("lag1_value").alias("lag1_value"),
-        _r4("delta_value").alias("delta_value"),
-        _r4("secs_since_prev").alias("secs_since_prev"),
-        _r4("roll5_mean").alias("roll5_mean"),
-        _r4("roll5_std").alias("roll5_std"),
-        _r4("roll5_min").alias("roll5_min"),
-        _r4("roll5_max").alias("roll5_max"),
-        _r4("next1_value").alias("next1_value"),
-        _r4("secs_to_next1").alias("secs_to_next1"),
-    )
-
-
-_SQL_FEATURES_ROLLING_EVENTS = """
-WITH w AS (
-  SELECT event_id, user_id,
-    CAST(row_number() OVER win - 1 AS BIGINT) AS row_index,
-    lag(value) OVER win AS lag1_value,
-    value - lag(value) OVER win AS delta_value,
-    CAST(epoch_us(ts) - epoch_us(lag(ts) OVER win) AS DOUBLE) / 1000000.0
-      AS secs_since_prev,
-    avg(value) OVER win5 AS roll5_mean,
-    stddev_samp(value) OVER win5 AS roll5_std,
-    min(value) OVER win5 AS roll5_min,
-    max(value) OVER win5 AS roll5_max,
-    lead(value) OVER win AS next1_value,
-    CAST(epoch_us(lead(ts) OVER win) - epoch_us(ts) AS DOUBLE) / 1000000.0
-      AS secs_to_next1
-  FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id),
-         win5 AS (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-)
-SELECT event_id, user_id, row_index,
-  round(lag1_value * 10000.0) / 10000.0 AS lag1_value,
-  round(delta_value * 10000.0) / 10000.0 AS delta_value,
-  round(secs_since_prev * 10000.0) / 10000.0 AS secs_since_prev,
-  round(roll5_mean * 10000.0) / 10000.0 AS roll5_mean,
-  round(roll5_std * 10000.0) / 10000.0 AS roll5_std,
-  round(roll5_min * 10000.0) / 10000.0 AS roll5_min,
-  round(roll5_max * 10000.0) / 10000.0 AS roll5_max,
-  round(next1_value * 10000.0) / 10000.0 AS next1_value,
-  round(secs_to_next1 * 10000.0) / 10000.0 AS secs_to_next1
-FROM w
 """
 
 
@@ -4463,195 +4084,6 @@ FROM lu
 """
 
 
-def _q_analytics_krippendorff_documents(spark, sf_dir):
-    """Krippendorff's alpha (operators/analytics.py): 5-rating units
-    (doc_id mod 100) over the lang label with injected missing ratings
-    (doc_id mod 17 → null, excluded) — the multi-rater, missing-tolerant
-    agreement readout. Integer coincidence identities until the final
-    division; the oracle replays counts → per-unit pairs → alpha."""
-    from bid_evaluation_spark.operators.analytics import krippendorff_alpha
-
-    docs = _t(spark, sf_dir, "documents")
-    rated = docs.select(
-        (F.col("doc_id") % 100).alias("unit_id"),
-        F.when(F.col("doc_id") % 17 == 0, F.lit(None).cast("string"))
-         .otherwise(F.col("lang")).alias("value"))
-    res = krippendorff_alpha(rated)
-    return res.select((_r4("alpha") + F.lit(0.0)).alias("alpha"),
-                      "n_ratings", "n_units")
-
-
-_SQL_ANALYTICS_KRIPPENDORFF_DOCUMENTS = """
-WITH rated AS (
-  SELECT doc_id % 100 AS u,
-         CASE WHEN doc_id % 17 = 0 THEN NULL ELSE lang END AS v
-  FROM documents
-),
-counts AS (
-  SELECT u, v, count(*) AS r FROM rated WHERE v IS NOT NULL GROUP BY u, v
-),
-per_unit AS (
-  SELECT u, sum(r) AS m, sum(r * (r - 1)) AS same
-  FROM counts GROUP BY u HAVING sum(r) >= 2
-),
-head AS (
-  SELECT sum(m) AS n, count(*) AS units,
-         sum(CAST(m * (m - 1) - same AS DOUBLE) / CAST(m - 1 AS DOUBLE))
-           AS do_num
-  FROM per_unit
-),
-nc AS (
-  SELECT c.v, sum(c.r) AS nc
-  FROM counts c JOIN per_unit p USING (u) GROUP BY c.v
-),
-nc2 AS (SELECT sum(nc * nc) AS s FROM nc)
-SELECT
-  round((1.0 - (h.n - 1) * h.do_num
-         / (CAST(h.n AS DOUBLE) * h.n - CAST(nc2.s AS DOUBLE)))
-        * 10000.0) / 10000.0 + 0.0 AS alpha,
-  CAST(h.n AS BIGINT) AS n_ratings,
-  CAST(h.units AS BIGINT) AS n_units
-FROM head h, nc2
-"""
-
-
-def _q_analytics_mwu_orders(spark, sf_dir):
-    """Mann-Whitney U / rank-sum (operators/analytics.py): nonparametric
-    A/B test on order value, variant = orderkey parity, integer-dollar
-    quantization (digits=0) so the ONE cumulative-rank window is bounded
-    by the distinct-price count. The oracle replays the per-value rank
-    table, tie correction, and z arithmetic operation-for-operation."""
-    from bid_evaluation_spark.operators.analytics import mann_whitney_u
-
-    orders = _t(spark, sf_dir, "orders").withColumn(
-        "variant", (F.col("o_orderkey") % 2).cast("int"))
-    res = mann_whitney_u(orders, "variant", "o_totalprice",
-                         control=0, treatment=1, digits=0)
-    return res.select((_r4("u") + F.lit(0.0)).alias("u"),
-                      (_r4("z") + F.lit(0.0)).alias("z"),
-                      "n_control", "n_treatment")
-
-
-_SQL_ANALYTICS_MWU_ORDERS = """
-WITH rws AS (
-  SELECT round(o_totalprice * 1.0) / 1.0 AS v,
-         CAST(o_orderkey % 2 = 1 AS DOUBLE) AS t
-  FROM orders
-),
-per_value AS (
-  SELECT v, CAST(count(*) AS DOUBLE) AS n, sum(t) AS nt
-  FROM rws GROUP BY v
-),
-ranked AS (
-  SELECT *, COALESCE(sum(n) OVER (ORDER BY v
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0) AS bef
-  FROM per_value
-),
-agg AS (
-  SELECT sum(nt * (bef + (n + 1.0) / 2.0)) AS rt,
-         sum(nt) AS nb, sum(n - nt) AS na,
-         sum(n * n * n - n) AS ties
-  FROM ranked
-)
-SELECT
-  round((rt - nb * (nb + 1.0) / 2.0) * 10000.0) / 10000.0 + 0.0 AS u,
-  round(((rt - nb * (nb + 1.0) / 2.0) - na * nb / 2.0)
-        / sqrt(na * nb / 12.0
-               * ((na + nb + 1.0) - ties / ((na + nb) * (na + nb - 1.0))))
-        * 10000.0) / 10000.0 + 0.0 AS z,
-  CAST(na AS BIGINT) AS n_control,
-  CAST(nb AS BIGINT) AS n_treatment
-FROM agg
-"""
-
-
-def _q_analytics_bh_documents(spark, sf_dir):
-    """Benjamini-Hochberg step-up FDR adjustment (analytics.py bh_adjust)
-    over a 20-test family with deterministic synthetic p-values — the
-    oracle replays rank + reversed running-min + cap identically."""
-    from bid_evaluation_spark.operators.analytics import bh_adjust
-
-    d = F.col("doc_id")
-    fam = (_t(spark, sf_dir, "documents").filter(d < 20)
-           .select(F.concat(F.lit("m"), d.cast("string")).alias("metric"),
-                   (((d * 37) % 100) / F.lit(100.0)).alias("p_value")))
-    res = bh_adjust(fam, q=0.1)
-    return res.select("metric",
-                      (_r4("p_value") + F.lit(0.0)).alias("p_value"),
-                      F.col("p_rank").cast("long").alias("p_rank"),
-                      (_r4("p_adj") + F.lit(0.0)).alias("p_adj"),
-                      "reject")
-
-
-_SQL_ANALYTICS_BH_DOCUMENTS = """
-WITH fam AS (
-  SELECT 'm' || CAST(doc_id AS VARCHAR) AS metric,
-         ((doc_id * 37) % 100) / 100.0 AS p_value
-  FROM documents WHERE doc_id < 20
-),
-ranked AS (
-  SELECT *, row_number() OVER (ORDER BY p_value ASC, metric ASC) AS p_rank
-  FROM fam
-),
-adj AS (
-  SELECT *, least(1.0, min(p_value * 20.0 / p_rank) OVER (
-    ORDER BY p_rank DESC
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS p_adj
-  FROM ranked
-)
-SELECT metric,
-  round(p_value * 10000.0) / 10000.0 + 0.0 AS p_value,
-  CAST(p_rank AS BIGINT) AS p_rank,
-  round(p_adj * 10000.0) / 10000.0 + 0.0 AS p_adj,
-  p_adj <= 0.1 AS reject
-FROM adj
-"""
-
-
-def _q_ts_cusum_events(spark, sf_dir):
-    """Per-user two-sided CUSUM change chart (timeseries.py cusum_by_key,
-    Page 1954): binary-exact literals (target 50, slack 2, threshold
-    100), sequential recurrence as one Arrow kernel per key, value-
-    oracled by a RECURSIVE CTE replaying ``max(0, S + (x − t − k))``
-    with identical operation order — the EWMA pattern applied to
-    change-point detection."""
-    from bid_evaluation_spark.operators.timeseries import cusum_by_key
-
-    ev = _t(spark, sf_dir, "events")
-    res = cusum_by_key(ev, "user_id", "ts", "value", "event_id",
-                       target=50.0, slack=2.0, threshold=100.0)
-    return res.select("user_id", "event_id", _r4("value").alias("value"),
-                      (_r4("cusum_pos") + F.lit(0.0)).alias("cusum_pos"),
-                      (_r4("cusum_neg") + F.lit(0.0)).alias("cusum_neg"),
-                      "alarm")
-
-
-_SQL_TS_CUSUM_EVENTS = """
-WITH RECURSIVE e AS (
-  SELECT user_id, event_id, CAST(value AS DOUBLE) AS v,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS i
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-r(user_id, i, event_id, v, sp, sn) AS (
-  SELECT user_id, i, event_id, v,
-         greatest(0.0, 0.0 + (v - 50.0 - 2.0)),
-         greatest(0.0, 0.0 + (50.0 - 2.0 - v))
-  FROM e WHERE i = 1
-  UNION ALL
-  SELECT e.user_id, e.i, e.event_id, e.v,
-         greatest(0.0, r.sp + (e.v - 50.0 - 2.0)),
-         greatest(0.0, r.sn + (50.0 - 2.0 - e.v))
-  FROM r JOIN e ON e.user_id = r.user_id AND e.i = r.i + 1
-)
-SELECT user_id, event_id, round(v * 10000.0) / 10000.0 AS value,
-  round(sp * 10000.0) / 10000.0 + 0.0 AS cusum_pos,
-  round(sn * 10000.0) / 10000.0 + 0.0 AS cusum_neg,
-  sp > 100.0 OR sn > 100.0 AS alarm
-FROM r
-"""
-
-
 def _q_emb_matryoshka_embeddings(spark, sf_dir):
     """Matryoshka truncation to 16 dims + renorm (operators/embeddings.py,
     arXiv:2205.13147): map-only projection; order-insensitive summaries
@@ -4738,296 +4170,6 @@ SELECT o_orderpriority, CAST(n_rows AS BIGINT) AS n_rows,
   CAST(base + (CASE WHEN rn <= leftover AND base < n_rows
                     THEN 1 ELSE 0 END) AS BIGINT) AS alloc
 FROM fin
-"""
-
-
-def _q_analytics_bootstrap_orders(spark, sf_dir):
-    """Poisson-bootstrap mean CI per order priority (analytics.py
-    poisson_bootstrap_ci, Chamandy et al. 2012): 20 replicates, each
-    row's replication weight = Poisson(1)-inverse of a deterministic md5
-    uniform — ALL replicates in ONE aggregation pass, no resample ever
-    materialized. The oracle replays every weight, replicate mean, and
-    the exact-element quantile rule."""
-    from bid_evaluation_spark.operators.analytics import poisson_bootstrap_ci
-
-    orders = _t(spark, sf_dir, "orders")
-    res = poisson_bootstrap_ci(orders, "o_orderpriority", "o_totalprice",
-                               n_boot=20, id_col="o_orderkey", seed="boot")
-    return res.select("o_orderpriority", "n_rows",
-                      _r4("mean").alias("mean"),
-                      _r4("ci_lo").alias("ci_lo"),
-                      _r4("ci_hi").alias("ci_hi"))
-
-
-def _poisson_case_sql(u_expr: str) -> str:
-    from bid_evaluation_spark.operators.analytics import _POISSON1_CDF
-
-    whens = " ".join(
-        f"WHEN {u_expr} < {t!r} THEN {j}"
-        for j, t in enumerate(_POISSON1_CDF))
-    return f"CASE {whens} ELSE 9 END"
-
-
-_SQL_ANALYTICS_BOOTSTRAP_ORDERS = f"""
-WITH drawn AS (
-  SELECT o_orderpriority AS grp, b.b, o_totalprice AS v,
-    CAST({_poisson_case_sql(
-        "(CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || '|' "
-        "|| CAST(b.b AS VARCHAR) || '|boot'), 1, 15)) AS BIGINT) + 0.5) "
-        "/ 1152921504606846976.0")} AS DOUBLE) AS k
-  FROM orders CROSS JOIN (SELECT unnest(generate_series(0, 19)) AS b) b
-),
-reps AS (
-  SELECT grp, b, sum(k * v) AS s, sum(k) AS w
-  FROM drawn GROUP BY grp, b
-),
-meanlist AS (
-  SELECT grp,
-    list_sort(list_filter(list(CASE WHEN w > 0 THEN s / w END),
-                          x -> x IS NOT NULL)) AS li
-  FROM reps GROUP BY grp
-),
-base AS (
-  SELECT o_orderpriority AS grp, count(*) AS n_rows,
-         avg(o_totalprice) AS mean
-  FROM orders GROUP BY o_orderpriority
-)
-SELECT b.grp AS o_orderpriority, CAST(b.n_rows AS BIGINT) AS n_rows,
-  round(b.mean * 10000.0) / 10000.0 AS mean,
-  round(m.li[CAST(floor(0.025 * (len(m.li) - 1)) AS INT) + 1]
-        * 10000.0) / 10000.0 AS ci_lo,
-  round(m.li[CAST(floor(0.975 * (len(m.li) - 1)) AS INT) + 1]
-        * 10000.0) / 10000.0 AS ci_hi
-FROM base b JOIN meanlist m USING (grp)
-"""
-
-
-def _q_analytics_conformal_orders(spark, sf_dir):
-    """Split conformal intervals (analytics.py conformal_interval): a
-    synthetic model (0.9·price + 1000) calibrated on even order keys
-    wraps odd-key predictions in distribution-free 90% intervals. The
-    k-th order statistic comes from the bounded quantized-residual table;
-    the oracle replays residuals, the ⌈(n+1)(1−α)⌉ rank, the cumulative
-    cut, and the interval projection."""
-    from bid_evaluation_spark.operators.analytics import conformal_interval
-
-    orders = _t(spark, sf_dir, "orders")
-    pred = (F.col("o_totalprice") * 0.9 + 1000.0).alias("pred")
-    cal = (orders.filter(F.col("o_orderkey") % 2 == 0)
-           .select(pred, F.col("o_totalprice").alias("actual")))
-    tgt = (orders.filter(F.col("o_orderkey") % 2 == 1)
-           .select("o_orderkey", pred))
-    res = conformal_interval(cal, tgt, alpha=0.1, digits=6)
-    return res.select("o_orderkey", _r4("pred").alias("pred"),
-                      _r4("conf_lo").alias("conf_lo"),
-                      _r4("conf_hi").alias("conf_hi"))
-
-
-_SQL_ANALYTICS_CONFORMAL_ORDERS = """
-WITH cal AS (
-  SELECT round(abs(o_totalprice - (o_totalprice * 0.9 + 1000.0))
-               * 1000000.0) / 1000000.0 AS r
-  FROM orders WHERE o_orderkey % 2 = 0
-),
-meta AS (
-  SELECT count(*) AS n,
-         CAST(ceil((count(*) + 1) * (1.0 - 0.1)) AS BIGINT) AS k
-  FROM cal
-),
-per_r AS (SELECT r, count(*) AS c FROM cal GROUP BY r),
-cum AS (
-  SELECT r, sum(c) OVER (ORDER BY r
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc
-  FROM per_r
-),
-q AS (SELECT min(r) AS qhat FROM cum, meta WHERE cc >= meta.k)
-SELECT o_orderkey,
-  round((o_totalprice * 0.9 + 1000.0) * 10000.0) / 10000.0 AS pred,
-  round(((o_totalprice * 0.9 + 1000.0) - (SELECT qhat FROM q))
-        * 10000.0) / 10000.0 AS conf_lo,
-  round(((o_totalprice * 0.9 + 1000.0) + (SELECT qhat FROM q))
-        * 10000.0) / 10000.0 AS conf_hi
-FROM orders WHERE o_orderkey % 2 = 1
-"""
-
-
-def _q_profile_corr_lineitem(spark, sf_dir):
-    """Pairwise Pearson correlation matrix (profile.py
-    correlation_matrix) over the four lineitem measures — ONE fused
-    aggregation pass of k² stable `F.corr` co-moments (the raw-moment
-    formula cancelled catastrophically on near-constant offset columns;
-    round-7 fix). The oracle is DuckDB's own corr() — both sides now
-    compute the numerically true statistic, so the gate certifies the
-    VALUE, not replayed arithmetic."""
-    from bid_evaluation_spark.operators.profile import correlation_matrix
-
-    li = _t(spark, sf_dir, "lineitem")
-    res = correlation_matrix(
-        li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-    return res.select("col_a", "col_b", _r4("r").alias("r"),
-                      F.col("n").cast("long").alias("n"))
-
-
-_SQL_PROFILE_CORR_LINEITEM = """
-WITH base AS (
-  SELECT l_quantity AS q, l_extendedprice AS e, l_discount AS d, l_tax AS t
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    AND l_discount IS NOT NULL AND l_tax IS NOT NULL
-), s AS (
-  SELECT count(*) AS n_i,
-    corr(q, e) AS r_qe, corr(q, d) AS r_qd, corr(q, t) AS r_qt,
-    corr(e, d) AS r_ed, corr(e, t) AS r_et, corr(d, t) AS r_dt,
-    var_samp(q) AS v_q, var_samp(e) AS v_e,
-    var_samp(d) AS v_d, var_samp(t) AS v_t
-  FROM base
-)
-SELECT p.col_a, p.col_b,
-  CASE WHEN p.va > 0 AND p.vb > 0
-       THEN round(p.r * 10000.0) / 10000.0 END AS r,
-  CAST(s.n_i AS BIGINT) AS n
-FROM s, LATERAL (VALUES
-  ('l_extendedprice', 'l_quantity', r_qe, v_q, v_e),
-  ('l_discount', 'l_quantity', r_qd, v_q, v_d),
-  ('l_quantity', 'l_tax', r_qt, v_q, v_t),
-  ('l_discount', 'l_extendedprice', r_ed, v_e, v_d),
-  ('l_extendedprice', 'l_tax', r_et, v_e, v_t),
-  ('l_discount', 'l_tax', r_dt, v_d, v_t)
-) AS p(col_a, col_b, r, va, vb)
-"""
-
-
-def _q_ts_seasonal_naive_events(spark, sf_dir):
-    """Seasonal-naive backtest with MASE (timeseries.py
-    seasonal_naive_backtest, Hyndman & Koehler 2006): per-user season-7
-    forecast scored by MAE / one-step-naive MAE — two lag windows + one
-    aggregate, the mandatory pre-model baseline. The oracle replays both
-    lags and the ratio."""
-    from bid_evaluation_spark.operators.timeseries import (
-        seasonal_naive_backtest)
-
-    ev = _t(spark, sf_dir, "events")
-    res = seasonal_naive_backtest(ev, "user_id", "ts", "value", season=7,
-                                  tiebreak_col="event_id")
-    return res.select("user_id", F.col("n_eval").cast("long").alias("n_eval"),
-                      _r4("mae").alias("mae"), _r4("mase").alias("mase"))
-
-
-_SQL_TS_SEASONAL_NAIVE_EVENTS = """
-WITH lagged AS (
-  SELECT user_id, CAST(value AS DOUBLE) AS v,
-    lag(CAST(value AS DOUBLE), 7) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS f,
-    lag(CAST(value AS DOUBLE), 1) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS p
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-per_key AS (
-  SELECT user_id, count(f) AS n_eval,
-    avg(abs(v - f)) AS mae,
-    avg(CASE WHEN f IS NOT NULL THEN abs(v - p) END) AS mae_naive
-  FROM lagged GROUP BY user_id
-)
-SELECT user_id, CAST(n_eval AS BIGINT) AS n_eval,
-  round(mae * 10000.0) / 10000.0 AS mae,
-  round(CASE WHEN mae_naive > 0 THEN mae / mae_naive END
-        * 10000.0) / 10000.0 AS mase
-FROM per_key
-"""
-
-
-def _q_analytics_conformal_group_orders(spark, sf_dir):
-    """Group-conditional conformal intervals (analytics.py
-    conformal_interval_by_group): per-priority residual quantiles via a
-    partitioned cumulative window + ceil((n_g+1)(1−α)) rank, broadcast
-    back by equi-join — per-slice coverage with unbounded group
-    cardinality. Oracle replays the whole per-group pipeline."""
-    from bid_evaluation_spark.operators.analytics import (
-        conformal_interval_by_group)
-
-    orders = _t(spark, sf_dir, "orders")
-    pred = (F.col("o_totalprice") * 0.9 + 1000.0).alias("pred")
-    cal = (orders.filter(F.col("o_orderkey") % 2 == 0)
-           .select("o_orderpriority", pred,
-                   F.col("o_totalprice").alias("actual")))
-    tgt = (orders.filter(F.col("o_orderkey") % 2 == 1)
-           .select("o_orderkey", "o_orderpriority", pred))
-    res = conformal_interval_by_group(cal, tgt, "o_orderpriority",
-                                      alpha=0.1, digits=6)
-    return res.select("o_orderkey", "o_orderpriority",
-                      _r4("pred").alias("pred"),
-                      _r4("conf_lo").alias("conf_lo"),
-                      _r4("conf_hi").alias("conf_hi"))
-
-
-_SQL_ANALYTICS_CONFORMAL_GROUP_ORDERS = """
-WITH cal AS (
-  SELECT o_orderpriority AS g,
-    round(abs(o_totalprice - (o_totalprice * 0.9 + 1000.0))
-          * 1000000.0) / 1000000.0 AS r
-  FROM orders WHERE o_orderkey % 2 = 0
-),
-per_r AS (SELECT g, r, count(*) AS c FROM cal GROUP BY g, r),
-cum AS (
-  SELECT g, r,
-    sum(c) OVER (PARTITION BY g ORDER BY r
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc,
-    ceil((sum(c) OVER (PARTITION BY g) + 1) * 0.9) AS k
-  FROM per_r
-),
-hats AS (SELECT g, min(r) AS qhat FROM cum WHERE cc >= k GROUP BY g)
-SELECT t.o_orderkey, t.o_orderpriority,
-  round(t.pred * 10000.0) / 10000.0 AS pred,
-  round((t.pred - h.qhat) * 10000.0) / 10000.0 AS conf_lo,
-  round((t.pred + h.qhat) * 10000.0) / 10000.0 AS conf_hi
-FROM (SELECT o_orderkey, o_orderpriority,
-             o_totalprice * 0.9 + 1000.0 AS pred
-      FROM orders WHERE o_orderkey % 2 = 1) t
-LEFT JOIN hats h ON h.g = t.o_orderpriority
-"""
-
-
-def _q_profile_fingerprint_orders(spark, sf_dir):
-    """Content-fingerprint manifest (profile.py table_fingerprint): 256
-    buckets of (count, two mod-prime row-hash checksums) over a
-    portably-canonicalized projection of orders — the tiny manifest that
-    answers "did this table change, and where" across engines/copies.
-    Doubles are pre-folded to integer cents (round·100→long) because
-    double→string casts format differently across engines (Spark
-    scientific vs DuckDB decimal) — the operator contract documents
-    this. The oracle rebuilds every row hash and checksum."""
-    from bid_evaluation_spark.operators.profile import table_fingerprint
-
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        "o_orderpriority")
-    res = table_fingerprint(orders, buckets=256)
-    return res.select(F.col("bucket").cast("long").alias("bucket"),
-                      "n_rows", "checksum", "checksum2")
-
-
-_SQL_PROFILE_FINGERPRINT_ORDERS = """
-WITH src AS (
-  SELECT CAST(o_orderkey AS VARCHAR) AS c1,
-         CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR) AS c2,
-         o_orderpriority AS c3
-  FROM orders
-),
-hashed AS (
-  SELECT
-    CAST(('0x' || substr(md5(concat_ws(chr(1), c1, c2, c3)), 1, 15))
-         AS BIGINT) AS h,
-    CAST(('0x' || substr(md5(concat_ws(chr(1), c1, c2, c3)
-                             || chr(2) || 'salt'), 1, 15))
-         AS BIGINT) AS h2
-  FROM src
-)
-SELECT CAST(h % 256 AS BIGINT) AS bucket,
-  CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(sum(h % 1000003) AS BIGINT) AS checksum,
-  CAST(sum(h2 % 1000003) AS BIGINT) AS checksum2
-FROM hashed GROUP BY h % 256
 """
 
 
@@ -5194,635 +4336,6 @@ FROM p2, LATERAL (VALUES
   ('segment', p2.m0, p2.u0),
   ('balance', p2.m1, p2.u1),
   ('nation', p2.m2, p2.u2)) AS v(field, m, u)
-"""
-
-
-def _q_privacy_kanon_customer(spark, sf_dir):
-    """k-anonymity audit (operators/privacy.py): equivalence classes of
-    the (nation, segment, balance-band) quasi-identifier projection that
-    isolate fewer than k=5 customers — one groupBy, violating classes
-    only. Oracle replays the banding and the HAVING cut."""
-    from bid_evaluation_spark.operators.privacy import k_anonymity_report
-
-    c = _t(spark, sf_dir, "customer").select(
-        "c_nationkey", "c_mktsegment",
-        F.floor(F.col("c_acctbal") / 2000).cast("long").alias("bal_band"))
-    res = k_anonymity_report(c, ["c_nationkey", "c_mktsegment", "bal_band"],
-                             k=5)
-    return res.select(F.col("c_nationkey").cast("long").alias("c_nationkey"),
-                      "c_mktsegment", "bal_band",
-                      F.col("class_size").cast("long").alias("class_size"))
-
-
-_SQL_PRIVACY_KANON_CUSTOMER = """
-SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, c_mktsegment,
-  CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band,
-  CAST(count(*) AS BIGINT) AS class_size
-FROM customer
-GROUP BY c_nationkey, c_mktsegment, floor(c_acctbal / 2000)
-HAVING count(*) < 5
-"""
-
-
-def _q_privacy_dp_counts_documents(spark, sf_dir):
-    """Seeded Laplace noisy counts (privacy.py dp_noisy_counts,
-    testing/accounting mode — the docstring spells out that a fixed seed
-    is NOT a DP release): per-language counts, ε=0.5, md5-uniform →
-    inverse-CDF noise, clamp at 0. Fully replayed by the oracle."""
-    from bid_evaluation_spark.operators.privacy import dp_noisy_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    res = dp_noisy_counts(docs, "lang", epsilon=0.5, seed="r4dp")
-    return res.select("lang", "true_count",
-                      (_r4("noisy_count") + F.lit(0.0)).alias("noisy_count"))
-
-
-_SQL_PRIVACY_DP_COUNTS_DOCUMENTS = """
-WITH counts AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS true_count
-  FROM documents GROUP BY lang
-),
-noised AS (
-  SELECT lang, true_count,
-    (CAST(('0x' || substr(md5(COALESCE(lang, chr(0) || 'null')
-                              || '|r4dp'), 1, 15)) AS BIGINT) + 0.5)
-      / 1152921504606846976.0 - 0.5 AS c
-  FROM counts
-)
-SELECT lang, true_count,
-  round(greatest(0.0,
-    true_count + (-(1.0 / 0.5) * sign(c) * ln(1.0 - 2.0 * abs(c))))
-    * 10000.0) / 10000.0 + 0.0 AS noisy_count
-FROM noised
-"""
-
-
-def _q_analytics_poststrat_orders(spark, sf_dir):
-    """Post-stratified mean (analytics.py post_stratified_mean): a
-    deliberately mix-drifted sample (urgent orders half-dropped) repaired
-    by known population priority shares — Σ W_h·ȳ_h vs the naive sample
-    mean, plus the share-coverage diagnostic. Oracle replays shares,
-    per-stratum means, and both estimators."""
-    from bid_evaluation_spark.operators.analytics import post_stratified_mean
-
-    orders = _t(spark, sf_dir, "orders")
-    total = orders.count()
-    shares = (orders.groupBy("o_orderpriority")
-              .agg((F.count(F.lit(1)) / F.lit(float(total)))
-                   .alias("share")))
-    samp = orders.filter(
-        (F.col("o_orderkey") % 7 == 0)
-        & ~((F.col("o_orderpriority") == "1-URGENT")
-            & (F.col("o_orderkey") % 2 == 0)))
-    res = post_stratified_mean(samp, shares, "o_orderpriority",
-                               "o_totalprice")
-    return res.select((_r4("estimate") + F.lit(0.0)).alias("estimate"),
-                      (_r4("naive_mean") + F.lit(0.0)).alias("naive_mean"),
-                      F.col("n").cast("long").alias("n"),
-                      (_r4("coverage") + F.lit(0.0)).alias("coverage"))
-
-
-_SQL_ANALYTICS_POSTSTRAT_ORDERS = """
-WITH shares AS (
-  SELECT o_orderpriority,
-    count(*) / CAST((SELECT count(*) FROM orders) AS DOUBLE) AS share
-  FROM orders GROUP BY o_orderpriority
-),
-samp AS (
-  SELECT o_orderpriority, o_totalprice FROM orders
-  WHERE o_orderkey % 7 = 0
-    AND NOT (o_orderpriority = '1-URGENT' AND o_orderkey % 2 = 0)
-),
-per_g AS (
-  SELECT o_orderpriority, avg(o_totalprice) AS ybar, count(*) AS n
-  FROM samp GROUP BY o_orderpriority
-),
-j AS (SELECT * FROM per_g JOIN shares USING (o_orderpriority))
-SELECT
-  round(sum(share * ybar) * 10000.0) / 10000.0 + 0.0 AS estimate,
-  round(sum(ybar * n) / sum(n) * 10000.0) / 10000.0 + 0.0 AS naive_mean,
-  CAST(sum(n) AS BIGINT) AS n,
-  round(sum(share) * 10000.0) / 10000.0 + 0.0 AS coverage
-FROM j
-"""
-
-
-def _q_metrics_psi_timeline_events(spark, sf_dir):
-    """PSI drift TIMELINE (metrics.py psi_timeline): reference-quantile
-    bins scored per day of a +15%-drifted current stream — the dashboard
-    series where burn-in shows as a rising curve. One groupBy(bucket,
-    bin); missing bins clip at 1e-6 exactly like psi_drift. The oracle
-    rebuilds the full bucket×bin grid and replays every share and log."""
-    from bid_evaluation_spark.operators.metrics import psi_timeline
-
-    ev = _t(spark, sf_dir, "events")
-    ref = ev.filter(F.col("event_id") % 2 == 0)
-    cur = (ev.filter(F.col("event_id") % 2 == 1)
-           .withColumn("value", F.col("value") * 1.15))
-    res = psi_timeline(ref, cur, "value", bucket="1 day", n_bins=5)
-    return res.select(
-        F.date_format("bucket_start", _TS_FMT_SPARK).alias("bucket_start"),
-        "n", (_r4("psi") + F.lit(0.0)).alias("psi"))
-
-
-_SQL_METRICS_PSI_TIMELINE_EVENTS = f"""
-WITH ref AS (
-  SELECT CAST(value AS DOUBLE) AS v FROM events
-  WHERE event_id % 2 = 0 AND value IS NOT NULL
-),
-th AS (
-  SELECT quantile_cont(v, [CAST(0.2 AS DOUBLE), CAST(0.4 AS DOUBLE),
-                           CAST(0.6 AS DOUBLE), CAST(0.8 AS DOUBLE)]) AS t
-  FROM ref
-),
-rb AS (
-  SELECT CAST(v > t[1] AS INT) + CAST(v > t[2] AS INT)
-         + CAST(v > t[3] AS INT) + CAST(v > t[4] AS INT) AS bin,
-         count(*) AS ref_n
-  FROM ref, th GROUP BY 1
-),
-grid AS (SELECT unnest(generate_series(0, 4)) AS bin),
-rs AS (
-  SELECT g.bin,
-    greatest(coalesce(rb.ref_n, 0)
-             / (SELECT CAST(sum(ref_n) AS DOUBLE) FROM rb),
-             CAST(0.000001 AS DOUBLE)) AS rs
-  FROM grid g LEFT JOIN rb ON rb.bin = g.bin
-),
-cur AS (
-  SELECT ts, CAST(value AS DOUBLE) * 1.15 AS v FROM events
-  WHERE event_id % 2 = 1 AND value IS NOT NULL AND ts IS NOT NULL
-),
-cb AS (
-  SELECT time_bucket(INTERVAL '1 day', ts) AS bs,
-    CAST(v > t[1] AS INT) + CAST(v > t[2] AS INT)
-    + CAST(v > t[3] AS INT) + CAST(v > t[4] AS INT) AS bin,
-    count(*) AS cur_n
-  FROM cur, th GROUP BY 1, 2
-),
-buckets AS (SELECT DISTINCT bs FROM cb),
-fullgrid AS (
-  SELECT b.bs, g.bin, coalesce(cb.cur_n, 0) AS cur_n
-  FROM buckets b CROSS JOIN grid g
-  LEFT JOIN cb ON cb.bs = b.bs AND cb.bin = g.bin
-),
-tot AS (SELECT bs, sum(cur_n) AS nt FROM fullgrid GROUP BY bs),
-terms AS (
-  SELECT f.bs,
-    (greatest(f.cur_n / CAST(t.nt AS DOUBLE), CAST(0.000001 AS DOUBLE))
-       - r.rs)
-    * ln(greatest(f.cur_n / CAST(t.nt AS DOUBLE),
-                  CAST(0.000001 AS DOUBLE)) / r.rs) AS term
-  FROM fullgrid f
-  JOIN tot t ON t.bs = f.bs
-  JOIN rs r ON r.bin = f.bin
-)
-SELECT strftime(t.bs, '{{fmt}}') AS bucket_start,
-  CAST(t.nt AS BIGINT) AS n,
-  round(s.psi * 10000.0) / 10000.0 + 0.0 AS psi
-FROM tot t JOIN (SELECT bs, sum(term) AS psi FROM terms GROUP BY bs) s
-  ON s.bs = t.bs
-""".replace("{fmt}", _TS_FMT_DUCK)
-
-
-def _q_analytics_did_events(spark, sf_dir):
-    """Difference-in-differences (analytics.py diff_in_diff): even-user
-    treatment, every-third-event 'post' period, a planted +25 effect on
-    the treated-post cell — ONE fused four-cell aggregate recovers it
-    net of baseline and trend. The oracle replays all four conditional
-    means and the double difference."""
-    from bid_evaluation_spark.operators.analytics import diff_in_diff
-
-    ev = (_t(spark, sf_dir, "events")
-          .withColumn("grp", (F.col("user_id") % 2 == 0).cast("int"))
-          .withColumn("period", (F.col("event_id") % 3 == 0).cast("int"))
-          .withColumn("value", F.col("value")
-                      + F.when((F.col("grp") == 1)
-                               & (F.col("period") == 1),
-                               F.lit(25.0)).otherwise(F.lit(0.0))))
-    res = diff_in_diff(ev, "grp", "period", "value", treated=1, post=1)
-    return res.select(
-        (_r4("did") + F.lit(0.0)).alias("did"),
-        (_r4("se") + F.lit(0.0)).alias("se"),
-        (_r4("mean_tpost") + F.lit(0.0)).alias("mean_tpost"),
-        (_r4("mean_tpre") + F.lit(0.0)).alias("mean_tpre"),
-        (_r4("mean_cpost") + F.lit(0.0)).alias("mean_cpost"),
-        (_r4("mean_cpre") + F.lit(0.0)).alias("mean_cpre"),
-        (F.round(F.col("var_tpost"), 2) + F.lit(0.0)).alias("var_tpost"),
-        (F.round(F.col("var_cpre"), 2) + F.lit(0.0)).alias("var_cpre"),
-        "n_tpost", "n_tpre", "n_cpost", "n_cpre")
-
-
-_SQL_ANALYTICS_DID_EVENTS = """
-WITH rws AS (
-  SELECT CAST(user_id % 2 = 0 AS INT) AS grp,
-         CAST(event_id % 3 = 0 AS INT) AS period,
-         CAST(value AS DOUBLE)
-           + (CASE WHEN user_id % 2 = 0 AND event_id % 3 = 0
-                   THEN 25.0 ELSE 0.0 END) AS v
-  FROM events WHERE value IS NOT NULL
-),
-cells AS (
-  SELECT
-    sum(CASE WHEN grp = 1 AND period = 1 THEN v END) AS s_tpost,
-    count(CASE WHEN grp = 1 AND period = 1 THEN v END) AS n_tpost,
-    sum(CASE WHEN grp = 1 AND period <> 1 THEN v END) AS s_tpre,
-    count(CASE WHEN grp = 1 AND period <> 1 THEN v END) AS n_tpre,
-    sum(CASE WHEN grp <> 1 AND period = 1 THEN v END) AS s_cpost,
-    count(CASE WHEN grp <> 1 AND period = 1 THEN v END) AS n_cpost,
-    sum(CASE WHEN grp <> 1 AND period <> 1 THEN v END) AS s_cpre,
-    count(CASE WHEN grp <> 1 AND period <> 1 THEN v END) AS n_cpre,
-    var_samp(CASE WHEN grp = 1 AND period = 1 THEN v END) AS v_tpost,
-    var_samp(CASE WHEN grp = 1 AND period <> 1 THEN v END) AS v_tpre,
-    var_samp(CASE WHEN grp <> 1 AND period = 1 THEN v END) AS v_cpost,
-    var_samp(CASE WHEN grp <> 1 AND period <> 1 THEN v END) AS v_cpre
-  FROM rws
-)
-SELECT
-  round(((s_tpost / n_tpost - s_tpre / n_tpre)
-         - (s_cpost / n_cpost - s_cpre / n_cpre)) * 10000.0) / 10000.0
-    + 0.0 AS did,
-  round(sqrt(v_tpost / n_tpost + v_tpre / n_tpre + v_cpost / n_cpost
-             + v_cpre / n_cpre) * 10000.0) / 10000.0 + 0.0 AS se,
-  round(v_tpost * 100.0) / 100.0 + 0.0 AS var_tpost,
-  round(v_cpre * 100.0) / 100.0 + 0.0 AS var_cpre,
-  round(s_tpost / n_tpost * 10000.0) / 10000.0 + 0.0 AS mean_tpost,
-  round(s_tpre / n_tpre * 10000.0) / 10000.0 + 0.0 AS mean_tpre,
-  round(s_cpost / n_cpost * 10000.0) / 10000.0 + 0.0 AS mean_cpost,
-  round(s_cpre / n_cpre * 10000.0) / 10000.0 + 0.0 AS mean_cpre,
-  CAST(n_tpost AS BIGINT) AS n_tpost, CAST(n_tpre AS BIGINT) AS n_tpre,
-  CAST(n_cpost AS BIGINT) AS n_cpost, CAST(n_cpre AS BIGINT) AS n_cpre
-FROM cells
-"""
-
-
-def _q_ts_transitions_events(spark, sf_dir):
-    """First-order Markov transition table over per-user event-type
-    sequences (timeseries.py event_transitions): one lag window + one
-    groupBy; row-normalized probabilities. Oracle replays the lag,
-    counts, and normalization."""
-    from bid_evaluation_spark.operators.timeseries import event_transitions
-
-    ev = _t(spark, sf_dir, "events")
-    res = event_transitions(ev, "user_id", "ts", "event_type", "event_id")
-    return res.select("from_state", "to_state",
-                      F.col("n").cast("long").alias("n"),
-                      (_r4("p") + F.lit(0.0)).alias("p"))
-
-
-_SQL_TS_TRANSITIONS_EVENTS = """
-WITH pairs AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS from_state,
-         event_type AS to_state
-  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-),
-counts AS (
-  SELECT from_state, to_state, count(*) AS n
-  FROM pairs WHERE from_state IS NOT NULL
-  GROUP BY from_state, to_state
-)
-SELECT from_state, to_state, CAST(n AS BIGINT) AS n,
-  round((n / CAST(sum(n) OVER (PARTITION BY from_state) AS DOUBLE))
-        * 10000.0) / 10000.0 + 0.0 AS p
-FROM counts
-"""
-
-
-def _q_ts_entropy_rate_events(spark, sf_dir):
-    """Entropy rate of the user-journey transition table (timeseries.py
-    transition_entropy_rate): Σ π_i Σ −p ln p over the bounded
-    state×state table — the next-event predictability summary. Oracle
-    replays the whole chain: lag → counts → normalize → entropy."""
-    from bid_evaluation_spark.operators.timeseries import (
-        event_transitions, transition_entropy_rate)
-
-    ev = _t(spark, sf_dir, "events")
-    res = transition_entropy_rate(
-        event_transitions(ev, "user_id", "ts", "event_type", "event_id"))
-    return res.select(
-        (_r4("entropy_rate") + F.lit(0.0)).alias("entropy_rate"),
-        F.col("n_states").cast("long").alias("n_states"),
-        F.col("n_transitions").cast("long").alias("n_transitions"))
-
-
-_SQL_TS_ENTROPY_RATE_EVENTS = """
-WITH pairs AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS from_state,
-         event_type AS to_state
-  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-),
-counts AS (
-  SELECT from_state, to_state, count(*) AS n
-  FROM pairs WHERE from_state IS NOT NULL
-  GROUP BY from_state, to_state
-),
-probs AS (
-  SELECT from_state, n,
-    n / CAST(sum(n) OVER (PARTITION BY from_state) AS DOUBLE) AS p
-  FROM counts
-),
-per_from AS (
-  SELECT from_state, sum(n) AS nf, sum(-p * ln(p)) AS h
-  FROM probs GROUP BY from_state
-)
-SELECT
-  round((sum(nf * h) / CAST(sum(nf) AS DOUBLE)) * 10000.0) / 10000.0
-    + 0.0 AS entropy_rate,
-  CAST(count(*) AS BIGINT) AS n_states,
-  CAST(sum(nf) AS BIGINT) AS n_transitions
-FROM per_from
-"""
-
-
-def _q_ts_kaplan_meier_events(spark, sf_dir):
-    """Kaplan-Meier survival curve (timeseries.py kaplan_meier) over
-    synthetic durations (event_id mod 97 + 1) with 20% right-censoring
-    (event_id mod 5 = 0) — censoring-aware retention. The oracle replays
-    at-risk counts, the ordered log-sum product, and the exhausted-tail
-    zero pin."""
-    from bid_evaluation_spark.operators.timeseries import kaplan_meier
-
-    ev = _t(spark, sf_dir, "events").select(
-        ((F.col("event_id") % 97) + 1).cast("double").alias("dur"),
-        (F.col("event_id") % 5 != 0).alias("observed"))
-    res = kaplan_meier(ev, "dur", "observed")
-    return res.select(F.col("duration").cast("long").alias("duration"),
-                      "n_risk", "n_event", "n_censored",
-                      (_r4("survival") + F.lit(0.0)).alias("survival"))
-
-
-_SQL_TS_KAPLAN_MEIER_EVENTS = """
-WITH rws AS (
-  SELECT CAST(event_id % 97 + 1 AS DOUBLE) AS dur,
-         (event_id % 5 <> 0) AS observed
-  FROM events
-),
-per_t AS (
-  SELECT dur AS duration, count(*) AS leaving,
-         sum(CAST(observed AS BIGINT)) AS n_event
-  FROM rws GROUP BY dur
-),
-staged AS (
-  SELECT duration, n_event, leaving - n_event AS n_censored,
-    (SELECT sum(leaving) FROM per_t)
-      - COALESCE(sum(leaving) OVER (ORDER BY duration
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-  FROM per_t
-),
-curves AS (
-  SELECT *,
-    max(CASE WHEN n_event >= n_risk THEN 1 ELSE 0 END)
-      OVER (ORDER BY duration
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead,
-    sum(CASE WHEN n_event < n_risk
-             THEN ln(1.0 - n_event / CAST(n_risk AS DOUBLE))
-             ELSE 0.0 END)
-      OVER (ORDER BY duration
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS logsum
-  FROM staged
-)
-SELECT CAST(duration AS BIGINT) AS duration,
-  CAST(n_risk AS BIGINT) AS n_risk,
-  CAST(n_event AS BIGINT) AS n_event,
-  CAST(n_censored AS BIGINT) AS n_censored,
-  round((CASE WHEN dead = 1 THEN 0.0 ELSE exp(logsum) END)
-        * 10000.0) / 10000.0 + 0.0 AS survival
-FROM curves
-"""
-
-
-def _q_analytics_msprt_events(spark, sf_dir):
-    """mSPRT always-valid p-value (analytics.py msprt_always_valid, KDD
-    2017): peeking-safe A/B readout on event values, variant = event
-    parity with a planted +8 shift, τ=5. One fused sufficient-statistic
-    aggregate; the oracle replays the pooled variance, Λ, and the
-    1/Λ cap operation-for-operation."""
-    from bid_evaluation_spark.operators.analytics import msprt_always_valid
-
-    ev = (_t(spark, sf_dir, "events")
-          .withColumn("variant", (F.col("event_id") % 2).cast("int"))
-          .withColumn("value", F.col("value")
-                      + F.when(F.col("event_id") % 2 == 1, F.lit(8.0))
-                      .otherwise(F.lit(0.0))))
-    res = msprt_always_valid(ev, "variant", "value", control=0,
-                             treatment=1, tau=5.0)
-    return res.select((_r4("delta") + F.lit(0.0)).alias("delta"),
-                      "n_control", "n_treatment",
-                      (_r4("lambda") + F.lit(0.0)).alias("lambda"),
-                      (F.round(F.col("p_always_valid") * F.lit(1e8))
-                       / F.lit(1e8) + F.lit(0.0)).alias("p_always_valid"))
-
-
-_SQL_ANALYTICS_MSPRT_EVENTS = """
-WITH rws AS (
-  SELECT CAST(event_id % 2 = 1 AS DOUBLE) AS t,
-    CAST(value AS DOUBLE)
-      + (CASE WHEN event_id % 2 = 1 THEN 8.0 ELSE 0.0 END) AS v
-  FROM events WHERE value IS NOT NULL
-),
-agg AS (
-  SELECT sum(t) AS nt, sum(1.0 - t) AS nc,
-         sum(t * v) AS st, sum((1.0 - t) * v) AS sc,
-         sum(t * v * v) AS sst, sum((1.0 - t) * v * v) AS ssc
-  FROM rws
-),
-calc AS (
-  SELECT nt, nc, st / nt AS mt, sc / nc AS mc,
-    ((sst - nt * (st / nt) * (st / nt))
-     + (ssc - nc * (sc / nc) * (sc / nc))) / (nt + nc - 2.0) AS var
-  FROM agg
-),
-fin AS (
-  SELECT nt, nc, mt - mc AS delta,
-    var * (1.0 / nc + 1.0 / nt) AS vhat
-  FROM calc
-)
-SELECT
-  round(delta * 10000.0) / 10000.0 + 0.0 AS delta,
-  CAST(nc AS BIGINT) AS n_control, CAST(nt AS BIGINT) AS n_treatment,
-  round(sqrt(vhat / (vhat + 25.0))
-        * exp(delta * delta * 25.0 / (2.0 * vhat * (vhat + 25.0)))
-        * 10000.0) / 10000.0 + 0.0 AS "lambda",
-  round(least(1.0, 1.0 / (sqrt(vhat / (vhat + 25.0))
-        * exp(delta * delta * 25.0 / (2.0 * vhat * (vhat + 25.0)))))
-        * 100000000.0) / 100000000.0 + 0.0 AS p_always_valid
-FROM fin
-"""
-
-
-def _q_text_zipf_slope_documents(spark, sf_dir):
-    """Zipf-law slope of the corpus token spectrum — ln(freq) ~ ln(rank)
-    OLS over the top-100 tokens via the existing `grouped_linear_fit`
-    sufficient-statistics op (natural text slopes near −1; synthetic or
-    templated corpora flatten — a corpus-health fingerprint). Rank =
-    count-desc/token-asc row_number on the bounded top-k table; the
-    oracle replays tokenize → counts → rank → the OLS closed form."""
-    from pyspark.sql import Window
-
-    from bid_evaluation_spark.operators.analytics import grouped_linear_fit
-    from bid_evaluation_spark.operators.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    counts = (docs.select(F.explode(tokens(F.lower(F.col("text"))))
-                          .alias("tok"))
-              .groupBy("tok").agg(F.count(F.lit(1)).alias("freq")))
-    w = Window.orderBy(F.desc("freq"), F.asc("tok"))
-    ranked = (counts.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= 100)
-              .select(F.lit("corpus").alias("g"),
-                      F.log(F.col("rank").cast("double")).alias("lx"),
-                      F.log(F.col("freq").cast("double")).alias("ly")))
-    res = grouped_linear_fit(ranked, "g", "lx", "ly")
-    return res.select(F.col("n").cast("long").alias("n"),
-                      (_r4("slope") + F.lit(0.0)).alias("slope"),
-                      (_r4("intercept") + F.lit(0.0)).alias("intercept"),
-                      (_r4("r2") + F.lit(0.0)).alias("r2"))
-
-
-_SQL_TEXT_ZIPF_SLOPE_DOCUMENTS = """
-WITH toks AS (
-  SELECT unnest(CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(lower(text)), '\\s+')
-                END) AS tok
-  FROM documents
-),
-counts AS (SELECT tok, count(*) AS freq FROM toks GROUP BY tok),
-ranked AS (
-  SELECT ln(CAST(row_number() OVER (ORDER BY freq DESC, tok ASC)
-                 AS DOUBLE)) AS lx,
-         ln(CAST(freq AS DOUBLE)) AS ly,
-         row_number() OVER (ORDER BY freq DESC, tok ASC) AS rnk
-  FROM counts QUALIFY rnk <= 100
-),
-s AS (
-  SELECT count(*) AS n_i, avg(lx) AS mx, avg(ly) AS my,
-    covar_samp(lx, ly) AS cxy, var_samp(lx) AS vx, var_samp(ly) AS vy
-  FROM ranked
-)
-SELECT CAST(n_i AS BIGINT) AS n,
-  round((cxy / vx) * 10000.0) / 10000.0 + 0.0 AS slope,
-  round((my - (cxy / vx) * mx) * 10000.0) / 10000.0 + 0.0 AS intercept,
-  round((cxy * cxy / (vx * vy)) * 10000.0) / 10000.0 + 0.0 AS r2
-FROM s
-"""
-
-
-def _q_profile_benford_orders(spark, sf_dir):
-    """Benford first-digit deviation (profile.py benford_deviation) over
-    order totals — string-based digit extraction on integer cents (the
-    floor(log10) path is off-by-one at binary-float powers of ten). The
-    oracle replays digits, shares, and chi-square terms; expected shares
-    are log10(1+1/d) on both engines."""
-    from bid_evaluation_spark.operators.profile import benford_deviation
-
-    orders = _t(spark, sf_dir, "orders")
-    res = benford_deviation(orders, "o_totalprice")
-    return res.select(F.col("digit").cast("long").alias("digit"),
-                      F.col("n").cast("long").alias("n"),
-                      (_r4("observed_share") + F.lit(0.0))
-                      .alias("observed_share"),
-                      (_r4("expected_share") + F.lit(0.0))
-                      .alias("expected_share"),
-                      (_r4("chi2_term") + F.lit(0.0)).alias("chi2_term"))
-
-
-_SQL_PROFILE_BENFORD_ORDERS = """
-WITH rws AS (
-  SELECT CAST(substr(CAST(CAST(round(abs(o_totalprice) * 100) AS BIGINT)
-                          AS VARCHAR), 1, 1) AS INT) AS digit
-  FROM orders
-  WHERE o_totalprice IS NOT NULL
-    AND CAST(round(abs(o_totalprice) * 100) AS BIGINT) > 0
-),
-counts AS (SELECT digit, count(*) AS n FROM rws GROUP BY digit),
-grid AS (SELECT unnest(generate_series(1, 9)) AS digit),
-j AS (
-  SELECT g.digit, COALESCE(c.n, 0) AS n
-  FROM grid g LEFT JOIN counts c ON c.digit = g.digit
-),
-tot AS (SELECT sum(n) AS t FROM j)
-SELECT CAST(j.digit AS BIGINT) AS digit, CAST(j.n AS BIGINT) AS n,
-  round((j.n / CAST(t.t AS DOUBLE)) * 10000.0) / 10000.0 + 0.0
-    AS observed_share,
-  round(log10(1.0 + 1.0 / j.digit) * 10000.0) / 10000.0 + 0.0
-    AS expected_share,
-  round((CAST(t.t AS DOUBLE)
-         * (j.n / CAST(t.t AS DOUBLE) - log10(1.0 + 1.0 / j.digit))
-         * (j.n / CAST(t.t AS DOUBLE) - log10(1.0 + 1.0 / j.digit))
-         / log10(1.0 + 1.0 / j.digit)) * 10000.0) / 10000.0 + 0.0
-    AS chi2_term
-FROM j, tot t
-"""
-
-
-def _q_ts_km_summary_events(spark, sf_dir):
-    """KM curve summaries (timeseries.py km_summary): median survival +
-    restricted mean to τ=80 over the same synthetic censored durations
-    as ts_kaplan_meier_events. The oracle replays the full curve, the
-    first-crossing median, and the step-integral RMST."""
-    from bid_evaluation_spark.operators.timeseries import (kaplan_meier,
-                                                           km_summary)
-
-    ev = _t(spark, sf_dir, "events").select(
-        ((F.col("event_id") % 97) + 1).cast("double").alias("dur"),
-        (F.col("event_id") % 5 != 0).alias("observed"))
-    res = km_summary(kaplan_meier(ev, "dur", "observed"), horizon=80.0)
-    return res.select(
-        (_r4("median_survival") + F.lit(0.0)).alias("median_survival"),
-        (_r4("rmst") + F.lit(0.0)).alias("rmst"),
-        (_r4("horizon") + F.lit(0.0)).alias("horizon"))
-
-
-_SQL_TS_KM_SUMMARY_EVENTS = """
-WITH rws AS (
-  SELECT CAST(event_id % 97 + 1 AS DOUBLE) AS dur,
-         (event_id % 5 <> 0) AS observed
-  FROM events
-),
-per_t AS (
-  SELECT round(dur * 1000000.0) / 1000000.0 AS duration,
-         count(*) AS leaving,
-         sum(CAST(observed AS BIGINT)) AS n_event
-  FROM rws GROUP BY 1
-),
-staged AS (
-  SELECT duration, n_event,
-    (SELECT sum(leaving) FROM per_t)
-      - COALESCE(sum(leaving) OVER (ORDER BY duration
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-  FROM per_t
-),
-curves AS (
-  SELECT duration,
-    CASE WHEN max(CASE WHEN n_event >= n_risk THEN 1 ELSE 0 END)
-              OVER (ORDER BY duration
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-         THEN 0.0
-         ELSE exp(sum(CASE WHEN n_event < n_risk
-                      THEN ln(1.0 - n_event / CAST(n_risk AS DOUBLE))
-                      ELSE 0.0 END)
-              OVER (ORDER BY duration
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-    END AS survival
-  FROM staged
-),
-segs AS (
-  SELECT duration, survival,
-    COALESCE(lead(duration) OVER (ORDER BY duration), 80.0) AS nxt,
-    min(duration) OVER () AS first_t
-  FROM curves
-)
-SELECT
-  round(min(CASE WHEN round(survival * 1000000000.0) / 1000000000.0
-                 <= 0.5 THEN duration END) * 10000.0)
-    / 10000.0 + 0.0 AS median_survival,
-  round((max(least(first_t, 80.0))
-         + sum(survival * (least(nxt, 80.0) - least(duration, 80.0))))
-        * 10000.0) / 10000.0 + 0.0 AS rmst,
-  round(80.0 * 10000.0) / 10000.0 + 0.0 AS horizon
-FROM segs
 """
 
 
@@ -6044,45 +4557,6 @@ FROM keyed
 """
 
 
-def _q_analytics_cohens_kappa_documents(spark, sf_dir):
-    """Cohen's kappa between the ground-truth language label and a
-    deterministic simulated annotator (agrees when n_chars % 10 < 7, else
-    says 'other') — the chance-corrected agreement readout for labeling
-    pipelines. The contingency table is ONE partial-agg groupBy; po, pe,
-    and kappa are closed-form on integer counts, so the oracle replays the
-    identical arithmetic."""
-    from bid_evaluation_spark.operators.analytics import cohens_kappa
-
-    df = _t(spark, sf_dir, "documents").select(
-        F.col("lang").alias("a"),
-        F.when(F.col("n_chars") % 10 < 7, F.col("lang"))
-         .otherwise(F.lit("other")).alias("b"))
-    res = cohens_kappa(df, "a", "b")
-    return res.select(_r4("kappa").alias("kappa"), _r4("p_o").alias("p_o"),
-                      _r4("p_e").alias("p_e"), "n")
-
-
-_SQL_ANALYTICS_COHENS_KAPPA_DOCUMENTS = """
-WITH lab AS (
-  SELECT lang AS a,
-         CASE WHEN n_chars % 10 < 7 THEN lang ELSE 'other' END AS b
-  FROM documents WHERE lang IS NOT NULL
-),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM lab),
-agree AS (SELECT CAST(count(*) AS DOUBLE) AS c FROM lab WHERE a = b),
-ma AS (SELECT a AS k, CAST(count(*) AS DOUBLE) AS c FROM lab GROUP BY a),
-mb AS (SELECT b AS k, CAST(count(*) AS DOUBLE) AS c FROM lab GROUP BY b),
-pe AS (SELECT sum(ma.c * mb.c) AS s FROM ma JOIN mb USING (k))
-SELECT
-  round(((agree.c / nn.n - pe.s / (nn.n * nn.n))
-         / (1 - pe.s / (nn.n * nn.n))) * 10000.0) / 10000.0 AS kappa,
-  round((agree.c / nn.n) * 10000.0) / 10000.0 AS p_o,
-  round((pe.s / (nn.n * nn.n)) * 10000.0) / 10000.0 AS p_e,
-  CAST(nn.n AS BIGINT) AS n
-FROM nn, agree, pe
-"""
-
-
 # 0.8 * 16^8 → 'cccccccc'; 0.9 * 16^8 → 'e6666666' (same int truncation as
 # pipeline._hex_threshold)
 _SQL_PIPE_SPLIT_DOCUMENTS = """
@@ -6116,250 +4590,6 @@ LIMIT 100
 # ---------------------------------------------------------------------------
 # time-series gap-fill (operators/timeseries.py) + as-of join variants
 # ---------------------------------------------------------------------------
-
-def _q_ts_gapfill_locf_events(spark, sf_dir):
-    """Hypertable-style densified continuous aggregate: per-user 6-hour mean
-    buckets, holes filled by last-observation-carried-forward. The raw scan
-    collapses to O(users × buckets) in one shuffle; grid + fill run on the
-    aggregated frame."""
-    from bid_evaluation_spark.operators.timeseries import gapfill
-
-    ev = _t(spark, sf_dir, "events")
-    res = gapfill(ev, ts_col="ts", key_col="user_id", value_col="value",
-                  width=21600.0, agg="avg", fill="locf")
-    return res.select("user_id", "bucket", _r4("value").alias("value"),
-                      "is_gap")
-
-
-_SQL_TS_GAPFILL_LOCF_EVENTS = """
-WITH b AS (
-  SELECT user_id, CAST(floor(epoch(ts) / 21600) AS BIGINT) AS bucket,
-         avg(value) AS v, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-bounds AS (SELECT user_id, min(bucket) AS mn, max(bucket) AS mx
-           FROM b GROUP BY 1),
-grid AS (SELECT user_id, unnest(generate_series(mn, mx)) AS bucket
-         FROM bounds),
-j AS (SELECT g.user_id, g.bucket, b.v, b.n FROM grid g
-      LEFT JOIN b ON b.user_id = g.user_id AND b.bucket = g.bucket)
-SELECT user_id, bucket,
-  round(last_value(v IGNORE NULLS) OVER
-    (PARTITION BY user_id ORDER BY bucket
-     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 10000.0) / 10000.0
-    AS value,
-  n IS NULL AS is_gap
-FROM j
-"""
-
-
-def _q_ts_gapfill_linear_events(spark, sf_dir):
-    """Same densified aggregate with linear interpolation across interior
-    gaps (edges carry the nearest observation)."""
-    from bid_evaluation_spark.operators.timeseries import gapfill
-
-    ev = _t(spark, sf_dir, "events")
-    res = gapfill(ev, ts_col="ts", key_col="user_id", value_col="value",
-                  width=21600.0, agg="avg", fill="linear")
-    return res.select("user_id", "bucket", _r4("value").alias("value"),
-                      "is_gap")
-
-
-_SQL_TS_GAPFILL_LINEAR_EVENTS = """
-WITH b AS (
-  SELECT user_id, CAST(floor(epoch(ts) / 21600) AS BIGINT) AS bucket,
-         avg(value) AS v, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-bounds AS (SELECT user_id, min(bucket) AS mn, max(bucket) AS mx
-           FROM b GROUP BY 1),
-grid AS (SELECT user_id, unnest(generate_series(mn, mx)) AS bucket
-         FROM bounds),
-j AS (SELECT g.user_id, g.bucket, b.v, b.n FROM grid g
-      LEFT JOIN b ON b.user_id = g.user_id AND b.bucket = g.bucket),
-f AS (
-  SELECT user_id, bucket, v, n,
-    last_value(CASE WHEN v IS NOT NULL THEN bucket END IGNORE NULLS)
-      OVER wback AS pb,
-    last_value(v IGNORE NULLS) OVER wback AS pv,
-    first_value(CASE WHEN v IS NOT NULL THEN bucket END IGNORE NULLS)
-      OVER wfwd AS nb,
-    first_value(v IGNORE NULLS) OVER wfwd AS nv
-  FROM j
-  WINDOW wback AS (PARTITION BY user_id ORDER BY bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         wfwd AS (PARTITION BY user_id ORDER BY bucket
-                  ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-)
-SELECT user_id, bucket,
-  round((CASE WHEN v IS NOT NULL THEN v
-              WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-                pv + (nv - pv) * (CAST(bucket - pb AS DOUBLE)
-                                  / CAST(nb - pb AS DOUBLE))
-              WHEN pv IS NOT NULL THEN pv
-              ELSE nv END) * 10000.0) / 10000.0 AS value,
-  n IS NULL AS is_gap
-FROM f
-"""
-
-
-def _q_asof_forward_events(spark, sf_dir):
-    """Forward as-of with a tolerance: every click enriched with the user's
-    NEXT purchase, but only if it lands within 24 h — later ones null out,
-    exactly as if absent (pandas merge_asof direction='forward' +
-    tolerance)."""
-    from bid_evaluation_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value")
-    res = asof_join(clicks, purchases, on="ts", by="user_id",
-                    right_cols=["value"], direction="forward",
-                    tolerance=86400.0)
-    return res.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK + ".SSSSSS").alias("ts"),
-        F.date_format("ts_right", _TS_FMT_SPARK + ".SSSSSS").alias("purchase_ts"),
-        _r4("value_right").alias("purchase_value"),
-    )
-
-
-_SQL_ASOF_FORWARD_EVENTS = """
-WITH l AS (SELECT event_id, user_id, ts FROM events
-           WHERE event_type = 'click'),
-r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
-m AS (
-  SELECT l.event_id, l.user_id, l.ts, r.ts AS rts, r.value AS rv
-  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-)
-SELECT event_id, user_id,
-  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-  CASE WHEN epoch(rts) - epoch(ts) <= 86400
-       THEN strftime(rts, '%Y-%m-%d %H:%M:%S.%f') END AS purchase_ts,
-  CASE WHEN epoch(rts) - epoch(ts) <= 86400
-       THEN round(rv * 10000.0) / 10000.0 END AS purchase_value
-FROM m
-"""
-
-
-def _q_asof_nearest_events(spark, sf_dir):
-    """Nearest as-of: each click takes whichever purchase (before or after)
-    is closer in time, ties to the earlier one. One shuffle; the second
-    direction is a window re-sort on the same partitioning, not a second
-    exchange."""
-    from bid_evaluation_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value")
-    res = asof_join(clicks, purchases, on="ts", by="user_id",
-                    right_cols=["value"], direction="nearest")
-    return res.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK + ".SSSSSS").alias("ts"),
-        F.date_format("ts_right", _TS_FMT_SPARK + ".SSSSSS").alias("purchase_ts"),
-        _r4("value_right").alias("purchase_value"),
-    )
-
-
-_SQL_ASOF_NEAREST_EVENTS = """
-WITH l AS (SELECT event_id, user_id, ts FROM events
-           WHERE event_type = 'click'),
-r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
-b AS (SELECT l.event_id, r.ts AS bts, r.value AS bv
-      FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts),
-f AS (SELECT l.event_id, r.ts AS fts, r.value AS fv
-      FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts),
-m AS (
-  SELECT l.event_id, l.user_id, l.ts,
-    CASE WHEN f.fts IS NULL THEN b.bts
-         WHEN b.bts IS NULL THEN f.fts
-         WHEN epoch(l.ts) - epoch(b.bts) <= epoch(f.fts) - epoch(l.ts)
-           THEN b.bts ELSE f.fts END AS rts,
-    CASE WHEN f.fts IS NULL THEN b.bv
-         WHEN b.bts IS NULL THEN f.fv
-         WHEN epoch(l.ts) - epoch(b.bts) <= epoch(f.fts) - epoch(l.ts)
-           THEN b.bv ELSE f.fv END AS rv
-  FROM l JOIN b USING (event_id) JOIN f USING (event_id)
-)
-SELECT event_id, user_id,
-  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-  strftime(rts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-  round(rv * 10000.0) / 10000.0 AS purchase_value
-FROM m
-"""
-
-
-def _q_graph_pagerank_events(spark, sf_dir):
-    """Weighted PageRank (operators/graph.py) over the event-type transition
-    graph: edges are consecutive (prev_type → type) steps per user ordered by
-    (ts, event_id), weighted by transition count; 3 fixed rounds at d=0.85
-    (3, not 5 — the graph is tiny, so the correctness gate's cost is pure
-    per-round job overhead; 3 rounds exercise the same recurrence).
-    The oracle unrolls the identical formula (same association order:
-    rank · (w/outw)) iteration by iteration."""
-    from pyspark.sql import Window
-    from bid_evaluation_spark.operators.graph import pagerank
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        ev.withColumn("_prev", F.lag("event_type").over(w))
-        .filter(F.col("_prev").isNotNull())
-        .groupBy(F.col("_prev").alias("src"), F.col("event_type").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    pr = pagerank(edges, weight="w", damping=0.85, max_iter=3)
-    return pr.select("node", _r4("rank").alias("rank")).orderBy("node")
-
-
-def _pagerank_events_sql(iters: int = 5, d: str = "0.85") -> str:
-    """Unrolled-iteration PageRank oracle: recursive CTEs can't aggregate
-    over their own recursive reference, so each round is its own CTE chain
-    (contrib → dangling mass → new ranks), mirroring pagerank()'s arithmetic
-    term for term (double literals, rank·(w/ow) association)."""
-    parts = ["""
-WITH seq AS (
-  SELECT event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-),
-edges AS (
-  SELECT prev AS src, event_type AS dst, CAST(count(*) AS DOUBLE) AS w
-  FROM seq WHERE prev IS NOT NULL GROUP BY prev, event_type
-),
-nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-outw AS (SELECT src, sum(w) AS ow FROM edges GROUP BY src),
-r0 AS (SELECT node, CAST(1.0 AS DOUBLE)/(SELECT n FROM nn) AS rank FROM nodes)"""]
-    for i in range(1, iters + 1):
-        parts.append(f""",
-c{i} AS (
-  SELECT e.dst AS node, sum(r.rank * (e.w / o.ow)) AS contrib
-  FROM edges e JOIN r{i-1} r ON e.src = r.node JOIN outw o ON e.src = o.src
-  GROUP BY e.dst
-),
-d{i} AS (
-  SELECT coalesce(sum(r.rank), CAST(0 AS DOUBLE)) AS dm
-  FROM r{i-1} r LEFT JOIN outw o ON r.node = o.src WHERE o.src IS NULL
-),
-r{i} AS (
-  SELECT nd.node,
-         (CAST(1 AS DOUBLE) - CAST({d} AS DOUBLE))/(SELECT n FROM nn)
-         + CAST({d} AS DOUBLE) * (coalesce(c.contrib, CAST(0 AS DOUBLE))
-                                  + (SELECT dm FROM d{i})/(SELECT n FROM nn)) AS rank
-  FROM nodes nd LEFT JOIN c{i} c ON nd.node = c.node
-)""")
-    parts.append(f"""
-SELECT node, round(rank*10000.0)/10000.0 AS rank FROM r{iters} ORDER BY node""")
-    return "".join(parts)
-
-
-_SQL_GRAPH_PAGERANK_EVENTS = _pagerank_events_sql(3)
 
 
 def _q_fuzzy_join_supplier_names(spark, sf_dir):
@@ -6906,129 +5136,6 @@ FROM y CROSS JOIN w2
 _SQL_CLASSIFY_LOGREG_EMBEDDINGS = _logreg_embeddings_sql()
 
 
-def _q_metrics_logreg_auc_embeddings(spark, sf_dir):
-    """Model-evaluation tail (operators/metrics.py): tie-corrected
-    Mann-Whitney ROC-AUC + confusion metrics for the trained logreg's
-    scores against y = label mod 2 — one row out. The AUC design is
-    bounded-cardinality: scores quantize to 1e-4 FIRST, so the
-    cumulative-rank window runs over ≤ 10^4 distinct score values (a
-    groupBy-reduced table), never the rows. The oracle nests the full
-    2-round GD replay as a subquery and recomputes average-rank AUC and
-    the confusion counts on the identical quantized scores."""
-    from bid_evaluation_spark.operators.classify import (
-        logreg_predict, logreg_train,
-    )
-    from bid_evaluation_spark.operators.metrics import (
-        binary_classification_metrics, roc_auc,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        "vec_id", "embedding",
-        (F.col("label") % 2).cast("double").alias("_y"))
-    model = logreg_train(feats, feature_col="embedding", y_col="_y",
-                         dim=64, iters=2, lr=1.0)
-    scored = logreg_predict(feats, model).select(
-        "_y", _r4("prob").alias("prob"))
-    auc = roc_auc(scored, label_col="_y", prob_col="prob", digits=4)
-    met = binary_classification_metrics(scored, label_col="_y",
-                                        prob_col="prob")
-    return auc.crossJoin(met).select(
-        _r4("auc").alias("auc"), "n_pos", "n_neg",
-        "tp", "fp", "tn", "fn",
-        _r4("accuracy").alias("accuracy"), _r4("f1").alias("f1"))
-
-
-_SQL_METRICS_LOGREG_AUC_EMBEDDINGS = f"""
-WITH lr AS ({_SQL_CLASSIFY_LOGREG_EMBEDDINGS}),
-scores AS (
-  SELECT l.prob AS s, CAST(e.label % 2 AS DOUBLE) AS y
-  FROM lr l JOIN embeddings e ON l.vec_id = e.vec_id
-),
-per AS (
-  SELECT s, CAST(count(*) AS DOUBLE) AS n, sum(y) AS np
-  FROM scores GROUP BY s
-),
-rk AS (
-  SELECT s, n, np,
-         coalesce(sum(n) OVER (ORDER BY s
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-           CAST(0 AS DOUBLE)) AS before
-  FROM per
-),
-agg AS (
-  SELECT sum(np * (before + (n + CAST(1 AS DOUBLE)) / CAST(2 AS DOUBLE)))
-           AS rs,
-         sum(np) AS npos, sum(n - np) AS nneg
-  FROM rk
-),
-conf AS (
-  SELECT
-    CAST(sum(CASE WHEN y = 1 AND s >= CAST(0.5 AS DOUBLE) THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-    CAST(sum(CASE WHEN y = 0 AND s >= CAST(0.5 AS DOUBLE) THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-    CAST(sum(CASE WHEN y = 0 AND s < CAST(0.5 AS DOUBLE) THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-    CAST(sum(CASE WHEN y = 1 AND s < CAST(0.5 AS DOUBLE) THEN 1 ELSE 0 END) AS BIGINT) AS fn
-  FROM scores
-)
-SELECT
-  round(((agg.rs - agg.npos * (agg.npos + CAST(1 AS DOUBLE))
-          / CAST(2 AS DOUBLE)) / (agg.npos * agg.nneg)) * 10000.0)
-    / 10000.0 AS auc,
-  CAST(agg.npos AS BIGINT) AS n_pos, CAST(agg.nneg AS BIGINT) AS n_neg,
-  conf.tp, conf.fp, conf.tn, conf.fn,
-  round((CAST(conf.tp + conf.tn AS DOUBLE)
-         / CAST(conf.tp + conf.fp + conf.tn + conf.fn AS DOUBLE))
-        * 10000.0) / 10000.0 AS accuracy,
-  round((CASE WHEN conf.tp > 0 THEN
-           CAST(2 AS DOUBLE) * (CAST(conf.tp AS DOUBLE) / (conf.tp + conf.fp))
-             * (CAST(conf.tp AS DOUBLE) / (conf.tp + conf.fn))
-           / (CAST(conf.tp AS DOUBLE) / (conf.tp + conf.fp)
-              + CAST(conf.tp AS DOUBLE) / (conf.tp + conf.fn))
-         ELSE CAST(0 AS DOUBLE) END) * 10000.0) / 10000.0 AS f1
-FROM agg CROSS JOIN conf
-"""
-
-
-def _q_ts_retention_cohorts_events(spark, sf_dir):
-    """Cohort retention (operators/timeseries.py retention_cohorts): users
-    cohorted by the day-bucket of their first event, retention = fraction
-    active k buckets later. Epoch-floored fixed-width buckets keep the
-    cohort arithmetic engine-portable (no calendar-week ambiguity). Two
-    partially-aggregated shuffles on the user key + one (cohort, offset)
-    count — no windows. The oracle replays first-seen, distinct activity,
-    and the ratio."""
-    from bid_evaluation_spark.operators.timeseries import retention_cohorts
-
-    ev = _t(spark, sf_dir, "events")
-    res = retention_cohorts(ev, bucket_seconds=86400.0)
-    return res.select("cohort_bucket", "offset", "n_active", "cohort_size",
-                      _r4("retention").alias("retention"))
-
-
-_SQL_TS_RETENTION_COHORTS_EVENTS = """
-WITH ev AS (
-  SELECT user_id AS u,
-         CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS b
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-),
-first AS (SELECT u, min(b) AS cohort FROM ev GROUP BY u),
-active AS (SELECT DISTINCT u, b FROM ev),
-counts AS (
-  SELECT f.cohort AS cohort_bucket, a.b - f.cohort AS "offset",
-         CAST(count(*) AS BIGINT) AS n_active
-  FROM active a JOIN first f USING (u)
-  GROUP BY 1, 2
-),
-sizes AS (SELECT cohort AS cohort_bucket,
-                 CAST(count(*) AS BIGINT) AS cohort_size
-          FROM first GROUP BY 1)
-SELECT c.cohort_bucket, c."offset", c.n_active, s.cohort_size,
-       round((CAST(c.n_active AS DOUBLE) / s.cohort_size) * 10000.0)
-         / 10000.0 AS retention
-FROM counts c JOIN sizes s USING (cohort_bucket)
-"""
-
-
 def _q_events_rollup_type_day(spark, sf_dir):
     """OLAP rollup: (event_type, day) → (event_type) → () subtotal levels in
     ONE pass (Catalyst expands the grouping sets with partial aggregation —
@@ -7154,91 +5261,6 @@ FROM events GROUP BY user_id
 # ---------------------------------------------------------------------------
 
 
-def _q_analytics_pareto_part(spark, sf_dir):
-    """2-D Pareto frontier (skyline) over parts: undominated on (minimize
-    retail price, maximize size). No all-pairs dominance join — one
-    groupBy(price) shuffle + a bucketed distributed prefix-max (driver
-    traffic = `buckets` scalars), then an equi-join back. The frontier
-    decision uses raw values with exact comparisons only, so the set
-    matches the NOT EXISTS oracle bit-for-bit."""
-    from bid_evaluation_spark.operators.analytics import pareto_frontier_2d
-
-    df = _t(spark, sf_dir, "part")
-    res = pareto_frontier_2d(df, "p_retailprice", "p_size", buckets=16)
-    return res.select("p_partkey", _r4("p_retailprice").alias("price"),
-                      "p_size")
-
-
-_SQL_ANALYTICS_PARETO_PART = """
-SELECT p_partkey, round(p_retailprice * 10000.0) / 10000.0 AS price, p_size
-FROM part p
-WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL
-  AND NOT EXISTS (
-    SELECT 1 FROM part q
-    WHERE q.p_retailprice IS NOT NULL AND q.p_size IS NOT NULL
-      AND q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
-      AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size)
-  )
-"""
-
-
-def _q_analytics_gini_orders(spark, sf_dir):
-    """Per-priority Gini coefficient of order spend — the concentration
-    follow-up to ranked evaluation. One group-partitioned window + one
-    aggregation; tie order cannot change Σ i·x over equal x, so
-    row_number is deterministic here."""
-    from bid_evaluation_spark.operators.analytics import gini_by_group
-
-    df = _t(spark, sf_dir, "orders")
-    res = gini_by_group(df, "o_orderpriority", "o_totalprice")
-    return res.select("o_orderpriority", "n", _r4("gini").alias("gini"))
-
-
-_SQL_ANALYTICS_GINI_ORDERS = """
-WITH ranked AS (
-  SELECT o_orderpriority, CAST(o_totalprice AS DOUBLE) AS v,
-         row_number() OVER (PARTITION BY o_orderpriority
-                            ORDER BY o_totalprice) AS i
-  FROM orders WHERE o_totalprice IS NOT NULL
-)
-SELECT o_orderpriority, count(*) AS n,
-  round((2.0 * sum(i * v) / (count(*) * sum(v))
-         - (count(*) + 1.0) / count(*)) * 10000.0) / 10000.0 AS gini
-FROM ranked GROUP BY o_orderpriority
-"""
-
-
-def _q_analytics_entropy_documents(spark, sf_dir):
-    """Per-source language-diversity profile: Shannon entropy (via the
-    join-free Σ c·ln c identity), normalized entropy, and HHI — two
-    partially-aggregated shuffles, no Python."""
-    from bid_evaluation_spark.operators.analytics import category_diversity
-
-    df = _t(spark, sf_dir, "documents")
-    res = category_diversity(df, "source", "lang")
-    return res.select("source", "n", "n_categories",
-                      _r4("entropy").alias("entropy"),
-                      _r4("entropy_norm").alias("entropy_norm"),
-                      _r4("hhi").alias("hhi"))
-
-
-_SQL_ANALYTICS_ENTROPY_DOCUMENTS = """
-WITH c AS (
-  SELECT source, lang, CAST(count(*) AS DOUBLE) AS c
-  FROM documents GROUP BY source, lang
-)
-SELECT source, CAST(sum(c) AS BIGINT) AS n, count(*) AS n_categories,
-  round((ln(sum(c)) - sum(c * ln(c)) / sum(c)) * 10000.0) / 10000.0
-    AS entropy,
-  CASE WHEN count(*) > 1 THEN
-    round(((ln(sum(c)) - sum(c * ln(c)) / sum(c))
-           / ln(CAST(count(*) AS DOUBLE))) * 10000.0) / 10000.0
-  END AS entropy_norm,
-  round((sum(c * c) / (sum(c) * sum(c))) * 10000.0) / 10000.0 AS hhi
-FROM c GROUP BY source
-"""
-
-
 def _q_text_tfidf_topk_documents(spark, sf_dir):
     """Log-normalized TF-IDF top-25 for a 3-term query — same two-pass
     shape as BM25 (one fused stats aggregate → scalars, then map-only
@@ -7284,45 +5306,6 @@ LIMIT 25
 """
 
 
-def _q_ml_pca_cov_embeddings(spark, sf_dir):
-    """PCA's distributed stage under FULL value oracle: the 64×64 sample
-    covariance as (i, j, cov) rows from the one-pass gram sketch — only
-    the d+1 sum/count scalars touch the driver; the d² gram cells stay in
-    the DataFrame. Past this stage pca_fit is a driver-side eigh
-    (differential-tested vs numpy), so this row pins everything that
-    actually scales. Rounded at 1e-6 (cov entries are ~1e-2 magnitude)."""
-    from bid_evaluation_spark.operators.pca import pca_covariance
-
-    df = _t(spark, sf_dir, "embeddings")
-    res = pca_covariance(df, "embedding")
-    # + 0.0 canonicalizes IEEE negative zero (a tiny negative cov rounds to
-    # -0.0 in DuckDB but 0.0 in Spark; -0.0 + 0.0 = +0.0 in both)
-    r6 = F.round(F.col("cov") * 1000000.0) / 1000000.0 + F.lit(0.0)
-    return res.select("i", "j", r6.alias("cov"))
-
-
-_SQL_ML_PCA_COV_EMBEDDINGS = """
-WITH v AS (
-  SELECT vec_id, embedding AS e FROM embeddings WHERE embedding IS NOT NULL
-),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-flat AS (SELECT vec_id, unnest(generate_series(1, len(e))) AS k, e FROM v),
-cells AS (SELECT vec_id, k - 1 AS dim, CAST(e[k] AS DOUBLE) AS x FROM flat),
-s AS (SELECT dim, sum(x) AS s FROM cells GROUP BY dim),
-gram AS (
-  SELECT a.dim AS i, b.dim AS j, sum(a.x * b.x) AS g
-  FROM cells a JOIN cells b USING (vec_id) GROUP BY 1, 2
-)
-SELECT g.i, g.j,
-  round(((g.g - sa.s * sb.s / nn.n) / (nn.n - 1)) * 1000000.0)
-    / 1000000.0 + 0.0 AS cov
-FROM gram g
-JOIN s sa ON g.i = sa.dim
-JOIN s sb ON g.j = sb.dim
-CROSS JOIN nn
-"""
-
-
 def _q_cluster_assign_embeddings(spark, sf_dir):
     """Nearest-centroid assignment as a standalone column transform (the
     map-only kernel shared by IVF and SemDeDup), under pinned centroids
@@ -7357,55 +5340,6 @@ SELECT vec_id, CAST(cid AS BIGINT) AS cluster FROM (
       c.cid ASC) AS pr
   FROM v CROSS JOIN c
 ) WHERE pr = 1
-"""
-
-
-def _q_analytics_normalize_orders(spark, sf_dir):
-    """Per-group score normalization, all three methods in one pass:
-    min-max and z-score are window AGGREGATES over the group partition (no
-    ordering → no sort; Catalyst shares ONE exchange across all windows),
-    percent_rank adds the ordered window on the same key. The rank method
-    is tie-safe cross-engine (ties share a value; order among ties is
-    irrelevant)."""
-    from bid_evaluation_spark.operators.analytics import normalize_scores
-
-    df = _t(spark, sf_dir, "orders")
-    res = normalize_scores(df, "o_totalprice", "o_orderpriority",
-                           method="minmax", out_col="mm")
-    res = normalize_scores(res, "o_totalprice", "o_orderpriority",
-                           method="zscore", out_col="z")
-    res = normalize_scores(res, "o_totalprice", "o_orderpriority",
-                           method="percent_rank", out_col="pr")
-    # + 0.0 canonicalizes IEEE −0.0 (a z-score an ulp below the group
-    # mean rounds to −0.0 on whichever engine's accumulation lands
-    # negative — caught by the round-7 full sf0.1 sweep)
-    return res.select("o_orderkey", "o_orderpriority",
-                      (_r4("mm") + F.lit(0.0)).alias("mm"),
-                      (_r4("z") + F.lit(0.0)).alias("z"),
-                      (_r4("pr") + F.lit(0.0)).alias("pr"))
-
-
-_SQL_ANALYTICS_NORMALIZE_ORDERS = """
-SELECT o_orderkey, o_orderpriority,
-  round(CASE WHEN mx <> mn THEN (v - mn) / (mx - mn) END * 10000.0)
-    / 10000.0 + 0.0 AS mm,
-  round(CASE WHEN sd > 0 THEN (v - mu) / sd END * 10000.0) / 10000.0
-    + 0.0 AS z,
-  round(pr * 10000.0) / 10000.0 + 0.0 AS pr
-FROM (
-  SELECT o_orderkey, o_orderpriority, CAST(o_totalprice AS DOUBLE) AS v,
-    min(CAST(o_totalprice AS DOUBLE))
-      OVER (PARTITION BY o_orderpriority) AS mn,
-    max(CAST(o_totalprice AS DOUBLE))
-      OVER (PARTITION BY o_orderpriority) AS mx,
-    avg(CAST(o_totalprice AS DOUBLE))
-      OVER (PARTITION BY o_orderpriority) AS mu,
-    stddev_samp(CAST(o_totalprice AS DOUBLE))
-      OVER (PARTITION BY o_orderpriority) AS sd,
-    percent_rank() OVER (PARTITION BY o_orderpriority
-                         ORDER BY o_totalprice) AS pr
-  FROM orders
-)
 """
 
 
@@ -7448,561 +5382,6 @@ SELECT n.doc_id AS needle_id, h.doc_id AS hay_id,
 FROM needles n JOIN toks h ON len(n.s) > 0 AND len(h.s) > 0
 WHERE CAST(len(list_intersect(n.s, h.s)) AS DOUBLE) / len(n.s)
       >= CAST(0.75 AS DOUBLE)
-"""
-
-
-def _q_metrics_psi_orders(spark, sf_dir):
-    """Distribution-drift monitor: PSI of order totals between an even-key
-    reference window and an odd-key current window with a +10% price
-    shift. Reference-quantile bins inline as literals (map-only
-    assignment both sides), empty bins clip at 1e-6 — the standard PSI
-    recipe, fully deterministic."""
-    from bid_evaluation_spark.operators.metrics import psi_drift
-
-    od = _t(spark, sf_dir, "orders")
-    ref = od.filter(F.col("o_orderkey") % 2 == 0)
-    cur = (od.filter(F.col("o_orderkey") % 2 == 1)
-           .withColumn("o_totalprice", F.col("o_totalprice") * 1.1))
-    res = psi_drift(ref, cur, "o_totalprice", n_bins=5)
-    return res.select("bin", "ref_n", "cur_n",
-                      _r4("ref_share").alias("ref_share"),
-                      _r4("cur_share").alias("cur_share"),
-                      _r4("psi_term").alias("psi_term"))
-
-
-_SQL_METRICS_PSI_ORDERS = """
-WITH ref AS (
-  SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-  WHERE o_orderkey % 2 = 0 AND o_totalprice IS NOT NULL
-),
-cur AS (
-  SELECT CAST(o_totalprice AS DOUBLE) * CAST(1.1 AS DOUBLE) AS v
-  FROM orders
-  WHERE o_orderkey % 2 = 1 AND o_totalprice IS NOT NULL
-),
-th AS (
-  SELECT quantile_cont(v, [CAST(0.2 AS DOUBLE), CAST(0.4 AS DOUBLE),
-                           CAST(0.6 AS DOUBLE), CAST(0.8 AS DOUBLE)]) AS t
-  FROM ref
-),
-rb AS (
-  SELECT CAST(v > t[1] AS INT) + CAST(v > t[2] AS INT)
-         + CAST(v > t[3] AS INT) + CAST(v > t[4] AS INT) AS bin,
-         count(*) AS ref_n
-  FROM ref, th GROUP BY 1
-),
-cb AS (
-  SELECT CAST(v > t[1] AS INT) + CAST(v > t[2] AS INT)
-         + CAST(v > t[3] AS INT) + CAST(v > t[4] AS INT) AS bin,
-         count(*) AS cur_n
-  FROM cur, th GROUP BY 1
-),
-grid AS (SELECT unnest(generate_series(0, 4)) AS bin),
-j AS (
-  SELECT g.bin, coalesce(rb.ref_n, 0) AS ref_n,
-         coalesce(cb.cur_n, 0) AS cur_n
-  FROM grid g LEFT JOIN rb ON g.bin = rb.bin LEFT JOIN cb ON g.bin = cb.bin
-),
-tot AS (SELECT CAST(sum(ref_n) AS DOUBLE) AS r,
-               CAST(sum(cur_n) AS DOUBLE) AS c FROM j)
-SELECT CAST(j.bin AS INT) AS bin, j.ref_n, j.cur_n,
-  round(greatest(j.ref_n / t.r, CAST(0.000001 AS DOUBLE)) * 10000.0)
-    / 10000.0 AS ref_share,
-  round(greatest(j.cur_n / t.c, CAST(0.000001 AS DOUBLE)) * 10000.0)
-    / 10000.0 AS cur_share,
-  round(((greatest(j.cur_n / t.c, CAST(0.000001 AS DOUBLE))
-          - greatest(j.ref_n / t.r, CAST(0.000001 AS DOUBLE)))
-         * ln(greatest(j.cur_n / t.c, CAST(0.000001 AS DOUBLE))
-              / greatest(j.ref_n / t.r, CAST(0.000001 AS DOUBLE))))
-        * 10000.0) / 10000.0 AS psi_term
-FROM j, tot t
-"""
-
-
-def _q_analytics_ab_test_events(spark, sf_dir):
-    """Experiment read-out: per-user conversion (any purchase event) by
-    user-parity variant — rates, Wilson 95% intervals, lift, pooled
-    two-proportion z. One groupBy(user) pass + a 2-row reduction; the
-    oracle replays every closed-form formula with identical literals."""
-    from bid_evaluation_spark.operators.analytics import ab_conversion_test
-
-    ev = _t(spark, sf_dir, "events")
-    users = (ev.groupBy("user_id")
-             .agg(F.max((F.col("event_type") == "purchase").cast("int"))
-                  .alias("converted"))
-             .withColumn("variant", (F.col("user_id") % 2).cast("int")))
-    res = ab_conversion_test(users, "variant", "converted")
-    return res.select(
-        "control", "treatment", "n_c", "n_t",
-        _r4("rate_c").alias("rate_c"), _r4("rate_t").alias("rate_t"),
-        _r4("lift_abs").alias("lift_abs"), _r4("lift_rel").alias("lift_rel"),
-        _r4("z").alias("z"),
-        _r4("ci_c_lo").alias("ci_c_lo"), _r4("ci_c_hi").alias("ci_c_hi"),
-        _r4("ci_t_lo").alias("ci_t_lo"), _r4("ci_t_hi").alias("ci_t_hi"))
-
-
-_AB_Z = repr(1.959963984540054)
-_AB_Z2 = repr(1.959963984540054 * 1.959963984540054)
-
-_SQL_ANALYTICS_AB_TEST_EVENTS = f"""
-WITH users AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv,
-         CAST(user_id % 2 AS INT) AS variant
-  FROM events GROUP BY user_id
-),
-c AS (
-  SELECT variant, CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(conv) AS DOUBLE) AS k
-  FROM users GROUP BY variant
-),
-w AS (
-  SELECT
-    (SELECT n FROM c WHERE variant = 0) AS nc,
-    (SELECT k FROM c WHERE variant = 0) AS kc,
-    (SELECT n FROM c WHERE variant = 1) AS nt,
-    (SELECT k FROM c WHERE variant = 1) AS kt
-)
-SELECT '0' AS control, '1' AS treatment,
-  CAST(nc AS BIGINT) AS n_c, CAST(nt AS BIGINT) AS n_t,
-  round(kc / nc * 10000.0) / 10000.0 AS rate_c,
-  round(kt / nt * 10000.0) / 10000.0 AS rate_t,
-  round((kt / nt - kc / nc) * 10000.0) / 10000.0 AS lift_abs,
-  round(CASE WHEN kc / nc > 0
-        THEN (kt / nt - kc / nc) / (kc / nc) END * 10000.0) / 10000.0
-    AS lift_rel,
-  round(CASE WHEN sqrt((kc + kt) / (nc + nt)
-                       * (1.0 - (kc + kt) / (nc + nt))
-                       * (1.0 / nc + 1.0 / nt)) > 0
-        THEN (kt / nt - kc / nc)
-             / sqrt((kc + kt) / (nc + nt)
-                    * (1.0 - (kc + kt) / (nc + nt))
-                    * (1.0 / nc + 1.0 / nt)) END * 10000.0) / 10000.0 AS z,
-  round(((kc / nc + {_AB_Z2} / (2.0 * nc)) / (1.0 + {_AB_Z2} / nc)
-         - {_AB_Z} * sqrt(kc / nc * (1.0 - kc / nc) / nc
-                          + {_AB_Z2} / (4.0 * nc * nc))
-           / (1.0 + {_AB_Z2} / nc)) * 10000.0) / 10000.0 AS ci_c_lo,
-  round(((kc / nc + {_AB_Z2} / (2.0 * nc)) / (1.0 + {_AB_Z2} / nc)
-         + {_AB_Z} * sqrt(kc / nc * (1.0 - kc / nc) / nc
-                          + {_AB_Z2} / (4.0 * nc * nc))
-           / (1.0 + {_AB_Z2} / nc)) * 10000.0) / 10000.0 AS ci_c_hi,
-  round(((kt / nt + {_AB_Z2} / (2.0 * nt)) / (1.0 + {_AB_Z2} / nt)
-         - {_AB_Z} * sqrt(kt / nt * (1.0 - kt / nt) / nt
-                          + {_AB_Z2} / (4.0 * nt * nt))
-           / (1.0 + {_AB_Z2} / nt)) * 10000.0) / 10000.0 AS ci_t_lo,
-  round(((kt / nt + {_AB_Z2} / (2.0 * nt)) / (1.0 + {_AB_Z2} / nt)
-         + {_AB_Z} * sqrt(kt / nt * (1.0 - kt / nt) / nt
-                          + {_AB_Z2} / (4.0 * nt * nt))
-           / (1.0 + {_AB_Z2} / nt)) * 10000.0) / 10000.0 AS ci_t_hi
-FROM w
-"""
-
-
-def _q_analytics_welch_events(spark, sf_dir):
-    """Welch's t for a continuous experiment metric: per-user event-value
-    sums compared between user-parity variants — one grouped stable
-    co-moment aggregate per variant (avg/var_samp, round-7 conditioning
-    fix), closed-form t + Welch-Satterthwaite dof. The oracle uses
-    DuckDB's matching stable aggregates."""
-    from bid_evaluation_spark.operators.analytics import welch_t_test
-
-    ev = _t(spark, sf_dir, "events")
-    users = (ev.groupBy("user_id")
-             .agg(F.coalesce(F.sum("value"), F.lit(0.0)).alias("m"))
-             .withColumn("variant", (F.col("user_id") % 2).cast("int")))
-    res = welch_t_test(users, "variant", "m")
-    return res.select("control", "treatment", "n_c", "n_t",
-                      _r4("mean_c").alias("mean_c"),
-                      _r4("mean_t").alias("mean_t"),
-                      _r4("diff").alias("diff"), _r4("t").alias("t"),
-                      _r4("dof").alias("dof"))
-
-
-_SQL_ANALYTICS_WELCH_EVENTS = """
-WITH users AS (
-  SELECT user_id, CAST(coalesce(sum(value), 0.0) AS DOUBLE) AS m,
-         CAST(user_id % 2 AS INT) AS variant
-  FROM events GROUP BY user_id
-),
-c AS (
-  SELECT variant, count(*) AS n, avg(m) AS mean_m, var_samp(m) AS var_m
-  FROM users GROUP BY variant
-),
-d AS (
-  SELECT
-    (SELECT n FROM c WHERE variant = 0) AS nc,
-    (SELECT n FROM c WHERE variant = 1) AS nt,
-    (SELECT mean_m FROM c WHERE variant = 0) AS mc,
-    (SELECT mean_m FROM c WHERE variant = 1) AS mt,
-    (SELECT var_m FROM c WHERE variant = 0)
-      / (SELECT n FROM c WHERE variant = 0) AS a,
-    (SELECT var_m FROM c WHERE variant = 1)
-      / (SELECT n FROM c WHERE variant = 1) AS b
-)
-SELECT '0' AS control, '1' AS treatment,
-  CAST(nc AS BIGINT) AS n_c, CAST(nt AS BIGINT) AS n_t,
-  round(mc * 10000.0) / 10000.0 AS mean_c,
-  round(mt * 10000.0) / 10000.0 AS mean_t,
-  round((mt - mc) * 10000.0) / 10000.0 AS diff,
-  round(CASE WHEN a + b > 0 THEN (mt - mc) / sqrt(a + b) END
-        * 10000.0) / 10000.0 AS t,
-  round(CASE WHEN (a * a / (nc - 1) + b * b / (nt - 1)) > 0
-        THEN (a + b) * (a + b) / (a * a / (nc - 1) + b * b / (nt - 1)) END
-        * 10000.0) / 10000.0 AS dof
-FROM d
-"""
-
-
-def _q_analytics_winsorized_orders(spark, sf_dir):
-    """Robust per-priority revenue: means with values clipped at each
-    group's own [5%, 95%] exact quantiles — per-group thresholds
-    broadcast-joined back, map-only clipping, one grouped agg."""
-    from bid_evaluation_spark.operators.analytics import (
-        winsorized_mean_by_group)
-
-    od = _t(spark, sf_dir, "orders")
-    res = winsorized_mean_by_group(od, "o_orderpriority", "o_totalprice",
-                                   lower=0.05, upper=0.95)
-    return res.select("o_orderpriority", "n",
-                      _r4("mean_raw").alias("mean_raw"),
-                      _r4("mean_winsorized").alias("mean_winsorized"),
-                      "n_clipped")
-
-
-_SQL_ANALYTICS_WINSORIZED_ORDERS = """
-WITH th AS (
-  SELECT o_orderpriority,
-         quantile_cont(CAST(o_totalprice AS DOUBLE),
-                       [CAST(0.05 AS DOUBLE), CAST(0.95 AS DOUBLE)]) AS t
-  FROM orders WHERE o_totalprice IS NOT NULL
-  GROUP BY o_orderpriority
-)
-SELECT o.o_orderpriority, count(*) AS n,
-  round(avg(CAST(o.o_totalprice AS DOUBLE)) * 10000.0) / 10000.0
-    AS mean_raw,
-  round(avg(least(greatest(CAST(o.o_totalprice AS DOUBLE), t[1]), t[2]))
-        * 10000.0) / 10000.0 AS mean_winsorized,
-  CAST(sum(CASE WHEN CAST(o.o_totalprice AS DOUBLE) < t[1]
-                  OR CAST(o.o_totalprice AS DOUBLE) > t[2]
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped
-FROM orders o JOIN th ON o.o_orderpriority = th.o_orderpriority
-WHERE o.o_totalprice IS NOT NULL
-GROUP BY o.o_orderpriority
-"""
-
-
-def _q_analytics_cuped_events(spark, sf_dir):
-    """CUPED variance reduction: per-user purchase value adjusted by the
-    user's view-value covariate — θ and x̄ from one fused stable
-    co-moment aggregate (covar_samp/var_samp, round-7 conditioning fix)
-    inlined as literals, then a map-only projection. The oracle uses
-    DuckDB's matching stable aggregates."""
-    from bid_evaluation_spark.operators.analytics import cuped_adjust
-
-    ev = _t(spark, sf_dir, "events")
-    users = (ev.groupBy("user_id").agg(
-        F.coalesce(F.sum(F.when(F.col("event_type") == "view",
-                                F.col("value"))), F.lit(0.0)).alias("c"),
-        F.coalesce(F.sum(F.when(F.col("event_type") == "purchase",
-                                F.col("value"))), F.lit(0.0)).alias("m")))
-    res = cuped_adjust(users, "m", "c")
-    return res.select("user_id", _r4("m").alias("m"),
-                      _r4("m_cuped").alias("m_cuped"))
-
-
-_SQL_ANALYTICS_CUPED_EVENTS = """
-WITH u AS (
-  SELECT user_id,
-    CAST(coalesce(sum(CASE WHEN event_type = 'view' THEN value END), 0.0)
-         AS DOUBLE) AS c,
-    CAST(coalesce(sum(CASE WHEN event_type = 'purchase' THEN value END),
-                  0.0) AS DOUBLE) AS m
-  FROM events GROUP BY user_id
-),
-s AS (
-  SELECT avg(c) AS mx, covar_samp(c, m) AS cxy, var_samp(c) AS vx
-  FROM u
-)
-SELECT user_id, round(m * 10000.0) / 10000.0 AS m,
-  round((m - (CASE WHEN vx > 0 THEN cxy / vx ELSE 0.0 END)
-             * (c - mx)) * 10000.0) / 10000.0
-    AS m_cuped
-FROM u, s
-"""
-
-
-def _q_metrics_w1_orders(spark, sf_dir):
-    """1-D Wasserstein distance between the drift windows — the
-    magnitude-aware companion (KS: IF they differ; W1: by HOW MUCH in
-    price units). Sum of |cdf gap| × Δx over the merged bounded
-    quantized-value support."""
-    from bid_evaluation_spark.operators.metrics import wasserstein_1d
-
-    od = _t(spark, sf_dir, "orders")
-    ref = od.filter(F.col("o_orderkey") % 2 == 0)
-    cur = (od.filter(F.col("o_orderkey") % 2 == 1)
-           .withColumn("o_totalprice", F.col("o_totalprice") * 1.1))
-    res = wasserstein_1d(ref, cur, "o_totalprice", digits=4)
-    return res.select(_r4("w1").alias("w1"), "n_a", "n_b")
-
-
-_SQL_METRICS_W1_ORDERS = """
-WITH ref AS (
-  SELECT round(CAST(o_totalprice AS DOUBLE) * 10000.0) / 10000.0 AS v
-  FROM orders WHERE o_orderkey % 2 = 0 AND o_totalprice IS NOT NULL
-),
-cur AS (
-  SELECT round(CAST(o_totalprice AS DOUBLE) * CAST(1.1 AS DOUBLE)
-               * 10000.0) / 10000.0 AS v
-  FROM orders WHERE o_orderkey % 2 = 1 AND o_totalprice IS NOT NULL
-),
-pa AS (SELECT v, count(*) AS ca FROM ref GROUP BY v),
-pb AS (SELECT v, count(*) AS cb FROM cur GROUP BY v),
-m AS (
-  SELECT coalesce(pa.v, pb.v) AS v, coalesce(ca, 0) AS ca,
-         coalesce(cb, 0) AS cb
-  FROM pa FULL OUTER JOIN pb ON pa.v = pb.v
-),
-tot AS (SELECT CAST(sum(ca) AS DOUBLE) AS na, CAST(sum(cb) AS DOUBLE) AS nb,
-               sum(ca) AS ia, sum(cb) AS ib FROM m),
-g AS (
-  SELECT abs(CAST(sum(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                  AS DOUBLE) / t.na
-             - CAST(sum(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                    AS DOUBLE) / t.nb)
-         * (lead(v) OVER (ORDER BY v) - v) AS term
-  FROM m, tot t
-)
-SELECT round(sum(term) * 10000.0) / 10000.0 AS w1,
-       (SELECT CAST(ia AS BIGINT) FROM tot) AS n_a,
-       (SELECT CAST(ib AS BIGINT) FROM tot) AS n_b
-FROM g
-"""
-
-
-def _q_metrics_chi2_documents(spark, sf_dir):
-    """Categorical drift: chi-square homogeneity + Cramér's V of the
-    language distribution between two document windows (even vs odd
-    doc_id) — two tiny per-window count tables full-outer merged,
-    expected counts from pooled shares, one aggregate."""
-    from bid_evaluation_spark.operators.metrics import chi_square_drift
-
-    df = _t(spark, sf_dir, "documents")
-    ref = df.filter(F.col("doc_id") % 2 == 0)
-    cur = df.filter(F.col("doc_id") % 2 == 1)
-    res = chi_square_drift(ref, cur, "lang")
-    return res.select(_r4("chi2").alias("chi2"), "dof",
-                      _r4("cramers_v").alias("cramers_v"),
-                      "n_ref", "n_cur")
-
-
-_SQL_METRICS_CHI2_DOCUMENTS = """
-WITH r AS (
-  SELECT coalesce(lang, chr(0) || 'null') AS c, count(*) AS rn
-  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1
-),
-u AS (
-  SELECT coalesce(lang, chr(0) || 'null') AS c, count(*) AS un
-  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1
-),
-m AS (
-  SELECT coalesce(r.c, u.c) AS c, coalesce(rn, 0) AS rn,
-         coalesce(un, 0) AS un
-  FROM r FULL OUTER JOIN u ON r.c = u.c
-),
-tot AS (SELECT CAST(sum(rn) AS DOUBLE) AS nr, CAST(sum(un) AS DOUBLE) AS nu,
-               sum(rn) AS ir, sum(un) AS iu, count(*) AS k FROM m),
-agg AS (
-  SELECT sum(
-    (m.rn - (m.rn + m.un) / (t.nr + t.nu) * t.nr)
-      * (m.rn - (m.rn + m.un) / (t.nr + t.nu) * t.nr)
-      / ((m.rn + m.un) / (t.nr + t.nu) * t.nr)
-    + (m.un - (m.rn + m.un) / (t.nr + t.nu) * t.nu)
-      * (m.un - (m.rn + m.un) / (t.nr + t.nu) * t.nu)
-      / ((m.rn + m.un) / (t.nr + t.nu) * t.nu)) AS chi2,
-    max(t.k) AS k, max(t.nr + t.nu) AS n,
-    max(t.ir) AS ir, max(t.iu) AS iu
-  FROM m, tot t
-)
-SELECT round(chi2 * 10000.0) / 10000.0 AS chi2,
-       CAST(k - 1 AS BIGINT) AS dof,
-       round(sqrt(chi2 / n) * 10000.0) / 10000.0 AS cramers_v,
-       CAST(ir AS BIGINT) AS n_ref, CAST(iu AS BIGINT) AS n_cur
-FROM agg
-"""
-
-
-def _q_metrics_jsd_orders(spark, sf_dir):
-    """Jensen-Shannon divergence over the same drift windows and
-    reference-quantile bins as the PSI row — bounded symmetric drift;
-    a projection over the oracled PSI bin table."""
-    from bid_evaluation_spark.operators.metrics import js_divergence
-
-    od = _t(spark, sf_dir, "orders")
-    ref = od.filter(F.col("o_orderkey") % 2 == 0)
-    cur = (od.filter(F.col("o_orderkey") % 2 == 1)
-           .withColumn("o_totalprice", F.col("o_totalprice") * 1.1))
-    res = js_divergence(ref, cur, "o_totalprice", n_bins=5)
-    return res.select("bin", _r4("ref_share").alias("ref_share"),
-                      _r4("cur_share").alias("cur_share"),
-                      _r4("jsd_term").alias("jsd_term"))
-
-
-_SQL_METRICS_JSD_ORDERS = """
-WITH ref AS (
-  SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-  WHERE o_orderkey % 2 = 0 AND o_totalprice IS NOT NULL
-),
-cur AS (
-  SELECT CAST(o_totalprice AS DOUBLE) * CAST(1.1 AS DOUBLE) AS v
-  FROM orders
-  WHERE o_orderkey % 2 = 1 AND o_totalprice IS NOT NULL
-),
-th AS (
-  SELECT quantile_cont(v, [CAST(0.2 AS DOUBLE), CAST(0.4 AS DOUBLE),
-                           CAST(0.6 AS DOUBLE), CAST(0.8 AS DOUBLE)]) AS t
-  FROM ref
-),
-rb AS (
-  SELECT CAST(v > t[1] AS INT) + CAST(v > t[2] AS INT)
-         + CAST(v > t[3] AS INT) + CAST(v > t[4] AS INT) AS bin,
-         count(*) AS ref_n
-  FROM ref, th GROUP BY 1
-),
-cb AS (
-  SELECT CAST(v > t[1] AS INT) + CAST(v > t[2] AS INT)
-         + CAST(v > t[3] AS INT) + CAST(v > t[4] AS INT) AS bin,
-         count(*) AS cur_n
-  FROM cur, th GROUP BY 1
-),
-grid AS (SELECT unnest(generate_series(0, 4)) AS bin),
-j AS (
-  SELECT g.bin, coalesce(rb.ref_n, 0) AS ref_n,
-         coalesce(cb.cur_n, 0) AS cur_n
-  FROM grid g LEFT JOIN rb ON g.bin = rb.bin LEFT JOIN cb ON g.bin = cb.bin
-),
-tot AS (SELECT CAST(sum(ref_n) AS DOUBLE) AS r,
-               CAST(sum(cur_n) AS DOUBLE) AS c FROM j),
-sh AS (
-  SELECT j.bin,
-         greatest(j.ref_n / t.r, CAST(0.000001 AS DOUBLE)) AS p,
-         greatest(j.cur_n / t.c, CAST(0.000001 AS DOUBLE)) AS q
-  FROM j, tot t
-)
-SELECT CAST(bin AS INT) AS bin,
-  round(p * 10000.0) / 10000.0 AS ref_share,
-  round(q * 10000.0) / 10000.0 AS cur_share,
-  round((0.5 * p * ln(p / ((p + q) / 2.0))
-         + 0.5 * q * ln(q / ((p + q) / 2.0))) * 10000.0) / 10000.0
-    AS jsd_term
-FROM sh
-"""
-
-
-def _q_metrics_ks_orders(spark, sf_dir):
-    """Two-sample KS statistic between the same drift windows as the PSI
-    row (even-key reference vs odd-key +10%): per-value counts full-outer
-    merged, one cumulative window over the bounded quantized-value table,
-    max CDF gap. The binning-free companion to PSI."""
-    from bid_evaluation_spark.operators.metrics import ks_statistic
-
-    od = _t(spark, sf_dir, "orders")
-    ref = od.filter(F.col("o_orderkey") % 2 == 0)
-    cur = (od.filter(F.col("o_orderkey") % 2 == 1)
-           .withColumn("o_totalprice", F.col("o_totalprice") * 1.1))
-    res = ks_statistic(ref, cur, "o_totalprice", digits=4)
-    return res.select(_r4("ks").alias("ks"), "n_a", "n_b")
-
-
-_SQL_METRICS_KS_ORDERS = """
-WITH ref AS (
-  SELECT round(CAST(o_totalprice AS DOUBLE) * 10000.0) / 10000.0 AS v
-  FROM orders WHERE o_orderkey % 2 = 0 AND o_totalprice IS NOT NULL
-),
-cur AS (
-  SELECT round(CAST(o_totalprice AS DOUBLE) * CAST(1.1 AS DOUBLE)
-               * 10000.0) / 10000.0 AS v
-  FROM orders WHERE o_orderkey % 2 = 1 AND o_totalprice IS NOT NULL
-),
-pa AS (SELECT v, count(*) AS ca FROM ref GROUP BY v),
-pb AS (SELECT v, count(*) AS cb FROM cur GROUP BY v),
-m AS (
-  SELECT coalesce(pa.v, pb.v) AS v, coalesce(ca, 0) AS ca,
-         coalesce(cb, 0) AS cb
-  FROM pa FULL OUTER JOIN pb ON pa.v = pb.v
-),
-tot AS (SELECT CAST(sum(ca) AS DOUBLE) AS na,
-               CAST(sum(cb) AS DOUBLE) AS nb,
-               sum(ca) AS ia, sum(cb) AS ib FROM m),
-g AS (
-  SELECT abs(CAST(sum(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                  AS DOUBLE) / t.na
-             - CAST(sum(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-                    AS DOUBLE) / t.nb) AS gap
-  FROM m, tot t
-)
-SELECT round(max(gap) * 10000.0) / 10000.0 AS ks,
-       (SELECT CAST(ia AS BIGINT) FROM tot) AS n_a,
-       (SELECT CAST(ib AS BIGINT) FROM tot) AS n_b
-FROM g
-"""
-
-
-def _qm_cases(n: int) -> str:
-    out = []
-    for i in range(n):
-        ub = "<=" if i == n - 1 else "<"
-        out.append(
-            f"WHEN x >= qa[{i + 1}] AND x {ub} qa[{i + 2}] THEN "
-            f"CASE WHEN qa[{i + 2}] > qa[{i + 1}] THEN "
-            f"qb[{i + 1}] + (x - qa[{i + 1}]) / (qa[{i + 2}] - qa[{i + 1}])"
-            f" * (qb[{i + 2}] - qb[{i + 1}]) "
-            f"ELSE qb[{i + 1}] END")
-    return "\n    ".join(out)
-
-
-_QM_QS = ", ".join(f"CAST({i / 8} AS DOUBLE)" for i in range(9))
-
-
-def _q_analytics_qmatch_group_orders(spark, sf_dir):
-    """Per-priority harmonization: each priority's order totals map
-    through that group's OWN quantile landmarks onto the global price
-    scale — the annotator-batch normalization. Source landmarks
-    broadcast-join back (no driver literals for the source side); the
-    shared reference landmarks inline as literals."""
-    from bid_evaluation_spark.operators.analytics import (
-        quantile_match_by_group)
-
-    od = _t(spark, sf_dir, "orders")
-    res = quantile_match_by_group(od, "o_orderpriority", "o_totalprice",
-                                  od, "o_totalprice", n_segments=8,
-                                  out_col="matched")
-    return res.select("o_orderkey", "o_orderpriority",
-                      _r4("matched").alias("matched"))
-
-
-_SQL_ANALYTICS_QMATCH_GROUP_ORDERS = f"""
-WITH lb AS (
-  SELECT quantile_cont(CAST(o_totalprice AS DOUBLE), [{_QM_QS}]) AS qb
-  FROM orders
-),
-la AS (
-  SELECT o_orderpriority,
-         quantile_cont(CAST(o_totalprice AS DOUBLE), [{_QM_QS}]) AS qa
-  FROM orders WHERE o_totalprice IS NOT NULL
-  GROUP BY o_orderpriority
-)
-SELECT o.o_orderkey, o.o_orderpriority,
-  round(CASE
-    WHEN x IS NULL THEN NULL
-    WHEN x < qa[1] THEN qb[1]
-    WHEN x > qa[9] THEN qb[9]
-    {_qm_cases(8)}
-  END * 10000.0) / 10000.0 AS matched
-FROM (SELECT o_orderkey, o_orderpriority,
-             CAST(o_totalprice AS DOUBLE) AS x FROM orders) o
-LEFT JOIN la ON o.o_orderpriority = la.o_orderpriority
-CROSS JOIN lb
 """
 
 
@@ -8058,95 +5437,6 @@ SELECT b.doc_id,
         * 10000.0) / 10000.0 AS novelty
 FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) b
 LEFT JOIN per p ON b.doc_id = p.doc_id
-"""
-
-
-def _q_analytics_quantile_match_orders(spark, sf_dir):
-    """Distribution harmonization: order totals remapped onto the
-    lineitem price distribution by piecewise-affine quantile matching
-    (8 exact-eighth landmarks per side, two fused percentile aggregates
-    → literals, then a pure map-only codegen expression — no window, no
-    join). The oracle recomputes both landmark sets with quantile_cont
-    and replays the identical segment arithmetic."""
-    from bid_evaluation_spark.operators.analytics import quantile_match
-
-    od = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    res = quantile_match(od, "o_totalprice", li, "l_extendedprice",
-                         n_segments=8, out_col="matched")
-    return res.select("o_orderkey", _r4("matched").alias("matched"))
-
-
-_SQL_ANALYTICS_QUANTILE_MATCH_ORDERS = f"""
-WITH la AS (
-  SELECT quantile_cont(CAST(o_totalprice AS DOUBLE), [{_QM_QS}]) AS qa
-  FROM orders
-),
-lb AS (
-  SELECT quantile_cont(CAST(l_extendedprice AS DOUBLE), [{_QM_QS}]) AS qb
-  FROM lineitem
-)
-SELECT o_orderkey,
-  round(CASE
-    WHEN x IS NULL THEN NULL
-    WHEN x < qa[1] THEN qb[1]
-    WHEN x > qa[9] THEN qb[9]
-    {_qm_cases(8)}
-  END * 10000.0) / 10000.0 AS matched
-FROM (SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS x FROM orders)
-CROSS JOIN la CROSS JOIN lb
-"""
-
-
-def _q_metrics_calibration_by_group_embeddings(spark, sf_dir):
-    """Per-segment calibration table: each label-bucket segment gets its
-    own equal-population score bands and base rate; the per-group
-    thresholds broadcast-join back (no driver literals, group cardinality
-    unbounded). Same probe scorer as the global calibration row."""
-    from bid_evaluation_spark.operators.metrics import (
-        calibration_table_by_group)
-
-    df = _t(spark, sf_dir, "embeddings")
-    scored = df.select(
-        (F.col("label") % 3).cast("long").alias("seg"),
-        (F.lit(1.0) / (F.lit(1.0)
-                       + F.exp(-F.element_at(F.col("embedding"), 1)
-                               .cast("double")))).alias("prob"),
-        (F.col("label") >= 5).cast("double").alias("_y"))
-    res = calibration_table_by_group(scored, "seg", "_y", "prob", n_bins=4)
-    return res.select("seg", "bin", "n",
-                      _r4("mean_prob").alias("mean_prob"),
-                      _r4("pos_rate").alias("pos_rate"),
-                      _r4("lift").alias("lift"))
-
-
-_SQL_METRICS_CALIBRATION_BY_GROUP_EMBEDDINGS = """
-WITH scored AS (
-  SELECT CAST(label % 3 AS BIGINT) AS seg,
-         1.0 / (1.0 + exp(-CAST(embedding[1] AS DOUBLE))) AS prob,
-         CAST(label >= 5 AS DOUBLE) AS y
-  FROM embeddings
-),
-th AS (
-  SELECT seg,
-         quantile_cont(prob, [CAST(0.25 AS DOUBLE), CAST(0.5 AS DOUBLE),
-                              CAST(0.75 AS DOUBLE)]) AS t,
-         avg(y) AS base
-  FROM scored GROUP BY seg
-),
-binned AS (
-  SELECT s.seg,
-         CAST(s.prob > t[1] AS INT) + CAST(s.prob > t[2] AS INT)
-           + CAST(s.prob > t[3] AS INT) AS bin,
-         s.prob, s.y, th.base
-  FROM scored s JOIN th ON s.seg = th.seg
-)
-SELECT seg, bin, count(*) AS n,
-  round(avg(prob) * 10000.0) / 10000.0 AS mean_prob,
-  round(avg(y) * 10000.0) / 10000.0 AS pos_rate,
-  round(CASE WHEN max(base) > 0 THEN avg(y) / max(base) END
-        * 10000.0) / 10000.0 AS lift
-FROM binned GROUP BY seg, bin
 """
 
 
@@ -8247,139 +5537,6 @@ WHERE NOT EXISTS (SELECT 1 FROM dropped x WHERE x.id = d.doc_id)
 """
 
 
-def _q_metrics_rbo_supplier(spark, sf_dir):
-    """Rank-biased overlap between two supplier rankings (pure account
-    balance vs nation-grouped balance) — how much two evaluator
-    configurations agree, top-weighted (p = 0.9). The depth sum is
-    inverted into a per-item literal-array lookup g(max(ra, rb)), so the
-    plan is ONE equi-join + one aggregate — no per-depth pass."""
-    from pyspark.sql import Window
-
-    from bid_evaluation_spark.operators.metrics import rank_biased_overlap
-
-    sup = _t(spark, sf_dir, "supplier")
-    wa = Window.orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
-    wb = Window.orderBy(F.asc("s_nationkey"), F.desc("s_acctbal"),
-                        F.asc("s_suppkey"))
-    ra = sup.select("s_suppkey", F.row_number().over(wa).alias("rnk"))
-    rb = sup.select("s_suppkey", F.row_number().over(wb).alias("rnk"))
-    res = rank_biased_overlap(ra, rb, "s_suppkey", p=0.9)
-    return res.select(_r4("rbo").alias("rbo"), "depth")
-
-
-_SQL_METRICS_RBO_SUPPLIER = """
-WITH ra AS (
-  SELECT s_suppkey AS id,
-         row_number() OVER (ORDER BY s_acctbal DESC, s_suppkey) AS ra
-  FROM supplier
-),
-rb AS (
-  SELECT s_suppkey AS id,
-         row_number() OVER (ORDER BY s_nationkey, s_acctbal DESC,
-                            s_suppkey) AS rb
-  FROM supplier
-),
-n AS (SELECT count(*) AS d FROM ra),
-j AS (SELECT greatest(ra.ra, rb.rb) AS m FROM ra JOIN rb ON ra.id = rb.id),
-terms AS (
-  SELECT sum(power(CAST(0.9 AS DOUBLE), dd - 1) / dd) AS gsum
-  FROM j CROSS JOIN n,
-       unnest(generate_series(1, (SELECT d FROM n))) AS t(dd)
-  WHERE dd >= j.m AND dd <= n.d
-)
-SELECT round(((CAST(1.0 AS DOUBLE) - CAST(0.9 AS DOUBLE)) * gsum)
-             * 10000.0) / 10000.0 AS rbo,
-       (SELECT d FROM n) AS depth
-FROM terms
-"""
-
-
-def _q_metrics_auc_by_group_embeddings(spark, sf_dir):
-    """Segment-level model evaluation: tie-corrected Mann-Whitney AUC per
-    label-bucket segment for the sigmoid probe scorer. Every stage keys
-    by the group — the per-(group, score) table bounds the window input,
-    the rank window partitions by group (never global)."""
-    from bid_evaluation_spark.operators.metrics import roc_auc_by_group
-
-    df = _t(spark, sf_dir, "embeddings")
-    scored = df.select(
-        (F.col("label") % 3).cast("long").alias("seg"),
-        (F.lit(1.0) / (F.lit(1.0)
-                       + F.exp(-F.element_at(F.col("embedding"), 1)
-                               .cast("double")))).alias("prob"),
-        (F.col("label") >= 5).cast("double").alias("_y"))
-    res = roc_auc_by_group(scored, "seg", "_y", "prob", digits=6)
-    return res.select("seg", _r4("auc").alias("auc"), "n_pos", "n_neg")
-
-
-_SQL_METRICS_AUC_BY_GROUP_EMBEDDINGS = """
-WITH scored AS (
-  SELECT CAST(label % 3 AS BIGINT) AS seg,
-         round(1.0 / (1.0 + exp(-CAST(embedding[1] AS DOUBLE)))
-               * 1000000.0) / 1000000.0 AS s,
-         CAST(label >= 5 AS DOUBLE) AS y
-  FROM embeddings
-),
-per_score AS (
-  SELECT seg, s, CAST(count(*) AS DOUBLE) AS n, sum(y) AS np
-  FROM scored GROUP BY seg, s
-),
-ranked AS (
-  SELECT seg, s, n, np,
-         coalesce(sum(n) OVER (PARTITION BY seg ORDER BY s
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND 1 PRECEDING), 0.0) AS before
-  FROM per_score
-),
-agg AS (
-  SELECT seg, sum(np * (before + (n + 1.0) / 2.0)) AS rs,
-         sum(np) AS npos, sum(n - np) AS nneg
-  FROM ranked GROUP BY seg
-)
-SELECT seg,
-  round(CASE WHEN npos > 0 AND nneg > 0
-        THEN (rs - npos * (npos + 1.0) / 2.0) / (npos * nneg) END
-        * 10000.0) / 10000.0 AS auc,
-  CAST(npos AS BIGINT) AS n_pos, CAST(nneg AS BIGINT) AS n_neg
-FROM agg
-"""
-
-
-def _q_ts_ewma_events(spark, sf_dir):
-    """Per-user EWMA of event values (α = 0.25 — binary-exact literal):
-    a sequential recurrence no window frame expresses, run as one Arrow
-    kernel per key and value-oracled by a RECURSIVE CTE replaying
-    ``α·x + (1−α)·s`` with the identical operation order (bit-identical
-    doubles before the shared 1e-4 rounding)."""
-    from bid_evaluation_spark.operators.timeseries import ewma_by_key
-
-    ev = _t(spark, sf_dir, "events")
-    res = ewma_by_key(ev, "user_id", "ts", "value", "event_id", alpha=0.25)
-    return res.select("user_id", "event_id", _r4("value").alias("value"),
-                      _r4("ewma").alias("ewma"))
-
-
-_SQL_TS_EWMA_EVENTS = """
-WITH RECURSIVE e AS (
-  SELECT user_id, event_id, CAST(value AS DOUBLE) AS v,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS i
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-r(user_id, i, event_id, v, s) AS (
-  SELECT user_id, i, event_id, v, v FROM e WHERE i = 1
-  UNION ALL
-  SELECT e.user_id, e.i, e.event_id, e.v,
-         CAST(0.25 AS DOUBLE) * e.v
-           + (CAST(1.0 AS DOUBLE) - CAST(0.25 AS DOUBLE)) * r.s
-  FROM r JOIN e ON e.user_id = r.user_id AND e.i = r.i + 1
-)
-SELECT user_id, event_id, round(v * 10000.0) / 10000.0 AS value,
-       round(s * 10000.0) / 10000.0 AS ewma
-FROM r
-"""
-
-
 def _q_dedup_jaccard_prefix_documents(spark, sf_dir, _mod=_DOCS_SAMPLE_MOD):
     """EXACT token-set Jaccard ≥ 0.75 join via prefix filtering (PPJoin
     family) — recall 1 by the prefix lemma, so the all-pairs oracle
@@ -8427,74 +5584,6 @@ WHERE CAST(i AS DOUBLE) / (na.n + nb.n - i) >= CAST(0.75 AS DOUBLE)
 _SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS = (
     _SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS_TMPL.format(
         where=_sample_where(_DOCS_SAMPLE_MOD)))
-
-
-def _q_graph_triangles_events(spark, sf_dir):
-    """Per-node triangle counts + local clustering coefficients over the
-    user co-occurrence graph (users sharing an (event_type, hour) cell).
-    Degree-ordered orientation bounds the wedge join's fan-out by
-    O(sqrt(m)) on any graph — the celebrity-node guard — so the plan is
-    three equi-joins + aggregations, no cartesian. The oracle recounts
-    triangles with the canonical u<v<w triple join."""
-    from bid_evaluation_spark.operators.graph import triangle_counts
-
-    ev = _t(spark, sf_dir, "events")
-    co = (ev.select("event_type",
-                    F.floor(F.col("ts").cast("double") / 3600)
-                    .cast("long").alias("hr"), "user_id")
-          .distinct())
-    # r12 opt (the basket-array lesson): per-cell sorted user arrays +
-    # posexplode/slice generate the same u<v pair set map-side after
-    # ONE groupBy shuffle, instead of a keyed self-join that exchanges
-    # the co table twice (interleaved A/B 3.4-3.9 -> 1.9-2.6 s warm;
-    # edge sets verified identical both ways with exceptAll)
-    cells = (co.groupBy("event_type", "hr")
-             .agg(F.sort_array(F.collect_set("user_id")).alias("us")))
-    ex = cells.select(F.posexplode("us").alias("i", "u"), F.col("us"))
-    edges = (ex.select(
-        "u", F.explode(F.expr("slice(us, i + 2, size(us))")).alias("v"))
-        .distinct())
-    res = triangle_counts(edges, "u", "v")
-    return res.select("node", "degree", "triangles",
-                      _r4("clustering_coeff").alias("clustering_coeff"))
-
-
-_SQL_GRAPH_TRIANGLES_EVENTS = """
-WITH co AS (
-  SELECT DISTINCT event_type,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hr, user_id
-  FROM events
-),
-e AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM co a JOIN co b
-    ON a.event_type = b.event_type AND a.hr = b.hr
-   AND a.user_id < b.user_id
-),
-deg AS (
-  SELECT n, count(*) AS deg FROM (
-    SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e
-  ) GROUP BY n
-),
-tri AS (
-  SELECT e1.u AS x, e1.v AS y, e2.v AS z
-  FROM e e1
-  JOIN e e2 ON e2.u = e1.v
-  JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-),
-per AS (
-  SELECT n, count(*) AS triangles FROM (
-    SELECT x AS n FROM tri UNION ALL SELECT y AS n FROM tri
-    UNION ALL SELECT z AS n FROM tri
-  ) GROUP BY n
-)
-SELECT d.n AS node, d.deg AS degree,
-  CAST(coalesce(p.triangles, 0) AS BIGINT) AS triangles,
-  CASE WHEN d.deg >= 2 THEN
-    round(2.0 * coalesce(p.triangles, 0) / (d.deg * (d.deg - 1))
-          * 10000.0) / 10000.0 END AS clustering_coeff
-FROM deg d LEFT JOIN per p ON d.n = p.n
-"""
 
 
 def _q_sketch_cms_by_group_documents(spark, sf_dir):
@@ -8546,51 +5635,6 @@ ranked AS (
   FROM est e JOIN exact x ON e.lang = x.lang AND e.token = x.token
 )
 SELECT lang, token, est, exact FROM ranked WHERE rn <= 5
-"""
-
-
-def _q_analytics_weighted_median_lineitem(spark, sf_dir):
-    """Quantity-weighted price quantiles per return flag (the
-    token-weighted median-length question in TPC-H clothes): one
-    group-keyed window pass for the running weight sum, one grouped agg.
-    Tie runs cannot change the selected value (the crossing test reads
-    the run-end cumulative weight), so no rounding is needed on the
-    selection — output values are exact input values."""
-    from bid_evaluation_spark.operators.analytics import (
-        weighted_quantile_by_group)
-
-    li = _t(spark, sf_dir, "lineitem")
-    res = weighted_quantile_by_group(li, "l_returnflag", "l_extendedprice",
-                                     "l_quantity", quantiles=(0.25, 0.5, 0.9))
-    return res.select("l_returnflag",
-                      _r4("wq_0_25").alias("wq25"),
-                      _r4("wq_0_5").alias("wq50"),
-                      _r4("wq_0_9").alias("wq90"))
-
-
-_SQL_ANALYTICS_WEIGHTED_MEDIAN_LINEITEM = """
-WITH base AS (
-  SELECT l_returnflag, CAST(l_extendedprice AS DOUBLE) AS v,
-         CAST(l_quantity AS DOUBLE) AS w
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-    AND l_quantity >= 0
-),
-marked AS (
-  SELECT l_returnflag, v,
-    sum(w) OVER (PARTITION BY l_returnflag ORDER BY v
-                 ROWS UNBOUNDED PRECEDING) AS cum,
-    sum(w) OVER (PARTITION BY l_returnflag) AS tot
-  FROM base
-)
-SELECT l_returnflag,
-  round(min(CASE WHEN cum >= CAST(0.25 AS DOUBLE) * tot THEN v END)
-        * 10000.0) / 10000.0 AS wq25,
-  round(min(CASE WHEN cum >= CAST(0.5 AS DOUBLE) * tot THEN v END)
-        * 10000.0) / 10000.0 AS wq50,
-  round(min(CASE WHEN cum >= CAST(0.9 AS DOUBLE) * tot THEN v END)
-        * 10000.0) / 10000.0 AS wq90
-FROM marked GROUP BY l_returnflag
 """
 
 
@@ -8713,137 +5757,6 @@ FROM pairs WHERE j >= 0.2
 """
 
 
-def _q_metrics_calibration_embeddings(spark, sf_dir):
-    """Calibration / decile-lift table for a deterministic probe scorer
-    (sigmoid of the first embedding component) against label >= 5:
-    equal-population score bands from exact percentile thresholds inlined
-    as literals (map-only assignment — no ntile global sort), then one
-    grouped agg for count / mean prob / positive rate / lift."""
-    from bid_evaluation_spark.operators.metrics import calibration_table
-
-    df = _t(spark, sf_dir, "embeddings")
-    scored = df.select(
-        (F.lit(1.0) / (F.lit(1.0)
-                       + F.exp(-F.element_at(F.col("embedding"), 1)
-                               .cast("double")))).alias("prob"),
-        (F.col("label") >= 5).cast("double").alias("_y"))
-    res = calibration_table(scored, "_y", "prob", n_bins=5)
-    return res.select("bin", "n", _r4("mean_prob").alias("mean_prob"),
-                      _r4("pos_rate").alias("pos_rate"),
-                      _r4("lift").alias("lift"))
-
-
-_SQL_METRICS_CALIBRATION_EMBEDDINGS = """
-WITH scored AS (
-  SELECT 1.0 / (1.0 + exp(-CAST(embedding[1] AS DOUBLE))) AS prob,
-         CAST(label >= 5 AS DOUBLE) AS y
-  FROM embeddings
-),
-th AS (
-  SELECT quantile_cont(prob, [
-           CAST(0.2 AS DOUBLE), CAST(0.4 AS DOUBLE),
-           CAST(0.6 AS DOUBLE), CAST(0.8 AS DOUBLE)]) AS t,
-         avg(y) AS base
-  FROM scored
-),
-binned AS (
-  SELECT CAST(prob > t[1] AS INT) + CAST(prob > t[2] AS INT)
-         + CAST(prob > t[3] AS INT) + CAST(prob > t[4] AS INT) AS bin,
-         prob, y, base
-  FROM scored, th
-)
-SELECT bin, count(*) AS n,
-  round(avg(prob) * 10000.0) / 10000.0 AS mean_prob,
-  round(avg(y) * 10000.0) / 10000.0 AS pos_rate,
-  round(CASE WHEN any_value(base) > 0
-             THEN avg(y) / any_value(base) END * 10000.0) / 10000.0 AS lift
-FROM binned GROUP BY bin
-"""
-
-
-def _q_ts_merge_intervals_events(spark, sf_dir):
-    """Flatten overlapping per-user coverage windows (each event opens a
-    1-hour closed interval): one key-partitioned window pass flags a new
-    span when an interval's start exceeds the running max end of all
-    predecessors, then spans collapse in a grouped agg — no self-join, no
-    sweep re-sort. Touching intervals merge (closed semantics)."""
-    from bid_evaluation_spark.operators.timeseries import merge_intervals
-
-    ev = _t(spark, sf_dir, "events")
-    iv = ev.select("user_id", "event_id",
-                   F.col("ts").cast("double").alias("s"),
-                   (F.col("ts").cast("double") + 3600.0).alias("e"))
-    res = merge_intervals(iv, "user_id", "s", "e", tiebreak_col="event_id")
-    return res.select("user_id", "s", "e",
-                      F.col("n_merged").cast("long").alias("n_merged"))
-
-
-_SQL_TS_MERGE_INTERVALS_EVENTS = """
-WITH iv AS (
-  SELECT user_id, event_id,
-         CAST(epoch(ts) AS DOUBLE) AS s,
-         CAST(epoch(ts) AS DOUBLE) + 3600.0 AS e
-  FROM events
-),
-m AS (
-  SELECT user_id, s, e,
-    CASE WHEN s > coalesce(
-           max(e) OVER (PARTITION BY user_id ORDER BY s, e, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-           CAST('-infinity' AS DOUBLE))
-         THEN 1 ELSE 0 END AS ns,
-    event_id
-  FROM iv
-),
-sp AS (
-  SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY s, e, event_id
-                          ROWS UNBOUNDED PRECEDING) AS span
-  FROM m
-)
-SELECT user_id, min(s) AS s, max(e) AS e, count(*) AS n_merged
-FROM sp GROUP BY user_id, span
-"""
-
-
-def _q_layout_zorder_orders(spark, sf_dir):
-    """Z-order (Morton) clustering key over (price, customer): one fused
-    min/max agg inlined as literals, then a pure bit-interleave Column
-    expression (8 bits/col → 16-bit key) — the multi-dimensional
-    data-skipping layout rewrite. Quantization replays the exact IEEE
-    operation order on both engines, so keys match bit-for-bit."""
-    from bid_evaluation_spark.operators.layout import zorder_key
-
-    od = _t(spark, sf_dir, "orders")
-    res = zorder_key(od, ["o_totalprice", "o_custkey"], bits=8)
-    return res.select("o_orderkey", "zkey")
-
-
-_ZO_TERMS = " | ".join(
-    f"(((q{j + 1} >> {i}) & 1) << {i * 2 + j})"
-    for i in range(8) for j in range(2))
-
-_SQL_LAYOUT_ZORDER_ORDERS = f"""
-WITH b AS (
-  SELECT min(CAST(o_totalprice AS DOUBLE)) AS mn1,
-         max(CAST(o_totalprice AS DOUBLE)) AS mx1,
-         min(CAST(o_custkey AS DOUBLE)) AS mn2,
-         max(CAST(o_custkey AS DOUBLE)) AS mx2
-  FROM orders
-),
-q AS (
-  SELECT o_orderkey,
-    least(greatest(coalesce(CAST(floor(
-      ((CAST(o_totalprice AS DOUBLE) - mn1) / (mx1 - mn1)) * 255.0)
-      AS BIGINT), 0), 0), 255) AS q1,
-    least(greatest(coalesce(CAST(floor(
-      ((CAST(o_custkey AS DOUBLE) - mn2) / (mx2 - mn2)) * 255.0)
-      AS BIGINT), 0), 0), 255) AS q2
-  FROM orders, b
-)
-SELECT o_orderkey, CAST({_ZO_TERMS} AS BIGINT) AS zkey FROM q
-"""
-
-
 def _q_sketch_hll_by_group_documents(spark, sf_dir):
     """Per-language HLL distinct-token estimate (the grouped twin of the
     global sketch): register shuffle bounded at groups × 2^b rows with
@@ -8908,430 +5821,9 @@ FROM raw r JOIN exact e ON r.lang = e.lang
 """
 
 
-def _q_analytics_trend_events(spark, sf_dir):
-    """Per-type OLS trend of event value against hour-of-day: ONE
-    partially-aggregated shuffle collects per-group means + stable
-    co-moments (covar_samp/var_samp, round-7 conditioning fix);
-    slope/intercept/r² are closed-form arithmetic on them — no
-    per-group solver, no window."""
-    from bid_evaluation_spark.operators.analytics import grouped_linear_fit
-
-    ev = _t(spark, sf_dir, "events")
-    hour = F.floor((F.col("ts").cast("double") % 86400) / 3600)
-    base = ev.select("event_type", hour.alias("hod"), "value")
-    res = grouped_linear_fit(base, "event_type", "hod", "value")
-    return res.select("event_type", "n", _r4("slope").alias("slope"),
-                      _r4("intercept").alias("intercept"),
-                      _r4("r2").alias("r2"))
-
-
-_SQL_ANALYTICS_TREND_EVENTS = """
-WITH b AS (
-  SELECT event_type,
-         CAST(floor((epoch(ts) % 86400) / 3600) AS DOUBLE) AS x,
-         CAST(value AS DOUBLE) AS y
-  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-),
-s AS (
-  SELECT event_type, count(*) AS n,
-         avg(x) AS mx, avg(y) AS my,
-         covar_samp(x, y) AS cxy, var_samp(x) AS vx, var_samp(y) AS vy
-  FROM b GROUP BY event_type
-)
-SELECT event_type, CAST(n AS BIGINT) AS n,
-  round(CASE WHEN n > 1 AND vx > 0 THEN cxy / vx END * 10000.0)
-    / 10000.0 AS slope,
-  round((my - CASE WHEN n > 1 AND vx > 0 THEN cxy / vx END * mx)
-        * 10000.0) / 10000.0 AS intercept,
-  round(CASE WHEN n > 1 AND vx > 0 AND vy > 0
-             THEN cxy * cxy / (vx * vy)
-             WHEN n > 1 AND vx > 0 THEN 1.0 END
-        * 10000.0) / 10000.0 AS r2
-FROM s
-"""
-
-
-def _q_profile_key_skew_events(spark, sf_dir):
-    """Shuffle-key skew diagnostic: per heavy key its count, table share,
-    ratio to a uniform key, and the salt factor the salted aggregation
-    would need. ONE corpus shuffle (persisted counts frame reused for the
-    global scalars — no rescan); top-k via TakeOrdered."""
-    from bid_evaluation_spark.operators.profile import key_skew_report
-
-    ev = _t(spark, sf_dir, "events")
-    res = key_skew_report(ev, "event_type", top_k=10,
-                          target_rows_per_task=1000)
-    return res.select("event_type", "key_rows",
-                      _r4("share").alias("share"),
-                      _r4("skew_ratio").alias("skew_ratio"),
-                      "salt_factor")
-
-
-_SQL_PROFILE_KEY_SKEW_EVENTS = """
-WITH c AS (
-  SELECT event_type, count(*) AS key_rows FROM events GROUP BY event_type
-),
-t AS (SELECT sum(key_rows) AS r, count(*) AS d FROM c)
-SELECT c.event_type, c.key_rows,
-  round(c.key_rows / CAST(t.r AS DOUBLE) * 10000.0) / 10000.0 AS share,
-  round(c.key_rows / (CAST(t.r AS DOUBLE) / t.d) * 10000.0) / 10000.0
-    AS skew_ratio,
-  CAST(ceil(c.key_rows / CAST(1000.0 AS DOUBLE)) AS BIGINT) AS salt_factor
-FROM c, t
-ORDER BY c.key_rows DESC, c.event_type ASC
-LIMIT 10
-"""
-
-
-# ---------------------------------------------------------------------------
-# Incremental snapshots: CDC diff / upsert merge / latest-version compaction
-# ---------------------------------------------------------------------------
-
-
-def _q_cdc_snapshot_diff_orders(spark, sf_dir):
-    """Snapshot CDC classification: two derived order snapshots (old drops
-    every 7th key; new drops every 5th and doubles every 3rd price) full-
-    outer-joined ONCE on the key, change detection as a null-safe equality
-    conjunction in the join projection. Doubling is FP-exact, so the
-    changed/unchanged split has no float knife edge."""
-    from bid_evaluation_spark.operators.cdc import snapshot_diff
-
-    od = _t(spark, sf_dir, "orders")
-    old = od.filter(F.col("o_orderkey") % 7 != 0)
-    new = (od.filter(F.col("o_orderkey") % 5 != 0)
-           .withColumn("o_totalprice",
-                       F.when(F.col("o_orderkey") % 3 == 0,
-                              F.col("o_totalprice") * 2)
-                       .otherwise(F.col("o_totalprice"))))
-    diff = snapshot_diff(old, new, ["o_orderkey"], ["o_totalprice"])
-    return diff.select("o_orderkey", "change_type",
-                       _r4("old_o_totalprice").alias("old_price"),
-                       _r4("new_o_totalprice").alias("new_price"))
-
-
-_SQL_CDC_SNAPSHOT_DIFF_ORDERS = """
-WITH old AS (
-  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 7 <> 0
-),
-new AS (
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice * 2
-              ELSE o_totalprice END AS o_totalprice
-  FROM orders WHERE o_orderkey % 5 <> 0
-)
-SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-  CASE WHEN o.o_orderkey IS NULL THEN 'inserted'
-       WHEN n.o_orderkey IS NULL THEN 'deleted'
-       WHEN o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
-         THEN 'unchanged'
-       ELSE 'changed' END AS change_type,
-  round(o.o_totalprice * 10000.0) / 10000.0 AS old_price,
-  round(n.o_totalprice * 10000.0) / 10000.0 AS new_price
-FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
-"""
-
-
-def _q_cdc_upsert_orders(spark, sf_dir):
-    """Upsert merge with deletes: updates (every 3rd key, price + 1000,
-    every 9th key flagged for delete) merged into a snapshot (every key
-    not divisible by 5) — left-anti survivors + unionByName, no window,
-    no global sort."""
-    from bid_evaluation_spark.operators.cdc import apply_upsert
-
-    od = _t(spark, sf_dir, "orders")
-    snap = (od.filter(F.col("o_orderkey") % 5 != 0)
-            .select("o_orderkey", "o_totalprice"))
-    upd = (od.filter(F.col("o_orderkey") % 3 == 0)
-           .select("o_orderkey",
-                   (F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
-                   (F.col("o_orderkey") % 9 == 0).alias("_delete")))
-    merged = apply_upsert(snap, upd, ["o_orderkey"], delete_col="_delete")
-    return merged.select("o_orderkey", _r4("o_totalprice").alias("price"))
-
-
-_SQL_CDC_UPSERT_ORDERS = """
-WITH snap AS (
-  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 5 <> 0
-),
-upd AS (
-  SELECT o_orderkey, o_totalprice + 1000.0 AS o_totalprice,
-         o_orderkey % 9 = 0 AS del
-  FROM orders WHERE o_orderkey % 3 = 0
-)
-SELECT o_orderkey, round(o_totalprice * 10000.0) / 10000.0 AS price FROM (
-  SELECT s.o_orderkey, s.o_totalprice FROM snap s
-  WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.o_orderkey = s.o_orderkey)
-  UNION ALL
-  SELECT o_orderkey, o_totalprice FROM upd WHERE NOT del
-)
-"""
-
-
-def _q_cdc_compact_latest_events(spark, sf_dir):
-    """CDC-log → snapshot compaction: latest event per (user, type) by
-    (ts DESC, event_id DESC) — one key-partitioned window shuffle with the
-    unique event_id as the deterministic tiebreak (a ts-only ordering with
-    duplicate timestamps is engine-dependent)."""
-    from bid_evaluation_spark.operators.cdc import compact_latest
-
-    ev = _t(spark, sf_dir, "events")
-    res = compact_latest(ev, ["user_id", "event_type"], "ts", "event_id")
-    return res.select("user_id", "event_type", "event_id",
-                      _r4("value").alias("value"))
-
-
-_SQL_CDC_COMPACT_LATEST_EVENTS = """
-SELECT user_id, event_type, event_id,
-       round(value * 10000.0) / 10000.0 AS value
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-                               ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-) WHERE rn = 1
-"""
-
-
 # ---------------------------------------------------------------------------
 # supervised feature encoding (operators/encode.py)
 # ---------------------------------------------------------------------------
-
-
-def _q_dq_audit_orders(spark, sf_dir):
-    """Deequ-style one-pass data-quality audit (operators/dq.py
-    dq_audit): six declarative rules (null / uniqueness / range / set /
-    regex) compiled into ONE fused aggregation — rule count never adds
-    passes. The oracle recomputes every conditional count in one scalar
-    SELECT and unpivots to the same report rows."""
-    from bid_evaluation_spark.operators.dq import DQRule, dq_audit
-
-    df = _t(spark, sf_dir, "orders")
-    rules = [
-        DQRule("o_custkey", "not_null"),
-        DQRule("o_orderkey", "unique"),
-        DQRule("o_totalprice", "min", value=1000.0),
-        DQRule("o_totalprice", "max", value=400000.0),
-        DQRule("o_orderstatus", "in_set", values=["O", "F", "P"]),
-        DQRule("o_orderpriority", "regex", pattern="^[1-5]-"),
-    ]
-    return dq_audit(df, rules)
-
-
-_SQL_DQ_AUDIT_ORDERS = """
-WITH s AS (
-  SELECT count(*) AS n,
-    sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS v_nn,
-    count(*) - count(DISTINCT o_orderkey)
-      - coalesce(max(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END), 0)
-      AS v_u,
-    sum(CASE WHEN o_totalprice IS NOT NULL
-              AND o_totalprice < CAST(1000 AS DOUBLE)
-             THEN 1 ELSE 0 END) AS v_min,
-    sum(CASE WHEN o_totalprice IS NOT NULL
-              AND o_totalprice > CAST(400000 AS DOUBLE)
-             THEN 1 ELSE 0 END) AS v_max,
-    sum(CASE WHEN o_orderstatus IS NOT NULL
-              AND o_orderstatus NOT IN ('O', 'F', 'P')
-             THEN 1 ELSE 0 END) AS v_set,
-    sum(CASE WHEN o_orderpriority IS NOT NULL
-              AND NOT regexp_matches(o_orderpriority, '^[1-5]-')
-             THEN 1 ELSE 0 END) AS v_re
-  FROM orders
-)
-SELECT 'not_null_o_custkey' AS rule, 'o_custkey' AS "column",
-       'not_null' AS kind, CAST(n AS BIGINT) AS n_rows,
-       CAST(v_nn AS BIGINT) AS n_violations, v_nn = 0 AS ok FROM s
-UNION ALL
-SELECT 'unique_o_orderkey', 'o_orderkey', 'unique', CAST(n AS BIGINT),
-       CAST(v_u AS BIGINT), v_u = 0 FROM s
-UNION ALL
-SELECT 'min_o_totalprice', 'o_totalprice', 'min', CAST(n AS BIGINT),
-       CAST(v_min AS BIGINT), v_min = 0 FROM s
-UNION ALL
-SELECT 'max_o_totalprice', 'o_totalprice', 'max', CAST(n AS BIGINT),
-       CAST(v_max AS BIGINT), v_max = 0 FROM s
-UNION ALL
-SELECT 'in_set_o_orderstatus', 'o_orderstatus', 'in_set',
-       CAST(n AS BIGINT), CAST(v_set AS BIGINT), v_set = 0 FROM s
-UNION ALL
-SELECT 'regex_o_orderpriority', 'o_orderpriority', 'regex',
-       CAST(n AS BIGINT), CAST(v_re AS BIGINT), v_re = 0 FROM s
-"""
-
-
-def _q_dq_ri_orders_customer(spark, sf_dir):
-    """Referential-integrity orphan audit (operators/dq.py
-    referential_integrity): orders.o_custkey against customer — one
-    left-anti join on the parent's distinct keys, null child keys
-    excluded by contract."""
-    from bid_evaluation_spark.operators.dq import referential_integrity
-
-    return referential_integrity(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "customer"),
-        "o_custkey", "c_custkey")
-
-
-_SQL_DQ_RI_ORDERS_CUSTOMER = """
-SELECT CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_child,
-       CAST((SELECT count(*) FROM orders o
-             WHERE o.o_custkey IS NOT NULL
-               AND NOT EXISTS (SELECT 1 FROM customer c
-                               WHERE c.c_custkey = o.o_custkey))
-            AS BIGINT) AS n_orphans,
-       (SELECT count(*) FROM orders o
-        WHERE o.o_custkey IS NOT NULL
-          AND NOT EXISTS (SELECT 1 FROM customer c
-                          WHERE c.c_custkey = o.o_custkey)) = 0 AS ok
-"""
-
-
-def _q_dq_stable_ids_orders(spark, sf_dir):
-    """Global dense id assignment WITHOUT a single-partition sort
-    (operators/dq.py assign_stable_ids): range-partition on the key,
-    rank within partitions, add broadcast cumulative offsets — ids equal
-    the global ``row_number() - 1`` the oracle computes directly, but the
-    sort never funnels through one task and the driver only ever sees
-    one count per partition."""
-    from bid_evaluation_spark.operators.dq import assign_stable_ids
-
-    df = _t(spark, sf_dir, "orders").select("o_orderkey")
-    return assign_stable_ids(df, ["o_orderkey"], num_partitions=8)
-
-
-_SQL_DQ_STABLE_IDS_ORDERS = """
-SELECT o_orderkey,
-       CAST(row_number() OVER (ORDER BY o_orderkey) - 1 AS BIGINT)
-         AS stable_id
-FROM orders
-"""
-
-
-def _q_basket_rules_lineitem(spark, sf_dir):
-    """Market-basket association rules (operators/basket.py
-    association_rules): orders as baskets, parts as items; Apriori-pruned
-    pair self-join keyed on the basket, support tables joined back. The
-    oracle replays the identical counting and the identical
-    confidence/lift arithmetic (integer counts, double division,
-    1e-4 rounding)."""
-    from bid_evaluation_spark.operators.basket import association_rules
-
-    li = _t(spark, sf_dir, "lineitem")
-    return association_rules(li, "l_orderkey", "l_partkey", min_count=3)
-
-
-_SQL_BASKET_RULES_LINEITEM = """
-WITH items AS (
-  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-),
-nb AS (SELECT count(DISTINCT b) AS ntot FROM items),
-supp AS (SELECT i, count(*) AS n FROM items GROUP BY i),
-fitems AS (SELECT it.b, it.i FROM items it
-           JOIN supp s ON it.i = s.i AND s.n >= 3),
-pairs AS (
-  SELECT a.i AS ia, b.i AS ib, count(*) AS nj
-  FROM fitems a JOIN fitems b ON a.b = b.b AND a.i < b.i
-  GROUP BY 1, 2 HAVING count(*) >= 3
-),
-dirs AS (SELECT ia AS ant, ib AS con, nj FROM pairs
-         UNION ALL
-         SELECT ib AS ant, ia AS con, nj FROM pairs)
-SELECT d.ant AS antecedent, d.con AS consequent,
-       CAST(d.nj AS BIGINT) AS n_joint,
-       CAST(sa.n AS BIGINT) AS n_antecedent,
-       CAST(sc.n AS BIGINT) AS n_consequent,
-       round(d.nj / CAST(sa.n AS DOUBLE) * 1e4) / 1e4 + 0.0 AS confidence,
-       round(CAST(d.nj AS DOUBLE) * nb.ntot
-             / (CAST(sa.n AS DOUBLE) * sc.n) * 1e4) / 1e4 + 0.0 AS lift
-FROM dirs d, nb, supp sa, supp sc
-WHERE sa.i = d.ant AND sc.i = d.con
-"""
-
-
-def _q_graph_bfs_lineitem(spark, sf_dir):
-    """k-hop BFS distances (operators/graph.py bfs_distances) over the
-    undirected part–supplier bipartite graph (namespaced string nodes),
-    seeded at suppliers 1-3, 3 fixed hops. Frontier expansion emits each
-    node exactly once at its minimum distance; the oracle unrolls the
-    same three rounds as anti-joined CTEs."""
-    from bid_evaluation_spark.operators.graph import bfs_distances
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"))
-    seeds = (li.filter(F.col("l_suppkey") <= 3)
-             .select(F.concat(F.lit("s"), F.col("l_suppkey")).alias("node")))
-    return bfs_distances(edges, seeds, max_hops=3, directed=False)
-
-
-_SQL_GRAPH_BFS_LINEITEM = """
-WITH e0 AS (
-  SELECT DISTINCT 's' || l_suppkey AS s, 'p' || l_partkey AS d
-  FROM lineitem
-  WHERE l_suppkey IS NOT NULL AND l_partkey IS NOT NULL
-),
-e AS (SELECT s, d FROM e0 UNION SELECT d AS s, s AS d FROM e0),
-d0 AS (SELECT DISTINCT 's' || l_suppkey AS node FROM lineitem
-       WHERE l_suppkey <= 3),
-f1 AS (SELECT DISTINCT e.d AS node FROM e JOIN d0 ON e.s = d0.node
-       WHERE e.d NOT IN (SELECT node FROM d0)),
-f2 AS (SELECT DISTINCT e.d AS node FROM e JOIN f1 ON e.s = f1.node
-       WHERE e.d NOT IN (SELECT node FROM d0 UNION ALL
-                         SELECT node FROM f1)),
-f3 AS (SELECT DISTINCT e.d AS node FROM e JOIN f2 ON e.s = f2.node
-       WHERE e.d NOT IN (SELECT node FROM d0 UNION ALL
-                         SELECT node FROM f1 UNION ALL
-                         SELECT node FROM f2))
-SELECT node, CAST(0 AS BIGINT) AS dist FROM d0
-UNION ALL SELECT node, CAST(1 AS BIGINT) FROM f1
-UNION ALL SELECT node, CAST(2 AS BIGINT) FROM f2
-UNION ALL SELECT node, CAST(3 AS BIGINT) FROM f3
-"""
-
-
-def _q_ts_acf_events(spark, sf_dir):
-    """Per-key autocorrelation at lags 1-3 (operators/timeseries.py
-    acf_by_key) over event values ordered by (ts, event_id) — one window
-    pass feeds one fused stable co-moment aggregate for all lags
-    (corr/var_samp; round-7 conditioning fix). The oracle replays the
-    identical lag alignment with DuckDB's matching stable corr()."""
-    from bid_evaluation_spark.operators.timeseries import acf_by_key
-
-    ev = _t(spark, sf_dir, "events")
-    return acf_by_key(ev, "event_type", ["ts", "event_id"], "value",
-                      lags=(1, 2, 3))
-
-
-_SQL_TS_ACF_EVENTS = """
-WITH base AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS x,
-         lag(CAST(value AS DOUBLE), 1) OVER w AS y1,
-         lag(CAST(value AS DOUBLE), 2) OVER w AS y2,
-         lag(CAST(value AS DOUBLE), 3) OVER w AS y3
-  FROM events
-  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-),
-pairs AS (
-  SELECT event_type, l.lag, x,
-         CASE l.lag WHEN 1 THEN y1 WHEN 2 THEN y2 ELSE y3 END AS y
-  FROM base, (SELECT unnest([1, 2, 3]) AS lag) l
-),
-g AS (
-  SELECT event_type, lag,
-    count(*) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS n,
-    corr(x, y) AS r,
-    var_samp(x) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS vx,
-    var_samp(y) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS vy
-  FROM pairs
-  GROUP BY event_type, lag
-)
-SELECT event_type, CAST(lag AS BIGINT) AS lag,
-       CAST(coalesce(n, 0) AS BIGINT) AS n_pairs,
-       CASE WHEN vx > 0 AND vy > 0
-            THEN round(r * 1e4) / 1e4 + 0.0
-       END AS acf
-FROM g
-"""
 
 
 def _q_emb_jl_project_embeddings(spark, sf_dir):
@@ -9359,107 +5851,6 @@ SELECT vec_id, CAST(t.t AS BIGINT) AS dim,
                   THEN 1.0 ELSE -1.0 END)))
         / sqrt(CAST(16 AS DOUBLE)) * 1e4) / 1e4 + 0.0 AS val
 FROM embeddings, (SELECT unnest(generate_series(0, 15)) AS t) t
-"""
-
-
-def _q_bandit_ucb1_events(spark, sf_dir):
-    """UCB1 bandit read-out (operators/analytics.py ucb1_scores): per-arm
-    pull counts + mean rewards from one partial-agg groupBy, total pulls
-    broadcast back, ucb = mean + √2·√(ln N / n). The oracle replays the
-    identical arithmetic on the same sums."""
-    from bid_evaluation_spark.operators.analytics import ucb1_scores
-
-    ev = _t(spark, sf_dir, "events")
-    return ucb1_scores(ev, "event_type", "value")
-
-
-_SQL_BANDIT_UCB1_EVENTS = """
-WITH a AS (
-  SELECT event_type AS arm, count(*) AS n,
-         sum(CAST(value AS DOUBLE)) AS s
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-),
-t AS (SELECT CAST(sum(n) AS DOUBLE) AS ntot FROM a)
-SELECT arm, CAST(n AS BIGINT) AS n_pulls,
-  round(s / CAST(n AS DOUBLE) * 1e4) / 1e4 + 0.0 AS mean_reward,
-  round((s / CAST(n AS DOUBLE)
-         + 1.4142135623730951 * sqrt(ln(ntot) / CAST(n AS DOUBLE)))
-        * 1e4) / 1e4 + 0.0 AS ucb
-FROM a, t
-"""
-
-
-def _q_spatial_radius_part(spark, sf_dir):
-    """Grid-blocked fixed-radius self-join (operators/spatial.py
-    radius_join): planar coordinates synthesized from key arithmetic
-    (the repo's parse-url lesson — portable inputs both engines derive
-    identically), cells of side r, 3×3 candidate explode, ONE cell-keyed
-    equi-join, exact squared-distance predicate. The oracle is the
-    brute-force all-pairs filter — recall 1 is the claim under test."""
-    from bid_evaluation_spark.operators.spatial import radius_join
-
-    part = _t(spark, sf_dir, "part")
-    pts = part.select(
-        F.col("p_partkey").alias("pid"),
-        ((F.col("p_partkey") * 37 % 1000) / 10.0).alias("x"),
-        ((F.col("p_partkey") * 61 % 1000) / 10.0).alias("y"))
-    return radius_join(pts, "pid", "x", "y", 2.0)
-
-
-_SQL_SPATIAL_RADIUS_PART = """
-WITH pts AS (
-  SELECT p_partkey AS pid,
-         (p_partkey * 37 % 1000) / 10.0 AS x,
-         (p_partkey * 61 % 1000) / 10.0 AS y
-  FROM part
-)
-SELECT a.pid AS id_a, b.pid AS id_b,
-       round(sqrt((a.x - b.x) * (a.x - b.x)
-                  + (a.y - b.y) * (a.y - b.y)) * 1e4) / 1e4 + 0.0 AS dist
-FROM pts a JOIN pts b ON a.pid < b.pid
-WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 4.0
-"""
-
-
-def _q_attrib_events(spark, sf_dir):
-    """Multi-touch attribution (operators/attribution.py
-    attribute_conversions): journeys = touch runs between purchases per
-    user (running conversion count), closed journeys semi-joined, first /
-    last / linear credit rolled up per channel in one pass. The oracle
-    replays the identical windows and credit arithmetic."""
-    from bid_evaluation_spark.operators.attribution import (
-        attribute_conversions)
-
-    ev = _t(spark, sf_dir, "events")
-    return attribute_conversions(ev, "user_id", "ts", "event_type",
-                                 "purchase", "event_id")
-
-
-_SQL_ATTRIB_EVENTS = """
-WITH ev AS (
-  SELECT user_id AS u, ts, event_id AS tb, event_type AS ch,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS ic,
-         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS UNBOUNDED PRECEDING) AS run
-  FROM events
-),
-touches AS (SELECT u, ts, tb, ch, run AS j FROM ev WHERE ic = 0),
-closed AS (SELECT DISTINCT u, run - 1 AS j FROM ev WHERE ic = 1),
-sized AS (
-  SELECT t.u, t.j, t.ch,
-         row_number() OVER (PARTITION BY t.u, t.j ORDER BY t.ts, t.tb)
-           AS rn,
-         count(*) OVER (PARTITION BY t.u, t.j) AS k
-  FROM touches t JOIN closed c ON t.u = c.u AND t.j = c.j
-)
-SELECT ch AS channel, CAST(count(*) AS BIGINT) AS n_touches,
-  round(sum(CASE WHEN rn = 1 THEN 1.0 ELSE 0.0 END) * 1e4) / 1e4 + 0.0
-    AS credit_first,
-  round(sum(CASE WHEN rn = k THEN 1.0 ELSE 0.0 END) * 1e4) / 1e4 + 0.0
-    AS credit_last,
-  round(sum(1.0 / CAST(k AS DOUBLE)) * 1e4) / 1e4 + 0.0 AS credit_linear
-FROM sized GROUP BY ch
 """
 
 
@@ -9526,469 +5917,6 @@ GROUP BY doc_id
 """
 
 
-def _q_graph_lpa_lineitem(spark, sf_dir):
-    """Synchronous label propagation, 2 rounds (operators/graph.py
-    label_propagation) over the undirected part–supplier graph: per
-    round one edges⋈labels equi-join, one (node, label) vote count, one
-    per-node argmax window with the min-label tie-break the oracle
-    replays round by round."""
-    from bid_evaluation_spark.operators.graph import label_propagation
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"))
-    return label_propagation(edges, max_iter=2, directed=False)
-
-
-_SQL_GRAPH_LPA_LINEITEM = """
-WITH e0 AS (
-  SELECT DISTINCT 's' || l_suppkey AS s, 'p' || l_partkey AS d
-  FROM lineitem
-  WHERE l_suppkey IS NOT NULL AND l_partkey IS NOT NULL
-),
-e AS (SELECT s, d FROM e0 UNION SELECT d AS s, s AS d FROM e0),
-n AS (SELECT s AS node FROM e UNION SELECT d AS node FROM e),
-l0 AS (SELECT node, node AS label FROM n),
-v1 AS (SELECT e.d AS nd, l0.label, count(*) AS c
-       FROM e JOIN l0 ON e.s = l0.node GROUP BY 1, 2),
-b1 AS (SELECT nd, label FROM (
-         SELECT nd, label,
-                row_number() OVER (PARTITION BY nd
-                                   ORDER BY c DESC, label ASC) AS rk
-         FROM v1) WHERE rk = 1),
-l1 AS (SELECT n.node, coalesce(b1.label, n.node) AS label
-       FROM n LEFT JOIN b1 ON n.node = b1.nd),
-v2 AS (SELECT e.d AS nd, l1.label, count(*) AS c
-       FROM e JOIN l1 ON e.s = l1.node GROUP BY 1, 2),
-b2 AS (SELECT nd, label FROM (
-         SELECT nd, label,
-                row_number() OVER (PARTITION BY nd
-                                   ORDER BY c DESC, label ASC) AS rk
-         FROM v2) WHERE rk = 1)
-SELECT n.node, coalesce(b2.label, n.node) AS label
-FROM n LEFT JOIN b2 ON n.node = b2.nd
-"""
-
-
-def _q_ts_holt_events(spark, sf_dir):
-    """Per-user Holt level+trend smoothing (operators/timeseries.py
-    holt_by_key, α=0.3 β=0.1): sequential recurrence as an Arrow kernel
-    per key, arithmetic written exactly as the recursive-CTE oracle
-    replays it (the ewma pattern, two state variables)."""
-    from bid_evaluation_spark.operators.timeseries import holt_by_key
-
-    ev = _t(spark, sf_dir, "events")
-    res = holt_by_key(ev, "user_id", "ts", "value", "event_id",
-                      alpha=0.3, beta=0.1)
-    return res.select("user_id", "event_id",
-                      (_r4("value") + F.lit(0.0)).alias("value"),
-                      (_r4("level") + F.lit(0.0)).alias("level"),
-                      (_r4("trend") + F.lit(0.0)).alias("trend"),
-                      (_r4("forecast_next") + F.lit(0.0))
-                      .alias("forecast_next"))
-
-
-_SQL_TS_HOLT_EVENTS = """
-WITH RECURSIVE e AS (
-  SELECT user_id, event_id, CAST(value AS DOUBLE) AS v,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS i
-  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-r(user_id, i, event_id, v, l, b) AS (
-  SELECT user_id, i, event_id, v, v, CAST(0.0 AS DOUBLE) FROM e WHERE i = 1
-  UNION ALL
-  SELECT e.user_id, e.i, e.event_id, e.v,
-         CAST(0.3 AS DOUBLE) * e.v
-           + (CAST(1.0 AS DOUBLE) - CAST(0.3 AS DOUBLE)) * (r.l + r.b),
-         CAST(0.1 AS DOUBLE)
-           * ((CAST(0.3 AS DOUBLE) * e.v
-               + (CAST(1.0 AS DOUBLE) - CAST(0.3 AS DOUBLE))
-                 * (r.l + r.b)) - r.l)
-           + (CAST(1.0 AS DOUBLE) - CAST(0.1 AS DOUBLE)) * r.b
-  FROM r JOIN e ON e.user_id = r.user_id AND e.i = r.i + 1
-)
-SELECT user_id, event_id,
-       round(v * 10000.0) / 10000.0 + 0.0 AS value,
-       round(l * 10000.0) / 10000.0 + 0.0 AS level,
-       round(b * 10000.0) / 10000.0 + 0.0 AS trend,
-       round((l + b) * 10000.0) / 10000.0 + 0.0 AS forecast_next
-FROM r
-"""
-
-
-def _q_graph_kcore_lineitem(spark, sf_dir):
-    """k-core peeling, k=30, 3 fixed rounds (operators/graph.py k_core)
-    over the undirected part–supplier graph: per round one degree
-    groupBy + two endpoint semi-joins, lineage truncated. The oracle
-    unrolls the same three peels and emits the surviving degrees."""
-    from bid_evaluation_spark.operators.graph import k_core
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"))
-    return k_core(edges, k=30, n_rounds=3)
-
-
-_SQL_GRAPH_KCORE_LINEITEM = """
-WITH e0 AS (
-  SELECT DISTINCT 's' || l_suppkey AS s, 'p' || l_partkey AS d
-  FROM lineitem
-  WHERE l_suppkey IS NOT NULL AND l_partkey IS NOT NULL
-),
-e1 AS (SELECT s, d FROM e0 UNION SELECT d AS s, s AS d FROM e0),
-k1 AS (SELECT s AS node FROM e1 GROUP BY s HAVING count(*) >= 30),
-e2 AS (SELECT s, d FROM e1 WHERE s IN (SELECT node FROM k1)
-                             AND d IN (SELECT node FROM k1)),
-k2 AS (SELECT s AS node FROM e2 GROUP BY s HAVING count(*) >= 30),
-e3 AS (SELECT s, d FROM e2 WHERE s IN (SELECT node FROM k2)
-                             AND d IN (SELECT node FROM k2)),
-k3 AS (SELECT s AS node FROM e3 GROUP BY s HAVING count(*) >= 30),
-e4 AS (SELECT s, d FROM e3 WHERE s IN (SELECT node FROM k3)
-                             AND d IN (SELECT node FROM k3))
-SELECT s AS node, CAST(count(*) AS BIGINT) AS degree
-FROM e4 GROUP BY s
-"""
-
-
-def _q_basket_triples_lineitem(spark, sf_dir):
-    """Level-3 Apriori frequent triples (operators/basket.py
-    frequent_triples): frequent-pair extension with item- and pair-level
-    prunes, all joins keyed on the basket. The oracle is the UNPRUNED
-    3-way self-join — the Apriori prunes must be lossless."""
-    from bid_evaluation_spark.operators.basket import frequent_triples
-
-    li = _t(spark, sf_dir, "lineitem")
-    return frequent_triples(li, "l_orderkey", "l_partkey", min_count=2)
-
-
-_SQL_BASKET_TRIPLES_LINEITEM = """
-WITH items AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-)
-SELECT a.i AS item_a, b.i AS item_b, c.i AS item_c,
-       CAST(count(*) AS BIGINT) AS n_joint
-FROM items a
-JOIN items b ON a.b = b.b AND a.i < b.i
-JOIN items c ON b.b = c.b AND c.i > b.i
-GROUP BY 1, 2, 3 HAVING count(*) >= 2
-"""
-
-
-def _q_features_mi_documents(spark, sf_dir):
-    """Mutual information lang×source (operators/features.py
-    mutual_information): join-free entropy identity over the aggregated
-    joint-count table; marginals re-aggregate counts, never the corpus.
-    The oracle replays the identical Σc·ln c arithmetic."""
-    from bid_evaluation_spark.operators.features import mutual_information
-
-    docs = _t(spark, sf_dir, "documents")
-    return mutual_information(docs, "lang", "source")
-
-
-_SQL_FEATURES_MI_DOCUMENTS = """
-WITH ab AS (
-  SELECT lang AS a, source AS b, CAST(count(*) AS DOUBLE) AS c
-  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
-  GROUP BY 1, 2
-),
-jab AS (SELECT sum(c * ln(c)) AS sab, sum(c) AS n FROM ab),
-ja AS (SELECT sum(c * ln(c)) AS sa
-       FROM (SELECT sum(c) AS c FROM ab GROUP BY a)),
-jb AS (SELECT sum(c * ln(c)) AS sb
-       FROM (SELECT sum(c) AS c FROM ab GROUP BY b))
-SELECT CASE WHEN n > 0
-            THEN round((sab - sa - sb + n * ln(n)) / n * 1e4) / 1e4 + 0.0
-            ELSE 0.0 END AS mi,
-       CAST(n AS BIGINT) AS n
-FROM jab, ja, jb
-"""
-
-
-def _q_features_woe_orders(spark, sf_dir):
-    """Weight-of-evidence + IV per order priority, label = fulfilled
-    status (operators/features.py woe_iv, smoothing 0.5): one groupBy,
-    totals via whole-frame window over the category table. The oracle
-    replays the smoothed-share arithmetic exactly."""
-    from bid_evaluation_spark.operators.features import woe_iv
-
-    o = _t(spark, sf_dir, "orders")
-    o = o.withColumn("_lbl", F.col("o_orderstatus") == "F")
-    return woe_iv(o, "o_orderpriority", "_lbl")
-
-
-_SQL_FEATURES_WOE_ORDERS = """
-WITH g AS (
-  SELECT o_orderpriority AS category,
-         sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS np,
-         sum(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS nn
-  FROM orders
-  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-  GROUP BY 1
-),
-t AS (SELECT CAST(sum(np) AS DOUBLE) AS pt,
-             CAST(sum(nn) AS DOUBLE) AS nt FROM g)
-SELECT category, CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg,
-  round(ln(((np + 0.5) / (pt + 0.5)) / ((nn + 0.5) / (nt + 0.5)))
-        * 1e4) / 1e4 + 0.0 AS woe,
-  round((((np + 0.5) / (pt + 0.5)) - ((nn + 0.5) / (nt + 0.5)))
-        * ln(((np + 0.5) / (pt + 0.5)) / ((nn + 0.5) / (nt + 0.5)))
-        * 1e4) / 1e4 + 0.0 AS iv_term
-FROM g, t
-"""
-
-
-def _q_ts_trend_events(spark, sf_dir):
-    """Theil–Sen + Mann–Kendall per event type (operators/timeseries.py
-    trend_test) on a deterministic 1-in-20 subsample (the statistic is
-    quadratic in group size by definition): pairwise slopes from one
-    group-keyed self-join, median via the shared exact percentile, MK z
-    with continuity + y-tie corrections. The oracle replays the same
-    pair set and formulas."""
-    from bid_evaluation_spark.operators.timeseries import trend_test
-
-    ev = (_t(spark, sf_dir, "events")
-          .filter(F.col("event_id") % 20 == 0)
-          .withColumn("_x", F.col("ts").cast("double")))
-    return trend_test(ev, "event_type", "_x", "value")
-
-
-_SQL_TS_TREND_EVENTS = """
-WITH pts AS (
-  SELECT event_type AS g,
-         CAST(epoch_us(ts) AS DOUBLE) / 1000000.0 AS x,
-         CAST(value AS DOUBLE) AS y
-  FROM events
-  WHERE event_id % 20 = 0 AND ts IS NOT NULL AND value IS NOT NULL
-),
-pairs AS (
-  SELECT a.g,
-         (b.y - a.y) / (b.x - a.x) AS slope,
-         CASE WHEN b.y > a.y THEN 1 WHEN b.y < a.y THEN -1 ELSE 0 END
-           AS sgn
-  FROM pts a JOIN pts b ON a.g = b.g AND a.x < b.x
-),
-pg AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(sum(sgn) AS BIGINT) AS s_stat,
-         quantile_cont(slope, 0.5) AS med
-  FROM pairs GROUP BY g
-),
-ng AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM pts GROUP BY g),
-ties AS (
-  SELECT g, sum(t * (t - 1) * (2 * t + 5)) AS tc
-  FROM (SELECT g, y, CAST(count(*) AS DOUBLE) AS t
-        FROM pts GROUP BY g, y)
-  GROUP BY g
-)
-SELECT ng.g AS event_type, ng.n, coalesce(pg.n_pairs, 0) AS n_pairs,
-       coalesce(pg.s_stat, 0) AS s_stat,
-       round(pg.med * 1e4) / 1e4 + 0.0 AS slope,
-       CASE WHEN pg.n_pairs IS NOT NULL AND
-                 (CAST(ng.n AS DOUBLE) * (ng.n - 1) * (2 * ng.n + 5)
-                  - coalesce(ties.tc, 0.0)) / 18.0 > 0
-            THEN round(
-              (CASE WHEN pg.s_stat > 0
-                    THEN (CAST(pg.s_stat AS DOUBLE) - 1)
-                    WHEN pg.s_stat < 0
-                    THEN (CAST(pg.s_stat AS DOUBLE) + 1)
-                    ELSE 0.0 END
-               / sqrt((CAST(ng.n AS DOUBLE) * (ng.n - 1) * (2 * ng.n + 5)
-                       - coalesce(ties.tc, 0.0)) / 18.0)) * 1e4) / 1e4
-              + 0.0
-       END AS z
-FROM ng LEFT JOIN pg ON ng.g = pg.g LEFT JOIN ties ON ng.g = ties.g
-"""
-
-
-def _q_ts_seasonal_events(spark, sf_dir):
-    """Classical additive seasonal decomposition per event type, period 7
-    (operators/timeseries.py seasonal_decompose): centered rolling-mean
-    trend, per-phase detrended means, row-weighted centering — all
-    windows sharing one hash(key) exchange. The oracle replays the same
-    windows (identical partial-edge semantics)."""
-    from bid_evaluation_spark.operators.timeseries import seasonal_decompose
-
-    ev = (_t(spark, sf_dir, "events")
-          .withColumn("_x", F.col("ts").cast("double")))
-    res = seasonal_decompose(ev, "event_type", ["_x", "event_id"],
-                             "value", period=7)
-    return res.select("event_type", "event_id",
-                      (_r4("value") + F.lit(0.0)).alias("value"),
-                      "trend", "seasonal",
-                      (_r4("residual") + F.lit(0.0)).alias("residual"))
-
-
-_SQL_TS_SEASONAL_EVENTS = """
-WITH base AS (
-  SELECT event_type AS g, event_id AS e, CAST(value AS DOUBLE) AS x,
-         row_number() OVER w - 1 AS idx,
-         avg(CAST(value AS DOUBLE)) OVER (
-           PARTITION BY event_type
-           ORDER BY CAST(epoch_us(ts) AS DOUBLE) / 1000000.0, event_id
-           ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend
-  FROM events
-  WINDOW w AS (PARTITION BY event_type
-               ORDER BY CAST(epoch_us(ts) AS DOUBLE) / 1000000.0, event_id)
-),
-det AS (
-  SELECT g, e, x, trend, idx, x - trend AS d FROM base
-),
-sea AS (
-  SELECT g, e, x, trend,
-         avg(d) OVER (PARTITION BY g, idx % 7) AS sm
-  FROM det
-),
-cen AS (
-  SELECT g, e, x, trend,
-         sm - avg(sm) OVER (PARTITION BY g) AS seasonal
-  FROM sea
-)
-SELECT g AS event_type, e AS event_id,
-       round(x * 1e4) / 1e4 + 0.0 AS value,
-       round(trend * 1e4) / 1e4 + 0.0 AS trend,
-       round(seasonal * 1e4) / 1e4 + 0.0 AS seasonal,
-       round((x - (round(trend * 1e4) / 1e4 + 0.0)
-                - (round(seasonal * 1e4) / 1e4 + 0.0)) * 1e4) / 1e4 + 0.0
-         AS residual
-FROM cen
-"""
-
-
-def _q_ts_nelson_aalen_events(spark, sf_dir):
-    """Nelson–Aalen cumulative hazard (operators/timeseries.py
-    nelson_aalen) over the same synthetic censored durations as the KM
-    query — Σ d_i/n_i over the bounded distinct-duration table. The
-    oracle replays at-risk bookkeeping and the ordered hazard sum."""
-    from bid_evaluation_spark.operators.timeseries import nelson_aalen
-
-    ev = _t(spark, sf_dir, "events").select(
-        ((F.col("event_id") % 97) + 1).cast("double").alias("dur"),
-        (F.col("event_id") % 5 != 0).alias("observed"))
-    res = nelson_aalen(ev, "dur", "observed")
-    return res.select(F.col("duration").cast("long").alias("duration"),
-                      "n_risk", "n_event", "n_censored", "cum_hazard")
-
-
-_SQL_TS_NELSON_AALEN_EVENTS = """
-WITH rws AS (
-  SELECT CAST(event_id % 97 + 1 AS DOUBLE) AS dur,
-         (event_id % 5 <> 0) AS observed
-  FROM events
-),
-per_t AS (
-  SELECT dur AS duration, count(*) AS leaving,
-         sum(CAST(observed AS BIGINT)) AS n_event
-  FROM rws GROUP BY dur
-),
-staged AS (
-  SELECT duration, n_event, leaving - n_event AS n_censored,
-    (SELECT sum(leaving) FROM per_t)
-      - COALESCE(sum(leaving) OVER (ORDER BY duration
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-  FROM per_t
-)
-SELECT CAST(duration AS BIGINT) AS duration,
-  CAST(n_risk AS BIGINT) AS n_risk,
-  CAST(n_event AS BIGINT) AS n_event,
-  CAST(n_censored AS BIGINT) AS n_censored,
-  round(sum(n_event / CAST(n_risk AS DOUBLE))
-          OVER (ORDER BY duration
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        * 1e4) / 1e4 + 0.0 AS cum_hazard
-FROM staged
-"""
-
-
-def _q_analytics_poisson_events(spark, sf_dir):
-    """Two-sample Poisson rate test error-vs-purchase events
-    (operators/analytics.py poisson_rate_test, exposures 100/120): one
-    filtered aggregate, Wald log-ratio z and 95% CI. The oracle replays
-    the identical arithmetic."""
-    from bid_evaluation_spark.operators.analytics import poisson_rate_test
-
-    ev = _t(spark, sf_dir, "events")
-    return poisson_rate_test(ev, "event_type", "error", "purchase",
-                             exposure_a=100.0, exposure_b=120.0)
-
-
-_SQL_ANALYTICS_POISSON_EVENTS = """
-WITH c AS (
-  SELECT sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_a,
-         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n_b
-  FROM events
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-  round(CAST(n_a AS DOUBLE) / 100.0 * 1e4) / 1e4 + 0.0 AS rate_a,
-  round(CAST(n_b AS DOUBLE) / 120.0 * 1e4) / 1e4 + 0.0 AS rate_b,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round((CAST(n_a AS DOUBLE) / 100.0) / (CAST(n_b AS DOUBLE) / 120.0)
-          * 1e4) / 1e4 + 0.0 END AS ratio,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(sqrt(1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))
-          * 1e4) / 1e4 + 0.0 END AS log_se,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(ln((CAST(n_a AS DOUBLE) / 100.0) / (CAST(n_b AS DOUBLE) / 120.0))
-          / sqrt(1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))
-          * 1e4) / 1e4 + 0.0 END AS z,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(exp(ln((CAST(n_a AS DOUBLE) / 100.0)
-                 / (CAST(n_b AS DOUBLE) / 120.0))
-              - 1.96 * sqrt(1.0 / CAST(n_a AS DOUBLE)
-                            + 1.0 / CAST(n_b AS DOUBLE)))
-          * 1e4) / 1e4 + 0.0 END AS ci_lo,
-  CASE WHEN n_a > 0 AND n_b > 0 THEN
-    round(exp(ln((CAST(n_a AS DOUBLE) / 100.0)
-                 / (CAST(n_b AS DOUBLE) / 120.0))
-              + 1.96 * sqrt(1.0 / CAST(n_a AS DOUBLE)
-                            + 1.0 / CAST(n_b AS DOUBLE)))
-          * 1e4) / 1e4 + 0.0 END AS ci_hi
-FROM c
-"""
-
-
-def _q_ivm_join_delta_orders(spark, sf_dir):
-    """Incremental join maintenance (operators/ivm.py join_insert_delta):
-    customer/orders split into base + insert batches by key arithmetic;
-    the view increment is the three-term delta algebra Δa⋈b ∪ a⋈Δb ∪
-    Δa⋈Δb — the full join never recomputes. The oracle replays the same
-    splits and union."""
-    from bid_evaluation_spark.operators.ivm import join_insert_delta
-
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("custkey"), "c_acctbal")
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("custkey"), "o_orderkey", "o_totalprice")
-    a, da = (cust.filter(F.col("custkey") % 5 != 0),
-             cust.filter(F.col("custkey") % 5 == 0))
-    b, db = (orders.filter(F.col("o_orderkey") % 4 != 0),
-             orders.filter(F.col("o_orderkey") % 4 == 0))
-    return join_insert_delta(a, da, b, db, "custkey")
-
-
-_SQL_IVM_JOIN_DELTA_ORDERS = """
-WITH ca AS (SELECT c_custkey AS custkey, c_acctbal FROM customer
-            WHERE c_custkey % 5 <> 0),
-cda AS (SELECT c_custkey AS custkey, c_acctbal FROM customer
-        WHERE c_custkey % 5 = 0),
-oa AS (SELECT o_custkey AS custkey, o_orderkey, o_totalprice FROM orders
-       WHERE o_orderkey % 4 <> 0),
-oda AS (SELECT o_custkey AS custkey, o_orderkey, o_totalprice FROM orders
-        WHERE o_orderkey % 4 = 0)
-SELECT cda.custkey, c_acctbal, o_orderkey, o_totalprice
-FROM cda JOIN oa ON cda.custkey = oa.custkey
-UNION ALL
-SELECT ca.custkey, c_acctbal, o_orderkey, o_totalprice
-FROM ca JOIN oda ON ca.custkey = oda.custkey
-UNION ALL
-SELECT cda.custkey, c_acctbal, o_orderkey, o_totalprice
-FROM cda JOIN oda ON cda.custkey = oda.custkey
-"""
-
-
 def _q_pipeline_quantile2pass_lineitem(spark, sf_dir):
     """Exact 0.9-quantile without a global sort (operators/pipeline.py
     exact_quantile_2pass, 512 buckets): bucket-count pass → driver rank
@@ -10013,93 +5941,6 @@ SELECT CAST((SELECT c FROM n) AS BIGINT) AS n,
        CAST((SELECT floor(0.9 * (c - 1)) FROM n) AS BIGINT) AS k,
        x + 0.0 AS value
 FROM r WHERE rk = (SELECT floor(0.9 * (c - 1)) FROM n)
-"""
-
-
-def _q_graph_textrank_documents(spark, sf_dir):
-    """Per-document TextRank keywords (operators/graph.py
-    textrank_keywords): adjacency co-occurrence graphs, 2 damped
-    PageRank rounds, top-3 words per document — the GROUPED pagerank
-    where one corpus-wide plan ranks every document's graph at once (no
-    driver round-trips, unlike the per-graph model loop). The oracle
-    unrolls both rounds as CTE chains over the same edge table (the
-    graph_pagerank_events pattern) and ranks on the 1e-6-rounded score
-    with the word tiebreak."""
-    from bid_evaluation_spark.operators.graph import textrank_keywords
-
-    df = _t(spark, sf_dir, "documents")
-    return textrank_keywords(df, n_iters=2, window=2, top_k=3)
-
-
-_SQL_GRAPH_TEXTRANK_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(lower(text)), '\\s+') END AS t
-  FROM documents
-),
-prs AS (
-  SELECT doc_id, t[i] AS a, t[i + 1] AS b
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 2)
-),
-edges AS MATERIALIZED (
-  SELECT doc_id, src, dst, CAST(count(*) AS DOUBLE) AS w FROM (
-    SELECT doc_id, a AS src, b AS dst FROM prs
-    UNION ALL
-    SELECT doc_id, b AS src, a AS dst FROM prs
-  ) GROUP BY doc_id, src, dst
-),
-outw AS (SELECT doc_id, src, sum(w) AS ow FROM edges
-         GROUP BY doc_id, src),
-ne AS MATERIALIZED (
-  SELECT e.doc_id, e.src, e.dst, e.w / o.ow AS f
-  FROM edges e JOIN outw o ON e.doc_id = o.doc_id AND e.src = o.src
-),
-nodes AS MATERIALIZED (SELECT DISTINCT doc_id, src AS word FROM edges),
-nn AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS n FROM nodes
-       GROUP BY doc_id),
-r0 AS MATERIALIZED (
-  SELECT nodes.doc_id, word, CAST(1 AS DOUBLE) / nn.n AS rank
-  FROM nodes JOIN nn ON nodes.doc_id = nn.doc_id
-),
-c1 AS (
-  SELECT ne.doc_id, ne.dst AS word, sum(r.rank * ne.f) AS c
-  FROM ne JOIN r0 r ON ne.doc_id = r.doc_id AND ne.src = r.word
-  GROUP BY ne.doc_id, ne.dst
-),
-r1 AS MATERIALIZED (
-  SELECT n0.doc_id, n0.word,
-    (1 - CAST(0.85 AS DOUBLE)) / nn.n
-      + CAST(0.85 AS DOUBLE) * COALESCE(c.c, CAST(0 AS DOUBLE)) AS rank
-  FROM nodes n0
-  JOIN nn ON n0.doc_id = nn.doc_id
-  LEFT JOIN c1 c ON n0.doc_id = c.doc_id AND n0.word = c.word
-),
-c2 AS (
-  SELECT ne.doc_id, ne.dst AS word, sum(r.rank * ne.f) AS c
-  FROM ne JOIN r1 r ON ne.doc_id = r.doc_id AND ne.src = r.word
-  GROUP BY ne.doc_id, ne.dst
-),
-r2 AS (
-  SELECT n0.doc_id, n0.word,
-    (1 - CAST(0.85 AS DOUBLE)) / nn.n
-      + CAST(0.85 AS DOUBLE) * COALESCE(c.c, CAST(0 AS DOUBLE)) AS rank
-  FROM nodes n0
-  JOIN nn ON n0.doc_id = nn.doc_id
-  LEFT JOIN c2 c ON n0.doc_id = c.doc_id AND n0.word = c.word
-)
-SELECT doc_id, word, r6 + 0.0 AS rank, CAST(rk AS BIGINT) AS rk
-FROM (
-  SELECT doc_id, word,
-         round(rank * 1e6 + CAST(0.001 AS DOUBLE)) / 1e6 AS r6,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY round(rank * 1e6
-                                           + CAST(0.001 AS DOUBLE)) / 1e6
-                                     DESC, word)
-           AS rk
-  FROM r2
-) WHERE rk <= 3
 """
 
 
@@ -10391,425 +6232,6 @@ FROM ord o JOIN iso USING (k)
 """
 
 
-def _q_ml_ols2_lineitem(spark, sf_dir):
-    """Per-returnflag closed-form OLS (operators/regress.py ols2):
-    y = extendedprice/1000 on (quantity, discount) — training is ONE
-    partial-agg groupBy producing the nine sufficient statistics; the
-    2×2 centered normal system solves in Column arithmetic on the
-    3-row stats table. Round 7: stats come from stable var_samp /
-    covar_samp co-moments (no raw-moment cancellation); the oracle
-    uses DuckDB's matching stable aggregates."""
-    from bid_evaluation_spark.operators.regress import ols2
-
-    li = (_t(spark, sf_dir, "lineitem")
-          .withColumn("_y", F.col("l_extendedprice") / 1000.0))
-    return ols2(li, "l_returnflag", "l_quantity", "l_discount", "_y")
-
-
-_SQL_ML_OLS2_LINEITEM = """
-WITH src AS (
-  SELECT l_returnflag AS grp, CAST(l_quantity AS DOUBLE) AS x1,
-         CAST(l_discount AS DOUBLE) AS x2,
-         CAST(l_extendedprice AS DOUBLE) / CAST(1000 AS DOUBLE) AS y
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-    AND l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-),
-g AS (
-  SELECT grp, count(*) AS n,
-         avg(x1) AS m1, avg(x2) AS m2, avg(y) AS my,
-         var_samp(x1) AS v11, var_samp(x2) AS v22,
-         covar_samp(x1, x2) AS v12,
-         covar_samp(x1, y) AS v1y, covar_samp(x2, y) AS v2y,
-         var_samp(y) AS vyy
-  FROM src GROUP BY grp
-),
-c AS (
-  SELECT grp, n, m1, m2, my,
-         (CAST(n AS DOUBLE) - 1.0) * v11 AS c11,
-         (CAST(n AS DOUBLE) - 1.0) * v22 AS c22,
-         (CAST(n AS DOUBLE) - 1.0) * v12 AS c12,
-         (CAST(n AS DOUBLE) - 1.0) * v1y AS c1y,
-         (CAST(n AS DOUBLE) - 1.0) * v2y AS c2y,
-         (CAST(n AS DOUBLE) - 1.0) * vyy AS cyy
-  FROM g
-),
-s AS (
-  SELECT grp, n, cyy, m1, m2, my, c11, c22, c12, c1y, c2y,
-         c11*c22 - c12*c12 AS det,
-         (c22*c1y - c12*c2y) / (c11*c22 - c12*c12) AS b1,
-         (c11*c2y - c12*c1y) / (c11*c22 - c12*c12) AS b2
-  FROM c
-)
-SELECT grp AS "group", CAST(n AS BIGINT) AS n,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12
-       THEN round((my - b1*m1 - b2*m2) * 1e4) / 1e4 + 0.0 END AS b0,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12
-       THEN round(b1 * 1e4) / 1e4 + 0.0 END AS b1,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12
-       THEN round(b2 * 1e4) / 1e4 + 0.0 END AS b2,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12 AND cyy > 1e-12
-       THEN round((CAST(1 AS DOUBLE)
-            - (cyy - CAST(2 AS DOUBLE)*(b1*c1y + b2*c2y)
-               + b1*b1*c11 + CAST(2 AS DOUBLE)*b1*b2*c12 + b2*b2*c22) / cyy)
-            * 1e4) / 1e4 + 0.0 END AS r2
-FROM s
-"""
-
-
-def _q_ml_ridge2_lineitem(spark, sf_dir):
-    """Ridge twin of ml_ols2 (operators/regress.py ridge2, λ=1e5 on the
-    centered Gram diagonal, intercept unpenalized): same single-agg
-    training shape; r2 is the plain residual R² of the shrunk
-    coefficients (≤ OLS R² by construction). Oracle replays the
-    penalized solve and unpenalized SSE quadratic."""
-    from bid_evaluation_spark.operators.regress import ridge2
-
-    li = (_t(spark, sf_dir, "lineitem")
-          .withColumn("_y", F.col("l_extendedprice") / 1000.0))
-    return ridge2(li, "l_returnflag", "l_quantity", "l_discount", "_y",
-                  lam=1e5)
-
-
-_SQL_ML_RIDGE2_LINEITEM = """
-WITH src AS (
-  SELECT l_returnflag AS grp, CAST(l_quantity AS DOUBLE) AS x1,
-         CAST(l_discount AS DOUBLE) AS x2,
-         CAST(l_extendedprice AS DOUBLE) / CAST(1000 AS DOUBLE) AS y
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-    AND l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL
-),
-g AS (
-  SELECT grp, count(*) AS n,
-         avg(x1) AS m1, avg(x2) AS m2, avg(y) AS my,
-         var_samp(x1) AS v11, var_samp(x2) AS v22,
-         covar_samp(x1, x2) AS v12,
-         covar_samp(x1, y) AS v1y, covar_samp(x2, y) AS v2y,
-         var_samp(y) AS vyy
-  FROM src GROUP BY grp
-),
-c AS (
-  SELECT grp, n, m1, m2, my,
-         (CAST(n AS DOUBLE) - 1.0) * v11 + CAST(100000 AS DOUBLE) AS c11,
-         (CAST(n AS DOUBLE) - 1.0) * v22 + CAST(100000 AS DOUBLE) AS c22,
-         (CAST(n AS DOUBLE) - 1.0) * v12 AS c12,
-         (CAST(n AS DOUBLE) - 1.0) * v1y AS c1y,
-         (CAST(n AS DOUBLE) - 1.0) * v2y AS c2y,
-         (CAST(n AS DOUBLE) - 1.0) * vyy AS cyy
-  FROM g
-),
-s AS (
-  SELECT grp, n, cyy, m1, m2, my, c11, c22, c12, c1y, c2y,
-         c11*c22 - c12*c12 AS det,
-         (c22*c1y - c12*c2y) / (c11*c22 - c12*c12) AS b1,
-         (c11*c2y - c12*c1y) / (c11*c22 - c12*c12) AS b2
-  FROM c
-)
-SELECT grp AS "group", CAST(n AS BIGINT) AS n,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12
-       THEN round((my - b1*m1 - b2*m2) * 1e4) / 1e4 + 0.0 END AS b0,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12
-       THEN round(b1 * 1e4) / 1e4 + 0.0 END AS b1,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12
-       THEN round(b2 * 1e4) / 1e4 + 0.0 END AS b2,
-  CASE WHEN n >= 3 AND abs(det) > 1e-12 AND cyy > 1e-12
-       THEN round((CAST(1 AS DOUBLE)
-            - (cyy - CAST(2 AS DOUBLE)*(b1*c1y + b2*c2y)
-               + b1*b1*(c11 - CAST(100000 AS DOUBLE))
-               + CAST(2 AS DOUBLE)*b1*b2*c12
-               + b2*b2*(c22 - CAST(100000 AS DOUBLE))) / cyy)
-            * 1e4) / 1e4 + 0.0 END AS r2
-FROM s
-"""
-
-
-def _q_graph_linkpred_lineitem(spark, sf_dir):
-    """Link prediction on the order↔part bipartite incidence
-    (operators/graph.py link_prediction): common-container count,
-    Adamic–Adar and Jaccard per part pair sharing ≥2 orders. The
-    per-container pair blow-up is bounded by the basket cap (7 = the
-    TPC-H max, so nothing is dropped locally but the guard is
-    exercised). The oracle replays the capped self-join and both score
-    formulas."""
-    from bid_evaluation_spark.operators.graph import link_prediction
-
-    li = _t(spark, sf_dir, "lineitem")
-    return link_prediction(li, "l_orderkey", "l_partkey",
-                           max_container_size=7, min_common=2)
-
-
-_SQL_GRAPH_LINKPRED_LINEITEM = """
-WITH inc AS (
-  SELECT DISTINCT l_orderkey AS c, l_partkey AS n FROM lineitem
-  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-),
-sz AS (SELECT c, count(*) AS sz FROM inc GROUP BY c
-       HAVING count(*) <= 7),
-kept AS (SELECT inc.c, inc.n, sz.sz FROM inc JOIN sz USING (c)),
-deg AS (SELECT n, count(*) AS degree FROM kept GROUP BY n),
-pairs AS (
-  SELECT a.n AS node_a, b.n AS node_b, count(*) AS common,
-         sum(CAST(1 AS DOUBLE) / ln(CAST(a.sz AS DOUBLE))) AS aa
-  FROM kept a JOIN kept b ON a.c = b.c AND a.n < b.n
-  GROUP BY a.n, b.n HAVING count(*) >= 2
-)
-SELECT node_a, node_b, CAST(common AS BIGINT) AS common,
-  round(aa * 1e4) / 1e4 + 0.0 AS adamic_adar,
-  round(CAST(common AS DOUBLE)
-        / CAST(da.degree + db.degree - common AS DOUBLE) * 1e4) / 1e4
-    + 0.0 AS jaccard
-FROM pairs
-JOIN deg da ON pairs.node_a = da.n
-JOIN deg db ON pairs.node_b = db.n
-"""
-
-
-def _q_rec_item_cosine_lineitem(spark, sf_dir):
-    """Item-item collaborative filtering (operators/recs.py
-    item_item_cosine): top-5 cosine neighbors per part from the
-    order→part interaction table, hub orders capped at 7 items,
-    pairs pruned below 2 common orders. Cosine rounds to 4 decimals
-    BEFORE ranking so rnk is engine-reproducible; the oracle replays
-    cap, co-count, cosine and window."""
-    from bid_evaluation_spark.operators.recs import item_item_cosine
-
-    li = _t(spark, sf_dir, "lineitem")
-    return item_item_cosine(li, "l_orderkey", "l_partkey", k=5,
-                            max_user_items=7, min_common=2)
-
-
-_SQL_REC_ITEM_COSINE_LINEITEM = """
-WITH inc AS (
-  SELECT DISTINCT l_orderkey AS u, l_partkey AS i FROM lineitem
-  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-),
-kept AS (
-  SELECT u, i FROM inc
-  WHERE u IN (SELECT u FROM inc GROUP BY u HAVING count(*) <= 7)
-),
-deg AS (SELECT i, count(*) AS nu FROM kept GROUP BY i),
-co AS (
-  SELECT a.i AS item, b.i AS neighbor, count(*) AS common
-  FROM kept a JOIN kept b ON a.u = b.u AND a.i <> b.i
-  GROUP BY 1, 2 HAVING count(*) >= 2
-),
-sc AS (
-  SELECT item, neighbor, common,
-    round(CAST(common AS DOUBLE)
-          / sqrt(CAST(di.nu AS DOUBLE) * CAST(dj.nu AS DOUBLE))
-          * 1e4) / 1e4 + 0.0 AS cosine
-  FROM co
-  JOIN deg di ON co.item = di.i
-  JOIN deg dj ON co.neighbor = dj.i
-)
-SELECT item, neighbor, CAST(common AS BIGINT) AS common, cosine,
-       CAST(rnk AS BIGINT) AS rnk
-FROM (SELECT *, row_number() OVER (PARTITION BY item
-                                   ORDER BY cosine DESC, neighbor) AS rnk
-      FROM sc)
-WHERE rnk <= 5
-"""
-
-
-def _q_cdc_scd2_orders(spark, sf_dir):
-    """SCD type-2 dimension history (operators/cdc.py scd2_history):
-    per customer, collapse the (priority, status) change log ordered by
-    (orderdate, orderkey) into validity-interval versions with
-    valid_from/valid_to/is_current — the Kimball warehouse history
-    build as two key-partitioned windows. The oracle replays the
-    null-safe lag comparison and lead/row_number intervals."""
-    from bid_evaluation_spark.operators.cdc import scd2_history
-
-    o = _t(spark, sf_dir, "orders")
-    h = scd2_history(o, ["o_custkey"], "o_orderdate",
-                     ["o_orderpriority", "o_orderstatus"], "o_orderkey")
-    return h.select(
-        "o_custkey", "o_orderpriority", "o_orderstatus",
-        F.date_format("valid_from", _TS_FMT_SPARK).alias("valid_from"),
-        F.date_format("valid_to", _TS_FMT_SPARK).alias("valid_to"),
-        "version", "is_current")
-
-
-_SQL_CDC_SCD2_ORDERS = f"""
-WITH src AS (
-  SELECT o_custkey AS k, o_orderdate AS ts, o_orderkey AS id,
-         o_orderpriority AS a1, o_orderstatus AS a2
-  FROM orders
-),
-m AS (
-  SELECT *, lag(a1) OVER w AS p1, lag(a2) OVER w AS p2,
-         row_number() OVER w AS rn
-  FROM src WINDOW w AS (PARTITION BY k ORDER BY ts, id)
-),
-runs AS (
-  SELECT k, ts, id, a1, a2 FROM m
-  WHERE rn = 1 OR (a1 IS DISTINCT FROM p1) OR (a2 IS DISTINCT FROM p2)
-)
-SELECT k AS o_custkey, a1 AS o_orderpriority, a2 AS o_orderstatus,
-  strftime(ts, '{{_FMT}}') AS valid_from,
-  strftime(lead(ts) OVER w2, '{{_FMT}}') AS valid_to,
-  CAST(row_number() OVER w2 AS BIGINT) AS version,
-  (lead(ts) OVER w2) IS NULL AS is_current
-FROM runs WINDOW w2 AS (PARTITION BY k ORDER BY ts, id)
-""".replace("{_FMT}", _TS_FMT_DUCK)
-
-
-def _q_privacy_ldiversity_customer(spark, sf_dir):
-    """ℓ-diversity audit (operators/privacy.py l_diversity_report):
-    quasi-identifiers (nation, market segment), sensitive attribute =
-    1000-wide account-balance band; classes with < 6 distinct bands are
-    the violations, each with its Shannon entropy (the entropy-ℓ
-    statistic). The oracle replays the cell/roll-up arithmetic."""
-    from bid_evaluation_spark.operators.privacy import l_diversity_report
-
-    c = (_t(spark, sf_dir, "customer")
-         .withColumn("_band", F.floor(F.col("c_acctbal") / 1000.0)))
-    return l_diversity_report(c, ["c_nationkey", "c_mktsegment"],
-                              "_band", l=6)
-
-
-_SQL_PRIVACY_LDIVERSITY_CUSTOMER = """
-WITH cells AS (
-  SELECT c_nationkey, c_mktsegment,
-         floor(CAST(c_acctbal AS DOUBLE) / CAST(1000 AS DOUBLE)) AS sv,
-         count(*) AS cnt
-  FROM customer GROUP BY 1, 2, 3
-),
-tot AS (
-  SELECT c_nationkey, c_mktsegment, cnt,
-         sum(cnt) OVER (PARTITION BY c_nationkey, c_mktsegment) AS cs
-  FROM cells
-)
-SELECT c_nationkey, c_mktsegment,
-  CAST(max(cs) AS BIGINT) AS class_size,
-  CAST(count(*) AS BIGINT) AS n_sensitive,
-  round(sum(-(CAST(cnt AS DOUBLE) / CAST(cs AS DOUBLE))
-            * ln(CAST(cnt AS DOUBLE) / CAST(cs AS DOUBLE))) * 1e4) / 1e4
-    + 0.0 AS entropy
-FROM tot GROUP BY 1, 2 HAVING count(*) < 6
-"""
-
-
-def _q_analytics_srm_events(spark, sf_dir):
-    """Sample-ratio-mismatch guardrail (operators/analytics.py
-    srm_check): distinct users hash-split into a synthetic 50/50 A/B
-    assignment, χ² goodness-of-fit against the design shares with the
-    Wilson–Hilferty z as the alarm statistic. The oracle replays count,
-    χ² and the cube-root normal approximation."""
-    from bid_evaluation_spark.operators.analytics import srm_check
-
-    units = (_t(spark, sf_dir, "events")
-             .select("user_id").distinct()
-             .withColumn("arm", F.when(F.col("user_id") % 2 == 0, "A")
-                         .otherwise("B")))
-    return srm_check(units, "arm", {"A": 0.5, "B": 0.5})
-
-
-_SQL_ANALYTICS_SRM_EVENTS = """
-WITH units AS (
-  SELECT DISTINCT user_id,
-         CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-  FROM events
-),
-c AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS DOUBLE) AS oa,
-         CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS DOUBLE) AS ob
-  FROM units
-),
-s AS (
-  SELECT n, (oa - n * CAST(0.5 AS DOUBLE)) * (oa - n * CAST(0.5 AS DOUBLE))
-           / (n * CAST(0.5 AS DOUBLE))
-         + (ob - n * CAST(0.5 AS DOUBLE)) * (ob - n * CAST(0.5 AS DOUBLE))
-           / (n * CAST(0.5 AS DOUBLE)) AS chi2
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n,
-  round(chi2 * 1e4) / 1e4 + 0.0 AS chi2,
-  CAST(1 AS BIGINT) AS dof,
-  round((pow(chi2 / CAST(1 AS DOUBLE),
-             CAST(1 AS DOUBLE) / CAST(3 AS DOUBLE))
-         - (CAST(1 AS DOUBLE) - CAST(2 AS DOUBLE) / CAST(9 AS DOUBLE)))
-        / sqrt(CAST(2 AS DOUBLE) / CAST(9 AS DOUBLE)) * 1e4) / 1e4
-    + 0.0 AS z_wh,
-  ((pow(chi2 / CAST(1 AS DOUBLE),
-        CAST(1 AS DOUBLE) / CAST(3 AS DOUBLE))
-    - (CAST(1 AS DOUBLE) - CAST(2 AS DOUBLE) / CAST(9 AS DOUBLE)))
-   / sqrt(CAST(2 AS DOUBLE) / CAST(9 AS DOUBLE))) > CAST(3 AS DOUBLE) AS srm,
-  CAST(0 AS BIGINT) AS n_unexpected
-FROM s
-"""
-
-
-def _q_ts_changepoint_events(spark, sf_dir):
-    """Best single mean-shift changepoint per event type
-    (operators/timeseries.py changepoint_by_key) over the HOURLY mean
-    series — the series is compressed to bounded length before the
-    per-key window, hourly means round to 1e-6 so both engines feed
-    bit-identical inputs into the (order-deterministic) prefix-sum
-    arithmetic over MEAN-CENTERED values (round-7 conditioning fix —
-    gain is translation-invariant, centering kills the Σv²−(Σv)²/t
-    cancellation). The oracle replays centering, cumsum, gain and the
-    rounded-gain argmax."""
-    from bid_evaluation_spark.operators.timeseries import changepoint_by_key
-
-    hourly = (_t(spark, sf_dir, "events")
-              .groupBy("event_type",
-                       F.date_trunc("hour", F.col("ts")).alias("_h"))
-              .agg((F.round(F.avg("value") * 1e6) / 1e6).alias("_v")))
-    return (changepoint_by_key(hourly, "event_type", ["_h"], "_v")
-            .withColumnRenamed("key", "event_type"))
-
-
-_SQL_TS_CHANGEPOINT_EVENTS = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS h,
-         round(avg(value) * 1e6) / 1e6 AS v
-  FROM events GROUP BY 1, 2
-),
-centered AS (
-  SELECT event_type, h, v - avg(v) OVER wk AS d,
-         avg(v) OVER wk AS mu
-  FROM hourly WHERE v IS NOT NULL
-  WINDOW wk AS (PARTITION BY event_type)
-),
-b AS (
-  SELECT event_type, mu,
-         row_number() OVER w AS t,
-         sum(d) OVER w AS cs,
-         sum(d * d) OVER w AS css,
-         count(*) OVER wk AS n,
-         sum(d) OVER wk AS s,
-         sum(d * d) OVER wk AS ss
-  FROM centered
-  WINDOW w AS (PARTITION BY event_type ORDER BY h
-               ROWS UNBOUNDED PRECEDING),
-         wk AS (PARTITION BY event_type)
-),
-cand AS (
-  SELECT event_type, t, n, cs, s, mu,
-    round(((ss - s * s / CAST(n AS DOUBLE))
-           - (css - cs * cs / CAST(t AS DOUBLE))
-           - (ss - css - (s - cs) * (s - cs)
-              / (CAST(n AS DOUBLE) - CAST(t AS DOUBLE)))) * 1e6) / 1e6
-      AS gain
-  FROM b WHERE t >= 2 AND t <= n - 2
-),
-best AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type
-                               ORDER BY gain DESC, t) AS rk
-  FROM cand
-)
-SELECT event_type, CAST(n AS BIGINT) AS n, CAST(t AS BIGINT) AS split_after,
-  round(gain * 1e4) / 1e4 + 0.0 AS gain,
-  round((mu + cs / CAST(t AS DOUBLE)) * 1e4) / 1e4 + 0.0 AS mean_left,
-  round((mu + (s - cs) / (CAST(n AS DOUBLE) - CAST(t AS DOUBLE)))
-        * 1e4) / 1e4 + 0.0 AS mean_right
-FROM best WHERE rk = 1
-"""
-
-
 def _q_ml_knn_embeddings(spark, sf_dir):
     """kNN classification (operators/classify.py knn_classify): 1-in-37
     held-out queries, majority label among the 5 cosine-nearest
@@ -10861,386 +6283,6 @@ SELECT qid AS vec_id, tl AS label, predicted,
        CAST(votes AS BIGINT) AS votes, top_cosine,
        predicted = tl AS correct
 FROM best WHERE rk = 1
-"""
-
-
-def _q_cdc_pit_orders(spark, sf_dir):
-    """Point-in-time join (operators/cdc.py pit_join) of a 1-in-7 order
-    sample against the SCD2 priority/status history of ALL orders
-    (scd2_history): each fact picks the customer version valid at its
-    own date — equi-join on custkey carries the partitioning, the
-    interval predicate filters the per-key version matches, at most one
-    version survives per fact by interval disjointness. The oracle
-    rebuilds the history CTE and replays the [valid_from, valid_to)
-    lookup."""
-    from bid_evaluation_spark.operators.cdc import pit_join, scd2_history
-
-    o = _t(spark, sf_dir, "orders")
-    hist = scd2_history(o, ["o_custkey"], "o_orderdate",
-                        ["o_orderpriority", "o_orderstatus"],
-                        "o_orderkey")
-    facts = (o.filter(F.col("o_orderkey") % 7 == 0)
-             .select("o_orderkey", "o_custkey",
-                     F.col("o_orderdate").alias("fact_ts")))
-    j = pit_join(facts, hist, ["o_custkey"], "fact_ts")
-    return j.select(
-        "o_orderkey", "o_custkey",
-        F.date_format("fact_ts", _TS_FMT_SPARK).alias("fact_ts"),
-        "o_orderpriority", "o_orderstatus",
-        F.date_format("valid_from", _TS_FMT_SPARK).alias("valid_from"),
-        F.date_format("valid_to", _TS_FMT_SPARK).alias("valid_to"),
-        "version", "is_current")
-
-
-_SQL_CDC_PIT_ORDERS = f"""
-WITH src AS (
-  SELECT o_custkey AS k, o_orderdate AS ts, o_orderkey AS id,
-         o_orderpriority AS a1, o_orderstatus AS a2
-  FROM orders
-),
-m AS (
-  SELECT *, lag(a1) OVER w AS p1, lag(a2) OVER w AS p2,
-         row_number() OVER w AS rn
-  FROM src WINDOW w AS (PARTITION BY k ORDER BY ts, id)
-),
-runs AS (
-  SELECT k, ts, id, a1, a2 FROM m
-  WHERE rn = 1 OR (a1 IS DISTINCT FROM p1) OR (a2 IS DISTINCT FROM p2)
-),
-hist AS (
-  SELECT k, a1, a2, ts AS vf, lead(ts) OVER w2 AS vt,
-         row_number() OVER w2 AS version
-  FROM runs WINDOW w2 AS (PARTITION BY k ORDER BY ts, id)
-),
-facts AS (
-  SELECT o_orderkey, o_custkey, o_orderdate AS fact_ts FROM orders
-  WHERE o_orderkey % 7 = 0
-)
-SELECT f.o_orderkey, f.o_custkey,
-  strftime(f.fact_ts, '{{_FMT}}') AS fact_ts,
-  h.a1 AS o_orderpriority, h.a2 AS o_orderstatus,
-  strftime(h.vf, '{{_FMT}}') AS valid_from,
-  strftime(h.vt, '{{_FMT}}') AS valid_to,
-  CAST(h.version AS BIGINT) AS version,
-  CASE WHEN h.k IS NULL THEN NULL ELSE h.vt IS NULL END AS is_current
-FROM facts f
-LEFT JOIN hist h
-  ON f.o_custkey = h.k AND f.fact_ts >= h.vf
-     AND (h.vt IS NULL OR f.fact_ts < h.vt)
-""".replace("{_FMT}", _TS_FMT_DUCK)
-
-
-def _q_profile_mahalanobis_lineitem(spark, sf_dir):
-    """Top-20 bivariate outliers per return flag by Mahalanobis d²
-    (operators/profile.py mahalanobis_outliers) over (quantity,
-    extendedprice/1000): one stable co-moment aggregation
-    (var_pop/covar_pop, round-7 conditioning fix), closed-form 2×2
-    inverse broadcast back, d² rounds to 4 decimals BEFORE ranking.
-    The oracle uses DuckDB's matching stable population co-moments."""
-    from bid_evaluation_spark.operators.profile import mahalanobis_outliers
-
-    li = (_t(spark, sf_dir, "lineitem")
-          .withColumn("_y", F.col("l_extendedprice") / 1000.0))
-    return mahalanobis_outliers(li, "l_returnflag", "l_quantity", "_y",
-                                top_k=20)
-
-
-_SQL_PROFILE_MAHALANOBIS_LINEITEM = """
-WITH src AS (
-  SELECT l_returnflag AS grp, CAST(l_quantity AS DOUBLE) AS x,
-         CAST(l_extendedprice AS DOUBLE) / CAST(1000 AS DOUBLE) AS y
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-),
-g AS (
-  SELECT grp, count(*) AS n, avg(x) AS mx, avg(y) AS my,
-         var_pop(x) AS vxx, var_pop(y) AS vyy, covar_pop(x, y) AS vxy
-  FROM src GROUP BY grp
-),
-stats AS (
-  SELECT grp, mx, my, vxx, vyy, vxy,
-         vxx * vyy - vxy * vxy AS det
-  FROM g WHERE n >= 3
-),
-scored AS (
-  SELECT s.grp, s.x, s.y,
-    round(((s.x - t.mx) * (t.vyy * (s.x - t.mx) - t.vxy * (s.y - t.my))
-           + (s.y - t.my) * (t.vxx * (s.y - t.my) - t.vxy * (s.x - t.mx)))
-          / t.det * 1e4) / 1e4 + 0.0 AS d2
-  FROM src s JOIN stats t ON s.grp = t.grp
-  WHERE abs(t.det) > 1e-12
-)
-SELECT grp AS "group", x, y, d2, CAST(rnk AS BIGINT) AS rnk
-FROM (SELECT *, row_number() OVER (PARTITION BY grp
-                                   ORDER BY d2 DESC, x, y) AS rnk
-      FROM scored)
-WHERE rnk <= 20
-"""
-
-
-def _q_ts_logrank_events(spark, sf_dir):
-    """Two-sample log-rank test (operators/timeseries.py logrank_test)
-    over the KM query's synthetic censored durations, groups = user
-    parity: per distinct event time the pooled d·n1/n expectation and
-    hypergeometric variance, one final aggregate → (n_times, o1, e1,
-    v, z, chi2). The oracle replays the at-risk bookkeeping and both
-    sums."""
-    from bid_evaluation_spark.operators.timeseries import logrank_test
-
-    ev = _t(spark, sf_dir, "events").select(
-        ((F.col("event_id") % 97) + 1).cast("double").alias("dur"),
-        (F.col("event_id") % 5 != 0).alias("observed"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("g"))
-    return logrank_test(ev, "dur", "observed", "g", "a", "b")
-
-
-_SQL_TS_LOGRANK_EVENTS = """
-WITH rws AS (
-  SELECT CAST(event_id % 97 + 1 AS DOUBLE) AS t,
-         (event_id % 5 <> 0) AS ev,
-         CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS g
-  FROM events
-),
-per_t AS (
-  SELECT t,
-         sum(CASE WHEN g = 'a' THEN 1 ELSE 0 END) AS l1,
-         sum(CASE WHEN g = 'a' AND ev THEN 1 ELSE 0 END) AS d1,
-         sum(CASE WHEN g = 'b' THEN 1 ELSE 0 END) AS l2,
-         sum(CASE WHEN g = 'b' AND ev THEN 1 ELSE 0 END) AS d2
-  FROM rws GROUP BY t
-),
-risk AS (
-  SELECT t, d1, d2,
-    sum(l1) OVER () - COALESCE(sum(l1) OVER (ORDER BY t
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n1,
-    sum(l2) OVER () - COALESCE(sum(l2) OVER (ORDER BY t
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n2
-  FROM per_t
-),
-terms AS (
-  SELECT d1,
-    CAST(d1 + d2 AS DOUBLE) * CAST(n1 AS DOUBLE)
-      / CAST(n1 + n2 AS DOUBLE) AS e1,
-    CASE WHEN CAST(n1 + n2 AS DOUBLE) > CAST(1 AS DOUBLE)
-         THEN CAST(d1 + d2 AS DOUBLE)
-              * (CAST(n1 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE))
-              * (CAST(1 AS DOUBLE)
-                 - CAST(n1 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE))
-              * (CAST(n1 + n2 AS DOUBLE) - CAST(d1 + d2 AS DOUBLE))
-              / (CAST(n1 + n2 AS DOUBLE) - CAST(1 AS DOUBLE))
-         ELSE CAST(0 AS DOUBLE) END AS v
-  FROM risk WHERE d1 + d2 >= 1
-),
-agg AS (
-  SELECT count(*) AS n_times, sum(d1) AS o1, sum(e1) AS se1,
-         sum(v) AS sv
-  FROM terms
-)
-SELECT CAST(n_times AS BIGINT) AS n_times, CAST(o1 AS BIGINT) AS o1,
-  round(se1 * 1e4) / 1e4 + 0.0 AS e1,
-  round(sv * 1e4) / 1e4 + 0.0 AS v,
-  CASE WHEN n_times > 0 AND sv > 1e-12
-       THEN round((CAST(o1 AS DOUBLE) - se1) / sqrt(sv) * 1e4) / 1e4
-            + 0.0 END AS z,
-  CASE WHEN n_times > 0 AND sv > 1e-12
-       THEN round(((CAST(o1 AS DOUBLE) - se1) / sqrt(sv))
-                  * ((CAST(o1 AS DOUBLE) - se1) / sqrt(sv)) * 1e4) / 1e4
-            + 0.0 END AS chi2
-FROM agg
-"""
-
-
-def _q_ts_anomaly_events(spark, sf_dir):
-    """Seasonality-aware anomalies (operators/timeseries.py
-    seasonal_anomalies): the ts_seasonal decomposition's residuals
-    scored with per-key median/MAD robust z, flagged at |z| > 3.5.
-    Residuals are bit-identical across engines (value − ROUNDED trend −
-    ROUNDED seasonal), so the exact-percentile med/MAD and the
-    threshold decisions replay exactly in the oracle."""
-    from bid_evaluation_spark.operators.timeseries import seasonal_anomalies
-
-    ev = (_t(spark, sf_dir, "events")
-          .withColumn("_x", F.col("ts").cast("double")))
-    res = seasonal_anomalies(ev, "event_type", ["_x", "event_id"],
-                             "value", period=7, z_thresh=3.5)
-    return res.select("event_type", "event_id",
-                      (_r4("value") + F.lit(0.0)).alias("value"),
-                      (_r4("residual") + F.lit(0.0)).alias("residual"),
-                      "robust_z")
-
-
-_SQL_TS_ANOMALY_EVENTS = """
-WITH base AS (
-  SELECT event_type AS g, event_id AS e, CAST(value AS DOUBLE) AS x,
-         row_number() OVER w - 1 AS idx,
-         avg(CAST(value AS DOUBLE)) OVER (
-           PARTITION BY event_type
-           ORDER BY CAST(epoch_us(ts) AS DOUBLE) / 1000000.0, event_id
-           ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend
-  FROM events
-  WINDOW w AS (PARTITION BY event_type
-               ORDER BY CAST(epoch_us(ts) AS DOUBLE) / 1000000.0, event_id)
-),
-det AS (SELECT g, e, x, trend, idx, x - trend AS d FROM base),
-sea AS (
-  SELECT g, e, x, trend, avg(d) OVER (PARTITION BY g, idx % 7) AS sm
-  FROM det
-),
-cen AS (
-  SELECT g, e, x,
-         round(trend * 1e4) / 1e4 + 0.0 AS tr,
-         round((sm - avg(sm) OVER (PARTITION BY g)) * 1e4) / 1e4 + 0.0 AS se
-  FROM sea
-),
-resid AS (SELECT g, e, x, x - tr - se + 0.0 AS r FROM cen),
-med AS (SELECT g, quantile_cont(r, 0.5) AS m FROM resid GROUP BY g),
-mad AS (
-  SELECT resid.g, quantile_cont(abs(r - m), 0.5) AS md
-  FROM resid JOIN med ON resid.g = med.g GROUP BY resid.g
-),
-scored AS (
-  SELECT resid.g, e, x, r,
-         (r - m) / (CAST(1.4826 AS DOUBLE) * md) AS z
-  FROM resid JOIN med ON resid.g = med.g JOIN mad ON resid.g = mad.g
-  WHERE md <> 0
-)
-SELECT g AS event_type, e AS event_id,
-  round(x * 1e4) / 1e4 + 0.0 AS value,
-  round(r * 1e4) / 1e4 + 0.0 AS residual,
-  round(z * 1e4) / 1e4 + 0.0 AS robust_z
-FROM scored WHERE abs(z) > CAST(3.5 AS DOUBLE)
-"""
-
-
-def _q_layout_compaction_orders(spark, sf_dir):
-    """Compaction planning (operators/layout.py compaction_plan) over a
-    synthetic file manifest (one 'file' per order, size = totalprice
-    bytes): deterministic running-total placement into ~1 MB rewrite
-    groups, group totals/counts via a second window — the manifest is
-    the only thing scanned, never data. The oracle replays the ordered
-    cumulative floor-divide."""
-    from bid_evaluation_spark.operators.layout import compaction_plan
-
-    files = (_t(spark, sf_dir, "orders")
-             .select(F.concat(F.lit("part-"),
-                              F.lpad(F.col("o_orderkey").cast("string"),
-                                     10, "0")).alias("path"),
-                     F.floor("o_totalprice").cast("long").alias("size")))
-    return compaction_plan(files, "path", "size", target_bytes=1_000_000)
-
-
-_SQL_LAYOUT_COMPACTION_ORDERS = """
-WITH files AS (
-  SELECT 'part-' || lpad(CAST(o_orderkey AS VARCHAR), 10, '0') AS path,
-         CAST(floor(o_totalprice) AS BIGINT) AS size
-  FROM orders
-),
-keyed AS (
-  SELECT path, size,
-    CAST(floor(CAST(COALESCE(sum(size) OVER (ORDER BY path
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE)
-         / 1000000) AS BIGINT) AS out_group
-  FROM files WHERE size IS NOT NULL AND size >= 0
-)
-SELECT path, size AS size_bytes, out_group,
-  sum(size) OVER (PARTITION BY out_group) AS group_total,
-  CAST(count(*) OVER (PARTITION BY out_group) AS BIGINT) AS group_files
-FROM keyed
-"""
-
-
-def _q_analytics_wilson_orders(spark, sf_dir):
-    """Per-priority fulfilment scorecard with Wilson 95% intervals
-    (operators/analytics.py wilson_by_group) — the many-group companion
-    of the 2-variant A/B read-out, no collect, group cardinality
-    unbounded. The oracle replays the closed-form interval."""
-    from bid_evaluation_spark.operators.analytics import wilson_by_group
-
-    o = (_t(spark, sf_dir, "orders")
-         .withColumn("_s", F.col("o_orderstatus") == "F"))
-    return wilson_by_group(o, "o_orderpriority", "_s")
-
-
-_SQL_ANALYTICS_WILSON_ORDERS = """
-WITH g AS (
-  SELECT o_orderpriority AS grp, count(*) AS n,
-         sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS k
-  FROM orders
-  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-  GROUP BY 1
-),
-c AS (
-  SELECT grp, n, k,
-         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-         CAST(1.959963984540054 AS DOUBLE)
-           * CAST(1.959963984540054 AS DOUBLE) AS z2,
-         CAST(1.959963984540054 AS DOUBLE) AS z,
-         CAST(n AS DOUBLE) AS nd
-  FROM g
-)
-SELECT grp AS "group", CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
-  round(p * 1e4) / 1e4 + 0.0 AS rate,
-  round(((p + z2 / (CAST(2 AS DOUBLE) * nd)) / (CAST(1 AS DOUBLE) + z2 / nd)
-         - z * sqrt(p * (CAST(1 AS DOUBLE) - p) / nd
-                    + z2 / (CAST(4 AS DOUBLE) * nd * nd))
-           / (CAST(1 AS DOUBLE) + z2 / nd)) * 1e4) / 1e4 + 0.0 AS ci_lo,
-  round(((p + z2 / (CAST(2 AS DOUBLE) * nd)) / (CAST(1 AS DOUBLE) + z2 / nd)
-         + z * sqrt(p * (CAST(1 AS DOUBLE) - p) / nd
-                    + z2 / (CAST(4 AS DOUBLE) * nd * nd))
-           / (CAST(1 AS DOUBLE) + z2 / nd)) * 1e4) / 1e4 + 0.0 AS ci_hi
-FROM c
-"""
-
-
-def _q_ts_period_events(spark, sf_dir):
-    """Dominant seasonality per event type (operators/timeseries.py
-    dominant_period): argmax of the fused-aggregate ACF over lags 1–12,
-    ties to the smallest lag. One window pass computes all 12 lags with
-    stable corr/var_samp co-moments (round-7 conditioning fix); the
-    oracle rebuilds the shifted pairs with a row_number self-join and
-    replays DuckDB's matching stable corr() and the argmax."""
-    from bid_evaluation_spark.operators.timeseries import dominant_period
-
-    ev = _t(spark, sf_dir, "events")
-    return dominant_period(ev, "event_type", ["ts", "event_id"], "value",
-                           max_lag=12)
-
-
-_SQL_TS_PERIOD_EVENTS = """
-WITH ord AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS x,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY ts, event_id) AS rn
-  FROM events
-),
-lags AS (SELECT unnest(generate_series(1, 12)) AS lag),
-pairs AS (
-  SELECT a.event_type, l.lag, a.x AS x, b.x AS y
-  FROM ord a JOIN lags l ON TRUE
-  LEFT JOIN ord b ON a.event_type = b.event_type AND b.rn = a.rn - l.lag
-),
-g AS (
-  SELECT event_type, lag,
-    count(*) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS n,
-    corr(x, y) AS r,
-    var_samp(x) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS vx,
-    var_samp(y) FILTER (WHERE x IS NOT NULL AND y IS NOT NULL) AS vy
-  FROM pairs GROUP BY event_type, lag
-),
-acf AS (
-  SELECT event_type, CAST(lag AS BIGINT) AS lag,
-    CAST(coalesce(n, 0) AS BIGINT) AS n_pairs,
-    CASE WHEN vx > 0 AND vy > 0
-         THEN round(r * 1e4) / 1e4 + 0.0
-    END AS acf
-  FROM g
-)
-SELECT event_type, lag, n_pairs, acf
-FROM (SELECT *, row_number() OVER (
-        PARTITION BY event_type
-        ORDER BY round(acf * 1e6) / 1e6 DESC, lag) AS rk
-      FROM acf WHERE acf IS NOT NULL)
-WHERE rk = 1
 """
 
 
@@ -11348,87 +6390,6 @@ FROM ab WHERE b IS NOT NULL GROUP BY cluster
 """
 
 
-def _q_ts_disorder_events(spark, sf_dir):
-    """Out-of-orderness / watermark-lag profile per event type
-    (operators/timeseries.py event_disorder): replay in event_id
-    (arrival) order, lateness = running event-time high-water mark
-    minus ts, exact p50/p99 over the late events — the measurement
-    that sets allowed-lateness honestly. The oracle replays the
-    running-max window and quantile_cont."""
-    from bid_evaluation_spark.operators.timeseries import event_disorder
-
-    ev = (_t(spark, sf_dir, "events")
-          .withColumn("_ts", F.col("ts").cast("double")))
-    return event_disorder(ev, "event_type", "event_id", "_ts")
-
-
-_SQL_TS_DISORDER_EVENTS = """
-WITH base AS (
-  SELECT event_type,
-    CAST(epoch_us(ts) AS DOUBLE) / 1000000.0 AS t,
-    max(CAST(epoch_us(ts) AS DOUBLE) / 1000000.0) OVER (
-      PARTITION BY event_type ORDER BY event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hw
-  FROM events
-),
-l AS (
-  SELECT event_type,
-    CASE WHEN hw IS NOT NULL AND hw > t THEN hw - t
-         ELSE CAST(0 AS DOUBLE) END AS late
-  FROM base
-)
-SELECT event_type AS key, CAST(count(*) AS BIGINT) AS n,
-  CAST(sum(CASE WHEN late > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-  round(CAST(sum(CASE WHEN late > 0 THEN 1 ELSE 0 END) AS DOUBLE)
-        / CAST(count(*) AS DOUBLE) * 1e4) / 1e4 + 0.0 AS late_share,
-  round((quantile_cont(CASE WHEN late > 0 THEN late END, 0.5)) * 1e4)
-    / 1e4 + 0.0 AS p50_late_s,
-  round((quantile_cont(CASE WHEN late > 0 THEN late END, 0.99)) * 1e4)
-    / 1e4 + 0.0 AS p99_late_s,
-  round(max(CASE WHEN late > 0 THEN late END) * 1e4) / 1e4 + 0.0
-    AS max_late_s
-FROM l GROUP BY event_type
-"""
-
-
-def _q_graph_powerlaw_lineitem(spark, sf_dir):
-    """Power-law exponent MLE over part popularity (operators/graph.py
-    powerlaw_alpha, Clauset–Shalizi–Newman continuous approximation,
-    d_min = 2): degree table = one groupBy of the distinct order↔part
-    incidence, the fit one further aggregate. The oracle replays the
-    Σ ln(d/(d_min−½)) estimator."""
-    from bid_evaluation_spark.operators.graph import powerlaw_alpha
-
-    li = _t(spark, sf_dir, "lineitem")
-    deg = (li.select("l_orderkey", "l_partkey").distinct()
-           .groupBy("l_partkey")
-           .agg(F.count(F.lit(1)).cast("long").alias("degree")))
-    return powerlaw_alpha(deg, d_min=2)
-
-
-_SQL_GRAPH_POWERLAW_LINEITEM = """
-WITH deg AS (
-  SELECT l_partkey, count(*) AS degree
-  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-  GROUP BY l_partkey
-),
-kept AS (SELECT CAST(degree AS DOUBLE) AS d FROM deg WHERE degree >= 2),
-agg AS (
-  SELECT count(*) AS n,
-         sum(ln(d / CAST(1.5 AS DOUBLE))) AS den,
-         avg(d) AS meand, max(d) AS maxd
-  FROM kept
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(2 AS BIGINT) AS d_min,
-  CASE WHEN den > 0
-       THEN round((CAST(1 AS DOUBLE) + CAST(n AS DOUBLE) / den) * 1e4)
-            / 1e4 + 0.0 END AS alpha,
-  round(meand * 1e4) / 1e4 + 0.0 AS mean_deg,
-  CAST(maxd AS BIGINT) AS max_deg
-FROM agg
-"""
-
-
 def _q_pipe_contamination_report_documents(spark, sf_dir):
     """Per-eval-doc leakage audit (operators/pipeline.py
     contamination_report): share of each held-out doc's distinct
@@ -11533,554 +6494,6 @@ SELECT g.source, CAST(n_docs AS BIGINT) AS n_docs,
                       * CAST(1000000 AS DOUBLE) / CAST(n_tokens AS DOUBLE)
                  ELSE CAST(0 AS DOUBLE) END) AS BIGINT) AS epochs
 FROM g LEFT JOIN w ON g.source = w.source
-"""
-
-
-def _q_events_active_users(spark, sf_dir):
-    """Rolling exact DAU/WAU/MAU (operators/timeseries.py
-    active_users): distinct user-day table first, bounded contribution
-    explode (≤28 target days per user-day), one groupBy(day) with
-    offset-cut count_distincts, phantom tail trimmed to observed days.
-    The oracle replays expansion and cuts."""
-    from bid_evaluation_spark.operators.timeseries import active_users
-
-    ev = _t(spark, sf_dir, "events")
-    res = active_users(ev, "ts", "user_id", windows=(1, 7, 28))
-    return res.select(F.date_format("day", _TS_FMT_SPARK).alias("day"),
-                      "au_1", "au_7", "au_28")
-
-
-_SQL_EVENTS_ACTIVE_USERS = f"""
-WITH ud AS (
-  SELECT DISTINCT date_trunc('day', ts) AS d, user_id AS u FROM events
-  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-),
-tgt AS (
-  SELECT u, k, CAST(d AS DATE) + CAST(k AS INTEGER) AS day
-  FROM (SELECT u, d, unnest(generate_series(0, 27)) AS k FROM ud)
-),
-obs AS (SELECT DISTINCT CAST(d AS DATE) AS day FROM ud)
-SELECT strftime(CAST(day AS TIMESTAMP), '{{_FMT}}') AS day,
-  CAST(count(DISTINCT CASE WHEN k < 1 THEN u END) AS BIGINT) AS au_1,
-  CAST(count(DISTINCT CASE WHEN k < 7 THEN u END) AS BIGINT) AS au_7,
-  CAST(count(DISTINCT CASE WHEN k < 28 THEN u END) AS BIGINT) AS au_28
-FROM tgt WHERE day IN (SELECT day FROM obs)
-GROUP BY day
-""".replace("{_FMT}", _TS_FMT_DUCK)
-
-
-def _q_metrics_prf1_embeddings(spark, sf_dir):
-    """Per-class precision/recall/F1 (operators/metrics.py
-    classification_report) over the centroid classifier's held-out
-    predictions — scan collapses to the C×C confusion table, everything
-    after is arithmetic on it. The oracle replays the centroid solve
-    and the confusion roll-up."""
-    from bid_evaluation_spark.operators.classify import centroid_classify
-    from bid_evaluation_spark.operators.metrics import classification_report
-
-    emb = _t(spark, sf_dir, "embeddings")
-    tr = emb.filter(F.col("vec_id") % 37 != 0)
-    te = emb.filter(F.col("vec_id") % 37 == 0)
-    preds = (centroid_classify(tr, te)
-             .join(te.select(F.col("vec_id").alias("id"), "label"), "id"))
-    return classification_report(preds, "label", "predicted")
-
-
-_SQL_METRICS_PRF1_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e, label
-           FROM embeddings WHERE embedding IS NOT NULL),
-tr AS (SELECT * FROM v WHERE vec_id % 37 <> 0),
-te AS (SELECT * FROM v WHERE vec_id % 37 = 0),
-dims AS (
-  SELECT label, i, avg(e[i]) AS m
-  FROM (SELECT label, e, unnest(generate_series(1, len(e))) AS i FROM tr)
-  GROUP BY label, i
-),
-cent AS (
-  SELECT label AS pred, list(m ORDER BY i) AS ce FROM dims GROUP BY label
-),
-scored AS (
-  SELECT te.vec_id, te.label, c.pred,
-    list_sum(list_transform(c.ce, x -> x * x))
-      - 2 * list_sum(list_transform(generate_series(1, len(te.e)),
-                                    i -> te.e[i] * c.ce[i])) AS rel
-  FROM te CROSS JOIN cent c
-),
-preds AS (
-  SELECT vec_id, label, pred FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY rel ASC, pred ASC) AS rk
-    FROM scored) WHERE rk = 1
-),
-conf AS (SELECT label AS l, pred AS p, count(*) AS n FROM preds
-         GROUP BY 1, 2),
-per_l AS (
-  SELECT l AS label, sum(n) AS support,
-         sum(CASE WHEN p = l THEN n ELSE 0 END) AS tp
-  FROM conf GROUP BY l
-),
-per_p AS (SELECT p AS label, sum(n) AS pred_n FROM conf GROUP BY p),
-m AS (
-  SELECT COALESCE(per_l.label, per_p.label) AS label,
-         COALESCE(support, 0) AS support, COALESCE(tp, 0) AS tp,
-         COALESCE(pred_n, 0) - COALESCE(tp, 0) AS fp,
-         COALESCE(support, 0) - COALESCE(tp, 0) AS fn
-  FROM per_l FULL OUTER JOIN per_p ON per_l.label = per_p.label
-)
-SELECT label, CAST(support AS BIGINT) AS support,
-  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-  CAST(fn AS BIGINT) AS fn,
-  CASE WHEN tp + fp > 0
-       THEN round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) * 1e4)
-            / 1e4 + 0.0 END AS precision,
-  CASE WHEN tp + fn > 0
-       THEN round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) * 1e4)
-            / 1e4 + 0.0 END AS recall,
-  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tp > 0
-       THEN round(CAST(2 AS DOUBLE)
-                  * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE))
-                  * (CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE))
-                  / (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)
-                     + CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE))
-                  * 1e4) / 1e4 + 0.0
-       WHEN tp + fp > 0 AND tp + fn > 0 THEN CAST(0 AS DOUBLE) + 0.0
-  END AS f1
-FROM m
-"""
-
-
-def _q_retrieval_ndcg_embeddings(spark, sf_dir):
-    """NDCG@5 + MRR per query (operators/metrics.py ndcg_mrr) over the
-    exact cosine top-5 run, relevance = neighbor shares the query's
-    label — the label-agreement retrieval benchmark. The oracle
-    rebuilds the run (ann pattern) and replays DCG/IDCG/RR."""
-    from bid_evaluation_spark.operators.metrics import ndcg_mrr
-    from bid_evaluation_spark.operators.similarity import cosine_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 37 == 0)
-    c = emb.filter(F.col("vec_id") % 37 != 0)
-    run = cosine_topk(q, c, k=5)
-    ql = q.select(F.col("vec_id").alias("query_id"),
-                  F.col("label").alias("_ql"))
-    cl = c.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("label").alias("_nl"))
-    scored = (run.join(ql, "query_id").join(cl, "neighbor_id")
-              .withColumn("_rel", (F.col("_nl") == F.col("_ql"))
-                          .cast("double")))
-    return ndcg_mrr(scored, "query_id", "rnk", "_rel", k=5)
-
-
-_SQL_RETRIEVAL_NDCG_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e, label
-           FROM embeddings),
-q AS (SELECT vec_id AS qid, e AS qe, label AS ql FROM v
-      WHERE vec_id % 37 = 0),
-c AS (SELECT vec_id, e, label FROM v WHERE vec_id % 37 <> 0),
-sims AS (
-  SELECT q.qid, q.ql, c.vec_id AS nid, c.label AS nl,
-    list_sum(list_transform(generate_series(1, len(qe)),
-                            i -> qe[i] * c.e[i]))
-      / (sqrt(list_sum(list_transform(qe, x -> x * x)))
-         * sqrt(list_sum(list_transform(c.e, x -> x * x)))) AS cosine
-  FROM q CROSS JOIN c
-  WHERE q.qid != c.vec_id
-),
-run AS (
-  SELECT qid, ql, nid, nl,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, nid ASC) AS rnk
-  FROM sims
-),
-rel AS (
-  SELECT qid, rnk, CASE WHEN nl = ql THEN CAST(1 AS DOUBLE)
-                        ELSE CAST(0 AS DOUBLE) END AS r,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY (CASE WHEN nl = ql THEN 1 ELSE 0 END)
-                                     DESC, rnk ASC) AS irk
-  FROM run WHERE rnk <= 5
-),
-g AS (
-  SELECT qid,
-    sum(CASE WHEN r > 0 THEN 1 ELSE 0 END) AS n_rel,
-    sum(CASE WHEN rnk <= 5
-             THEN r / (ln(CAST(rnk AS DOUBLE) + CAST(1 AS DOUBLE))
-                       / ln(CAST(2 AS DOUBLE)))
-             ELSE CAST(0 AS DOUBLE) END) AS dcg,
-    sum(CASE WHEN irk <= 5
-             THEN r / (ln(CAST(irk AS DOUBLE) + CAST(1 AS DOUBLE))
-                       / ln(CAST(2 AS DOUBLE)))
-             ELSE CAST(0 AS DOUBLE) END) AS idcg,
-    min(CASE WHEN r > 0 AND rnk <= 5 THEN rnk END) AS fr
-  FROM rel GROUP BY qid
-)
-SELECT qid AS query, CAST(n_rel AS BIGINT) AS n_rel,
-  round(dcg * 1e4) / 1e4 + 0.0 AS dcg,
-  round(idcg * 1e4) / 1e4 + 0.0 AS idcg,
-  CASE WHEN idcg > 0 THEN round(dcg / idcg * 1e4) / 1e4 + 0.0 END AS ndcg,
-  COALESCE(round(CAST(1 AS DOUBLE) / CAST(fr AS DOUBLE) * 1e4) / 1e4
-           + 0.0, CAST(0 AS DOUBLE)) AS rr
-FROM g
-"""
-
-
-def _q_dq_join_size_orders_lineitem(spark, sf_dir):
-    """Exact join-cardinality preflight (operators/dq.py
-    join_size_estimate): |orders ⋈ lineitem| from the two per-key count
-    tables — the skew check (max_key_rows) that decides salting BEFORE
-    a 100-TB join runs. The oracle replays Σ cntA·cntB."""
-    from bid_evaluation_spark.operators.dq import join_size_estimate
-
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return join_size_estimate(o, li, "o_orderkey", "l_orderkey")
-
-
-_SQL_DQ_JOIN_SIZE_ORDERS_LINEITEM = """
-WITH lc AS (SELECT o_orderkey AS k, count(*) AS la FROM orders
-            GROUP BY 1),
-rc AS (SELECT l_orderkey AS k, count(*) AS rb FROM lineitem GROUP BY 1),
-j AS (SELECT la * rb AS prod FROM lc JOIN rc USING (k)
-      WHERE k IS NOT NULL)
-SELECT CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_left,
-  CAST((SELECT count(*) FROM lineitem) AS BIGINT) AS n_right,
-  CAST((SELECT count(*) FROM lc WHERE k IS NOT NULL) AS BIGINT)
-    AS n_keys_left,
-  CAST((SELECT count(*) FROM rc WHERE k IS NOT NULL) AS BIGINT)
-    AS n_keys_right,
-  CAST(count(*) AS BIGINT) AS n_keys_common,
-  CAST(COALESCE(sum(prod), 0) AS BIGINT) AS join_rows,
-  CAST(COALESCE(max(prod), 0) AS BIGINT) AS max_key_rows
-FROM j
-"""
-
-
-def _q_ts_pop_events(spark, sf_dir):
-    """Week-over-week report per event type (operators/timeseries.py
-    period_over_period): weekly value sums, change vs the key's
-    previous EXISTING week (gaps compare across). One groupBy + one
-    lag window over the bucket table; the oracle mirrors both."""
-    from bid_evaluation_spark.operators.timeseries import period_over_period
-
-    ev = _t(spark, sf_dir, "events")
-    res = period_over_period(ev, "event_type", "ts", "value", "week")
-    return res.select(
-        "key", F.date_format("period_start", _TS_FMT_SPARK)
-        .alias("period_start"),
-        "total", "prev_total", "change", "pct_change")
-
-
-_SQL_TS_POP_EVENTS = f"""
-WITH g AS (
-  SELECT event_type AS key, date_trunc('week', ts) AS ps,
-         sum(CAST(value AS DOUBLE)) AS tot
-  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-),
-m AS (
-  SELECT key, ps, tot, lag(tot) OVER (PARTITION BY key ORDER BY ps) AS pt
-  FROM g
-)
-SELECT key, strftime(ps, '{{_FMT}}') AS period_start,
-  round(tot * 1e4) / 1e4 + 0.0 AS total,
-  round(pt * 1e4) / 1e4 + 0.0 AS prev_total,
-  round((tot - pt) * 1e4) / 1e4 + 0.0 AS change,
-  CASE WHEN abs(pt) > 0
-       THEN round((tot - pt) / pt * CAST(100 AS DOUBLE) * 1e4) / 1e4 + 0.0
-  END AS pct_change
-FROM m
-""".replace("{_FMT}", _TS_FMT_DUCK)
-
-
-def _q_ts_cohort_ltv_events(spark, sf_dir):
-    """Cohort LTV curve (operators/timeseries.py cohort_ltv): users
-    cohorted by first-activity week, cumulative per-user value by age
-    0..8 — min-agg pins cohorts, one equi-join tags events, cumulative
-    window over the bounded cohort×age table. The oracle replays the
-    whole ride."""
-    from bid_evaluation_spark.operators.timeseries import cohort_ltv
-
-    ev = _t(spark, sf_dir, "events")
-    res = cohort_ltv(ev, "ts", "user_id", "value", max_age=8)
-    return res.select(
-        F.date_format("cohort", _TS_FMT_SPARK).alias("cohort"),
-        "age", "n_users", "period_value", "cum_value", "cum_per_user")
-
-
-_SQL_TS_COHORT_LTV_EVENTS = f"""
-WITH ev AS (
-  SELECT user_id AS u, date_trunc('week', ts) AS p,
-         CAST(value AS DOUBLE) AS v
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-),
-first AS (SELECT u, min(p) AS cohort FROM ev GROUP BY u),
-sizes AS (SELECT cohort, count(*) AS n_users FROM first GROUP BY cohort),
-tagged AS (
-  SELECT f.cohort,
-    CAST(floor((epoch(ev.p) - epoch(f.cohort))
-               / CAST(604800 AS DOUBLE)) AS BIGINT) AS age,
-    ev.v
-  FROM ev JOIN first f ON ev.u = f.u
-),
-per AS (
-  SELECT cohort, age, sum(v) AS pv FROM tagged
-  WHERE age <= 8 GROUP BY cohort, age
-),
-cum AS (
-  SELECT cohort, age, pv,
-         sum(pv) OVER (PARTITION BY cohort ORDER BY age
-                       ROWS UNBOUNDED PRECEDING) AS cv
-  FROM per
-)
-SELECT strftime(c.cohort, '{{_FMT}}') AS cohort, c.age,
-  CAST(s.n_users AS BIGINT) AS n_users,
-  round(c.pv * 1e4) / 1e4 + 0.0 AS period_value,
-  round(c.cv * 1e4) / 1e4 + 0.0 AS cum_value,
-  round(c.cv / CAST(s.n_users AS DOUBLE) * 1e4) / 1e4 + 0.0
-    AS cum_per_user
-FROM cum c JOIN sizes s ON c.cohort = s.cohort
-""".replace("{_FMT}", _TS_FMT_DUCK)
-
-
-def _q_analytics_huber_orders(spark, sf_dir):
-    """Huber M-estimate of order value per priority
-    (operators/analytics.py huber_mean_by_group): exact-median start,
-    MAD scale, two unrolled IRLS rounds — the logreg-GD oracle pattern
-    applied to robust location. The oracle unrolls both rounds as
-    CTEs."""
-    from bid_evaluation_spark.operators.analytics import huber_mean_by_group
-
-    o = _t(spark, sf_dir, "orders")
-    return huber_mean_by_group(o, "o_orderpriority", "o_totalprice",
-                               n_rounds=2)
-
-
-_SQL_ANALYTICS_HUBER_ORDERS = """
-WITH base AS (
-  SELECT o_orderpriority AS g, CAST(o_totalprice AS DOUBLE) AS x
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderpriority IS NOT NULL
-),
-med AS (
-  SELECT g, count(*) AS n, quantile_cont(x, 0.5) AS med FROM base
-  GROUP BY g
-),
-mad AS (
-  SELECT base.g, quantile_cont(abs(x - med), 0.5) AS mad
-  FROM base JOIN med ON base.g = med.g GROUP BY base.g
-),
-stats AS (
-  SELECT med.g, n, med,
-         CAST(1.345 AS DOUBLE) * CAST(1.4826 AS DOUBLE) * mad AS k
-  FROM med JOIN mad ON med.g = mad.g
-),
-r1 AS (
-  SELECT s.g,
-    sum(CASE WHEN abs(x - s.med) <= s.k THEN CAST(1 AS DOUBLE)
-             ELSE s.k / abs(x - s.med) END * x)
-    / sum(CASE WHEN abs(x - s.med) <= s.k THEN CAST(1 AS DOUBLE)
-               ELSE s.k / abs(x - s.med) END) AS m1
-  FROM base JOIN stats s ON base.g = s.g GROUP BY s.g
-),
-m1t AS (
-  SELECT s.g, s.n, s.med, s.k,
-         CASE WHEN s.k > 0 THEN r1.m1 ELSE s.med END AS m
-  FROM stats s LEFT JOIN r1 ON s.g = r1.g
-),
-r2 AS (
-  SELECT t.g,
-    sum(CASE WHEN abs(x - t.m) <= t.k THEN CAST(1 AS DOUBLE)
-             ELSE t.k / abs(x - t.m) END * x)
-    / sum(CASE WHEN abs(x - t.m) <= t.k THEN CAST(1 AS DOUBLE)
-               ELSE t.k / abs(x - t.m) END) AS m2
-  FROM base JOIN m1t t ON base.g = t.g GROUP BY t.g
-)
-SELECT t.g AS "group", CAST(t.n AS BIGINT) AS n,
-  round(t.med * 1e4) / 1e4 + 0.0 AS median,
-  CASE WHEN t.k > 0 THEN round(t.k * 1e4) / 1e4 + 0.0 END AS scale,
-  round(CASE WHEN t.k > 0 THEN r2.m2 ELSE t.med END * 1e4) / 1e4 + 0.0
-    AS huber_mean
-FROM m1t t LEFT JOIN r2 ON t.g = r2.g
-"""
-
-
-def _q_spatial_dbscan_part(spark, sf_dir):
-    """Grid-blocked DBSCAN (operators/spatial.py dbscan) over the same
-    synthesized planar coordinates as spatial_radius_part: ε-pairs from
-    the cell-blocked radius join, cores at min_pts=4, clusters =
-    min-label connected components over core-core pairs, borders pinned
-    to the smallest core-neighbor cluster. The oracle recomputes pairs
-    brute-force and labels components with a recursive
-    transitive-closure CTE (the dedup_keepmin pattern)."""
-    from bid_evaluation_spark.operators.spatial import dbscan
-
-    part = _t(spark, sf_dir, "part")
-    pts = part.select(
-        F.col("p_partkey").alias("pid"),
-        ((F.col("p_partkey") * 37 % 1000) / 10.0).alias("x"),
-        ((F.col("p_partkey") * 61 % 1000) / 10.0).alias("y"))
-    return dbscan(pts, "pid", "x", "y", eps=1.5, min_pts=4)
-
-
-_SQL_SPATIAL_DBSCAN_PART = """
-WITH RECURSIVE pts AS (
-  SELECT p_partkey AS id,
-         (p_partkey * 37 % 1000) / 10.0 AS x,
-         (p_partkey * 61 % 1000) / 10.0 AS y
-  FROM part
-),
-pairs AS (
-  SELECT a.id AS ia, b.id AS ib
-  FROM pts a JOIN pts b ON a.id < b.id
-  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        <= CAST(2.25 AS DOUBLE)
-),
-sym AS (
-  SELECT ia AS id, ib AS nbr FROM pairs
-  UNION ALL SELECT ib AS id, ia AS nbr FROM pairs
-),
-deg AS (SELECT id, count(*) AS d FROM sym GROUP BY id),
-core AS (SELECT id FROM deg WHERE d >= 3),
-cc AS (
-  SELECT s.id AS src, s.nbr AS dst FROM sym s
-  WHERE s.id IN (SELECT id FROM core) AND s.nbr IN (SELECT id FROM core)
-),
-reach(id, r) AS (
-  SELECT id, id FROM core
-  UNION
-  SELECT cc.dst, reach.r FROM cc JOIN reach ON cc.src = reach.id
-),
-labels AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-border AS (
-  SELECT s.id, min(l.cluster_id) AS bcl
-  FROM sym s JOIN labels l ON s.nbr = l.id
-  WHERE s.id NOT IN (SELECT id FROM core)
-  GROUP BY s.id
-)
-SELECT p.id,
-  CASE WHEN l.id IS NOT NULL THEN 'core'
-       WHEN b.id IS NOT NULL THEN 'border'
-       ELSE 'noise' END AS role,
-  COALESCE(l.cluster_id, b.bcl) AS cluster_id
-FROM pts p
-LEFT JOIN labels l ON p.id = l.id
-LEFT JOIN border b ON p.id = b.id
-"""
-
-
-def _q_metrics_langid_prf1_documents(spark, sf_dir):
-    """Language-ID quality audit: the marker-word classifier
-    (operators/text.py language_id) scored against the corpus's lang
-    labels with the per-class P/R/F1 report (operators/metrics.py
-    classification_report) — the eval loop a curation pipeline runs
-    before trusting a filter. Composition of two independently-oracled
-    operators under one chained oracle."""
-    from bid_evaluation_spark.operators.metrics import classification_report
-    from bid_evaluation_spark.operators.text import language_id
-
-    d = (_t(spark, sf_dir, "documents")
-         .withColumn("_pred", language_id("text")))
-    return classification_report(d, "lang", "_pred")
-
-
-_SQL_METRICS_LANGID_PRF1_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id, lang,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-counts AS (
-  SELECT doc_id, lang,
-    len(list_filter(t, x -> x IN ('der','die','und','das','ist'))) AS cde,
-    len(list_filter(t, x -> x IN ('the','a','and','of','is'))) AS cen,
-    len(list_filter(t, x -> x IN ('la','el','los','las','es'))) AS ces,
-    len(list_filter(t, x -> x IN ('le','la','les','des','est'))) AS cfr,
-    len(list_filter(t, x -> x IN ('的','是','了','在','和'))) AS czh
-  FROM toks
-),
-pred AS (
-  SELECT lang,
-    CASE WHEN cde >= cen AND cde >= ces AND cde >= cfr AND cde >= czh THEN 'de'
-         WHEN cen > cde AND cen >= ces AND cen >= cfr AND cen >= czh THEN 'en'
-         WHEN ces > cde AND ces > cen AND ces >= cfr AND ces >= czh THEN 'es'
-         WHEN cfr > cde AND cfr > cen AND cfr > ces AND cfr >= czh THEN 'fr'
-         WHEN czh > cde AND czh > cen AND czh > ces AND czh > cfr THEN 'zh'
-         ELSE 'de' END AS p
-  FROM counts WHERE lang IS NOT NULL
-),
-conf AS (SELECT lang AS l, p, count(*) AS n FROM pred GROUP BY 1, 2),
-per_l AS (
-  SELECT l AS label, sum(n) AS support,
-         sum(CASE WHEN p = l THEN n ELSE 0 END) AS tp
-  FROM conf GROUP BY l
-),
-per_p AS (SELECT p AS label, sum(n) AS pred_n FROM conf GROUP BY p),
-m AS (
-  SELECT COALESCE(per_l.label, per_p.label) AS label,
-         COALESCE(support, 0) AS support, COALESCE(tp, 0) AS tp,
-         COALESCE(pred_n, 0) - COALESCE(tp, 0) AS fp,
-         COALESCE(support, 0) - COALESCE(tp, 0) AS fn
-  FROM per_l FULL OUTER JOIN per_p ON per_l.label = per_p.label
-)
-SELECT label, CAST(support AS BIGINT) AS support,
-  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-  CAST(fn AS BIGINT) AS fn,
-  CASE WHEN tp + fp > 0
-       THEN round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) * 1e4)
-            / 1e4 + 0.0 END AS precision,
-  CASE WHEN tp + fn > 0
-       THEN round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) * 1e4)
-            / 1e4 + 0.0 END AS recall,
-  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tp > 0
-       THEN round(CAST(2 AS DOUBLE)
-                  * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE))
-                  * (CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE))
-                  / (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)
-                     + CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE))
-                  * 1e4) / 1e4 + 0.0
-       WHEN tp + fp > 0 AND tp + fn > 0 THEN CAST(0 AS DOUBLE) + 0.0
-  END AS f1
-FROM m
-"""
-
-
-def _q_spatial_geo_radius_part(spark, sf_dir):
-    """Geodetic fixed-radius self-join (operators/spatial.py
-    geo_radius_join): lat/lon synthesized from key arithmetic over the
-    whole globe, latitude bands of radius-equivalent degrees with
-    cos-widened longitude cells (3×3 probe incl. antimeridian wrap),
-    exact haversine on cell-mates only. The oracle is the brute-force
-    all-pairs haversine — recall 1 under the band geometry is the
-    claim under test."""
-    from bid_evaluation_spark.operators.spatial import geo_radius_join
-
-    part = _t(spark, sf_dir, "part")
-    pts = part.select(
-        F.col("p_partkey").alias("pid"),
-        ((F.col("p_partkey") * 13 % 1600) / 10.0 - 80.0).alias("lat"),
-        ((F.col("p_partkey") * 29 % 3600) / 10.0 - 180.0).alias("lon"))
-    return geo_radius_join(pts, "pid", "lat", "lon", 100.0)
-
-
-_SQL_SPATIAL_GEO_RADIUS_PART = """
-WITH pts AS (
-  SELECT p_partkey AS pid,
-         (p_partkey * 13 % 1600) / 10.0 - 80.0 AS lat,
-         (p_partkey * 29 % 3600) / 10.0 - 180.0 AS lon
-  FROM part
-)
-SELECT a.pid AS id_a, b.pid AS id_b,
-  round((2 * CAST(6371.0 AS DOUBLE)
-         * asin(sqrt(pow(sin(radians(b.lat - a.lat) / 2), 2)
-                     + cos(radians(a.lat)) * cos(radians(b.lat))
-                     * pow(sin(radians(b.lon - a.lon) / 2), 2))))
-        * 1e4) / 1e4 + 0.0 AS dist_km
-FROM pts a JOIN pts b ON a.pid < b.pid
-WHERE 2 * CAST(6371.0 AS DOUBLE)
-      * asin(sqrt(pow(sin(radians(b.lat - a.lat) / 2), 2)
-                  + cos(radians(a.lat)) * cos(radians(b.lat))
-                  * pow(sin(radians(b.lon - a.lon) / 2), 2)))
-      <= CAST(100 AS DOUBLE)
 """
 
 
@@ -13127,10 +7540,6 @@ _QUERIES: dict = {
     "a1_stats_bundle_lineitem": (_q_a1_stats_bundle_lineitem,
                                  _SQL_A1_STATS_BUNDLE_LINEITEM),
     "a7_group_totals_events": (_q_a7_group_totals_events, _SQL_A7_GROUP_TOTALS_EVENTS),
-    "j_salted_join_orders": (_q_j_salted_join_orders,
-                             _SQL_J_SALTED_JOIN_ORDERS),
-    "a7_salted_group_totals_events": (_q_a7_salted_group_totals_events,
-                                      _SQL_A7_GROUP_TOTALS_EVENTS),
     "j3_zscore_orders": (_q_j3_zscore_orders, _SQL_J3_ZSCORE_ORDERS),
     "w1_eval_rank_part": (_q_w1_eval_rank_part, _SQL_W1_EVAL_RANK_PART),
     "w1_eval_rank_unnorm_part": (_q_w1_eval_rank_unnorm_part,
@@ -13190,10 +7599,6 @@ _QUERIES: dict = {
         _q_ann_ivf_pretrained_topk_embeddings,
         _SQL_ANN_IVF_PRETRAINED_TOPK_EMBEDDINGS),
     "events_json_props": (_q_events_json_props, _SQL_EVENTS_JSON_PROPS),
-    "asof_click_purchase_events": (_q_asof_click_purchase_events,
-                                   _SQL_ASOF_CLICK_PURCHASE_EVENTS),
-    "asof_null_payload_events": (_q_asof_null_payload_events,
-                                 _SQL_ASOF_NULL_PAYLOAD_EVENTS),
     "pipe_decontaminate_documents": (_q_pipe_decontaminate_documents,
                                      _SQL_PIPE_DECONTAMINATE_DOCUMENTS),
     "pipe_decontaminate_bloom_documents": (
@@ -13229,12 +7634,6 @@ _QUERIES: dict = {
                                 _SQL_PIPE_LM_SCORE_DOCUMENTS),
     "pipe_bigram_lm_documents": (_q_pipe_bigram_lm_documents,
                                  _SQL_PIPE_BIGRAM_LM_DOCUMENTS),
-    "profile_columns_documents": (_q_profile_columns_documents,
-                                  _SQL_PROFILE_COLUMNS_DOCUMENTS),
-    "profile_validate_documents": (_q_profile_validate_documents,
-                                   _SQL_PROFILE_VALIDATE_DOCUMENTS),
-    "profile_histogram_events": (_q_profile_histogram_events,
-                                 _SQL_PROFILE_HISTOGRAM_EVENTS),
     "pipe_chunk_documents": (_q_pipe_chunk_documents, _SQL_PIPE_CHUNK_DOCUMENTS),
     "pipe_top_ngrams_documents": (_q_pipe_top_ngrams_documents,
                                   _SQL_PIPE_TOP_NGRAMS_DOCUMENTS),
@@ -13252,12 +7651,6 @@ _QUERIES: dict = {
                                  _SQL_TEXT_BM25_TOPK_DOCUMENTS),
     "pii_redact_documents": (_q_pii_redact_documents,
                              _SQL_PII_REDACT_DOCUMENTS),
-    "features_sequences_events": (_q_features_sequences_events,
-                                  _SQL_FEATURES_SEQUENCES_EVENTS),
-    "features_robust_z_events": (_q_features_robust_z_events,
-                                 _SQL_FEATURES_ROBUST_Z_EVENTS),
-    "features_rolling_events": (_q_features_rolling_events,
-                                _SQL_FEATURES_ROLLING_EVENTS),
     "emb_l2norm_embeddings": (_q_emb_l2norm_embeddings,
                               _SQL_EMB_L2NORM_EMBEDDINGS),
     "emb_quantize_embeddings": (_q_emb_quantize_embeddings,
@@ -13265,9 +7658,6 @@ _QUERIES: dict = {
     "pipe_leakage_safe_split_documents": (
         _q_pipe_leakage_safe_split_documents,
         _SQL_PIPE_LEAKAGE_SAFE_SPLIT_DOCUMENTS),
-    "analytics_cohens_kappa_documents": (
-        _q_analytics_cohens_kappa_documents,
-        _SQL_ANALYTICS_COHENS_KAPPA_DOCUMENTS),
     "lm_perplexity_documents": (_q_lm_perplexity_documents,
                                 _SQL_LM_PERPLEXITY_DOCUMENTS),
     "dsir_weights_documents": (_q_dsir_weights_documents,
@@ -13291,74 +7681,21 @@ _QUERIES: dict = {
         _SQL_DEDUP_INCREMENTAL_MINHASH_DOCUMENTS),
     "privacy_ccn_luhn_documents": (_q_privacy_ccn_luhn_documents,
                                    _SQL_PRIVACY_CCN_LUHN_DOCUMENTS),
-    "analytics_krippendorff_documents": (
-        _q_analytics_krippendorff_documents,
-        _SQL_ANALYTICS_KRIPPENDORFF_DOCUMENTS),
-    "analytics_mwu_orders": (_q_analytics_mwu_orders,
-                             _SQL_ANALYTICS_MWU_ORDERS),
-    "analytics_bh_documents": (_q_analytics_bh_documents,
-                               _SQL_ANALYTICS_BH_DOCUMENTS),
-    "ts_cusum_events": (_q_ts_cusum_events, _SQL_TS_CUSUM_EVENTS),
     "io_footer_stats_orders": (_q_io_footer_stats_orders,
                                _SQL_IO_FOOTER_STATS_ORDERS),
     "emb_matryoshka_embeddings": (_q_emb_matryoshka_embeddings,
                                   _SQL_EMB_MATRYOSHKA_EMBEDDINGS),
     "pipe_neyman_orders": (_q_pipe_neyman_orders, _SQL_PIPE_NEYMAN_ORDERS),
-    "analytics_bootstrap_orders": (_q_analytics_bootstrap_orders,
-                                   _SQL_ANALYTICS_BOOTSTRAP_ORDERS),
-    "analytics_conformal_orders": (_q_analytics_conformal_orders,
-                                   _SQL_ANALYTICS_CONFORMAL_ORDERS),
-    "profile_corr_lineitem": (_q_profile_corr_lineitem,
-                              _SQL_PROFILE_CORR_LINEITEM),
-    "ts_seasonal_naive_events": (_q_ts_seasonal_naive_events,
-                                 _SQL_TS_SEASONAL_NAIVE_EVENTS),
-    "analytics_conformal_group_orders": (
-        _q_analytics_conformal_group_orders,
-        _SQL_ANALYTICS_CONFORMAL_GROUP_ORDERS),
-    "profile_fingerprint_orders": (_q_profile_fingerprint_orders,
-                                   _SQL_PROFILE_FINGERPRINT_ORDERS),
     "fuzzy_fellegi_sunter_customer": (_q_fuzzy_fellegi_sunter_customer,
                                       _SQL_FUZZY_FELLEGI_SUNTER_CUSTOMER),
     "fuzzy_fs_em_customer": (_q_fuzzy_fs_em_customer,
                              _SQL_FUZZY_FS_EM_CUSTOMER),
-    "privacy_kanon_customer": (_q_privacy_kanon_customer,
-                               _SQL_PRIVACY_KANON_CUSTOMER),
-    "privacy_dp_counts_documents": (_q_privacy_dp_counts_documents,
-                                    _SQL_PRIVACY_DP_COUNTS_DOCUMENTS),
-    "analytics_poststrat_orders": (_q_analytics_poststrat_orders,
-                                   _SQL_ANALYTICS_POSTSTRAT_ORDERS),
-    "metrics_psi_timeline_events": (_q_metrics_psi_timeline_events,
-                                    _SQL_METRICS_PSI_TIMELINE_EVENTS),
-    "analytics_did_events": (_q_analytics_did_events,
-                             _SQL_ANALYTICS_DID_EVENTS),
-    "ts_transitions_events": (_q_ts_transitions_events,
-                              _SQL_TS_TRANSITIONS_EVENTS),
-    "ts_entropy_rate_events": (_q_ts_entropy_rate_events,
-                               _SQL_TS_ENTROPY_RATE_EVENTS),
-    "ts_kaplan_meier_events": (_q_ts_kaplan_meier_events,
-                               _SQL_TS_KAPLAN_MEIER_EVENTS),
-    "analytics_msprt_events": (_q_analytics_msprt_events,
-                               _SQL_ANALYTICS_MSPRT_EVENTS),
-    "text_zipf_slope_documents": (_q_text_zipf_slope_documents,
-                                  _SQL_TEXT_ZIPF_SLOPE_DOCUMENTS),
-    "profile_benford_orders": (_q_profile_benford_orders,
-                               _SQL_PROFILE_BENFORD_ORDERS),
     "sketch_hll_overlap_documents": (_q_sketch_hll_overlap_documents,
                                      _SQL_SKETCH_HLL_OVERLAP_DOCUMENTS),
-    "ts_km_summary_events": (_q_ts_km_summary_events,
-                             _SQL_TS_KM_SUMMARY_EVENTS),
     "pipe_split_documents": (_q_pipe_split_documents,
                              _SQL_PIPE_SPLIT_DOCUMENTS),
     "pipe_sample_k_documents": (_q_pipe_sample_k_documents,
                                 _SQL_PIPE_SAMPLE_K_DOCUMENTS),
-    "ts_gapfill_locf_events": (_q_ts_gapfill_locf_events,
-                               _SQL_TS_GAPFILL_LOCF_EVENTS),
-    "ts_gapfill_linear_events": (_q_ts_gapfill_linear_events,
-                                 _SQL_TS_GAPFILL_LINEAR_EVENTS),
-    "asof_forward_events": (_q_asof_forward_events,
-                            _SQL_ASOF_FORWARD_EVENTS),
-    "asof_nearest_events": (_q_asof_nearest_events,
-                            _SQL_ASOF_NEAREST_EVENTS),
     "bitext_mine_embeddings": (_q_bitext_mine_embeddings,
                                _SQL_BITEXT_MINE_EMBEDDINGS),
     "fuzzy_join_supplier_names": (_q_fuzzy_join_supplier_names,
@@ -13376,12 +7713,6 @@ _QUERIES: dict = {
                                    _SQL_CLASSIFY_NB_LANG_DOCUMENTS),
     "classify_logreg_embeddings": (_q_classify_logreg_embeddings,
                                    _SQL_CLASSIFY_LOGREG_EMBEDDINGS),
-    "metrics_logreg_auc_embeddings": (_q_metrics_logreg_auc_embeddings,
-                                      _SQL_METRICS_LOGREG_AUC_EMBEDDINGS),
-    "ts_retention_cohorts_events": (_q_ts_retention_cohorts_events,
-                                    _SQL_TS_RETENTION_COHORTS_EVENTS),
-    "graph_pagerank_events": (_q_graph_pagerank_events,
-                              _SQL_GRAPH_PAGERANK_EVENTS),
     "a1_grouped_stats_orders": (_q_a1_grouped_stats_orders,
                                 _SQL_A1_GROUPED_STATS_ORDERS),
     "events_cube_type_user_bucket": (_q_events_cube_type_user_bucket,
@@ -13390,123 +7721,32 @@ _QUERIES: dict = {
                                _SQL_EVENTS_ROLLUP_TYPE_DAY),
     "events_pivot_type_user": (_q_events_pivot_type_user,
                                _SQL_EVENTS_PIVOT_TYPE_USER),
-    "analytics_pareto_part": (_q_analytics_pareto_part,
-                              _SQL_ANALYTICS_PARETO_PART),
-    "analytics_gini_orders": (_q_analytics_gini_orders,
-                              _SQL_ANALYTICS_GINI_ORDERS),
-    "analytics_entropy_documents": (_q_analytics_entropy_documents,
-                                    _SQL_ANALYTICS_ENTROPY_DOCUMENTS),
     "text_tfidf_topk_documents": (_q_text_tfidf_topk_documents,
                                   _SQL_TEXT_TFIDF_TOPK_DOCUMENTS),
-    "ml_pca_cov_embeddings": (_q_ml_pca_cov_embeddings,
-                              _SQL_ML_PCA_COV_EMBEDDINGS),
     "cluster_assign_embeddings": (_q_cluster_assign_embeddings,
                                   _SQL_CLUSTER_ASSIGN_EMBEDDINGS),
-    "analytics_normalize_orders": (_q_analytics_normalize_orders,
-                                   _SQL_ANALYTICS_NORMALIZE_ORDERS),
-    "profile_key_skew_events": (_q_profile_key_skew_events,
-                                _SQL_PROFILE_KEY_SKEW_EVENTS),
-    "analytics_trend_events": (_q_analytics_trend_events,
-                               _SQL_ANALYTICS_TREND_EVENTS),
     "sketch_hll_by_group_documents": (_q_sketch_hll_by_group_documents,
                                       _SQL_SKETCH_HLL_BY_GROUP_DOCUMENTS),
-    "layout_zorder_orders": (_q_layout_zorder_orders,
-                             _SQL_LAYOUT_ZORDER_ORDERS),
-    "metrics_calibration_embeddings": (_q_metrics_calibration_embeddings,
-                                       _SQL_METRICS_CALIBRATION_EMBEDDINGS),
-    "ts_merge_intervals_events": (_q_ts_merge_intervals_events,
-                                  _SQL_TS_MERGE_INTERVALS_EVENTS),
     "dedup_minhash_corpus_documents": (_q_dedup_minhash_corpus_documents,
                                        _SQL_DEDUP_MINHASH_CORPUS_DOCUMENTS),
     "er_supplier_entities": (_q_er_supplier_entities,
                              _SQL_ER_SUPPLIER_ENTITIES),
-    "analytics_weighted_median_lineitem": (
-        _q_analytics_weighted_median_lineitem,
-        _SQL_ANALYTICS_WEIGHTED_MEDIAN_LINEITEM),
     "sketch_cms_by_group_documents": (_q_sketch_cms_by_group_documents,
                                       _SQL_SKETCH_CMS_BY_GROUP_DOCUMENTS),
-    "graph_triangles_events": (_q_graph_triangles_events,
-                               _SQL_GRAPH_TRIANGLES_EVENTS),
     "dedup_jaccard_prefix_documents": (_q_dedup_jaccard_prefix_documents,
                                        _SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS),
-    "ts_ewma_events": (_q_ts_ewma_events, _SQL_TS_EWMA_EVENTS),
-    "metrics_rbo_supplier": (_q_metrics_rbo_supplier,
-                             _SQL_METRICS_RBO_SUPPLIER),
-    "metrics_auc_by_group_embeddings": (
-        _q_metrics_auc_by_group_embeddings,
-        _SQL_METRICS_AUC_BY_GROUP_EMBEDDINGS),
     "dedup_keep_best_documents": (_q_dedup_keep_best_documents,
                                   _SQL_DEDUP_KEEP_BEST_DOCUMENTS),
-    "metrics_calibration_by_group_embeddings": (
-        _q_metrics_calibration_by_group_embeddings,
-        _SQL_METRICS_CALIBRATION_BY_GROUP_EMBEDDINGS),
-    "analytics_quantile_match_orders": (
-        _q_analytics_quantile_match_orders,
-        _SQL_ANALYTICS_QUANTILE_MATCH_ORDERS),
     "pipe_novelty_documents": (_q_pipe_novelty_documents,
                                _SQL_PIPE_NOVELTY_DOCUMENTS),
     "dedup_containment_documents": (_q_dedup_containment_documents,
                                     _SQL_DEDUP_CONTAINMENT_DOCUMENTS),
-    "analytics_qmatch_group_orders": (_q_analytics_qmatch_group_orders,
-                                      _SQL_ANALYTICS_QMATCH_GROUP_ORDERS),
-    "metrics_psi_orders": (_q_metrics_psi_orders, _SQL_METRICS_PSI_ORDERS),
-    "metrics_ks_orders": (_q_metrics_ks_orders, _SQL_METRICS_KS_ORDERS),
-    "metrics_jsd_orders": (_q_metrics_jsd_orders, _SQL_METRICS_JSD_ORDERS),
-    "metrics_chi2_documents": (_q_metrics_chi2_documents,
-                               _SQL_METRICS_CHI2_DOCUMENTS),
-    "metrics_w1_orders": (_q_metrics_w1_orders, _SQL_METRICS_W1_ORDERS),
-    "analytics_ab_test_events": (_q_analytics_ab_test_events,
-                                 _SQL_ANALYTICS_AB_TEST_EVENTS),
-    "analytics_cuped_events": (_q_analytics_cuped_events,
-                               _SQL_ANALYTICS_CUPED_EVENTS),
-    "analytics_winsorized_orders": (_q_analytics_winsorized_orders,
-                                    _SQL_ANALYTICS_WINSORIZED_ORDERS),
-    "analytics_welch_events": (_q_analytics_welch_events,
-                               _SQL_ANALYTICS_WELCH_EVENTS),
-    "cdc_snapshot_diff_orders": (_q_cdc_snapshot_diff_orders,
-                                 _SQL_CDC_SNAPSHOT_DIFF_ORDERS),
-    "cdc_upsert_orders": (_q_cdc_upsert_orders, _SQL_CDC_UPSERT_ORDERS),
-    "cdc_compact_latest_events": (_q_cdc_compact_latest_events,
-                                  _SQL_CDC_COMPACT_LATEST_EVENTS),
-    "graph_textrank_documents": (_q_graph_textrank_documents,
-                                 _SQL_GRAPH_TEXTRANK_DOCUMENTS),
-    "dq_audit_orders": (_q_dq_audit_orders, _SQL_DQ_AUDIT_ORDERS),
-    "dq_ri_orders_customer": (_q_dq_ri_orders_customer,
-                              _SQL_DQ_RI_ORDERS_CUSTOMER),
-    "dq_stable_ids_orders": (_q_dq_stable_ids_orders,
-                             _SQL_DQ_STABLE_IDS_ORDERS),
-    "basket_rules_lineitem": (_q_basket_rules_lineitem,
-                              _SQL_BASKET_RULES_LINEITEM),
-    "graph_bfs_lineitem": (_q_graph_bfs_lineitem, _SQL_GRAPH_BFS_LINEITEM),
-    "ts_acf_events": (_q_ts_acf_events, _SQL_TS_ACF_EVENTS),
     "emb_jl_project_embeddings": (_q_emb_jl_project_embeddings,
                                   _SQL_EMB_JL_PROJECT_EMBEDDINGS),
-    "bandit_ucb1_events": (_q_bandit_ucb1_events, _SQL_BANDIT_UCB1_EVENTS),
-    "spatial_radius_part": (_q_spatial_radius_part,
-                            _SQL_SPATIAL_RADIUS_PART),
-    "attrib_events": (_q_attrib_events, _SQL_ATTRIB_EVENTS),
     "retrieval_postings_documents": (_q_retrieval_postings_documents,
                                      _SQL_RETRIEVAL_POSTINGS_DOCUMENTS),
     "retrieval_phrase_documents": (_q_retrieval_phrase_documents,
                                    _SQL_RETRIEVAL_PHRASE_DOCUMENTS),
-    "graph_lpa_lineitem": (_q_graph_lpa_lineitem, _SQL_GRAPH_LPA_LINEITEM),
-    "ts_holt_events": (_q_ts_holt_events, _SQL_TS_HOLT_EVENTS),
-    "graph_kcore_lineitem": (_q_graph_kcore_lineitem,
-                             _SQL_GRAPH_KCORE_LINEITEM),
-    "basket_triples_lineitem": (_q_basket_triples_lineitem,
-                                _SQL_BASKET_TRIPLES_LINEITEM),
-    "features_mi_documents": (_q_features_mi_documents,
-                              _SQL_FEATURES_MI_DOCUMENTS),
-    "features_woe_orders": (_q_features_woe_orders,
-                            _SQL_FEATURES_WOE_ORDERS),
-    "ts_trend_events": (_q_ts_trend_events, _SQL_TS_TREND_EVENTS),
-    "ts_seasonal_events": (_q_ts_seasonal_events, _SQL_TS_SEASONAL_EVENTS),
-    "ts_nelson_aalen_events": (_q_ts_nelson_aalen_events,
-                               _SQL_TS_NELSON_AALEN_EVENTS),
-    "analytics_poisson_events": (_q_analytics_poisson_events,
-                                 _SQL_ANALYTICS_POISSON_EVENTS),
-    "ivm_join_delta_orders": (_q_ivm_join_delta_orders,
-                              _SQL_IVM_JOIN_DELTA_ORDERS),
     "pipeline_quantile2pass_lineitem": (_q_pipeline_quantile2pass_lineitem,
                                         _SQL_PIPELINE_QUANTILE2PASS_LINEITEM),
     "enc_target_kfold_orders": (_q_enc_target_kfold_orders,
@@ -13517,61 +7757,16 @@ _QUERIES: dict = {
     "ml_gbm_stumps_lineitem": (_q_ml_gbm_stumps_lineitem,
                                _SQL_ML_GBM_STUMPS_LINEITEM),
     "ml_isotonic_orders": (_q_ml_isotonic_orders, _SQL_ML_ISOTONIC_ORDERS),
-    "ml_ols2_lineitem": (_q_ml_ols2_lineitem, _SQL_ML_OLS2_LINEITEM),
-    "ml_ridge2_lineitem": (_q_ml_ridge2_lineitem, _SQL_ML_RIDGE2_LINEITEM),
-    "graph_linkpred_lineitem": (_q_graph_linkpred_lineitem,
-                                _SQL_GRAPH_LINKPRED_LINEITEM),
-    "rec_item_cosine_lineitem": (_q_rec_item_cosine_lineitem,
-                                 _SQL_REC_ITEM_COSINE_LINEITEM),
-    "cdc_scd2_orders": (_q_cdc_scd2_orders, _SQL_CDC_SCD2_ORDERS),
-    "privacy_ldiversity_customer": (_q_privacy_ldiversity_customer,
-                                    _SQL_PRIVACY_LDIVERSITY_CUSTOMER),
-    "analytics_srm_events": (_q_analytics_srm_events,
-                             _SQL_ANALYTICS_SRM_EVENTS),
-    "ts_changepoint_events": (_q_ts_changepoint_events,
-                              _SQL_TS_CHANGEPOINT_EVENTS),
     "ml_knn_embeddings": (_q_ml_knn_embeddings, _SQL_ML_KNN_EMBEDDINGS),
-    "cdc_pit_orders": (_q_cdc_pit_orders, _SQL_CDC_PIT_ORDERS),
-    "profile_mahalanobis_lineitem": (_q_profile_mahalanobis_lineitem,
-                                     _SQL_PROFILE_MAHALANOBIS_LINEITEM),
-    "ts_logrank_events": (_q_ts_logrank_events, _SQL_TS_LOGRANK_EVENTS),
-    "ts_anomaly_events": (_q_ts_anomaly_events, _SQL_TS_ANOMALY_EVENTS),
-    "layout_compaction_orders": (_q_layout_compaction_orders,
-                                 _SQL_LAYOUT_COMPACTION_ORDERS),
-    "analytics_wilson_orders": (_q_analytics_wilson_orders,
-                                _SQL_ANALYTICS_WILSON_ORDERS),
-    "ts_period_events": (_q_ts_period_events, _SQL_TS_PERIOD_EVENTS),
     "ml_centroid_embeddings": (_q_ml_centroid_embeddings,
                                _SQL_ML_CENTROID_EMBEDDINGS),
     "ml_silhouette_embeddings": (_q_ml_silhouette_embeddings,
                                  _SQL_ML_SILHOUETTE_EMBEDDINGS),
-    "ts_disorder_events": (_q_ts_disorder_events, _SQL_TS_DISORDER_EVENTS),
-    "graph_powerlaw_lineitem": (_q_graph_powerlaw_lineitem,
-                                _SQL_GRAPH_POWERLAW_LINEITEM),
     "pipe_contamination_report_documents": (
         _q_pipe_contamination_report_documents,
         _SQL_PIPE_CONTAMINATION_REPORT_DOCUMENTS),
     "pipe_mix_manifest_documents": (_q_pipe_mix_manifest_documents,
                                     _SQL_PIPE_MIX_MANIFEST_DOCUMENTS),
-    "events_active_users": (_q_events_active_users,
-                            _SQL_EVENTS_ACTIVE_USERS),
-    "metrics_prf1_embeddings": (_q_metrics_prf1_embeddings,
-                                _SQL_METRICS_PRF1_EMBEDDINGS),
-    "retrieval_ndcg_embeddings": (_q_retrieval_ndcg_embeddings,
-                                  _SQL_RETRIEVAL_NDCG_EMBEDDINGS),
-    "dq_join_size_orders_lineitem": (_q_dq_join_size_orders_lineitem,
-                                     _SQL_DQ_JOIN_SIZE_ORDERS_LINEITEM),
-    "ts_pop_events": (_q_ts_pop_events, _SQL_TS_POP_EVENTS),
-    "ts_cohort_ltv_events": (_q_ts_cohort_ltv_events,
-                             _SQL_TS_COHORT_LTV_EVENTS),
-    "analytics_huber_orders": (_q_analytics_huber_orders,
-                               _SQL_ANALYTICS_HUBER_ORDERS),
-    "spatial_dbscan_part": (_q_spatial_dbscan_part,
-                            _SQL_SPATIAL_DBSCAN_PART),
-    "metrics_langid_prf1_documents": (_q_metrics_langid_prf1_documents,
-                                      _SQL_METRICS_LANGID_PRF1_DOCUMENTS),
-    "spatial_geo_radius_part": (_q_spatial_geo_radius_part,
-                                _SQL_SPATIAL_GEO_RADIUS_PART),
     "pipe_dup_ngram_documents": (_q_pipe_dup_ngram_documents,
                                  _SQL_PIPE_DUP_NGRAM_DOCUMENTS),
     "quality_scorecard_documents": (_q_quality_scorecard_documents,

@@ -171,14 +171,6 @@ def bench_quality_repetition(spark, sf_dir):
     _force(ngram_repetition_stats(df, ns=(1, 2)))
 
 
-def bench_rolling_features_events(spark, sf_dir):
-    from bid_evaluation_spark.operators.features import (
-        forward_labels, rolling_features)
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value")
-    _force(forward_labels(rolling_features(df, windows=(5,))))
 
 
 def bench_nb_classify_documents(spark, sf_dir):
@@ -201,30 +193,8 @@ def bench_cms_topk_documents(spark, sf_dir):
     _force(cms_topk(df, k=50))
 
 
-def bench_cdc_diff_orders(spark, sf_dir):
-    """Incremental-snapshot CDC classification: one hashed full-outer join
-    over two derived order snapshots + null-safe change detection."""
-    from bid_evaluation_spark.operators.cdc import snapshot_diff
-    from bid_evaluation_spark.sources.io import load_table
-
-    od = load_table(spark, sf_dir, "orders")
-    old = od.filter(F.col("o_orderkey") % 7 != 0)
-    new = (od.filter(F.col("o_orderkey") % 5 != 0)
-           .withColumn("o_totalprice",
-                       F.when(F.col("o_orderkey") % 3 == 0,
-                              F.col("o_totalprice") * 2)
-                       .otherwise(F.col("o_totalprice"))))
-    _force(snapshot_diff(old, new, ["o_orderkey"], ["o_totalprice"]))
 
 
-def bench_pareto_frontier_part(spark, sf_dir):
-    """2-D skyline via the bucketed distributed prefix-max (no all-pairs
-    dominance join); includes the boundary/bucket-max driver round-trips."""
-    from bid_evaluation_spark.operators.analytics import pareto_frontier_2d
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "part")
-    _force(pareto_frontier_2d(df, "p_retailprice", "p_size", buckets=32))
 
 
 def bench_lm_perplexity_documents(spark, sf_dir):
@@ -287,11 +257,8 @@ BENCHES = {
     "decontaminate_auto_documents": bench_decontaminate_auto_documents,
     "decontaminate_bloom_documents": bench_decontaminate_bloom_documents,
     "quality_repetition": bench_quality_repetition,
-    "rolling_features_events": bench_rolling_features_events,
     "nb_classify_documents": bench_nb_classify_documents,
     "cms_topk_documents": bench_cms_topk_documents,
-    "cdc_diff_orders": bench_cdc_diff_orders,
-    "pareto_frontier_part": bench_pareto_frontier_part,
     "lm_perplexity_documents": bench_lm_perplexity_documents,
     "ivfpq_embeddings": bench_ivfpq_embeddings,
     "span_removal_documents": bench_span_removal_documents,
