@@ -50,20 +50,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _docs_par(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
-    """``documents`` projected to ``cols`` (default ``doc_id``) and
-    repartitioned to the session's default parallelism — for the media
-    FIXTURE queries whose payload generation + decode kernels are
-    CPU-bound per row: ``documents.parquet`` at small SF is one file →
-    one input split → the whole Arrow kernel runs serially on one core
-    (measured: mm_adpcm_decode 17 s warm single-partition vs ~1.5 s
-    across 32). Partition to COMPUTE, not to input bytes — at 100 TB
-    the tiny id shuffle is noise next to the kernel; per-row outputs
-    are partition-invariant so results are unchanged."""
-    df = _t(spark, sf_dir, "documents").select(*(cols or ("doc_id",)))
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 def _r4(col):
     """Round to 4 decimals via scale-multiply: round(x*1e4)/1e4.
 
@@ -940,365 +926,8 @@ FROM s2
 
 
 # ---------------------------------------------------------------------------
-# Text analysis extension
-# ---------------------------------------------------------------------------
-
-_STOPWORDS_SQL = "('the','a','of','to','and','in','is','it','for','on')"
-
-
-def _q_text_stats_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.text import with_text_stats
-
-    df = _t(spark, sf_dir, "documents")
-    res = with_text_stats(df)
-    return res.select(
-        "doc_id", "n_tokens", "n_distinct_tokens",
-        _r4("avg_token_len").alias("avg_token_len"),
-        _r4("stopword_ratio").alias("stopword_ratio"),
-        _r4("punct_ratio").alias("punct_ratio"),
-    )
-
-
-_SQL_TEXT_STATS_DOCUMENTS = f"""
-WITH toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-)
-SELECT doc_id,
-  CAST(len(t) AS BIGINT) AS n_tokens,
-  CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct_tokens,
-  round((CASE WHEN len(t) > 0
-             THEN CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / len(t)
-             ELSE 0.0 END) * 10000.0) / 10000.0 AS avg_token_len,
-  round((CASE WHEN len(t) > 0
-             THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL})) AS DOUBLE) / len(t)
-             ELSE 0.0 END) * 10000.0) / 10000.0 AS stopword_ratio,
-  round((CASE WHEN length(text) > 0
-             THEN CAST(length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS DOUBLE) / length(text)
-             ELSE 0.0 END) * 10000.0) / 10000.0 AS punct_ratio
-FROM toks
-"""
-
-
-def _q_text_lang_id_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.text import language_id
-
-    df = _t(spark, sf_dir, "documents")
-    pred = language_id()
-    return df.select(
-        "doc_id", pred.alias("pred_lang"),
-        (pred == F.col("lang")).cast("int").cast("long").alias("is_match"),
-    )
-
-
-_SQL_TEXT_LANG_ID_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id, lang,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-counts AS (
-  SELECT doc_id, lang,
-    len(list_filter(t, x -> x IN ('der','die','und','das','ist'))) AS cde,
-    len(list_filter(t, x -> x IN ('the','a','and','of','is'))) AS cen,
-    len(list_filter(t, x -> x IN ('la','el','los','las','es'))) AS ces,
-    len(list_filter(t, x -> x IN ('le','la','les','des','est'))) AS cfr,
-    len(list_filter(t, x -> x IN ('的','是','了','在','和'))) AS czh
-  FROM toks
-),
-pred AS (
-  SELECT doc_id, lang,
-    CASE WHEN cde >= cen AND cde >= ces AND cde >= cfr AND cde >= czh THEN 'de'
-         WHEN cen > cde AND cen >= ces AND cen >= cfr AND cen >= czh THEN 'en'
-         WHEN ces > cde AND ces > cen AND ces >= cfr AND ces >= czh THEN 'es'
-         WHEN cfr > cde AND cfr > cen AND cfr > ces AND cfr >= czh THEN 'fr'
-         WHEN czh > cde AND czh > cen AND czh > ces AND czh > cfr THEN 'zh'
-         ELSE 'de' END AS pred_lang
-  FROM counts
-)
-SELECT doc_id, pred_lang, CAST(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END AS BIGINT) AS is_match
-FROM pred
-"""
-
-
-def _q_text_quality_score_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.text import quality_score
-
-    df = _t(spark, sf_dir, "documents")
-    return df.select("doc_id", _r4(quality_score()).alias("quality"))
-
-
-_SQL_TEXT_QUALITY_SCORE_DOCUMENTS = f"""
-WITH toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-comp AS (
-  SELECT doc_id,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0 AS length_c,
-    (CASE WHEN len(t) > 0
-          THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t) ELSE 0.0 END) * 30.0 AS div_c,
-    least((CASE WHEN len(t) > 0
-                THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL})) AS DOUBLE) / len(t)
-                ELSE 0.0 END) * 5.0, 1.0) * 20.0 AS stop_c,
-    (1.0 - least((CASE WHEN length(text) > 0
-                       THEN CAST(length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS DOUBLE) / length(text)
-                       ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS punct_c
-  FROM toks
-)
-SELECT doc_id,
-       round((length_c + div_c + stop_c + punct_c) * 10000.0) / 10000.0 AS quality
-FROM comp
-"""
-
-
-def _q_quality_topk_lang_documents(spark, sf_dir):
-    """Per-language curation: keep each language's top-10 documents by the
-    heuristic quality score (deterministic ties by doc_id) — composition of
-    the quality operator with a group-keyed rank window (never a global
-    sort)."""
-    from pyspark.sql import Window
-    from bid_evaluation_spark.operators.text import quality_score
-
-    # rank on the ROUNDED score: both engines agree on round(q*1e4) (the
-    # oracle contract) but not necessarily on the last ulp of q itself —
-    # ordering by the raw double could flip near-ties cross-engine
-    df = _t(spark, sf_dir, "documents").withColumn("q", _r4(quality_score()))
-    w = Window.partitionBy("lang").orderBy(F.desc("q"), F.asc("doc_id"))
-    return (df.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= 10)
-            .select("doc_id", "lang", F.col("q").alias("quality"),
-                    F.col("rnk").cast("long").alias("rnk")))
-
-
-_SQL_QUALITY_TOPK_LANG_DOCUMENTS = (
-    _SQL_TEXT_QUALITY_SCORE_DOCUMENTS.replace(
-        "SELECT doc_id,\n       round((length_c + div_c + stop_c + punct_c)"
-        " * 10000.0) / 10000.0 AS quality\nFROM comp",
-        """, q AS (
-  SELECT c.doc_id, d.lang,
-         round((c.length_c + c.div_c + c.stop_c + c.punct_c) * 10000.0)
-           / 10000.0 AS qr
-  FROM comp c JOIN documents d ON c.doc_id = d.doc_id
-),
-r AS (
-  SELECT doc_id, lang, qr,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY qr DESC, doc_id ASC) AS rnk
-  FROM q
-)
-SELECT doc_id, lang, qr AS quality, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= 10"""))
-
-
-def _q_staged_quality_documents(spark, sf_dir):
-    """Extension-op composition (SURVEY §7): the text quality score feeds the
-    STAGED scoring engine as a criterion column — stage 1 eliminates
-    low-quality documents on the heuristic score, stage 2 ranks survivors by
-    length. Proves criterion-style composition of the LLM-pipeline operators
-    with the reference's evaluation model."""
-    from bid_evaluation_spark import StagedEvaluator
-    from bid_evaluation_spark.operators.text import quality_score
-
-    df = _t(spark, sf_dir, "documents").withColumn("quality", quality_score())
-    st = (
-        StagedEvaluator()
-        .add_stage("Quality", filter_type="score_threshold", threshold=50)
-        .direct("quality", 1.0)
-        .add_stage("Length")
-        .linear("n_chars", 1.0)
-    )
-    res = st.evaluate(df)
-    return res.select(
-        "doc_id",
-        _r4("quality").alias("quality_score"),
-        "eliminated_at_stage",
-        _r4("final_score").alias("final_score"),
-        "ranking",
-    )
-
-
-_SQL_STAGED_QUALITY_DOCUMENTS = f"""
-WITH toks AS (
-  SELECT doc_id, text, n_chars,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-comp AS (
-  SELECT doc_id, n_chars,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0
-    + (CASE WHEN len(t) > 0
-            THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t) ELSE 0.0 END) * 30.0
-    + least((CASE WHEN len(t) > 0
-                  THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL})) AS DOUBLE) / len(t)
-                  ELSE 0.0 END) * 5.0, 1.0) * 20.0
-    + (1.0 - least((CASE WHEN length(text) > 0
-                         THEN CAST(length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS DOUBLE) / length(text)
-                         ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS quality
-  FROM toks
-),
-s1 AS (
-  SELECT doc_id, n_chars, quality,
-         CASE WHEN quality < 50.0 THEN 'Quality' END AS eliminated_at_stage
-  FROM comp
-),
-s2stats AS (
-  SELECT min(n_chars) AS mn, max(n_chars) AS mx FROM s1
-  WHERE eliminated_at_stage IS NULL
-),
-s2 AS (
-  SELECT s1.*,
-    CASE WHEN eliminated_at_stage IS NULL THEN
-      CASE WHEN mx = mn THEN 100.0
-           ELSE (CAST(n_chars AS DOUBLE) - mn) / (mx - mn) * 100.0 END
-    END AS final_score
-  FROM s1 CROSS JOIN s2stats
-)
-SELECT doc_id, round((quality) * 10000.0) / 10000.0 AS quality_score,
-       eliminated_at_stage,
-       round((final_score) * 10000.0) / 10000.0 AS final_score,
-       CASE WHEN eliminated_at_stage IS NULL THEN
-         CAST(rank() OVER (PARTITION BY (eliminated_at_stage IS NULL)
-                           ORDER BY final_score DESC) AS BIGINT) END AS ranking
-FROM s2
-"""
-
-
-def _q_text_fingerprint_documents(spark, sf_dir):
-    """Document fingerprints, portable twin: md5 whole-doc key (same
-    normalization as the xxhash64 scale path, which stays unit-tested) +
-    count of distinct word 3-shingle fingerprints. Fully oracle-checked —
-    DuckDB reproduces both the md5 digest and the shingle count."""
-    from bid_evaluation_spark.operators.text import (fingerprint_md5,
-                                                     shingle_fingerprints)
-
-    df = _t(spark, sf_dir, "documents")
-    return df.select(
-        "doc_id", fingerprint_md5().alias("fp_md5"),
-        F.size(shingle_fingerprints(k=3)).cast("long").alias("n_shingle_fps"),
-    )
-
-
-_SQL_TEXT_FINGERPRINT_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-)
-SELECT doc_id,
-  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp_md5,
-  CAST(CASE WHEN len(t) >= 3 THEN len(list_distinct(
-         list_transform(generate_series(1, len(t)-2),
-                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-       ELSE 0 END AS BIGINT) AS n_shingle_fps
-FROM toks
-"""
-
-
-def _q_text_token_count_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.text import bpe_ish_token_count, token_count
-
-    df = _t(spark, sf_dir, "documents")
-    return df.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_ws_tokens"),
-        bpe_ish_token_count(F.col("text")).alias("n_bpe_ish_tokens"),
-    )
-
-
-_SQL_TEXT_TOKEN_COUNT_DOCUMENTS = """
-SELECT doc_id,
-  CAST(CASE WHEN trim(text) = '' THEN 0
-            ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_ws_tokens,
-  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS BIGINT) AS n_bpe_ish_tokens
-FROM documents
-"""
-
-
-# ---------------------------------------------------------------------------
 # Dedup extension
 # ---------------------------------------------------------------------------
-
-def _q_text_sentences_documents(spark, sf_dir):
-    """Sentence splitting (operators/sentences.py, JVM expression path):
-    split on whitespace runs preceded by a terminator run. DuckDB's RE2 has
-    no lookbehind, so the oracle reproduces the split by rewriting
-    '([.!?])\\s+' to terminator + sentinel and splitting on the sentinel —
-    identical split points."""
-    from bid_evaluation_spark.operators.sentences import split_sentences
-
-    df = _t(spark, sf_dir, "documents")
-    return split_sentences(df)
-
-
-_SQL_TEXT_SENTENCES_DOCUMENTS = """
-WITH s AS (
-  SELECT doc_id,
-         list_filter(
-           string_split(
-             regexp_replace(trim(text), '([.!?])\\s+', '\\1' || chr(1), 'g'),
-             chr(1)),
-           x -> trim(x) != '') AS parts
-  FROM documents
-),
-e AS (
-  SELECT doc_id, parts,
-         unnest(generate_series(1, len(parts))) AS i
-  FROM s
-)
-SELECT doc_id, CAST(i - 1 AS INT) AS sentence_index,
-       trim(parts[i]) AS sentence
-FROM e
-"""
-
-
-def _q_text_collocations_documents(spark, sf_dir):
-    """Top-20 PMI collocations (operators/text.py collocations) with
-    min_count=5 — the phrase-detection pass ahead of vocab induction. The
-    oracle rebuilds unigram/pair counts and the identical
-    ln((n_pair·N)/(ca·cb)) arithmetic, ranking on the rounded PMI with the
-    pair as tie-break."""
-    from bid_evaluation_spark.operators.text import collocations
-
-    df = _t(spark, sf_dir, "documents")
-    return collocations(df, min_count=5, k=20)
-
-
-_SQL_TEXT_COLLOCATIONS_DOCUMENTS = """
-WITH toks AS (
-  SELECT CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(lower(text)), '\\s+') END AS t
-  FROM documents
-),
-uni AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest(t) AS tok FROM toks) GROUP BY tok
-),
-nn AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM uni),
-idx AS (SELECT t, unnest(generate_series(1, len(t) - 1)) AS i FROM toks),
-pairs AS (
-  SELECT t[i] AS l, t[i+1] AS r, CAST(count(*) AS BIGINT) AS n_pair
-  FROM idx GROUP BY t[i], t[i+1]
-  HAVING count(*) >= 5
-),
-scored AS (
-  SELECT p.l, p.r, p.n_pair,
-         round(ln((p.n_pair * (SELECT n FROM nn))
-                  / CAST(a.c * b.c AS DOUBLE)) * 10000.0) / 10000.0 AS pmi
-  FROM pairs p JOIN uni a ON p.l = a.tok JOIN uni b ON p.r = b.tok
-)
-SELECT l AS "left", r AS "right", n_pair, pmi
-FROM scored
-ORDER BY pmi DESC, l ASC, r ASC
-LIMIT 20
-"""
 
 
 def _q_dedup_exact_documents(spark, sf_dir):
@@ -1317,883 +946,6 @@ SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_hash,
        CAST(count(*) AS BIGINT) AS n_dups, min(doc_id) AS keep_id
 FROM documents
 GROUP BY 1
-"""
-
-
-def _q_dedup_incremental_documents(spark, sf_dir):
-    """Incremental cross-snapshot exact dedup (operators/dedup.py
-    dedup_against_corpus): docs with doc_id % 10 >= 8 are the "new crawl",
-    the rest the already-kept corpus; keep new docs whose canonicalized
-    content (lowercase, non-alphanumeric runs → single space) has no md5
-    match in the corpus. Portable digest → full value oracle."""
-    from bid_evaluation_spark.operators.dedup import dedup_against_corpus
-
-    df = _t(spark, sf_dir, "documents")
-    seen = df.filter(F.col("doc_id") % 10 < 8)
-    new = df.filter(F.col("doc_id") % 10 >= 8)
-    res = dedup_against_corpus(new, seen)
-    return res.select("doc_id", "lang", "source",
-                      F.col("n_chars").cast("long").alias("n_chars"))
-
-
-_SQL_DEDUP_INCREMENTAL_DOCUMENTS = """
-WITH ck AS (
-  SELECT doc_id, lang, source, n_chars,
-         md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS k
-  FROM documents
-)
-SELECT n.doc_id, n.lang, n.source, CAST(n.n_chars AS BIGINT) AS n_chars
-FROM ck n
-WHERE n.doc_id % 10 >= 8
-  AND NOT EXISTS (SELECT 1 FROM ck s WHERE s.doc_id % 10 < 8 AND s.k = n.k)
-"""
-
-
-def _q_text_canonicalize_documents(spark, sf_dir):
-    """Engine-portable canonical text + digest (operators/text.py
-    canonicalize): the content-identity key for exact/incremental dedup.
-    ASCII-class regex only, so Spark and DuckDB agree byte-for-byte."""
-    from bid_evaluation_spark.operators.text import (
-        canonical_fingerprint_md5, canonicalize)
-
-    df = _t(spark, sf_dir, "documents")
-    return df.select(
-        "doc_id",
-        canonicalize(F.col("text")).alias("canon"),
-        canonical_fingerprint_md5("text").alias("canon_md5"),
-    )
-
-
-_SQL_TEXT_CANONICALIZE_DOCUMENTS = """
-SELECT doc_id,
-       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS canon,
-       md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS canon_md5
-FROM documents
-"""
-
-
-def _q_dedup_ngram_jaccard_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.dedup import ngram_jaccard
-
-    df = _t(spark, sf_dir, "documents")
-    pairs = (
-        df.select(F.col("doc_id").alias("a_id"))
-        .join(df.select(F.col("doc_id").alias("b_id")),
-              F.col("a_id") + 1 == F.col("b_id"))
-    )
-    res = ngram_jaccard(pairs, df, k=3)
-    return res.select("a_id", "b_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_DEDUP_NGRAM_JACCARD_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-)
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-  round((CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        / len(list_distinct(list_concat(a.s, b.s)))) * 10000.0) / 10000.0 AS jaccard
-FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id
-"""
-
-
-#: Deterministic sub-corpus for the queries whose DuckDB ground truth is
-#: an all-pairs (n²) join: doc_id % 3 == 0 keeps pair statistics unbiased
-#: within the sample and cuts oracle cost ~9× (sf0.1 sweep: 941 s → ~95 s
-#: for minhash). The parity guarantee is UNCHANGED on the sample — same
-#: operators, same thresholds, same hash-equality gate. The FULL-corpus
-#: variants remain available via deep_queries() and run once per round
-#: through tools/deep_gate.py.
-_DOCS_SAMPLE_MOD = 3
-
-
-def _docs_sampled(spark, sf_dir, mod):
-    d = _t(spark, sf_dir, "documents")
-    return d.filter(F.col("doc_id") % mod == 0) if mod > 1 else d
-
-
-def _sample_where(mod):
-    return f"WHERE doc_id % {mod} = 0" if mod > 1 else ""
-
-
-def _q_dedup_minhash_candidates_documents(spark, sf_dir,
-                                          _mod=_DOCS_SAMPLE_MOD):
-    """MinHash-LSH candidates + exact-Jaccard verification, against the FULL
-    exact-Jaccard oracle: DuckDB computes every pair with shingle-set
-    Jaccard ≥ threshold (O(n²), oracle-side only); the hash-equality gate
-    then asserts the LSH pipeline found exactly that set. Banding at
-    (16 bands × 4 rows) catches a J≥0.9 pair with P≈1-4e-8; this data's
-    qualifying pairs are all J≥0.9 (verified by the oracle's own
-    distribution), so equality is the containment assertion VERDICT r1 asked
-    for, expressed in the driver's hash-match shape. Runs on the
-    doc_id % 3 == 0 sub-corpus (quadratic TRUTH cost, not operator cost —
-    see _DOCS_SAMPLE_MOD); the full corpus is deep_queries()' job."""
-    from bid_evaluation_spark.operators.dedup import minhash_near_duplicates
-
-    df = _docs_sampled(spark, sf_dir, _mod)
-    res = minhash_near_duplicates(df, threshold=0.2, num_perm=64, bands=16)
-    return res.select("a_id", "b_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_DEDUP_MINHASH_CANDIDATES_DOCUMENTS_TMPL = """
-WITH docs AS (SELECT * FROM documents {where}),
-toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM docs
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-inv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-sz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-inter AS (
-  -- inverted-index exact truth (same device as lsh_recall_report): for
-  -- j >= 0.2 a pair must share a shingle, so zero-overlap pairs need
-  -- never materialize; |A∪B| = |A|+|B|−|A∩B| on distinct shingle sets
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT a_id, b_id, CAST(i AS DOUBLE) / (na.n + nb.n - i) AS j
-  FROM inter
-  JOIN sz na ON na.doc_id = a_id
-  JOIN sz nb ON nb.doc_id = b_id
-)
-SELECT a_id, b_id, round((j) * 10000.0) / 10000.0 AS jaccard
-FROM pairs WHERE j >= 0.2
-"""
-
-_SQL_DEDUP_MINHASH_CANDIDATES_DOCUMENTS = (
-    _SQL_DEDUP_MINHASH_CANDIDATES_DOCUMENTS_TMPL.format(
-        where=_sample_where(_DOCS_SAMPLE_MOD)))
-
-
-def _q_dedup_incremental_minhash_documents(spark, sf_dir,
-                                           _mod=_DOCS_SAMPLE_MOD):
-    """INCREMENTAL MinHash dedup (operators/dedup.py
-    minhash_index_table + incremental_minhash_candidates — the
-    continuous-crawl shape: the standing corpus is a persisted
-    (doc, band, bh) index and today's delta equi-joins it, old docs
-    never re-shingled): old = doc_id%6==0, delta = doc_id%6==3 within
-    the %3==0 sub-corpus; candidates (new-vs-index ∪ new-vs-new) are
-    exact-Jaccard verified at the same 0.2 threshold as the batch
-    query. Oracle: the FULL quadratic exact-Jaccard truth restricted
-    to pairs touching the delta (old-vs-old must NOT appear — the
-    whole point), with source derived from membership parity; the
-    operator's own source labels are value-gated against it.
-
-    Equality vs the J≥0.2 truth holds for the same data-distribution
-    reason _q_dedup_minhash_candidates_documents documents: a 16-band
-    × 4-row banding catches a J≈0.2 pair with only ~2.5% probability,
-    but THIS corpus's qualifying pairs are all J≥0.9 (verified by the
-    oracle's own distribution), where the catch probability is
-    ≈1-4e-8. If a future SF dir introduces borderline-J pairs and this
-    sweep reddens, diagnose it as data, not code."""
-    from bid_evaluation_spark.operators.dedup import (
-        incremental_minhash_candidates, minhash_index_table, ngram_jaccard)
-
-    docs = _docs_sampled(spark, sf_dir, _mod)
-    old = docs.filter(F.col("doc_id") % 6 == 0)
-    new = docs.filter(F.col("doc_id") % 6 == 3)
-    index = minhash_index_table(old)
-    cand = incremental_minhash_candidates(new, index)
-    verified = (ngram_jaccard(cand.select("a_id", "b_id"), docs, k=3)
-                .filter(F.col("jaccard") >= 0.2))
-    return (verified.join(cand, ["a_id", "b_id"])
-            .select("a_id", "b_id", _r4("jaccard").alias("jaccard"),
-                    "source"))
-
-
-_SQL_DEDUP_INCREMENTAL_MINHASH_DOCUMENTS_TMPL = """
-WITH docs AS (SELECT * FROM documents {where}),
-toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM docs
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-inv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-sz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-inter AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT a_id, b_id, CAST(i AS DOUBLE) / (na.n + nb.n - i) AS j
-  FROM inter
-  JOIN sz na ON na.doc_id = a_id
-  JOIN sz nb ON nb.doc_id = b_id
-)
-SELECT a_id, b_id, round((j) * 10000.0) / 10000.0 AS jaccard,
-       CASE WHEN a_id % 6 = 0 OR b_id % 6 = 0 THEN 'index'
-            ELSE 'new' END AS source
-FROM pairs
-WHERE j >= 0.2
-  AND NOT (a_id % 6 = 0 AND b_id % 6 = 0)   -- old-vs-old never recomputed
-"""
-
-_SQL_DEDUP_INCREMENTAL_MINHASH_DOCUMENTS = (
-    _SQL_DEDUP_INCREMENTAL_MINHASH_DOCUMENTS_TMPL.format(
-        where=_sample_where(_DOCS_SAMPLE_MOD)))
-
-
-def _q_dedup_simhash_documents(spark, sf_dir, _mod=_DOCS_SAMPLE_MOD):
-    """SimHash-blocked near-dup pipeline with exact-Jaccard verify, against
-    the full exact-Jaccard oracle. Blocking at num_chunks=16 guarantees
-    recall for hamming ≤ 15 (pigeonhole) — this data's true near-dup pairs
-    sit at simhash distance ≤ 9 across SFs — so the verified output equals
-    the exact J ≥ 0.5 pair set: the containment assertion in the driver's
-    hash-match shape. The wide-radius config trades blocking selectivity for
-    the recall guarantee (the exact-Jaccard verify kills the extra candidate
-    noise); num_chunks=4 is the selective scale configuration. Runs on the
-    doc_id % 3 == 0 sub-corpus (see _DOCS_SAMPLE_MOD); full corpus via
-    deep_queries()."""
-    from bid_evaluation_spark.operators.dedup import (ngram_jaccard,
-                                                      simhash_near_duplicates)
-
-    df = _docs_sampled(spark, sf_dir, _mod)
-    cand = (simhash_near_duplicates(df, max_hamming=15, num_chunks=16)
-            .select("a_id", "b_id"))
-    res = ngram_jaccard(cand, df, k=3).filter(F.col("jaccard") >= 0.5)
-    return res.select("a_id", "b_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_DEDUP_SIMHASH_DOCUMENTS_TMPL = """
-WITH docs AS (SELECT * FROM documents {where}),
-toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM docs
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-inv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-sz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-inter AS (
-  -- inverted-index exact truth; see the minhash template above
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT a_id, b_id, CAST(i AS DOUBLE) / (na.n + nb.n - i) AS j
-  FROM inter
-  JOIN sz na ON na.doc_id = a_id
-  JOIN sz nb ON nb.doc_id = b_id
-)
-SELECT a_id, b_id, round((j) * 10000.0) / 10000.0 AS jaccard
-FROM pairs WHERE j >= 0.5
-"""
-
-_SQL_DEDUP_SIMHASH_DOCUMENTS = (
-    _SQL_DEDUP_SIMHASH_DOCUMENTS_TMPL.format(
-        where=_sample_where(_DOCS_SAMPLE_MOD)))
-
-
-def _q_dedup_embedding_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.dedup import embedding_near_duplicates
-
-    df = _t(spark, sf_dir, "embeddings")
-    res = embedding_near_duplicates(df, threshold=0.35, block_col="label")
-    return res.select("a_id", "b_id", _r4("cosine").alias("cosine"))
-
-
-_SQL_DEDUP_EMBEDDING_DOCUMENTS = """
-WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-    list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(a.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) AS cosine
-  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-)
-SELECT a_id, b_id, round((cosine) * 10000.0) / 10000.0 AS cosine
-FROM pairs WHERE cosine >= 0.35
-"""
-
-
-def _q_dedup_embedding_clusters(spark, sf_dir):
-    """Connected components over the verified embedding near-dup pairs —
-    iterative min-label propagation in DataFrame ops; the DuckDB oracle
-    computes the same components with a recursive transitive-closure CTE."""
-    from bid_evaluation_spark.operators.dedup import (
-        embedding_near_duplicates, near_duplicate_clusters)
-
-    df = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_duplicates(df, threshold=0.35, block_col="label")
-    return near_duplicate_clusters(pairs).select(
-        "id", F.col("cluster_id").cast("long").alias("cluster_id"))
-
-
-_SQL_DEDUP_EMBEDDING_CLUSTERS = """
-WITH RECURSIVE v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS a_id, b.vec_id AS b_id
-  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(a.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) >= 0.35
-),
-edges AS (SELECT a_id AS s, b_id AS d FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(id, lab) AS (
-  SELECT s, s FROM (SELECT DISTINCT s FROM edges)
-  UNION
-  SELECT e.d, r.lab FROM reach r JOIN edges e ON r.id = e.s
-)
-SELECT id, CAST(min(lab) AS BIGINT) AS cluster_id FROM reach GROUP BY id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Similarity search extension
-# ---------------------------------------------------------------------------
-
-
-def _q_emb_hard_negatives_embeddings(spark, sf_dir):
-    """Hard-negative mining (operators/similarity.py hard_negatives —
-    per anchor the top-5 highest-cosine DIFFERENT-label vectors, the
-    contrastive-training op; anchors broadcast, map-side similarity,
-    one partial window): 64 anchors over the full table, with the
-    max_cosine=0.95 mislabeled-duplicate ceiling active. Oracle:
-    first-principles DuckDB replay (list-math cosine, label filter,
-    ceiling, deterministic rank)."""
-    from bid_evaluation_spark.operators.similarity import hard_negatives
-
-    df = _t(spark, sf_dir, "embeddings")
-    res = hard_negatives(df, k=5, max_cosine=0.95,
-                         anchors=df.filter(F.col("vec_id") < 64))
-    return res.select("anchor_id",
-                      F.col("anchor_label").cast("long").alias("anchor_label"),
-                      "negative_id",
-                      F.col("negative_label").cast("long").alias("negative_label"),
-                      _r4("cosine").alias("cosine"),
-                      F.col("rnk").cast("long").alias("rnk"))
-
-
-_SQL_EMB_HARD_NEGATIVES_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e
-           FROM embeddings),
-a AS (SELECT vec_id AS anchor_id, label AS anchor_label, e AS ae
-      FROM v WHERE vec_id < 64),
-sims AS (
-  SELECT a.anchor_id, a.anchor_label, v.vec_id AS negative_id,
-         v.label AS negative_label,
-    list_sum(list_transform(generate_series(1, len(ae)),
-                            i -> ae[i]*v.e[i]))
-      / (sqrt(list_sum(list_transform(ae, x -> x*x)))
-         * sqrt(list_sum(list_transform(v.e, x -> x*x)))) AS cosine
-  FROM a CROSS JOIN v
-  WHERE a.anchor_label != v.label
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY anchor_id
-                               ORDER BY cosine DESC, negative_id ASC)
-            AS rnk
-  FROM sims WHERE cosine <= 0.95
-)
-SELECT anchor_id, CAST(anchor_label AS BIGINT) AS anchor_label,
-       negative_id, CAST(negative_label AS BIGINT) AS negative_label,
-       round((cosine) * 10000.0) / 10000.0 AS cosine,
-       CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
-"""
-
-
-def _q_dedup_keepmin_embeddings(spark, sf_dir):
-    """Keep-one-per-near-dup-group (operators/dedup.py
-    dedup_near_duplicates) under a FULL oracle: with the label column as
-    the blocking key the pair set is exact, so verify → connected
-    components → drop-non-min is exactly reproducible as a recursive
-    transitive-closure CTE. This is semantic_dedup's entire tail (verify,
-    CC, keep-min) value-checked; only the k-means blocking stays
-    test-verified."""
-    from bid_evaluation_spark.operators.dedup import (
-        dedup_near_duplicates, embedding_near_duplicates)
-
-    df = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_duplicates(df, threshold=0.35, block_col="label")
-    kept = dedup_near_duplicates(df, pairs, id_col="vec_id")
-    return kept.select("vec_id", F.col("label").cast("long").alias("label"))
-
-
-_SQL_DEDUP_KEEPMIN_EMBEDDINGS = """
-WITH RECURSIVE v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS a_id, b.vec_id AS b_id
-  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(a.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) >= 0.35
-),
-edges AS (SELECT a_id AS s, b_id AS d FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(id, lab) AS (
-  SELECT s, s FROM (SELECT DISTINCT s FROM edges)
-  UNION
-  SELECT e.d, r.lab FROM reach r JOIN edges e ON r.id = e.s
-),
-clusters AS (SELECT id, min(lab) AS cluster_id FROM reach GROUP BY id),
-dropped AS (SELECT id FROM clusters WHERE id != cluster_id)
-SELECT em.vec_id, CAST(em.label AS BIGINT) AS label
-FROM embeddings em
-WHERE em.vec_id NOT IN (SELECT id FROM dropped)
-"""
-
-
-def _q_dedup_semantic_embeddings(spark, sf_dir):
-    """SemDeDup-style semantic dedup (operators/dedup.py): centroid blocks
-    with nprobe multiprobe + within-cluster exact-cosine verify + connected
-    components + keep-min-id, under a FULL value oracle.
-
-    The centroids are pinned to the embeddings of ``vec_id < 8`` (the
-    pretrained-centroids surface — a driver-sized collect, the deployment
-    shape where centroids come from a previous corpus snapshot), which makes
-    every stage SQL-expressible: the oracle recomputes the identical
-    ``|c|² − 2·e·c`` argmin top-3 probe assignment, the shared-cluster pair
-    generation, the exact-cosine verify, and the recursive-CTE transitive
-    closure. The k-means TRAINING loop stays covered by
-    tests/test_semantic_dedup.py (0.96 recall vs exact all-pairs) and the
-    streaming-IVF tests."""
-    import numpy as np
-
-    from bid_evaluation_spark.operators.dedup import semantic_dedup
-
-    df = _t(spark, sf_dir, "embeddings")
-    cent_rows = df.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    centroids = np.array(
-        [r["embedding"] for r in sorted(cent_rows, key=lambda r: r["vec_id"])],
-        dtype=np.float64)
-    kept = semantic_dedup(df, threshold=0.35, nprobe=3, seed=7,
-                          centroids=centroids)
-    return kept.select("vec_id", F.col("label").cast("long").alias("label")
-                       ).orderBy("vec_id")
-
-
-_SQL_DEDUP_SEMANTIC_EMBEDDINGS = """
-WITH RECURSIVE v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-c AS MATERIALIZED (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-probes AS MATERIALIZED (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        list_sum(list_transform(c.ce, x -> x*x))
-          - 2 * list_sum(list_transform(generate_series(1, len(v.e)),
-                                        i -> v.e[i]*c.ce[i])) ASC,
-        c.cid ASC) AS pr
-    FROM v CROSS JOIN c
-  ) WHERE pr <= 3
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-  FROM probes pa JOIN probes pb ON pa.cid = pb.cid AND pa.vec_id < pb.vec_id
-  JOIN v a ON a.vec_id = pa.vec_id
-  JOIN v b ON b.vec_id = pb.vec_id
-  WHERE list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(a.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) >= 0.35
-),
-edges AS MATERIALIZED (SELECT a_id AS s, b_id AS d FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(id, lab) AS (
-  SELECT s, s FROM (SELECT DISTINCT s FROM edges)
-  UNION
-  SELECT e.d, r.lab FROM reach r JOIN edges e ON r.id = e.s
-),
-clusters AS (SELECT id, min(lab) AS cluster_id FROM reach GROUP BY id),
-dropped AS (SELECT id FROM clusters WHERE id != cluster_id)
-SELECT em.vec_id, CAST(em.label AS BIGINT) AS label
-FROM embeddings em
-WHERE em.vec_id NOT IN (SELECT id FROM dropped)
-ORDER BY em.vec_id
-"""
-
-
-def _q_ann_lsh_topk_embeddings(spark, sf_dir):
-    """Bucketed (LSH-style) approximate top-k — the 100 TB scale path.
-
-    FULL value oracle: the hyperplane matrix is a deterministic function of
-    (seed, dim) — ``default_rng(42).standard_normal((64, 4))`` — so the SQL
-    below embeds the identical plane constants as literals and recomputes
-    the sign-pattern bucket, the bucket equi-join, and the exact cosine
-    rank. Sign parity is robust (a flip needs |dot| ≲ 1e-13 against O(1)
-    Gaussian dots); raw-cosine ranking parity follows the green
-    ``ann_cosine_topk_embeddings`` precedent."""
-    from bid_evaluation_spark.operators.similarity import lsh_topk
-
-    df = _t(spark, sf_dir, "embeddings")
-    queries_df = df.filter(F.col("vec_id") < 10)
-    res = lsh_topk(queries_df, df, k=5, num_planes=4)
-    return res.select("query_id", "neighbor_id",
-                      _r4("cosine").alias("cosine"), F.col("rnk").cast("long"))
-
-
-def _lsh_bucket_sql_expr(num_planes: int = 4, seed: int = 42,
-                         dim: int = 64, vec: str = "e") -> str:
-    """DuckDB expression reproducing operators/dedup.py _hyperplane_bucket:
-    bit p of the bucket id is the sign of the vector's dot product with the
-    p-th seeded Gaussian plane, planes embedded as full-precision literals
-    (repr round-trips doubles exactly)."""
-    import numpy as np
-
-    P = np.random.default_rng(seed).standard_normal((dim, num_planes))
-    terms = []
-    for p in range(num_planes):
-        arr = "[" + ", ".join(repr(float(x)) for x in P[:, p]) + "]"
-        terms.append(
-            f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}),"
-            f" i -> {vec}[i] * ({arr})[i])) > 0 THEN {2 ** p} ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-
-_SQL_ANN_LSH_TOPK_EMBEDDINGS = f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-b AS (SELECT vec_id, e, {_lsh_bucket_sql_expr()} AS bkt FROM v),
-q AS (SELECT vec_id AS query_id, e AS qe, bkt FROM b WHERE vec_id < 10),
-sims AS (
-  SELECT q.query_id, b.vec_id AS neighbor_id,
-    list_sum(list_transform(generate_series(1, len(q.qe)), i -> q.qe[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(q.qe, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) AS cosine
-  FROM q JOIN b ON q.bkt = b.bkt
-  WHERE q.query_id != b.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-  FROM sims
-)
-SELECT query_id, neighbor_id, round((cosine) * 10000.0) / 10000.0 AS cosine,
-       CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
-"""
-
-
-def _q_ann_lsh_multitable_topk_embeddings(spark, sf_dir):
-    """Multi-table LSH top-k (OR-amplification): 4 independent hyperplane
-    tables, candidates = collision in ANY table, deduped on (query,
-    neighbor) BEFORE the exact-cosine verify — recall rises from p^planes
-    to 1 − (1 − p^planes)^4 at ×4 candidate cost, the standard LSH recall
-    lever. FULL value oracle: each table's plane matrix is a deterministic
-    function of its seed (base + 1e6+3·t), embedded as literals; the OR of
-    the four bucket equalities reproduces the deduped candidate set
-    exactly, and ranking parity follows ``ann_lsh_topk_embeddings``."""
-    from bid_evaluation_spark.operators.similarity import lsh_topk
-
-    df = _t(spark, sf_dir, "embeddings")
-    queries_df = df.filter(F.col("vec_id") < 10)
-    res = lsh_topk(queries_df, df, k=5, num_planes=3, num_tables=4)
-    return res.select("query_id", "neighbor_id",
-                      _r4("cosine").alias("cosine"), F.col("rnk").cast("long"))
-
-
-def _lsh_multitable_sql() -> str:
-    cols = []
-    for t in range(4):
-        cols.append(f"{_lsh_bucket_sql_expr(num_planes=3, seed=42 + 1_000_003 * t)} AS b{t}")
-    bucket_cols = ", ".join(cols)
-    on = " OR ".join(f"q.b{t} = b.b{t}" for t in range(4))
-    return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-b AS (SELECT vec_id, e, {bucket_cols} FROM v),
-q AS (SELECT vec_id AS query_id, e AS qe, b0, b1, b2, b3
-      FROM b WHERE vec_id < 10),
-cand AS (
-  SELECT DISTINCT q.query_id, b.vec_id AS neighbor_id
-  FROM q JOIN b ON ({on})
-  WHERE q.query_id != b.vec_id
-),
-sims AS (
-  SELECT c.query_id, c.neighbor_id,
-    list_sum(list_transform(generate_series(1, len(qv.e)),
-                            i -> qv.e[i]*nv.e[i]))
-      / (sqrt(list_sum(list_transform(qv.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(nv.e, x -> x*x)))) AS cosine
-  FROM cand c
-  JOIN v qv ON qv.vec_id = c.query_id
-  JOIN v nv ON nv.vec_id = c.neighbor_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-  FROM sims
-)
-SELECT query_id, neighbor_id,
-       round(cosine * 10000.0) / 10000.0 AS cosine, CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
-"""
-
-
-def _q_ann_ivf_topk_embeddings(spark, sf_dir):
-    """Trained-IVF approximate top-k under FULL value oracle: the REAL
-    ``kmeans_centroids`` Lloyd loop (2 rounds, pinned init = the vec_id<8
-    embeddings, tol=0 so neither engine early-stops) trains the inverted
-    lists, then multiprobe search runs over them. With the init pinned,
-    every stage is SQL-expressible — each Lloyd round is an argmin
-    assignment + per-(cluster, dim) means (the oracle unrolls both rounds
-    as CTEs, exactly like ``classify_logreg_embeddings`` unrolls gradient
-    descent; empty clusters keep their previous centroid via coalesce),
-    and the search stages are the same SQL as
-    ``ann_ivf_pretrained_topk_embeddings``. The hash-seeded init variant
-    (the default ``kmeans_centroids`` path) stays differential-tested
-    against numpy Lloyd and recall-floor-tested vs exact top-k in
-    tests/test_embeddings.py."""
-    import numpy as np
-
-    from bid_evaluation_spark.operators.similarity import (
-        ivf_topk, kmeans_centroids,
-    )
-
-    df = _t(spark, sf_dir, "embeddings")
-    cent_rows = (df.filter(F.col("vec_id") < 8)
-                 .select("vec_id", "embedding").orderBy("vec_id").collect())
-    init = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    trained = kmeans_centroids(df, max_iter=2, tol=0.0, init=init)
-    queries_df = df.filter(F.col("vec_id") < 10)
-    res = ivf_topk(queries_df, df, centroids=trained, k=5, nprobe=3)
-    return res.select("query_id", "neighbor_id",
-                      _r4("cosine").alias("cosine"), F.col("rnk").cast("long"))
-
-
-#: two unrolled Lloyd rounds from the pinned vec_id<8 init: round N is an
-#: argmin assignment (same c² − 2x·c expression the Spark kernel computes)
-#: + per-(cluster, dim) AVG, with empty clusters coalescing to their
-#: previous centroid — shared by the kmeans query and the trained-IVF query
-_SQL_KMEANS_LLOYD_CTES = """
-v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings
-  WHERE embedding IS NOT NULL
-),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-dims AS (SELECT unnest(generate_series(1, 64)) AS i),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c0.cid,
-      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        list_sum(list_transform(c0.ce, x -> x*x))
-          - 2 * list_sum(list_transform(generate_series(1, len(v.e)),
-                                        i -> v.e[i]*c0.ce[i])) ASC,
-        c0.cid ASC) AS pr
-    FROM v CROSS JOIN c0
-  ) WHERE pr = 1
-),
-m1 AS (
-  SELECT a1.cid, dims.i, avg(q.e[dims.i]) AS m
-  FROM a1 JOIN v q ON q.vec_id = a1.vec_id CROSS JOIN dims
-  GROUP BY a1.cid, dims.i
-),
-c1 AS (
-  SELECT c0.cid, dims.i, coalesce(m1.m, c0.ce[dims.i]) AS m
-  FROM c0 CROSS JOIN dims
-  LEFT JOIN m1 ON m1.cid = c0.cid AND m1.i = dims.i
-),
-d2 AS (
-  SELECT v.vec_id, c1.cid,
-         sum(c1.m * c1.m - 2 * v.e[c1.i] * c1.m) AS dist
-  FROM v CROSS JOIN c1
-  GROUP BY v.vec_id, c1.cid
-),
-a2 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-      row_number() OVER (PARTITION BY vec_id
-                         ORDER BY dist ASC, cid ASC) AS pr
-    FROM d2
-  ) WHERE pr = 1
-),
-m2 AS (
-  SELECT a2.cid, dims.i, avg(q.e[dims.i]) AS m
-  FROM a2 JOIN v q ON q.vec_id = a2.vec_id CROSS JOIN dims
-  GROUP BY a2.cid, dims.i
-),
-cfinal AS (
-  SELECT c1.cid, c1.i, coalesce(m2.m, c1.m) AS m
-  FROM c1 LEFT JOIN m2 ON m2.cid = c1.cid AND m2.i = c1.i
-)
-"""
-
-
-_SQL_ANN_IVF_TOPK_EMBEDDINGS = f"""
-WITH {_SQL_KMEANS_LLOYD_CTES},
-dist_all AS (
-  SELECT v.vec_id, cf.cid,
-         sum(cf.m * cf.m - 2 * v.e[cf.i] * cf.m) AS dist
-  FROM v CROSS JOIN cfinal cf
-  GROUP BY v.vec_id, cf.cid
-),
-assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-      ORDER BY dist ASC, cid ASC) AS pr
-    FROM dist_all
-  ) WHERE pr = 1
-),
-probes AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-      ORDER BY dist ASC, cid ASC) AS pr
-    FROM dist_all WHERE vec_id < 10
-  ) WHERE pr <= 3
-),
-sims AS (
-  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-    list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(q.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) AS cosine
-  FROM probes p JOIN assign a ON p.cid = a.cid
-  JOIN v q ON q.vec_id = p.vec_id
-  JOIN v b ON b.vec_id = a.vec_id
-  WHERE p.vec_id != a.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-  FROM sims
-)
-SELECT query_id, neighbor_id,
-       round(cosine * 10000.0) / 10000.0 AS cosine, CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
-"""
-
-
-def _q_ml_kmeans_lloyd_embeddings(spark, sf_dir):
-    """The k-means TRAINING LOOP itself under full value oracle: two
-    ``kmeans_centroids`` Lloyd rounds from the pinned vec_id<8 init
-    (tol=0 — no early stop), returning every (cluster, dim, centroid)
-    cell. The k·dim result matrix is driver-sized BY DESIGN (that is the
-    whole output of training), so materializing it as rows costs nothing
-    extra; each round's distributed work — the mapInPandas argmin
-    assignment and the posexplode per-(cluster, dim) mean — is what the
-    unrolled CTE oracle replays. Rounded at 1e-6 (centroid cells are
-    feature-scale ~1e-1; cross-engine drift is summation-order only);
-    + 0.0 canonicalizes IEEE -0.0 (NOTES.md lesson)."""
-    import numpy as np
-
-    from bid_evaluation_spark.operators.similarity import kmeans_centroids
-
-    df = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    cent_rows = (df.filter(F.col("vec_id") < 8)
-                 .select("vec_id", "embedding").orderBy("vec_id").collect())
-    init = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    cents = kmeans_centroids(df, max_iter=2, tol=0.0, init=init)
-    rows = [(int(c), int(d), float(cents[c, d]))
-            for c in range(cents.shape[0]) for d in range(cents.shape[1])]
-    out = spark.createDataFrame(rows, "cluster long, dim long, centroid double")
-    r6 = F.round(F.col("centroid") * 1000000.0) / 1000000.0 + F.lit(0.0)
-    return out.select("cluster", "dim", r6.alias("centroid"))
-
-
-_SQL_ML_KMEANS_LLOYD_EMBEDDINGS = f"""
-WITH {_SQL_KMEANS_LLOYD_CTES}
-SELECT CAST(cid AS BIGINT) AS cluster, CAST(i - 1 AS BIGINT) AS dim,
-       round(m * 1000000.0) / 1000000.0 + 0.0 AS centroid
-FROM cfinal
-"""
-
-
-def _q_ann_ivf_pretrained_topk_embeddings(spark, sf_dir):
-    """IVF search under FULL value oracle: the deployment surface where an
-    already-trained centroid set is supplied (here pinned to the embeddings
-    of vec_id < 8, the same device as ``dedup_semantic_embeddings``). With
-    centroids fixed, EVERY stage of ivf_topk is SQL-expressible — corpus
-    argmin list assignment, query nprobe=3 multiprobe, the inverted-list
-    equi-join, exact-cosine ranking — so together with the rows-only
-    trained variant, only the k-means training loop itself remains outside
-    the value gate (differential-tested vs numpy Lloyd in tests)."""
-    import numpy as np
-
-    from bid_evaluation_spark.operators.similarity import ivf_topk
-
-    df = _t(spark, sf_dir, "embeddings")
-    cent_rows = (df.filter(F.col("vec_id") < 8)
-                 .select("vec_id", "embedding").orderBy("vec_id").collect())
-    centroids = np.array([r["embedding"] for r in cent_rows],
-                         dtype=np.float64)
-    queries_df = df.filter(F.col("vec_id") < 10)
-    res = ivf_topk(queries_df, df, centroids=centroids, k=5, nprobe=3)
-    return res.select("query_id", "neighbor_id",
-                      _r4("cosine").alias("cosine"), F.col("rnk").cast("long"))
-
-
-_SQL_ANN_IVF_PRETRAINED_TOPK_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        list_sum(list_transform(c.ce, x -> x*x))
-          - 2 * list_sum(list_transform(generate_series(1, len(v.e)),
-                                        i -> v.e[i]*c.ce[i])) ASC,
-        c.cid ASC) AS pr
-    FROM v CROSS JOIN c
-  ) WHERE pr = 1
-),
-probes AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        list_sum(list_transform(c.ce, x -> x*x))
-          - 2 * list_sum(list_transform(generate_series(1, len(v.e)),
-                                        i -> v.e[i]*c.ce[i])) ASC,
-        c.cid ASC) AS pr
-    FROM v CROSS JOIN c
-    WHERE v.vec_id < 10
-  ) WHERE pr <= 3
-),
-sims AS (
-  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-    list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i]*b.e[i]))
-      / (sqrt(list_sum(list_transform(q.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(b.e, x -> x*x)))) AS cosine
-  FROM probes p JOIN assign a ON p.cid = a.cid
-  JOIN v q ON q.vec_id = p.vec_id
-  JOIN v b ON b.vec_id = a.vec_id
-  WHERE p.vec_id != a.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-  FROM sims
-)
-SELECT query_id, neighbor_id,
-       round(cosine * 10000.0) / 10000.0 AS cosine, CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 5
 """
 
 
@@ -2316,2027 +1068,8 @@ ORDER BY event_type
 
 
 # ---------------------------------------------------------------------------
-# training-data pipeline operators (operators/pipeline.py)
-# ---------------------------------------------------------------------------
-
-def _q_pipe_decontaminate_documents(spark, sf_dir):
-    """Train/eval decontamination: docs with doc_id % 10 == 0 act as the eval
-    corpus; flag any remaining (train) doc whose 3-shingle Jaccard with an
-    eval doc reaches 0.3. Exact — shared-shingle candidates + verify."""
-    from bid_evaluation_spark.operators.pipeline import decontaminate
-
-    df = _t(spark, sf_dir, "documents")
-    train = df.filter(F.col("doc_id") % 10 != 0)
-    ev = df.filter(F.col("doc_id") % 10 == 0)
-    res = decontaminate(train, ev, threshold=0.3, k=3)
-    return res.select("train_id", "eval_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_PIPE_DECONTAMINATE_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-inv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-sz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-inter AS (
-  -- inverted-index exact truth (train × eval): for j >= 0.3 a pair
-  -- must share a shingle, so the train × eval cross join never
-  -- materializes; |A∪B| = |A|+|B|−|A∩B| on distinct shingle sets
-  SELECT a.doc_id AS train_id, b.doc_id AS eval_id, count(*) AS i
-  FROM inv a JOIN inv b ON a.g = b.g
-  WHERE a.doc_id % 10 != 0 AND b.doc_id % 10 = 0
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT train_id, eval_id, CAST(i AS DOUBLE) / (na.n + nb.n - i) AS j
-  FROM inter
-  JOIN sz na ON na.doc_id = train_id
-  JOIN sz nb ON nb.doc_id = eval_id
-)
-SELECT train_id, eval_id, round(j * 10000.0) / 10000.0 AS jaccard
-FROM pairs WHERE j >= 0.3
-"""
-
-
-def _q_pipe_decontaminate_bloom_documents(spark, sf_dir):
-    """Bloom-prefiltered decontamination (operators/bloom.py): identical
-    exact semantics to pipe_decontaminate_documents — the broadcast Bloom
-    filter over eval shingle hashes shrinks the candidate shuffle map-side
-    and cannot drop true pairs (no false negatives) — at a lower threshold
-    to exercise a different cut of the same corpus."""
-    from bid_evaluation_spark.operators.pipeline import decontaminate_bloom
-
-    df = _t(spark, sf_dir, "documents")
-    train = df.filter(F.col("doc_id") % 10 != 0)
-    ev = df.filter(F.col("doc_id") % 10 == 0)
-    res = decontaminate_bloom(train, ev, threshold=0.25, k=3)
-    return res.select("train_id", "eval_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_PIPE_DECONTAMINATE_BLOOM_DOCUMENTS = _SQL_PIPE_DECONTAMINATE_DOCUMENTS.replace(
-    "WHERE j >= 0.3", "WHERE j >= 0.25")
-
-
-def _q_pipe_bpe_merges_documents(spark, sf_dir):
-    """Distributed BPE tokenizer training (operators/bpe.py): one corpus
-    shuffle to a (word, count) table, then deterministic merge rounds over
-    the word table only (count desc, pair asc tie-break).
-
-    FULL VALUE ORACLE (was rows-only through r5): the 10-round loop is
-    unrolled into 10 DuckDB CTE rounds over a separator-delimited symbol
-    string per word. Each round = pair-count (split + adjacent zip +
-    groupBy), argmax (``ORDER BY c DESC, l, r LIMIT 1``, ``c >= 2``
-    floor, ``LEFT JOIN`` so an empty round passes state through — the
-    loop's early-stop), and the greedy left-to-right rewrite as a
-    ``list_reduce`` fold: merge when the accumulator's LAST segment equals
-    ``l`` and the incoming symbol equals ``r``. The fold is exactly the
-    scan-and-skip-2 rewrite because a merged segment ``l||r`` can never
-    re-match ``l`` (``r`` is non-empty and symbols contain no separator) —
-    note a replace()-based rewrite is NOT equivalent (odd runs of a
-    repeated symbol resequence differently). CTEs are ``MATERIALIZED``:
-    each state is read twice per round and DuckDB's default inlining made
-    the chain exponential (45 s → 0.15 s at sf0.01). Full-loop parity
-    with a pure-python reference is additionally pinned in
-    tests/test_bpe.py."""
-    from bid_evaluation_spark.operators.bpe import bpe_train
-
-    df = _t(spark, sf_dir, "documents")
-    # 10 rounds exercise the full loop machinery (argmax + rewrite +
-    # recount + checkpoint) at half the former gate latency; full-depth
-    # parity stays pinned by tests/test_bpe.py
-    merges = bpe_train(df, n_merges=10, min_count=2)
-    return spark.createDataFrame(
-        [(i, l, r) for i, (l, r) in enumerate(merges)],
-        "rank long, left string, right string").orderBy("rank")
-
-
-def _q_pipe_bpe_pair_counts_documents(spark, sf_dir):
-    """BPE merge-round-1 weighted pair counts (operators/bpe.py
-    pair_counts) — the distributed counting core of bpe_train under a full
-    value oracle; top-20 by (count desc, pair asc). Exactly checks the
-    word-frequency pass, symbol construction, and weighted pair explode;
-    the iterative rewrite above it stays rows-only."""
-    from bid_evaluation_spark.operators.bpe import pair_counts
-
-    df = _t(spark, sf_dir, "documents")
-    return (pair_counts(df)
-            .orderBy(F.desc("c"), F.asc("l"), F.asc("r")).limit(20)
-            .select(F.col("l").alias("left"), F.col("r").alias("right"),
-                    F.col("c").cast("long").alias("c")))
-
-
-def _q_pipe_bpe_first_merge_documents(spark, sf_dir):
-    """The BPE merge loop's ROUND-1 DECISION under full value oracle: run
-    the real ``bpe_train`` loop for exactly one round and return the pair
-    it picks. Unlike ``pipe_bpe_pair_counts_documents`` (which oracles the
-    counting table), this drives the loop's own selection machinery — the
-    ``c >= min_count`` floor, the (count desc, left asc, right asc)
-    argmax, and the one-row driver collect. Since r6 the full loop is
-    ALSO value-oracled (``pipe_bpe_merges_documents`` unrolls all 10
-    rounds in SQL), so this entry now isolates the round-1 decision for
-    cheap localization when the full-loop gate trips."""
-    from bid_evaluation_spark.operators.bpe import bpe_train
-
-    df = _t(spark, sf_dir, "documents")
-    merges = bpe_train(df, n_merges=1, min_count=2)
-    return spark.createDataFrame(
-        [(l, r) for l, r in merges], "left string, right string")
-
-
-def _sql_bpe_chain(n_rounds: int, min_count: int) -> str:
-    """The shared training-chain WITH-prefix for the BPE oracles: word
-    frequencies, initial symbol states, and ``n_rounds`` unrolled merge
-    rounds (p{r} pair counts, m{r} argmax, s{r} rewritten state)."""
-    E = "chr(30)"
-    parts = ["""
-WITH words AS MATERIALIZED (
-  SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
-    SELECT unnest(CASE WHEN text IS NULL OR trim(text) = ''
-                       THEN CAST([] AS VARCHAR[])
-                       ELSE string_split_regex(trim(lower(text)), '\\s+')
-                  END) AS word
-    FROM documents)
-  WHERE word != '' GROUP BY word
-),
-s0 AS MATERIALIZED (
-  SELECT n,
-         array_to_string(
-           list_append(list_transform(generate_series(1, length(word)),
-                                      i -> word[i]), '</w>'), chr(30)) AS s
-  FROM words
-)"""]
-    for r in range(1, n_rounds + 1):
-        parts.append(f""",
-p{r} AS (
-  SELECT a[i] AS pl, a[i+1] AS pr, sum(n) AS c FROM (
-    SELECT n, a, unnest(generate_series(1, len(a) - 1)) AS i
-    FROM (SELECT n, string_split(s, {E}) AS a FROM s{r-1})
-    WHERE len(a) >= 2)
-  GROUP BY pl, pr
-),
-m{r} AS MATERIALIZED (
-  SELECT pl, pr FROM p{r} WHERE c >= {min_count}
-  ORDER BY c DESC, pl ASC, pr ASC LIMIT 1
-),
-s{r} AS MATERIALIZED (
-  SELECT n, CASE WHEN m.pl IS NULL
-         OR NOT contains({E} || s || {E}, {E} || m.pl || {E} || m.pr || {E})
-    THEN s ELSE
-    list_reduce(string_split(s, {E}), (acc, x) ->
-      CASE WHEN (acc = m.pl OR ends_with(acc, {E} || m.pl)) AND x = m.pr
-           THEN left(acc, length(acc) - length(m.pl)) || m.pl || m.pr
-           ELSE acc || {E} || x END) END AS s
-  FROM s{r-1} LEFT JOIN m{r} AS m ON TRUE
-)""")
-    return "".join(parts)
-
-
-def _sql_bpe_merges(n_rounds: int, min_count: int) -> str:
-    """Unrolled-loop DuckDB oracle for ``bpe_train`` (see the query
-    docstring for the equivalence argument). ``chr(30)`` (ASCII record
-    separator) delimits symbols inside one word's state string — it cannot
-    occur in whitespace-split text tokens."""
-    union = "\nUNION ALL\n".join(
-        f'SELECT CAST({r - 1} AS BIGINT) AS rank, pl AS "left",'
-        f' pr AS "right" FROM m{r}'
-        for r in range(1, n_rounds + 1))
-    return (_sql_bpe_chain(n_rounds, min_count)
-            + f'\nSELECT rank, "left", "right" FROM (\n{union}\n)'
-              ' ORDER BY rank')
-
-
-def _sql_bpe_token_counts(n_rounds: int, min_count: int,
-                          encode_rounds: int) -> str:
-    """Oracle for ``bpe_train`` + ``bpe_token_count`` end-to-end: after
-    the training chain, replay ``_encode_word``'s LOWEST-RANK-FIRST loop
-    per distinct corpus word — NOT rank-sequential application of the
-    merge list, which is provably different (a 200k-case random stress
-    test found ~0.8% divergence: a later merge can create an adjacency
-    for an EARLIER-rank pair, e.g. (aa,a)→aaa re-enabling (b,aaa), and
-    the lowest-rank loop goes back for it while sequential application
-    never revisits). Each encode round finds a word's min-(rank, pos)
-    adjacent merge-table pair and rewrites that single occurrence —
-    exactly the python loop. A word of length L merges at most L times,
-    so ``encode_rounds`` ≥ max word length + 1 makes the unroll exact
-    (testdata max is 8; rounds are no-ops once a word has no pair).
-    Doc token count = Σ over word occurrences of the word's token count;
-    wordless/null docs keep 0 via the left join."""
-    parts = [_sql_bpe_chain(n_rounds, min_count)]
-    ranks_union = "\nUNION ALL\n".join(
-        f"SELECT pl, pr, {r - 1} AS rank FROM m{r}"
-        for r in range(1, n_rounds + 1))
-    parts.append(f""",
-ranks AS MATERIALIZED (
-{ranks_union}
-),
-e0 AS MATERIALIZED (
-  SELECT word,
-         list_append(list_transform(generate_series(1, length(word)),
-                                    i -> word[i]), '</w>') AS s
-  FROM words
-)""")
-    for r in range(1, encode_rounds + 1):
-        parts.append(f""",
-b{r} AS MATERIALIZED (
-  SELECT word, min_by(i, rank * 1000 + i) AS bi FROM (
-    SELECT t.word, t.i, rk.rank
-    FROM (SELECT word, s, unnest(generate_series(1, len(s) - 1)) AS i
-          FROM e{r-1} WHERE len(s) >= 2) t
-    JOIN ranks rk ON t.s[t.i] = rk.pl AND t.s[t.i + 1] = rk.pr)
-  GROUP BY word
-),
-e{r} AS MATERIALIZED (
-  SELECT e.word, CASE WHEN b.bi IS NULL THEN e.s ELSE
-    e.s[1:b.bi - 1] || [e.s[b.bi] || e.s[b.bi + 1]]
-      || e.s[b.bi + 2:len(e.s)] END AS s
-  FROM e{r-1} e LEFT JOIN b{r} b USING (word)
-)""")
-    parts.append(f""",
-wc AS MATERIALIZED (
-  SELECT word, len(s) AS n_tok FROM e{encode_rounds}
-),
-doc_words AS (
-  SELECT doc_id, unnest(CASE WHEN text IS NULL OR trim(text) = ''
-                             THEN CAST([] AS VARCHAR[])
-                             ELSE string_split_regex(trim(lower(text)),
-                                                     '\\s+')
-                        END) AS word
-  FROM documents
-),
-per_doc AS (
-  SELECT dw.doc_id, sum(wc.n_tok) AS n
-  FROM doc_words dw JOIN wc USING (word)
-  WHERE dw.word != ''
-  GROUP BY dw.doc_id
-)
-SELECT d.doc_id, CAST(COALESCE(p.n, 0) AS BIGINT) AS n_tokens
-FROM documents d LEFT JOIN per_doc p USING (doc_id)""")
-    return "".join(parts)
-
-
-_SQL_PIPE_BPE_MERGES_DOCUMENTS = _sql_bpe_merges(10, 2)
-_SQL_PIPE_BPE_TOKEN_COUNTS_DOCUMENTS = _sql_bpe_token_counts(5, 2, 12)
-
-
-def _q_pipe_bpe_token_counts_documents(spark, sf_dir):
-    """BPE end-to-end: train 5 merges on the corpus, then segment every
-    document and return its token count (operators/bpe.py bpe_train +
-    bpe_token_count) — the budget metric packing/chunking consume, fully
-    value-oracled. The oracle replays BOTH loops: training (unrolled
-    merge rounds) and the per-word lowest-rank-first encode loop (see
-    ``_sql_bpe_token_counts`` for why rank-sequential replay would be
-    WRONG). The Arrow UDF encodes each batch's distinct words once; the
-    oracle's per-distinct-word table mirrors that structure."""
-    from bid_evaluation_spark.operators.bpe import bpe_token_count, bpe_train
-
-    df = _t(spark, sf_dir, "documents")
-    merges = bpe_train(df, n_merges=5, min_count=2)
-    return df.select(
-        "doc_id",
-        bpe_token_count(F.col("text"), merges).cast("long")
-        .alias("n_tokens"))
-
-
-_SQL_PIPE_BPE_FIRST_MERGE_DOCUMENTS = """
-WITH words AS (
-  SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
-    SELECT unnest(CASE WHEN text IS NULL OR trim(text) = ''
-                       THEN CAST([] AS VARCHAR[])
-                       ELSE string_split_regex(trim(lower(text)), '\\s+')
-                  END) AS word
-    FROM documents)
-  WHERE word != '' GROUP BY word
-),
-syms AS (
-  SELECT n,
-         list_append(list_transform(generate_series(1, length(word)),
-                                    i -> word[i]), '</w>') AS s
-  FROM words
-),
-idx AS (
-  SELECT n, s, unnest(generate_series(1, len(s) - 1)) AS i FROM syms
-),
-pairs AS (
-  SELECT s[i] AS l, s[i+1] AS r, sum(n) AS c FROM idx GROUP BY s[i], s[i+1]
-)
-SELECT l AS "left", r AS "right"
-FROM pairs WHERE c >= 2
-ORDER BY c DESC, l ASC, r ASC
-LIMIT 1
-"""
-
-
-_SQL_PIPE_BPE_PAIR_COUNTS_DOCUMENTS = """
-WITH words AS (
-  SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
-    SELECT unnest(CASE WHEN text IS NULL OR trim(text) = ''
-                       THEN CAST([] AS VARCHAR[])
-                       ELSE string_split_regex(trim(lower(text)), '\\s+')
-                  END) AS word
-    FROM documents)
-  WHERE word != '' GROUP BY word
-),
-syms AS (
-  SELECT n,
-         list_append(list_transform(generate_series(1, length(word)),
-                                    i -> word[i]), '</w>') AS s
-  FROM words
-),
-idx AS (
-  SELECT n, s, unnest(generate_series(1, len(s) - 1)) AS i FROM syms
-),
-pairs AS (
-  SELECT s[i] AS l, s[i+1] AS r, sum(n) AS c FROM idx GROUP BY s[i], s[i+1]
-)
-SELECT l AS "left", r AS "right", CAST(c AS BIGINT) AS c
-FROM pairs
-ORDER BY c DESC, l ASC, r ASC
-LIMIT 20
-"""
-
-
-def _q_pipe_hash_sample_documents(spark, sf_dir):
-    """Deterministic md5-threshold sample (~30%) — reproducible across
-    engines/runs, unlike rand(); the oracle runs the identical predicate."""
-    from bid_evaluation_spark.operators.pipeline import hash_sample
-
-    df = _t(spark, sf_dir, "documents")
-    res = hash_sample(df, 0.3, key_col="doc_id", seed="r2")
-    return res.select("doc_id", "source",
-                      F.col("n_chars").cast("long").alias("n_chars"))
-
-
-# 0.3 * 16^8 → 0x4ccccccc (int-truncated; hash_sample computes the same)
-_SQL_PIPE_HASH_SAMPLE_DOCUMENTS = """
-SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
-FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR) || 'r2'), 1, 8) < '4ccccccc'
-"""
-
-
-def _q_pipe_mixture_sample_documents(spark, sf_dir):
-    """Domain-mixture sampling: thin each language toward a 4:2:2:1:1 target
-    mixture at the largest budget the corpus supports without up-sampling.
-    Acceptance rates derive from one tiny counts pass; the keep predicate is
-    the same portable md5 threshold as hash_sample, so the oracle recomputes
-    the identical rates (same IEEE double arithmetic) and predicate."""
-    from bid_evaluation_spark.operators.pipeline import mixture_sample
-
-    df = _t(spark, sf_dir, "documents")
-    res = mixture_sample(df, {"en": 4, "de": 2, "es": 2, "fr": 1, "zh": 1},
-                         group_col="lang", key_col="doc_id", seed="mix")
-    return res.select("doc_id", "lang", "source")
-
-
-_SQL_PIPE_MIXTURE_SAMPLE_DOCUMENTS = """
-WITH w AS (
-  SELECT * FROM (VALUES ('en', 4), ('de', 2), ('es', 2), ('fr', 1), ('zh', 1))
-         AS t(lang, wi)
-),
-j AS (
-  SELECT d.lang, CAST(count(*) AS DOUBLE) AS n, w.wi / 10.0 AS s
-  FROM documents d JOIN w USING (lang) GROUP BY d.lang, w.wi
-),
-p AS (
-  SELECT lang, (SELECT min(n / s) FROM j) * s / n AS p FROM j
-)
-SELECT d.doc_id, d.lang, d.source
-FROM documents d JOIN p USING (lang)
-WHERE p.p >= 1.0
-   OR substr(md5(CAST(d.doc_id AS VARCHAR) || 'mix'), 1, 8)
-      < printf('%08x', CAST(trunc(p.p * 4294967296.0) AS BIGINT))
-"""
-
-
-def _q_pipe_temperature_mixture_documents(spark, sf_dir):
-    """Temperature sampling (operators/pipeline.py
-    temperature_mixture_sample): target share ∝ n_lang^0.5 — the
-    UniMax/multilingual-temperature shape that up-weights tail languages
-    by thinning the head (acceptance ∝ n^(α−1)), never up-sampling. Per-
-    group acceptance rates are quantized to 1e-6 before the md5-threshold
-    predicate (the share normalizer is a float sum whose association order
-    differs across engines); the oracle replays counts → shares → budget →
-    quantized thresholds identically."""
-    from bid_evaluation_spark.operators.pipeline import (
-        temperature_mixture_sample,
-    )
-
-    df = _t(spark, sf_dir, "documents")
-    res = temperature_mixture_sample(df, alpha=0.5, group_col="lang",
-                                     seed="temp")
-    return res.select("doc_id", "lang", "source")
-
-
-_SQL_PIPE_TEMPERATURE_MIXTURE_DOCUMENTS = """
-WITH c AS (
-  SELECT lang, CAST(count(*) AS DOUBLE) AS n FROM documents
-  WHERE lang IS NOT NULL GROUP BY 1
-),
-s AS (
-  SELECT lang, n,
-         pow(n, CAST(0.5 AS DOUBLE))
-           / (SELECT sum(pow(n, CAST(0.5 AS DOUBLE))) FROM c) AS sh
-  FROM c
-),
-p AS (
-  SELECT lang,
-         round(least(CAST(1 AS DOUBLE),
-                     (SELECT min(n / sh) FROM s) * sh / n) * 1000000.0)
-           / 1000000.0 AS p
-  FROM s
-)
-SELECT d.doc_id, d.lang, d.source
-FROM documents d JOIN p USING (lang)
-WHERE p.p >= 1.0
-   OR substr(md5(CAST(d.doc_id AS VARCHAR) || 'temp'), 1, 8)
-      < printf('%08x', CAST(trunc(p.p * 4294967296.0) AS BIGINT))
-"""
-
-
-def _q_pipe_curriculum_bins_documents(spark, sf_dir):
-    """Curriculum bucketing (operators/pipeline.py curriculum_bins): 4
-    equal-population quality bands via ONE fused exact-percentile agg
-    inlined as literals — a map-only assignment, never ntile's global
-    single-partition sort (and unlike ntile, the ties-at-threshold-go-low
-    contract is deterministic, which is what lets DuckDB replay it:
-    quantile_cont uses the same linear interpolation as Spark's exact
-    percentile)."""
-    from bid_evaluation_spark.operators.pipeline import curriculum_bins
-    from bid_evaluation_spark.operators.text import quality_score
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "q", quality_score("text"))
-    out = curriculum_bins(docs, "q", n_bins=4)
-    return out.select("doc_id", _r4("q").alias("quality"), "bin")
-
-
-_SQL_PIPE_CURRICULUM_BINS_DOCUMENTS = f"""
-WITH toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-comp AS (
-  SELECT doc_id,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0
-    + (CASE WHEN len(t) > 0
-            THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t)
-            ELSE 0.0 END) * 30.0
-    + least((CASE WHEN len(t) > 0
-                  THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL})) AS DOUBLE)
-                       / len(t)
-                  ELSE 0.0 END) * 5.0, 1.0) * 20.0
-    + (1.0 - least((CASE WHEN length(text) > 0
-                         THEN CAST(length(regexp_replace(text, '[\\w\\s]', '',
-                                                         'g')) AS DOUBLE)
-                              / length(text)
-                         ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS q
-  FROM toks
-),
-th AS (
-  SELECT quantile_cont(q, CAST(0.25 AS DOUBLE)) AS t1,
-         quantile_cont(q, CAST(0.5 AS DOUBLE)) AS t2,
-         quantile_cont(q, CAST(0.75 AS DOUBLE)) AS t3
-  FROM comp
-)
-SELECT c.doc_id, round(c.q * 10000.0) / 10000.0 AS quality,
-  CAST((CASE WHEN c.q > th.t1 THEN 1 ELSE 0 END)
-     + (CASE WHEN c.q > th.t2 THEN 1 ELSE 0 END)
-     + (CASE WHEN c.q > th.t3 THEN 1 ELSE 0 END) AS INTEGER) AS bin
-FROM comp c CROSS JOIN th
-"""
-
-
-def _q_pipe_weighted_sample_documents(spark, sf_dir):
-    """Deterministic weighted sampling without replacement
-    (operators/pipeline.py weighted_sample_k, Efraimidis–Spirakis A-ES):
-    50 documents with inclusion probability proportional to n_chars; the
-    oracle recomputes the identical uniform draw (hex prefix → integer)
-    and rounded ln(u)/w priority ranking."""
-    from bid_evaluation_spark.operators.pipeline import weighted_sample_k
-
-    df = _t(spark, sf_dir, "documents")
-    res = weighted_sample_k(df, 50, "n_chars", seed="ws")
-    return res.select("doc_id", "lang", "source")
-
-
-_SQL_PIPE_WEIGHTED_SAMPLE_DOCUMENTS = """
-WITH p AS (
-  SELECT doc_id, lang, source,
-         round(ln((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'ws'), 1, 8))
-                        AS BIGINT) + 0.5) / 4294967296.0)
-               / CAST(n_chars AS DOUBLE) * 1000000.0) / 1000000.0 AS pr
-  FROM documents
-  WHERE n_chars IS NOT NULL AND n_chars > 0
-)
-SELECT doc_id, lang, source FROM p ORDER BY pr DESC, doc_id LIMIT 50
-"""
-
-
-def _q_pipe_sample_k_group_documents(spark, sf_dir):
-    """Exactly-k-per-group deterministic sampling (operators/pipeline.py
-    sample_k_per_group): rank by (md5(key||seed), key) within each lang,
-    keep rank <= 20 — the balanced-subset curation op. One window shuffle
-    keyed on the group; the oracle runs the identical ranking."""
-    from bid_evaluation_spark.operators.pipeline import sample_k_per_group
-
-    df = _t(spark, sf_dir, "documents")
-    res = sample_k_per_group(df, 20, "lang", seed="skg")
-    return res.select("doc_id", "lang", "source")
-
-
-_SQL_PIPE_SAMPLE_K_GROUP_DOCUMENTS = """
-WITH r AS (
-  SELECT doc_id, lang, source,
-         row_number() OVER (
-           PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS VARCHAR) || 'skg'), doc_id) AS rn
-  FROM documents
-)
-SELECT doc_id, lang, source FROM r WHERE rn <= 20
-"""
-
-
-def _q_pipe_token_mixture_documents(spark, sf_dir):
-    """Token-budget mixture sampling (operators/pipeline.py
-    token_budget_mixture_sample): the 4:2:2:1:1 target applies to token
-    mass, not document counts; per-lang acceptance rates derive from one
-    token-sum pass and the same portable md5 predicate — the oracle
-    recomputes the identical rate arithmetic."""
-    from bid_evaluation_spark.operators.pipeline import (
-        token_budget_mixture_sample)
-
-    df = _t(spark, sf_dir, "documents")
-    res = token_budget_mixture_sample(
-        df, {"en": 4, "de": 2, "es": 2, "fr": 1, "zh": 1}, seed="tokmix")
-    return res.select("doc_id", "lang", "source")
-
-
-_SQL_PIPE_TOKEN_MIXTURE_DOCUMENTS = """
-WITH w AS (
-  SELECT * FROM (VALUES ('en', 4), ('de', 2), ('es', 2), ('fr', 1), ('zh', 1))
-         AS t(lang, wi)
-),
-j AS (
-  SELECT d.lang,
-         CAST(sum(CASE WHEN trim(d.text) = '' THEN 0
-                       ELSE len(string_split_regex(trim(d.text), '\\s+'))
-                  END) AS DOUBLE) AS tok,
-         w.wi / 10.0 AS s
-  FROM documents d JOIN w USING (lang) GROUP BY d.lang, w.wi
-),
-j2 AS (SELECT * FROM j WHERE tok > 0),
-p AS (
-  SELECT lang, (SELECT min(tok / s) FROM j2) * s / tok AS p FROM j2
-)
-SELECT d.doc_id, d.lang, d.source
-FROM documents d JOIN p USING (lang)
-WHERE p.p >= 1.0
-   OR substr(md5(CAST(d.doc_id AS VARCHAR) || 'tokmix'), 1, 8)
-      < printf('%08x', CAST(trunc(p.p * 4294967296.0) AS BIGINT))
-"""
-
-
-def _q_pipe_shuffle_documents(spark, sf_dir):
-    """Deterministic global shuffle: seeded md5 permutation with explicit
-    positions, assembled zipWithIndex-style (bucket counts + broadcast
-    offsets — no single-partition window over the data). The oracle is the
-    direct global ORDER BY row_number, so any bucket/offset bug breaks the
-    position values."""
-    from bid_evaluation_spark.operators.pipeline import shuffle_rows
-
-    df = _t(spark, sf_dir, "documents")
-    res = shuffle_rows(df, key_col="doc_id", seed="perm")
-    return res.select("doc_id", "lang", "shuffle_pos")
-
-
-_SQL_PIPE_SHUFFLE_DOCUMENTS = """
-SELECT doc_id, lang,
-       CAST(row_number() OVER (
-         ORDER BY md5(CAST(doc_id AS VARCHAR) || 'perm'),
-                  CAST(doc_id AS VARCHAR)) - 1 AS BIGINT) AS shuffle_pos
-FROM documents
-"""
-
-
-def _q_pipe_lm_score_documents(spark, sf_dir):
-    """Unigram-LM perplexity-proxy quality scores (CCNet filter shape): an
-    add-0.5-smoothed unigram model aggregated from the corpus itself, each
-    doc scored by mean -ln p(token). The oracle rebuilds the identical
-    model and scores in SQL, so tokenization, smoothing arithmetic, and
-    unseen/empty-doc contracts all gate the hash match."""
-    from bid_evaluation_spark.operators.pipeline import lm_quality_score
-
-    df = _t(spark, sf_dir, "documents")
-    res = lm_quality_score(df, add_k=0.5)
-    return res.select("doc_id", "n_tokens", _r4("lm_nll").alias("lm_nll"),
-                      _r4("lm_ppl").alias("lm_ppl"))
-
-
-_SQL_PIPE_LM_SCORE_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(lower(text)), '\\s+') END AS t
-  FROM documents
-),
-exploded AS (
-  SELECT doc_id, unnest(t) AS tok FROM toks
-),
-model AS (
-  SELECT tok, CAST(count(*) AS DOUBLE) AS c FROM exploded GROUP BY tok
-),
-scal AS (
-  SELECT sum(c) AS n, CAST(count(*) AS DOUBLE) AS v FROM model
-),
-scored AS (
-  SELECT e.doc_id, -ln((m.c + 0.5) / (scal.n + 0.5 * scal.v)) AS nll
-  FROM exploded e JOIN model m USING (tok), scal
-)
-SELECT d.doc_id,
-  CAST(coalesce(s.cnt, 0) AS BIGINT) AS n_tokens,
-  round(s.mean_nll * 10000.0) / 10000.0 AS lm_nll,
-  round(exp(s.mean_nll) * 10000.0) / 10000.0 AS lm_ppl
-FROM documents d
-LEFT JOIN (SELECT doc_id, count(*) AS cnt, avg(nll) AS mean_nll
-           FROM scored GROUP BY doc_id) s USING (doc_id)
-"""
-
-
-def _q_pipe_bigram_lm_documents(spark, sf_dir):
-    """Bigram LM quality scoring (operators/pipeline.py
-    bigram_lm_quality_score): mean -ln P(w_i | w_{i-1}) under add-0.5
-    smoothing; the oracle rebuilds both model aggregates and the identical
-    conditional arithmetic in SQL."""
-    from bid_evaluation_spark.operators.pipeline import bigram_lm_quality_score
-
-    df = _t(spark, sf_dir, "documents")
-    res = bigram_lm_quality_score(df)
-    return res.select("doc_id",
-                      F.col("n_bigrams").cast("long").alias("n_bigrams"),
-                      _r4("lm2_nll").alias("lm2_nll"),
-                      _r4("lm2_ppl").alias("lm2_ppl"))
-
-
-_SQL_PIPE_BIGRAM_LM_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(lower(text)), '\\s+') END AS t
-  FROM documents
-),
-exploded AS (
-  SELECT doc_id, unnest(t) AS tok FROM toks
-),
-idx AS (
-  SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM toks
-),
-exploded2 AS (
-  SELECT doc_id, t[i] AS atok, t[i] || ' ' || t[i+1] AS bg FROM idx
-),
-bmodel AS (
-  SELECT bg, CAST(count(*) AS DOUBLE) AS cb FROM exploded2 GROUP BY bg
-),
-umodel AS (
-  SELECT tok, CAST(count(*) AS DOUBLE) AS ca FROM exploded GROUP BY tok
-),
-scal AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM umodel),
-scored AS (
-  SELECT e.doc_id, -ln((b.cb + 0.5) / (u.ca + 0.5 * scal.v)) AS nll
-  FROM exploded2 e JOIN bmodel b USING (bg)
-       JOIN umodel u ON e.atok = u.tok, scal
-)
-SELECT d.doc_id,
-  CAST(coalesce(s.cnt, 0) AS BIGINT) AS n_bigrams,
-  round(s.mean_nll * 10000.0) / 10000.0 AS lm2_nll,
-  round(exp(s.mean_nll) * 10000.0) / 10000.0 AS lm2_ppl
-FROM documents d
-LEFT JOIN (SELECT doc_id, count(*) AS cnt, avg(nll) AS mean_nll
-           FROM scored GROUP BY doc_id) s USING (doc_id)
-"""
-
-
-def _q_pipe_chunk_documents(spark, sf_dir):
-    """Overlapping token-window chunking (32-token windows, 8-token overlap):
-    map-side posexplode, no shuffle; every doc yields >= 1 chunk."""
-    from bid_evaluation_spark.operators.pipeline import chunk_documents
-
-    df = _t(spark, sf_dir, "documents")
-    res = chunk_documents(df, chunk_tokens=32, overlap=8)
-    return res.select("doc_id",
-                      F.col("chunk_index").cast("long").alias("chunk_index"),
-                      "chunk_text", "chunk_n_tokens")
-
-
-_SQL_PIPE_CHUNK_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-starts AS (
-  SELECT doc_id, t,
-         unnest(generate_series(1, greatest(len(t) - 8, 1), 24)) AS s
-  FROM toks
-)
-SELECT doc_id,
-       CAST((s - 1) // 24 AS BIGINT) AS chunk_index,
-       array_to_string(t[s:s+31], ' ') AS chunk_text,
-       CAST(len(t[s:s+31]) AS BIGINT) AS chunk_n_tokens
-FROM starts
-"""
-
-
-def _q_pipe_top_ngrams_documents(spark, sf_dir):
-    """Corpus top-50 bigrams by document frequency, deterministic tie-break
-    (count desc, ngram asc). Distributed TakeOrdered — no global sort
-    exchange."""
-    from bid_evaluation_spark.operators.pipeline import top_ngrams
-
-    df = _t(spark, sf_dir, "documents")
-    return top_ngrams(df, n=2, k=50)
-
-
-_SQL_PIPE_TOP_NGRAMS_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 2 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-1), i -> t[i] || ' ' || t[i+1]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-grams AS (SELECT doc_id, unnest(s) AS ngram FROM sh)
-SELECT ngram, CAST(COUNT(*) AS BIGINT) AS doc_freq
-FROM grams GROUP BY ngram
-ORDER BY doc_freq DESC, ngram ASC
-LIMIT 50
-"""
-
-
-def _q_lm_perplexity_documents(spark, sf_dir):
-    """CCNet-style LM quality filter (operators/lm.py): train an add-k
-    bigram LM on the even-doc_id half of the corpus, score the held-out
-    odd half by perplexity. Training is two count aggregations (the model
-    stays a distributed DataFrame pair — no driver vocabulary); scoring is
-    two hashed equi-joins + one per-doc avg. The oracle replays the exact
-    count tables and the smoothed ``ln((c2+k)/(c1+k*V))`` arithmetic."""
-    from bid_evaluation_spark.operators.lm import perplexity, train_bigram_lm
-
-    docs = _t(spark, sf_dir, "documents")
-    uni, big = train_bigram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    res = perplexity(docs.filter(F.col("doc_id") % 2 == 1), uni, big,
-                     add_k=0.5)
-    return res.select(
-        "doc_id", F.col("n_bigrams").cast("long").alias("n_bigrams"),
-        (_r4("avg_logprob") + F.lit(0.0)).alias("avg_logprob"),
-        (_r4("ppl") + F.lit(0.0)).alias("ppl"))
-
-
-_SQL_LM_PERPLEXITY_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-train_pairs AS (
-  SELECT t[i] AS w1, t[i + 1] AS w2
-  FROM (SELECT t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM toks WHERE doc_id % 2 = 0)
-),
-uni AS (
-  SELECT w1, COUNT(*) AS c1
-  FROM (SELECT unnest(t) AS w1 FROM toks WHERE doc_id % 2 = 0)
-  GROUP BY w1
-),
-big AS (SELECT w1, w2, COUNT(*) AS c2 FROM train_pairs GROUP BY w1, w2),
-v AS (SELECT COUNT(*) AS vocab FROM uni),
-score_pairs AS (
-  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM toks WHERE doc_id % 2 = 1)
-),
-lp AS (
-  SELECT p.doc_id,
-    ln((COALESCE(big.c2, 0) + 0.5)
-       / (COALESCE(uni.c1, 0) + 0.5 * (SELECT vocab FROM v))) AS lp
-  FROM score_pairs p
-  LEFT JOIN big ON p.w1 = big.w1 AND p.w2 = big.w2
-  LEFT JOIN uni ON p.w1 = uni.w1
-),
-per_doc AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, AVG(lp) AS avg_logprob
-  FROM lp GROUP BY doc_id
-)
-SELECT d.doc_id,
-  CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-  round(p.avg_logprob * 10000.0) / 10000.0 + 0.0 AS avg_logprob,
-  round(exp(-p.avg_logprob) * 10000.0) / 10000.0 + 0.0 AS ppl
-FROM (SELECT doc_id FROM documents WHERE doc_id % 2 = 1) d
-LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-"""
-
-
-def _q_pipe_pack_sequences_documents(spark, sf_dir):
-    """Block packing of documents into 512-token training sequences,
-    sharded by source (windows partition by the shard — no global
-    exchange)."""
-    from bid_evaluation_spark.operators.pipeline import pack_sequences
-
-    df = _t(spark, sf_dir, "documents")
-    return pack_sequences(df, max_tokens=512, shard_col="source",
-                          order_col="doc_id")
-
-
-_SQL_PIPE_PACK_SEQUENCES_DOCUMENTS = """
-WITH toks AS (
-  SELECT source, doc_id,
-    CASE WHEN trim(text) = '' THEN 0
-         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
-  FROM documents
-)
-SELECT source, doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-  CAST(COALESCE(SUM(n_tokens) OVER (
-    PARTITION BY source ORDER BY doc_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-    AS seq_offset,
-  CAST(COALESCE(SUM(n_tokens) OVER (
-    PARTITION BY source ORDER BY doc_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT)
-    AS seq_id
-FROM toks
-"""
-
-
-def _q_pipe_end_to_end_documents(spark, sf_dir):
-    """The full training-data prep chain as ONE lazy plan: exact dedup
-    (canonical row per normalized-text fingerprint) → quality gate →
-    deterministic 50% sample → 512-token sequence packing per source shard.
-    Every step is an operator from this repo composing on DataFrames; the
-    oracle chains the identical steps as CTEs."""
-    from pyspark.sql import Window
-    from bid_evaluation_spark.operators.pipeline import hash_sample, pack_sequences
-    from bid_evaluation_spark.operators.text import fingerprint_md5, quality_score
-
-    df = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("_fp")
-    df = (
-        df.withColumn("_fp", fingerprint_md5("text"))
-        .withColumn("_keep", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("_keep"))
-        .drop("_fp", "_keep")
-    )
-    df = df.filter(quality_score() >= F.lit(40.0))
-    df = hash_sample(df, 0.5, key_col="doc_id", seed="e2e")
-    return pack_sequences(df, max_tokens=512, shard_col="source",
-                          order_col="doc_id")
-
-
-_SQL_PIPE_END_TO_END_DOCUMENTS = f"""
-WITH fp AS (
-  SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
-  FROM documents
-),
-dedup AS (
-  SELECT * FROM (
-    SELECT *, min(doc_id) OVER (PARTITION BY f) AS keep_id FROM fp
-  ) WHERE doc_id = keep_id
-),
-toks AS (
-  SELECT doc_id, text, source,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM dedup
-),
-quality AS (
-  SELECT doc_id, source, t,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0
-    + (CASE WHEN len(t) > 0
-            THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t) ELSE 0.0 END) * 30.0
-    + least((CASE WHEN len(t) > 0
-                  THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL})) AS DOUBLE) / len(t)
-                  ELSE 0.0 END) * 5.0, 1.0) * 20.0
-    + (1.0 - least((CASE WHEN length(text) > 0
-                         THEN CAST(length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS DOUBLE) / length(text)
-                         ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS q
-  FROM toks
-),
-kept AS (
-  SELECT doc_id, source, len(t) AS n_tokens
-  FROM quality
-  WHERE q >= 40.0
-    AND substr(md5(CAST(doc_id AS VARCHAR) || 'e2e'), 1, 8) < '80000000'
-)
-SELECT source, doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-  CAST(COALESCE(SUM(n_tokens) OVER (
-    PARTITION BY source ORDER BY doc_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-    AS seq_offset,
-  CAST(COALESCE(SUM(n_tokens) OVER (
-    PARTITION BY source ORDER BY doc_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT)
-    AS seq_id
-FROM kept
-"""
-
-
-def _q_quality_repetition_documents(spark, sf_dir):
-    """Gopher-style n-gram repetition fractions (most-common-gram char
-    coverage + duplicated-gram char coverage, n=1 and 2). One map-side
-    explode, count shuffle keyed (doc, n, gram), per-doc fold — linear in
-    total tokens."""
-    from bid_evaluation_spark.operators.quality import ngram_repetition_stats
-
-    df = _t(spark, sf_dir, "documents")
-    res = ngram_repetition_stats(df, ns=(1, 2))
-    return res.select(
-        "doc_id",
-        _r4("top1_fraction").alias("top1_fraction"),
-        _r4("dup1_fraction").alias("dup1_fraction"),
-        _r4("top2_fraction").alias("top2_fraction"),
-        _r4("dup2_fraction").alias("dup2_fraction"),
-    )
-
-
-_SQL_QUALITY_REPETITION_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-g1 AS (SELECT doc_id, 1 AS n, unnest(t) AS gram FROM toks),
-g2 AS (
-  SELECT doc_id, 2 AS n,
-    unnest(CASE WHEN len(t) >= 2 THEN
-      list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])
-    ELSE CAST([] AS VARCHAR[]) END) AS gram
-  FROM toks
-),
-grams AS (SELECT * FROM g1 UNION ALL SELECT * FROM g2),
-cnts AS (SELECT doc_id, n, gram, count(*) AS cnt FROM grams GROUP BY doc_id, n, gram),
-ranked AS (
-  SELECT doc_id, n, cnt, length(gram) AS glen,
-         row_number() OVER (PARTITION BY doc_id, n
-                            ORDER BY cnt DESC, length(gram) DESC, gram DESC) AS rn
-  FROM cnts
-),
-tops AS (SELECT doc_id, n, cnt * glen AS top_chars FROM ranked WHERE rn = 1),
-sums AS (
-  SELECT doc_id, n,
-         sum(CASE WHEN cnt > 1 THEN cnt * length(gram) ELSE 0 END) AS dup_chars,
-         sum(cnt * length(gram)) AS tot_chars
-  FROM cnts GROUP BY doc_id, n
-),
-per AS (
-  SELECT s.doc_id, s.n,
-         CAST(t.top_chars AS DOUBLE) / s.tot_chars AS top_fraction,
-         CAST(s.dup_chars AS DOUBLE) / s.tot_chars AS dup_fraction
-  FROM sums s JOIN tops t ON s.doc_id = t.doc_id AND s.n = t.n
-),
-folded AS (
-  SELECT doc_id,
-         max(CASE WHEN n = 1 THEN top_fraction END) AS t1,
-         max(CASE WHEN n = 1 THEN dup_fraction END) AS d1,
-         max(CASE WHEN n = 2 THEN top_fraction END) AS t2,
-         max(CASE WHEN n = 2 THEN dup_fraction END) AS d2
-  FROM per GROUP BY doc_id
-)
-SELECT d.doc_id,
-       round(coalesce(f.t1, 0.0) * 10000.0) / 10000.0 AS top1_fraction,
-       round(coalesce(f.d1, 0.0) * 10000.0) / 10000.0 AS dup1_fraction,
-       round(coalesce(f.t2, 0.0) * 10000.0) / 10000.0 AS top2_fraction,
-       round(coalesce(f.d2, 0.0) * 10000.0) / 10000.0 AS dup2_fraction
-FROM documents d LEFT JOIN folded f USING (doc_id)
-"""
-
-
-def _q_quality_gopher_documents(spark, sf_dir):
-    """Gopher §A1.1 heuristic quality gate: word-count band, mean word
-    length, symbol/word ratio, alpha-word fraction, stopword hits — all
-    map-only Column expressions, no shuffle."""
-    from bid_evaluation_spark.operators.quality import gopher_quality_flags
-
-    df = _t(spark, sf_dir, "documents")
-    # min_stopword_hits=1: the synthetic corpus vocabulary contains only
-    # one of the eight Gopher stopwords, so the paper default of 2 would
-    # fail every document — 1 gives a meaningful 382/500 split at sf0.01.
-    res = gopher_quality_flags(df, min_words=20, min_stopword_hits=1)
-    return res.select(
-        "doc_id",
-        "n_words",
-        _r4("mean_word_len").alias("mean_word_len"),
-        _r4("symbol_word_ratio").alias("symbol_word_ratio"),
-        _r4("alpha_word_fraction").alias("alpha_word_fraction"),
-        "stopword_hits",
-        "pass_word_count", "pass_mean_word_len", "pass_symbol_ratio",
-        "pass_alpha_words", "pass_stopwords", "gopher_pass",
-    )
-
-
-_SQL_QUALITY_GOPHER_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sig AS (
-  SELECT doc_id,
-    CAST(len(t) AS BIGINT) AS n_words,
-    CASE WHEN len(t) > 0 THEN
-      CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / len(t)
-    ELSE 0.0 END AS mean_word_len,
-    CASE WHEN len(t) > 0 THEN
-      CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS DOUBLE) / len(t)
-    ELSE 0.0 END AS symbol_word_ratio,
-    CASE WHEN len(t) > 0 THEN
-      CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(t)
-    ELSE 0.0 END AS alpha_word_fraction,
-    CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
-                         w -> list_contains(t, w))) AS BIGINT) AS stopword_hits
-  FROM toks
-)
-SELECT doc_id, n_words,
-  round(mean_word_len * 10000.0) / 10000.0 AS mean_word_len,
-  round(symbol_word_ratio * 10000.0) / 10000.0 AS symbol_word_ratio,
-  round(alpha_word_fraction * 10000.0) / 10000.0 AS alpha_word_fraction,
-  stopword_hits,
-  (n_words >= 20 AND n_words <= 100000) AS pass_word_count,
-  (mean_word_len >= 3.0 AND mean_word_len <= 10.0) AS pass_mean_word_len,
-  (symbol_word_ratio <= 0.1) AS pass_symbol_ratio,
-  (alpha_word_fraction >= 0.8) AS pass_alpha_words,
-  (stopword_hits >= 1) AS pass_stopwords,
-  ((n_words >= 20 AND n_words <= 100000)
-   AND (mean_word_len >= 3.0 AND mean_word_len <= 10.0)
-   AND (symbol_word_ratio <= 0.1)
-   AND (alpha_word_fraction >= 0.8)
-   AND (stopword_hits >= 1)) AS gopher_pass
-FROM sig
-"""
-
-
-def _q_quality_line_dedup_documents(spark, sf_dir):
-    """C4-style cross-corpus repeated-"line" removal, with 16-token chunks
-    standing in for lines (the corpus has no newlines): chunk map-side,
-    then ONE window shuffle partitioned by the chunk text computes corpus
-    count + first occurrence; keep-first policy. Returns surviving
-    (doc, pos, line) rows."""
-    from bid_evaluation_spark.operators.pipeline import chunk_documents
-    from bid_evaluation_spark.operators.quality import drop_repeated_lines
-
-    df = _t(spark, sf_dir, "documents")
-    lines = chunk_documents(df, chunk_tokens=16, overlap=0).select(
-        "doc_id",
-        F.col("chunk_index").cast("long").alias("pos"),
-        F.col("chunk_text").alias("line"),
-    )
-    kept = drop_repeated_lines(lines, max_occurrences=1, policy="keep_first")
-    return kept.select("doc_id", "pos", "line")
-
-
-_SQL_QUALITY_LINE_DEDUP_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-starts AS (
-  SELECT doc_id, t,
-         unnest(generate_series(1, greatest(len(t), 1), 16)) AS s
-  FROM toks
-),
-chunks AS (
-  SELECT doc_id, CAST((s - 1) // 16 AS BIGINT) AS pos,
-         array_to_string(t[s:s+15], ' ') AS line
-  FROM starts
-),
-marked AS (
-  SELECT doc_id, pos, line,
-         count(*) OVER (PARTITION BY line) AS occ,
-         first_value(doc_id) OVER (PARTITION BY line ORDER BY doc_id, pos) AS f_id,
-         first_value(pos) OVER (PARTITION BY line ORDER BY doc_id, pos) AS f_pos
-  FROM chunks
-)
-SELECT doc_id, pos, line FROM marked
-WHERE occ <= 1 OR (doc_id = f_id AND pos = f_pos)
-"""
-
-
-def _q_text_bm25_topk_documents(spark, sf_dir):
-    """Okapi BM25 top-25 keyword retrieval for a 3-term query. Two corpus
-    passes: one fused stats aggregate (N, avgdl, per-term doc frequency —
-    2+|terms| scalars to the driver), then a map-only scoring pass with
-    JVM-native term counts; top-k via TakeOrdered (no global sort)."""
-    from bid_evaluation_spark.operators.retrieval import bm25_topk
-
-    df = _t(spark, sf_dir, "documents")
-    return bm25_topk(df, ["spark", "join", "hash"], k=25)
-
-
-_SQL_TEXT_BM25_TOPK_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-stats AS (
-  SELECT count(*) AS n, sum(len(t)) AS toks,
-         sum(CAST(list_contains(t, 'spark') AS BIGINT)) AS df1,
-         sum(CAST(list_contains(t, 'join') AS BIGINT)) AS df2,
-         sum(CAST(list_contains(t, 'hash') AS BIGINT)) AS df3
-  FROM toks
-),
-scored AS (
-  SELECT k.doc_id,
-    0.0
-    + ln(1.0 + (CAST(s.n - s.df1 AS DOUBLE) + 0.5) / (CAST(s.df1 AS DOUBLE) + 0.5))
-      * CAST(len(list_filter(k.t, x -> x = 'spark')) AS DOUBLE) * 2.2
-      / (CAST(len(list_filter(k.t, x -> x = 'spark')) AS DOUBLE)
-         + 1.2 * (0.25 + 0.75 * CAST(len(k.t) AS DOUBLE) / (s.toks / s.n)))
-    + ln(1.0 + (CAST(s.n - s.df2 AS DOUBLE) + 0.5) / (CAST(s.df2 AS DOUBLE) + 0.5))
-      * CAST(len(list_filter(k.t, x -> x = 'join')) AS DOUBLE) * 2.2
-      / (CAST(len(list_filter(k.t, x -> x = 'join')) AS DOUBLE)
-         + 1.2 * (0.25 + 0.75 * CAST(len(k.t) AS DOUBLE) / (s.toks / s.n)))
-    + ln(1.0 + (CAST(s.n - s.df3 AS DOUBLE) + 0.5) / (CAST(s.df3 AS DOUBLE) + 0.5))
-      * CAST(len(list_filter(k.t, x -> x = 'hash')) AS DOUBLE) * 2.2
-      / (CAST(len(list_filter(k.t, x -> x = 'hash')) AS DOUBLE)
-         + 1.2 * (0.25 + 0.75 * CAST(len(k.t) AS DOUBLE) / (s.toks / s.n)))
-    AS bm25
-  FROM toks k CROSS JOIN stats s
-)
-SELECT doc_id, round(bm25 * 10000.0) / 10000.0 AS bm25
-FROM scored
-ORDER BY round(bm25 * 10000.0) / 10000.0 DESC, doc_id ASC
-LIMIT 25
-"""
-
-
-def _q_pii_redact_documents(spark, sf_dir):
-    """PII redaction + per-kind counts. The corpus has no PII, so the query
-    first seeds each document with deterministic synthetic identifiers
-    (email always; IP / phone / SSN on doc_id mod 2 / 3 / 5) and then runs
-    the redactor — a map-only chain of regexp_count/regexp_replace in the
-    Java∩RE2 portable regex subset, no shuffle."""
-    from bid_evaluation_spark.operators.pii import redact_pii
-
-    df = _t(spark, sf_dir, "documents")
-    seeded = df.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), F.col("doc_id").cast("string"),
-            F.lit("@example.com"),
-            F.when(F.col("doc_id") % 2 == 0,
-                   F.concat(F.lit(" ip 10."),
-                            (F.col("doc_id") % 256).cast("string"),
-                            F.lit(".0.1"))).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit(" call 555-123-4567")).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.lit(" ssn 123-45-6789")).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return redact_pii(seeded)
-
-
-_SQL_PII_REDACT_DOCUMENTS = """
-WITH seeded AS (
-  SELECT doc_id,
-    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-    || CASE WHEN doc_id % 2 = 0
-            THEN ' ip 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1'
-            ELSE '' END
-    || CASE WHEN doc_id % 3 = 0 THEN ' call 555-123-4567' ELSE '' END
-    || CASE WHEN doc_id % 5 = 0 THEN ' ssn 123-45-6789' ELSE '' END AS text
-  FROM documents
-)
-SELECT doc_id,
-  regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-    '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g'),
-    '\\b\\d{3}-\\d{2}-\\d{4}\\b', '<SSN>', 'g'),
-    '\\b\\d{3}-\\d{3}-\\d{4}\\b', '<PHONE>', 'g') AS text,
-  CAST(len(regexp_extract_all(text,
-    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-  CAST(len(regexp_extract_all(text,
-    '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS BIGINT) AS n_ipv4,
-  CAST(len(regexp_extract_all(text,
-    '\\b\\d{3}-\\d{2}-\\d{4}\\b')) AS BIGINT) AS n_ssn,
-  CAST(len(regexp_extract_all(text,
-    '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS BIGINT) AS n_phone
-FROM seeded
-"""
-
-
-# ---------------------------------------------------------------------------
 # embedding maintenance (operators/embeddings.py) + split/exact-k sampling
 # ---------------------------------------------------------------------------
-
-def _q_emb_l2norm_embeddings(spark, sf_dir):
-    """L2 normalization — per-vector norm plus order-insensitive summaries of
-    the normalized vector (sum and max touch every element, so any wrong
-    element flips the hash)."""
-    from bid_evaluation_spark.operators.embeddings import l2_normalize
-
-    df = _t(spark, sf_dir, "embeddings")
-    res = l2_normalize(df)
-    unit_sum = F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + x)
-    return res.select(
-        "vec_id",
-        _r4("norm").alias("norm"),
-        _r4(unit_sum).alias("unit_sum"),
-        _r4(F.array_max(F.col("embedding"))).alias("unit_max"),
-    )
-
-
-_SQL_EMB_L2NORM_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-n AS (SELECT vec_id, e,
-        sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-u AS (SELECT vec_id, nrm,
-        CASE WHEN nrm = 0 THEN e ELSE list_transform(e, x -> x / nrm) END AS ue
-      FROM n)
-SELECT vec_id,
-  round(nrm * 10000.0) / 10000.0 AS norm,
-  round(list_sum(ue) * 10000.0) / 10000.0 AS unit_sum,
-  round(list_max(ue) * 10000.0) / 10000.0 AS unit_max
-FROM u
-"""
-
-
-def _q_emb_quantize_embeddings(spark, sf_dir):
-    """Symmetric int8 quantization round-trip: scale, exact integer sum /
-    max-abs of the codes (bit-exact cross-engine), and the reconstruction
-    ∞-norm error (×1000 before rounding so the 4-decimal hash keeps signal
-    at typical scale/2 magnitudes)."""
-    from bid_evaluation_spark.operators.embeddings import (
-        dequantize_int8, quantization_error, quantize_int8)
-
-    df = _t(spark, sf_dir, "embeddings")
-    res = quantization_error(dequantize_int8(quantize_int8(df)))
-    q = F.col("q_embedding")
-    return res.select(
-        "vec_id",
-        _r4("q_scale").alias("q_scale"),
-        F.aggregate(q, F.lit(0).cast("long"),
-                    lambda a, x: a + x.cast("long")).alias("q_sum"),
-        F.array_max(F.transform(q, lambda x: F.abs(x)))
-         .cast("long").alias("q_maxabs"),
-        _r4(F.col("max_abs_err") * F.lit(1000.0)).alias("err_x1000"),
-    )
-
-
-_SQL_EMB_QUANTIZE_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-s AS (SELECT vec_id, e,
-        CASE WHEN list_max(list_transform(e, x -> abs(x))) = 0 THEN 1.0
-             ELSE list_max(list_transform(e, x -> abs(x))) / 127.0
-        END AS scale
-      FROM v),
-q AS (SELECT vec_id, e, scale,
-        list_transform(e, x -> CAST(round(x / scale) AS INT)) AS qe
-      FROM s)
-SELECT vec_id,
-  round(scale * 10000.0) / 10000.0 AS q_scale,
-  CAST(list_sum(qe) AS BIGINT) AS q_sum,
-  CAST(list_max(list_transform(qe, x -> abs(x))) AS BIGINT) AS q_maxabs,
-  round(list_max(list_transform(generate_series(1, len(e)),
-                                i -> abs(e[i] - qe[i] * scale)))
-        * 1000.0 * 10000.0) / 10000.0 AS err_x1000
-FROM q
-"""
-
-
-def _q_retrieval_rrf_hybrid_documents(spark, sf_dir):
-    """Hybrid retrieval via Reciprocal Rank Fusion (retrieval.py rrf_fuse,
-    Cormack et al. SIGIR 2009): lexical BM25 top-100 for
-    ['spark','join','hash'] fused with the vector top-100 (cosine vs query
-    vec 0, doc_id ≡ vec_id) — ``Σ 1/(60+rank)``, scale-free. Fusion is a
-    union of bounded candidate lists + ONE partial-agg groupBy (no join,
-    no window); the oracle replays both rankings and the fused sum."""
-    from pyspark.sql import Window
-
-    from bid_evaluation_spark.operators.retrieval import bm25_scores, rrf_fuse
-    from bid_evaluation_spark.operators.similarity import cosine_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
-
-    scored = bm25_scores(docs, ["spark", "join", "hash"])
-    r4 = F.round(F.col("bm25") * 10000) / 10000
-    w = Window.orderBy(r4.desc(), F.col("doc_id").asc())
-    lex = (scored.select("doc_id", F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= 100))
-
-    sem = (cosine_topk(emb.filter(F.col("vec_id") == 0), emb, k=100)
-           .select(F.col("neighbor_id").alias("doc_id"),
-                   F.col("rnk").alias("rank")))
-
-    res = rrf_fuse([lex, sem], k=60, top_n=50)
-    return res.select(
-        "doc_id",
-        (F.round(F.col("rrf_score") * F.lit(1e6)) / F.lit(1e6)
-         + F.lit(0.0)).alias("rrf_score"),
-        F.col("n_lists").cast("long").alias("n_lists"),
-        F.col("best_rank").cast("long").alias("best_rank"))
-
-
-_SQL_RETRIEVAL_RRF_HYBRID_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-stats AS (
-  SELECT count(*) AS n, sum(len(t)) AS toks,
-         sum(CAST(list_contains(t, 'spark') AS BIGINT)) AS df1,
-         sum(CAST(list_contains(t, 'join') AS BIGINT)) AS df2,
-         sum(CAST(list_contains(t, 'hash') AS BIGINT)) AS df3
-  FROM toks
-),
-scored AS (
-  SELECT k.doc_id,
-    0.0
-    + ln(1.0 + (CAST(s.n - s.df1 AS DOUBLE) + 0.5) / (CAST(s.df1 AS DOUBLE) + 0.5))
-      * CAST(len(list_filter(k.t, x -> x = 'spark')) AS DOUBLE) * 2.2
-      / (CAST(len(list_filter(k.t, x -> x = 'spark')) AS DOUBLE)
-         + 1.2 * (0.25 + 0.75 * CAST(len(k.t) AS DOUBLE) / (s.toks / s.n)))
-    + ln(1.0 + (CAST(s.n - s.df2 AS DOUBLE) + 0.5) / (CAST(s.df2 AS DOUBLE) + 0.5))
-      * CAST(len(list_filter(k.t, x -> x = 'join')) AS DOUBLE) * 2.2
-      / (CAST(len(list_filter(k.t, x -> x = 'join')) AS DOUBLE)
-         + 1.2 * (0.25 + 0.75 * CAST(len(k.t) AS DOUBLE) / (s.toks / s.n)))
-    + ln(1.0 + (CAST(s.n - s.df3 AS DOUBLE) + 0.5) / (CAST(s.df3 AS DOUBLE) + 0.5))
-      * CAST(len(list_filter(k.t, x -> x = 'hash')) AS DOUBLE) * 2.2
-      / (CAST(len(list_filter(k.t, x -> x = 'hash')) AS DOUBLE)
-         + 1.2 * (0.25 + 0.75 * CAST(len(k.t) AS DOUBLE) / (s.toks / s.n)))
-    AS bm25
-  FROM toks k CROSS JOIN stats s
-),
-lex AS (
-  SELECT doc_id,
-    row_number() OVER (ORDER BY round(bm25 * 10000.0) / 10000.0 DESC,
-                       doc_id ASC) AS rank
-  FROM scored
-  QUALIFY rank <= 100
-),
-v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-sims AS (
-  SELECT v.vec_id AS doc_id,
-    list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i]*v.e[i]))
-      / (sqrt(list_sum(list_transform(q.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(v.e, x -> x*x)))) AS cosine
-  FROM (SELECT e FROM v WHERE vec_id = 0) q CROSS JOIN v
-  WHERE v.vec_id != 0
-),
-sem AS (
-  SELECT doc_id,
-    row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS rank
-  FROM sims
-  QUALIFY rank <= 100
-),
-u AS (SELECT * FROM lex UNION ALL SELECT * FROM sem),
-f AS (
-  SELECT doc_id, sum(1.0 / (60.0 + CAST(rank AS DOUBLE))) AS s,
-         count(*) AS n_lists, min(rank) AS best_rank
-  FROM u GROUP BY doc_id
-)
-SELECT doc_id,
-  round(s * 1000000.0) / 1000000.0 + 0.0 AS rrf_score,
-  CAST(n_lists AS BIGINT) AS n_lists,
-  CAST(best_rank AS BIGINT) AS best_rank
-FROM f
-ORDER BY round(s * 1000000000.0) / 1000000000.0 DESC, doc_id ASC
-LIMIT 50
-"""
-
-
-def _q_pq_encode_embeddings(spark, sf_dir):
-    """Product-quantization encode (operators/pq.py, Jégou et al. TPAMI
-    2011): 64-dim vectors → 8 subspaces × 16-entry codebook, argmin per
-    subspace as a pure codegen expression (ordered-fold squared L2,
-    first-min tie-break). Codebook is the closed-form formula
-    ``((c·7+t·3+j·5) mod 13 − 6)/4`` so the oracle replays it as integer
-    arithmetic — no literal tables, no FP transport."""
-    from bid_evaluation_spark.operators.pq import formula_codebook, pq_encode
-
-    emb = _t(spark, sf_dir, "embeddings")
-    res = pq_encode(emb, formula_codebook(8, 16, 8))
-    return res.select("vec_id", F.col("subspace").cast("long").alias("subspace"),
-                      F.col("code").cast("long").alias("code"))
-
-
-_SQL_PQ_DISTS = """
-dists AS (
-  SELECT e.vec_id, j.j AS subspace, c.c AS code,
-    list_sum(list_transform(generate_series(1, 8), t ->
-      (CAST(e.embedding[j.j * 8 + t] AS DOUBLE)
-         - (((c.c * 7 + (t - 1) * 3 + j.j * 5) % 13) - 6) / 4.0)
-      * (CAST(e.embedding[j.j * 8 + t] AS DOUBLE)
-         - (((c.c * 7 + (t - 1) * 3 + j.j * 5) % 13) - 6) / 4.0))) AS d
-  FROM embeddings e,
-       (SELECT unnest(generate_series(0, 7)) AS j) j,
-       (SELECT unnest(generate_series(0, 15)) AS c) c
-)
-"""
-
-_SQL_PQ_ENCODE_EMBEDDINGS = f"""
-WITH {_SQL_PQ_DISTS.strip()}
-SELECT vec_id, CAST(subspace AS BIGINT) AS subspace,
-  CAST(min(code) FILTER (WHERE d = md) AS BIGINT) AS code
-FROM (SELECT vec_id, subspace, code, d,
-             min(d) OVER (PARTITION BY vec_id, subspace) AS md
-      FROM dists)
-GROUP BY vec_id, subspace
-"""
-
-
-def _q_pq_adc_topk_embeddings(spark, sf_dir):
-    """PQ asymmetric-distance top-5: exact query subvectors vs the
-    compressed corpus codes — per-query LUT exploded and broadcast, ONE
-    (subspace, code) equi-join, sum-agg, rank window on the
-    1e-6-quantized distance with id tie-break. The oracle replays encode
-    + LUT + the same quantized ranking."""
-    from bid_evaluation_spark.operators.pq import (formula_codebook,
-                                                   pq_adc_topk, pq_encode)
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cb = formula_codebook(8, 16, 8)
-    codes = pq_encode(emb, cb)
-    res = pq_adc_topk(emb.filter(F.col("vec_id") < 8), codes, cb, k=5)
-    return res.select("query_id", "neighbor_id",
-                      (_r4("adc_dist") + F.lit(0.0)).alias("adc_dist"),
-                      F.col("rank").cast("long").alias("rank"))
-
-
-_SQL_PQ_ADC_TOPK_EMBEDDINGS = f"""
-WITH {_SQL_PQ_DISTS.strip()},
-codes AS (
-  SELECT vec_id, subspace,
-    min(code) FILTER (WHERE d = md) AS code
-  FROM (SELECT vec_id, subspace, code, d,
-               min(d) OVER (PARTITION BY vec_id, subspace) AS md
-        FROM dists)
-  GROUP BY vec_id, subspace
-),
-lut AS (
-  SELECT vec_id AS query_id, subspace, code, d
-  FROM dists WHERE vec_id < 8
-),
-cand AS (
-  SELECT l.query_id, k.vec_id AS neighbor_id, sum(l.d) AS adc_dist
-  FROM codes k JOIN lut l
-    ON l.subspace = k.subspace AND l.code = k.code
-  WHERE l.query_id <> k.vec_id
-  GROUP BY l.query_id, k.vec_id
-)
-SELECT query_id, neighbor_id,
-  round(adc_dist * 10000.0) / 10000.0 + 0.0 AS adc_dist,
-  CAST(rank AS BIGINT) AS rank
-FROM (
-  SELECT query_id, neighbor_id, adc_dist,
-    row_number() OVER (PARTITION BY query_id
-                       ORDER BY round(adc_dist * 1000000.0) / 1000000.0,
-                                neighbor_id) AS rank
-  FROM cand)
-WHERE rank <= 5
-"""
-
-
-def _q_pq_ivfpq_topk_embeddings(spark, sf_dir):
-    """IVF-PQ composed ANN (operators/pq.py ivfpq_topk): corpus as
-    (coarse list, PQ code), queries probe 4 of 16 lists, ADC scores only
-    probed candidates — the canonical compressed 100-TB ANN layout. All
-    codegen + equi-joins; coarse centroids AND codebooks are closed-form
-    formulas, so the oracle replays assignment, probing, and ADC
-    end-to-end in integer arithmetic."""
-    from bid_evaluation_spark.operators.pq import (formula_coarse,
-                                                   formula_codebook,
-                                                   ivfpq_topk)
-
-    emb = _t(spark, sf_dir, "embeddings")
-    res = ivfpq_topk(emb.filter(F.col("vec_id") < 8), emb,
-                     formula_coarse(16, 64), formula_codebook(8, 16, 8),
-                     k=5, nprobe=4)
-    return res.select("query_id", "neighbor_id",
-                      (_r4("adc_dist") + F.lit(0.0)).alias("adc_dist"),
-                      F.col("rank").cast("long").alias("rank"))
-
-
-_SQL_PQ_IVFPQ_TOPK_EMBEDDINGS = f"""
-WITH {_SQL_PQ_DISTS.strip()},
-codes AS (
-  SELECT vec_id, subspace,
-    min(code) FILTER (WHERE d = md) AS code
-  FROM (SELECT vec_id, subspace, code, d,
-               min(d) OVER (PARTITION BY vec_id, subspace) AS md
-        FROM dists)
-  GROUP BY vec_id, subspace
-),
-cdists AS (
-  SELECT e.vec_id, c.c AS list_id,
-    list_sum(list_transform(generate_series(1, 64), t ->
-      (CAST(e.embedding[t] AS DOUBLE)
-         - (((c.c * 11 + (t - 1) * 7) % 19) - 9) / 3.0)
-      * (CAST(e.embedding[t] AS DOUBLE)
-         - (((c.c * 11 + (t - 1) * 7) % 19) - 9) / 3.0))) AS d
-  FROM embeddings e, (SELECT unnest(generate_series(0, 15)) AS c) c
-),
-assign AS (
-  SELECT vec_id, list_id
-  FROM (SELECT vec_id, list_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d, list_id) AS rn
-        FROM cdists)
-  WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, list_id
-  FROM (SELECT vec_id, list_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d, list_id) AS rn
-        FROM cdists WHERE vec_id < 8)
-  WHERE rn <= 4
-),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assign a USING (list_id)
-  WHERE p.query_id <> a.vec_id
-),
-adc AS (
-  SELECT c.query_id, c.neighbor_id, sum(l.d) AS adc_dist
-  FROM cand c
-  JOIN codes k ON k.vec_id = c.neighbor_id
-  JOIN (SELECT vec_id AS query_id, subspace, code, d
-        FROM dists WHERE vec_id < 8) l
-    ON l.query_id = c.query_id
-   AND l.subspace = k.subspace AND l.code = k.code
-  GROUP BY c.query_id, c.neighbor_id
-)
-SELECT query_id, neighbor_id,
-  round(adc_dist * 10000.0) / 10000.0 + 0.0 AS adc_dist,
-  CAST(rank AS BIGINT) AS rank
-FROM (
-  SELECT query_id, neighbor_id, adc_dist,
-    row_number() OVER (PARTITION BY query_id
-                       ORDER BY round(adc_dist * 1000000.0) / 1000000.0,
-                                neighbor_id) AS rank
-  FROM adc)
-WHERE rank <= 5
-"""
-
-
-def _q_dedup_span_stats_documents(spark, sf_dir):
-    """Span-level exact-substring duplication (operators/spans.py, Lee et
-    al. ACL 2022): strided 10-token windows, corpus-wide hash counts,
-    keep-first policy — a span occurrence is duplicated iff the same hash
-    appears earlier in (doc, pos) order. One groupBy(hash) + one join +
-    one per-doc agg; the oracle replays windows, md5 hashes, packed keys
-    and ratios exactly."""
-    from bid_evaluation_spark.operators.spans import duplicated_span_stats
-
-    docs = _t(spark, sf_dir, "documents")
-    res = duplicated_span_stats(docs, span=10, stride=5)
-    return res.select("doc_id",
-                      F.col("n_spans").cast("long").alias("n_spans"),
-                      F.col("n_dup_spans").cast("long").alias("n_dup_spans"),
-                      (_r4("dup_ratio") + F.lit(0.0)).alias("dup_ratio"))
-
-
-_SQL_DEDUP_SPAN_STATS_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-occ AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-    CAST(('0x' || substr(md5(array_to_string(t[i:i+9], ' ') || 'span'),
-                         1, 15)) AS BIGINT) AS h,
-    doc_id * 1073741824 + CAST(i AS BIGINT) AS key
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 9, 5)) AS i
-        FROM toks WHERE len(t) >= 10)
-),
-firsts AS (
-  SELECT h, count(*) AS n_occ, min(key) AS first
-  FROM occ GROUP BY h
-),
-perdoc AS (
-  SELECT o.doc_id, count(*) AS n_spans,
-         sum(CAST(o.key > f.first AS BIGINT)) AS n_dup
-  FROM occ o JOIN firsts f USING (h)
-  GROUP BY o.doc_id
-)
-SELECT d.doc_id,
-  CAST(COALESCE(p.n_spans, 0) AS BIGINT) AS n_spans,
-  CAST(COALESCE(p.n_dup, 0) AS BIGINT) AS n_dup_spans,
-  round(CASE WHEN COALESCE(p.n_spans, 0) > 0
-             THEN CAST(p.n_dup AS DOUBLE) / CAST(p.n_spans AS DOUBLE)
-             ELSE 0.0 END * 10000.0) / 10000.0 + 0.0 AS dup_ratio
-FROM documents d LEFT JOIN perdoc p USING (doc_id)
-"""
-
-
-def _q_dedup_span_removal_documents(spark, sf_dir):
-    """ExactSubstr REMOVAL (operators/spans.py remove_duplicated_spans
-    — the Lee et al. dedup OUTPUT, beyond the r8 statistic): strided
-    10-token windows, keep-first marking, every covered token cut, doc
-    reassembled natively (transform/filter/exists — no Python, no
-    window). Oracle: full first-principles replay — DuckDB rebuilds
-    windows, md5 hashes, packed keep-first keys, duplicated starts,
-    interval coverage, and the surviving-token string_agg, so the
-    CLEAN TEXT ITSELF is value-compared, not just counts."""
-    from bid_evaluation_spark.operators.spans import (
-        remove_duplicated_spans)
-
-    docs = _t(spark, sf_dir, "documents")
-    return remove_duplicated_spans(docs, span=10, stride=3)
-
-
-_SQL_DEDUP_SPAN_REMOVAL_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-occ AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-    CAST(('0x' || substr(md5(array_to_string(t[i:i+9], ' ') || 'span'),
-                         1, 15)) AS BIGINT) AS h,
-    doc_id * 1073741824 + CAST(i AS BIGINT) AS key
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 9, 3)) AS i
-        FROM toks WHERE len(t) >= 10)
-),
-firsts AS (SELECT h, min(key) AS first FROM occ GROUP BY h),
-dups AS (
-  SELECT o.doc_id, o.pos FROM occ o JOIN firsts f USING (h)
-  WHERE o.key > f.first
-),
-tok_idx AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS i, t[i] AS tok
-  FROM toks, unnest(generate_series(1, len(t))) AS s(i)
-),
-covered AS (
-  SELECT DISTINCT ti.doc_id, ti.i
-  FROM tok_idx ti JOIN dups d
-    ON d.doc_id = ti.doc_id AND ti.i >= d.pos AND ti.i < d.pos + 10
-),
-kept AS (
-  SELECT ti.doc_id, ti.i, ti.tok
-  FROM tok_idx ti ANTI JOIN covered c
-    ON ti.doc_id = c.doc_id AND ti.i = c.i
-),
-agg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text,
-         COUNT(*) AS n_kept
-  FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id,
-       COALESCE(a.clean_text, '') AS clean_text,
-       CAST(len(t.t) AS BIGINT) AS n_tokens,
-       CAST(len(t.t) - COALESCE(a.n_kept, 0) AS BIGINT)
-         AS n_removed_tokens
-FROM toks t LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def _q_privacy_ccn_luhn_documents(spark, sf_dir):
-    """Checksum-VALIDATED payment-card redaction (operators/pii.py
-    redact_ccn — candidates by regex, Luhn as native transform/
-    aggregate math, only validated numbers redacted): per doc a text
-    carrying one VALID 16-digit card (check digit computed by Luhn
-    over base digits (doc_id + 7i) % 10) and one INVALID twin (check
-    digit +5 mod 10 — always breaks the checksum since the rightmost
-    digit is undoubled). The valid one must be replaced, the invalid
-    one must SURVIVE — the false-positive discipline a pure-regex
-    redactor cannot express. Oracle: FIRST-PRINCIPLES — DuckDB
-    recomputes the Luhn check digit with its own list math and
-    rebuilds the exact redacted text."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    base_digits = F.transform(F.sequence(F.lit(1), F.lit(15)),
-                              lambda i: (d + i * 7) % 10)
-    luhn_sum = F.aggregate(
-        F.transform(F.sequence(F.lit(1), F.lit(15)),
-                    lambda i: F.when(
-                        i % 2 == 1,
-                        F.when(((d + i * 7) % 10) * 2 > 9,
-                               ((d + i * 7) % 10) * 2 - 9)
-                        .otherwise(((d + i * 7) % 10) * 2))
-                    .otherwise((d + i * 7) % 10)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    b15 = F.array_join(F.transform(base_digits,
-                                   lambda x: x.cast("string")), "")
-    chk = (10 - luhn_sum % 10) % 10
-    text = F.concat(F.lit("payment card "), b15,
-                    chk.cast("string"), F.lit(" backup "), b15,
-                    ((chk + 5) % 10).cast("string"), F.lit(" end"))
-    from bid_evaluation_spark.operators.pii import redact_ccn
-
-    fixture = docs.select("doc_id", text.alias("text"))
-    return redact_ccn(fixture)
-
-
-_SQL_PRIVACY_CCN_LUHN_DOCUMENTS = """
-WITH lu AS (
-  SELECT doc_id,
-    array_to_string(list_transform(generate_series(1, 15),
-                                   i -> (doc_id + i*7) % 10), '') AS b15,
-    list_sum(list_transform(generate_series(1, 15), i ->
-      CASE WHEN i % 2 = 1 THEN
-        CASE WHEN 2 * ((doc_id + i*7) % 10) > 9
-             THEN 2 * ((doc_id + i*7) % 10) - 9
-             ELSE 2 * ((doc_id + i*7) % 10) END
-      ELSE (doc_id + i*7) % 10 END)) AS s
-  FROM documents
-)
-SELECT doc_id,
-  'payment card <CCN> backup ' || b15
-    || CAST(((10 - s % 10) % 10 + 5) % 10 AS VARCHAR)
-    || ' end' AS text,
-  CAST(2 AS BIGINT) AS n_ccn_candidates,
-  CAST(1 AS BIGINT) AS n_ccn_valid
-FROM lu
-"""
-
-
-def _q_emb_matryoshka_embeddings(spark, sf_dir):
-    """Matryoshka truncation to 16 dims + renorm (operators/embeddings.py,
-    arXiv:2205.13147): map-only projection; order-insensitive summaries
-    (sum/max of the renormalized head) make any wrong element flip the
-    hash — same verification shape as emb_l2norm."""
-    from bid_evaluation_spark.operators.embeddings import matryoshka_truncate
-
-    df = _t(spark, sf_dir, "embeddings")
-    res = matryoshka_truncate(df, dim=16, out_col="head16")
-    s = F.aggregate(F.col("head16"), F.lit(0.0), lambda a, x: a + x)
-    return res.select(
-        "vec_id",
-        F.size("head16").cast("long").alias("head_dim"),
-        _r4(s).alias("head_sum"),
-        _r4(F.array_max(F.col("head16"))).alias("head_max"))
-
-
-_SQL_EMB_MATRYOSHKA_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-h AS (SELECT vec_id, e[1:16] AS t FROM v WHERE len(e) >= 16),
-n AS (SELECT vec_id, t,
-        sqrt(list_sum(list_transform(t, x -> x * x))) AS nrm FROM h),
-u AS (SELECT vec_id,
-        CASE WHEN nrm = 0.0 THEN t
-             ELSE list_transform(t, x -> x / nrm) END AS t
-      FROM n)
-SELECT vec_id, CAST(len(t) AS BIGINT) AS head_dim,
-  round(list_sum(t) * 10000.0) / 10000.0 AS head_sum,
-  round(list_max(t) * 10000.0) / 10000.0 AS head_max
-FROM u
-"""
-
-
-def _q_pipe_neyman_orders(spark, sf_dir):
-    """Neyman-optimal stratified allocation (pipeline.py): 1000-row budget
-    across order priorities ∝ N_h·S_h, largest-remainder rounding on the
-    1e-9-quantized fractional part, stddev quantized to 1e-6 before use
-    (engine low-order-bit drift). The oracle replays counts, stddevs, and
-    every rounding step."""
-    from bid_evaluation_spark.operators.pipeline import neyman_allocation
-
-    orders = _t(spark, sf_dir, "orders")
-    res = neyman_allocation(orders, "o_orderpriority", "o_totalprice",
-                            budget=1000)
-    return res.select(F.col("o_orderpriority"), "n_rows",
-                      _r4("stddev").alias("stddev"), "alloc")
-
-
-_SQL_PIPE_NEYMAN_ORDERS = """
-WITH g AS (
-  SELECT o_orderpriority, count(*) AS n_rows,
-         stddev_samp(o_totalprice) AS sd,
-         round(COALESCE(stddev_samp(o_totalprice), 0.0) * 1000000.0)
-           / 1000000.0 AS sq
-  FROM orders GROUP BY o_orderpriority
-),
-w AS (
-  SELECT *, n_rows * sq AS w0,
-         sum(n_rows * sq) OVER () AS tot0
-  FROM g
-),
-w2 AS (
-  SELECT *, CASE WHEN tot0 > 0 THEN w0
-                 ELSE CAST(n_rows AS DOUBLE) END AS wf
-  FROM w
-),
-r AS (
-  SELECT *, 1000.0 * wf / sum(wf) OVER () AS raw
-  FROM w2
-),
-b AS (
-  SELECT *, least(n_rows, CAST(floor(raw) AS BIGINT)) AS base,
-         round((raw - floor(raw)) * 1000000000.0) / 1000000000.0 AS frac
-  FROM r
-),
-fin AS (
-  SELECT *, 1000 - sum(base) OVER () AS leftover,
-         row_number() OVER (ORDER BY (base < n_rows) DESC, frac DESC,
-                            o_orderpriority ASC) AS rn
-  FROM b
-)
-SELECT o_orderpriority, CAST(n_rows AS BIGINT) AS n_rows,
-  round(sd * 10000.0) / 10000.0 AS stddev,
-  CAST(base + (CASE WHEN rn <= leftover AND base < n_rows
-                    THEN 1 ELSE 0 END) AS BIGINT) AS alloc
-FROM fin
-"""
-
-
-def _q_fuzzy_fellegi_sunter_customer(spark, sf_dir):
-    """Fellegi-Sunter record-linkage scoring (fuzzy.py
-    fellegi_sunter_score): deterministic candidate pairs (custkey,
-    custkey+750), three field comparisons (segment equality, balance
-    within 100, nation equality) under pinned m/u probabilities —
-    log-likelihood-ratio sum and link/possible/non_link classes. The
-    oracle replays every agreement predicate and ln(m/u) weight."""
-    from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_score
-
-    c = _t(spark, sf_dir, "customer")
-    a = c.select(*[F.col(x).alias(f"a_{x}") for x in c.columns])
-    b = c.select(*[F.col(x).alias(f"b_{x}") for x in c.columns])
-    pairs = (a.join(b, F.col("a_c_custkey") + 750 == F.col("b_c_custkey"))
-             .select(F.col("a_c_custkey").alias("a_id"),
-                     F.col("b_c_custkey").alias("b_id"),
-                     "a_c_mktsegment", "b_c_mktsegment",
-                     "a_c_acctbal", "b_c_acctbal",
-                     "a_c_nationkey", "b_c_nationkey"))
-    res = fellegi_sunter_score(pairs, {
-        "segment": (F.col("a_c_mktsegment") == F.col("b_c_mktsegment"),
-                    0.9, 0.2),
-        "balance": (F.abs(F.col("a_c_acctbal") - F.col("b_c_acctbal"))
-                    <= 100.0, 0.8, 0.05),
-        "nation": (F.col("a_c_nationkey") == F.col("b_c_nationkey"),
-                   0.95, 0.04),
-    }, lower=0.0, upper=2.0)
-    return res.select("a_id", "b_id",
-                      (_r4("fs_score") + F.lit(0.0)).alias("fs_score"),
-                      "fs_class")
-
-
-_SQL_FUZZY_FELLEGI_SUNTER_CUSTOMER = """
-WITH pairs AS (
-  SELECT a.c_custkey AS a_id, b.c_custkey AS b_id,
-    (a.c_mktsegment = b.c_mktsegment) AS agree_seg,
-    (abs(a.c_acctbal - b.c_acctbal) <= 100.0) AS agree_bal,
-    (a.c_nationkey = b.c_nationkey) AS agree_nat
-  FROM customer a JOIN customer b ON a.c_custkey + 750 = b.c_custkey
-),
-scored AS (
-  SELECT a_id, b_id,
-    0.0
-    + (CASE WHEN COALESCE(agree_seg, FALSE) THEN ln(0.9 / 0.2)
-            ELSE ln((1.0 - 0.9) / (1.0 - 0.2)) END)
-    + (CASE WHEN COALESCE(agree_bal, FALSE) THEN ln(0.8 / 0.05)
-            ELSE ln((1.0 - 0.8) / (1.0 - 0.05)) END)
-    + (CASE WHEN COALESCE(agree_nat, FALSE) THEN ln(0.95 / 0.04)
-            ELSE ln((1.0 - 0.95) / (1.0 - 0.04)) END) AS fs_score
-  FROM pairs
-)
-SELECT a_id, b_id,
-  round(fs_score * 10000.0) / 10000.0 + 0.0 AS fs_score,
-  CASE WHEN fs_score >= 2.0 THEN 'link'
-       WHEN fs_score >= 0.0 THEN 'possible'
-       ELSE 'non_link' END AS fs_class
-FROM scored
-"""
-
-
-def _q_fuzzy_fs_em_customer(spark, sf_dir):
-    """Unsupervised EM fit of Fellegi-Sunter m/u (fuzzy.py
-    fellegi_sunter_em): 2 rounds over the deterministic customer pairs —
-    training IS aggregation (one fused agg per round, 7 scalars to the
-    driver). The oracle unrolls both E/M rounds as CTE chains with the
-    identical literal arithmetic (the logreg 2-round-GD oracle pattern)."""
-    from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_em
-
-    c = _t(spark, sf_dir, "customer")
-    a = c.select(*[F.col(x).alias(f"a_{x}") for x in c.columns])
-    b = c.select(*[F.col(x).alias(f"b_{x}") for x in c.columns])
-    pairs = a.join(b, F.col("a_c_custkey") + 750 == F.col("b_c_custkey"))
-    res = fellegi_sunter_em(pairs, {
-        "segment": F.col("a_c_mktsegment") == F.col("b_c_mktsegment"),
-        "balance": F.abs(F.col("a_c_acctbal") - F.col("b_c_acctbal"))
-        <= 100.0,
-        "nation": F.col("a_c_nationkey") == F.col("b_c_nationkey"),
-    }, init_m=0.8, init_u=0.1, init_p=0.3, rounds=2)
-    return res.select("field", (_r4("m") + F.lit(0.0)).alias("m"),
-                      (_r4("u") + F.lit(0.0)).alias("u"),
-                      (_r4("p") + F.lit(0.0)).alias("p"),
-                      "n_pairs", "rounds")
-
-
-_SQL_FUZZY_FS_EM_CUSTOMER = """
-WITH flags AS (
-  SELECT
-    CAST(COALESCE(a.c_mktsegment = b.c_mktsegment, FALSE) AS DOUBLE) AS a0,
-    CAST(COALESCE(abs(a.c_acctbal - b.c_acctbal) <= 100.0, FALSE)
-         AS DOUBLE) AS a1,
-    CAST(COALESCE(a.c_nationkey = b.c_nationkey, FALSE) AS DOUBLE) AS a2
-  FROM customer a JOIN customer b ON a.c_custkey + 750 = b.c_custkey
-),
-g1 AS (
-  SELECT a0, a1, a2,
-    (0.3 * (a0 * 0.8 + (1.0 - a0) * (1.0 - 0.8))
-         * (a1 * 0.8 + (1.0 - a1) * (1.0 - 0.8))
-         * (a2 * 0.8 + (1.0 - a2) * (1.0 - 0.8)))
-    / ((0.3 * (a0 * 0.8 + (1.0 - a0) * (1.0 - 0.8))
-            * (a1 * 0.8 + (1.0 - a1) * (1.0 - 0.8))
-            * (a2 * 0.8 + (1.0 - a2) * (1.0 - 0.8)))
-       + ((1.0 - 0.3) * (a0 * 0.1 + (1.0 - a0) * (1.0 - 0.1))
-              * (a1 * 0.1 + (1.0 - a1) * (1.0 - 0.1))
-              * (a2 * 0.1 + (1.0 - a2) * (1.0 - 0.1)))) AS g
-  FROM flags
-),
-s1 AS (
-  SELECT count(*) AS n, sum(g) AS sg,
-    sum(g * a0) AS sga0, sum((1.0 - g) * a0) AS sua0,
-    sum(g * a1) AS sga1, sum((1.0 - g) * a1) AS sua1,
-    sum(g * a2) AS sga2, sum((1.0 - g) * a2) AS sua2
-  FROM g1
-),
-p1 AS (
-  SELECT n,
-    least(greatest(sga0 / sg, 0.000001), 1.0 - 0.000001) AS m0,
-    least(greatest(sua0 / (n - sg), 0.000001), 1.0 - 0.000001) AS u0,
-    least(greatest(sga1 / sg, 0.000001), 1.0 - 0.000001) AS m1,
-    least(greatest(sua1 / (n - sg), 0.000001), 1.0 - 0.000001) AS u1,
-    least(greatest(sga2 / sg, 0.000001), 1.0 - 0.000001) AS m2,
-    least(greatest(sua2 / (n - sg), 0.000001), 1.0 - 0.000001) AS u2,
-    least(greatest(sg / n, 0.000001), 1.0 - 0.000001) AS p
-  FROM s1
-),
-g2 AS (
-  SELECT f.a0, f.a1, f.a2,
-    (q.p * (f.a0 * q.m0 + (1.0 - f.a0) * (1.0 - q.m0))
-         * (f.a1 * q.m1 + (1.0 - f.a1) * (1.0 - q.m1))
-         * (f.a2 * q.m2 + (1.0 - f.a2) * (1.0 - q.m2)))
-    / ((q.p * (f.a0 * q.m0 + (1.0 - f.a0) * (1.0 - q.m0))
-           * (f.a1 * q.m1 + (1.0 - f.a1) * (1.0 - q.m1))
-           * (f.a2 * q.m2 + (1.0 - f.a2) * (1.0 - q.m2)))
-       + ((1.0 - q.p) * (f.a0 * q.u0 + (1.0 - f.a0) * (1.0 - q.u0))
-              * (f.a1 * q.u1 + (1.0 - f.a1) * (1.0 - q.u1))
-              * (f.a2 * q.u2 + (1.0 - f.a2) * (1.0 - q.u2)))) AS g
-  FROM flags f, p1 q
-),
-s2 AS (
-  SELECT count(*) AS n, sum(g) AS sg,
-    sum(g * a0) AS sga0, sum((1.0 - g) * a0) AS sua0,
-    sum(g * a1) AS sga1, sum((1.0 - g) * a1) AS sua1,
-    sum(g * a2) AS sga2, sum((1.0 - g) * a2) AS sua2
-  FROM g2
-),
-p2 AS (
-  SELECT n,
-    least(greatest(sga0 / sg, 0.000001), 1.0 - 0.000001) AS m0,
-    least(greatest(sua0 / (n - sg), 0.000001), 1.0 - 0.000001) AS u0,
-    least(greatest(sga1 / sg, 0.000001), 1.0 - 0.000001) AS m1,
-    least(greatest(sua1 / (n - sg), 0.000001), 1.0 - 0.000001) AS u1,
-    least(greatest(sga2 / sg, 0.000001), 1.0 - 0.000001) AS m2,
-    least(greatest(sua2 / (n - sg), 0.000001), 1.0 - 0.000001) AS u2,
-    least(greatest(sg / n, 0.000001), 1.0 - 0.000001) AS p
-  FROM s2
-)
-SELECT v.field,
-  round(v.m * 10000.0) / 10000.0 + 0.0 AS m,
-  round(v.u * 10000.0) / 10000.0 + 0.0 AS u,
-  round(p2.p * 10000.0) / 10000.0 + 0.0 AS p,
-  CAST(p2.n AS BIGINT) AS n_pairs, CAST(2 AS BIGINT) AS rounds
-FROM p2, LATERAL (VALUES
-  ('segment', p2.m0, p2.u0),
-  ('balance', p2.m1, p2.u1),
-  ('nation', p2.m2, p2.u2)) AS v(field, m, u)
-"""
 
 
 def _q_io_footer_stats_orders(spark, sf_dir):
@@ -4367,773 +1100,9 @@ FROM orders
 """
 
 
-def _q_dsir_weights_documents(spark, sf_dir):
-    """DSIR importance weights (operators/dsir.py, arXiv:2302.03169):
-    hashed uni+bigram bag distributions for the target (doc_id%5==0) and
-    raw corpora, add-k smoothed log-likelihood-ratio sum per raw doc. The
-    ratio table is bounded at `buckets` rows (broadcast); the oracle
-    replays the identical md5 bucket fold and smoothing arithmetic."""
-    from bid_evaluation_spark.operators.dsir import dsir_logweights
-
-    docs = _t(spark, sf_dir, "documents")
-    res = dsir_logweights(docs.filter(F.col("doc_id") % 5 != 0),
-                          docs.filter(F.col("doc_id") % 5 == 0),
-                          buckets=1024, add_k=0.5, seed="dsir")
-    return res.select("doc_id",
-                      F.col("n_features").cast("long").alias("n_features"),
-                      (_r4("log_weight") + F.lit(0.0)).alias("log_weight"))
-
-
-_SQL_DSIR_FEATS = """
-toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-bags AS (
-  SELECT doc_id, list_concat(t,
-    CASE WHEN len(t) >= 2 THEN list_transform(
-      generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i + 1])
-    ELSE CAST([] AS VARCHAR[]) END) AS bag
-  FROM toks
-),
-feats AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5(g || 'dsir'), 1, 15)) AS BIGINT) % 1024
-      AS bucket
-  FROM (SELECT doc_id, unnest(bag) AS g FROM bags)
-),
-tc AS (SELECT bucket, count(*) AS t_cnt FROM feats
-       WHERE doc_id % 5 = 0 GROUP BY bucket),
-rc AS (SELECT bucket, count(*) AS r_cnt FROM feats
-       WHERE doc_id % 5 <> 0 GROUP BY bucket),
-tt AS (SELECT COALESCE(sum(t_cnt), 0) AS tot FROM tc),
-rt AS (SELECT COALESCE(sum(r_cnt), 0) AS tot FROM rc),
-ratio AS (
-  SELECT COALESCE(tc.bucket, rc.bucket) AS bucket,
-    ln((COALESCE(t_cnt, 0) + 0.5) / ((SELECT tot FROM tt) + 0.5 * 1024))
-    - ln((COALESCE(r_cnt, 0) + 0.5) / ((SELECT tot FROM rt) + 0.5 * 1024))
-      AS log_ratio
-  FROM tc FULL OUTER JOIN rc ON tc.bucket = rc.bucket
-),
-perdoc AS (
-  SELECT f.doc_id, count(*) AS n_features, sum(log_ratio) AS log_weight
-  FROM feats f JOIN ratio USING (bucket)
-  WHERE f.doc_id % 5 <> 0
-  GROUP BY f.doc_id
-)
-"""
-
-_SQL_DSIR_WEIGHTS_DOCUMENTS = f"""
-WITH {_SQL_DSIR_FEATS.strip()}
-SELECT d.doc_id,
-  CAST(COALESCE(p.n_features, 0) AS BIGINT) AS n_features,
-  round(COALESCE(p.log_weight, 0.0) * 10000.0) / 10000.0 + 0.0
-    AS log_weight
-FROM (SELECT doc_id FROM documents WHERE doc_id % 5 <> 0) d
-LEFT JOIN perdoc p USING (doc_id)
-"""
-
-
-def _q_dsir_sample_documents(spark, sf_dir):
-    """DSIR Gumbel-top-k importance resampling without replacement:
-    the 40 raw docs maximizing log_weight + Gumbel(md5(doc_id)), ranking
-    score rounded to 1e-6 so both engines order identical doubles
-    (weighted-sample lesson); deterministic, fully oracle-replayed."""
-    from bid_evaluation_spark.operators.dsir import dsir_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    res = dsir_sample(docs.filter(F.col("doc_id") % 5 != 0),
-                      docs.filter(F.col("doc_id") % 5 == 0),
-                      k=40, buckets=1024, add_k=0.5, seed="dsir")
-    return res.select("doc_id",
-                      F.col("n_features").cast("long").alias("n_features"),
-                      (_r4("log_weight") + F.lit(0.0)).alias("log_weight"))
-
-
-_SQL_DSIR_SAMPLE_DOCUMENTS = f"""
-WITH {_SQL_DSIR_FEATS.strip()},
-scored AS (
-  SELECT d.doc_id,
-    CAST(COALESCE(p.n_features, 0) AS BIGINT) AS n_features,
-    COALESCE(p.log_weight, 0.0) AS lw,
-    (CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || 'dsir|gumbel'),
-                          1, 15)) AS BIGINT) + 0.5)
-      / 1152921504606846976.0 AS u
-  FROM (SELECT doc_id FROM documents WHERE doc_id % 5 <> 0) d
-  LEFT JOIN perdoc p USING (doc_id)
-)
-SELECT doc_id, n_features,
-  round(lw * 10000.0) / 10000.0 + 0.0 AS log_weight
-FROM scored
-ORDER BY round((lw + -ln(-ln(u))) * 1000000.0) / 1000000.0 DESC,
-         doc_id ASC
-LIMIT 40
-"""
-
-
-def _q_pipe_split_documents(spark, sf_dir):
-    """Deterministic 80/10/10 train/val/test labels from cumulative md5
-    thresholds — the oracle recomputes the identical hex predicate, so the
-    assignment must match row-for-row."""
-    from bid_evaluation_spark.operators.pipeline import train_test_split
-
-    df = _t(spark, sf_dir, "documents")
-    res = train_test_split(df, seed="r2split")
-    return res.select("doc_id", "lang", "split")
-
-
-def _q_pipe_leakage_safe_split_documents(spark, sf_dir):
-    """Leakage-safe train/val/test split: near-duplicate components (the
-    same MinHash pair graph as dedup_keep_best) share ONE split label via
-    the component's canonical min-id as the md5 key — the contamination
-    mode per-row splitting permits (a paraphrase in train, its original in
-    test) is structurally impossible. The oracle re-derives the whole
-    chain: blocked exact-Jaccard pairs, recursive transitive closure to
-    the min label, coalesce to the row id for singletons, and the same
-    cumulative hex thresholds as pipe_split_documents."""
-    from bid_evaluation_spark.operators.dedup import minhash_near_duplicates
-    from bid_evaluation_spark.operators.pipeline import leakage_safe_split
-
-    df = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(df, threshold=0.2, num_perm=64, bands=16)
-    res = leakage_safe_split(df, pairs, seed="r4split")
-    return res.select("doc_id", F.col("split_key").cast("long")
-                      .alias("split_key"), "split")
-
-
-_SQL_PIPE_LEAKAGE_SAFE_SPLIT_DOCUMENTS = """
-WITH RECURSIVE toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS MATERIALIZED (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-cand AS (
-  -- shared-shingle count IS |A∩B| on distinct shingle sets, so the
-  -- verify needs sizes only, no per-pair list ops (see minhash oracle)
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-  FROM (SELECT doc_id, unnest(s) AS g FROM sh) a
-  JOIN (SELECT doc_id, unnest(s) AS g FROM sh) b
-    ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-pairs AS MATERIALIZED (
-  SELECT c.a_id, c.b_id
-  FROM cand c
-  JOIN sz na ON na.doc_id = c.a_id
-  JOIN sz nb ON nb.doc_id = c.b_id
-  WHERE CAST(c.i AS DOUBLE) / (na.n + nb.n - c.i) >= 0.2
-),
-edges AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(id, lab) AS (
-  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON r.id = e.src
-),
-clusters AS (SELECT id, min(lab) AS cluster_id FROM reach GROUP BY id),
-keyed AS (
-  SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS split_key
-  FROM documents d LEFT JOIN clusters c ON c.id = d.doc_id
-)
-SELECT doc_id, CAST(split_key AS BIGINT) AS split_key,
-  CASE WHEN substr(md5(CAST(split_key AS VARCHAR) || 'r4split'), 1, 8)
-            < 'cccccccc' THEN 'train'
-       WHEN substr(md5(CAST(split_key AS VARCHAR) || 'r4split'), 1, 8)
-            < 'e6666666' THEN 'val'
-       ELSE 'test' END AS split
-FROM keyed
-"""
-
-
-# 0.8 * 16^8 → 'cccccccc'; 0.9 * 16^8 → 'e6666666' (same int truncation as
-# pipeline._hex_threshold)
-_SQL_PIPE_SPLIT_DOCUMENTS = """
-SELECT doc_id, lang,
-  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR) || 'r2split'), 1, 8)
-            < 'cccccccc' THEN 'train'
-       WHEN substr(md5(CAST(doc_id AS VARCHAR) || 'r2split'), 1, 8)
-            < 'e6666666' THEN 'val'
-       ELSE 'test' END AS split
-FROM documents
-"""
-
-
-def _q_pipe_sample_k_documents(spark, sf_dir):
-    """Exactly-k deterministic uniform sample: order by (md5(key||seed), key)
-    take k — runs as TakeOrdered, no global sort exchange."""
-    from bid_evaluation_spark.operators.pipeline import sample_exact_k
-
-    df = _t(spark, sf_dir, "documents")
-    res = sample_exact_k(df, 100, key_col="doc_id", seed="sek")
-    return res.select("doc_id", "lang", "source")
-
-
-_SQL_PIPE_SAMPLE_K_DOCUMENTS = """
-SELECT doc_id, lang, source FROM documents
-ORDER BY md5(CAST(doc_id AS VARCHAR) || 'sek'), doc_id
-LIMIT 100
-"""
-
-
 # ---------------------------------------------------------------------------
 # time-series gap-fill (operators/timeseries.py) + as-of join variants
 # ---------------------------------------------------------------------------
-
-
-def _q_fuzzy_join_supplier_names(spark, sf_dir):
-    """Edit-distance self-join (operators/fuzzy.py fuzzy_join): supplier
-    name pairs within Levenshtein distance 1 (one digit apart — distance
-    2 matches ALL pairs of this keyspace, a vacuous result) via q-gram
-    multiset count
-    filtering + length-window blocking (exact, no all-pairs step) and a
-    levenshtein verify. The oracle runs the straightforward all-pairs
-    ground truth — so the hash match checks the BLOCKING's exactness, not
-    just the verify arithmetic."""
-    from bid_evaluation_spark.operators.fuzzy import fuzzy_join
-
-    sup = _t(spark, sf_dir, "supplier")
-    res = fuzzy_join(sup, sup, "s_name", "s_suppkey", "s_suppkey",
-                     max_dist=1)
-    return (res.filter(F.col("l_id") < F.col("r_id"))
-            .select("l_id", "r_id", "dist"))
-
-
-_SQL_FUZZY_JOIN_SUPPLIER_NAMES = """
-SELECT a.s_suppkey AS l_id, b.s_suppkey AS r_id,
-       CAST(levenshtein(a.s_name, b.s_name) AS BIGINT) AS dist
-FROM supplier a CROSS JOIN supplier b
-WHERE a.s_suppkey < b.s_suppkey
-  AND levenshtein(a.s_name, b.s_name) <= 1
-"""
-
-
-def _q_bitext_mine_embeddings(spark, sf_dir):
-    """Margin-based bitext mining (operators/bitext.py mine_bitext, the
-    public Artetxe–Schwenk ratio-margin method): treat vec_id < 250 and
-    >= 250 as two languages, mine mutual best-margin pairs with k=4
-    neighborhoods. The oracle replays all-pairs cosines, both top-k
-    neighborhoods (same (cosine desc, id) determinism as the ANN
-    queries), the neighborhood-average denominators, the 1e-6-rounded
-    argmax, and the mutuality filter."""
-    from bid_evaluation_spark.operators.bitext import mine_bitext
-
-    emb = _t(spark, sf_dir, "embeddings")
-    src = emb.filter(F.col("vec_id") < 250)
-    tgt = emb.filter(F.col("vec_id") >= 250)
-    res = mine_bitext(src, tgt, k=4, mutual=True)
-    return res.select("src_id", "tgt_id", _r4("cosine").alias("cosine"),
-                      _r4("margin").alias("margin"))
-
-
-_SQL_BITEXT_MINE_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-s AS (SELECT vec_id AS sid, e FROM v WHERE vec_id < 250),
-t AS (SELECT vec_id AS tid, e FROM v WHERE vec_id >= 250),
-c AS (
-  SELECT s.sid, t.tid,
-    list_sum(list_transform(generate_series(1, len(s.e)), i -> s.e[i]*t.e[i]))
-      / (sqrt(list_sum(list_transform(s.e, x -> x*x)))
-         * sqrt(list_sum(list_transform(t.e, x -> x*x)))) AS cos
-  FROM s CROSS JOIN t
-),
-fwd AS (
-  SELECT sid, tid, cos,
-         row_number() OVER (PARTITION BY sid ORDER BY cos DESC, tid ASC) AS r
-  FROM c
-),
-bwd AS (
-  SELECT sid, tid, cos,
-         row_number() OVER (PARTITION BY tid ORDER BY cos DESC, sid ASC) AS r
-  FROM c
-),
-fa AS (SELECT sid, avg(cos) AS fa FROM fwd WHERE r <= 4 GROUP BY sid),
-ba AS (SELECT tid, avg(cos) AS ba FROM bwd WHERE r <= 4 GROUP BY tid),
-pairs AS (
-  SELECT sid, tid FROM fwd WHERE r <= 4
-  UNION
-  SELECT sid, tid FROM bwd WHERE r <= 4
-),
-scored AS (
-  SELECT p.sid, p.tid, c.cos,
-         c.cos / ((fa.fa + ba.ba) / CAST(2 AS DOUBLE)) AS margin
-  FROM pairs p
-  JOIN c ON c.sid = p.sid AND c.tid = p.tid
-  JOIN fa ON fa.sid = p.sid
-  JOIN ba ON ba.tid = p.tid
-),
-bs AS (
-  SELECT *, row_number() OVER (PARTITION BY sid
-    ORDER BY round(margin * 1000000.0) / 1000000.0 DESC, tid ASC) AS rs
-  FROM scored
-),
-bt AS (
-  SELECT sid, tid, row_number() OVER (PARTITION BY tid
-    ORDER BY round(margin * 1000000.0) / 1000000.0 DESC, sid ASC) AS rt
-  FROM scored
-)
-SELECT b.sid AS src_id, b.tid AS tgt_id,
-       round(b.cos * 10000.0) / 10000.0 AS cosine,
-       round(b.margin * 10000.0) / 10000.0 AS margin
-FROM bs b JOIN bt ON bt.sid = b.sid AND bt.tid = b.tid AND bt.rt = 1
-WHERE b.rs = 1
-"""
-
-
-def _q_curation_hard_negatives_embeddings(spark, sf_dir):
-    """Contrastive pair mining (operators/similarity.py
-    mine_contrastive_pairs): for each of the 10 anchor vectors, the 5
-    most-similar DIFFERENT-label vectors (hard negatives) and the 3
-    most-similar same-label vectors (positives), ranked per (anchor, kind).
-    Broadcast anchors, map-side similarities, one window — the
-    cosine_topk shape with a label predicate. The oracle replays the
-    cross-product cosine, the null-safe label split, and the per-kind
-    row_number ranking."""
-    from bid_evaluation_spark.operators.similarity import (
-        mine_contrastive_pairs,
-    )
-
-    df = _t(spark, sf_dir, "embeddings")
-    anchors = df.filter(F.col("vec_id") < 10)
-    res = mine_contrastive_pairs(anchors, df, label_col="label",
-                                 k_neg=5, k_pos=3)
-    return res.select("query_id", "neighbor_id", "kind",
-                      _r4("cosine").alias("cosine"),
-                      F.col("rnk").cast("long"))
-
-
-_SQL_CURATION_HARD_NEGATIVES_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e
-           FROM embeddings),
-q AS (SELECT vec_id AS query_id, label AS ql, e AS qe FROM v
-      WHERE vec_id < 10),
-sims AS (
-  SELECT q.query_id, v.vec_id AS neighbor_id,
-    CASE WHEN q.ql IS NOT DISTINCT FROM v.label
-         THEN 'pos' ELSE 'neg' END AS kind,
-    list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i]*v.e[i]))
-      / (sqrt(list_sum(list_transform(qe, x -> x*x)))
-         * sqrt(list_sum(list_transform(v.e, x -> x*x)))) AS cosine
-  FROM q CROSS JOIN v
-  WHERE q.query_id != v.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id, kind
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-  FROM sims
-)
-SELECT query_id, neighbor_id, kind,
-       round(cosine * 10000.0) / 10000.0 AS cosine, CAST(rnk AS BIGINT) AS rnk
-FROM ranked
-WHERE (kind = 'neg' AND rnk <= 5) OR (kind = 'pos' AND rnk <= 3)
-"""
-
-
-def _q_curation_group_gate_documents(spark, sf_dir):
-    """Domain-level curation (operators/pipeline.py filter_by_group_score):
-    score every document with the heuristic quality criterion, average per
-    source, and keep only documents whose SOURCE average clears 42.0 — the
-    whole-domain gate a row filter can't express (good docs on bad sources
-    drop too). Two-phase: one partially-aggregated groupBy(source) then a
-    broadcast join back. The oracle replays the quality formula, the
-    per-source averages, and the threshold."""
-    from bid_evaluation_spark.operators.pipeline import filter_by_group_score
-    from bid_evaluation_spark.operators.text import quality_score
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "q", quality_score("text"))
-    kept = filter_by_group_score(docs, "source", "q", min_avg=42.0)
-    return kept.select("doc_id", "source", _r4("q").alias("quality"),
-                       _r4("group_avg_score").alias("group_avg"))
-
-
-_SQL_CURATION_GROUP_GATE_DOCUMENTS = f"""
-WITH toks AS (
-  SELECT doc_id, source, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-comp AS (
-  SELECT doc_id, source,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0
-    + (CASE WHEN len(t) > 0
-            THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t)
-            ELSE 0.0 END) * 30.0
-    + least((CASE WHEN len(t) > 0
-                  THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL})) AS DOUBLE)
-                       / len(t)
-                  ELSE 0.0 END) * 5.0, 1.0) * 20.0
-    + (1.0 - least((CASE WHEN length(text) > 0
-                         THEN CAST(length(regexp_replace(text, '[\\w\\s]', '',
-                                                         'g')) AS DOUBLE)
-                              / length(text)
-                         ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS q
-  FROM toks
-),
-avgs AS (SELECT source, avg(q) AS ga FROM comp GROUP BY 1)
-SELECT c.doc_id, c.source,
-       round(c.q * 10000.0) / 10000.0 AS quality,
-       round(a.ga * 10000.0) / 10000.0 AS group_avg
-FROM comp c JOIN avgs a USING (source)
-WHERE a.ga >= CAST(42.0 AS DOUBLE)
-"""
-
-
-def _q_sketch_cms_topk_documents(spark, sf_dir):
-    """Count-min heavy hitters (operators/sketch.py): sketch every token
-    occurrence into a 4×1024 cell grid (one groupBy — map-side partial agg
-    IS the sketch merge), estimate each distinct token as the min over its
-    4 cells, keep the top 20 by (est desc, token). Deterministic md5
-    bucketing means the oracle replays every cell and estimate exactly;
-    `exact` rides along so the est ≥ exact upper-bound property is in the
-    checked output."""
-    from bid_evaluation_spark.operators.sketch import cms_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    return cms_topk(docs, text_col="text", k=20, depth=4, width=1024,
-                    seed="cms", with_exact=True)
-
-
-_SQL_SKETCH_CMS_TOPK_DOCUMENTS = """
-WITH tok AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-  FROM documents WHERE trim(lower(text)) != ''
-),
-js AS (SELECT unnest(generate_series(0, 3)) AS j),
-cells AS (
-  SELECT j.j AS row,
-         CAST(('0x' || substr(md5(tok || 'cms' || CAST(j.j AS VARCHAR)),
-                              1, 15)) AS BIGINT) % 1024 AS bucket,
-         count(*) AS cnt
-  FROM tok CROSS JOIN js j
-  GROUP BY 1, 2
-),
-cand AS (SELECT DISTINCT tok FROM tok),
-est AS (
-  SELECT c.tok AS token, min(coalesce(s.cnt, 0)) AS est
-  FROM cand c CROSS JOIN js j
-  LEFT JOIN cells s
-    ON s.row = j.j
-   AND s.bucket = CAST(('0x' || substr(md5(c.tok || 'cms'
-                       || CAST(j.j AS VARCHAR)), 1, 15)) AS BIGINT) % 1024
-  GROUP BY 1
-),
-exact AS (SELECT tok AS token, count(*) AS exact FROM tok GROUP BY 1)
-SELECT e.token, CAST(e.est AS BIGINT) AS est, CAST(x.exact AS BIGINT) AS exact
-FROM est e JOIN exact x USING (token)
-ORDER BY est DESC, token ASC
-LIMIT 20
-"""
-
-
-def _q_sketch_hll_distinct_documents(spark, sf_dir):
-    """HLL distinct tokens (operators/sketch.py): 1024 registers from a
-    60-bit md5 hash (low 10 bits = bucket, leading-zero rank of the top 50
-    = register value), Flajolet raw estimator + linear-counting small-range
-    correction. Deterministic hashing ⇒ the oracle rebuilds every register
-    and lands on the identical estimate; the exact distinct count rides
-    along in the checked row."""
-    from bid_evaluation_spark.operators.sketch import hll_distinct
-
-    from bid_evaluation_spark.operators.text import tokens as _tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(_tokens(F.lower(F.col("text")))).alias("_tok"))
-    res = hll_distinct(toks, "_tok", b=10, seed="hll", with_exact=True)
-    return res.select(_r4("estimate").alias("estimate"), "m",
-                      "zero_registers", "exact")
-
-
-_HLL_ALPHA_M2 = repr(0.7213 / (1.0 + 1.079 / 1024) * 1024 * 1024)
-
-_SQL_SKETCH_HLL_DISTINCT_DOCUMENTS = f"""
-WITH tok AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-  FROM documents WHERE trim(lower(text)) != ''
-),
-h AS (
-  SELECT CAST(('0x' || substr(md5(tok || 'hll'), 1, 15)) AS BIGINT) AS h,
-         tok
-  FROM tok
-),
-r AS (
-  SELECT h % 1024 AS idx,
-         CASE WHEN (h >> 10) = 0 THEN 51
-              ELSE 50 - length(bin(h >> 10)) + 1 END AS rho
-  FROM h
-),
-regs AS (SELECT idx, max(rho) AS M FROM r GROUP BY 1),
-agg AS (
-  SELECT sum(power(CAST(2 AS DOUBLE), -M)) AS zp,
-         count(*) AS present
-  FROM regs
-),
-raw AS (
-  SELECT {_HLL_ALPHA_M2} / (zp + CAST(1024 - present AS DOUBLE)) AS rawe,
-         CAST(1024 - present AS BIGINT) AS zero_registers
-  FROM agg
-)
-SELECT
-  round((CASE WHEN rawe <= CAST(2560 AS DOUBLE) AND zero_registers > 0
-         THEN CAST(1024 AS DOUBLE)
-              * ln(CAST(1024 AS DOUBLE) / CAST(zero_registers AS DOUBLE))
-         ELSE rawe END) * 10000.0) / 10000.0 AS estimate,
-  CAST(1024 AS BIGINT) AS m,
-  zero_registers,
-  (SELECT CAST(count(DISTINCT tok) AS BIGINT) FROM tok) AS exact
-FROM raw
-"""
-
-
-def _q_sketch_hll_overlap_documents(spark, sf_dir):
-    """Sketch-algebra corpus overlap (sketch.py hll_overlap): vocabulary
-    Jaccard between the two corpus halves from THREE HLL estimates —
-    |A|, |B|, and the union via elementwise register max — no corpus
-    join anywhere. Deterministic md5 registers: the oracle rebuilds all
-    three register tables and the inclusion-exclusion arithmetic."""
-    from bid_evaluation_spark.operators.sketch import hll_overlap
-    from bid_evaluation_spark.operators.text import tokens as _tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id",
-                       F.explode(_tokens(F.lower(F.col("text"))))
-                       .alias("tok"))
-    a = toks.filter(F.col("doc_id") < 250).select("tok")
-    b_df = toks.filter(F.col("doc_id") >= 250).select("tok")
-    res = hll_overlap(a, b_df, "tok", b=10, seed="hll")
-    return res.select(_r4("est_a").alias("est_a"),
-                      _r4("est_b").alias("est_b"),
-                      _r4("est_union").alias("est_union"),
-                      _r4("est_intersection").alias("est_intersection"),
-                      (_r4("jaccard") + F.lit(0.0)).alias("jaccard"))
-
-
-_SQL_SKETCH_HLL_OVERLAP_DOCUMENTS = f"""
-WITH tokall AS (
-  SELECT doc_id,
-    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-  FROM documents WHERE trim(lower(text)) != ''
-),
-ha AS (
-  SELECT CAST(('0x' || substr(md5(tok || 'hll'), 1, 15)) AS BIGINT) AS h
-  FROM tokall WHERE doc_id < 250
-),
-hb AS (
-  SELECT CAST(('0x' || substr(md5(tok || 'hll'), 1, 15)) AS BIGINT) AS h
-  FROM tokall WHERE doc_id >= 250
-),
-ra AS (
-  SELECT h % 1024 AS idx,
-    max(CASE WHEN (h >> 10) = 0 THEN 51
-             ELSE 50 - length(bin(h >> 10)) + 1 END) AS M
-  FROM ha GROUP BY 1
-),
-rb AS (
-  SELECT h % 1024 AS idx,
-    max(CASE WHEN (h >> 10) = 0 THEN 51
-             ELSE 50 - length(bin(h >> 10)) + 1 END) AS M
-  FROM hb GROUP BY 1
-),
-ru AS (
-  SELECT idx, max(M) AS M
-  FROM (SELECT * FROM ra UNION ALL SELECT * FROM rb) GROUP BY idx
-),
-ea AS (
-  SELECT CASE WHEN rawe <= CAST(2560 AS DOUBLE) AND zr > 0
-         THEN CAST(1024 AS DOUBLE)
-              * ln(CAST(1024 AS DOUBLE) / CAST(zr AS DOUBLE))
-         ELSE rawe END AS e
-  FROM (SELECT {{alpha}} / (sum(power(CAST(2 AS DOUBLE), -M))
-                + CAST(1024 - count(*) AS DOUBLE)) AS rawe,
-               CAST(1024 - count(*) AS BIGINT) AS zr
-        FROM ra)
-),
-eb AS (
-  SELECT CASE WHEN rawe <= CAST(2560 AS DOUBLE) AND zr > 0
-         THEN CAST(1024 AS DOUBLE)
-              * ln(CAST(1024 AS DOUBLE) / CAST(zr AS DOUBLE))
-         ELSE rawe END AS e
-  FROM (SELECT {{alpha}} / (sum(power(CAST(2 AS DOUBLE), -M))
-                + CAST(1024 - count(*) AS DOUBLE)) AS rawe,
-               CAST(1024 - count(*) AS BIGINT) AS zr
-        FROM rb)
-),
-eu AS (
-  SELECT CASE WHEN rawe <= CAST(2560 AS DOUBLE) AND zr > 0
-         THEN CAST(1024 AS DOUBLE)
-              * ln(CAST(1024 AS DOUBLE) / CAST(zr AS DOUBLE))
-         ELSE rawe END AS e
-  FROM (SELECT {{alpha}} / (sum(power(CAST(2 AS DOUBLE), -M))
-                + CAST(1024 - count(*) AS DOUBLE)) AS rawe,
-               CAST(1024 - count(*) AS BIGINT) AS zr
-        FROM ru)
-)
-SELECT
-  round(ea.e * 10000.0) / 10000.0 AS est_a,
-  round(eb.e * 10000.0) / 10000.0 AS est_b,
-  round(eu.e * 10000.0) / 10000.0 AS est_union,
-  round(greatest(0.0, ea.e + eb.e - eu.e) * 10000.0) / 10000.0
-    AS est_intersection,
-  round((greatest(0.0, ea.e + eb.e - eu.e) / eu.e) * 10000.0) / 10000.0
-    + 0.0 AS jaccard
-FROM ea, eb, eu
-""".replace("{alpha}", _HLL_ALPHA_M2)
-
-
-def _q_classify_nb_lang_documents(spark, sf_dir):
-    """Multinomial Naive Bayes language classifier (operators/classify.py):
-    train on the corpus's own (text, lang) pairs — one explode + groupBy
-    builds the (token, per-class count) model, pivoted to one row per token
-    so scoring joins each document's distinct tokens ONCE (no ×classes row
-    blow-up) — then predict every document. The argmax compares scores
-    rounded to 1e-6 with label-order tie-break (never rank a raw double
-    across engines). The oracle replays the identical smoothed arithmetic
-    densely: per-class token counts, add-1 smoothing over the shared vocab,
-    prior + sum of m·ln p, row_number argmax."""
-    from bid_evaluation_spark.operators.classify import nb_classify
-
-    docs = _t(spark, sf_dir, "documents")
-    out = nb_classify(docs, text_col="text", label_col="lang",
-                      id_col="doc_id", add_k=1.0)
-    return out.select("doc_id", "pred_label",
-                      _r4("pred_logp").alias("pred_logp"), "n_tokens")
-
-
-_SQL_CLASSIFY_NB_LANG_DOCUMENTS = """
-WITH labeled AS (
-  SELECT doc_id, lang, trim(lower(text)) AS t FROM documents
-  WHERE lang IS NOT NULL
-),
-tok AS (
-  SELECT doc_id, lang, unnest(string_split_regex(t, '\\s+')) AS tok
-  FROM labeled WHERE t != ''
-),
-counts AS (SELECT lang, tok, count(*) AS c FROM tok GROUP BY 1, 2),
-totals AS (SELECT lang, CAST(sum(c) AS DOUBLE) AS n FROM counts GROUP BY 1),
-vocab AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS v FROM counts),
-priors AS (SELECT lang, count(*) AS nd FROM labeled GROUP BY 1),
-ndocs AS (SELECT CAST(sum(nd) AS DOUBLE) AS n FROM priors),
-classes AS (
-  SELECT p.lang, ln(CAST(p.nd AS DOUBLE) / (SELECT n FROM ndocs)) AS lprior,
-         coalesce(t.n, CAST(0 AS DOUBLE)) AS ntok
-  FROM priors p LEFT JOIN totals t USING (lang)
-),
-dtok AS (
-  SELECT doc_id, tok, count(*) AS m FROM (
-    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-    FROM documents WHERE trim(lower(text)) != ''
-  ) GROUP BY 1, 2
-),
-contrib AS (
-  SELECT d.doc_id, cl.lang,
-         sum(d.m * ln((coalesce(c.c, 0) + CAST(1 AS DOUBLE))
-                      / (cl.ntok + (SELECT v FROM vocab)))) AS s,
-         sum(d.m) AS n_tokens
-  FROM dtok d CROSS JOIN classes cl
-  LEFT JOIN counts c ON c.lang = cl.lang AND c.tok = d.tok
-  GROUP BY 1, 2
-),
-scores AS (
-  SELECT doc.doc_id, cl.lang,
-         cl.lprior + coalesce(ct.s, CAST(0 AS DOUBLE)) AS score,
-         coalesce(ct.n_tokens, 0) AS n_tokens
-  FROM documents doc CROSS JOIN classes cl
-  LEFT JOIN contrib ct ON ct.doc_id = doc.doc_id AND ct.lang = cl.lang
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id
-    ORDER BY round(score * 1000000.0) / 1000000.0 DESC, lang ASC) AS rn
-  FROM scores
-)
-SELECT doc_id, lang AS pred_label,
-       round(score * 10000.0) / 10000.0 AS pred_logp,
-       CAST(n_tokens AS BIGINT) AS n_tokens
-FROM ranked WHERE rn = 1
-"""
-
-
-def _q_classify_logreg_embeddings(spark, sf_dir):
-    """Distributed batch-GD logistic regression (operators/classify.py):
-    y = label mod 2 over the 64-dim embeddings, 2 rounds at lr=1.0 from
-    zero weights. Each round is ONE aggregation job computing all 65
-    gradient averages map-side-combined (no explode, no shuffle of
-    vectors); weights re-enter as literals, so the scoring margin is a
-    flat left-to-right codegen sum — the identical association order the
-    unrolled SQL oracle uses. The oracle replays both GD rounds as CTEs
-    (round 1 collapses analytically: w=0 ⇒ p=0.5) and scores every row."""
-    from bid_evaluation_spark.operators.classify import (
-        logreg_predict, logreg_train,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        "vec_id", "embedding",
-        (F.col("label") % 2).cast("double").alias("_y"))
-    model = logreg_train(feats, feature_col="embedding", y_col="_y",
-                         dim=64, iters=2, lr=1.0)
-    scored = logreg_predict(feats, model, feature_col="embedding")
-    return scored.select("vec_id", _r4("prob").alias("prob"), "pred")
-
-
-def _logreg_embeddings_sql(dim: int = 64) -> str:
-    """Unrolled 2-round GD oracle. Round 1 from w=0 is analytic (margin 0,
-    p=0.5, r=0.5−y) so w1_j = −avg((0.5−y)·x_j); round 2 recomputes the
-    margin with w1 as a cross-joined 1-row CTE and averages the new
-    residual gradient; scoring applies w2 = w1 − g2. Margin terms are
-    written bias-first then j ascending — the same association order as
-    the Spark expression."""
-    ej = lambda j: f"CAST(embedding[{j + 1}] AS DOUBLE)"  # noqa: E731
-    g1 = ", ".join(
-        f"-avg((CAST(0.5 AS DOUBLE) - y) * {ej(j)}) AS w1_{j}"
-        for j in range(dim))
-    margin1 = " + ".join(f"w1.w1_{j} * {ej(j)}" for j in range(dim))
-    g2 = ", ".join(f"avg(r2 * {ej(j)}) AS g2_{j}" for j in range(dim))
-    w2 = ", ".join(f"w1.w1_{j} - g2.g2_{j} AS w2_{j}" for j in range(dim))
-    margin2 = " + ".join(f"w2.w2_{j} * {ej(j)}" for j in range(dim))
-    return f"""
-WITH y AS (
-  SELECT vec_id, embedding, CAST(label % 2 AS DOUBLE) AS y FROM embeddings
-),
-w1 AS (
-  SELECT {g1}, -avg(CAST(0.5 AS DOUBLE) - y) AS b1 FROM y
-),
-r2rows AS (
-  SELECT y.vec_id, y.embedding, y.y,
-         CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-           + exp(-(w1.b1 + {margin1}))) - y.y AS r2
-  FROM y CROSS JOIN w1
-),
-g2 AS (
-  SELECT {g2}, avg(r2) AS gb2 FROM r2rows
-),
-w2 AS (
-  SELECT {w2}, w1.b1 - g2.gb2 AS b2 FROM w1 CROSS JOIN g2
-)
-SELECT y.vec_id,
-  round((CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-         + exp(-(w2.b2 + {margin2})))) * 10000.0) / 10000.0 AS prob,
-  CAST(CASE WHEN CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE)
-         + exp(-(w2.b2 + {margin2}))) >= CAST(0.5 AS DOUBLE)
-       THEN 1 ELSE 0 END AS INTEGER) AS pred
-FROM y CROSS JOIN w2
-"""
-
-
-_SQL_CLASSIFY_LOGREG_EMBEDDINGS = _logreg_embeddings_sql()
 
 
 def _q_events_rollup_type_day(spark, sf_dir):
@@ -5256,1898 +1225,8 @@ FROM events GROUP BY user_id
 
 
 # ---------------------------------------------------------------------------
-# Decision analytics: skyline / concentration / diversity; PCA + k-means
-# value surfaces; TF-IDF retrieval
-# ---------------------------------------------------------------------------
-
-
-def _q_text_tfidf_topk_documents(spark, sf_dir):
-    """Log-normalized TF-IDF top-25 for a 3-term query — same two-pass
-    shape as BM25 (one fused stats aggregate → scalars, then map-only
-    scoring with JVM-native term counts, TakeOrdered top-k). Ranked on the
-    ROUNDED score (lesson: never rank on a raw double cross-engine)."""
-    from bid_evaluation_spark.operators.retrieval import tfidf_scores
-
-    df = _t(spark, sf_dir, "documents")
-    scored = tfidf_scores(df, ["spark", "join", "hash"])
-    return (scored.select(F.col("doc_id"), _r4("tfidf").alias("tfidf"))
-            .orderBy(F.desc("tfidf"), F.asc("doc_id")).limit(25))
-
-
-_SQL_TEXT_TFIDF_TOPK_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-stats AS (
-  SELECT count(*) AS n,
-         sum(CAST(list_contains(t, 'spark') AS BIGINT)) AS df1,
-         sum(CAST(list_contains(t, 'join') AS BIGINT)) AS df2,
-         sum(CAST(list_contains(t, 'hash') AS BIGINT)) AS df3
-  FROM toks
-),
-scored AS (
-  SELECT k.doc_id,
-    ln(1.0 + CAST(len(list_filter(k.t, x -> x = 'spark')) AS DOUBLE))
-      * ln(CAST(s.n AS DOUBLE) / (1.0 + CAST(s.df1 AS DOUBLE)))
-    + ln(1.0 + CAST(len(list_filter(k.t, x -> x = 'join')) AS DOUBLE))
-      * ln(CAST(s.n AS DOUBLE) / (1.0 + CAST(s.df2 AS DOUBLE)))
-    + ln(1.0 + CAST(len(list_filter(k.t, x -> x = 'hash')) AS DOUBLE))
-      * ln(CAST(s.n AS DOUBLE) / (1.0 + CAST(s.df3 AS DOUBLE)))
-    AS tfidf
-  FROM toks k, stats s
-)
-SELECT doc_id, round(tfidf * 10000.0) / 10000.0 AS tfidf
-FROM scored
-ORDER BY round(tfidf * 10000.0) / 10000.0 DESC, doc_id ASC
-LIMIT 25
-"""
-
-
-def _q_cluster_assign_embeddings(spark, sf_dir):
-    """Nearest-centroid assignment as a standalone column transform (the
-    map-only kernel shared by IVF and SemDeDup), under pinned centroids
-    (the vec_id < 8 embeddings, ids 0..7 — verified consecutive, so the
-    matrix row index IS the centroid id). Broadcast centroid matrix, one
-    argmin matmul per Arrow batch, no shuffle."""
-    import numpy as np
-
-    from bid_evaluation_spark.operators.similarity import assign_clusters
-
-    df = _t(spark, sf_dir, "embeddings")
-    cent_rows = (df.filter(F.col("vec_id") < 8)
-                 .select("vec_id", "embedding").orderBy("vec_id").collect())
-    centroids = np.array([r["embedding"] for r in cent_rows],
-                         dtype=np.float64)
-    res = assign_clusters(df, centroids, vec_col="embedding")
-    return res.select("vec_id", F.col("cluster").cast("long").alias("cluster"))
-
-
-_SQL_CLUSTER_ASSIGN_EMBEDDINGS = """
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings
-  WHERE embedding IS NOT NULL
-),
-c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8)
-SELECT vec_id, CAST(cid AS BIGINT) AS cluster FROM (
-  SELECT v.vec_id, c.cid,
-    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      list_sum(list_transform(c.ce, x -> x*x))
-        - 2 * list_sum(list_transform(generate_series(1, len(v.e)),
-                                      i -> v.e[i]*c.ce[i])) ASC,
-      c.cid ASC) AS pr
-  FROM v CROSS JOIN c
-) WHERE pr = 1
-"""
-
-
-def _q_dedup_containment_documents(spark, sf_dir):
-    """EXACT containment join (|needle ∩ hay| / |needle| ≥ 0.75): short
-    probe docs (doc_id % 25 == 0, first 12 tokens — simulated excerpts)
-    against the full corpus. One-sided prefix filtering — recall 1 by the
-    lemma, only the needle side pays prefix machinery — so the all-pairs
-    oracle again checks blocking completeness. Self-pairs excluded."""
-    from bid_evaluation_spark.operators.dedup import containment_join
-
-    df = _t(spark, sf_dir, "documents")
-    needles = (df.filter(F.col("doc_id") % 25 == 0)
-               .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                       F.array_join(
-                           F.slice(F.split(F.trim(F.lower(F.col("text"))),
-                                           r"\s+"), 1, 12), " ")
-                       .alias("text")))
-    res = containment_join(needles, df, threshold=0.75)
-    return res.select("needle_id", "hay_id",
-                      _r4("containment").alias("containment"))
-
-
-_SQL_DEDUP_CONTAINMENT_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[])
-         ELSE list_distinct(string_split_regex(trim(lower(text)), '\\s+'))
-    END AS s
-  FROM documents
-),
-needles AS (
-  SELECT doc_id + 1000000 AS doc_id,
-    list_distinct(string_split_regex(trim(lower(text)), '\\s+')[1:12]) AS s
-  FROM documents WHERE doc_id % 25 = 0 AND trim(lower(text)) != ''
-)
-SELECT n.doc_id AS needle_id, h.doc_id AS hay_id,
-  round((CAST(len(list_intersect(n.s, h.s)) AS DOUBLE) / len(n.s))
-        * 10000.0) / 10000.0 AS containment
-FROM needles n JOIN toks h ON len(n.s) > 0 AND len(h.s) > 0
-WHERE CAST(len(list_intersect(n.s, h.s)) AS DOUBLE) / len(n.s)
-      >= CAST(0.75 AS DOUBLE)
-"""
-
-
-def _q_pipe_novelty_documents(spark, sf_dir):
-    """Per-document shingle novelty vs the rest of the corpus (docs with
-    doc_id % 5 == 0 scored against the other 80%): the corpus collapses
-    once to its distinct shingle-hash set (fixed-width longs, partial
-    agg), doc shingles LEFT-join it, one per-doc aggregate. The oracle
-    recomputes membership with string shingles — equality also certifies
-    the hash path collision-free on this data."""
-    from bid_evaluation_spark.operators.pipeline import novelty_score
-
-    df = _t(spark, sf_dir, "documents")
-    docs = df.filter(F.col("doc_id") % 5 == 0)
-    corpus = df.filter(F.col("doc_id") % 5 != 0)
-    res = novelty_score(docs, corpus, k=3)
-    return res.select("doc_id", "n_shingles", "n_unseen",
-                      _r4("novelty").alias("novelty"))
-
-
-_SQL_PIPE_NOVELTY_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-seen AS (
-  SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 5 <> 0
-),
-doc_sh AS (
-  SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 5 = 0
-),
-per AS (
-  SELECT d.doc_id, count(*) AS n_shingles,
-         sum(CASE WHEN x.g IS NULL THEN 1 ELSE 0 END) AS n_unseen
-  FROM doc_sh d LEFT JOIN seen x ON d.g = x.g
-  GROUP BY d.doc_id
-)
-SELECT b.doc_id,
-  CAST(coalesce(p.n_shingles, 0) AS BIGINT) AS n_shingles,
-  CAST(coalesce(p.n_unseen, 0) AS BIGINT) AS n_unseen,
-  round(CASE WHEN p.n_shingles > 0
-        THEN CAST(p.n_unseen AS DOUBLE) / p.n_shingles END
-        * 10000.0) / 10000.0 AS novelty
-FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) b
-LEFT JOIN per p ON b.doc_id = p.doc_id
-"""
-
-
-def _q_dedup_keep_best_documents(spark, sf_dir):
-    """End-to-end curation dedup: MinHash near-dup pairs → connected
-    components → keep each cluster's HIGHEST-quality member (rounded
-    score, doc_id tiebreak) — the keep-best policy instead of min-id.
-    The oracle re-derives the whole chain: exact all-pairs Jaccard ≥ 0.2,
-    recursive transitive closure, the quality formula, and the per-cluster
-    argmax — one hash match over four composed stages."""
-    from bid_evaluation_spark.operators.dedup import (
-        dedup_keep_best, minhash_near_duplicates)
-    from bid_evaluation_spark.operators.text import quality_score
-
-    df = _t(spark, sf_dir, "documents").withColumn("q", _r4(quality_score()))
-    pairs = minhash_near_duplicates(df, threshold=0.2, num_perm=64, bands=16)
-    kept = dedup_keep_best(df, pairs, "q")
-    return kept.select("doc_id", F.col("q").alias("quality"))
-
-
-_SQL_DEDUP_KEEP_BEST_DOCUMENTS = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS MATERIALIZED (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
--- candidate blocking: Jaccard >= 0.2 > 0 implies at least one SHARED
--- shingle, so the shared-shingle equi-join is a provably complete
--- superset of the all-pairs universe (the lemma the Spark operator uses;
--- independently verified by minhash_near_duplicates' own all-pairs
--- oracle) — it cuts this composed oracle from ~31 s to seconds
-cand AS (
-  -- shared-shingle count IS |A∩B| on distinct shingle sets, so the
-  -- verify needs sizes only, no per-pair list ops (see minhash oracle)
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-  FROM (SELECT doc_id, unnest(s) AS g FROM sh) a
-  JOIN (SELECT doc_id, unnest(s) AS g FROM sh) b
-    ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-pairs AS MATERIALIZED (
-  SELECT c.a_id, c.b_id
-  FROM cand c
-  JOIN sz na ON na.doc_id = c.a_id
-  JOIN sz nb ON nb.doc_id = c.b_id
-  WHERE CAST(c.i AS DOUBLE) / (na.n + nb.n - c.i) >= 0.2
-),
-edges AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(id, lab) AS (
-  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON r.id = e.src
-),
-clusters AS (SELECT id, min(lab) AS cluster_id FROM reach GROUP BY id),
-comp AS (
-  SELECT doc_id,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0 AS length_c,
-    (CASE WHEN len(t) > 0
-          THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t)
-          ELSE 0.0 END) * 30.0 AS div_c,
-    least((CASE WHEN len(t) > 0
-                THEN CAST(len(list_filter(t, x -> x IN {_STOPWORDS_SQL}))
-                          AS DOUBLE) / len(t)
-                ELSE 0.0 END) * 5.0, 1.0) * 20.0 AS stop_c,
-    (1.0 - least((CASE WHEN length(text) > 0
-                       THEN CAST(length(regexp_replace(text, '[\\w\\s]', '',
-                                                       'g')) AS DOUBLE)
-                            / length(text)
-                       ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS punct_c
-  FROM toks
-),
-quality AS MATERIALIZED (
-  SELECT doc_id,
-    round((length_c + div_c + stop_c + punct_c) * 10000.0) / 10000.0 AS q
-  FROM comp
-),
-members AS (
-  SELECT c.id, c.cluster_id, q.q,
-         row_number() OVER (PARTITION BY c.cluster_id
-                            ORDER BY q.q DESC, c.id ASC) AS rn
-  FROM clusters c JOIN quality q ON c.id = q.doc_id
-),
-dropped AS (SELECT id FROM members WHERE rn > 1)
-SELECT d.doc_id, q.q AS quality
-FROM documents d JOIN quality q ON d.doc_id = q.doc_id
-WHERE NOT EXISTS (SELECT 1 FROM dropped x WHERE x.id = d.doc_id)
-"""
-
-
-def _q_dedup_jaccard_prefix_documents(spark, sf_dir, _mod=_DOCS_SAMPLE_MOD):
-    """EXACT token-set Jaccard ≥ 0.75 join via prefix filtering (PPJoin
-    family) — recall 1 by the prefix lemma, so the all-pairs oracle
-    checks blocking COMPLETENESS, not just the verify arithmetic. No
-    vocabulary-wide rank window: the (freq, token) struct order IS the
-    global order; candidates join on prefix tokens only. Runs on the
-    doc_id % 3 == 0 sub-corpus: the OUTPUT is quadratic-shaped here
-    (token vocabularies overlap heavily in this corpus, so ~1/3 of all
-    pairs clear 0.75 at sf0.1 — 3.9M rows whose cross-engine compare
-    dwarfs both engines' query time); same recipe as the
-    quadratic-TRUTH queries, full corpus via deep_queries()."""
-    from bid_evaluation_spark.operators.dedup import jaccard_similarity_join
-
-    docs = _docs_sampled(spark, sf_dir, _mod)
-    res = jaccard_similarity_join(docs, threshold=0.75)
-    return res.select("a_id", "b_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS_TMPL = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[])
-         ELSE list_distinct(string_split_regex(trim(lower(text)), '\\s+'))
-    END AS s
-  FROM documents {where}
-)
-, inv AS (SELECT doc_id, unnest(s) AS g FROM toks),
-sz AS (SELECT doc_id, len(s) AS n FROM toks WHERE len(s) > 0),
-inter AS (
-  -- inverted-index exact truth on distinct token sets (see the
-  -- minhash oracle): a j >= 0.75 pair must share a token
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT a_id, b_id,
-  round((CAST(i AS DOUBLE) / (na.n + nb.n - i)) * 10000.0)
-    / 10000.0 AS jaccard
-FROM inter
-JOIN sz na ON na.doc_id = a_id
-JOIN sz nb ON nb.doc_id = b_id
-WHERE CAST(i AS DOUBLE) / (na.n + nb.n - i) >= CAST(0.75 AS DOUBLE)
-"""
-
-_SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS = (
-    _SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS_TMPL.format(
-        where=_sample_where(_DOCS_SAMPLE_MOD)))
-
-
-def _q_sketch_cms_by_group_documents(spark, sf_dir):
-    """Per-language heavy hitters through a per-group count-min sketch
-    (cells bounded at groups × depth × width, partial agg map-side;
-    candidate estimates via the cell equi-join; top-5 per group by a
-    group-partitioned row_number). est ≥ exact always — both ride in the
-    checked row."""
-    from bid_evaluation_spark.operators.sketch import cms_topk_by_group
-
-    docs = _t(spark, sf_dir, "documents")
-    res = cms_topk_by_group(docs, "lang", "text", k=5, with_exact=True)
-    return res.select("lang", "token", "est",
-                      F.col("exact").cast("long").alias("exact"))
-
-
-_SQL_SKETCH_CMS_BY_GROUP_DOCUMENTS = """
-WITH tok AS (
-  SELECT lang,
-         unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-  FROM documents WHERE trim(lower(text)) != ''
-),
-js AS (SELECT unnest(generate_series(0, 3)) AS j),
-cells AS (
-  SELECT lang, j.j AS row,
-         CAST(('0x' || substr(md5(tok || 'cms' || CAST(j.j AS VARCHAR)),
-                              1, 15)) AS BIGINT) % 1024 AS bucket,
-         count(*) AS cnt
-  FROM tok CROSS JOIN js j
-  GROUP BY 1, 2, 3
-),
-cand AS (SELECT DISTINCT lang, tok FROM tok),
-est AS (
-  SELECT c.lang, c.tok AS token, min(coalesce(s.cnt, 0)) AS est
-  FROM cand c CROSS JOIN js j
-  LEFT JOIN cells s
-    ON s.lang = c.lang AND s.row = j.j
-   AND s.bucket = CAST(('0x' || substr(md5(c.tok || 'cms'
-                       || CAST(j.j AS VARCHAR)), 1, 15)) AS BIGINT) % 1024
-  GROUP BY 1, 2
-),
-exact AS (SELECT lang, tok AS token, count(*) AS exact
-          FROM tok GROUP BY 1, 2),
-ranked AS (
-  SELECT e.lang, e.token, CAST(e.est AS BIGINT) AS est,
-         CAST(x.exact AS BIGINT) AS exact,
-         row_number() OVER (PARTITION BY e.lang
-                            ORDER BY e.est DESC, e.token ASC) AS rn
-  FROM est e JOIN exact x ON e.lang = x.lang AND e.token = x.token
-)
-SELECT lang, token, est, exact FROM ranked WHERE rn <= 5
-"""
-
-
-def _q_er_supplier_entities(spark, sf_dir):
-    """Entity resolution end-to-end: exact edit-distance blocking
-    (q-gram count filter + length windows, no all-pairs step) feeds
-    min-label connected components — (supplier, canonical entity id) for
-    every supplier in a ≥2-member cluster. Composition of two
-    independently-oracled operators; the oracle here re-derives the
-    whole thing from all-pairs levenshtein + a recursive transitive
-    closure, so the hash match checks blocking exactness AND the
-    clustering fixpoint together."""
-    from bid_evaluation_spark.operators.dedup import near_duplicate_clusters
-    from bid_evaluation_spark.operators.fuzzy import fuzzy_join
-
-    sup = _t(spark, sf_dir, "supplier")
-    pairs = (fuzzy_join(sup, sup, "s_name", "s_suppkey", "s_suppkey",
-                        max_dist=1)
-             .filter(F.col("l_id") < F.col("r_id"))
-             .select(F.col("l_id").alias("a_id"),
-                     F.col("r_id").alias("b_id")))
-    clusters = near_duplicate_clusters(pairs)
-    return clusters.select(F.col("id").cast("long").alias("s_suppkey"),
-                           F.col("cluster_id").cast("long").alias("entity_id"))
-
-
-_SQL_ER_SUPPLIER_ENTITIES = """
-WITH RECURSIVE sup AS (
-  SELECT s_suppkey, s_name FROM supplier WHERE s_name IS NOT NULL
-),
-pairs AS (
-  SELECT a.s_suppkey AS a_id, b.s_suppkey AS b_id
-  FROM sup a JOIN sup b ON a.s_suppkey < b.s_suppkey
-  WHERE levenshtein(a.s_name, b.s_name) <= 1
-),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(id, lab) AS (
-  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON r.id = e.src
-)
-SELECT id AS s_suppkey, CAST(min(lab) AS BIGINT) AS entity_id
-FROM reach GROUP BY id
-"""
-
-
-def _q_dedup_minhash_corpus_documents(spark, sf_dir):
-    """Incremental cross-corpus near-dup: a simulated delivery (every 10th
-    doc re-sent with three appended tokens, re-keyed +1000000) banded
-    against the kept corpus — the band equi-join runs BETWEEN the two
-    signature frames, candidates verified with exact shingle Jaccard. The
-    oracle is the exact cross-corpus all-pairs Jaccard ≥ 0.2: valid
-    because this corpus's true pair similarities are bimodal (≥ ~0.75 or
-    ≈ 0), where 32-band/2-row LSH recall is ~1 (same device as the
-    within-corpus minhash oracle)."""
-    from bid_evaluation_spark.operators.dedup import minhash_against_corpus
-
-    docs = _t(spark, sf_dir, "documents")
-    new = (docs.filter(F.col("doc_id") % 10 == 0)
-           .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                   F.concat(F.col("text"),
-                            F.lit(" incremental delivery copy"))
-                   .alias("text")))
-    res = minhash_against_corpus(new, docs, threshold=0.2,
-                                 num_perm=64, bands=32)
-    return res.select("new_id", "corpus_id", _r4("jaccard").alias("jaccard"))
-
-
-_SQL_DEDUP_MINHASH_CORPUS_DOCUMENTS = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-),
-newd AS (
-  SELECT doc_id + 1000000 AS doc_id,
-         text || ' incremental delivery copy' AS text
-  FROM documents WHERE doc_id % 10 = 0
-),
-shc AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM (SELECT doc_id,
-          CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(text), '\\s+') END AS t
-        FROM corpus)
-),
-shn AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM (SELECT doc_id,
-          CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(text), '\\s+') END AS t
-        FROM newd)
-),
-invn AS (SELECT doc_id, unnest(s) AS g FROM shn),
-invc AS (SELECT doc_id, unnest(s) AS g FROM shc),
-szn AS (SELECT doc_id, len(s) AS n FROM shn WHERE len(s) > 0),
-szc AS (SELECT doc_id, len(s) AS n FROM shc WHERE len(s) > 0),
-inter AS (
-  -- inverted-index exact truth (new × corpus); see the minhash oracle
-  SELECT n.doc_id AS new_id, c.doc_id AS corpus_id, count(*) AS i
-  FROM invn n JOIN invc c ON n.g = c.g
-  GROUP BY n.doc_id, c.doc_id
-),
-pairs AS (
-  SELECT new_id, corpus_id,
-    CAST(i AS DOUBLE) / (nn.n + nc.n - i) AS j
-  FROM inter
-  JOIN szn nn ON nn.doc_id = new_id
-  JOIN szc nc ON nc.doc_id = corpus_id
-)
-SELECT new_id, corpus_id, round((j) * 10000.0) / 10000.0 AS jaccard
-FROM pairs WHERE j >= 0.2
-"""
-
-
-def _q_sketch_hll_by_group_documents(spark, sf_dir):
-    """Per-language HLL distinct-token estimate (the grouped twin of the
-    global sketch): register shuffle bounded at groups × 2^b rows with
-    partial max map-side, per-group Flajolet + linear-counting estimator,
-    exact distinct joined alongside for the oracle row. Deterministic md5
-    ⇒ DuckDB reproduces every register and the identical estimate."""
-    from bid_evaluation_spark.operators.sketch import hll_distinct_by_group
-    from bid_evaluation_spark.operators.text import tokens as _tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang", F.explode(_tokens(F.lower(F.col("text")))).alias("_tok"))
-    est = hll_distinct_by_group(toks, "lang", "_tok", b=10, seed="hll")
-    exact = toks.groupBy("lang").agg(
-        F.countDistinct("_tok").alias("exact"))
-    return (est.join(exact, "lang")
-            .select("lang", _r4("estimate").alias("estimate"), "m",
-                    "zero_registers", "exact"))
-
-
-_SQL_SKETCH_HLL_BY_GROUP_DOCUMENTS = f"""
-WITH tok AS (
-  SELECT lang,
-         unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-  FROM documents WHERE trim(lower(text)) != ''
-),
-h AS (
-  SELECT lang,
-         CAST(('0x' || substr(md5(tok || 'hll'), 1, 15)) AS BIGINT) AS h,
-         tok
-  FROM tok
-),
-r AS (
-  SELECT lang, h % 1024 AS idx,
-         CASE WHEN (h >> 10) = 0 THEN 51
-              ELSE 50 - length(bin(h >> 10)) + 1 END AS rho
-  FROM h
-),
-regs AS (SELECT lang, idx, max(rho) AS M FROM r GROUP BY 1, 2),
-agg AS (
-  SELECT lang, sum(power(CAST(2 AS DOUBLE), -M)) AS zp,
-         count(*) AS present
-  FROM regs GROUP BY lang
-),
-raw AS (
-  SELECT lang,
-         {_HLL_ALPHA_M2} / (zp + CAST(1024 - present AS DOUBLE)) AS rawe,
-         CAST(1024 - present AS BIGINT) AS zero_registers
-  FROM agg
-),
-exact AS (SELECT lang, CAST(count(DISTINCT tok) AS BIGINT) AS exact
-          FROM tok GROUP BY lang)
-SELECT r.lang,
-  round((CASE WHEN rawe <= CAST(2560 AS DOUBLE) AND zero_registers > 0
-         THEN CAST(1024 AS DOUBLE)
-              * ln(CAST(1024 AS DOUBLE) / CAST(zero_registers AS DOUBLE))
-         ELSE rawe END) * 10000.0) / 10000.0 AS estimate,
-  CAST(1024 AS BIGINT) AS m,
-  zero_registers,
-  e.exact
-FROM raw r JOIN exact e ON r.lang = e.lang
-"""
-
-
-# ---------------------------------------------------------------------------
-# supervised feature encoding (operators/encode.py)
-# ---------------------------------------------------------------------------
-
-
-def _q_emb_jl_project_embeddings(spark, sf_dir):
-    """Johnson–Lindenstrauss ±1 projection 64→16
-    (operators/embeddings.py jl_project): map-only Arrow kernel with an
-    ordered-j accumulation loop, bit-identical to the oracle's ascending
-    list_sum fold over the SAME md5-derived Rademacher signs."""
-    from bid_evaluation_spark.operators.embeddings import jl_project
-
-    emb = _t(spark, sf_dir, "embeddings")
-    proj = jl_project(emb, 64, 16)
-    return (proj.select("vec_id",
-                        F.posexplode(F.col("projected"))
-                        .alias("dim", "val"))
-            .select("vec_id", F.col("dim").cast("long").alias("dim"),
-                    (_r4("val") + F.lit(0.0)).alias("val")))
-
-
-_SQL_EMB_JL_PROJECT_EMBEDDINGS = """
-SELECT vec_id, CAST(t.t AS BIGINT) AS dim,
-  round(list_sum(list_transform(generate_series(1, 64), j ->
-          CAST(embedding[j] AS DOUBLE)
-          * (CASE WHEN substr(md5('jl:' || (j - 1) || ':' || t.t), 1, 1)
-                       IN ('0', '2', '4', '6', '8', 'a', 'c', 'e')
-                  THEN 1.0 ELSE -1.0 END)))
-        / sqrt(CAST(16 AS DOUBLE)) * 1e4) / 1e4 + 0.0 AS val
-FROM embeddings, (SELECT unnest(generate_series(0, 15)) AS t) t
-"""
-
-
-def _q_retrieval_postings_documents(spark, sf_dir):
-    """Positional inverted index (operators/retrieval.py
-    inverted_postings): one explode + one (term, doc) groupBy; min_df=5
-    via a term-keyed window count. Postings stay ROWS (a stop word is
-    many rows, never one unsplittable array). The oracle rebuilds the
-    index with the same tokenization and list_sort."""
-    from bid_evaluation_spark.operators.retrieval import inverted_postings
-
-    docs = _t(spark, sf_dir, "documents")
-    return inverted_postings(docs, min_df=5)
-
-
-_SQL_RETRIEVAL_POSTINGS_DOCUMENTS = r"""
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(lower(text)), '\s+') END AS t
-  FROM documents
-),
-pos AS (
-  SELECT doc_id, unnest(t) AS term,
-         unnest(generate_series(1, len(t))) AS p
-  FROM toks
-),
-posting AS (
-  SELECT term, doc_id, list_sort(list(p)) AS positions,
-         CAST(count(*) AS BIGINT) AS tf
-  FROM pos GROUP BY 1, 2
-)
-SELECT term, doc_id, positions, tf
-FROM (SELECT *, count(*) OVER (PARTITION BY term) AS dfq FROM posting)
-WHERE dfq >= 5
-"""
-
-
-def _q_retrieval_phrase_documents(spark, sf_dir):
-    """Exact phrase search "table hash" (operators/retrieval.py
-    phrase_search): per-term positional postings (built only for the
-    phrase terms) equi-joined on doc_id, position intersection as an
-    array filter. The oracle counts adjacent-pair matches directly."""
-    from bid_evaluation_spark.operators.retrieval import phrase_search
-
-    docs = _t(spark, sf_dir, "documents")
-    return phrase_search(docs, "table hash")
-
-
-_SQL_RETRIEVAL_PHRASE_DOCUMENTS = r"""
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(lower(text)), '\s+') END AS t
-  FROM documents
-),
-idx AS (
-  SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-  FROM toks WHERE len(t) >= 2
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches
-FROM idx WHERE t[i] = 'table' AND t[i + 1] = 'hash'
-GROUP BY doc_id
-"""
-
-
-def _q_pipeline_quantile2pass_lineitem(spark, sf_dir):
-    """Exact 0.9-quantile without a global sort (operators/pipeline.py
-    exact_quantile_2pass, 512 buckets): bucket-count pass → driver rank
-    walk → one-bucket bounded sort. The oracle is the plain global
-    order statistic — the two-pass scheme must land on the identical
-    element."""
-    from bid_evaluation_spark.operators.pipeline import exact_quantile_2pass
-
-    li = _t(spark, sf_dir, "lineitem")
-    n, k, v = exact_quantile_2pass(li, "l_extendedprice", 0.9,
-                                   n_buckets=512)
-    return spark.createDataFrame([(n, k, float(v) + 0.0)],
-                                 "n long, k long, value double")
-
-
-_SQL_PIPELINE_QUANTILE2PASS_LINEITEM = """
-WITH v AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
-           WHERE l_extendedprice IS NOT NULL),
-n AS (SELECT count(*) AS c FROM v),
-r AS (SELECT x, row_number() OVER (ORDER BY x) - 1 AS rk FROM v)
-SELECT CAST((SELECT c FROM n) AS BIGINT) AS n,
-       CAST((SELECT floor(0.9 * (c - 1)) FROM n) AS BIGINT) AS k,
-       x + 0.0 AS value
-FROM r WHERE rk = (SELECT floor(0.9 * (c - 1)) FROM n)
-"""
-
-
-def _q_enc_target_kfold_orders(spark, sf_dir):
-    """K-fold leakage-safe target encoding (operators/encode.py
-    target_encode): each order's priority class is encoded from the OTHER
-    folds' F-rate with smoothing toward the global prior — the
-    training-feature pattern where the row's own label must not leak into
-    its feature. Fold = o_orderkey mod 5 (explicit integer assignment so
-    both engines agree). Category and fold statistics are single groupBys;
-    the encode is a stats join + projection."""
-    from bid_evaluation_spark.operators.encode import target_encode
-
-    df = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority",
-        (F.col("o_orderstatus") == "F").cast("int").alias("_y"),
-        F.pmod(F.col("o_orderkey"), F.lit(5)).cast("int").alias("_fold"))
-    res = target_encode(df, "o_orderpriority", "_y", method="kfold",
-                        smoothing=10.0, fold_col="_fold")
-    r4 = F.round(F.col("target_enc") * 1e4) / 1e4 + F.lit(0.0)
-    return res.select("o_orderkey", r4.alias("enc"))
-
-
-_SQL_ENC_TARGET_KFOLD_ORDERS = """
-WITH base AS (
-  SELECT o_orderkey, o_orderpriority AS cat,
-         CASE WHEN o_orderstatus = 'F' THEN CAST(1 AS DOUBLE)
-              ELSE CAST(0 AS DOUBLE) END AS y,
-         o_orderkey % 5 AS fold
-  FROM orders
-),
-prior AS (SELECT avg(y) AS p FROM base),
-cs AS (SELECT cat, count(y) AS cnt, sum(y) AS s FROM base GROUP BY cat),
-fs AS (SELECT cat, fold, count(y) AS cnt, sum(y) AS s
-       FROM base GROUP BY cat, fold)
-SELECT b.o_orderkey,
-  round((cs.s - fs.s + CAST(10 AS DOUBLE) * prior.p)
-        / (cs.cnt - fs.cnt + CAST(10 AS DOUBLE)) * 1e4) / 1e4 + 0.0 AS enc
-FROM base b
-JOIN cs ON b.cat = cs.cat
-JOIN fs ON b.cat = fs.cat AND b.fold = fs.fold
-CROSS JOIN prior
-"""
-
-
-def _q_text_feature_hash_documents(spark, sf_dir):
-    """Hashing-trick bag-of-words in COO form (operators/encode.py
-    feature_hash_triplets): signed 64-bucket vectorizer whose vocabulary
-    is never materialized — the oracle replays bucket = (md5_60 >> 1) mod
-    64 and sign = low bit per token and re-aggregates. One (doc, bucket)
-    groupBy with map-side combine is the whole plan."""
-    from bid_evaluation_spark.operators.encode import feature_hash_triplets
-
-    df = _t(spark, sf_dir, "documents")
-    return feature_hash_triplets(df, n_features=64).select(
-        "doc_id", F.col("index").cast("long").alias("idx"),
-        F.col("value").alias("val"))
-
-
-_SQL_TEXT_FEATURE_HASH_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                     ELSE string_split_regex(trim(text), '\\s+')
-                END) AS tok
-  FROM documents
-),
-h AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(tok || 'fh'), 1, 15)) AS BIGINT) AS h
-  FROM toks
-),
-agg AS (
-  SELECT doc_id, CAST((h // 2) % 64 AS BIGINT) AS idx,
-         sum(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS val
-  FROM h GROUP BY doc_id, (h // 2) % 64
-)
-SELECT doc_id, idx, CAST(val AS BIGINT) AS val FROM agg WHERE val <> 0
-"""
-
-
-def _q_ml_stump_lineitem(spark, sf_dir):
-    """Histogram-based decision-stump training (operators/encode.py
-    decision_stump): the LightGBM split-finding pattern as two
-    aggregations — 16-bin sufficient statistics, prefix sums over the
-    bounded histogram, variance-reduction argmax on the 1e-6-rounded gain
-    (raw double gains are a cross-engine knife edge). The oracle replays
-    binning, prefix sums, and the argmax in SQL."""
-    from bid_evaluation_spark.operators.encode import decision_stump
-
-    df = _t(spark, sf_dir, "lineitem")
-    res = decision_stump(df, "l_extendedprice", "l_quantity", n_bins=16)
-
-    def r4(c):
-        return F.round(F.col(c) * 1e4) / 1e4 + F.lit(0.0)
-
-    return res.select(
-        F.col("split_bin").cast("long").alias("split_bin"),
-        r4("split_value").alias("split_value"),
-        "left_cnt", "right_cnt",
-        r4("left_mean").alias("left_mean"),
-        r4("right_mean").alias("right_mean"),
-        r4("gain").alias("gain"))
-
-
-_SQL_ML_STUMP_LINEITEM = """
-WITH base AS (
-  SELECT CAST(l_extendedprice AS DOUBLE) AS x,
-         CAST(l_quantity AS DOUBLE) AS y
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-),
-rng AS (SELECT min(x) AS lo, max(x) AS hi FROM base),
-hist AS (
-  SELECT CAST(CASE WHEN hi = lo THEN 0
-              ELSE least(floor((x - lo) / ((hi - lo) / 16.0)), 15)
-              END AS INT) AS bin,
-         count(y) AS cnt, sum(y) AS sy, sum(y * y) AS sy2
-  FROM base, rng GROUP BY 1
-),
-pre AS (
-  SELECT bin,
-    sum(cnt) OVER w AS lc, sum(sy) OVER w AS ls, sum(sy2) OVER w AS ls2,
-    sum(cnt) OVER () AS tc, sum(sy) OVER () AS ts, sum(sy2) OVER () AS ts2,
-    max(bin) OVER () AS last_bin
-  FROM hist
-  WINDOW w AS (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW)
-),
-gains AS (
-  SELECT bin, lc, tc - lc AS rc, ls, ts - ls AS rs,
-    (ts2 - ts * ts / tc) - (ls2 - ls * ls / lc)
-      - ((ts2 - ls2) - (ts - ls) * (ts - ls) / (tc - lc)) AS gain
-  FROM pre WHERE bin < last_bin AND tc - lc > 0
-)
-SELECT CAST(g.bin AS BIGINT) AS split_bin,
-  round((rng.lo + (g.bin + 1) * ((rng.hi - rng.lo) / 16.0)) * 1e4) / 1e4
-    + 0.0 AS split_value,
-  CAST(g.lc AS BIGINT) AS left_cnt, CAST(g.rc AS BIGINT) AS right_cnt,
-  round(g.ls / g.lc * 1e4) / 1e4 + 0.0 AS left_mean,
-  round(g.rs / g.rc * 1e4) / 1e4 + 0.0 AS right_mean,
-  round(g.gain * 1e4) / 1e4 + 0.0 AS gain
-FROM gains g, rng
-ORDER BY round(g.gain * 1e6) / 1e6 DESC, g.bin
-LIMIT 1
-"""
-
-
-def _q_ml_gbm_stumps_lineitem(spark, sf_dir):
-    """Gradient-boosted stumps (operators/encode.py gbm_stumps): 2
-    boosting rounds trained from ONE corpus histogram pass — stumps
-    split on bin boundaries, so the ensemble is piecewise-constant per
-    bin and every round's residual statistics are closed-form over the
-    exact per-bin (cnt, sum_y, sum_y2). The oracle unrolls both rounds
-    over the same bin table (the logreg-GD / Lloyd unrolled-training
-    pattern); totals are read off the LAST cumulative row so both sides
-    sum residuals in bin order."""
-    from bid_evaluation_spark.operators.encode import gbm_model_rows
-
-    df = _t(spark, sf_dir, "lineitem")
-    return gbm_model_rows(df, "l_extendedprice", "l_quantity",
-                          n_rounds=2, n_bins=8, learning_rate=0.5)
-
-
-def _sql_gbm_round(r: int, pred_expr: str) -> str:
-    """One unrolled boosting round: residual stats under ``pred_expr``
-    (an expression over hist/rng/b{r-1} columns), ordered prefix sums,
-    rounded-gain argmax -> ``b{r}`` with (bin, gain, ld, rd)."""
-    return f"""
-r{r} AS (
-  SELECT bin, cnt, sy - cnt * p AS sr,
-         sy2 - 2 * p * sy + cnt * p * p AS sr2
-  FROM (SELECT h.bin, h.cnt, h.sy, h.sy2, {pred_expr} AS p
-        FROM hist h{', b' + str(r - 1) if r > 1 else ''}, rng)
-),
-p{r} AS (
-  SELECT bin, cnt, sr, sr2,
-    sum(cnt) OVER w AS lc, sum(sr) OVER w AS ls, sum(sr2) OVER w AS ls2,
-    max(bin) OVER () AS last_bin, sum(cnt) OVER () AS tc
-  FROM r{r}
-  WINDOW w AS (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW)
-),
-t{r} AS (SELECT ls AS ts, ls2 AS ts2 FROM p{r} WHERE bin = last_bin),
-g{r} AS (
-  SELECT bin, lc, ls, rc, rs,
-    (ts2 - ts * ts / tc) - (ls2 - ls * ls / lc)
-      - (rs2 - rs * rs / rc) AS gain
-  FROM (SELECT p.bin, p.lc, p.ls, p.ls2, p.tc - p.lc AS rc,
-               t.ts - p.ls AS rs, t.ts2 - p.ls2 AS rs2, t.ts, t.ts2, p.tc
-        FROM p{r} p, t{r} t WHERE p.bin < p.last_bin)
-),
-b{r} AS (
-  SELECT bin, gain, ls / lc AS ld, rs / rc AS rd
-  FROM g{r} ORDER BY round(gain * 1e6) / 1e6 DESC, bin LIMIT 1
-)"""
-
-
-_SQL_ML_GBM_STUMPS_LINEITEM = """
-WITH base AS (
-  SELECT CAST(l_extendedprice AS DOUBLE) AS x,
-         CAST(l_quantity AS DOUBLE) AS y
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-),
-rng AS (SELECT min(x) AS lo, max(x) AS hi, avg(y) AS mean FROM base),
-hist AS (
-  SELECT CAST(least(floor((x - lo) / ((hi - lo) / 8.0)), 7) AS INT) AS bin,
-         count(y) AS cnt, sum(y) AS sy, sum(y * y) AS sy2
-  FROM base, rng GROUP BY 1
-),""" + _sql_gbm_round(1, "rng.mean") + "," + _sql_gbm_round(
-    2, "rng.mean + CAST(0.5 AS DOUBLE) * (CASE WHEN h.bin <= b1.bin"
-       " THEN b1.ld ELSE b1.rd END)") + """
-SELECT * FROM (
-  SELECT CAST(1 AS BIGINT) AS round, CAST(b1.bin AS BIGINT) AS split_bin,
-    round((rng.lo + (b1.bin + 1) * ((rng.hi - rng.lo) / 8.0)) * 1e4) / 1e4
-      + 0.0 AS split_value,
-    round(b1.ld * 1e4) / 1e4 + 0.0 AS left_delta,
-    round(b1.rd * 1e4) / 1e4 + 0.0 AS right_delta,
-    round(b1.gain * 1e4) / 1e4 + 0.0 AS gain,
-    round(rng.mean * 1e4) / 1e4 + 0.0 AS base
-  FROM b1, rng
-  UNION ALL
-  SELECT CAST(2 AS BIGINT), CAST(b2.bin AS BIGINT),
-    round((rng.lo + (b2.bin + 1) * ((rng.hi - rng.lo) / 8.0)) * 1e4) / 1e4
-      + 0.0,
-    round(b2.ld * 1e4) / 1e4 + 0.0,
-    round(b2.rd * 1e4) / 1e4 + 0.0,
-    round(b2.gain * 1e4) / 1e4 + 0.0,
-    round(rng.mean * 1e4) / 1e4 + 0.0
-  FROM b2, rng
-) ORDER BY round
-"""
-
-
-def _q_ml_isotonic_orders(spark, sf_dir):
-    """Isotonic (PAV) probability calibration (operators/encode.py
-    isotonic_bins): 50-bin binned F-rate against o_totalprice, pooled
-    monotone by exact pool-adjacent-violators on the bounded bin table.
-    The oracle replays the MINIMAX characterization iso_k = max_{i<=k}
-    min_{j>=k} mean(bins i..j) (Barlow et al. 1972) — equal to PAV, and
-    bit-compatible because the Spark side reports each block as a single
-    quotient of exactly-accumulated integral sums."""
-    from bid_evaluation_spark.operators.encode import isotonic_bins
-
-    df = _t(spark, sf_dir, "orders").withColumn(
-        "_y", (F.col("o_orderstatus") == "F").cast("int"))
-    res = isotonic_bins(df, "o_totalprice", "_y", n_bins=50)
-    return res.select(F.col("bin").cast("long").alias("bin"),
-                      "cnt", "rate_raw", "rate_iso")
-
-
-_SQL_ML_ISOTONIC_ORDERS = """
-WITH base AS (
-  SELECT CAST(o_totalprice AS DOUBLE) AS s,
-         CASE WHEN o_orderstatus = 'F' THEN CAST(1 AS DOUBLE)
-              ELSE CAST(0 AS DOUBLE) END AS y
-  FROM orders WHERE o_totalprice IS NOT NULL
-),
-rng AS (SELECT min(s) AS lo, max(s) AS hi FROM base),
-bins AS (
-  SELECT CAST(CASE WHEN hi = lo THEN 0
-              ELSE least(floor((s - lo) / ((hi - lo) / 50.0)), 49)
-              END AS INT) AS bin,
-         count(y) AS cnt, sum(y) AS sy
-  FROM base, rng GROUP BY 1
-),
-ord AS (SELECT bin, cnt, sy, row_number() OVER (ORDER BY bin) AS k
-        FROM bins),
-pre AS (
-  SELECT k, bin, cnt, sy,
-         sum(cnt) OVER (ORDER BY k) AS c, sum(sy) OVER (ORDER BY k) AS s
-  FROM ord
-),
-pairs AS (
-  SELECT i.k AS ik, j.k AS jk,
-         (j.s - i.s + i.sy) / (j.c - i.c + i.cnt) AS m
-  FROM pre i JOIN pre j ON i.k <= j.k
-),
-mins AS (
-  SELECT o.k, p.ik, min(p.m) AS mn
-  FROM ord o JOIN pairs p ON p.ik <= o.k AND p.jk >= o.k
-  GROUP BY o.k, p.ik
-),
-iso AS (SELECT k, max(mn) AS iso FROM mins GROUP BY k)
-SELECT CAST(o.bin AS BIGINT) AS bin, CAST(o.cnt AS BIGINT) AS cnt,
-  round(o.sy / o.cnt * 1e4) / 1e4 + 0.0 AS rate_raw,
-  round(iso.iso * 1e4) / 1e4 + 0.0 AS rate_iso
-FROM ord o JOIN iso USING (k)
-"""
-
-
-def _q_ml_knn_embeddings(spark, sf_dir):
-    """kNN classification (operators/classify.py knn_classify): 1-in-37
-    held-out queries, majority label among the 5 cosine-nearest
-    training vectors, vote ties to the smallest label. Retrieval is
-    the exact cosine_topk baseline (broadcast queries, map-side
-    similarity); the oracle replays retrieval, vote and tiebreak."""
-    from bid_evaluation_spark.operators.classify import knn_classify
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 37 == 0)
-    c = emb.filter(F.col("vec_id") % 37 != 0)
-    res = knn_classify(q, c, k=5)
-    return (res.join(q.select("vec_id", "label"), "vec_id")
-            .select("vec_id", "label", "predicted", "votes", "top_cosine",
-                    (F.col("predicted") == F.col("label")).alias("correct")))
-
-
-_SQL_ML_KNN_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e, label
-           FROM embeddings),
-q AS (SELECT vec_id AS qid, e AS qe, label AS tl FROM v
-      WHERE vec_id % 37 = 0),
-c AS (SELECT vec_id, e, label FROM v WHERE vec_id % 37 <> 0),
-sims AS (
-  SELECT q.qid, q.tl, c.vec_id AS nid, c.label AS nl,
-    list_sum(list_transform(generate_series(1, len(qe)),
-                            i -> qe[i] * c.e[i]))
-      / (sqrt(list_sum(list_transform(qe, x -> x * x)))
-         * sqrt(list_sum(list_transform(c.e, x -> x * x)))) AS cosine
-  FROM q CROSS JOIN c
-  WHERE q.qid != c.vec_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY qid
-                               ORDER BY cosine DESC, nid ASC) AS rnk
-  FROM sims
-),
-votes AS (
-  SELECT qid, tl, nl AS predicted, count(*) AS votes,
-         round(max(cosine) * 1e4) / 1e4 + 0.0 AS top_cosine
-  FROM ranked WHERE rnk <= 5 GROUP BY qid, tl, nl
-),
-best AS (
-  SELECT *, row_number() OVER (PARTITION BY qid
-                               ORDER BY votes DESC, predicted ASC) AS rk
-  FROM votes
-)
-SELECT qid AS vec_id, tl AS label, predicted,
-       CAST(votes AS BIGINT) AS votes, top_cosine,
-       predicted = tl AS correct
-FROM best WHERE rk = 1
-"""
-
-
-def _q_ml_centroid_embeddings(spark, sf_dir):
-    """Nearest-class-centroid (Rocchio) classification
-    (operators/classify.py centroid_classify): training is ONE
-    posexplode aggregation (per-label per-dim means), scoring an
-    in-plan fold against the broadcast C-row centroid table — no numpy
-    in the scored path, so the oracle replays the arithmetic exactly.
-    Same 1-in-37 held-out split as the kNN query."""
-    from bid_evaluation_spark.operators.classify import centroid_classify
-
-    emb = _t(spark, sf_dir, "embeddings")
-    tr = emb.filter(F.col("vec_id") % 37 != 0)
-    te = emb.filter(F.col("vec_id") % 37 == 0)
-    res = centroid_classify(tr, te)
-    lab = te.select(F.col("vec_id").alias("id"), "label")
-    return (res.join(lab, "id")
-            .select(F.col("id").alias("vec_id"), "label", "predicted",
-                    "d2",
-                    (F.col("predicted") == F.col("label")).alias("correct")))
-
-
-_SQL_ML_CENTROID_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e, label
-           FROM embeddings WHERE embedding IS NOT NULL),
-tr AS (SELECT * FROM v WHERE vec_id % 37 <> 0),
-te AS (SELECT * FROM v WHERE vec_id % 37 = 0),
-dims AS (
-  SELECT label, i, avg(e[i]) AS m
-  FROM (SELECT label, e, unnest(generate_series(1, len(e))) AS i FROM tr)
-  GROUP BY label, i
-),
-cent AS (
-  SELECT label AS pred, list(m ORDER BY i) AS ce FROM dims GROUP BY label
-),
-scored AS (
-  SELECT te.vec_id, te.label, c.pred,
-    list_sum(list_transform(c.ce, x -> x * x))
-      - 2 * list_sum(list_transform(generate_series(1, len(te.e)),
-                                    i -> te.e[i] * c.ce[i])) AS rel,
-    list_sum(list_transform(te.e, x -> x * x)) AS x2
-  FROM te CROSS JOIN cent c
-)
-SELECT vec_id, label, pred AS predicted,
-  round((x2 + rel) * 1e4) / 1e4 + 0.0 AS d2,
-  pred = label AS correct
-FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                   ORDER BY rel ASC, pred ASC) AS rk
-      FROM scored)
-WHERE rk = 1
-"""
-
-
-def _q_ml_silhouette_embeddings(spark, sf_dir):
-    """Simplified silhouette per cluster (operators/similarity.py
-    silhouette_simplified) under the pinned vec_id<8 centroids shared
-    with cluster_assign: per point a = nearest-centroid L2, b = second
-    nearest, s = (b−a)/max(a,b), averaged per cluster. In-plan fold
-    distances — exact oracle replay."""
-    from bid_evaluation_spark.operators.similarity import (
-        silhouette_simplified)
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = (emb.filter(F.col("vec_id") < 8)
-             .select(F.col("vec_id").alias("cid"),
-                     F.col("embedding").alias("ce")))
-    res = silhouette_simplified(emb, cents)
-    return res.select(F.col("cluster").cast("long").alias("cluster"),
-                      "n", "mean_s")
-
-
-_SQL_ML_SILHOUETTE_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings
-           WHERE embedding IS NOT NULL),
-c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-d AS (
-  SELECT v.vec_id, c.cid,
-    sqrt(greatest(
-      list_sum(list_transform(v.e, x -> x * x))
-      + list_sum(list_transform(c.ce, x -> x * x))
-      - 2 * list_sum(list_transform(generate_series(1, len(v.e)),
-                                    i -> v.e[i] * c.ce[i])),
-      CAST(0 AS DOUBLE))) AS dist
-  FROM v CROSS JOIN c
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY vec_id
-                               ORDER BY dist ASC, cid ASC) AS rk
-  FROM d
-),
-ab AS (
-  SELECT vec_id,
-         min(CASE WHEN rk = 1 THEN cid END) AS cluster,
-         min(CASE WHEN rk = 1 THEN dist END) AS a,
-         min(CASE WHEN rk = 2 THEN dist END) AS b
-  FROM ranked WHERE rk <= 2 GROUP BY vec_id
-)
-SELECT CAST(cluster AS BIGINT) AS cluster,
-  CAST(count(*) AS BIGINT) AS n,
-  round(avg(CASE WHEN greatest(a, b) > 0
-                 THEN (b - a) / greatest(a, b)
-                 ELSE CAST(0 AS DOUBLE) END) * 1e4) / 1e4 + 0.0 AS mean_s
-FROM ab WHERE b IS NOT NULL GROUP BY cluster
-"""
-
-
-def _q_pipe_contamination_report_documents(spark, sf_dir):
-    """Per-eval-doc leakage audit (operators/pipeline.py
-    contamination_report): share of each held-out doc's distinct
-    3-shingles present anywhere in the train split (directional
-    containment on shingle STRINGS — exact, no hash caveat), flagged at
-    0.3. Same split as pipe_decontaminate. The oracle rebuilds the
-    shingle sets and the semi-join containment."""
-    from bid_evaluation_spark.operators.pipeline import contamination_report
-
-    d = _t(spark, sf_dir, "documents")
-    train = d.filter(F.col("doc_id") % 10 != 0)
-    evals = d.filter(F.col("doc_id") % 10 == 0)
-    return contamination_report(train, evals, k=3, threshold=0.3)
-
-
-_SQL_PIPE_CONTAMINATION_REPORT_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-tsh AS (
-  SELECT DISTINCT unnest(s) AS sg FROM sh WHERE doc_id % 10 != 0
-),
-esh AS (
-  SELECT doc_id AS eval_id, unnest(s) AS sg FROM sh WHERE doc_id % 10 = 0
-),
-tot AS (
-  SELECT doc_id AS eval_id, len(s) AS n_shingles FROM sh
-  WHERE doc_id % 10 = 0
-),
-hit AS (
-  SELECT eval_id, count(*) AS n_hit FROM esh
-  WHERE sg IN (SELECT sg FROM tsh) GROUP BY eval_id
-)
-SELECT t.eval_id, CAST(t.n_shingles AS BIGINT) AS n_shingles,
-  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-  round(CASE WHEN t.n_shingles > 0
-             THEN CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
-                  / CAST(t.n_shingles AS DOUBLE)
-             ELSE CAST(0 AS DOUBLE) END * 1e4) / 1e4 + 0.0 AS share,
-  (round(CASE WHEN t.n_shingles > 0
-              THEN CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
-                   / CAST(t.n_shingles AS DOUBLE)
-              ELSE CAST(0 AS DOUBLE) END * 1e4) / 1e4 + 0.0)
-    >= CAST(0.3 AS DOUBLE) AS leaked
-FROM tot t LEFT JOIN hit h ON t.eval_id = h.eval_id
-"""
-
-
-def _q_pipe_mix_manifest_documents(spark, sf_dir):
-    """Training-mix manifest (operators/pipeline.py mix_manifest): per
-    language, whitespace-token inventory vs a 40/15/15/15/15 design at
-    a 1M-token budget → sampling rate and epoch count per source. One
-    token-count aggregation; the oracle replays the arithmetic."""
-    from bid_evaluation_spark.operators.pipeline import mix_manifest
-
-    d = _t(spark, sf_dir, "documents")
-    return mix_manifest(d, "lang", "text",
-                        {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15,
-                         "zh": 0.15},
-                        target_total_tokens=1_000_000)
-
-
-_SQL_PIPE_MIX_MANIFEST_DOCUMENTS = """
-WITH g AS (
-  SELECT lang AS source, count(*) AS n_docs,
-    sum(CASE WHEN trim(text) = '' THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END)
-      AS n_tokens
-  FROM documents WHERE lang IS NOT NULL GROUP BY 1
-),
-w AS (
-  SELECT * FROM (VALUES ('en', CAST(0.4 AS DOUBLE)),
-                        ('de', CAST(0.15 AS DOUBLE)),
-                        ('es', CAST(0.15 AS DOUBLE)),
-                        ('fr', CAST(0.15 AS DOUBLE)),
-                        ('zh', CAST(0.15 AS DOUBLE))) AS t(source, weight)
-)
-SELECT g.source, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST(n_tokens AS BIGINT) AS n_tokens,
-  round(COALESCE(w.weight, CAST(0 AS DOUBLE)) * 1e4) / 1e4 + 0.0
-    AS weight,
-  CAST(round(COALESCE(w.weight, CAST(0 AS DOUBLE))
-             * CAST(1000000 AS DOUBLE)) AS BIGINT) AS need_tokens,
-  round(CASE WHEN n_tokens > 0
-             THEN COALESCE(w.weight, CAST(0 AS DOUBLE))
-                  * CAST(1000000 AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-             ELSE CAST(0 AS DOUBLE) END * 1e4) / 1e4 + 0.0
-    AS sampling_rate,
-  CAST(ceil(CASE WHEN n_tokens > 0
-                 THEN COALESCE(w.weight, CAST(0 AS DOUBLE))
-                      * CAST(1000000 AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                 ELSE CAST(0 AS DOUBLE) END) AS BIGINT) AS epochs
-FROM g LEFT JOIN w ON g.source = w.source
-"""
-
-
-def _q_pipe_dup_ngram_documents(spark, sf_dir):
-    """Duplicate-3-gram (memorization-risk) rate per source
-    (operators/pipeline.py dup_ngram_rate): share of 3-gram OCCURRENCES
-    that repeat within the source — the dial span-dedup exists to push
-    down. One explode + one count-distinct groupBy; the oracle replays
-    multiplicity-kept n-grams."""
-    from bid_evaluation_spark.operators.pipeline import dup_ngram_rate
-
-    d = _t(spark, sf_dir, "documents")
-    return dup_ngram_rate(d, "source", "text", n=3)
-
-
-_SQL_PIPE_DUP_NGRAM_DOCUMENTS = """
-WITH toks AS (
-  SELECT source,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents WHERE source IS NOT NULL
-),
-ng AS (
-  SELECT source,
-    CASE WHEN len(t) >= 3 THEN list_transform(
-      generate_series(1, len(t) - 2),
-      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-    ELSE CAST([] AS VARCHAR[]) END AS g
-  FROM toks
-),
-docs AS (SELECT source, count(*) AS n_docs FROM ng GROUP BY 1),
-ex AS (SELECT source, unnest(g) AS s FROM ng),
-agg AS (
-  SELECT source, count(*) AS total, count(DISTINCT s) AS dist
-  FROM ex GROUP BY 1
-)
-SELECT d.source AS "group", CAST(d.n_docs AS BIGINT) AS n_docs,
-  CAST(COALESCE(a.total, 0) AS BIGINT) AS total_ngrams,
-  CAST(COALESCE(a.dist, 0) AS BIGINT) AS distinct_ngrams,
-  CASE WHEN a.total > 0
-       THEN round((CAST(1 AS DOUBLE)
-                   - CAST(a.dist AS DOUBLE) / CAST(a.total AS DOUBLE))
-                  * 1e4) / 1e4 + 0.0 END AS dup_rate
-FROM docs d LEFT JOIN agg a ON d.source = a.source
-"""
-
-
-def _q_quality_scorecard_documents(spark, sf_dir):
-    """Per-language quality dashboard row (operators/quality.py
-    quality_scorecard): mean / exact-median / pass-rate of the 0-100
-    heuristic score — one codegen scoring pass + one grouped exact
-    percentile. The oracle replays the score composition and
-    roll-up."""
-    from bid_evaluation_spark.operators.quality import quality_scorecard
-
-    d = _t(spark, sf_dir, "documents")
-    return quality_scorecard(d, "lang", threshold=50.0)
-
-
-_SQL_QUALITY_SCORECARD_DOCUMENTS = f"""
-WITH toks AS (
-  SELECT lang, text,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents WHERE lang IS NOT NULL
-),
-comp AS (
-  SELECT lang,
-    least(CAST(len(t) AS DOUBLE) / 200.0, 1.0) * 40.0
-    + (CASE WHEN len(t) > 0
-            THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t)
-            ELSE 0.0 END) * 30.0
-    + least((CASE WHEN len(t) > 0
-                  THEN CAST(len(list_filter(t, x -> x IN {{_SW}})) AS DOUBLE)
-                       / len(t)
-                  ELSE 0.0 END) * 5.0, 1.0) * 20.0
-    + (1.0 - least((CASE WHEN length(text) > 0
-                         THEN CAST(length(regexp_replace(text, '[\\w\\s]',
-                                                         '', 'g')) AS DOUBLE)
-                              / length(text)
-                         ELSE 0.0 END) * 10.0, 1.0)) * 10.0 AS q
-  FROM toks
-)
-SELECT lang AS "group", CAST(count(*) AS BIGINT) AS n_docs,
-  round(avg(q) * 1e4) / 1e4 + 0.0 AS mean_q,
-  round((quantile_cont(q, 0.5)) * 1e4) / 1e4 + 0.0 AS p50_q,
-  round(avg(CASE WHEN q >= CAST(50 AS DOUBLE) THEN CAST(1 AS DOUBLE)
-                 ELSE CAST(0 AS DOUBLE) END) * 1e4) / 1e4 + 0.0
-    AS pass_rate
-FROM comp GROUP BY lang
-""".replace("{_SW}", _STOPWORDS_SQL)
-
-
-def _q_dedup_savings_documents(spark, sf_dir):
-    """Dedup capacity planning (operators/dedup.py
-    dedup_savings_report): per source, docs/chars that exact dedup
-    would drop — cross-source duplicates charge the group holding the
-    redundant bytes (global min-id canonical). Same md5 fingerprint and
-    shuffle key as the dedup itself; the oracle replays the window and
-    roll-up."""
-    from bid_evaluation_spark.operators.dedup import dedup_savings_report
-
-    d = _t(spark, sf_dir, "documents")
-    return dedup_savings_report(d, "source")
-
-
-_SQL_DEDUP_SAVINGS_DOCUMENTS = """
-WITH rows_ AS (
-  SELECT source AS g, doc_id,
-    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
-    COALESCE(n_chars, 0) AS ch
-  FROM documents
-),
-scored AS (
-  SELECT g, doc_id, ch,
-         doc_id <> min(doc_id) OVER (PARTITION BY fp) AS dropped
-  FROM rows_
-)
-SELECT g AS "group", CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(sum(CASE WHEN dropped THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-  CAST(sum(ch) AS BIGINT) AS chars_total,
-  CAST(sum(CASE WHEN dropped THEN ch ELSE 0 END) AS BIGINT)
-    AS chars_dropped,
-  CASE WHEN sum(ch) > 0
-       THEN round(CAST(sum(CASE WHEN dropped THEN ch ELSE 0 END) AS DOUBLE)
-                  / CAST(sum(ch) AS DOUBLE) * 1e4) / 1e4 + 0.0
-  END AS savings_rate
-FROM scored GROUP BY g
-"""
-
-
-def _q_text_readability_documents(spark, sf_dir):
-    """Coleman–Liau readability per document (operators/text.py
-    coleman_liau): the grade-level index that needs only letters /
-    words / sentences — every count engine-portable (no syllables),
-    sentence split shared with the oracled sentence UDTF. Pure codegen
-    projection; the oracle replays the three counts and the affine
-    formula."""
-    from bid_evaluation_spark.operators.text import (coleman_liau,
-                                                     sentence_count,
-                                                     token_count)
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_words"),
-        sentence_count(F.col("text")).alias("n_sentences"),
-        F.regexp_count(F.col("text"), F.lit(r"[A-Za-z]")).cast("long")
-        .alias("n_letters"),
-        (_r4(coleman_liau("text")) + F.lit(0.0)).alias("cli"))
-
-
-_SQL_TEXT_READABILITY_DOCUMENTS = """
-WITH base AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN 0
-         ELSE len(string_split_regex(trim(text), '\\s+')) END AS w,
-    len(regexp_extract_all(text, '[A-Za-z]')) AS l,
-    CASE WHEN trim(text) = '' THEN 0
-         ELSE len(list_filter(
-                string_split(
-                  regexp_replace(trim(text), '([.!?])\\s+',
-                                 '\\1' || chr(1), 'g'),
-                  chr(1)),
-                x -> trim(x) != '')) END AS s
-  FROM documents
-)
-SELECT doc_id, CAST(w AS BIGINT) AS n_words,
-  CAST(s AS BIGINT) AS n_sentences, CAST(l AS BIGINT) AS n_letters,
-  CASE WHEN w > 0
-       THEN round((CAST(0.0588 AS DOUBLE)
-                   * (CAST(l AS DOUBLE) / CAST(w AS DOUBLE)
-                      * CAST(100 AS DOUBLE))
-                   - CAST(0.296 AS DOUBLE)
-                     * (CAST(s AS DOUBLE) / CAST(w AS DOUBLE)
-                        * CAST(100 AS DOUBLE))
-                   - CAST(15.8 AS DOUBLE)) * 1e4) / 1e4 + 0.0
-  END AS cli
-FROM base
-"""
-
-
-# ---------------------------------------------------------------------------
 # round-7 wave: winnowing, corpus overlap, script profile, MMR
 # ---------------------------------------------------------------------------
-
-def _q_text_winnow_overlap_documents(spark, sf_dir):
-    """Winnowing-fingerprint corpus overlap (text.py winnow_fingerprints,
-    Schleimer et al. SIGMOD 2003) between even- and odd-doc_id halves:
-    md5-portable k-gram hashes, window-min selection (k=3, w=4). ONE
-    pass: fingerprints tagged with their side, one (fp, side) distinct,
-    one per-fp side-presence aggregate → all three counts from a single
-    action (the previous three-action shape re-winnowed the corpus four
-    times). The oracle replays tokenize → md5 grams → window mins →
-    distinct → counts, selection and all."""
-    from bid_evaluation_spark.operators.text import winnow_fingerprints
-
-    d = _t(spark, sf_dir, "documents")
-    fps = (d.select((F.col("doc_id") % 2).alias("side"),
-                    F.explode(winnow_fingerprints(F.col("text"), k=3, w=4))
-                    .alias("fp"))
-           .distinct())
-    per_fp = fps.groupBy("fp").agg(
-        F.max((F.col("side") == 0).cast("int")).alias("_a"),
-        F.max((F.col("side") == 1).cast("int")).alias("_b"))
-    (row,) = (per_fp.agg(
-        F.sum("_a").alias("na"), F.sum("_b").alias("nb"),
-        F.sum(F.col("_a") * F.col("_b")).alias("common")).collect())
-    na, nb, common = int(row["na"] or 0), int(row["nb"] or 0), \
-        int(row["common"] or 0)
-    union = na + nb - common
-    return spark.createDataFrame(
-        [(na, nb, common,
-          float(round(common / union * 1e4) / 1e4) if union else None)],
-        "fp_a long, fp_b long, fp_common long, jaccard double")
-
-
-_SQL_TEXT_WINNOW_OVERLAP_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-hashes AS (
-  SELECT doc_id,
-    list_transform(
-      list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-      g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)) AS h
-  FROM toks
-),
-fps AS (
-  SELECT doc_id, list_distinct(
-    CASE WHEN len(h) - 3 >= 1 THEN
-      list_transform(generate_series(1, len(h) - 3),
-                     i -> list_min(list_slice(h, i, i + 3)))
-    WHEN len(h) >= 1 THEN [list_min(h)]
-    ELSE CAST([] AS BIGINT[]) END) AS f
-  FROM hashes
-),
-a AS (SELECT DISTINCT unnest(f) AS fp FROM fps WHERE doc_id % 2 = 0),
-b AS (SELECT DISTINCT unnest(f) AS fp FROM fps WHERE doc_id % 2 = 1),
-c AS (SELECT count(*) AS nc FROM a JOIN b USING (fp))
-SELECT (SELECT count(*) FROM a) AS fp_a,
-       (SELECT count(*) FROM b) AS fp_b,
-       nc AS fp_common,
-       CASE WHEN (SELECT count(*) FROM a) + (SELECT count(*) FROM b) - nc > 0
-            THEN round(CAST(nc AS DOUBLE)
-                       / ((SELECT count(*) FROM a)
-                          + (SELECT count(*) FROM b) - nc) * 1e4) / 1e4
-       END AS jaccard
-FROM c
-"""
-
-
-def _q_dedup_corpus_overlap_documents(spark, sf_dir):
-    """EXACT corpus-level shingle overlap (dedup.py corpus_overlap)
-    between the even/odd doc_id halves: distinct 3-shingles per corpus,
-    one join for the intersection — jaccard + both containments. The
-    aggregate contamination estimate run before per-document
-    decontaminate. The oracle replays distinct shingle sets and the
-    count arithmetic."""
-    from bid_evaluation_spark.operators.dedup import corpus_overlap
-
-    d = _t(spark, sf_dir, "documents")
-    return corpus_overlap(d.filter(F.col("doc_id") % 2 == 0),
-                          d.filter(F.col("doc_id") % 2 == 1), k=3)
-
-
-_SQL_DEDUP_CORPUS_OVERLAP_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN
-      list_transform(generate_series(1, len(t) - 2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-a AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 2 = 0),
-b AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 2 = 1),
-c AS (SELECT count(*) AS nc FROM a JOIN b USING (g)),
-n AS (SELECT (SELECT count(*) FROM a) AS na,
-             (SELECT count(*) FROM b) AS nb, nc FROM c)
-SELECT CAST(na AS BIGINT) AS shingles_a, CAST(nb AS BIGINT) AS shingles_b,
-  CAST(nc AS BIGINT) AS shingles_common,
-  CASE WHEN na + nb - nc > 0
-       THEN round(CAST(nc AS DOUBLE) / (na + nb - nc) * 1e4) / 1e4
-  END AS jaccard,
-  CASE WHEN na > 0 THEN round(CAST(nc AS DOUBLE) / na * 1e4) / 1e4
-  END AS containment_a_in_b,
-  CASE WHEN nb > 0 THEN round(CAST(nc AS DOUBLE) / nb * 1e4) / 1e4
-  END AS containment_b_in_a
-FROM n
-"""
-
-
-def _q_text_script_profile_documents(spark, sf_dir):
-    """Writing-system histogram (text.py script_profile) rolled up per
-    (lang, dominant_script): the pre-language-ID router check — zh docs
-    should dominate cjk, European langs latin. Explicit codepoint-range
-    regexes on BOTH engines (never \\p{script=}, the engines disagree).
-    The oracle replays regexp_extract_all counts, the first-maximal
-    dominant pick and the rollup."""
-    from bid_evaluation_spark.operators.text import script_profile
-
-    d = _t(spark, sf_dir, "documents")
-    prof = script_profile(d, "text", id_cols=("doc_id", "lang"))
-    return (prof.groupBy("lang", "dominant_script")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum("n_latin").cast("long").alias("latin_chars"),
-                 F.sum("n_cjk").cast("long").alias("cjk_chars"),
-                 F.sum("n_other").cast("long").alias("other_chars")))
-
-
-_SQL_TEXT_SCRIPT_PROFILE_DOCUMENTS = """
-WITH prof AS (
-  SELECT doc_id, lang,
-    length(text) AS n_chars,
-    len(regexp_extract_all(text, '[A-Za-zÀ-ɏ]')) AS n_latin,
-    len(regexp_extract_all(text, '[0-9]')) AS n_digit,
-    len(regexp_extract_all(text, '[Ѐ-ӿ]')) AS n_cyrillic,
-    len(regexp_extract_all(text, '[Ͱ-Ͽ]')) AS n_greek,
-    len(regexp_extract_all(text, '[؀-ۿ]')) AS n_arabic,
-    len(regexp_extract_all(text, '[֐-׿]')) AS n_hebrew,
-    len(regexp_extract_all(text, '[ऀ-ॿ]')) AS n_devanagari,
-    len(regexp_extract_all(text, '[぀-ヿ一-鿿가-힯]')) AS n_cjk
-  FROM documents
-),
-dom AS (
-  SELECT *,
-    n_chars - (n_latin + n_digit + n_cyrillic + n_greek + n_arabic
-               + n_hebrew + n_devanagari + n_cjk) AS n_other,
-    CASE
-      WHEN n_cjk > greatest(n_latin, n_digit, n_cyrillic, n_greek,
-                            n_arabic, n_hebrew, n_devanagari)
-        THEN 'cjk'
-      WHEN n_devanagari > greatest(n_latin, n_digit, n_cyrillic, n_greek,
-                                   n_arabic, n_hebrew)
-        THEN 'devanagari'
-      WHEN n_hebrew > greatest(n_latin, n_digit, n_cyrillic, n_greek,
-                               n_arabic)
-        THEN 'hebrew'
-      WHEN n_arabic > greatest(n_latin, n_digit, n_cyrillic, n_greek)
-        THEN 'arabic'
-      WHEN n_greek > greatest(n_latin, n_digit, n_cyrillic) THEN 'greek'
-      WHEN n_cyrillic > greatest(n_latin, n_digit) THEN 'cyrillic'
-      WHEN n_digit > n_latin THEN 'digit'
-      WHEN n_latin > 0 THEN 'latin'
-      ELSE 'other'
-    END AS dominant_script
-  FROM prof
-)
-SELECT lang, dominant_script, CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(sum(n_latin) AS BIGINT) AS latin_chars,
-  CAST(sum(n_cjk) AS BIGINT) AS cjk_chars,
-  CAST(sum(n_other) AS BIGINT) AS other_chars
-FROM dom GROUP BY lang, dominant_script
-"""
-
-
-def _q_retrieval_mmr_embeddings(spark, sf_dir):
-    """Maximal-marginal-relevance diversification (retrieval.py
-    mmr_rerank, Carbonell & Goldstein 1998) of each query's cosine
-    top-8: three unrolled greedy steps IN THE PLAN (join against the
-    selected set + cosine max + windowed argmax on the 1e-6-rounded
-    objective). The oracle replays retrieval and all three greedy
-    steps as chained CTEs."""
-    from bid_evaluation_spark.operators.retrieval import mmr_rerank
-    from bid_evaluation_spark.operators.similarity import cosine_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 6)
-    nn = cosine_topk(q, emb, k=8)
-    cands = nn.join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-        "neighbor_id")
-    res = mmr_rerank(cands, select_k=3, lam=0.7, query_col="query_id",
-                     id_col="neighbor_id", rel_col="cosine",
-                     vec_col="embedding")
-    return res.select("query_id", F.col("rank").cast("long").alias("rank"),
-                      "neighbor_id", "mmr_score")
-
-
-_SQL_RETRIEVAL_MMR_EMBEDDINGS = """
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) e FROM embeddings),
-q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 6),
-sims AS (
-  SELECT q.query_id, v.vec_id AS nid, v.e AS ce,
-    list_sum(list_transform(generate_series(1, len(qe)), i -> qe[i]*v.e[i]))
-      / (sqrt(list_sum(list_transform(qe, x -> x*x)))
-         * sqrt(list_sum(list_transform(v.e, x -> x*x)))) AS rel
-  FROM q CROSS JOIN v
-  WHERE q.query_id != v.vec_id
-),
-cand AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY rel DESC, nid ASC) AS rnk
-    FROM sims) WHERE rnk <= 8
-),
-s1 AS (
-  SELECT query_id, nid, ce, sc FROM (
-    SELECT *, round(0.7 * rel * 1e6) / 1e6 AS sc,
-      row_number() OVER (PARTITION BY query_id
-                         ORDER BY round(0.7 * rel * 1e6) / 1e6 DESC,
-                                  nid ASC) AS rk
-    FROM cand) WHERE rk = 1
-),
-r2 AS (
-  SELECT c.query_id, c.nid, c.ce, c.rel,
-    round((0.7 * c.rel - 0.3 *
-      list_sum(list_transform(generate_series(1, len(c.ce)),
-                              i -> c.ce[i]*s.ce[i]))
-        / (sqrt(list_sum(list_transform(c.ce, x -> x*x)))
-           * sqrt(list_sum(list_transform(s.ce, x -> x*x)))))
-      * 1e6) / 1e6 AS sc
-  FROM cand c JOIN s1 s ON c.query_id = s.query_id AND c.nid != s.nid
-),
-s2 AS (
-  SELECT query_id, nid, ce, sc FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sc DESC, nid ASC) AS rk
-    FROM r2) WHERE rk = 1
-),
-r3 AS (
-  SELECT c.query_id, c.nid,
-    round((0.7 * c.rel - 0.3 *
-      list_max(list_transform([s1.ce, s2.ce], se ->
-        list_sum(list_transform(generate_series(1, len(c.ce)),
-                                i -> c.ce[i]*se[i]))
-          / (sqrt(list_sum(list_transform(c.ce, x -> x*x)))
-             * sqrt(list_sum(list_transform(se, x -> x*x)))))))
-      * 1e6) / 1e6 AS sc
-  FROM cand c
-  JOIN s1 ON c.query_id = s1.query_id
-  JOIN s2 ON c.query_id = s2.query_id
-  WHERE c.nid != s1.nid AND c.nid != s2.nid
-),
-s3 AS (
-  SELECT query_id, nid, sc FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sc DESC, nid ASC) AS rk
-    FROM r3) WHERE rk = 1
-)
-SELECT query_id, CAST(1 AS BIGINT) AS rank, nid AS neighbor_id,
-       round(sc * 1e4) / 1e4 + 0.0 AS mmr_score FROM s1
-UNION ALL
-SELECT query_id, CAST(2 AS BIGINT), nid, round(sc * 1e4) / 1e4 + 0.0
-FROM s2
-UNION ALL
-SELECT query_id, CAST(3 AS BIGINT), nid, round(sc * 1e4) / 1e4 + 0.0
-FROM s3
-"""
-
-
-def _q_dedup_homoglyph_documents(spark, sf_dir):
-    """Homoglyph/confusable dedup (operators/confusable.py — fixed
-    UTS#39-style mapping, NATIVE Column transform: regexp_replace +
-    translate + lower, zero Python): per doc a spam template
-    (doc_id%9) obfuscated by class — Cyrillic е-swap (d%4==1),
-    Cyrillic о-swap + zero-width space injection (d%4==2), fullwidth
-    'spam' (d%4==3), plain (d%4==0) — all collapsing to one skeleton
-    per template. Output is the ordered dup marking; the oracle is
-    FIRST-PRINCIPLES (no goldens): DuckDB rebuilds the obfuscated raw
-    text, applies the IDENTICAL translate/regexp_replace/lower
-    normalization from the module's own mapping constants, and
-    re-derives the min-id witness."""
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.confusable import (
-        mark_homoglyph_dups)
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen(batches):
-        zwsp = "​"
-        for pdf in batches:
-            texts = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                base = f"spam offer {d % 9} click here now"
-                m = d % 4
-                if m == 1:
-                    t = base.replace("e", "е")
-                elif m == 2:
-                    t = base.replace("o", "о")
-                    t = t[0] + zwsp + t[1:]
-                elif m == 3:
-                    t = base.replace("spam", "ｓｐａｍ")
-                else:
-                    t = base
-                texts.append(t)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "text": texts})
-
-    fixture = docs.mapInPandas(gen, "doc_id long, text string")
-    return mark_homoglyph_dups(fixture)
-
-
-def _sql_dedup_homoglyph_documents() -> str:
-    from bid_evaluation_spark.operators.confusable import (
-        CONFUSABLE_FROM, CONFUSABLE_TO, INVISIBLE_RE)
-
-    zwsp = "​"
-    # DuckDB regexps are RE2: no \uXXXX escapes — embed the literal
-    # characters (INVISIBLE_RE already holds them post-Python-escape)
-    inv_re = INVISIBLE_RE
-    return f"""
-WITH raw AS (
-  SELECT doc_id,
-    CASE doc_id % 4
-      WHEN 1 THEN replace('spam offer ' || (doc_id % 9)
-                          || ' click here now', 'e', 'е')
-      WHEN 2 THEN 's' || '{zwsp}'
-                  || substring(replace('spam offer ' || (doc_id % 9)
-                               || ' click here now', 'o', 'о'), 2)
-      WHEN 3 THEN replace('spam offer ' || (doc_id % 9)
-                          || ' click here now', 'spam',
-                          'ｓｐａｍ')
-      ELSE 'spam offer ' || (doc_id % 9) || ' click here now'
-    END AS text
-  FROM documents
-),
-sk AS (
-  SELECT doc_id,
-    lower(translate(regexp_replace(text, '{inv_re}', '', 'g'),
-                    '{CONFUSABLE_FROM}', '{CONFUSABLE_TO}')) AS skeleton
-  FROM raw
-),
-wit AS (
-  SELECT skeleton, MIN(doc_id) AS w FROM sk GROUP BY skeleton
-)
-SELECT sk.doc_id, sk.skeleton,
-       sk.doc_id <> wit.w AS is_dup,
-       CASE WHEN sk.doc_id <> wit.w THEN wit.w END AS dup_of
-FROM sk JOIN wit USING (skeleton)
-"""
-
-
-_SQL_DEDUP_HOMOGLYPH_DOCUMENTS = _sql_dedup_homoglyph_documents()
-
-
-#: unigram fixture morphemes — composed words make EM allocate mass to
-#: the planted pieces, and the closed-form construction keeps the
-#: training corpus IDENTICAL at every SF (witness ids 0..199)
-_UNI_P = ("pre", "re", "un", "over")
-_UNI_R = ("pack", "load", "turn", "fix")
-_UNI_S = ("ing", "ed", "er", "")
-
-
-def _unigram_fixture_text(d: int, k_words: int = 10) -> str:
-    return " ".join(
-        _UNI_P[(d + k) % 4] + _UNI_R[(d * 3 + k) % 4]
-        + _UNI_S[(d + 2 * k) % 4] for k in range(k_words))
-
-
-def _q_pipe_unigram_documents(spark, sf_dir):
-    """Unigram-LM tokenizer (operators/unigram.py — SentencePiece-style
-    EM over distinct words, FIXED-POINT expected counts so training is
-    partition-order independent): trains on the fixed 200-id synthetic
-    morpheme corpus (identical at every SF), then segments each doc's
-    class witness text (class = doc_id % 8) with the learned vocab.
-    Output: per-doc token stats + a vocab fingerprint (sha256 of every
-    (piece, logprob_r4)) that pins the ENTIRE trained model to one
-    constant — the oracle carries the fingerprint and the 8 per-class
-    stat rows as frozen goldens computed once by this same chain."""
-    import hashlib
-
-    import pandas as pd
-
-    from bid_evaluation_spark.operators.unigram import (
-        unigram_token_stats, unigram_train)
-
-    train_ids = _docs_par(spark, sf_dir).filter(F.col("doc_id") < 200)
-
-    def gen_train(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "text": [_unigram_fixture_text(int(d))
-                         for d in pdf["doc_id"]]})
-
-    corpus = train_ids.mapInPandas(gen_train,
-                                   "doc_id long, text string")
-    vocab = unigram_train(corpus, vocab_size=48, n_iters=3,
-                          max_piece_len=4, seed_size=160)
-    fp = hashlib.sha256("|".join(
-        f"{p}:{round(lp * 10000.0) / 10000.0:.4f}"
-        for p, lp in vocab).encode()).hexdigest()[:16]
-
-    docs = _docs_par(spark, sf_dir)
-
-    def gen_witness(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "text": [_unigram_fixture_text(int(d) % 8, 6)
-                         for d in pdf["doc_id"]]})
-
-    witness = docs.mapInPandas(gen_witness, "doc_id long, text string")
-    stats = unigram_token_stats(witness, vocab)
-    return stats.select("doc_id", "n_words", "n_tokens",
-                        "n_char_fallbacks",
-                        F.lit(fp).alias("vocab_fp"))
-
-
-_SQL_PIPE_UNIGRAM_DOCUMENTS = """
-WITH golden(c, n_words, n_tokens, n_char_fallbacks) AS (VALUES
-  (0, 6, 16, 0), (1, 6, 13, 0), (2, 6, 16, 0), (3, 6, 14, 0),
-  (4, 6, 16, 0), (5, 6, 13, 0), (6, 6, 16, 0), (7, 6, 14, 0))
-SELECT doc_id,
-       CAST(g.n_words AS BIGINT) AS n_words,
-       CAST(g.n_tokens AS BIGINT) AS n_tokens,
-       CAST(g.n_char_fallbacks AS BIGINT) AS n_char_fallbacks,
-       '3168a272403aeec5' AS vocab_fp
-FROM documents JOIN golden g ON g.c = doc_id % 8
-"""
-
-
-def _q_text_blocklist_documents(spark, sf_dir):
-    """Aho-Corasick blocklist scan (operators/blocklist.py — one
-    automaton pass per doc regardless of lexicon size): four-term
-    blocklist over the REAL document text. The chosen patterns have no
-    proper border (prefix ≠ suffix), so occurrences can't overlap
-    themselves and DuckDB's replace-count is an exact FIRST-PRINCIPLES
-    oracle for the automaton's totals."""
-    from bid_evaluation_spark.operators.blocklist import blocklist_hits
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return blocklist_hits(docs, ["filter", "merge", "spark", "table"])
-
-
-_SQL_TEXT_BLOCKLIST_DOCUMENTS = """
-WITH pats(p) AS (VALUES ('filter'), ('merge'), ('spark'), ('table')),
-cnt AS (
-  SELECT doc_id, p,
-         (length(COALESCE(text, '')) -
-          length(replace(COALESCE(text, ''), p, ''))) // length(p)
-           AS c
-  FROM documents, pats
-)
-SELECT doc_id,
-       CAST(SUM(c) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN c > 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_patterns,
-       MIN(CASE WHEN c > 0 THEN p END) AS first_pattern
-FROM cnt GROUP BY doc_id
-"""
 
 
 def _q_a1_approx_quantiles_lineitem(spark, sf_dir):
@@ -7179,329 +1258,6 @@ SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
        quantile_disc(l_extendedprice, 0.99) AS p99
 FROM lineitem GROUP BY l_returnflag
 """
-
-
-def _q_dedup_lsh_tune_documents(spark, sf_dir):
-    """LSH parameter auto-tuning (operators/lshtune.py — MMDS §3.4
-    error-area minimization over the S-curve 1-(1-s^r)^b): the
-    planning table for num_perm=64 across nine thresholds. The oracle
-    REPLAYS the whole optimization in SQL — midpoint grid, both error
-    integrals, the 1e-6-rounded objective and the (obj, -b, r) argmin
-    — so the tuner's math, not a frozen answer, is what's gated."""
-    from bid_evaluation_spark.operators.lshtune import lsh_tuning_table
-
-    rows = lsh_tuning_table(64, [round(0.1 * i, 1)
-                                 for i in range(1, 10)])
-    df = spark.createDataFrame(
-        [(r["threshold"], r["bands"], r["rows"],
-          r["threshold_est"], r["objective"]) for r in rows],
-        "threshold double, bands long, rows long, "
-        "threshold_est double, objective double")
-    return df.select("threshold", "bands", "rows",
-                     _r4("threshold_est").alias("threshold_est_r4"),
-                     _r4("objective").alias("objective_r4"))
-
-
-_SQL_DEDUP_LSH_TUNE_DOCUMENTS = """
-WITH t(threshold) AS (
-  SELECT CAST(ROUND(0.1 * i, 1) AS DOUBLE)
-  FROM UNNEST(generate_series(1, 9)) AS u(i)
-),
-cand AS (
-  SELECT r.r AS rows_, (64 // r.r) AS bands
-  FROM UNNEST(generate_series(1, 64)) AS r(r)
-  WHERE 64 // r.r >= 1
-),
-areas AS (
-  SELECT t.threshold, c.bands, c.rows_,
-         SUM(CASE WHEN s.s < t.threshold
-                  THEN 1.0 - pow(1.0 - pow(s.s, c.rows_), c.bands)
-                  ELSE 0.0 END) / 1000.0 AS fp,
-         SUM(CASE WHEN s.s >= t.threshold
-                  THEN pow(1.0 - pow(s.s, c.rows_), c.bands)
-                  ELSE 0.0 END) / 1000.0 AS fn
-  FROM t, cand c,
-       (SELECT (i + 0.5) / 1000.0 AS s
-        FROM UNNEST(generate_series(0, 999)) AS g(i)) s
-  GROUP BY t.threshold, c.bands, c.rows_
-),
-ranked AS (
-  SELECT threshold, bands, rows_,
-         round(fp + fn, 6) AS obj,
-         row_number() OVER (PARTITION BY threshold
-                            ORDER BY round(fp + fn, 6) ASC,
-                                     bands DESC, rows_ ASC) AS rk
-  FROM areas
-)
-SELECT threshold, CAST(bands AS BIGINT) AS bands,
-       CAST(rows_ AS BIGINT) AS rows,
-       round(pow(1.0 / bands, 1.0 / rows_) * 10000.0) / 10000.0
-         AS threshold_est_r4,
-       round(obj * 10000.0) / 10000.0 AS objective_r4
-FROM ranked WHERE rk = 1
-"""
-
-
-def _q_dedup_lsh_recall_documents(spark, sf_dir, _mod=_DOCS_SAMPLE_MOD):
-    """Blocking-generator quality measured against exact ground truth
-    (dedup.py lsh_recall_report): the MOSS winnow candidate pairs
-    (k=3, w=4, min_shared=2, max_doc_freq=50 — the one candidate
-    generator whose md5-portable fingerprint selection DuckDB replays
-    bit-exactly) vs ALL pairs with exact 3-gram Jaccard ≥ 0.2. Unlike
-    a verified-candidate input (cand ⊆ truth by construction, so
-    recall/precision collapse to the degenerate cand==truth point),
-    the winnow set and the truth set genuinely differ — the oracle
-    re-derives BOTH sets independently and computes n_hit as their
-    pair intersection, so the report's pair canonicalization, dedup
-    and hit-join logic are exercised at a non-trivial operating
-    point. Runs on the doc_id % 3 == 0 sub-corpus — truth is n² on BOTH
-    engines here (see _DOCS_SAMPLE_MOD), exactly the sample-scale recipe
-    the operator's own docstring mandates; full corpus via
-    deep_queries()."""
-    from bid_evaluation_spark.operators.dedup import lsh_recall_report
-    from bid_evaluation_spark.operators.text import winnow_candidate_pairs
-
-    d = _docs_sampled(spark, sf_dir, _mod)
-    cand = winnow_candidate_pairs(d, k=3, w=4, min_shared=2,
-                                  max_doc_freq=50).select("a_id", "b_id")
-    return lsh_recall_report(cand, d, threshold=0.2)
-
-
-_SQL_DEDUP_LSH_RECALL_DOCUMENTS_TMPL = """
-WITH docs AS (SELECT * FROM documents {where}),
-toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM docs
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-sinv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-ssz AS (SELECT doc_id, len(s) AS n FROM sh WHERE len(s) > 0),
-truth AS (
-  -- inverted-index exact truth, mirroring the operator's own rewrite
-  -- (a j >= 0.2 pair must share a shingle; |A∪B| = |A|+|B|−|A∩B|)
-  SELECT p.a_id, p.b_id
-  FROM (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS cnt
-        FROM sinv a JOIN sinv b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id) p
-  JOIN ssz na ON na.doc_id = p.a_id
-  JOIN ssz nb ON nb.doc_id = p.b_id
-  WHERE CAST(p.cnt AS DOUBLE) / (na.n + nb.n - p.cnt) >= 0.2
-),
-hashes AS (
-  SELECT doc_id,
-    list_transform(
-      list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-      g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)) AS h
-  FROM toks
-),
-inv AS (
-  SELECT DISTINCT doc_id, unnest(list_distinct(
-    CASE WHEN len(h) - 3 >= 1 THEN
-      list_transform(generate_series(1, len(h) - 3),
-                     i -> list_min(list_slice(h, i, i + 3)))
-    WHEN len(h) >= 1 THEN [list_min(h)]
-    ELSE CAST([] AS BIGINT[]) END)) AS fp
-  FROM hashes
-),
-kept AS (
-  SELECT doc_id, fp FROM inv
-  WHERE fp IN (SELECT fp FROM inv GROUP BY fp HAVING count(*) <= 50)
-),
-cand AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING count(*) >= 2
-),
-n AS (
-  SELECT (SELECT count(*) FROM cand) AS nc,
-         (SELECT count(*) FROM truth) AS nt,
-         (SELECT count(*) FROM truth t
-          JOIN cand c ON t.a_id = c.a_id AND t.b_id = c.b_id) AS nh
-)
-SELECT CAST(nc AS BIGINT) AS n_candidates, CAST(nt AS BIGINT) AS n_true,
-  CAST(nh AS BIGINT) AS n_hit,
-  CASE WHEN nt > 0 THEN
-    round(CAST(nh AS DOUBLE) / nt * 10000.0) / 10000.0 + 0.0 END AS recall,
-  CASE WHEN nc > 0 THEN
-    round(CAST(nh AS DOUBLE) / nc * 10000.0) / 10000.0 + 0.0 END AS precision
-FROM n
-"""
-
-_SQL_DEDUP_LSH_RECALL_DOCUMENTS = (
-    _SQL_DEDUP_LSH_RECALL_DOCUMENTS_TMPL.format(
-        where=_sample_where(_DOCS_SAMPLE_MOD)))
-
-
-def _q_text_entropy_documents(spark, sf_dir):
-    """Per-document token Shannon entropy (text.py token_entropy) —
-    gibberish/template dial over the documents table; one explode +
-    (doc, token) count + one grouped aggregate. The oracle replays
-    counts and −Σ p ln p as ln(n) − Σ c·ln(c)/n."""
-    from bid_evaluation_spark.operators.text import token_entropy
-
-    d = _t(spark, sf_dir, "documents")
-    res = token_entropy(d)
-    return res.select("doc_id", "n_tokens", "n_distinct",
-                      (_r4("entropy") + F.lit(0.0)).alias("entropy"),
-                      (_r4("entropy_norm") + F.lit(0.0))
-                      .alias("entropy_norm"))
-
-
-_SQL_TEXT_ENTROPY_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id, unnest(
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END) AS tok
-  FROM documents
-),
-counts AS (
-  SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS c
-  FROM toks GROUP BY doc_id, tok
-),
-agg AS (
-  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_distinct,
-         ln(sum(c)) - sum(c * ln(c)) / sum(c) AS h
-  FROM counts GROUP BY doc_id
-)
-SELECT d.doc_id,
-  coalesce(a.n_tokens, 0) AS n_tokens,
-  coalesce(a.n_distinct, 0) AS n_distinct,
-  round(a.h * 10000.0) / 10000.0 + 0.0 AS entropy,
-  CASE WHEN a.n_distinct >= 2
-       THEN round(a.h / ln(CAST(a.n_distinct AS DOUBLE)) * 10000.0)
-            / 10000.0 + 0.0
-  END AS entropy_norm
-FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-"""
-
-
-def _q_text_winnow_pairs_documents(spark, sf_dir):
-    """MOSS-style winnow candidate pairs (text.py winnow_candidate_pairs):
-    inverted index on the md5-portable window-min fingerprints,
-    per-fingerprint self-join with the common-fingerprint cap, pairs
-    sharing ≥ 2 fingerprints. The oracle replays selection, the cap and
-    the pair counts exactly."""
-    from bid_evaluation_spark.operators.text import winnow_candidate_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return winnow_candidate_pairs(d, k=3, w=4, min_shared=2,
-                                  max_doc_freq=50)
-
-
-_SQL_TEXT_WINNOW_PAIRS_DOCUMENTS = """
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-hashes AS (
-  SELECT doc_id,
-    list_transform(
-      list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]),
-      g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)) AS h
-  FROM toks
-),
-inv AS (
-  SELECT DISTINCT doc_id, unnest(list_distinct(
-    CASE WHEN len(h) - 3 >= 1 THEN
-      list_transform(generate_series(1, len(h) - 3),
-                     i -> list_min(list_slice(h, i, i + 3)))
-    WHEN len(h) >= 1 THEN [list_min(h)]
-    ELSE CAST([] AS BIGINT[]) END)) AS fp
-  FROM hashes
-),
-kept AS (
-  SELECT doc_id, fp FROM inv
-  WHERE fp IN (SELECT fp FROM inv GROUP BY fp HAVING count(*) <= 50)
-)
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       CAST(count(*) AS BIGINT) AS n_shared
-FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-HAVING count(*) >= 2
-"""
-
-
-def _q_dedup_stream_neardup_documents(spark, sf_dir):
-    """Batch twin of the streaming near-dup filter
-    (streaming/neardup.py StreamingNearDup; operators/dedup.py
-    neardup_mark_ordered): each doc is a near-duplicate iff it shares a
-    PORTABLE md5-minhash band (k=3, 16 perms, 4 bands) with a lower-id
-    doc, with the smallest witness as dup_of — doc_id order stands in
-    for arrival order, so this certifies the exact banding decision the
-    streaming engine makes (the md5 device lets DuckDB replay signature
-    minima and band keys bit-exactly, unlike the xxhash64 production
-    banding which is verified via exact Jaccard instead)."""
-    from bid_evaluation_spark.operators.dedup import neardup_mark_ordered
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return neardup_mark_ordered(df, k=3, num_perm=16, bands=4, seed="mh")
-
-
-def _stream_neardup_sql() -> str:
-    """Unrolled DuckDB replay of the portable minhash banding: 16 per-
-    permutation list_min columns, 4 band-key md5s, bucket-min witness."""
-    h = ("CAST(('0x' || substr(md5('mh:{i}:' || x), 1, 15)) AS BIGINT)")
-    mins = ",\n    ".join(
-        f"list_min(list_transform(s, x -> {h.format(i=i)})) AS m{i}"
-        for i in range(16))
-    bandkeys = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, md5(concat_ws('_', "
-        + ", ".join(f"CAST(m{b * 4 + j} AS VARCHAR)" for j in range(4))
-        + ")) AS key FROM mins" for b in range(4))
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-         ELSE string_split_regex(trim(text), '\\s+') END AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    CASE WHEN len(t) >= 3 THEN list_distinct(
-      list_transform(generate_series(1, len(t)-2),
-                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-    ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-),
-mins AS (
-  SELECT doc_id,
-    {mins}
-  FROM sh WHERE len(s) > 0
-),
-keys AS (
-{bandkeys}
-),
-bmin AS (SELECT band, key, min(doc_id) AS m FROM keys GROUP BY band, key),
-flag AS (
-  SELECT k.doc_id,
-         min(CASE WHEN b.m < k.doc_id THEN b.m END) AS dup_of
-  FROM keys k JOIN bmin b USING (band, key)
-  GROUP BY k.doc_id
-)
-SELECT d.doc_id,
-       (f.dup_of IS NOT NULL) AS is_near_dup,
-       f.dup_of
-FROM (SELECT DISTINCT doc_id FROM documents) d
-LEFT JOIN flag f USING (doc_id)
-"""
-
-
-_SQL_DEDUP_STREAM_NEARDUP_DOCUMENTS = _stream_neardup_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -7550,169 +1306,10 @@ _QUERIES: dict = {
     "staged_topn_customer": (_q_staged_topn_customer, _SQL_STAGED_TOPN_CUSTOMER),
     "staged_topn_exclude_part": (_q_staged_topn_exclude_part,
                                  _SQL_STAGED_TOPN_EXCLUDE_PART),
-    "text_stats_documents": (_q_text_stats_documents, _SQL_TEXT_STATS_DOCUMENTS),
-    "text_lang_id_documents": (_q_text_lang_id_documents, _SQL_TEXT_LANG_ID_DOCUMENTS),
-    "text_token_count_documents": (_q_text_token_count_documents,
-                                   _SQL_TEXT_TOKEN_COUNT_DOCUMENTS),
-    "text_quality_score_documents": (_q_text_quality_score_documents,
-                                     _SQL_TEXT_QUALITY_SCORE_DOCUMENTS),
-    "quality_topk_lang_documents": (_q_quality_topk_lang_documents,
-                                    _SQL_QUALITY_TOPK_LANG_DOCUMENTS),
-    "text_fingerprint_documents": (_q_text_fingerprint_documents,
-                                   _SQL_TEXT_FINGERPRINT_DOCUMENTS),
-    "staged_quality_documents": (_q_staged_quality_documents,
-                                 _SQL_STAGED_QUALITY_DOCUMENTS),
     "dedup_exact_documents": (_q_dedup_exact_documents, _SQL_DEDUP_EXACT_DOCUMENTS),
-    "dedup_incremental_documents": (_q_dedup_incremental_documents,
-                                    _SQL_DEDUP_INCREMENTAL_DOCUMENTS),
-    "text_canonicalize_documents": (_q_text_canonicalize_documents,
-                                    _SQL_TEXT_CANONICALIZE_DOCUMENTS),
-    "text_sentences_documents": (_q_text_sentences_documents,
-                                 _SQL_TEXT_SENTENCES_DOCUMENTS),
-    "text_collocations_documents": (_q_text_collocations_documents,
-                                    _SQL_TEXT_COLLOCATIONS_DOCUMENTS),
-    "dedup_ngram_jaccard_documents": (_q_dedup_ngram_jaccard_documents,
-                                      _SQL_DEDUP_NGRAM_JACCARD_DOCUMENTS),
-    "dedup_minhash_candidates_documents": (_q_dedup_minhash_candidates_documents,
-                                           _SQL_DEDUP_MINHASH_CANDIDATES_DOCUMENTS),
-    "dedup_simhash_documents": (_q_dedup_simhash_documents,
-                                _SQL_DEDUP_SIMHASH_DOCUMENTS),
-    "dedup_embedding_documents": (_q_dedup_embedding_documents,
-                                  _SQL_DEDUP_EMBEDDING_DOCUMENTS),
-    "dedup_embedding_clusters": (_q_dedup_embedding_clusters,
-                                 _SQL_DEDUP_EMBEDDING_CLUSTERS),
-    "emb_hard_negatives_embeddings": (_q_emb_hard_negatives_embeddings,
-                                      _SQL_EMB_HARD_NEGATIVES_EMBEDDINGS),
-    "dedup_keepmin_embeddings": (_q_dedup_keepmin_embeddings,
-                                 _SQL_DEDUP_KEEPMIN_EMBEDDINGS),
-    "dedup_semantic_embeddings": (_q_dedup_semantic_embeddings,
-                                  _SQL_DEDUP_SEMANTIC_EMBEDDINGS),
-    "ann_lsh_topk_embeddings": (_q_ann_lsh_topk_embeddings,
-                                _SQL_ANN_LSH_TOPK_EMBEDDINGS),
-    "ann_lsh_multitable_topk_embeddings": (
-        _q_ann_lsh_multitable_topk_embeddings, _lsh_multitable_sql()),
-    "ann_ivf_topk_embeddings": (_q_ann_ivf_topk_embeddings,
-                                _SQL_ANN_IVF_TOPK_EMBEDDINGS),
-    "ml_kmeans_lloyd_embeddings": (_q_ml_kmeans_lloyd_embeddings,
-                                   _SQL_ML_KMEANS_LLOYD_EMBEDDINGS),
-    "ann_ivf_pretrained_topk_embeddings": (
-        _q_ann_ivf_pretrained_topk_embeddings,
-        _SQL_ANN_IVF_PRETRAINED_TOPK_EMBEDDINGS),
     "events_json_props": (_q_events_json_props, _SQL_EVENTS_JSON_PROPS),
-    "pipe_decontaminate_documents": (_q_pipe_decontaminate_documents,
-                                     _SQL_PIPE_DECONTAMINATE_DOCUMENTS),
-    "pipe_decontaminate_bloom_documents": (
-        _q_pipe_decontaminate_bloom_documents,
-        _SQL_PIPE_DECONTAMINATE_BLOOM_DOCUMENTS),
-    "pipe_bpe_merges_documents": (_q_pipe_bpe_merges_documents,
-                                  _SQL_PIPE_BPE_MERGES_DOCUMENTS),
-    "pipe_bpe_token_counts_documents": (_q_pipe_bpe_token_counts_documents,
-                                        _SQL_PIPE_BPE_TOKEN_COUNTS_DOCUMENTS),
-    "pipe_bpe_first_merge_documents": (_q_pipe_bpe_first_merge_documents,
-                                       _SQL_PIPE_BPE_FIRST_MERGE_DOCUMENTS),
-    "pipe_bpe_pair_counts_documents": (_q_pipe_bpe_pair_counts_documents,
-                                       _SQL_PIPE_BPE_PAIR_COUNTS_DOCUMENTS),
-    "pipe_hash_sample_documents": (_q_pipe_hash_sample_documents,
-                                   _SQL_PIPE_HASH_SAMPLE_DOCUMENTS),
-    "pipe_mixture_sample_documents": (_q_pipe_mixture_sample_documents,
-                                      _SQL_PIPE_MIXTURE_SAMPLE_DOCUMENTS),
-    "pipe_temperature_mixture_documents": (
-        _q_pipe_temperature_mixture_documents,
-        _SQL_PIPE_TEMPERATURE_MIXTURE_DOCUMENTS),
-    "pipe_curriculum_bins_documents": (
-        _q_pipe_curriculum_bins_documents,
-        _SQL_PIPE_CURRICULUM_BINS_DOCUMENTS),
-    "pipe_weighted_sample_documents": (_q_pipe_weighted_sample_documents,
-                                       _SQL_PIPE_WEIGHTED_SAMPLE_DOCUMENTS),
-    "pipe_sample_k_group_documents": (_q_pipe_sample_k_group_documents,
-                                      _SQL_PIPE_SAMPLE_K_GROUP_DOCUMENTS),
-    "pipe_token_mixture_documents": (_q_pipe_token_mixture_documents,
-                                     _SQL_PIPE_TOKEN_MIXTURE_DOCUMENTS),
-    "pipe_shuffle_documents": (_q_pipe_shuffle_documents,
-                               _SQL_PIPE_SHUFFLE_DOCUMENTS),
-    "pipe_lm_score_documents": (_q_pipe_lm_score_documents,
-                                _SQL_PIPE_LM_SCORE_DOCUMENTS),
-    "pipe_bigram_lm_documents": (_q_pipe_bigram_lm_documents,
-                                 _SQL_PIPE_BIGRAM_LM_DOCUMENTS),
-    "pipe_chunk_documents": (_q_pipe_chunk_documents, _SQL_PIPE_CHUNK_DOCUMENTS),
-    "pipe_top_ngrams_documents": (_q_pipe_top_ngrams_documents,
-                                  _SQL_PIPE_TOP_NGRAMS_DOCUMENTS),
-    "pipe_pack_sequences_documents": (_q_pipe_pack_sequences_documents,
-                                      _SQL_PIPE_PACK_SEQUENCES_DOCUMENTS),
-    "pipe_end_to_end_documents": (_q_pipe_end_to_end_documents,
-                                  _SQL_PIPE_END_TO_END_DOCUMENTS),
-    "quality_repetition_documents": (_q_quality_repetition_documents,
-                                     _SQL_QUALITY_REPETITION_DOCUMENTS),
-    "quality_gopher_documents": (_q_quality_gopher_documents,
-                                 _SQL_QUALITY_GOPHER_DOCUMENTS),
-    "quality_line_dedup_documents": (_q_quality_line_dedup_documents,
-                                     _SQL_QUALITY_LINE_DEDUP_DOCUMENTS),
-    "text_bm25_topk_documents": (_q_text_bm25_topk_documents,
-                                 _SQL_TEXT_BM25_TOPK_DOCUMENTS),
-    "pii_redact_documents": (_q_pii_redact_documents,
-                             _SQL_PII_REDACT_DOCUMENTS),
-    "emb_l2norm_embeddings": (_q_emb_l2norm_embeddings,
-                              _SQL_EMB_L2NORM_EMBEDDINGS),
-    "emb_quantize_embeddings": (_q_emb_quantize_embeddings,
-                                _SQL_EMB_QUANTIZE_EMBEDDINGS),
-    "pipe_leakage_safe_split_documents": (
-        _q_pipe_leakage_safe_split_documents,
-        _SQL_PIPE_LEAKAGE_SAFE_SPLIT_DOCUMENTS),
-    "lm_perplexity_documents": (_q_lm_perplexity_documents,
-                                _SQL_LM_PERPLEXITY_DOCUMENTS),
-    "dsir_weights_documents": (_q_dsir_weights_documents,
-                               _SQL_DSIR_WEIGHTS_DOCUMENTS),
-    "dsir_sample_documents": (_q_dsir_sample_documents,
-                              _SQL_DSIR_SAMPLE_DOCUMENTS),
-    "pq_encode_embeddings": (_q_pq_encode_embeddings,
-                             _SQL_PQ_ENCODE_EMBEDDINGS),
-    "retrieval_rrf_hybrid_documents": (_q_retrieval_rrf_hybrid_documents,
-                                       _SQL_RETRIEVAL_RRF_HYBRID_DOCUMENTS),
-    "pq_adc_topk_embeddings": (_q_pq_adc_topk_embeddings,
-                               _SQL_PQ_ADC_TOPK_EMBEDDINGS),
-    "pq_ivfpq_topk_embeddings": (_q_pq_ivfpq_topk_embeddings,
-                                 _SQL_PQ_IVFPQ_TOPK_EMBEDDINGS),
-    "dedup_span_stats_documents": (_q_dedup_span_stats_documents,
-                                   _SQL_DEDUP_SPAN_STATS_DOCUMENTS),
-    "dedup_span_removal_documents": (_q_dedup_span_removal_documents,
-                                     _SQL_DEDUP_SPAN_REMOVAL_DOCUMENTS),
-    "dedup_incremental_minhash_documents": (
-        _q_dedup_incremental_minhash_documents,
-        _SQL_DEDUP_INCREMENTAL_MINHASH_DOCUMENTS),
-    "privacy_ccn_luhn_documents": (_q_privacy_ccn_luhn_documents,
-                                   _SQL_PRIVACY_CCN_LUHN_DOCUMENTS),
     "io_footer_stats_orders": (_q_io_footer_stats_orders,
                                _SQL_IO_FOOTER_STATS_ORDERS),
-    "emb_matryoshka_embeddings": (_q_emb_matryoshka_embeddings,
-                                  _SQL_EMB_MATRYOSHKA_EMBEDDINGS),
-    "pipe_neyman_orders": (_q_pipe_neyman_orders, _SQL_PIPE_NEYMAN_ORDERS),
-    "fuzzy_fellegi_sunter_customer": (_q_fuzzy_fellegi_sunter_customer,
-                                      _SQL_FUZZY_FELLEGI_SUNTER_CUSTOMER),
-    "fuzzy_fs_em_customer": (_q_fuzzy_fs_em_customer,
-                             _SQL_FUZZY_FS_EM_CUSTOMER),
-    "sketch_hll_overlap_documents": (_q_sketch_hll_overlap_documents,
-                                     _SQL_SKETCH_HLL_OVERLAP_DOCUMENTS),
-    "pipe_split_documents": (_q_pipe_split_documents,
-                             _SQL_PIPE_SPLIT_DOCUMENTS),
-    "pipe_sample_k_documents": (_q_pipe_sample_k_documents,
-                                _SQL_PIPE_SAMPLE_K_DOCUMENTS),
-    "bitext_mine_embeddings": (_q_bitext_mine_embeddings,
-                               _SQL_BITEXT_MINE_EMBEDDINGS),
-    "fuzzy_join_supplier_names": (_q_fuzzy_join_supplier_names,
-                                  _SQL_FUZZY_JOIN_SUPPLIER_NAMES),
-    "curation_hard_negatives_embeddings": (
-        _q_curation_hard_negatives_embeddings,
-        _SQL_CURATION_HARD_NEGATIVES_EMBEDDINGS),
-    "curation_group_gate_documents": (_q_curation_group_gate_documents,
-                                      _SQL_CURATION_GROUP_GATE_DOCUMENTS),
-    "sketch_cms_topk_documents": (_q_sketch_cms_topk_documents,
-                                  _SQL_SKETCH_CMS_TOPK_DOCUMENTS),
-    "sketch_hll_distinct_documents": (_q_sketch_hll_distinct_documents,
-                                      _SQL_SKETCH_HLL_DISTINCT_DOCUMENTS),
-    "classify_nb_lang_documents": (_q_classify_nb_lang_documents,
-                                   _SQL_CLASSIFY_NB_LANG_DOCUMENTS),
-    "classify_logreg_embeddings": (_q_classify_logreg_embeddings,
-                                   _SQL_CLASSIFY_LOGREG_EMBEDDINGS),
     "a1_grouped_stats_orders": (_q_a1_grouped_stats_orders,
                                 _SQL_A1_GROUPED_STATS_ORDERS),
     "events_cube_type_user_bucket": (_q_events_cube_type_user_bucket,
@@ -7721,86 +1318,8 @@ _QUERIES: dict = {
                                _SQL_EVENTS_ROLLUP_TYPE_DAY),
     "events_pivot_type_user": (_q_events_pivot_type_user,
                                _SQL_EVENTS_PIVOT_TYPE_USER),
-    "text_tfidf_topk_documents": (_q_text_tfidf_topk_documents,
-                                  _SQL_TEXT_TFIDF_TOPK_DOCUMENTS),
-    "cluster_assign_embeddings": (_q_cluster_assign_embeddings,
-                                  _SQL_CLUSTER_ASSIGN_EMBEDDINGS),
-    "sketch_hll_by_group_documents": (_q_sketch_hll_by_group_documents,
-                                      _SQL_SKETCH_HLL_BY_GROUP_DOCUMENTS),
-    "dedup_minhash_corpus_documents": (_q_dedup_minhash_corpus_documents,
-                                       _SQL_DEDUP_MINHASH_CORPUS_DOCUMENTS),
-    "er_supplier_entities": (_q_er_supplier_entities,
-                             _SQL_ER_SUPPLIER_ENTITIES),
-    "sketch_cms_by_group_documents": (_q_sketch_cms_by_group_documents,
-                                      _SQL_SKETCH_CMS_BY_GROUP_DOCUMENTS),
-    "dedup_jaccard_prefix_documents": (_q_dedup_jaccard_prefix_documents,
-                                       _SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS),
-    "dedup_keep_best_documents": (_q_dedup_keep_best_documents,
-                                  _SQL_DEDUP_KEEP_BEST_DOCUMENTS),
-    "pipe_novelty_documents": (_q_pipe_novelty_documents,
-                               _SQL_PIPE_NOVELTY_DOCUMENTS),
-    "dedup_containment_documents": (_q_dedup_containment_documents,
-                                    _SQL_DEDUP_CONTAINMENT_DOCUMENTS),
-    "emb_jl_project_embeddings": (_q_emb_jl_project_embeddings,
-                                  _SQL_EMB_JL_PROJECT_EMBEDDINGS),
-    "retrieval_postings_documents": (_q_retrieval_postings_documents,
-                                     _SQL_RETRIEVAL_POSTINGS_DOCUMENTS),
-    "retrieval_phrase_documents": (_q_retrieval_phrase_documents,
-                                   _SQL_RETRIEVAL_PHRASE_DOCUMENTS),
-    "pipeline_quantile2pass_lineitem": (_q_pipeline_quantile2pass_lineitem,
-                                        _SQL_PIPELINE_QUANTILE2PASS_LINEITEM),
-    "enc_target_kfold_orders": (_q_enc_target_kfold_orders,
-                                _SQL_ENC_TARGET_KFOLD_ORDERS),
-    "text_feature_hash_documents": (_q_text_feature_hash_documents,
-                                    _SQL_TEXT_FEATURE_HASH_DOCUMENTS),
-    "ml_stump_lineitem": (_q_ml_stump_lineitem, _SQL_ML_STUMP_LINEITEM),
-    "ml_gbm_stumps_lineitem": (_q_ml_gbm_stumps_lineitem,
-                               _SQL_ML_GBM_STUMPS_LINEITEM),
-    "ml_isotonic_orders": (_q_ml_isotonic_orders, _SQL_ML_ISOTONIC_ORDERS),
-    "ml_knn_embeddings": (_q_ml_knn_embeddings, _SQL_ML_KNN_EMBEDDINGS),
-    "ml_centroid_embeddings": (_q_ml_centroid_embeddings,
-                               _SQL_ML_CENTROID_EMBEDDINGS),
-    "ml_silhouette_embeddings": (_q_ml_silhouette_embeddings,
-                                 _SQL_ML_SILHOUETTE_EMBEDDINGS),
-    "pipe_contamination_report_documents": (
-        _q_pipe_contamination_report_documents,
-        _SQL_PIPE_CONTAMINATION_REPORT_DOCUMENTS),
-    "pipe_mix_manifest_documents": (_q_pipe_mix_manifest_documents,
-                                    _SQL_PIPE_MIX_MANIFEST_DOCUMENTS),
-    "pipe_dup_ngram_documents": (_q_pipe_dup_ngram_documents,
-                                 _SQL_PIPE_DUP_NGRAM_DOCUMENTS),
-    "quality_scorecard_documents": (_q_quality_scorecard_documents,
-                                    _SQL_QUALITY_SCORECARD_DOCUMENTS),
-    "dedup_savings_documents": (_q_dedup_savings_documents,
-                                _SQL_DEDUP_SAVINGS_DOCUMENTS),
-    "text_readability_documents": (_q_text_readability_documents,
-                                   _SQL_TEXT_READABILITY_DOCUMENTS),
-    "text_winnow_overlap_documents": (_q_text_winnow_overlap_documents,
-                                      _SQL_TEXT_WINNOW_OVERLAP_DOCUMENTS),
-    "dedup_corpus_overlap_documents": (_q_dedup_corpus_overlap_documents,
-                                       _SQL_DEDUP_CORPUS_OVERLAP_DOCUMENTS),
-    "text_script_profile_documents": (_q_text_script_profile_documents,
-                                      _SQL_TEXT_SCRIPT_PROFILE_DOCUMENTS),
-    "retrieval_mmr_embeddings": (_q_retrieval_mmr_embeddings,
-                                 _SQL_RETRIEVAL_MMR_EMBEDDINGS),
-    "dedup_lsh_recall_documents": (_q_dedup_lsh_recall_documents,
-                                   _SQL_DEDUP_LSH_RECALL_DOCUMENTS),
-    "text_entropy_documents": (_q_text_entropy_documents,
-                               _SQL_TEXT_ENTROPY_DOCUMENTS),
-    "text_winnow_pairs_documents": (_q_text_winnow_pairs_documents,
-                                    _SQL_TEXT_WINNOW_PAIRS_DOCUMENTS),
-    "dedup_stream_neardup_documents": (_q_dedup_stream_neardup_documents,
-                                       _SQL_DEDUP_STREAM_NEARDUP_DOCUMENTS),
-    "dedup_homoglyph_documents": (_q_dedup_homoglyph_documents,
-                                  _SQL_DEDUP_HOMOGLYPH_DOCUMENTS),
-    "dedup_lsh_tune_documents": (_q_dedup_lsh_tune_documents,
-                                 _SQL_DEDUP_LSH_TUNE_DOCUMENTS),
     "a1_approx_quantiles_lineitem": (_q_a1_approx_quantiles_lineitem,
                                      _SQL_A1_APPROX_QUANTILES_LINEITEM),
-    "text_blocklist_documents": (_q_text_blocklist_documents,
-                                 _SQL_TEXT_BLOCKLIST_DOCUMENTS),
-    "pipe_unigram_documents": (_q_pipe_unigram_documents,
-                               _SQL_PIPE_UNIGRAM_DOCUMENTS),
 }
 
 
@@ -7812,27 +1331,3 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (None-oracle queries omitted)."""
     return {name: sql for name, (_, sql) in _QUERIES.items() if sql is not None}
-
-
-def deep_queries() -> dict[str, tuple]:
-    """FULL-corpus variants of the quadratic-ground-truth queries that the
-    registry runs on the doc_id % 3 == 0 sub-corpus (_DOCS_SAMPLE_MOD).
-    Same operators, same thresholds — only the sample filter is dropped,
-    so the all-pairs DuckDB truth costs n² of the whole corpus. Run once
-    per round via ``tools/deep_gate.py``; not part of ``queries()`` so
-    routine sweeps stay fast."""
-    full = _sample_where(1)
-    return {
-        "dedup_minhash_candidates_documents_full": (
-            lambda s, d: _q_dedup_minhash_candidates_documents(s, d, _mod=1),
-            _SQL_DEDUP_MINHASH_CANDIDATES_DOCUMENTS_TMPL.format(where=full)),
-        "dedup_simhash_documents_full": (
-            lambda s, d: _q_dedup_simhash_documents(s, d, _mod=1),
-            _SQL_DEDUP_SIMHASH_DOCUMENTS_TMPL.format(where=full)),
-        "dedup_lsh_recall_documents_full": (
-            lambda s, d: _q_dedup_lsh_recall_documents(s, d, _mod=1),
-            _SQL_DEDUP_LSH_RECALL_DOCUMENTS_TMPL.format(where=full)),
-        "dedup_jaccard_prefix_documents_full": (
-            lambda s, d: _q_dedup_jaccard_prefix_documents(s, d, _mod=1),
-            _SQL_DEDUP_JACCARD_PREFIX_DOCUMENTS_TMPL.format(where=full)),
-    }

@@ -83,143 +83,6 @@ def bench_stats_bundle_lineitem(spark, sf_dir):
     _force(e.queries()["a1_stats_bundle_lineitem"](spark, sf_dir))
 
 
-def bench_minhash_dedup_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.dedup import minhash_near_duplicates
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(minhash_near_duplicates(df, threshold=0.2, num_perm=64, bands=16))
-
-
-def bench_simhash_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.dedup import simhash_near_duplicates
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(simhash_near_duplicates(df, max_hamming=8))
-
-
-def bench_text_stats_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.text import with_text_stats
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(with_text_stats(df))
-
-
-def bench_ann_topk_embeddings(spark, sf_dir):
-    from bid_evaluation_spark.operators.similarity import cosine_topk
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "embeddings")
-    _force(cosine_topk(df.filter(F.col("vec_id") < 50), df, k=10, two_phase=True))
-
-
-def bench_embedding_neardup(spark, sf_dir):
-    from bid_evaluation_spark.operators.dedup import embedding_near_duplicates
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "embeddings")
-    _force(embedding_near_duplicates(df, threshold=0.35, block_col="label"))
-
-
-def bench_decontaminate_documents(spark, sf_dir):
-    from bid_evaluation_spark.operators.pipeline import decontaminate
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(decontaminate(df.filter(F.col("doc_id") % 10 != 0),
-                         df.filter(F.col("doc_id") % 10 == 0), threshold=0.3,
-                         method="exact"))
-
-
-def bench_decontaminate_auto_documents(spark, sf_dir):
-    """The default dispatch: Catalyst plan-size stats pick exact here (the
-    eval side broadcasts, so Bloom has no exchange to shrink) — this row
-    should track bench_decontaminate_documents, demonstrating the default
-    path no longer pays Bloom's fixed overhead at local scale."""
-    from bid_evaluation_spark.operators.pipeline import decontaminate
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(decontaminate(df.filter(F.col("doc_id") % 10 != 0),
-                         df.filter(F.col("doc_id") % 10 == 0), threshold=0.3))
-
-
-def bench_decontaminate_bloom_documents(spark, sf_dir):
-    """Same task as decontaminate_documents with the broadcast-Bloom
-    map-side shingle pre-filter — the two rows measure the shuffle saving
-    directly."""
-    from bid_evaluation_spark.operators.pipeline import decontaminate_bloom
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(decontaminate_bloom(df.filter(F.col("doc_id") % 10 != 0),
-                               df.filter(F.col("doc_id") % 10 == 0),
-                               threshold=0.3))
-
-
-
-
-
-
-def bench_quality_repetition(spark, sf_dir):
-    from bid_evaluation_spark.operators.quality import ngram_repetition_stats
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(ngram_repetition_stats(df, ns=(1, 2)))
-
-
-
-
-def bench_nb_classify_documents(spark, sf_dir):
-    """Self-train the Naive Bayes lang classifier + predict every doc:
-    explode+groupBy model build, pivot, 1:1 token join, fused score agg."""
-    from bid_evaluation_spark.operators.classify import nb_classify
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(nb_classify(df, label_col="lang"))
-
-
-def bench_cms_topk_documents(spark, sf_dir):
-    """Count-min heavy hitters over all token occurrences (sketch build +
-    distinct-candidate lookup + top-k)."""
-    from bid_evaluation_spark.operators.sketch import cms_topk
-    from bid_evaluation_spark.sources.io import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    _force(cms_topk(df, k=50))
-
-
-
-
-
-
-def bench_lm_perplexity_documents(spark, sf_dir):
-    """Bigram-LM quality filter: train on half the corpus, score the rest
-    (two count aggs + two hashed equi-joins + per-doc avg)."""
-    from bid_evaluation_spark.operators.lm import perplexity, train_bigram_lm
-    from bid_evaluation_spark.sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    uni, big = train_bigram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    _force(perplexity(docs.filter(F.col("doc_id") % 2 == 1), uni, big))
-
-
-def bench_ivfpq_embeddings(spark, sf_dir):
-    """IVF-PQ compressed ANN: 64 queries probe 4/16 lists over PQ codes —
-    codegen assignment/encode + equi-join ADC."""
-    from bid_evaluation_spark.operators.pq import (formula_coarse,
-                                                   formula_codebook,
-                                                   ivfpq_topk)
-    from bid_evaluation_spark.sources.io import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    _force(ivfpq_topk(emb.filter(F.col("vec_id") < 64), emb,
-                      formula_coarse(16, 64), formula_codebook(8, 16, 8),
-                      k=10, nprobe=4))
 
 
 
@@ -228,15 +91,20 @@ def bench_ivfpq_embeddings(spark, sf_dir):
 
 
 
-def bench_span_removal_documents(spark, sf_dir):
-    """Round-11 ExactSubstr removal over the full corpus: windows →
-    keep-first marking → covered-token cut → native text rebuild."""
-    from bid_evaluation_spark.operators.spans import (
-        remove_duplicated_spans)
-    from bid_evaluation_spark.sources.io import load_table
 
-    df = load_table(spark, sf_dir, "documents")
-    _force(remove_duplicated_spans(df, span=10, stride=3))
+
+
+
+
+
+
+
+
+
+
+
+
+
 
 
 
@@ -248,20 +116,6 @@ BENCHES = {
     "staged_orders": bench_staged_orders,
     "batched_eval_orders": bench_batched_eval_orders,
     "stats_bundle_lineitem": bench_stats_bundle_lineitem,
-    "minhash_dedup_documents": bench_minhash_dedup_documents,
-    "simhash_documents": bench_simhash_documents,
-    "text_stats_documents": bench_text_stats_documents,
-    "ann_topk_embeddings": bench_ann_topk_embeddings,
-    "embedding_neardup": bench_embedding_neardup,
-    "decontaminate_documents": bench_decontaminate_documents,
-    "decontaminate_auto_documents": bench_decontaminate_auto_documents,
-    "decontaminate_bloom_documents": bench_decontaminate_bloom_documents,
-    "quality_repetition": bench_quality_repetition,
-    "nb_classify_documents": bench_nb_classify_documents,
-    "cms_topk_documents": bench_cms_topk_documents,
-    "lm_perplexity_documents": bench_lm_perplexity_documents,
-    "ivfpq_embeddings": bench_ivfpq_embeddings,
-    "span_removal_documents": bench_span_removal_documents,
 }
 
 

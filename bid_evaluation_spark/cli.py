@@ -12,13 +12,6 @@ Usage::
         --config criteria.yaml --output results.parquet
     python -m bid_evaluation_spark.cli --data bids.csv --staged \
         --config stages.yaml --output results.csv --show 10
-    python -m bid_evaluation_spark.cli --data docs.parquet --prep \
-        --config prep.yaml --eval-data heldout.parquet \
-        --output clean.parquet
-
-``--prep`` switches the config semantics from criteria scoring to the
-training-data prep pipeline (``plans/prep.py``: dedup / quality / LM /
-decontaminate / sample / mixture / chunk / pack / shuffle steps).
 """
 
 from __future__ import annotations
@@ -62,11 +55,6 @@ def main(argv=None, spark=None) -> int:
     p.add_argument("--config", required=True, help="YAML/JSON criteria config")
     p.add_argument("--staged", action="store_true",
                    help="config describes a staged pipeline")
-    p.add_argument("--prep", action="store_true",
-                   help="config describes a training-data prep pipeline")
-    p.add_argument("--eval-data", default=None,
-                   help="held-out corpus for prep decontaminate steps "
-                        "(registered as tables['eval'])")
     p.add_argument("--output", help="parquet/csv/xlsx output path")
     p.add_argument("--show", type=int, default=0,
                    help="print the top N result rows")
@@ -81,22 +69,8 @@ def main(argv=None, spark=None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
     try:
         df = _read(spark, args.data)
-        if args.prep:
-            from .plans.prep import prep_from_json, prep_from_yaml
-
-            tables = ({"eval": _read(spark, args.eval_data)}
-                      if args.eval_data else None)
-            if args.config.endswith((".yaml", ".yml")):
-                run = prep_from_yaml(args.config, tables)
-            elif args.config.endswith(".json"):
-                run = prep_from_json(args.config, tables)
-            else:
-                raise SystemExit(f"unsupported config format: {args.config}")
-            evaluator = None
-            result = run(df)
-        else:
-            evaluator = _build(args)
-            result = evaluator.evaluate(df)
+        evaluator = _build(args)
+        result = evaluator.evaluate(df)
 
         if args.show:
             result.show(args.show, truncate=False)
@@ -108,15 +82,13 @@ def main(argv=None, spark=None) -> int:
 
                 write_csv(result, args.output)
             elif args.output.endswith((".xlsx", ".xls")):
-                if evaluator is None:
-                    raise SystemExit("xlsx output applies to scoring runs")
                 from .sources.io import write_results_excel
 
                 write_results_excel(result, args.output,
                                     statistics=evaluator.get_statistics())
             else:
                 raise SystemExit(f"unsupported output format: {args.output}")
-        if args.staged and evaluator is not None:
+        if args.staged:
             evaluator.release()
         return 0
     finally:

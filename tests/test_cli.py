@@ -1,4 +1,4 @@
-"""Headless CLI (cli.py): scoring and prep modes, session injected."""
+"""Headless CLI (cli.py): scoring runs and format errors, session injected."""
 
 import json
 
@@ -22,26 +22,6 @@ def test_cli_scoring_run(spark, tmp_path):
     assert {"final_score", "ranking"} < set(res.columns)
     assert res.count() == spark.read.parquet(
         "/root/testdata/sf0.001/supplier.parquet").count()
-
-
-def test_cli_prep_run(spark, tmp_path):
-    import yaml
-
-    cfg = tmp_path / "prep.yaml"
-    cfg.write_text(yaml.safe_dump({"steps": [
-        {"op": "exact_dedup"},
-        {"op": "hash_sample", "fraction": 0.5, "seed": "cli"},
-        {"op": "shuffle", "seed": "cli"},
-    ]}))
-    out = tmp_path / "prep.parquet"
-    rc = main(["--data", "/root/testdata/sf0.001/documents.parquet",
-               "--prep", "--config", str(cfg), "--output", str(out)],
-              spark=spark)
-    assert rc == 0
-    res = spark.read.parquet(str(out))
-    n = res.count()
-    assert 0 < n < 50 or n > 0
-    assert sorted(r["shuffle_pos"] for r in res.collect()) == list(range(n))
 
 
 def test_cli_rejects_bad_formats(spark, tmp_path):

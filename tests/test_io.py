@@ -191,28 +191,14 @@ def test_cli_end_to_end(spark, tmp_path):
     assert rows == {"B": 1, "C": 2, "A": 3}
 
 
-def test_write_training_shards_contiguous_ordered(spark, tmp_path):
-    import pytest
-    from bid_evaluation_spark.operators.pipeline import shuffle_rows
-    from bid_evaluation_spark.sources.io import write_training_shards
+def test_load_all_registers_views(spark):
+    from bid_evaluation_spark.sources.io import TESTDATA_TABLES, load_all
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    n = docs.count()
-    out = str(tmp_path / "shards")
-    write_training_shards(shuffle_rows(docs, seed="sh"), out, n_shards=4)
-    back = spark.read.parquet(out).withColumn("_f", F.input_file_name())
-    rows = [(r["_f"], r["shuffle_pos"]) for r in back.collect()]
-    # every position exactly once across shards
-    assert sorted(p for _, p in rows) == list(range(n))
-    # each shard file holds one contiguous, disjoint position range
-    by_file = {}
-    for f, p in rows:
-        by_file.setdefault(f, []).append(p)
-    spans = sorted((min(ps), max(ps), len(ps)) for ps in by_file.values())
-    assert all(hi - lo + 1 == cnt for lo, hi, cnt in spans)
-    assert all(spans[i][1] < spans[i + 1][0] for i in range(len(spans) - 1))
-    with pytest.raises(ValueError, match="n_shards"):
-        write_training_shards(docs, out, 0, pos_col="doc_id")
+    tables = load_all(spark, "/root/testdata/sf0.001")
+    assert set(tables) == set(TESTDATA_TABLES)
+    assert spark.sql("SELECT count(*) c FROM region").first()["c"] == 5
+    # events ts normalized to a timestamp type, not raw nanos longs
+    assert dict(tables["events"].dtypes)["ts"].startswith("timestamp")
 
 
 class TestFormatRoundtrips:

@@ -10,10 +10,7 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
-from hypothesis import (HealthCheck, assume, example, given, settings,
-                        strategies as st)
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from bid_evaluation_spark import Evaluator, StagedEvaluator
 
@@ -159,123 +156,9 @@ corpus_strategy = st.lists(
 )
 
 
-@SET
-@given(texts=corpus_strategy,
-       width=st.sampled_from([2, 8, 64]))
-def test_cms_never_undercounts(spark, texts, width):
-    """The count-min estimate is an upper bound on the true count for EVERY
-    key, at any width — collisions only inflate."""
-    from bid_evaluation_spark.operators.sketch import cms_topk
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    rows = cms_topk(df, k=100, depth=2, width=width, with_exact=True).collect()
-    true_tokens = [w for t in texts for w in t.split()]
-    assert len(rows) == len(set(true_tokens))
-    for r in rows:
-        assert r["est"] >= r["exact"], (r, width)
-        assert r["exact"] == true_tokens.count(r["token"])
-
-
-@SET
-@given(texts=corpus_strategy, copies=st.integers(min_value=2, max_value=4))
-def test_nb_duplication_equivalence_with_scaled_smoothing(spark, texts,
-                                                          copies):
-    """Training on an m×-duplicated corpus with add_k = m·k is EXACTLY the
-    base model: every count and the smoothing scale by m, so each
-    conditional (c·m + k·m)/(n·m + k·m·V) is the same real number. (The
-    naive form of this property — duplication alone leaves predictions
-    fixed — is FALSE: smoothing weight shrinks relative to counts, and
-    near-tied predictions move; hypothesis found the counterexample.)"""
-    from bid_evaluation_spark.operators.classify import nb_predict, nb_train
-
-    rows = [(i, t, "p" if i % 2 else "q") for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, cls string")
-    dup = df
-    for _ in range(copies - 1):
-        dup = dup.union(df)
-
-    m1 = nb_train(df, label_col="cls", add_k=1.0)
-    m2 = nb_train(dup, label_col="cls", add_k=float(copies))
-    base = {r["doc_id"]: r for r in nb_predict(df, m1).collect()}
-    duped = {r["doc_id"]: r for r in nb_predict(df, m2).collect()}
-    m1.release()
-    m2.release()
-    for i in base:
-        assert base[i]["pred_label"] == duped[i]["pred_label"]
-        assert math.isclose(base[i]["pred_logp"], duped[i]["pred_logp"],
-                            rel_tol=1e-9, abs_tol=1e-9)
-
-
 # --- decision analytics & CDC invariants (this round's operators) ---------
 
 pts_lists = st.lists(
     st.tuples(st.integers(min_value=0, max_value=12),
               st.integers(min_value=0, max_value=12)),
     min_size=1, max_size=24)
-
-
-# ---------------------------------------------------------------------------
-# Round-3 statistical kit invariants (drift + experimentation operators).
-# The formula-division bug proved properties catch what oracles sample
-# around; these pin the analytic identities the operators are built on.
-# ---------------------------------------------------------------------------
-
-grid_vals = st.lists(
-    st.integers(min_value=-2000, max_value=2000).map(lambda x: x / 1000.0),
-    min_size=2, max_size=24)
-
-
-def _vdf(spark, values):
-    return spark.createDataFrame([(float(v),) for v in values], "v double")
-
-
-@SET
-@given(perm=st.permutations(list(range(3))),
-       ranks=st.lists(st.lists(st.integers(1, 50), min_size=1, max_size=6,
-                               unique=True),
-                      min_size=3, max_size=3))
-def test_rrf_list_order_invariance(spark, perm, ranks):
-    """RRF is a sum over lists — permuting the input list order never
-    changes a fused score."""
-    from bid_evaluation_spark.operators.retrieval import rrf_fuse
-
-    lists = [spark.createDataFrame(
-        [(100 + i, r) for i, r in enumerate(rs)], "doc_id long, rank long")
-        for rs in ranks]
-    base = {r["doc_id"]: r["rrf_score"]
-            for r in rrf_fuse(lists, k=60).collect()}
-    permuted = {r["doc_id"]: r["rrf_score"]
-                for r in rrf_fuse([lists[i] for i in perm], k=60).collect()}
-    assert set(base) == set(permuted)
-    for d in base:
-        assert permuted[d] == pytest.approx(base[d], rel=1e-12)
-
-
-# ---- r4 statistical-kit properties (round-6 additions) ----------------
-
-
-@SET
-@given(groups=st.lists(
-    st.tuples(st.integers(min_value=1, max_value=25),
-              st.floats(min_value=0.0, max_value=40.0)),
-    min_size=1, max_size=6),
-    budget=st.integers(min_value=0, max_value=60))
-def test_neyman_allocation_invariants(spark, groups, budget):
-    """Never over budget, never above stratum size, and when NO stratum
-    is at its cap the largest-remainder round lands the budget exactly
-    (the r6 capped-slot fix makes the last clause hold)."""
-    from bid_evaluation_spark.operators.pipeline import neyman_allocation
-
-    rows = []
-    for gi, (n, spread) in enumerate(groups):
-        for j in range(n):
-            rows.append((f"g{gi}", float(spread) * (j % 2)))
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = neyman_allocation(df, "grp", "v", budget=budget).collect()
-    total_rows = sum(n for n, _ in groups)
-    assert sum(r["alloc"] for r in out) <= budget
-    for r in out:
-        assert 0 <= r["alloc"] <= r["n_rows"]
-    if all(r["alloc"] < r["n_rows"] for r in out):
-        assert sum(r["alloc"] for r in out) == min(budget, total_rows)

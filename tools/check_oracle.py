@@ -5,26 +5,16 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet, then compares
 row count, column names and (order-insensitively) values.
 
-Usage: python tools/check_oracle.py [sf_dir] [--deep] [--family PREFIX]
+Usage: python tools/check_oracle.py [sf_dir] [--family PREFIX]
        [query ...]
 
 ``--family PREFIX`` restricts the run to queries whose name starts with
-PREFIX (e.g. ``--family dedup_`` or ``--family mm_``) — targeted slices
-of the ~300-key registry without listing names.  Combinable with
-explicit query names (union).
-
-``--deep`` merges ``deep_queries()`` into the run set — the FULL-corpus
-variants of the quadratic-ground-truth dedup queries (the registry runs
-them on a doc_id-sampled sub-corpus so routine sweeps stay fast). Run
-the deep gate once per round: ``python tools/check_oracle.py
-/root/testdata/sf0.01 --deep dedup_minhash_candidates_documents_full
-dedup_simhash_documents_full dedup_lsh_recall_documents_full`` (sf0.1
-costs the full n² oracle — budget ~35 min).
+PREFIX (e.g. ``--family staged_``).  Combinable with explicit query
+names (union).
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import subprocess
@@ -36,12 +26,10 @@ sys.path.insert(0, ".")
 import duckdb
 
 import __spark_entry__ as entry
-from bid_evaluation_spark.operators.cache import release_all
 from bid_evaluation_spark.session import get_spark
 from bid_evaluation_spark.sources.io import TESTDATA_TABLES
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_DEEP_STAMP = os.path.join(_REPO, "artifacts", "deep_gate_stamp.json")
 
 
 def _git_head() -> str:
@@ -78,60 +66,6 @@ def _git_dirty() -> bool:
     return False
 
 
-def _stamp_deep_gate(names) -> None:
-    """Record WHICH tree the deep (full-corpus) gate verified, so the
-    routine sweep can tell whether the sampled-registry discipline has
-    lapsed (the sub-corpus rework is a silent coverage reduction if
-    nobody reruns --deep after changes)."""
-    os.makedirs(os.path.dirname(_DEEP_STAMP), exist_ok=True)
-    with open(_DEEP_STAMP, "w") as fh:
-        json.dump({"head": _git_head(), "queries": sorted(names)}, fh)
-
-
-def _only_artifact_commits_since(stamp_head: str) -> bool:
-    """True when every commit after ``stamp_head`` touches ONLY gate
-    artifacts/docs (the same allowlist the sweep header's dirty check
-    uses, plus markdown docs) — such commits cannot invalidate a deep
-    verification of the source tree."""
-    try:
-        out = subprocess.check_output(
-            ["git", "diff", "--name-only", f"{stamp_head}..HEAD"],
-            cwd=_REPO, stderr=subprocess.DEVNULL).decode()
-    except Exception:
-        return False
-    paths = [p for p in out.splitlines() if p.strip()]
-    return bool(paths) and all(
-        p.startswith(_ARTIFACT_PREFIXES) or p.endswith(".md")
-        for p in paths)
-
-
-def _check_deep_stamp() -> None:
-    head = _git_head()
-    try:
-        with open(_DEEP_STAMP) as fh:
-            st = json.load(fh)
-    except (OSError, ValueError):
-        print("DEEP GATE: never run in this checkout — run "
-              "`python tools/check_oracle.py <sf_dir> --deep` to verify "
-              "the full-corpus twins of the sampled dedup queries")
-        return
-    stamp_head = st.get("head", "?")
-    if stamp_head == head:
-        print(f"DEEP GATE: verified at current HEAD {head[:12]} "
-              f"({len(st.get('queries', []))} full-corpus queries)")
-    elif _only_artifact_commits_since(stamp_head):
-        # artifacts/docs-only commits after the stamp (the close-out's
-        # own sweep outputs) do not unverify the source tree — the r10
-        # committed artifacts printed a misleading 'stale' here
-        print(f"DEEP GATE: current — verified at {stamp_head[:12]}; "
-              f"every commit since touches only gate artifacts/docs "
-              f"(HEAD {head[:12]})")
-    else:
-        print(f"DEEP GATE: stale — last verified at {stamp_head[:12]}, "
-              f"HEAD is {head[:12]} with source changes since; rerun "
-              "`python tools/check_oracle.py <sf_dir> --deep`")
-
-
 def normalize(rows, columns):
     """Sort columns by name and rows by value — the driver's order-insensitive
     comparison shape. Floats are kept as-is (queries pre-round)."""
@@ -154,14 +88,11 @@ def normalize(rows, columns):
 
 def main():
     argv = sys.argv[1:]
-    deep = "--deep" in argv
     families = []
     args = []
     i = 0
     while i < len(argv):
-        if argv[i] == "--deep":
-            pass
-        elif argv[i] == "--family":
+        if argv[i] == "--family":
             families.append(argv[i + 1])
             i += 1
         else:
@@ -179,12 +110,6 @@ def main():
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    deep_names = set()
-    if deep:
-        for name, (fn, sql) in entry.deep_queries().items():
-            qs[name] = fn
-            oracles[name] = sql
-            deep_names.add(name)
     n_oracled = sum(1 for k in qs if oracles.get(k) is not None)
     # machine-printed registry count — docs quote THIS header, never a
     # hand count (the r6 close-out docs drifted to 280 vs the real 279)
@@ -216,11 +141,6 @@ def main():
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             failures.append(name)
             continue
-        finally:
-            # sweep operator-persisted intermediates (dedup signatures,
-            # curation manifests, ...) so a 300+-query run doesn't
-            # accumulate cached blocks for the whole session
-            release_all()
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             if len(srows) == 0:
@@ -255,14 +175,6 @@ def main():
             print(f"OK    {name}: {len(nrows_s)} rows [{time.time()-t0:.1f}s]")
 
     print()
-    if deep and not failures and (not only or deep_names <= only):
-        # all deep queries ran and passed → stamp the verified tree
-        _stamp_deep_gate(deep_names)
-        print(f"DEEP GATE: stamped at HEAD {_git_head()[:12]}")
-    elif not deep and not only:
-        # routine full sweep → remind (loudly, not fatally) if the deep
-        # full-corpus gate hasn't been re-verified against this tree
-        _check_deep_stamp()
     if failures:
         print(f"{len(failures)} FAILURES: {failures}")
         sys.exit(1)
