@@ -29,8 +29,6 @@ from typing import Dict, Iterable, List, Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from bid_evaluation_spark.dispatch import local_cap
-
 STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
 
 
@@ -164,44 +162,14 @@ def compute_stats(
     return out
 
 
-_STATS_LOCAL_MAX_ROWS = 10_000_000
-
-
-def stats_bundle_df(df: DataFrame, columns: Iterable[str],
-                    engine: str = "auto") -> DataFrame:
+def stats_bundle_df(df: DataFrame, columns: Iterable[str]) -> DataFrame:
     """One-row DataFrame with ``{col}_{stat}`` columns for each requested column.
 
     The DataFrame-returning twin of :func:`compute_stats` — used when statistics
     should stay distributed (e.g. to ``crossJoin(broadcast(...))`` instead of a
     driver collect, or to expose the A1 stats bundle as a query).
-
-    Engines: the EXACT percentiles are the cost — ``F.percentile``
-    buffers every value in a per-column hashmap merged on one reducer.
-    Below ``SPARK_GRAFT_STATS_LOCAL_MAX_ROWS`` rows (default 10M,
-    probed with one column-pruned count the parquet footer answers)
-    ``auto`` computes the whole bundle in ONE single-task numpy kernel
-    (r12 opt): sort-based exact percentiles with Spark's ``Percentile``
-    interpolation ``(hi−pos)·x[lo] + (pos−lo)·x[hi]``, min/max exact,
-    mean/std within the bundle's 4-decimal rounding contract (the
-    aggregate's own double sums are already merge-order-dependent).
-    Above the cap — or with ``engine="agg"`` — the fused distributed
-    aggregate runs unchanged, which at 100 TB should itself switch to
-    ``approx_percentiles`` (SCALE.md).
     """
     cols = list(columns)
-    if engine in ("auto", "kernel"):
-        import os
-        cap = local_cap("SPARK_GRAFT_STATS_LOCAL_MAX_ROWS", _STATS_LOCAL_MAX_ROWS)
-        if engine == "kernel":
-            cap = float("inf")
-        n = df.count()
-        # n == 0: Spark does not invoke the Arrow kernel for an empty
-        # partition, so the all-null bundle row comes from the agg path
-        if 0 < n <= cap:
-            return _stats_bundle_kernel(df, cols)
-    elif engine != "agg":
-        raise ValueError(f"engine must be 'auto', 'kernel' or 'agg', "
-                         f"got {engine!r}")
     aggs: List[Column] = []
     for c in cols:
         aggs.extend(_stat_exprs(F.col(c), c))
@@ -209,57 +177,6 @@ def stats_bundle_df(df: DataFrame, columns: Iterable[str],
     for c in cols:
         flat.extend(_unpack_select(c))
     return df.agg(*aggs).select(*flat)
-
-
-def _stats_bundle_kernel(df: DataFrame, cols: List[str]) -> DataFrame:
-    """Single-task bundle: one pass, numpy sort per column for the exact
-    percentiles. Nulls are excluded per column (aggregate semantics);
-    an empty/all-null column yields nulls, matching the agg engine."""
-    import numpy as np
-    import pandas as pd
-
-    names = [f"{c}__{k}" for c in cols for k in STAT_KEYS]
-    schema = ", ".join(f"`{n}` double" for n in names)
-
-    def _pctl(sorted_vals, p):
-        n = len(sorted_vals)
-        pos = (n - 1) * p
-        lo = int(np.floor(pos))
-        hi = int(np.ceil(pos))
-        if lo == hi:
-            return float(sorted_vals[lo])
-        return float((hi - pos) * sorted_vals[lo]
-                     + (pos - lo) * sorted_vals[hi])
-
-    def kernel(batches):
-        pdfs = list(batches)
-        pdf = (pd.concat(pdfs, ignore_index=True) if pdfs
-               else pd.DataFrame({f"_c{i}": pd.Series(dtype="float64")
-                                  for i in range(len(cols))}))
-        out = {}
-        for i, c in enumerate(cols):
-            vals = pdf[f"_c{i}"].to_numpy(dtype=np.float64)
-            vals = vals[~np.isnan(vals)]
-            p = f"{cols[i]}__"
-            if len(vals) == 0:
-                for k in STAT_KEYS:
-                    out[p + k] = [None]
-                continue
-            s = np.sort(vals)
-            out[p + "min"] = [float(s[0])]
-            out[p + "max"] = [float(s[-1])]
-            out[p + "mean"] = [float(s.sum() / len(s))]
-            out[p + "median"] = [_pctl(s, 0.5)]
-            out[p + "std"] = [float(np.std(s, ddof=1))
-                              if len(s) > 1 else None]
-            out[p + "q25"] = [_pctl(s, 0.25)]
-            out[p + "q75"] = [_pctl(s, 0.75)]
-        yield pd.DataFrame({n: pd.Series(out[n], dtype="object")
-                            for n in names})
-
-    proj = df.select(*[F.col(c).cast("double").alias(f"_c{i}")
-                       for i in range(len(cols)) for c in [cols[i]]])
-    return proj.repartition(1).mapInPandas(kernel, schema)
 
 
 def grouped_stats_df(df: DataFrame, group_col: str, columns: Iterable[str]) -> DataFrame:
