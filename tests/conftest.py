@@ -2,41 +2,7 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
-
-#: r12 verdict task 1: the suite grew to ~1,281 tests and a serial
-#: ``pytest tests/`` no longer fits the driver's budget (r12 VERIFY cut
-#: off at ~67% with zero failures). Tests measured >= 2.5 s are listed in
-#: ``slow_manifest.txt`` and marked ``slow``; plain ``pytest`` excludes
-#: them via addopts (pyproject) while ``tools/run_tests_parallel.py``
-#: runs the FULL battery (-m "slow or not slow") as 6 concurrent shards.
-_MANIFEST = os.path.join(os.path.dirname(__file__), "slow_manifest.txt")
-
-
-def _slow_ids():
-    ids = set()
-    try:
-        with open(_MANIFEST) as fh:
-            for line in fh:
-                line = line.strip()
-                if line and not line.startswith("#"):
-                    ids.add(line)
-    except OSError:
-        pass
-    return ids
-
-
-def pytest_collection_modifyitems(config, items):
-    slow = _slow_ids()
-    if not slow:
-        return
-    marker = pytest.mark.slow
-    for item in items:
-        nid = item.nodeid
-        if nid in slow or nid.split("[", 1)[0] in slow:
-            item.add_marker(marker)
 
 
 @pytest.fixture(scope="session")
