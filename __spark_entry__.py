@@ -1068,39 +1068,6 @@ ORDER BY event_type
 
 
 # ---------------------------------------------------------------------------
-# embedding maintenance (operators/embeddings.py) + split/exact-k sampling
-# ---------------------------------------------------------------------------
-
-
-def _q_io_footer_stats_orders(spark, sf_dir):
-    """Metadata-only COUNT/MIN/MAX from parquet footer statistics
-    (sources/io.py footer_stats): DSv2 aggregate pushdown, plan-asserted
-    `PushedAggregation`, zero data pages read — the way a 100-TB pipeline
-    sizes itself before scanning. The oracle computes the same stats from
-    the data (footer stats are exact for count/min/max)."""
-    from bid_evaluation_spark.sources.io import footer_stats
-
-    stats = footer_stats(spark, f"{sf_dir}/orders.parquet",
-                         ["o_totalprice", "o_orderkey"])
-    return spark.createDataFrame(
-        [(int(stats["count"]),
-          float(stats["min_o_totalprice"]),
-          float(stats["max_o_totalprice"]),
-          int(stats["min_o_orderkey"]), int(stats["max_o_orderkey"]))],
-        "n_rows long, min_price double, max_price double, "
-        "min_key long, max_key long")
-
-
-_SQL_IO_FOOTER_STATS_ORDERS = """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       min(o_totalprice) AS min_price, max(o_totalprice) AS max_price,
-       CAST(min(o_orderkey) AS BIGINT) AS min_key,
-       CAST(max(o_orderkey) AS BIGINT) AS max_key
-FROM orders
-"""
-
-
-# ---------------------------------------------------------------------------
 # time-series gap-fill (operators/timeseries.py) + as-of join variants
 # ---------------------------------------------------------------------------
 
@@ -1308,8 +1275,6 @@ _QUERIES: dict = {
                                  _SQL_STAGED_TOPN_EXCLUDE_PART),
     "dedup_exact_documents": (_q_dedup_exact_documents, _SQL_DEDUP_EXACT_DOCUMENTS),
     "events_json_props": (_q_events_json_props, _SQL_EVENTS_JSON_PROPS),
-    "io_footer_stats_orders": (_q_io_footer_stats_orders,
-                               _SQL_IO_FOOTER_STATS_ORDERS),
     "a1_grouped_stats_orders": (_q_a1_grouped_stats_orders,
                                 _SQL_A1_GROUPED_STATS_ORDERS),
     "events_cube_type_user_bucket": (_q_events_cube_type_user_bucket,

@@ -146,7 +146,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     from bid_evaluation_spark.session import get_spark
-    from bid_evaluation_spark.sources.io import TESTDATA_TABLES, load_table
+    from bid_evaluation_spark.sources.io import load_table
 
     # console progress bars (disabled in get_spark's builder — a STATIC
     # conf, not settable at runtime) interleave \r-frames with the result
@@ -155,16 +155,11 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up (excluded from timings — discard-first-iteration practice):
-    # one count() per table warms the parquet scan path, codegen/JIT, and the
-    # OS page cache; the 1-row mapInPandas spins up the Arrow Python workers.
-    # What stays measured is query execution, which is what scales with data.
-    for t in TESTDATA_TABLES:
+    # one count() per benched table warms the parquet scan path,
+    # codegen/JIT and the OS page cache. What stays measured is query
+    # execution, which is what scales with data.
+    for t in ("lineitem", "orders"):
         load_table(spark, sf_dir, t).count()
-    def _noop_udf(it):
-        for b in it:
-            yield b
-
-    spark.range(1).mapInPandas(_noop_udf, "id long").count()
     _calibrate(spark)   # discarded: first range-agg JVM job pays JIT
     calib_before = _calibrate(spark)
 

@@ -76,7 +76,9 @@ def main(argv=None, spark=None) -> int:
             result.show(args.show, truncate=False)
         if args.output:
             if args.output.endswith(".parquet"):
-                result.write.mode("overwrite").parquet(args.output)
+                from .sources.io import write_parquet
+
+                write_parquet(result, args.output)
             elif args.output.endswith(".csv"):
                 from .sources.io import write_csv
 

@@ -15,6 +15,7 @@ names (union).
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import subprocess
@@ -27,7 +28,6 @@ import duckdb
 
 import __spark_entry__ as entry
 from bid_evaluation_spark.session import get_spark
-from bid_evaluation_spark.sources.io import TESTDATA_TABLES
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -103,9 +103,10 @@ def main():
 
     spark = get_spark("check-oracle")
     con = duckdb.connect()
-    for t in TESTDATA_TABLES:
+    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        t = os.path.basename(path)[: -len(".parquet")]
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
         )
 
     qs = entry.queries()
