@@ -1,19 +1,16 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry of the scoring engine, with a DuckDB oracle per query.
 
 ``entry(spark)`` — flagship query (smoke, sf0.001).
-``queries()``   — one entry per implemented operator from SURVEY.md §2 plus
-                  the beyond-reference operators (dedup / similarity / text /
-                  streaming); each callable takes (spark, sf_dir) → DataFrame.
-``oracle_sql()``— the DuckDB-equivalent ANSI SQL per query (omitted only for
-                  ops whose hash functions are not portable across engines:
-                  minhash/simhash/xxhash-fingerprint — those get the weaker
-                  rows-only check).
+``queries()``   — one entry per scoring operator from SURVEY.md §2; each
+                  callable takes (spark, sf_dir) → DataFrame.
+``oracle_sql()``— the DuckDB-equivalent ANSI SQL for every query
+                  (``tools/check_oracle.py`` compares the two).
 
 Query-key prefixes map to the SURVEY §2 inventory:
-F1-F13 scalar scoring transforms, A1/A7 aggregations, W1/W4/W5 windows,
+F1-F13 scalar scoring transforms, A1 statistics bundles, W1/W5 windows,
 P4/P5 staged filters (inside ``staged_*``), J3 stats broadcast, O2 ordering
-(inside ``staged_*``), S1 parquet source (all queries), plus ``dedup_*``,
-``ann_*``, ``text_*``, ``events_*`` extension operators.
+(inside ``staged_*``), batched evaluation (``batched_*``), S1 parquet source
+(all queries).
 
 All float outputs are rounded to 4 decimals ON BOTH SIDES so cross-engine
 floating-point accumulation noise (~1e-12 relative) cannot flip the
@@ -529,7 +526,7 @@ FROM sc
 
 
 # ---------------------------------------------------------------------------
-# A1/A7/J3: aggregations & stats broadcast
+# A1/J3: statistics bundle & stats broadcast
 # ---------------------------------------------------------------------------
 
 def _q_a1_stats_bundle_lineitem(spark, sf_dir):
@@ -561,22 +558,6 @@ SELECT
   round((quantile_cont(l_quantity, 0.25)) * 10000.0) / 10000.0 AS qty_q25,
   round((quantile_cont(l_quantity, 0.75)) * 10000.0) / 10000.0 AS qty_q75
 FROM lineitem
-"""
-
-
-def _q_a7_group_totals_events(spark, sf_dir):
-    df = _t(spark, sf_dir, "events")
-    return (
-        df.groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-_SQL_A7_GROUP_TOTALS_EVENTS = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-       round((sum(value)) * 10000.0) / 10000.0 AS sum_value
-FROM events GROUP BY event_type
 """
 
 
@@ -926,31 +907,7 @@ FROM s2
 
 
 # ---------------------------------------------------------------------------
-# Dedup extension
-# ---------------------------------------------------------------------------
-
-
-def _q_dedup_exact_documents(spark, sf_dir):
-    df = _t(spark, sf_dir, "documents")
-    normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return (
-        df.select(F.md5(normalized.cast("binary")).alias("content_hash"), "doc_id")
-        .groupBy("content_hash")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_dups"),
-             F.min("doc_id").alias("keep_id"))
-    )
-
-
-_SQL_DEDUP_EXACT_DOCUMENTS = """
-SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_hash,
-       CAST(count(*) AS BIGINT) AS n_dups, min(doc_id) AS keep_id
-FROM documents
-GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Streaming-equivalent window aggregations over events
+# F6: custom pandas-UDF criterion; batched (many-tender) evaluation
 # ---------------------------------------------------------------------------
 
 
@@ -1033,70 +990,9 @@ FROM orders JOIN stats ON o_orderpriority = p
 """
 
 
-def _q_events_json_props(spark, sf_dir):
-    """Semi-structured column handling: one numeric field extracted from the
-    events props JSON string and aggregated per event type.
-
-    Extraction is ``get_json_object(...).cast('int')`` — string-extract then
-    SQL cast, which is coercion-identical to the oracle's
-    ``CAST(json_extract_string(...) AS INT)`` even when the generator emits
-    ``{"k":"5"}`` (a schema'd ``from_json(props, 'k INT')`` would yield NULL
-    for string-typed numerics instead of coercing). For many-field
-    extraction the schema'd ``from_json`` single-parse remains the scale
-    path; with one field the per-row parse cost is the same."""
-    df = _t(spark, sf_dir, "events")
-    j = df.select(
-        "event_type",
-        F.get_json_object(F.col("props"), "$.k").cast("int").alias("k"))
-    return (j.groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.sum("k").cast("long").alias("sum_k"),
-                 _r4(F.avg("k")).alias("avg_k"))
-            .orderBy("event_type"))
-
-
-_SQL_EVENTS_JSON_PROPS = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-       round(avg(CAST(json_extract_string(props, '$.k') AS INT)) * 10000.0)
-         / 10000.0 AS avg_k
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
 # ---------------------------------------------------------------------------
-# time-series gap-fill (operators/timeseries.py) + as-of join variants
+# A1: per-group and approximate statistics
 # ---------------------------------------------------------------------------
-
-
-def _q_events_rollup_type_day(spark, sf_dir):
-    """OLAP rollup: (event_type, day) → (event_type) → () subtotal levels in
-    ONE pass (Catalyst expands the grouping sets with partial aggregation —
-    no per-level rescan). ``gid`` disambiguates rolled-up NULLs from data
-    NULLs."""
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(F.col("ts").cast("double") / F.lit(86400.0)).cast("long")
-    res = (ev.rollup(F.col("event_type"), day.alias("day_bucket"))
-             .agg(F.sum("value").alias("sv"),
-                  F.count(F.lit(1)).alias("n"),
-                  F.grouping_id().cast("long").alias("gid")))
-    return res.select("event_type", "day_bucket",
-                      _r4("sv").alias("sum_value"), "n", "gid")
-
-
-_SQL_EVENTS_ROLLUP_TYPE_DAY = """
-SELECT event_type,
-  CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_bucket,
-  round(sum(value) * 10000.0) / 10000.0 AS sum_value,
-  count(*) AS n,
-  CAST(GROUPING(event_type,
-                CAST(floor(epoch(ts) / 86400) AS BIGINT)) AS BIGINT) AS gid
-FROM events
-GROUP BY ROLLUP(event_type, CAST(floor(epoch(ts) / 86400) AS BIGINT))
-"""
 
 
 def _q_a1_grouped_stats_orders(spark, sf_dir):
@@ -1136,64 +1032,6 @@ SELECT o_orderpriority,
     / 10000.0 AS price_q75
 FROM orders GROUP BY o_orderpriority
 """
-
-
-def _q_events_cube_type_user_bucket(spark, sf_dir):
-    """OLAP CUBE: every subtotal combination of (event_type, user bucket)
-    in ONE pass — Catalyst expands the four grouping sets with partial
-    aggregation (no per-level rescan); ``gid`` disambiguates rolled-up
-    NULLs from data NULLs, same contract as the ROLLUP query."""
-    ev = _t(spark, sf_dir, "events")
-    ub = (F.col("user_id") % 10).cast("long")
-    res = (ev.cube(F.col("event_type"), ub.alias("user_bucket"))
-           .agg(F.sum("value").alias("sv"),
-                F.count(F.lit(1)).alias("n"),
-                F.grouping_id().cast("long").alias("gid")))
-    return res.select("event_type", "user_bucket",
-                      _r4("sv").alias("sum_value"), "n", "gid")
-
-
-_SQL_EVENTS_CUBE_TYPE_USER_BUCKET = """
-SELECT event_type,
-  CAST(user_id % 10 AS BIGINT) AS user_bucket,
-  round(sum(value) * 10000.0) / 10000.0 AS sum_value,
-  count(*) AS n,
-  CAST(GROUPING(event_type, CAST(user_id % 10 AS BIGINT)) AS BIGINT) AS gid
-FROM events
-GROUP BY CUBE(event_type, CAST(user_id % 10 AS BIGINT))
-"""
-
-
-def _q_events_pivot_type_user(spark, sf_dir):
-    """Pivot event_type → per-user sum columns with EXPLICIT pivot values —
-    no extra distinct-scan pass, and the plan stays a single hash aggregate
-    (each cell is a conditional partial sum)."""
-    types = ["click", "error", "purchase", "signup", "view"]
-    ev = _t(spark, sf_dir, "events")
-    res = ev.groupBy("user_id").pivot("event_type", types).agg(F.sum("value"))
-    return res.select(
-        "user_id", *[_r4(t).alias(f"sum_{t}") for t in types])
-
-
-_SQL_EVENTS_PIVOT_TYPE_USER = """
-SELECT user_id,
-  round(sum(CASE WHEN event_type = 'click' THEN value END) * 10000.0)
-    / 10000.0 AS sum_click,
-  round(sum(CASE WHEN event_type = 'error' THEN value END) * 10000.0)
-    / 10000.0 AS sum_error,
-  round(sum(CASE WHEN event_type = 'purchase' THEN value END) * 10000.0)
-    / 10000.0 AS sum_purchase,
-  round(sum(CASE WHEN event_type = 'signup' THEN value END) * 10000.0)
-    / 10000.0 AS sum_signup,
-  round(sum(CASE WHEN event_type = 'view' THEN value END) * 10000.0)
-    / 10000.0 AS sum_view
-FROM events GROUP BY user_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# round-7 wave: winnowing, corpus overlap, script profile, MMR
-# ---------------------------------------------------------------------------
 
 
 def _q_a1_approx_quantiles_lineitem(spark, sf_dir):
@@ -1262,7 +1100,6 @@ _QUERIES: dict = {
                                         _SQL_F13_DISTANCE_FROM_MEAN_CUSTOMER),
     "a1_stats_bundle_lineitem": (_q_a1_stats_bundle_lineitem,
                                  _SQL_A1_STATS_BUNDLE_LINEITEM),
-    "a7_group_totals_events": (_q_a7_group_totals_events, _SQL_A7_GROUP_TOTALS_EVENTS),
     "j3_zscore_orders": (_q_j3_zscore_orders, _SQL_J3_ZSCORE_ORDERS),
     "w1_eval_rank_part": (_q_w1_eval_rank_part, _SQL_W1_EVAL_RANK_PART),
     "w1_eval_rank_unnorm_part": (_q_w1_eval_rank_unnorm_part,
@@ -1273,26 +1110,18 @@ _QUERIES: dict = {
     "staged_topn_customer": (_q_staged_topn_customer, _SQL_STAGED_TOPN_CUSTOMER),
     "staged_topn_exclude_part": (_q_staged_topn_exclude_part,
                                  _SQL_STAGED_TOPN_EXCLUDE_PART),
-    "dedup_exact_documents": (_q_dedup_exact_documents, _SQL_DEDUP_EXACT_DOCUMENTS),
-    "events_json_props": (_q_events_json_props, _SQL_EVENTS_JSON_PROPS),
     "a1_grouped_stats_orders": (_q_a1_grouped_stats_orders,
                                 _SQL_A1_GROUPED_STATS_ORDERS),
-    "events_cube_type_user_bucket": (_q_events_cube_type_user_bucket,
-                                     _SQL_EVENTS_CUBE_TYPE_USER_BUCKET),
-    "events_rollup_type_day": (_q_events_rollup_type_day,
-                               _SQL_EVENTS_ROLLUP_TYPE_DAY),
-    "events_pivot_type_user": (_q_events_pivot_type_user,
-                               _SQL_EVENTS_PIVOT_TYPE_USER),
     "a1_approx_quantiles_lineitem": (_q_a1_approx_quantiles_lineitem,
                                      _SQL_A1_APPROX_QUANTILES_LINEITEM),
 }
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ extensions)."""
+    """One entry per implemented operator from SURVEY.md §2."""
     return {name: fn for name, (fn, _) in _QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (None-oracle queries omitted)."""
+    """DuckDB-equivalent SQL per query."""
     return {name: sql for name, (_, sql) in _QUERIES.items() if sql is not None}
