@@ -11,11 +11,7 @@ A from-scratch Spark engine with the query/data-processing capabilities of the
 - a plain :class:`Evaluator` (reference: ``bid_evaluation/evaluator.py``) and a
   multi-stage :class:`StagedEvaluator` with elimination filters
   (reference: ``bid_evaluation/staged.py``),
-- pre-built scoring templates (reference: ``bid_evaluation/custom_templates.py``),
-- beyond-reference, scale-oriented operators: deduplication (exact /
-  MinHash-LSH / SimHash / n-gram Jaccard / embedding), similarity search,
-  text analysis, multimodal column plumbing, and Structured-Streaming
-  window aggregations (``operators/``, ``streaming/``).
+- pre-built scoring templates (reference: ``bid_evaluation/custom_templates.py``).
 
 Everything is expressed declaratively (DataFrame/Column/Window) so Catalyst
 performs predicate pushdown, column pruning and whole-stage codegen; Python

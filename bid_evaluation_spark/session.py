@@ -35,7 +35,7 @@ def get_spark(app_name: str = "bid_evaluation_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # static conf (cannot be set at runtime): keep \r progress frames
-        # out of stdout so bench.py's result JSON line stays parseable
+        # out of stdout, where they would interleave with printed results
         .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()
