@@ -19,8 +19,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
-
 
 def _force(df):
     df.write.format("noop").mode("overwrite").save()

@@ -143,22 +143,3 @@ def test_formula_native_equals_fallback(spark, formula, values):
         assert math.isclose(native[i], fallback[i],
                             rel_tol=1e-9, abs_tol=1e-9), (
             formula, values[i], native[i], fallback[i])
-
-
-# ---------------------------------------------------------------------------
-# sketch + classifier invariants
-# ---------------------------------------------------------------------------
-
-corpus_strategy = st.lists(
-    st.lists(st.sampled_from(["aa", "bb", "cc", "dd", "ee", "ff"]),
-             min_size=0, max_size=6).map(" ".join),
-    min_size=1, max_size=8,
-)
-
-
-# --- decision analytics & CDC invariants (this round's operators) ---------
-
-pts_lists = st.lists(
-    st.tuples(st.integers(min_value=0, max_value=12),
-              st.integers(min_value=0, max_value=12)),
-    min_size=1, max_size=24)
