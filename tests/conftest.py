@@ -2,7 +2,34 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+#: Slow extension-operator tests (``slow_manifest.txt``) are marked
+#: ``slow`` and excluded from a plain ``pytest`` run via addopts
+#: (pyproject); ``pytest -m slow`` runs them. The manifest lists no
+#: scoring-engine test.
+_MANIFEST = os.path.join(os.path.dirname(__file__), "slow_manifest.txt")
+
+
+def _slow_ids():
+    ids = set()
+    with open(_MANIFEST) as fh:
+        for line in fh:
+            line = line.strip()
+            if line and not line.startswith("#"):
+                ids.add(line)
+    return ids
+
+
+def pytest_collection_modifyitems(config, items):
+    slow = _slow_ids()
+    marker = pytest.mark.slow
+    for item in items:
+        nid = item.nodeid
+        if nid in slow or nid.split("[", 1)[0] in slow:
+            item.add_marker(marker)
 
 
 @pytest.fixture(scope="session")

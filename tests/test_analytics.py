@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.analytics import (
+from bid_evaluation_ext.operators.analytics import (
     category_diversity, gini_by_group, pareto_frontier_2d)
 
 
@@ -182,7 +182,7 @@ class TestCategoryDiversity:
 
 class TestNormalizeScores:
     def test_minmax_zscore_percent_rank(self, spark):
-        from bid_evaluation_spark.operators.analytics import normalize_scores
+        from bid_evaluation_ext.operators.analytics import normalize_scores
 
         df = spark.createDataFrame(
             [("g", 0, 10.0), ("g", 1, 20.0), ("g", 2, 30.0),
@@ -203,7 +203,7 @@ class TestNormalizeScores:
         assert pr[3] == 0.0 and pr[4] == 0.0           # ties share rank 0
 
     def test_global_and_bad_method(self, spark):
-        from bid_evaluation_spark.operators.analytics import normalize_scores
+        from bid_evaluation_ext.operators.analytics import normalize_scores
 
         df = spark.createDataFrame([(0, 1.0), (1, 3.0)], "id long, v double")
         got = {r["id"]: r["v_norm"]
@@ -215,7 +215,7 @@ class TestNormalizeScores:
 
 class TestPcaCovariance:
     def test_matches_numpy_cov(self, spark):
-        from bid_evaluation_spark.operators.pca import pca_covariance
+        from bid_evaluation_ext.operators.pca import pca_covariance
 
         rng = np.random.default_rng(3)
         X = rng.normal(size=(40, 6)).astype(np.float32)
@@ -229,7 +229,7 @@ class TestPcaCovariance:
             assert r["cov"] == pytest.approx(C[r["i"], r["j"]], abs=1e-10)
 
     def test_null_vectors_skipped_and_min_rows(self, spark):
-        from bid_evaluation_spark.operators.pca import pca_covariance
+        from bid_evaluation_ext.operators.pca import pca_covariance
 
         df = spark.createDataFrame(
             [(0, [1.0, 2.0]), (1, None), (2, [3.0, 5.0])],
@@ -247,7 +247,7 @@ class TestPcaCovariance:
 
 class TestGroupedLinearFit:
     def test_exact_line_and_noise(self, spark):
-        from bid_evaluation_spark.operators.analytics import grouped_linear_fit
+        from bid_evaluation_ext.operators.analytics import grouped_linear_fit
 
         rng = random.Random(5)
         rows = []
@@ -277,7 +277,7 @@ class TestGroupedLinearFit:
         assert got["single"]["slope"] is None and got["single"]["n"] == 1
 
     def test_nulls_excluded(self, spark):
-        from bid_evaluation_spark.operators.analytics import grouped_linear_fit
+        from bid_evaluation_ext.operators.analytics import grouped_linear_fit
 
         df = spark.createDataFrame(
             [("g", 0.0, 0.0), ("g", 1.0, 2.0), ("g", None, 9.0),
@@ -289,7 +289,7 @@ class TestGroupedLinearFit:
 
 class TestWeightedQuantile:
     def test_vs_numpy_reference(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             weighted_quantile_by_group)
 
         rng = random.Random(19)
@@ -314,7 +314,7 @@ class TestWeightedQuantile:
         assert got["z"]["wq_0_5"] is None
 
     def test_ties_and_validation(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             weighted_quantile_by_group)
 
         # heavy tie run at the crossing value
@@ -329,7 +329,7 @@ class TestWeightedQuantile:
 
 class TestQuantileMatch:
     def test_self_match_is_identity_and_shift_recovers(self, spark):
-        from bid_evaluation_spark.operators.analytics import quantile_match
+        from bid_evaluation_ext.operators.analytics import quantile_match
 
         rng = random.Random(53)
         vals = sorted(rng.uniform(0, 100) for _ in range(400))
@@ -352,7 +352,7 @@ class TestQuantileMatch:
             assert back[i] == pytest.approx(v, abs=1e-6)
 
     def test_clamp_nulls_and_degenerate(self, spark):
-        from bid_evaluation_spark.operators.analytics import quantile_match
+        from bid_evaluation_ext.operators.analytics import quantile_match
 
         ref = spark.createDataFrame([(float(v),) for v in range(11)],
                                     "r double")
@@ -376,7 +376,7 @@ class TestQuantileMatch:
 def test_quantile_match_by_group_harmonizes_shifted_groups(spark):
     """Two groups drawing the same base distribution with different
     shifts land on the SAME common scale after per-group matching."""
-    from bid_evaluation_spark.operators.analytics import (
+    from bid_evaluation_ext.operators.analytics import (
         quantile_match_by_group)
 
     rng = random.Random(61)
@@ -394,7 +394,7 @@ def test_quantile_match_by_group_harmonizes_shifted_groups(spark):
 
 
 def test_ab_conversion_test(spark):
-    from bid_evaluation_spark.operators.analytics import ab_conversion_test
+    from bid_evaluation_ext.operators.analytics import ab_conversion_test
 
     rows = ([("a", 1)] * 30 + [("a", 0)] * 70       # control 30%
             + [("b", 1)] * 45 + [("b", 0)] * 55)    # treatment 45%
@@ -424,7 +424,7 @@ def test_ab_conversion_test(spark):
 
 
 def test_cuped_adjust(spark):
-    from bid_evaluation_spark.operators.analytics import cuped_adjust
+    from bid_evaluation_ext.operators.analytics import cuped_adjust
 
     rng = random.Random(97)
     rows = []
@@ -453,7 +453,7 @@ def test_cuped_adjust(spark):
 
 
 def test_winsorized_mean_by_group(spark):
-    from bid_evaluation_spark.operators.analytics import (
+    from bid_evaluation_ext.operators.analytics import (
         winsorized_mean_by_group)
 
     vals = [float(v) for v in range(1, 100)] + [100000.0]   # one whale
@@ -478,7 +478,7 @@ def test_winsorized_mean_by_group(spark):
 def test_welch_t_test(spark):
     import math
 
-    from bid_evaluation_spark.operators.analytics import welch_t_test
+    from bid_evaluation_ext.operators.analytics import welch_t_test
 
     rng = random.Random(101)
     xs = [rng.gauss(10, 2) for _ in range(80)]
@@ -515,10 +515,10 @@ def test_persisted_intermediates_registered_for_release(spark):
     (pareto_frontier_2d, concurrency_timeline, key_skew_report) must
     register it with the shared cache registry so release_all() can sweep
     it — otherwise repeated calls leak cached blocks for the session."""
-    from bid_evaluation_spark.operators import cache
-    from bid_evaluation_spark.operators.analytics import pareto_frontier_2d
-    from bid_evaluation_spark.operators.profile import key_skew_report
-    from bid_evaluation_spark.operators.timeseries import concurrency_timeline
+    from bid_evaluation_ext.operators import cache
+    from bid_evaluation_ext.operators.analytics import pareto_frontier_2d
+    from bid_evaluation_ext.operators.profile import key_skew_report
+    from bid_evaluation_ext.operators.timeseries import concurrency_timeline
 
     cache.release_all()
     assert not cache._ALL_CACHED
@@ -549,7 +549,7 @@ class TestKrippendorffAlpha:
         (m_u >= 2) matrix with values a/b/c/d."""
         import math
 
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             krippendorff_alpha)
 
         # units as columns of the standard example (None = missing)
@@ -585,7 +585,7 @@ class TestKrippendorffAlpha:
         assert math.isfinite(got["alpha"])
 
     def test_perfect_agreement_with_variation(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             krippendorff_alpha)
 
         rows = [(u, v) for u, v in [(1, "x"), (1, "x"), (1, "x"),
@@ -595,7 +595,7 @@ class TestKrippendorffAlpha:
             pytest.approx(1.0)
 
     def test_degenerate_cases(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             krippendorff_alpha)
 
         # single-value corpus: De = 0 → alpha null
@@ -613,7 +613,7 @@ class TestMannWhitneyU:
     def test_python_replay(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.analytics import mann_whitney_u
+        from bid_evaluation_ext.operators.analytics import mann_whitney_u
 
         rng = np.random.RandomState(5)
         a = rng.randint(0, 20, 40)          # heavy ties
@@ -647,8 +647,8 @@ class TestMannWhitneyU:
         treatment group as the positive class."""
         import numpy as np
 
-        from bid_evaluation_spark.operators.analytics import mann_whitney_u
-        from bid_evaluation_spark.operators.metrics import roc_auc
+        from bid_evaluation_ext.operators.analytics import mann_whitney_u
+        from bid_evaluation_ext.operators.metrics import roc_auc
 
         rng = np.random.RandomState(9)
         rows = [(int(i % 2), float(rng.randint(0, 15))) for i in range(60)]
@@ -659,7 +659,7 @@ class TestMannWhitneyU:
             pytest.approx(auc, rel=1e-12)
 
     def test_degenerate_all_tied(self, spark):
-        from bid_evaluation_spark.operators.analytics import mann_whitney_u
+        from bid_evaluation_ext.operators.analytics import mann_whitney_u
 
         df = spark.createDataFrame([("c", 1.0), ("t", 1.0), ("t", 1.0)],
                                    "variant string, v double")
@@ -670,7 +670,7 @@ class TestMannWhitneyU:
 
 class TestBHAdjust:
     def test_known_values(self, spark):
-        from bid_evaluation_spark.operators.analytics import bh_adjust
+        from bid_evaluation_ext.operators.analytics import bh_adjust
 
         df = spark.createDataFrame(
             [("a", 0.01), ("b", 0.04), ("c", 0.03), ("d", 0.005)],
@@ -685,7 +685,7 @@ class TestBHAdjust:
         assert all(rows[k]["reject"] for k in "dacb")
 
     def test_monotone_and_capped(self, spark):
-        from bid_evaluation_spark.operators.analytics import bh_adjust
+        from bid_evaluation_ext.operators.analytics import bh_adjust
 
         df = spark.createDataFrame(
             [(f"m{i}", p) for i, p in
@@ -698,7 +698,7 @@ class TestBHAdjust:
         assert out[0]["reject"] and not out[-1]["reject"]
 
     def test_null_p_raises(self, spark):
-        from bid_evaluation_spark.operators.analytics import bh_adjust
+        from bid_evaluation_ext.operators.analytics import bh_adjust
 
         df = spark.createDataFrame([("a", 0.1), ("b", None)],
                                    "metric string, p_value double")
@@ -715,7 +715,7 @@ class TestPoissonBootstrap:
         of a tiny B)."""
         import hashlib
 
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             _POISSON1_CDF, poisson_bootstrap_ci)
 
         rows = [(i, "g", float(v)) for i, v in
@@ -749,7 +749,7 @@ class TestPoissonBootstrap:
     def test_ci_brackets_mean_and_tightens(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             poisson_bootstrap_ci)
 
         rng = np.random.RandomState(1)
@@ -766,7 +766,7 @@ class TestPoissonBootstrap:
         assert width["big"] < width["small"]  # 10x n → ~3x tighter
 
     def test_determinism_and_validation(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             poisson_bootstrap_ci)
 
         df = spark.createDataFrame([(i, "g", float(i)) for i in range(20)],
@@ -787,7 +787,7 @@ class TestConformalInterval:
             .select(F.col("pred"), F.col("actual"))
 
     def test_known_quantile_and_coverage_rule(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             conformal_interval)
 
         # residuals 1..10; alpha=0.2 → k = ceil(11*0.8) = 9 → q = 9
@@ -803,7 +803,7 @@ class TestConformalInterval:
     def test_empirical_coverage(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             conformal_interval)
 
         rng = np.random.RandomState(2)
@@ -819,7 +819,7 @@ class TestConformalInterval:
         assert covered / len(out) >= 0.85  # ≥ 1−α up to finite-sample noise
 
     def test_validation(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             conformal_interval)
 
         cal = self._cal(spark, [1.0])
@@ -832,7 +832,7 @@ class TestConformalInterval:
 
 class TestConformalByGroup:
     def test_per_group_quantiles_differ(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             conformal_interval_by_group)
 
         # group a: residuals 1..10, group b: residuals 10..100 (x10)
@@ -852,7 +852,7 @@ class TestConformalByGroup:
         assert out[3]["conf_lo"] is None and out[3]["conf_hi"] is None
 
     def test_unattainable_alpha_group_is_null(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             conformal_interval_by_group)
 
         cal = spark.createDataFrame([("tiny", 1.0, 2.0)],
@@ -873,7 +873,7 @@ class TestPostStratifiedMean:
         samp = spark.createDataFrame(rows, "grp string, v double")
         shares = spark.createDataFrame([("lo", 0.5), ("hi", 0.5)],
                                        "grp string, share double")
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             post_stratified_mean)
 
         out = post_stratified_mean(samp, shares, "grp", "v").collect()[0]
@@ -886,7 +886,7 @@ class TestPostStratifiedMean:
         samp = spark.createDataFrame([("a", 1.0)], "grp string, v double")
         shares = spark.createDataFrame([("a", 0.6), ("b", 0.4)],
                                        "grp string, share double")
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             post_stratified_mean)
 
         out = post_stratified_mean(samp, shares, "grp", "v").collect()[0]
@@ -898,7 +898,7 @@ class TestDiffInDiff:
     def test_recovers_planted_effect(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.analytics import diff_in_diff
+        from bid_evaluation_ext.operators.analytics import diff_in_diff
 
         rng = np.random.RandomState(1)
         rows = []
@@ -915,7 +915,7 @@ class TestDiffInDiff:
         assert out["n_tpost"] == 300
 
     def test_empty_cell_nulls_estimate(self, spark):
-        from bid_evaluation_spark.operators.analytics import diff_in_diff
+        from bid_evaluation_ext.operators.analytics import diff_in_diff
 
         df = spark.createDataFrame(
             [(1, 1, 5.0), (1, 0, 4.0), (0, 0, 3.0)],  # no control-post
@@ -936,7 +936,7 @@ class TestMsprt:
         return spark.createDataFrame(rows, "g string, v double")
 
     def test_null_effect_keeps_high_p(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             msprt_always_valid)
 
         out = msprt_always_valid(self._ab(spark, 0.0), "g", "v",
@@ -944,7 +944,7 @@ class TestMsprt:
         assert out["p_always_valid"] > 0.05
 
     def test_real_effect_drives_p_down_and_monotone_in_n(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             msprt_always_valid)
 
         small = msprt_always_valid(self._ab(spark, 2.0, n=50), "g", "v",
@@ -959,7 +959,7 @@ class TestMsprt:
 
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             msprt_always_valid)
 
         rows = [("c", 1.0), ("c", 3.0), ("t", 4.0), ("t", 8.0)]
@@ -987,7 +987,7 @@ class TestBootstrapEmptyReplicates:
         weight draws 0 in EVERY replicate has no replicate means —
         element_at previously hit index 0 and crashed. doc_id=19 with
         seed='bs' and n_boot=5 is such a row (found by md5 replay)."""
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             poisson_bootstrap_ci)
 
         df = spark.createDataFrame(
@@ -1006,7 +1006,7 @@ class TestDiffInDiffVariance:
     def test_se_matches_cell_formula(self, spark):
         import math
 
-        from bid_evaluation_spark.operators.analytics import diff_in_diff
+        from bid_evaluation_ext.operators.analytics import diff_in_diff
 
         rows = []
         vals = {}
@@ -1030,7 +1030,7 @@ class TestDiffInDiffVariance:
         assert out["var_cpre"] == pytest.approx(var(vals[(0, 0)]))
 
     def test_singleton_cell_nulls_se_not_did(self, spark):
-        from bid_evaluation_spark.operators.analytics import diff_in_diff
+        from bid_evaluation_ext.operators.analytics import diff_in_diff
 
         rows = [(1, 1, 5.0),               # singleton treated-post
                 (1, 0, 4.0), (1, 0, 6.0),
@@ -1048,7 +1048,7 @@ class TestUcb1:
     def test_hand_computed(self, spark):
         import math
 
-        from bid_evaluation_spark.operators.analytics import ucb1_scores
+        from bid_evaluation_ext.operators.analytics import ucb1_scores
 
         df = spark.createDataFrame(
             [("a", 1.0), ("a", 0.0), ("b", 1.0), ("b", None)],
@@ -1065,7 +1065,7 @@ class TestUcb1:
         assert out["b"]["ucb"] == _pt.approx(exp_b, abs=1e-4)
 
     def test_less_pulled_arm_gets_exploration_bonus(self, spark):
-        from bid_evaluation_spark.operators.analytics import ucb1_scores
+        from bid_evaluation_ext.operators.analytics import ucb1_scores
 
         rows = [("hot", 0.5)] * 50 + [("cold", 0.5)] * 2
         df = spark.createDataFrame(rows, "arm string, r double")
@@ -1078,7 +1078,7 @@ class TestPoissonRateTest:
     def test_hand_computed(self, spark):
         import math
 
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             poisson_rate_test)
 
         rows = [("a",)] * 30 + [("b",)] * 10
@@ -1092,7 +1092,7 @@ class TestPoissonRateTest:
         assert out["ci_lo"] < 1.5 < out["ci_hi"]
 
     def test_zero_count_yields_null_inference(self, spark):
-        from bid_evaluation_spark.operators.analytics import (
+        from bid_evaluation_ext.operators.analytics import (
             poisson_rate_test)
 
         df = spark.createDataFrame([("a",)] * 5, "g string")
@@ -1105,7 +1105,7 @@ class TestPoissonRateTest:
 
 
 def test_wilson_by_group_values(spark):
-    from bid_evaluation_spark.operators.analytics import wilson_by_group
+    from bid_evaluation_ext.operators.analytics import wilson_by_group
 
     rows = [("a", True)] * 8 + [("a", False)] * 2 + [("b", False)] * 5
     df = spark.createDataFrame(rows, "g string, s boolean")

@@ -3,7 +3,7 @@ journeys, credit conservation."""
 
 import pytest
 
-from bid_evaluation_spark.operators.attribution import attribute_conversions
+from bid_evaluation_ext.operators.attribution import attribute_conversions
 
 
 def _attr(spark, rows):

@@ -7,12 +7,12 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.audiocuration import (
+from bid_evaluation_ext.operators.audiocuration import (
     audio_curation,
     curation_features,
     landmark_dedup,
 )
-from bid_evaluation_spark.operators.wav import encode_wav
+from bid_evaluation_ext.operators.wav import encode_wav
 
 RATE = 8000
 

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.audiofp import (
+from bid_evaluation_ext.operators.audiofp import (
     audio_fingerprint,
     audio_neardup_pairs,
     frame_energy_bits,
@@ -33,9 +33,9 @@ def test_lossless_container_invariance(spark):
     """The same samples fingerprint identically from PCM WAV and FLAC
     (lossless); the G.711 re-encode of the same audio lands nearby —
     the near-dup property a lossy re-encode must satisfy."""
-    from bid_evaluation_spark.operators.flac import encode_flac
-    from bid_evaluation_spark.operators.g711 import encode_wav_g711
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.flac import encode_flac
+    from bid_evaluation_ext.operators.g711 import encode_wav_g711
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     k = np.arange(2048)
     s = (((3 * k + 5) % 97) - 48) / 64.0
@@ -81,10 +81,30 @@ def test_neardup_pairs_match_brute_force(spark):
 
 
 def test_fingerprint_registry_query_shape(spark):
-    from __spark_entry__ import queries
+    """One fingerprint per document for the sawtooth-WAV corpus the
+    ``mm_audio_fingerprint_documents`` registry query used to build:
+    sample k = ((a*k+b) mod 97 - 48)/64 with a, b, n derived from doc_id."""
+    import pandas as pd
 
-    fn = queries()["mm_audio_fingerprint_documents"]
-    out = fn(spark, "/root/testdata/sf0.001").collect()
+    from bid_evaluation_ext.operators.wav import encode_wav
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .select("doc_id").repartition(spark.sparkContext.defaultParallelism)
+
+    def gen(batches):
+        for pdf in batches:
+            payloads = []
+            for d in pdf["doc_id"]:
+                a = 1 + int(d) % 5
+                b = int(d) % 11
+                n = 2048 + int(d) % 4 * 256
+                k = np.arange(n)
+                s = (((a * k + b) % 97) - 48) / 64.0
+                payloads.append(encode_wav(s, rate=8000))
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    out = audio_fingerprint(media, frame=256, strict=True).collect()
     assert len(out) == 500  # one fingerprint per document
     assert all(r["n_frames"] in (8, 9, 10, 11) for r in out)
     assert all(r["fp64"] is not None for r in out)

@@ -7,13 +7,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.audiomatch import (
+from bid_evaluation_ext.operators.audiomatch import (
     audio_landmarks,
     clip_landmarks,
     match_clips,
 )
-from bid_evaluation_spark.operators.g711 import encode_wav_g711
-from bid_evaluation_spark.operators.wav import encode_wav
+from bid_evaluation_ext.operators.g711 import encode_wav_g711
+from bid_evaluation_ext.operators.wav import encode_wav
 
 RATE = 8000
 SEG = 1024

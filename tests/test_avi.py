@@ -5,7 +5,7 @@ to Y4M, and error paths."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.avi import (
+from bid_evaluation_ext.operators.avi import (
     decode_avi,
     encode_avi_mjpeg,
     is_avi,
@@ -64,8 +64,8 @@ def test_error_paths():
 def test_sample_frames_dispatch_seam(spark):
     """AVI and Y4M payloads flow through the SAME frame-sampling kernel;
     corrupt payloads vanish instead of failing the scan."""
-    from bid_evaluation_spark.operators.multimodal import sample_frames
-    from bid_evaluation_spark.operators.y4m import encode_y4m
+    from bid_evaluation_ext.operators.multimodal import sample_frames
+    from bid_evaluation_ext.operators.y4m import encode_y4m
 
     frames = _block_frames(3)
     avi = encode_avi_mjpeg(frames, fps_num=5, fps_den=1, qtable=1)

@@ -3,7 +3,7 @@ pruning, set semantics, basket-size guard, null handling."""
 
 import pytest
 
-from bid_evaluation_spark.operators.basket import (association_rules,
+from bid_evaluation_ext.operators.basket import (association_rules,
                                                    item_supports)
 
 
@@ -74,7 +74,7 @@ def test_prune_engines_value_identical(spark):
     """The opt-in Apriori prune paths (r12 opt: item_prune for rules,
     pair_prune for triples) must be value-identical to the default
     unpruned aggregation — the lemma makes the prunes lossless."""
-    from bid_evaluation_spark.operators.basket import frequent_triples
+    from bid_evaluation_ext.operators.basket import frequent_triples
 
     rows = [(k % 11, f"i{(k * 7 + j) % 13}")
             for k in range(60) for j in range(5)]
@@ -91,7 +91,7 @@ def test_prune_engines_value_identical(spark):
 
 class TestFrequentTriples:
     def test_hand_computed(self, spark):
-        from bid_evaluation_spark.operators.basket import frequent_triples
+        from bid_evaluation_ext.operators.basket import frequent_triples
 
         rows = [(1, "a"), (1, "b"), (1, "c"), (1, "d"),
                 (2, "a"), (2, "b"), (2, "c"),
@@ -106,7 +106,7 @@ class TestFrequentTriples:
     def test_matches_unpruned_bruteforce(self, spark):
         from itertools import combinations
 
-        from bid_evaluation_spark.operators.basket import frequent_triples
+        from bid_evaluation_ext.operators.basket import frequent_triples
 
         rng_rows = [(k % 7, f"i{(k * 5 + j) % 9}")
                     for k in range(40) for j in range(4)]

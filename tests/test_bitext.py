@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.bitext import mine_bitext
+from bid_evaluation_ext.operators.bitext import mine_bitext
 
 
 def _mk(spark, mat, start=0):

@@ -6,9 +6,9 @@ import datetime as dt
 
 import pytest
 
-from bid_evaluation_spark.operators.analytics import huber_mean_by_group
-from bid_evaluation_spark.operators.dq import join_size_estimate
-from bid_evaluation_spark.operators.timeseries import (cohort_ltv,
+from bid_evaluation_ext.operators.analytics import huber_mean_by_group
+from bid_evaluation_ext.operators.dq import join_size_estimate
+from bid_evaluation_ext.operators.timeseries import (cohort_ltv,
                                                        period_over_period)
 
 

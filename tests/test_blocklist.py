@@ -7,7 +7,7 @@ import random
 
 import pytest
 
-from bid_evaluation_spark.operators.blocklist import (
+from bid_evaluation_ext.operators.blocklist import (
     AhoCorasick,
     blocklist_filter,
     blocklist_hits,

@@ -4,12 +4,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.bloom import (
+from bid_evaluation_ext.operators.bloom import (
     BroadcastBloom,
     bloom_from_hash_column,
     bloom_semi_filter,
 )
-from bid_evaluation_spark.operators.pipeline import (
+from bid_evaluation_ext.operators.pipeline import (
     decontaminate,
     decontaminate_bloom,
 )
@@ -102,7 +102,7 @@ def test_decontaminate_auto_dispatch(spark, tmp_path):
     written to SEPARATE parquet files: without CBO, a Filter node passes
     its child's size estimate through, so two filters of one file look
     equal-sized and auto (correctly, conservatively) stays exact."""
-    from bid_evaluation_spark.operators.pipeline import decontaminate
+    from bid_evaluation_ext.operators.pipeline import decontaminate
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs.filter(F.col("doc_id") % 10 != 0).write.parquet(

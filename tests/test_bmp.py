@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.bmp import decode_bmp, encode_bmp, is_bmp
+from bid_evaluation_ext.operators.bmp import decode_bmp, encode_bmp, is_bmp
 
 
 def _rgb(h=7, w=5, seed=0):
@@ -52,9 +52,9 @@ def test_error_paths():
 
 
 def test_probe_and_feature_dispatch(spark):
-    from bid_evaluation_spark.operators.multimodal import (
+    from bid_evaluation_ext.operators.multimodal import (
         extract_image_features)
-    from bid_evaluation_spark.operators.probe import probe_payload
+    from bid_evaluation_ext.operators.probe import probe_payload
     img = _rgb(8, 11)
     data = encode_bmp(img)
     got = probe_payload(data)

@@ -4,7 +4,7 @@ segmentation round-trip, determinism, and early stop."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.bpe import (
+from bid_evaluation_ext.operators.bpe import (
     EOW,
     bpe_segment,
     bpe_token_count,

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.cdc import (
+from bid_evaluation_ext.operators.cdc import (
     apply_upsert, compact_latest, snapshot_diff)
 
 
@@ -96,7 +96,7 @@ def test_streaming_latest_by_key(spark, tmp_path):
     late/out-of-order updates ignored, unchanged keys emit nothing."""
     import time as _time
 
-    from bid_evaluation_spark.streaming.stateful import streaming_latest_by_key
+    from bid_evaluation_ext.streaming.stateful import streaming_latest_by_key
 
     b1 = spark.createDataFrame(
         [(100, 1.0, 10, 1.5),    # key 100 ver 1
@@ -167,7 +167,7 @@ def test_streaming_dedup_ttl_evicts_idle_fingerprints(spark, tmp_path):
     state traded for exactness at the horizon (documented contract)."""
     import time as _time
 
-    from bid_evaluation_spark.streaming.stateful import streaming_dedup_filter
+    from bid_evaluation_ext.streaming.stateful import streaming_dedup_filter
 
     schema = "doc_id long, text string"
     b1 = spark.createDataFrame([(1, "hello world content")], schema)
@@ -195,7 +195,7 @@ def test_snapshot_diff_bucketed_no_exchange(spark, tmp_path):
     co-located sort-merge join), and classification still matches."""
     from pyspark.sql import Row
 
-    from bid_evaluation_spark.sources import io as IO
+    from bid_evaluation_ext.sources import io as IO
 
     old = spark.createDataFrame(
         [Row(k=i, v=float(i)) for i in range(100)])

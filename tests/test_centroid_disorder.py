@@ -6,10 +6,10 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.classify import centroid_classify
-from bid_evaluation_spark.operators.graph import powerlaw_alpha
-from bid_evaluation_spark.operators.similarity import silhouette_simplified
-from bid_evaluation_spark.operators.timeseries import event_disorder
+from bid_evaluation_ext.operators.classify import centroid_classify
+from bid_evaluation_ext.operators.graph import powerlaw_alpha
+from bid_evaluation_ext.operators.similarity import silhouette_simplified
+from bid_evaluation_ext.operators.timeseries import event_disorder
 
 
 def test_centroid_classify_two_clusters(spark):
@@ -89,7 +89,7 @@ def test_powerlaw_alpha_mle(spark):
 def test_active_users_dau_wau(spark):
     import datetime as dt
 
-    from bid_evaluation_spark.operators.timeseries import active_users
+    from bid_evaluation_ext.operators.timeseries import active_users
 
     base = dt.datetime(2026, 3, 1)
     rows = []

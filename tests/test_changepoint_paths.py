@@ -6,8 +6,8 @@ import datetime as dt
 
 import pytest
 
-from bid_evaluation_spark.operators.timeseries import changepoint_by_key
-from bid_evaluation_spark.streaming.events import top_paths
+from bid_evaluation_ext.operators.timeseries import changepoint_by_key
+from bid_evaluation_ext.streaming.events import top_paths
 
 
 def _series(spark, vals, key="k"):
@@ -99,7 +99,7 @@ def test_top_paths_tie_breaks_on_path(spark):
 
 
 def test_dominant_period_detects_sawtooth(spark):
-    from bid_evaluation_spark.operators.timeseries import dominant_period
+    from bid_evaluation_ext.operators.timeseries import dominant_period
 
     vals = [0.0, 1.0, 2.0, 3.0] * 10  # period 4
     rows = [("k", i, v) for i, v in enumerate(vals)]

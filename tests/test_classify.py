@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.classify import (
+from bid_evaluation_ext.operators.classify import (
     logreg_predict, logreg_train, nb_classify, nb_predict, nb_train,
 )
 
@@ -267,7 +267,7 @@ def test_nb_scoring_on_a_stream_via_foreachBatch(spark, tmp_path, fruit_docs):
 
 
 def test_knn_classify_majority_and_ties(spark):
-    from bid_evaluation_spark.operators.classify import knn_classify
+    from bid_evaluation_ext.operators.classify import knn_classify
 
     # corpus: label 0 clustered near (1,0); label 1 near (0,1)
     corpus = spark.createDataFrame(

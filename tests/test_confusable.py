@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.confusable import (
+from bid_evaluation_ext.operators.confusable import (
     CONFUSABLE_FROM,
     CONFUSABLE_TO,
     homoglyph_groups,

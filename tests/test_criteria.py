@@ -395,15 +395,3 @@ def test_partial_null_column(spark):
     assert res["A"] == 0.0 and res["C"] == 100.0 and res["B"] is None
     st = ev.get_statistics()["v"]
     assert st["min"] == 10.0 and st["max"] == 20.0 and st["mean"] == 15.0
-
-
-def test_template_registry_introspection():
-    from bid_evaluation_spark.functions.templates import (
-        get_template_info, get_template_names)
-
-    names = get_template_names()
-    assert set(names) == {"budget_proximity", "sweet_spot_range",
-                          "penalty_function", "bonus_tiers",
-                          "percentage_of_best", "distance_from_mean"}
-    info = get_template_info("budget_proximity")
-    assert "target" in info["parameters"]

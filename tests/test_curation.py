@@ -4,8 +4,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.pipeline import filter_by_group_score
-from bid_evaluation_spark.operators.similarity import mine_contrastive_pairs
+from bid_evaluation_ext.operators.pipeline import filter_by_group_score
+from bid_evaluation_ext.operators.similarity import mine_contrastive_pairs
 
 
 @pytest.fixture()
@@ -119,7 +119,7 @@ def skewed_corpus(spark):
 
 
 def test_temperature_flattens_toward_uniform(skewed_corpus):
-    from bid_evaluation_spark.operators.pipeline import (
+    from bid_evaluation_ext.operators.pipeline import (
         temperature_mixture_sample,
     )
     out = temperature_mixture_sample(skewed_corpus, alpha=0.3,
@@ -139,7 +139,7 @@ def test_temperature_flattens_toward_uniform(skewed_corpus):
 
 
 def test_temperature_alpha_one_keeps_everything(skewed_corpus):
-    from bid_evaluation_spark.operators.pipeline import (
+    from bid_evaluation_ext.operators.pipeline import (
         temperature_mixture_sample,
     )
     out = temperature_mixture_sample(skewed_corpus, alpha=1.0,
@@ -149,7 +149,7 @@ def test_temperature_alpha_one_keeps_everything(skewed_corpus):
 
 
 def test_temperature_is_deterministic_and_validates(skewed_corpus):
-    from bid_evaluation_spark.operators.pipeline import (
+    from bid_evaluation_ext.operators.pipeline import (
         temperature_mixture_sample,
     )
     a = {r["doc_id"] for r in temperature_mixture_sample(
@@ -169,7 +169,7 @@ def test_temperature_is_deterministic_and_validates(skewed_corpus):
 # ---------------------------------------------------------------------------
 
 def test_curriculum_bins_equal_population(spark):
-    from bid_evaluation_spark.operators.pipeline import curriculum_bins
+    from bid_evaluation_ext.operators.pipeline import curriculum_bins
     df = spark.createDataFrame([(i, float(i)) for i in range(100)],
                                "id long, s double")
     out = curriculum_bins(df, "s", n_bins=4)
@@ -186,7 +186,7 @@ def test_curriculum_bins_equal_population(spark):
 
 
 def test_curriculum_bins_nulls_and_plan(spark):
-    from bid_evaluation_spark.operators.pipeline import curriculum_bins
+    from bid_evaluation_ext.operators.pipeline import curriculum_bins
     df = spark.createDataFrame(
         [(0, 1.0), (1, None), (2, 5.0), (3, 9.0)], "id long, s double")
     out = curriculum_bins(df, "s", n_bins=2)
@@ -199,7 +199,7 @@ def test_curriculum_bins_nulls_and_plan(spark):
 
 
 def test_curriculum_bins_validation_and_empty(spark):
-    from bid_evaluation_spark.operators.pipeline import curriculum_bins
+    from bid_evaluation_ext.operators.pipeline import curriculum_bins
     df = spark.createDataFrame([(0, 1.0)], "id long, s double")
     with pytest.raises(ValueError, match="n_bins"):
         curriculum_bins(df, "s", n_bins=1)

@@ -4,9 +4,9 @@ brute-force hamming oracle on synthesized PNGs."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.multimodal import (dhash_neardup_pairs,
+from bid_evaluation_ext.operators.multimodal import (dhash_neardup_pairs,
                                                        image_dhash)
-from bid_evaluation_spark.operators.png import dhash64, encode_png, luma
+from bid_evaluation_ext.operators.png import dhash64, encode_png, luma
 
 
 def _png_bytes(arr2d):

@@ -5,7 +5,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.dq import (DQRule, assign_stable_ids,
+from bid_evaluation_ext.operators.dq import (DQRule, assign_stable_ids,
                                                dq_audit,
                                                referential_integrity)
 

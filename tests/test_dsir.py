@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from bid_evaluation_spark.operators.dsir import (
+from bid_evaluation_ext.operators.dsir import (
     bucket_counts,
     dsir_logweights,
     dsir_sample,
@@ -80,8 +80,8 @@ def test_fused_proxy_matches_unfused_shape(spark):
     # bit-identical to the r12 unfused shape (same per-occurrence sum)
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.cache import release_all
-    from bid_evaluation_spark.operators.dsir import (bucket_counts,
+    from bid_evaluation_ext.operators.cache import release_all
+    from bid_evaluation_ext.operators.dsir import (bucket_counts,
                                                      hashed_ngram_buckets)
     raw, target = _corpora(spark)
     buckets, k = 256, 0.5

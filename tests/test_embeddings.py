@@ -6,8 +6,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators import embeddings as E
-from bid_evaluation_spark.operators.pipeline import sample_exact_k, train_test_split
+from bid_evaluation_ext.operators import embeddings as E
+from bid_evaluation_ext.operators.pipeline import sample_exact_k, train_test_split
 
 
 @pytest.fixture
@@ -117,7 +117,7 @@ def test_lsh_recall_floor_pinned(spark):
     bounds: measured 0.828 multi-table / 0.384 single-table at sf0.01."""
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators import similarity as S
+    from bid_evaluation_ext.operators import similarity as S
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
     q = emb.filter(F.col("vec_id") < 50)
@@ -141,7 +141,7 @@ def test_semantic_dedup_recall_floor_pinned_sf001(spark):
     measured 0.982 recall with ZERO false pairs under seed=7."""
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.dedup import (
+    from bid_evaluation_ext.operators.dedup import (
         embedding_near_duplicates, semantic_dedup_pairs)
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
@@ -162,7 +162,7 @@ def test_kmeans_pinned_init_warm_start(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.similarity import kmeans_centroids
+    from bid_evaluation_ext.operators.similarity import kmeans_centroids
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     X = np.array([r["embedding"] for r in
@@ -184,7 +184,7 @@ class TestMatryoshka:
     def test_truncate_and_renorm(self, spark):
         import math
 
-        from bid_evaluation_spark.operators.embeddings import (
+        from bid_evaluation_ext.operators.embeddings import (
             matryoshka_truncate)
 
         df = spark.createDataFrame(
@@ -198,7 +198,7 @@ class TestMatryoshka:
         assert out[2] is None and out[3] is None       # short/null flagged
 
     def test_no_renorm_is_plain_slice(self, spark):
-        from bid_evaluation_spark.operators.embeddings import (
+        from bid_evaluation_ext.operators.embeddings import (
             matryoshka_truncate)
 
         df = spark.createDataFrame([(0, [2.0, 4.0, 8.0])],

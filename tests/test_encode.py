@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.encode import (
+from bid_evaluation_ext.operators.encode import (
     _pav, decision_stump, feature_hash, feature_hash_triplets,
     isotonic_apply, isotonic_bins, isotonic_fit, target_encode)
 
@@ -167,7 +167,7 @@ def test_stump_gain_nonnegative_random(spark):
 # ---------------------------------------------------------------------------
 
 def _gbm_mod():
-    from bid_evaluation_spark.operators.encode import (gbm_predict,
+    from bid_evaluation_ext.operators.encode import (gbm_predict,
                                                        gbm_stumps)
     return gbm_stumps, gbm_predict
 

@@ -6,7 +6,7 @@ import codecs
 
 import pytest
 
-from bid_evaluation_spark.operators.encoding import (
+from bid_evaluation_ext.operators.encoding import (
     detect_decode_text,
     sniff_decode,
 )

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.exif import (
+from bid_evaluation_ext.operators.exif import (
     build_exif_app1,
     exif_metadata,
     exif_scrub_gps,
@@ -14,7 +14,7 @@ from bid_evaluation_spark.operators.exif import (
     parse_exif,
     scrub_gps,
 )
-from bid_evaluation_spark.operators.jpeg import decode_jpeg, encode_jpeg
+from bid_evaluation_ext.operators.jpeg import decode_jpeg, encode_jpeg
 
 
 def _jpeg_with(meta_kw):
@@ -104,7 +104,7 @@ def _app1_gps_altitude_only():
 
 def test_scrub_gps_ifd_without_coordinates():
     import struct
-    from bid_evaluation_spark.operators.exif import scrub_gps_report
+    from bid_evaluation_ext.operators.exif import scrub_gps_report
     plain = encode_jpeg(np.full((8, 8), 7, dtype=np.uint8))
     j = insert_app1(plain, _app1_gps_altitude_only())
     assert parse_exif(j)["has_gps"] is False      # no lat/lon decodes
@@ -118,7 +118,7 @@ def test_scrub_gps_ifd_without_coordinates():
 
 def test_scrub_second_app1_segment():
     import struct
-    from bid_evaluation_spark.operators.exif import scrub_gps_report
+    from bid_evaluation_ext.operators.exif import scrub_gps_report
     plain = encode_jpeg(np.full((8, 8), 7, dtype=np.uint8))
     # two APP1 Exif segments, each with its own GPS IFD
     j = insert_app1(insert_app1(plain, build_exif_app1(gps=(11.0, 22.0))),
@@ -164,7 +164,7 @@ def test_spark_kernels(spark):
 
 def test_apply_orientation_all_eight():
     import numpy as np
-    from bid_evaluation_spark.operators.exif import apply_orientation
+    from bid_evaluation_ext.operators.exif import apply_orientation
     a = np.arange(6).reshape(2, 3)
     assert np.array_equal(apply_orientation(a, 1), a)
     assert np.array_equal(apply_orientation(a, 2), a[:, ::-1])
@@ -185,9 +185,9 @@ def test_exif_metadata_passthrough_columns(spark):
     kernel row-aligned (lets scrub -> re-extract stay one lineage
     instead of a re-association join)."""
     import numpy as np
-    from bid_evaluation_spark.operators.exif import (
+    from bid_evaluation_ext.operators.exif import (
         build_exif_app1, exif_metadata, exif_scrub_gps, insert_app1)
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
+    from bid_evaluation_ext.operators.jpeg import encode_jpeg
     img = np.tile(np.arange(0, 240, 16, dtype=np.uint8), (8, 1))
     plain = encode_jpeg(img)
     rows = [(i, insert_app1(plain, build_exif_app1(

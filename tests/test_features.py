@@ -4,7 +4,7 @@ import datetime as dt
 
 import pytest
 
-from bid_evaluation_spark.operators import features as FT
+from bid_evaluation_ext.operators import features as FT
 
 
 def _ts(s):
@@ -68,7 +68,7 @@ def test_forward_labels_horizon2(events):
 
 class TestMutualInformation:
     def _mi(self, spark, rows):
-        from bid_evaluation_spark.operators.features import (
+        from bid_evaluation_ext.operators.features import (
             mutual_information)
 
         df = spark.createDataFrame(rows, "a string, b string")
@@ -99,7 +99,7 @@ class TestWoeIv:
     def test_hand_computed(self, spark):
         import math
 
-        from bid_evaluation_spark.operators.features import woe_iv
+        from bid_evaluation_ext.operators.features import woe_iv
 
         rows = ([("a", True)] * 3 + [("a", False)] * 1
                 + [("b", True)] * 1 + [("b", False)] * 3)
@@ -118,7 +118,7 @@ class TestWoeIv:
                                                     abs=1e-4)
 
     def test_zero_cell_survives_smoothing_and_validation(self, spark):
-        from bid_evaluation_spark.operators.features import woe_iv
+        from bid_evaluation_ext.operators.features import woe_iv
 
         rows = [("a", True)] * 4 + [("b", False)] * 4
         df = spark.createDataFrame(rows, "cat string, lbl boolean")

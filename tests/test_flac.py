@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators import flac
+from bid_evaluation_ext.operators import flac
 
 
 RNG = np.random.default_rng(7)
@@ -104,10 +104,10 @@ def test_fuzz_maps_to_valueerror():
 def test_kernel_dispatch_flac_equals_wav(spark):
     """The audio kernel's features for the same waveform must agree across
     containers (both decode to the identical quantized samples)."""
-    from bid_evaluation_spark.operators.multimodal import (
+    from bid_evaluation_ext.operators.multimodal import (
         extract_audio_features,
     )
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     n, h = 1600, 12
     sgn = 1 - 2 * ((np.arange(n) // h) % 2)

@@ -4,7 +4,7 @@ from datetime import datetime
 
 import pytest
 
-from bid_evaluation_spark.streaming.events import session_funnel
+from bid_evaluation_ext.streaming.events import session_funnel
 
 
 def _ts(m):
@@ -57,7 +57,7 @@ def test_stream_watermark_drops_late_rows(spark, tmp_path):
     production relies on, and is what this pins.
     """
     from datetime import datetime
-    from bid_evaluation_spark.streaming.events import stream_tumbling_counts
+    from bid_evaluation_ext.streaming.events import stream_tumbling_counts
 
     schema = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double")
@@ -99,7 +99,7 @@ def test_stream_watermark_drops_late_rows(spark, tmp_path):
 
 
 def test_robust_zscores_known_values(spark):
-    from bid_evaluation_spark.operators.features import robust_zscores
+    from bid_evaluation_ext.operators.features import robust_zscores
 
     df = spark.createDataFrame(
         [(1, "a", 1.0), (2, "a", 2.0), (3, "a", 3.0), (4, "a", 4.0),
@@ -122,7 +122,7 @@ def test_robust_zscores_known_values(spark):
 
 def test_event_sequences_order_and_cap(spark):
     from datetime import datetime
-    from bid_evaluation_spark.operators.features import event_sequences
+    from bid_evaluation_ext.operators.features import event_sequences
 
     df = spark.createDataFrame(
         [(3, datetime(2026, 1, 1, 10, 2), 1, "c"),
@@ -143,7 +143,7 @@ def test_event_sequences_order_and_cap(spark):
 def test_sessionize_capped(spark):
     """Gap + cap splits vs a pure-python replay of the recurrence; cap=inf
     degenerates to pure-gap sessionization."""
-    from bid_evaluation_spark.streaming.events import sessionize_capped
+    from bid_evaluation_ext.streaming.events import sessionize_capped
 
     rows = []
     # user A: burst every 100s for 10 events (gap never trips; cap 450 does)
@@ -183,7 +183,7 @@ def test_sessionize_capped_step_kernel_matches_sequential(spark):
     lengths, null keys as one SQL group, ts ties, shuffled input)."""
     import random
 
-    from bid_evaluation_spark.streaming.events import sessionize_capped
+    from bid_evaluation_ext.streaming.events import sessionize_capped
 
     rnd = random.Random(1219)
     rows = []
@@ -219,8 +219,8 @@ def test_streaming_sessionize_capped_matches_batch(spark, tmp_path):
     across the batch boundary."""
     import time as _time
 
-    from bid_evaluation_spark.streaming.events import sessionize_capped
-    from bid_evaluation_spark.streaming.stateful import (
+    from bid_evaluation_ext.streaming.events import sessionize_capped
+    from bid_evaluation_ext.streaming.stateful import (
         streaming_sessionize_capped)
 
     schema = "user_id long, event_id long, ts double"
@@ -254,7 +254,7 @@ def test_streaming_sessionize_capped_matches_batch(spark, tmp_path):
 class TestWindowFunnel:
     def _wf(self, spark, rows, horizon=100.0,
             stages=("a", "b", "c")):
-        from bid_evaluation_spark.streaming.events import window_funnel
+        from bid_evaluation_ext.streaming.events import window_funnel
 
         df = spark.createDataFrame(
             rows, "user_id string, ts double, event_id long, "
@@ -290,7 +290,7 @@ class TestWindowFunnel:
 
     def test_validation(self, spark):
         import pytest as _pt
-        from bid_evaluation_spark.streaming.events import window_funnel
+        from bid_evaluation_ext.streaming.events import window_funnel
         df = spark.createDataFrame([("u", 1.0, 1, "a")],
                                    "user_id string, ts double, "
                                    "event_id long, event_type string")

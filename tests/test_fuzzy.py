@@ -4,7 +4,7 @@ null handling, approximate mode, validation."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.fuzzy import fuzzy_join
+from bid_evaluation_ext.operators.fuzzy import fuzzy_join
 
 
 def _lev(a, b):
@@ -152,7 +152,7 @@ class TestFellegiSunter:
 
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_score
+        from bid_evaluation_ext.operators.fuzzy import fellegi_sunter_score
 
         out = {r["a_id"]: r for r in fellegi_sunter_score(
             self._pairs(spark), self._comparisons(),
@@ -170,7 +170,7 @@ class TestFellegiSunter:
     def test_validation(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_score
+        from bid_evaluation_ext.operators.fuzzy import fellegi_sunter_score
 
         pairs = self._pairs(spark)
         with _pt.raises(ValueError):
@@ -192,7 +192,7 @@ class TestFellegiSunterEM:
         p near the plant rate without labels."""
         import numpy as np
 
-        from bid_evaluation_spark.operators.fuzzy import (
+        from bid_evaluation_ext.operators.fuzzy import (
             fellegi_sunter_em, fellegi_sunter_score)
 
         rng = np.random.RandomState(8)
@@ -215,7 +215,7 @@ class TestFellegiSunterEM:
     def test_python_replay_one_round(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_em
+        from bid_evaluation_ext.operators.fuzzy import fellegi_sunter_em
         from pyspark.sql import functions as F
 
         rows = [(1, True, True), (2, True, False), (3, False, False),
@@ -243,7 +243,7 @@ class TestFellegiSunterEM:
     def test_validation(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_em
+        from bid_evaluation_ext.operators.fuzzy import fellegi_sunter_em
         from pyspark.sql import functions as F
 
         df = spark.createDataFrame([(1, True)], "pid long, f1 boolean")
@@ -262,7 +262,7 @@ def test_em_degenerate_perfect_separation(spark):
     clamped into [1e-6, 1−1e-6]."""
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.fuzzy import fellegi_sunter_em
+    from bid_evaluation_ext.operators.fuzzy import fellegi_sunter_em
 
     df = spark.createDataFrame([(1, 1)] * 12, "f1 int, f2 int")
     fit = {r["field"]: r for r in fellegi_sunter_em(

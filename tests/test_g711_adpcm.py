@@ -6,11 +6,11 @@ multimodal dispatch seam, and error paths."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.adpcm import (
+from bid_evaluation_ext.operators.adpcm import (
     decode_wav_adpcm,
     encode_wav_adpcm,
 )
-from bid_evaluation_spark.operators.g711 import (
+from bid_evaluation_ext.operators.g711 import (
     alaw_decode,
     alaw_encode,
     decode_wav_g711,
@@ -48,7 +48,7 @@ def test_adpcm_nibbles_match_audioop():
     pcm = (np.clip(sig, -1, 1) * 32767).astype(np.int16)
     # one 401-sample block so the whole stream shares one state chain
     payload = encode_wav_adpcm(sig, rate=8000, block_align=204)
-    from bid_evaluation_spark.operators.g711 import parse_wav_chunks
+    from bid_evaluation_ext.operators.g711 import parse_wav_chunks
     _, data, _ = parse_wav_chunks(payload)
     ours = []
     for b in data[4:]:
@@ -117,7 +117,7 @@ def test_adpcm_container_roundtrip_snr_and_errors():
     with pytest.raises(ValueError):
         decode_wav_adpcm(encode_wav_g711(sig[:10]))  # wrong format tag
     # truncated block header
-    from bid_evaluation_spark.operators.g711 import parse_wav_chunks
+    from bid_evaluation_ext.operators.g711 import parse_wav_chunks
     with pytest.raises(ValueError):
         decode_wav_adpcm(payload[:50])
 
@@ -125,11 +125,11 @@ def test_adpcm_container_roundtrip_snr_and_errors():
 def test_audio_dispatch_seam(spark):
     """All four WAV-family containers + FLAC flow through ONE kernel and
     land the right per-codec features."""
-    from bid_evaluation_spark.operators.flac import encode_flac
-    from bid_evaluation_spark.operators.multimodal import (
+    from bid_evaluation_ext.operators.flac import encode_flac
+    from bid_evaluation_ext.operators.multimodal import (
         extract_audio_features,
     )
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     n, h = 800, 10
     sgn = 1 - 2 * ((np.arange(n) // h) % 2)

@@ -5,7 +5,7 @@ reordering, extension skipping, and strict-decode error paths."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.gif import (decode_gif, encode_gif,
+from bid_evaluation_ext.operators.gif import (decode_gif, encode_gif,
                                                 is_gif)
 
 

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.graph import pagerank
+from bid_evaluation_ext.operators.graph import pagerank
 
 
 def _np_pagerank(nodes, edges, damping=0.85, iters=10):
@@ -112,7 +112,7 @@ class TestTriangleCounts:
     def test_crafted_and_random(self, spark):
         import random
 
-        from bid_evaluation_spark.operators.graph import triangle_counts
+        from bid_evaluation_ext.operators.graph import triangle_counts
 
         crafted = [(1, 2), (2, 3), (1, 3),          # triangle
                    (3, 4), (4, 5),                  # tail (no triangle)
@@ -137,7 +137,7 @@ class TestTriangleCounts:
                     assert gcc == pytest.approx(cc, abs=1e-12)
 
     def test_k4_counts(self, spark):
-        from bid_evaluation_spark.operators.graph import triangle_counts
+        from bid_evaluation_ext.operators.graph import triangle_counts
 
         k4 = [(i, j) for i in range(4) for j in range(i + 1, 4)]
         df = spark.createDataFrame(k4, "a long, b long")
@@ -152,7 +152,7 @@ class TestTriangleCounts:
         the node-cap fallback, and the env-cap routing."""
         import random
 
-        from bid_evaluation_spark.operators.graph import triangle_counts
+        from bid_evaluation_ext.operators.graph import triangle_counts
 
         rng = random.Random(7)
         dense = [(rng.randint(0, 15), rng.randint(0, 15))
@@ -197,7 +197,7 @@ class TestTriangleCounts:
 
 class TestTextRank:
     def test_hub_word_ranks_first(self, spark):
-        from bid_evaluation_spark.operators.graph import textrank_keywords
+        from bid_evaluation_ext.operators.graph import textrank_keywords
 
         d = spark.createDataFrame(
             [(1, "apple banana apple cherry apple banana")],
@@ -210,7 +210,7 @@ class TestTextRank:
         """textrank is the grouped pagerank: on one document its ranks
         must equal running the corpus-level pagerank operator over the
         same undirected co-occurrence edge list."""
-        from bid_evaluation_spark.operators.graph import (pagerank,
+        from bid_evaluation_ext.operators.graph import (pagerank,
                                                           textrank_keywords)
 
         text = "a b c a b d e a c"
@@ -233,7 +233,7 @@ class TestTextRank:
             assert rv == pytest.approx(round(pr[wd] * 1e6) / 1e6, abs=2e-6)
 
     def test_docs_are_independent(self, spark):
-        from bid_evaluation_spark.operators.graph import textrank_keywords
+        from bid_evaluation_ext.operators.graph import textrank_keywords
 
         solo = spark.createDataFrame(
             [(1, "x y x z y")], "doc_id long, text string")
@@ -248,7 +248,7 @@ class TestTextRank:
         assert a == b
 
     def test_degenerate_docs_yield_nothing(self, spark):
-        from bid_evaluation_spark.operators.graph import textrank_keywords
+        from bid_evaluation_ext.operators.graph import textrank_keywords
 
         d = spark.createDataFrame(
             [(1, "single"), (2, ""), (3, None), (4, "   ")],
@@ -256,7 +256,7 @@ class TestTextRank:
         assert textrank_keywords(d).count() == 0
 
     def test_window_widens_edges(self, spark):
-        from bid_evaluation_spark.operators.graph import textrank_keywords
+        from bid_evaluation_ext.operators.graph import textrank_keywords
 
         # with window=3, "a ... c" two apart co-occur; ranks must differ
         # from the window=2 graph on a path where that matters
@@ -272,7 +272,7 @@ class TestTextRank:
 
 class TestBfsDistances:
     def _bfs(self, spark, edges, seeds, **kw):
-        from bid_evaluation_spark.operators.graph import bfs_distances
+        from bid_evaluation_ext.operators.graph import bfs_distances
 
         e = spark.createDataFrame(edges, "src long, dst long")
         s = spark.createDataFrame([(x,) for x in seeds], "node long")
@@ -305,7 +305,7 @@ class TestBfsDistances:
 
 class TestLabelPropagation:
     def _lpa(self, spark, edges, **kw):
-        from bid_evaluation_spark.operators.graph import label_propagation
+        from bid_evaluation_ext.operators.graph import label_propagation
 
         e = spark.createDataFrame(edges, "src long, dst long")
         return {r["node"]: r["label"]
@@ -333,7 +333,7 @@ class TestLabelPropagation:
 
 class TestKCore:
     def _core(self, spark, edges, k, **kw):
-        from bid_evaluation_spark.operators.graph import k_core
+        from bid_evaluation_ext.operators.graph import k_core
 
         e = spark.createDataFrame(edges, "src long, dst long")
         return {r["node"]: r["degree"]
@@ -374,7 +374,7 @@ class TestLocalEngineParity:
                 for _ in range(n_edges)]
 
     def test_bfs_local_matches_rounds(self, spark):
-        from bid_evaluation_spark.operators.graph import bfs_distances
+        from bid_evaluation_ext.operators.graph import bfs_distances
 
         for seed in (1, 2):
             e = spark.createDataFrame(self._random_edges(seed),
@@ -391,7 +391,7 @@ class TestLocalEngineParity:
                 assert loc == dist
 
     def test_lpa_local_matches_rounds(self, spark):
-        from bid_evaluation_spark.operators.graph import label_propagation
+        from bid_evaluation_ext.operators.graph import label_propagation
 
         for seed in (3, 4):
             e = spark.createDataFrame(self._random_edges(seed),
@@ -406,7 +406,7 @@ class TestLocalEngineParity:
                 assert loc == dist
 
     def test_kcore_local_matches_rounds(self, spark):
-        from bid_evaluation_spark.operators.graph import k_core
+        from bid_evaluation_ext.operators.graph import k_core
 
         for seed in (5, 6):
             e = spark.createDataFrame(self._random_edges(seed),
@@ -419,7 +419,7 @@ class TestLocalEngineParity:
                 assert loc == dist
 
     def test_bfs_local_null_seed_and_long_ids(self, spark):
-        from bid_evaluation_spark.operators.graph import bfs_distances
+        from bid_evaluation_ext.operators.graph import bfs_distances
 
         e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
         seeds = spark.createDataFrame([(1,), (None,)], "node long")
@@ -431,7 +431,7 @@ class TestLocalEngineParity:
 
     def test_engine_validation(self, spark):
         import pytest as _pt
-        from bid_evaluation_spark.operators.graph import (bfs_distances,
+        from bid_evaluation_ext.operators.graph import (bfs_distances,
                                                           k_core,
                                                           label_propagation)
 

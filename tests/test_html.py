@@ -3,7 +3,7 @@ entity decoding, nesting/malformed tolerance, kernel + null paths."""
 
 import pytest
 
-from bid_evaluation_spark.operators.html import (
+from bid_evaluation_ext.operators.html import (
     extract_html_features,
     extract_html_text,
 )

@@ -3,8 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.dedup import dedup_against_corpus
-from bid_evaluation_spark.operators.text import (
+from bid_evaluation_ext.operators.dedup import dedup_against_corpus
+from bid_evaluation_ext.operators.text import (
     canonical_fingerprint_md5,
     canonicalize,
 )
@@ -50,7 +50,7 @@ def test_canonical_fingerprint_matches_canonical_equality(spark):
 
 
 def test_collocations_pmi(spark):
-    from bid_evaluation_spark.operators.text import collocations
+    from bid_evaluation_ext.operators.text import collocations
 
     # "new york" always adjacent (high PMI); "the" everywhere (low PMI)
     rows = [("new york is big the end",), ("i love new york the most",),
@@ -70,7 +70,7 @@ def test_collocations_pmi(spark):
 
 
 def test_collocations_empty_corpus(spark):
-    from bid_evaluation_spark.operators.text import collocations
+    from bid_evaluation_ext.operators.text import collocations
 
     df = spark.createDataFrame([("",), (None,)], "text string")
     out = collocations(df)
@@ -81,7 +81,7 @@ def test_collocations_empty_corpus(spark):
 def test_minhash_against_corpus(spark):
     """Cross-corpus near-dup: a perturbed re-send is flagged against the
     kept corpus; genuinely new text is not; the verify is exact Jaccard."""
-    from bid_evaluation_spark.operators.dedup import minhash_against_corpus
+    from bid_evaluation_ext.operators.dedup import minhash_against_corpus
 
     base = ("the quick brown fox jumps over the lazy dog while the calm "
             "river flows past the old stone bridge in the quiet valley")
@@ -127,7 +127,7 @@ def _shared_corpus(spark):
 
 
 def test_band_table_is_persistable_index(spark):
-    from bid_evaluation_spark.operators.dedup import minhash_index_table
+    from bid_evaluation_ext.operators.dedup import minhash_index_table
     docs = _shared_corpus(spark).filter("doc_id < 10")
     bt = minhash_index_table(docs, bands=16, num_perm=64)
     rows = bt.collect()
@@ -140,8 +140,8 @@ def test_band_table_is_persistable_index(spark):
 
 
 def test_incremental_candidates_index_and_delta(spark):
-    from bid_evaluation_spark.operators.cache import release_all
-    from bid_evaluation_spark.operators.dedup import (
+    from bid_evaluation_ext.operators.cache import release_all
+    from bid_evaluation_ext.operators.dedup import (
         incremental_minhash_candidates, minhash_index_table)
     corpus = _shared_corpus(spark)
     index = minhash_index_table(corpus.filter("doc_id < 10"))
@@ -159,8 +159,8 @@ def test_incremental_candidates_index_and_delta(spark):
 
 
 def test_incremental_without_index_is_within_delta_only(spark):
-    from bid_evaluation_spark.operators.cache import release_all
-    from bid_evaluation_spark.operators.dedup import (
+    from bid_evaluation_ext.operators.cache import release_all
+    from bid_evaluation_ext.operators.dedup import (
         incremental_minhash_candidates)
     new = _shared_corpus(spark).filter("doc_id >= 10")
     got = {(r["a_id"], r["b_id"]) for r in
@@ -170,8 +170,8 @@ def test_incremental_without_index_is_within_delta_only(spark):
 
 
 def test_recrawled_id_never_pairs_with_itself(spark):
-    from bid_evaluation_spark.operators.cache import release_all
-    from bid_evaluation_spark.operators.dedup import (
+    from bid_evaluation_ext.operators.cache import release_all
+    from bid_evaluation_ext.operators.dedup import (
         incremental_minhash_candidates, minhash_index_table)
     docs = _shared_corpus(spark).filter("doc_id = 0")
     index = minhash_index_table(docs)

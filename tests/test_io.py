@@ -138,6 +138,34 @@ def test_yaml_json_config_sources(small, tmp_path):
     assert ry[1] == ("B", 100.0)  # lowest price wins with higher_is_better=False
 
 
+def test_bucketed_join_no_exchange(spark, tmp_path):
+    """Two tables bucketed on the join key join without a shuffle exchange."""
+    from pyspark.sql import Row
+
+    from bid_evaluation_ext.sources.io import read_table, write_bucketed
+
+    left = spark.createDataFrame([Row(k=i, a=float(i)) for i in range(100)])
+    right = spark.createDataFrame([Row(k=i, b=float(i * 2)) for i in range(100)])
+    write_bucketed(left, "bkt_left", "k", num_buckets=4,
+                   path=str(tmp_path / "l"), sort_cols=["k"])
+    write_bucketed(right, "bkt_right", "k", num_buckets=4,
+                   path=str(tmp_path / "r"), sort_cols=["k"])
+    try:
+        l, r = read_table(spark, "bkt_left"), read_table(spark, "bkt_right")
+        # disable broadcast so the join must pick SMJ — the case bucketing serves
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            joined = l.join(r, on="k")
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert joined.count() == 100
+            assert "Exchange hashpartitioning" not in plan, plan[:2000]
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bkt_left")
+        spark.sql("DROP TABLE IF EXISTS bkt_right")
+
+
 def test_cli_end_to_end(spark, tmp_path):
     """CLI scores a parquet table with a YAML config and writes CSV."""
     import subprocess
@@ -166,12 +194,28 @@ def test_cli_end_to_end(spark, tmp_path):
     assert rows == {"B": 1, "C": 2, "A": 3}
 
 
-def test_load_table_normalizes_event_timestamps(spark):
-    events = IO.load_table(spark, "/root/testdata/sf0.001", "events")
-    # events ts normalized to a timestamp type, not raw nanos longs
-    assert dict(events.dtypes)["ts"].startswith("timestamp")
-    assert IO.load_table(spark, "/root/testdata/sf0.001",
-                         "region").count() == 5
+def test_write_training_shards_contiguous_ordered(spark, tmp_path):
+    import pytest
+    from bid_evaluation_ext.operators.pipeline import shuffle_rows
+    from bid_evaluation_ext.sources.io import write_training_shards
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    n = docs.count()
+    out = str(tmp_path / "shards")
+    write_training_shards(shuffle_rows(docs, seed="sh"), out, n_shards=4)
+    back = spark.read.parquet(out).withColumn("_f", F.input_file_name())
+    rows = [(r["_f"], r["shuffle_pos"]) for r in back.collect()]
+    # every position exactly once across shards
+    assert sorted(p for _, p in rows) == list(range(n))
+    # each shard file holds one contiguous, disjoint position range
+    by_file = {}
+    for f, p in rows:
+        by_file.setdefault(f, []).append(p)
+    spans = sorted((min(ps), max(ps), len(ps)) for ps in by_file.values())
+    assert all(hi - lo + 1 == cnt for lo, hi, cnt in spans)
+    assert all(spans[i][1] < spans[i + 1][0] for i in range(len(spans) - 1))
+    with pytest.raises(ValueError, match="n_shards"):
+        write_training_shards(docs, out, 0, pos_col="doc_id")
 
 
 class TestFormatRoundtrips:
@@ -192,6 +236,29 @@ class TestFormatRoundtrips:
         assert sorted(map(tuple, back.collect())) \
             == sorted(map(tuple, df.collect()))
 
+    def test_jsonl_roundtrip(self, spark, tmp_path):
+        from bid_evaluation_ext.sources.io import read_jsonl, write_jsonl
+
+        p = str(tmp_path / "jsonl")
+        df = self._frame(spark)
+        write_jsonl(df, p)
+        back = read_jsonl(spark, p, self.SCHEMA)
+        assert back.schema == df.schema
+        # JSON omits null fields on write; explicit schema restores them
+        assert sorted(map(tuple, back.collect())) \
+            == sorted(map(tuple, df.collect()))
+
+    def test_orc_roundtrip_with_pushdown(self, spark, tmp_path):
+        from bid_evaluation_ext.sources.io import read_orc, write_orc
+
+        p = str(tmp_path / "orc")
+        df = self._frame(spark)
+        write_orc(df, p)
+        back = read_orc(spark, p).filter(F.col("id") > 1).select("id", "score")
+        plan = back._jdf.queryExecution().executedPlan().toString()
+        assert "PushedFilters: [IsNotNull(id), GreaterThan(id,1)]" in plan
+        assert sorted(r["id"] for r in back.collect()) == [2, 3]
+
     def test_partitioned_write_prunes(self, spark, tmp_path):
         from bid_evaluation_spark.sources.io import write_parquet
 
@@ -205,3 +272,45 @@ class TestFormatRoundtrips:
         # the partition predicate must hit the file index, not a row filter
         assert "PartitionFilters: [isnotnull(shard" in plan
         assert back.count() == 10
+
+
+class TestFooterStats:
+    def test_matches_full_scan(self, spark, tmp_path):
+        import pyspark.sql.functions as F
+
+        from bid_evaluation_ext.sources.io import footer_stats
+
+        path = str(tmp_path / "t.parquet")
+        df = spark.range(0, 1000).select(
+            F.col("id"), (F.col("id") * 2.5 - 100).alias("v"))
+        df.write.mode("overwrite").parquet(path)
+        got = footer_stats(spark, path, ["id", "v"])
+        want = df.agg(F.count(F.lit(1)), F.min("id"), F.max("id"),
+                      F.min("v"), F.max("v")).collect()[0]
+        assert got["count"] == want[0]
+        assert got["min_id"] == want[1] and got["max_id"] == want[2]
+        assert got["min_v"] == want[3] and got["max_v"] == want[4]
+
+    def test_restores_session_confs(self, spark, tmp_path):
+        from bid_evaluation_ext.sources.io import footer_stats
+
+        path = str(tmp_path / "t2.parquet")
+        spark.range(5).write.mode("overwrite").parquet(path)
+        before_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
+        before_push = spark.conf.get("spark.sql.parquet.aggregatePushdown")
+        footer_stats(spark, path, ["id"])
+        assert spark.conf.get("spark.sql.sources.useV1SourceList") == before_v1
+        assert spark.conf.get(
+            "spark.sql.parquet.aggregatePushdown") == before_push
+
+    def test_unsupported_column_raises(self, spark, tmp_path):
+        import pyspark.sql.functions as F
+
+        from bid_evaluation_ext.sources.io import footer_stats
+
+        path = str(tmp_path / "t3.parquet")
+        spark.range(5).select(F.struct("id").alias("s")).write \
+            .mode("overwrite").parquet(path)
+        import pytest as _pt
+        with _pt.raises(Exception):
+            footer_stats(spark, path, ["s"])

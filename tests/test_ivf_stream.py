@@ -4,8 +4,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.similarity import ivf_topk, kmeans_centroids
-from bid_evaluation_spark.streaming.ivf import StreamingIVFIndex, bootstrap_index
+from bid_evaluation_ext.operators.similarity import ivf_topk, kmeans_centroids
+from bid_evaluation_ext.streaming.ivf import StreamingIVFIndex, bootstrap_index
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 

@@ -5,7 +5,7 @@ from collections import Counter
 
 import pytest
 
-from bid_evaluation_spark.operators.ivm import (join_insert_delta,
+from bid_evaluation_ext.operators.ivm import (join_insert_delta,
                                                 refresh_join)
 
 

@@ -5,7 +5,7 @@ the Spark feature kernel's magic-byte dispatch."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.jpeg import (
+from bid_evaluation_ext.operators.jpeg import (
     ZIGZAG, decode_jpeg, encode_jpeg, is_jpeg, quality_qtables,
 )
 
@@ -98,10 +98,10 @@ def test_error_paths():
 
 
 def test_feature_kernel_dispatches_png_and_jpeg(spark):
-    from bid_evaluation_spark.operators.multimodal import (
+    from bid_evaluation_ext.operators.multimodal import (
         extract_image_features,
     )
-    from bid_evaluation_spark.operators.png import encode_png
+    from bid_evaluation_ext.operators.png import encode_png
 
     # same blockwise-constant pixels shipped once as PNG, once as JPEG
     # (q=1 flat table -> exact), so decoded features must agree exactly

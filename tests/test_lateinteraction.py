@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.lateinteraction import maxsim_topk
+from bid_evaluation_ext.operators.lateinteraction import maxsim_topk
 
 
 def _tok(rows, spark, idc="doc_id"):
@@ -70,7 +70,7 @@ def test_pooled_candidates_width_is_pinned(spark):
     """The two-phase rerank can never widen beyond n_candidates per
     query — the 100-TB contract (verdict r10 task 6)."""
     import pyspark.sql.functions as F
-    from bid_evaluation_spark.operators.lateinteraction import (
+    from bid_evaluation_ext.operators.lateinteraction import (
         pooled_candidates)
 
     n_docs, n_cand = 300, 7

@@ -10,7 +10,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.layout import cluster_by_zorder, zorder_key
+from bid_evaluation_ext.operators.layout import cluster_by_zorder, zorder_key
 
 
 def _ref_key(vals, bounds, bits):

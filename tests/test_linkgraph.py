@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from bid_evaluation_spark.operators.linkgraph import (
+from bid_evaluation_ext.operators.linkgraph import (
     extract_links,
     host_degrees,
     host_graph,

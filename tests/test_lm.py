@@ -9,7 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.lm import perplexity, train_bigram_lm
+from bid_evaluation_ext.operators.lm import perplexity, train_bigram_lm
 
 
 def _docs(spark, rows):

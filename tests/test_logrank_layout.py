@@ -6,8 +6,8 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.layout import compaction_plan
-from bid_evaluation_spark.operators.timeseries import (logrank_test,
+from bid_evaluation_ext.operators.layout import compaction_plan
+from bid_evaluation_ext.operators.timeseries import (logrank_test,
                                                        seasonal_anomalies)
 
 

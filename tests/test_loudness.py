@@ -8,13 +8,13 @@ import math
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.loudness import (
+from bid_evaluation_ext.operators.loudness import (
     block_loudness,
     clip_loudness,
     integrated_loudness,
     normalize_gain,
 )
-from bid_evaluation_spark.operators.wav import encode_wav
+from bid_evaluation_ext.operators.wav import encode_wav
 
 RATE = 8000
 
@@ -105,7 +105,7 @@ def test_registry_goldens_track_analytic_within_straddle_margin():
 def test_k_coeffs_reproduce_bs1770_48k_tables():
     """The closed forms must reproduce the ITU-R BS.1770-4 Table 1/2
     coefficients at 48 kHz (the only published rate)."""
-    from bid_evaluation_spark.operators.loudness import k_weighting_coeffs
+    from bid_evaluation_ext.operators.loudness import k_weighting_coeffs
     (bs, as_), (bh, ah) = k_weighting_coeffs(48000)
     ref_bs = (1.53512485958697, -2.69169618940638, 1.19839281085285)
     ref_as = (1.0, -1.69065929318241, 0.73248077421585)
@@ -117,7 +117,7 @@ def test_k_coeffs_reproduce_bs1770_48k_tables():
 
 def test_k_weight_equals_sequential_biquads():
     """The FFT/IR fast path must equal the exact sequential cascade."""
-    from bid_evaluation_spark.operators.loudness import (
+    from bid_evaluation_ext.operators.loudness import (
         biquad, k_weight, k_weighting_coeffs)
     rng = np.random.default_rng(7)
     x = rng.standard_normal(6000)
@@ -139,7 +139,7 @@ def test_k_weighted_997hz_calibration_tone():
 def test_k_weighting_gain_matches_analytic_frequency_response():
     """A steady tone's K-weighted LUFS minus unweighted LUFS must be
     the cascade's analytic |H|^2 gain at that frequency."""
-    from bid_evaluation_spark.operators.loudness import k_weighting_coeffs
+    from bid_evaluation_ext.operators.loudness import k_weighting_coeffs
 
     def h2_db(f, rate):
         w = 2 * np.pi * f / rate
@@ -196,7 +196,7 @@ def test_clip_loudness_k_weighted_kernel(spark):
         x = np.concatenate([_tone(2 * RATE, amp, freq=freq),
                             np.zeros(RATE)])
         # encode_wav quantizes to int16 — decode round-trip via the local path
-        from bid_evaluation_spark.operators.multimodal import decode_audio
+        from bid_evaluation_ext.operators.multimodal import decode_audio
         rate, s = decode_audio(encode_wav(x, rate=RATE))
         want = integrated_loudness(s, rate, weighting="k")
         assert abs(got[i]["integrated_lufs"] - want) < 1e-9
@@ -205,7 +205,7 @@ def test_clip_loudness_k_weighted_kernel(spark):
 # ---------------------------------------------------------------- true peak
 
 def test_true_peak_recovers_intersample_crest():
-    from bid_evaluation_spark.operators.loudness import true_peak
+    from bid_evaluation_ext.operators.loudness import true_peak
     t = np.arange(2 * RATE)
     # rate/4 sine at phase pi/4: every sample is 0.707*A, crest between
     x = 0.5 * np.sin(2 * np.pi * (RATE / 4) * t / RATE + np.pi / 4)
@@ -219,8 +219,8 @@ def test_true_peak_recovers_intersample_crest():
 
 
 def test_clip_true_peak_kernel_flags_intersample_overs(spark):
-    from bid_evaluation_spark.operators.loudness import clip_true_peak
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.loudness import clip_true_peak
+    from bid_evaluation_ext.operators.wav import encode_wav
     t = np.arange(RATE)
     rows = [
         (0, encode_wav(0.5 * np.sin(2 * np.pi * 100 * t / RATE),

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from bid_evaluation_spark.operators.lshtune import (
+from bid_evaluation_ext.operators.lshtune import (
     lsh_error_areas,
     lsh_tune,
     lsh_tuning_table,

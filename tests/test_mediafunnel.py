@@ -6,19 +6,19 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.bmp import encode_bmp
-from bid_evaluation_spark.operators.gif import encode_gif
-from bid_evaluation_spark.operators.jpeg import encode_jpeg
-from bid_evaluation_spark.operators.mediafunnel import (
+from bid_evaluation_ext.operators.bmp import encode_bmp
+from bid_evaluation_ext.operators.gif import encode_gif
+from bid_evaluation_ext.operators.jpeg import encode_jpeg
+from bid_evaluation_ext.operators.mediafunnel import (
     _route_row,
     funnel_manifest,
     media_funnel,
 )
-from bid_evaluation_spark.operators.mp4 import build_mp4
-from bid_evaluation_spark.operators.ogg import build_ogg
-from bid_evaluation_spark.operators.png import encode_png
-from bid_evaluation_spark.operators.wav import encode_wav
-from bid_evaluation_spark.operators.y4m import encode_y4m
+from bid_evaluation_ext.operators.mp4 import build_mp4
+from bid_evaluation_ext.operators.ogg import build_ogg
+from bid_evaluation_ext.operators.png import encode_png
+from bid_evaluation_ext.operators.wav import encode_wav
+from bid_evaluation_ext.operators.y4m import encode_y4m
 
 RATE = 8000
 
@@ -107,8 +107,8 @@ def test_lossless_webp_joins_image_dedup(spark):
     # r12: a VP8L-coded copy of the PNG canonical dedups against it
     # through the funnel's webp pixel path; a LOSSY webp stays on the
     # inventory route (null dHash, dedup-exempt)
-    from bid_evaluation_spark.operators.vp8l import encode_webp_lossless
-    from bid_evaluation_spark.operators.webp import build_webp
+    from bid_evaluation_ext.operators.vp8l import encode_webp_lossless
+    from bid_evaluation_ext.operators.webp import build_webp
 
     df = spark.createDataFrame(
         [(0, encode_png(_grad())),

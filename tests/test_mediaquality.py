@@ -4,7 +4,7 @@
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.mediaquality import (
+from bid_evaluation_ext.operators.mediaquality import (
     audio_quality,
     audio_quality_features,
     image_quality,
@@ -43,10 +43,10 @@ def test_audio_features_hand_values():
 
 
 def test_kernels_dispatch_and_nulls(spark):
-    from bid_evaluation_spark.operators.g711 import encode_wav_g711
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.g711 import encode_wav_g711
+    from bid_evaluation_ext.operators.jpeg import encode_jpeg
+    from bid_evaluation_ext.operators.png import encode_png
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     img = ((np.arange(16)[None, :] + 7 * np.arange(8)[:, None]) % 256) \
         .astype(np.uint8)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from bid_evaluation_spark.operators.mediatype import (
+from bid_evaluation_ext.operators.mediatype import (
     census_counts,
     media_census,
     sniff_media_type,
@@ -14,8 +14,8 @@ from bid_evaluation_spark.operators.mediatype import (
 
 
 def test_riff_form_type_splits_wav_from_avi():
-    from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.avi import encode_avi_mjpeg
+    from bid_evaluation_ext.operators.wav import encode_wav
     img = np.full((8, 8), 90, dtype=np.uint8)
     x = 0.1 * np.sin(np.arange(2000))
     assert sniff_media_type(encode_wav(x, rate=8000))[:2] \
@@ -28,7 +28,7 @@ def test_riff_form_type_splits_wav_from_avi():
 
 
 def test_mpeg_sync_is_table_validated():
-    from bid_evaluation_spark.operators.mp3 import build_mp3
+    from bid_evaluation_ext.operators.mp3 import build_mp3
     assert sniff_media_type(build_mp3([9] * 2)) \
         == ("audio", "mpeg", "layer3")
     # a bare 0xFF byte with an invalid header is NOT an mp3
@@ -37,7 +37,7 @@ def test_mpeg_sync_is_table_validated():
 
 
 def test_mp4_magic_at_offset_four():
-    from bid_evaluation_spark.operators.mp4 import build_mp4
+    from bid_evaluation_ext.operators.mp4 import build_mp4
     assert sniff_media_type(build_mp4(duration=0)) \
         == ("video", "mp4", "isom")
 
@@ -52,7 +52,7 @@ def test_text_tiers_and_unknown():
 
 
 def test_kernel_and_counts(spark):
-    from bid_evaluation_spark.operators.png import encode_png
+    from bid_evaluation_ext.operators.png import encode_png
     img = np.full((4, 4), 10, dtype=np.uint8)
     rows = [(0, encode_png(img)), (1, encode_png(img)),
             (2, b"plain words"), (3, None)]

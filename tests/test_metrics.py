@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.metrics import (
+from bid_evaluation_ext.operators.metrics import (
     binary_classification_metrics, roc_auc,
 )
 
@@ -85,7 +85,7 @@ def test_auc_empty_class_is_null(spark):
 
 
 def test_end_to_end_with_logreg(spark):
-    from bid_evaluation_spark.operators.classify import (
+    from bid_evaluation_ext.operators.classify import (
         logreg_predict, logreg_train)
     rng = np.random.default_rng(21)
     X = rng.normal(size=(300, 6))
@@ -104,7 +104,7 @@ def test_end_to_end_with_logreg(spark):
 
 class TestCalibrationTable:
     def test_perfectly_calibrated_probe(self, spark):
-        from bid_evaluation_spark.operators.metrics import calibration_table
+        from bid_evaluation_ext.operators.metrics import calibration_table
         import random
 
         rng = random.Random(13)
@@ -129,7 +129,7 @@ class TestCalibrationTable:
         assert means == sorted(means)
 
     def test_null_exclusion_and_validation(self, spark):
-        from bid_evaluation_spark.operators.metrics import calibration_table
+        from bid_evaluation_ext.operators.metrics import calibration_table
 
         df = spark.createDataFrame(
             [(0.1, 0.0), (0.9, 1.0), (None, 1.0), (0.5, None)],
@@ -155,7 +155,7 @@ class TestRankBiasedOverlap:
 
         from pyspark.sql import Window
 
-        from bid_evaluation_spark.operators.metrics import rank_biased_overlap
+        from bid_evaluation_ext.operators.metrics import rank_biased_overlap
 
         ids = list(range(1, 21))
         rng = random.Random(7)
@@ -180,7 +180,7 @@ class TestRankBiasedOverlap:
         assert ident == pytest.approx(self._ref(ids, ids, 0.8), abs=1e-12)
 
     def test_validation(self, spark):
-        from bid_evaluation_spark.operators.metrics import rank_biased_overlap
+        from bid_evaluation_ext.operators.metrics import rank_biased_overlap
 
         a = spark.createDataFrame([(1, 1)], "id long, rnk int")
         b = spark.createDataFrame([(1, 1), (2, 2)], "id long, rnk int")
@@ -201,7 +201,7 @@ def test_roc_auc_by_group_matches_global_per_subset(spark):
     ties and a single-class group (null auc)."""
     import random
 
-    from bid_evaluation_spark.operators.metrics import roc_auc, roc_auc_by_group
+    from bid_evaluation_ext.operators.metrics import roc_auc, roc_auc_by_group
 
     rng = random.Random(29)
     rows = []
@@ -231,7 +231,7 @@ def test_calibration_by_group_matches_global_per_subset(spark):
     (each group's own thresholds and base rate)."""
     import random
 
-    from bid_evaluation_spark.operators.metrics import (
+    from bid_evaluation_ext.operators.metrics import (
         calibration_table, calibration_table_by_group)
 
     rng = random.Random(41)
@@ -263,7 +263,7 @@ class TestPsiDrift:
         import math
         import random
 
-        from bid_evaluation_spark.operators.metrics import psi_drift
+        from bid_evaluation_ext.operators.metrics import psi_drift
 
         rng = random.Random(67)
         vals = [rng.gauss(50, 10) for _ in range(2000)]
@@ -295,7 +295,7 @@ class TestPsiDrift:
         assert psi > 0.25    # "shifted" by the standard rule of thumb
 
     def test_validation(self, spark):
-        from bid_evaluation_spark.operators.metrics import psi_drift
+        from bid_evaluation_ext.operators.metrics import psi_drift
 
         df = spark.createDataFrame([(1.0,)], "v double")
         with pytest.raises(ValueError, match="n_bins"):
@@ -310,7 +310,7 @@ def test_ks_statistic(spark):
     empty side -> null."""
     import random
 
-    from bid_evaluation_spark.operators.metrics import ks_statistic
+    from bid_evaluation_ext.operators.metrics import ks_statistic
 
     rng = random.Random(71)
     xs = [rng.gauss(0, 1) for _ in range(500)]
@@ -342,7 +342,7 @@ def test_ks_statistic(spark):
 def test_chi_square_drift(spark):
     """Chi-square homogeneity vs a python reference; identical shares ->
     0; degenerate windows -> nulls."""
-    from bid_evaluation_spark.operators.metrics import chi_square_drift
+    from bid_evaluation_ext.operators.metrics import chi_square_drift
 
     ref_counts = {"en": 60, "fr": 25, "de": 15}
     cur_counts = {"en": 30, "fr": 45, "zh": 25}
@@ -375,7 +375,7 @@ def test_wasserstein_1d(spark):
     -> exactly the shift; identical -> 0."""
     import random
 
-    from bid_evaluation_spark.operators.metrics import wasserstein_1d
+    from bid_evaluation_ext.operators.metrics import wasserstein_1d
 
     rng = random.Random(83)
     xs = [round(rng.uniform(0, 10), 3) for _ in range(400)]
@@ -407,7 +407,7 @@ def test_js_divergence(spark):
     import math
     import random
 
-    from bid_evaluation_spark.operators.metrics import js_divergence
+    from bid_evaluation_ext.operators.metrics import js_divergence
 
     rng = random.Random(103)
     xs = [rng.gauss(0, 1) for _ in range(1500)]
@@ -447,7 +447,7 @@ class TestPsiTimeline:
         return ref, cur
 
     def test_drift_rises_in_the_shifted_bucket(self, spark):
-        from bid_evaluation_spark.operators.metrics import (
+        from bid_evaluation_ext.operators.metrics import (
             psi_drift, psi_timeline)
 
         ref, cur = self._frames(spark)
@@ -467,7 +467,7 @@ class TestPsiTimeline:
     def test_validation(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.metrics import psi_timeline
+        from bid_evaluation_ext.operators.metrics import psi_timeline
 
         ref, cur = self._frames(spark)
         with _pt.raises(ValueError):
@@ -484,8 +484,8 @@ class TestStreamingPsiMonitor:
 
         import numpy as np
 
-        from bid_evaluation_spark.operators.metrics import psi_drift
-        from bid_evaluation_spark.streaming.drift import (
+        from bid_evaluation_ext.operators.metrics import psi_drift
+        from bid_evaluation_ext.streaming.drift import (
             batch_psi, reference_bins, streaming_psi_monitor)
 
         rng = np.random.RandomState(7)
@@ -526,7 +526,7 @@ class TestStreamingPsiMonitor:
     def test_empty_batch_and_validation(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.streaming.drift import (
+        from bid_evaluation_ext.streaming.drift import (
             batch_psi, reference_bins, streaming_psi_monitor)
 
         ref = spark.createDataFrame([(float(i),) for i in range(50)],
@@ -541,7 +541,7 @@ class TestStreamingPsiMonitor:
 
 
 def test_classification_report_values(spark):
-    from bid_evaluation_spark.operators.metrics import classification_report
+    from bid_evaluation_ext.operators.metrics import classification_report
 
     # confusion: a->a x3, a->b x1, b->b x2, b->a x1, c never predicted
     rows = ([("a", "a")] * 3 + [("a", "b")] + [("b", "b")] * 2
@@ -564,7 +564,7 @@ def test_classification_report_values(spark):
 def test_ndcg_mrr_hand_example(spark):
     import math
 
-    from bid_evaluation_spark.operators.metrics import ndcg_mrr
+    from bid_evaluation_ext.operators.metrics import ndcg_mrr
 
     # q1 run: ranks 1..4 with rels 0,2,1,0 -> first rel at rank 2
     rows = [("q1", 1, 0.0), ("q1", 2, 2.0), ("q1", 3, 1.0), ("q1", 4, 0.0),

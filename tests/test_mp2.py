@@ -16,9 +16,9 @@ import math
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators import mp2
-from bid_evaluation_spark.operators.multimodal import decode_audio
-from bid_evaluation_spark.operators.probe import probe_payload
+from bid_evaluation_ext.operators import mp2
+from bid_evaluation_ext.operators.multimodal import decode_audio
+from bid_evaluation_ext.operators.probe import probe_payload
 
 
 def _tone(freq, n=6400, rate=32000, amp=0.6):

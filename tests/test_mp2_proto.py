@@ -9,7 +9,7 @@ import math
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators import mp2, mp2_proto
+from bid_evaluation_ext.operators import mp2, mp2_proto
 
 
 def test_prototype_shape_and_symmetry():

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from bid_evaluation_spark.operators.mp3 import (
+from bid_evaluation_ext.operators.mp3 import (
     build_mp3,
     mp3_inventory,
     parse_mp3_inventory,
@@ -74,7 +74,7 @@ def test_crc_protected_xing_offset_and_truncated_magic():
     assert parse_mp3_inventory(bytes(unshifted))["xing_frames"] is None
     # Truncation right past the 'Xing' magic degrades to None, not a
     # struct.error escaping the 'never raised' contract.
-    from bid_evaluation_spark.operators.mp3 import (
+    from bid_evaluation_ext.operators.mp3 import (
         _frame_info, _xing_frames)
     import struct
     whole = build_mp3([9], xing_frames=1)

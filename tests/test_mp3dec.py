@@ -9,8 +9,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.mp2 import _BitReader, _BitWriter
-from bid_evaluation_spark.operators.mp3dec import (
+from bid_evaluation_ext.operators.mp2 import _BitReader, _BitWriter
+from bid_evaluation_ext.operators.mp3dec import (
     PRETAB,
     SLEN,
     alias_butterfly_forward,
@@ -238,7 +238,7 @@ def test_reorder_short_inverts_interleave():
 # ------------------------------------------------------------- stereo
 
 def test_intensity_stereo_positions():
-    from bid_evaluation_spark.operators.mp3dec import (
+    from bid_evaluation_ext.operators.mp3dec import (
         intensity_ratio, intensity_stereo)
 
     xr = np.array([3.0, -6.0])
@@ -390,7 +390,7 @@ def test_decode_spectrum_without_tables_is_the_documented_seam():
 
 
 def test_decode_granule_samples_chains_both_block_families():
-    from bid_evaluation_spark.operators.mp3dec import (
+    from bid_evaluation_ext.operators.mp3dec import (
         decode_granule_samples)
 
     sfb_short = tuple(range(0, 577, 48))[:13] + (576,)
@@ -419,7 +419,7 @@ def test_decode_granule_samples_chains_both_block_families():
 # ------------------------------------------------ side-info census
 
 def test_sideinfo_inventory_census(spark):
-    from bid_evaluation_spark.operators.mp3dec import (
+    from bid_evaluation_ext.operators.mp3dec import (
         build_l3_frame, sideinfo_inventory)
 
     info = {"main_data_begin": 100, "private_bits": 0,
@@ -446,7 +446,7 @@ def test_granule_chain_requantize_alias_imdct_synthesize():
     # xr -> (encoder-side butterflies) -> alias_reduce -> hybrid ->
     # mp2 filterbank: the decode chain inverts the test's encode
     # chain exactly down to PCM-domain subband samples
-    from bid_evaluation_spark.operators.mp2 import analyze, synthesize
+    from bid_evaluation_ext.operators.mp2 import analyze, synthesize
 
     rng = np.random.default_rng(8)
     xr = rng.standard_normal(576) * 0.01

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from bid_evaluation_spark.operators.mp4 import (
+from bid_evaluation_ext.operators.mp4 import (
     build_mp4,
     mp4_inventory,
     parse_mp4_inventory,
@@ -64,7 +64,7 @@ def test_malformed_tiny_tkhd_degrades_to_null_dims():
     # width/height, never the previous box's bytes as 16.16 dims.
     import struct
 
-    from bid_evaluation_spark.operators.mp4 import _box
+    from bid_evaluation_ext.operators.mp4 import _box
 
     hdlr = _box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12)
     entry = _box(b"avc1", b"\x00" * 70)

@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.netpbm import (decode_netpbm, encode_pgm,
+from bid_evaluation_ext.operators.netpbm import (decode_netpbm, encode_pgm,
                                                    encode_ppm, is_netpbm)
 
 
@@ -69,7 +69,7 @@ def test_trailing_whitespace_and_concat_streams():
 
 
 def test_dispatch_seam_and_rec601(spark):
-    from bid_evaluation_spark.operators.multimodal import (
+    from bid_evaluation_ext.operators.multimodal import (
         extract_image_features)
 
     img = np.zeros((2, 2, 3), dtype=np.uint8)

@@ -3,7 +3,7 @@ damage tolerance, kernel."""
 
 from __future__ import annotations
 
-from bid_evaluation_spark.operators.ogg import (
+from bid_evaluation_ext.operators.ogg import (
     build_ogg,
     ogg_inventory,
     parse_ogg_inventory,
@@ -56,7 +56,7 @@ def test_kernel(spark):
 def test_bos_sniff_is_constant_work():
     # ADVICE r11: the census sniff must read only the BOS page, never
     # walk all pages — codec survives a payload cut mid-stream.
-    from bid_evaluation_spark.operators.ogg import sniff_ogg_codec
+    from bid_evaluation_ext.operators.ogg import sniff_ogg_codec
     full = build_ogg("vorbis", rate=44100, n_audio_pages=4)
     assert sniff_ogg_codec(full) == "vorbis"
     assert sniff_ogg_codec(full[:120]) == "vorbis"   # tail gone

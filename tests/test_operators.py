@@ -4,11 +4,11 @@ streaming windows — semantics checks on small controlled inputs."""
 import pytest
 from pyspark.sql import Row, functions as F
 
-from bid_evaluation_spark.operators import dedup as D
-from bid_evaluation_spark.operators import multimodal as M
-from bid_evaluation_spark.operators import similarity as S
-from bid_evaluation_spark.operators import text as T
-from bid_evaluation_spark.streaming import events as E
+from bid_evaluation_ext.operators import dedup as D
+from bid_evaluation_ext.operators import multimodal as M
+from bid_evaluation_ext.operators import similarity as S
+from bid_evaluation_ext.operators import text as T
+from bid_evaluation_ext.streaming import events as E
 
 
 @pytest.fixture
@@ -373,7 +373,7 @@ def test_session_window_agg_matches_sessionize(spark):
 
 
 def test_running_user_totals_stream(spark, tmp_path):
-    from bid_evaluation_spark.streaming.stateful import running_user_totals
+    from bid_evaluation_ext.streaming.stateful import running_user_totals
 
     src = str(tmp_path / "ev")
     df = spark.createDataFrame(
@@ -397,7 +397,7 @@ def test_running_user_totals_stream(spark, tmp_path):
 
 
 def test_flag_value_anomalies_stream(spark, tmp_path):
-    from bid_evaluation_spark.streaming.stateful import flag_value_anomalies
+    from bid_evaluation_ext.streaming.stateful import flag_value_anomalies
 
     src = str(tmp_path / "ev2")
     # 12 steady values then one wild outlier for user 7
@@ -422,7 +422,7 @@ def test_flag_value_anomalies_stream(spark, tmp_path):
 
 
 def test_salted_agg_matches_plain_groupby(spark):
-    from bid_evaluation_spark.operators.skew import salted_agg
+    from bid_evaluation_ext.operators.skew import salted_agg
 
     df = spark.createDataFrame(
         [("a", 1.0), ("a", 2.0), ("a", None), ("b", 4.0), ("c", None)],
@@ -448,7 +448,7 @@ def test_salted_agg_matches_plain_groupby(spark):
 
 
 def test_asof_join(spark):
-    from bid_evaluation_spark.operators.asof import asof_join
+    from bid_evaluation_ext.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(7, "2024-01-01 00:10:00", "c1"), (7, "2024-01-01 00:30:00", "c2"),
@@ -470,7 +470,7 @@ def test_asof_join(spark):
 
 
 def test_asof_join_forward_and_nearest(spark):
-    from bid_evaluation_spark.operators.asof import asof_join
+    from bid_evaluation_ext.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(7, 10.0, "c1"), (7, 31.0, "c2"), (7, 90.0, "c3")],
@@ -505,7 +505,7 @@ def test_asof_join_forward_and_nearest(spark):
 
 
 def test_asof_join_tolerance(spark):
-    from bid_evaluation_spark.operators.asof import asof_join
+    from bid_evaluation_ext.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(7, 10.0, "c1"), (7, 100.0, "c2")],
@@ -524,7 +524,7 @@ def test_asof_join_tolerance(spark):
 
 
 def test_near_duplicate_clusters_and_dedup(spark):
-    from bid_evaluation_spark.operators.dedup import (
+    from bid_evaluation_ext.operators.dedup import (
         dedup_near_duplicates, near_duplicate_clusters)
 
     pairs = spark.createDataFrame(
@@ -553,7 +553,7 @@ def test_near_duplicate_clusters_and_dedup(spark):
 def test_near_duplicate_clusters_auto_dispatch(spark, monkeypatch):
     """auto == label == local on the same graph; the ceiling flips auto
     to the distributed engine; empty pair sets stay empty (r12 opt)."""
-    from bid_evaluation_spark.operators.dedup import near_duplicate_clusters
+    from bid_evaluation_ext.operators.dedup import near_duplicate_clusters
 
     pairs = spark.createDataFrame(
         [(4, 2), (2, 8), (30, 31), (9, 9), (1, 8)], "a_id long, b_id long")
@@ -582,7 +582,7 @@ def test_near_duplicate_clusters_auto_dispatch(spark, monkeypatch):
 
 
 def test_range_join(spark):
-    from bid_evaluation_spark.operators.asof import range_join
+    from bid_evaluation_ext.operators.asof import range_join
 
     pts = spark.createDataFrame(
         [(1, 7, 5.0), (2, 7, 25.0), (3, 7, 99.0), (4, 8, 5.0)],
@@ -652,7 +652,7 @@ def test_multimodal_audio_corrupt_and_fake(spark):
 def test_wav_codec_roundtrip():
     import numpy as np
 
-    from bid_evaluation_spark.operators.wav import (
+    from bid_evaluation_ext.operators.wav import (
         band_energies, decode_wav, encode_wav,
     )
 
@@ -670,7 +670,7 @@ def test_wav_codec_roundtrip():
 
 def test_session_window_agg_streaming(spark, tmp_path):
     # the native session_window form must run as a real streaming query
-    from bid_evaluation_spark.streaming.events import session_window_agg
+    from bid_evaluation_ext.streaming.events import session_window_agg
 
     src = str(tmp_path / "sw_events")
     df = spark.createDataFrame(
@@ -692,7 +692,7 @@ def test_session_window_agg_streaming(spark, tmp_path):
 
 
 def test_streaming_dedup_filter(spark, tmp_path):
-    from bid_evaluation_spark.streaming.stateful import streaming_dedup_filter
+    from bid_evaluation_ext.streaming.stateful import streaming_dedup_filter
 
     # two micro-batches: dup within batch 1, cross-batch dup in batch 2
     b1 = spark.createDataFrame(
@@ -721,7 +721,7 @@ def test_streaming_dedup_filter(spark, tmp_path):
 
 
 def test_streaming_neardup_candidates(spark, tmp_path):
-    from bid_evaluation_spark.streaming.stateful import (
+    from bid_evaluation_ext.streaming.stateful import (
         streaming_neardup_candidates,
     )
 
@@ -765,7 +765,7 @@ def test_streaming_neardup_candidates(spark, tmp_path):
 
 
 def test_ivf_topk_recall_vs_exact(spark):
-    from bid_evaluation_spark.operators.similarity import ivf_topk, kmeans_centroids
+    from bid_evaluation_ext.operators.similarity import ivf_topk, kmeans_centroids
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = kmeans_centroids(df, k=8, max_iter=5)
@@ -828,7 +828,7 @@ def test_template_registry_introspection():
 
 
 def test_load_all_registers_views(spark):
-    from bid_evaluation_spark.sources.io import TESTDATA_TABLES, load_all
+    from bid_evaluation_ext.sources.io import TESTDATA_TABLES, load_all
 
     tables = load_all(spark, "/root/testdata/sf0.001")
     assert set(tables) == set(TESTDATA_TABLES)
@@ -841,7 +841,7 @@ def test_asof_join_null_payload_keeps_matched_row(spark):
     """The matched (latest) right row's null field must stay null — not be
     back-filled from an older right row (ADVICE r1: payload rides as one
     struct, matching DuckDB ASOF JOIN)."""
-    from bid_evaluation_spark.operators.asof import asof_join
+    from bid_evaluation_ext.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(7, "2024-01-01 00:10:00", "c")],
@@ -886,7 +886,7 @@ def test_language_id_single_lang(spark):
 
 def test_running_totals_mean_skips_null_values(spark, tmp_path):
     """mean_value = sum / non-null count, matching the batch groupBy.avg twin."""
-    from bid_evaluation_spark.streaming.stateful import running_user_totals
+    from bid_evaluation_ext.streaming.stateful import running_user_totals
 
     src = str(tmp_path / "ev_null")
     df = spark.createDataFrame(
@@ -1008,7 +1008,7 @@ def test_jaccard_similarity_join_exact_recall(spark):
     import itertools
     import random
 
-    from bid_evaluation_spark.operators.dedup import jaccard_similarity_join
+    from bid_evaluation_ext.operators.dedup import jaccard_similarity_join
 
     vocab = [f"w{i}" for i in range(30)]
     rng = random.Random(77)
@@ -1039,7 +1039,7 @@ def test_jaccard_similarity_join_exact_recall(spark):
 def test_dedup_keep_best(spark):
     """Keep-best policy: cluster keeps the max-score member (ties -> min
     id); unpaired rows untouched."""
-    from bid_evaluation_spark.operators.dedup import dedup_keep_best
+    from bid_evaluation_ext.operators.dedup import dedup_keep_best
 
     df = spark.createDataFrame(
         [(1, 0.5), (2, 0.9), (3, 0.9), (4, 0.1), (9, 0.0)],
@@ -1058,7 +1058,7 @@ def test_containment_join_exact_recall(spark):
     1, excerpt case (tiny Jaccard, high containment) included."""
     import itertools
 
-    from bid_evaluation_spark.operators.dedup import containment_join
+    from bid_evaluation_ext.operators.dedup import containment_join
 
     hay = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -1097,7 +1097,7 @@ def test_jaccard_join_local_matches_prefix_engine(spark, monkeypatch):
     to the prefix-filter join — duplicate-id rows merge their token
     sets, null ids and empty docs never pair, same a_id < b_id
     orientation and int→double division; env-cap routing."""
-    from bid_evaluation_spark.operators.dedup import jaccard_similarity_join
+    from bid_evaluation_ext.operators.dedup import jaccard_similarity_join
 
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta"),
@@ -1132,7 +1132,7 @@ def test_containment_kernel_matches_join_engine(spark, monkeypatch):
     to the prefix-filter join engine — messy ids (nulls both sides),
     duplicate tokens, empty/whitespace text, string ids, thresholds
     across the range, and the env-cap routing."""
-    from bid_evaluation_spark.operators.dedup import containment_join
+    from bid_evaluation_ext.operators.dedup import containment_join
 
     hay = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon"),
@@ -1183,7 +1183,7 @@ class TestResizeImageFeatures:
     def _media(self, spark, imgs):
         import pandas as pd
 
-        from bid_evaluation_spark.operators.png import encode_png
+        from bid_evaluation_ext.operators.png import encode_png
 
         rows = [(i, bytearray(encode_png(img))) for i, img in imgs]
         return spark.createDataFrame(rows, "media_id long, payload binary")
@@ -1191,7 +1191,7 @@ class TestResizeImageFeatures:
     def test_known_nearest_neighbor(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.multimodal import (
+        from bid_evaluation_ext.operators.multimodal import (
             resize_image_features)
 
         # 4x2 image resized to 2x2: sx = (x*4)//2 -> {0,2}; sy = (y*2)//2
@@ -1207,7 +1207,7 @@ class TestResizeImageFeatures:
         import numpy as np
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.multimodal import (
+        from bid_evaluation_ext.operators.multimodal import (
             extract_image_features, resize_image_features)
 
         img = (np.arange(48, dtype=np.uint8).reshape(6, 8) * 3) % 256
@@ -1218,7 +1218,7 @@ class TestResizeImageFeatures:
         assert same["resized_mean_luma"] == _pt.approx(full["mean_luma"])
 
     def test_corrupt_payload_nulls_not_raise(self, spark):
-        from bid_evaluation_spark.operators.multimodal import (
+        from bid_evaluation_ext.operators.multimodal import (
             resize_image_features)
 
         df = spark.createDataFrame([(0, bytearray(b"not a png"))],
@@ -1234,7 +1234,7 @@ class TestDecimateAudioFeatures:
     def _media(self, spark, waves, rate=8000):
         import pandas as pd
 
-        from bid_evaluation_spark.operators.wav import encode_wav
+        from bid_evaluation_ext.operators.wav import encode_wav
 
         rows = [(i, bytearray(encode_wav(w, rate=rate)))
                 for i, w in waves]
@@ -1243,7 +1243,7 @@ class TestDecimateAudioFeatures:
     def test_known_decimation(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.multimodal import (
+        from bid_evaluation_ext.operators.multimodal import (
             decimate_audio_features)
 
         # alternating +/-0.5 every sample, 12 samples, factor 2 keeps the
@@ -1261,7 +1261,7 @@ class TestDecimateAudioFeatures:
         import numpy as np
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.multimodal import (
+        from bid_evaluation_ext.operators.multimodal import (
             decimate_audio_features, extract_audio_features)
 
         rng = np.random.RandomState(6)
@@ -1277,7 +1277,7 @@ class TestDecimateAudioFeatures:
     def test_corrupt_and_validation(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.multimodal import (
+        from bid_evaluation_ext.operators.multimodal import (
             decimate_audio_features)
 
         df = spark.createDataFrame([(0, bytearray(b"junk"))],
@@ -1292,7 +1292,7 @@ def test_enrich_stream_static_parity(spark, tmp_path):
     """Stream-static enrichment equals the batch join, per micro-batch."""
     import time as _time
 
-    from bid_evaluation_spark.streaming.events import enrich_stream
+    from bid_evaluation_ext.streaming.events import enrich_stream
 
     schema = "event_id long, user_id long, value double"
     dim = spark.createDataFrame(
@@ -1330,7 +1330,7 @@ def test_salted_join_matches_plain_join(spark):
     sides, and null keys."""
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.skew import salted_join
+    from bid_evaluation_ext.operators.skew import salted_join
 
     big_rows = ([(0, i) for i in range(200)]         # hot key
                 + [(k, k * 10) for k in range(1, 6)]  # normal keys
@@ -1357,7 +1357,7 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_coleman_liau_readability(spark):
-    from bid_evaluation_spark.operators.text import (coleman_liau,
+    from bid_evaluation_ext.operators.text import (coleman_liau,
                                                      sentence_count)
     from pyspark.sql import functions as F
 

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.pca import pca_fit, pca_transform
+from bid_evaluation_ext.operators.pca import pca_fit, pca_transform
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 

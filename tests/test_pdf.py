@@ -7,7 +7,7 @@ import zlib
 
 import pytest
 
-from bid_evaluation_spark.operators.pdf import (
+from bid_evaluation_ext.operators.pdf import (
     encode_pdf,
     extract_pdf_text,
     extract_pdf_text_features,

@@ -7,13 +7,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.jpeg import encode_jpeg
-from bid_evaluation_spark.operators.phash import (
+from bid_evaluation_ext.operators.jpeg import encode_jpeg
+from bid_evaluation_ext.operators.phash import (
     image_phash,
     phash64,
     phash_neardup_pairs,
 )
-from bid_evaluation_spark.operators.png import encode_png
+from bid_evaluation_ext.operators.png import encode_png
 
 
 def _ham(a, b):
@@ -54,8 +54,8 @@ def test_deterministic_and_signed_range():
 def test_png_jpeg_reencode_near():
     s = _smooth(10)
     img = np.clip(s, 0, 255).astype(np.uint8)
-    from bid_evaluation_spark.operators.jpeg import decode_jpeg
-    from bid_evaluation_spark.operators.png import decode_png, luma
+    from bid_evaluation_ext.operators.jpeg import decode_jpeg
+    from bid_evaluation_ext.operators.png import decode_png, luma
     hp = phash64(luma(decode_png(encode_png(img))))
     hj = phash64(luma(decode_jpeg(encode_jpeg(
         np.stack([img] * 3, axis=-1), quality=90))))
@@ -96,7 +96,7 @@ def test_wide_band_pairs_match_narrow_within_radius(spark):
         rows.append((2 * i + 1, flip - (1 << 64) if flip >= (1 << 63)
                      else flip))
     df = spark.createDataFrame(rows, "media_id long, phash long")
-    from bid_evaluation_spark.operators.phash import phash_neardup_pairs
+    from bid_evaluation_ext.operators.phash import phash_neardup_pairs
     narrow = {(r["id_a"], r["id_b"], r["hamming"])
               for r in phash_neardup_pairs(df, max_hamming=3).collect()}
     wide = {(r["id_a"], r["id_b"], r["hamming"])

@@ -2,7 +2,7 @@
 
 import pytest
 
-from bid_evaluation_spark.operators import pii as P
+from bid_evaluation_ext.operators import pii as P
 
 
 @pytest.fixture
@@ -70,7 +70,7 @@ def test_email_consumed_before_ip(spark):
 # ---------------------------------------------------- Luhn-validated cards
 
 def test_luhn_known_vectors(spark):
-    from bid_evaluation_spark.operators.pii import luhn_valid
+    from bid_evaluation_ext.operators.pii import luhn_valid
     from pyspark.sql import functions as F
     # public test numbers: valid visa/amex; off-by-one invalid
     rows = [("4539148803436467", True), ("4539148803436468", False),
@@ -83,7 +83,7 @@ def test_luhn_known_vectors(spark):
 
 
 def test_redact_ccn_only_validated(spark):
-    from bid_evaluation_spark.operators.pii import redact_ccn
+    from bid_evaluation_ext.operators.pii import redact_ccn
     rows = [
         (0, "pay with 4539 1488 0343 6467 thanks"),
         (1, "order id 4539 1488 0343 6468 is not a card"),
@@ -104,7 +104,7 @@ def test_redact_ccn_only_validated(spark):
 
 
 def test_redact_ccn_is_plan_native(spark):
-    from bid_evaluation_spark.operators.pii import redact_ccn
+    from bid_evaluation_ext.operators.pii import redact_ccn
     df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
     plan = redact_ccn(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan

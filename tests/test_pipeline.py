@@ -4,7 +4,7 @@ vocabulary, packing — exactness and contract tests."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.pipeline import (
+from bid_evaluation_ext.operators.pipeline import (
     chunk_documents,
     decontaminate,
     hash_sample,
@@ -191,7 +191,7 @@ def test_mixture_sample_hits_target_shares(spark):
 
 
 def test_sample_k_per_group_exact_sizes(spark):
-    from bid_evaluation_spark.operators.pipeline import sample_k_per_group
+    from bid_evaluation_ext.operators.pipeline import sample_k_per_group
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     caps = {r["lang"]: r["n"] for r in
@@ -210,9 +210,9 @@ def test_sample_k_per_group_exact_sizes(spark):
 
 
 def test_token_budget_mixture_targets_token_mass(spark):
-    from bid_evaluation_spark.operators.pipeline import (
+    from bid_evaluation_ext.operators.pipeline import (
         token_budget_mixture_sample)
-    from bid_evaluation_spark.operators.text import token_count
+    from bid_evaluation_ext.operators.text import token_count
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     weights = {"en": 4, "de": 2, "es": 2, "fr": 1, "zh": 1}
@@ -233,7 +233,7 @@ def test_token_budget_mixture_targets_token_mass(spark):
 
 
 def test_weighted_sample_k_proportional_and_deterministic(spark):
-    from bid_evaluation_spark.operators.pipeline import weighted_sample_k
+    from bid_evaluation_ext.operators.pipeline import weighted_sample_k
 
     # 20 heavy (w=10) + 80 light (w=1) rows; k=20 draws across seeds
     rows = [(i, 10.0 if i < 20 else 1.0) for i in range(100)]
@@ -257,7 +257,7 @@ def test_weighted_sample_k_proportional_and_deterministic(spark):
 
 
 def test_weighted_sample_k_contracts(spark):
-    from bid_evaluation_spark.operators.pipeline import weighted_sample_k
+    from bid_evaluation_ext.operators.pipeline import weighted_sample_k
 
     df = spark.createDataFrame(
         [(1, 1.0), (2, None), (3, 0.0), (4, -1.0), (5, 2.0)],
@@ -270,7 +270,7 @@ def test_weighted_sample_k_contracts(spark):
 
 
 def test_bigram_lm_flags_word_salad(spark):
-    from bid_evaluation_spark.operators.pipeline import (
+    from bid_evaluation_ext.operators.pipeline import (
         bigram_lm_quality_score, lm_quality_score)
 
     prose = "the cat sat on the mat and the dog sat on the rug"
@@ -329,7 +329,7 @@ def test_shuffle_rows_is_seeded_permutation(spark):
 
 
 def test_lm_quality_score_matches_hand_model(spark):
-    from bid_evaluation_spark.operators.pipeline import lm_quality_score
+    from bid_evaluation_ext.operators.pipeline import lm_quality_score
     import math
 
     df = spark.createDataFrame(
@@ -367,7 +367,7 @@ def test_lm_quality_score_matches_hand_model(spark):
 def test_novelty_score(spark):
     """Novelty vs a reference corpus: fresh text -> 1.0, exact re-send ->
     0.0, partial overlap in between, short docs -> null."""
-    from bid_evaluation_spark.operators.pipeline import novelty_score
+    from bid_evaluation_ext.operators.pipeline import novelty_score
 
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
@@ -393,7 +393,7 @@ def test_leakage_safe_split_invariant(spark):
     a singleton keys by its own id (identical to plain train_test_split)."""
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.pipeline import (
+    from bid_evaluation_ext.operators.pipeline import (
         leakage_safe_split, train_test_split)
 
     docs = spark.createDataFrame(
@@ -417,7 +417,7 @@ def test_leakage_safe_split_invariant(spark):
 
 
 def test_cohens_kappa_known_values(spark):
-    from bid_evaluation_spark.operators.analytics import cohens_kappa
+    from bid_evaluation_ext.operators.analytics import cohens_kappa
 
     # perfect agreement -> kappa 1
     perfect = spark.createDataFrame(
@@ -446,7 +446,7 @@ class TestNeymanAllocation:
     def test_allocation_tracks_n_times_sigma(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.pipeline import neyman_allocation
+        from bid_evaluation_ext.operators.pipeline import neyman_allocation
 
         rng = np.random.RandomState(3)
         rows = ([("calm", float(v)) for v in rng.normal(100, 1, 300)]
@@ -464,7 +464,7 @@ class TestNeymanAllocation:
     def test_exact_budget_without_caps(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.pipeline import neyman_allocation
+        from bid_evaluation_ext.operators.pipeline import neyman_allocation
 
         rng = np.random.RandomState(7)
         rows = [(f"g{i % 7}", float(v)) for i, v in
@@ -474,7 +474,7 @@ class TestNeymanAllocation:
         assert sum(r["alloc"] for r in out) == 50   # largest-remainder lands
 
     def test_zero_variance_falls_back_proportional(self, spark):
-        from bid_evaluation_spark.operators.pipeline import neyman_allocation
+        from bid_evaluation_ext.operators.pipeline import neyman_allocation
 
         rows = [("a", 1.0)] * 30 + [("b", 2.0)] * 10
         df = spark.createDataFrame(rows, "grp string, v double")
@@ -495,7 +495,7 @@ class TestNeymanCappedSlots:
         ranking lands both +1s → exact budget."""
         import math
 
-        from bid_evaluation_spark.operators.pipeline import (
+        from bid_evaluation_ext.operators.pipeline import (
             neyman_allocation)
 
         def mk(name, n, v):
@@ -514,7 +514,7 @@ class TestNeymanCappedSlots:
 
 class TestExactQuantile2Pass:
     def _q(self, spark, vals, q, **kw):
-        from bid_evaluation_spark.operators.pipeline import (
+        from bid_evaluation_ext.operators.pipeline import (
             exact_quantile_2pass)
 
         df = spark.createDataFrame([(float(v),) for v in vals], "x double")
@@ -530,7 +530,7 @@ class TestExactQuantile2Pass:
     def test_constant_nulls_empty(self, spark):
         n, k, v = self._q(spark, [7.0] * 5, 0.5)
         assert (n, v) == (5, 7.0)
-        from bid_evaluation_spark.operators.pipeline import (
+        from bid_evaluation_ext.operators.pipeline import (
             exact_quantile_2pass)
         df = spark.createDataFrame([(None,), (3.0,)], "x double")
         assert exact_quantile_2pass(df, "x", 0.5) == (1, 0, 3.0)
@@ -552,7 +552,7 @@ class TestExactQuantile2Pass:
 
 
 def test_contamination_report_shares(spark):
-    from bid_evaluation_spark.operators.pipeline import contamination_report
+    from bid_evaluation_ext.operators.pipeline import contamination_report
 
     train = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "one two three four")],
@@ -577,7 +577,7 @@ def test_contamination_report_shares(spark):
 
 
 def test_mix_manifest_rates_and_validation(spark):
-    from bid_evaluation_spark.operators.pipeline import mix_manifest
+    from bid_evaluation_ext.operators.pipeline import mix_manifest
 
     df = spark.createDataFrame(
         [("a", "w1 w2 w3 w4"), ("a", "w1 w2 w3 w4 w5 w6"),
@@ -604,7 +604,7 @@ def test_mix_manifest_rates_and_validation(spark):
 
 
 def test_dup_ngram_rate(spark):
-    from bid_evaluation_spark.operators.pipeline import dup_ngram_rate
+    from bid_evaluation_ext.operators.pipeline import dup_ngram_rate
 
     rows = [("s1", "a b c a b c"),      # 2-grams: ab bc ca ab bc -> 5 occ, 3 distinct
             ("s1", "a b"),              # +1 occ of ab
@@ -623,7 +623,7 @@ def test_dup_ngram_rate(spark):
 
 
 def test_dedup_savings_report(spark):
-    from bid_evaluation_spark.operators.dedup import dedup_savings_report
+    from bid_evaluation_ext.operators.dedup import dedup_savings_report
 
     rows = [("s1", 1, "same text", 9), ("s1", 2, "same  TEXT ", 11),
             ("s2", 3, "same text", 9),   # cross-group dup charged to s2

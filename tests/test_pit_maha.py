@@ -6,9 +6,9 @@ import datetime as dt
 
 import pytest
 
-from bid_evaluation_spark.operators.cdc import pit_join, scd2_history
-from bid_evaluation_spark.operators.profile import mahalanobis_outliers
-from bid_evaluation_spark.streaming.events import conversion_latency
+from bid_evaluation_ext.operators.cdc import pit_join, scd2_history
+from bid_evaluation_ext.operators.profile import mahalanobis_outliers
+from bid_evaluation_ext.streaming.events import conversion_latency
 
 
 def test_pit_join_picks_version_valid_at_fact_time(spark):

@@ -6,7 +6,7 @@ import zlib
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators import png as P
+from bid_evaluation_ext.operators import png as P
 
 
 def _rand_img(h, w, c, seed=0):
@@ -131,7 +131,7 @@ def test_luma_and_grid_embedding():
 def test_dhash64_properties():
     import numpy as np
 
-    from bid_evaluation_spark.operators.png import dhash64, pool_grid
+    from bid_evaluation_ext.operators.png import dhash64, pool_grid
 
     rng = np.random.default_rng(3)
     # dims divisible by the 8x9 grid so 2x-upscaled blocks nest exactly

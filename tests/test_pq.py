@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.pq import (
+from bid_evaluation_ext.operators.pq import (
     formula_codebook,
     pq_adc_topk,
     pq_encode,
@@ -92,7 +92,7 @@ def test_adc_rank_and_k(spark):
 
 
 def test_coarse_assign_nprobe(spark):
-    from bid_evaluation_spark.operators.pq import coarse_assign
+    from bid_evaluation_ext.operators.pq import coarse_assign
 
     cents = [[0.0, 0.0], [10.0, 10.0], [20.0, 20.0]]
     df = _vecs(spark, [(0, [1.0, 1.0]), (1, [19.0, 21.0]), (2, [0.5])],
@@ -110,7 +110,7 @@ def test_coarse_assign_nprobe(spark):
 def test_ivfpq_subset_of_full_adc(spark):
     """IVF-PQ results are exactly the full-ADC results restricted to the
     probed lists — with nprobe == n_lists the two searches coincide."""
-    from bid_evaluation_spark.operators.pq import (
+    from bid_evaluation_ext.operators.pq import (
         formula_coarse, formula_codebook, ivfpq_topk, pq_adc_topk,
         pq_encode)
 

@@ -3,10 +3,10 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.pipeline import (
+from bid_evaluation_ext.operators.pipeline import (
     hash_sample, lm_quality_score, mixture_sample, shuffle_rows,
 )
-from bid_evaluation_spark.plans.prep import (
+from bid_evaluation_ext.plans.prep import (
     build_prep_pipeline, prep_from_json, prep_from_yaml,
 )
 
@@ -30,7 +30,7 @@ def docs(spark):
 def _fluent_twin(docs):
     from pyspark.sql import Window
 
-    from bid_evaluation_spark.operators.text import fingerprint_md5
+    from bid_evaluation_ext.operators.text import fingerprint_md5
 
     w = Window.partitionBy("_fp")
     d = (docs.withColumn("_fp", fingerprint_md5("text"))
@@ -78,7 +78,7 @@ def test_bigram_lm_filter_step(docs):
     n_in, n_out = docs.count(), out.count()
     assert 0 < n_out < n_in
     # the cut is the documented quantile of the bigram NLL
-    from bid_evaluation_spark.operators.pipeline import bigram_lm_quality_score
+    from bid_evaluation_ext.operators.pipeline import bigram_lm_quality_score
     lm = bigram_lm_quality_score(docs)
     cut = lm.agg(F.expr("percentile(lm2_nll, 0.8)")).first()[0]
     assert lm.filter(F.col("lm2_nll") > cut).join(
@@ -132,7 +132,7 @@ def test_yaml_and_json_loaders(docs, tmp_path):
 # --- quality / pii steps (added with the Gopher/C4 + PII operators) ---
 
 def test_gopher_filter_step(docs):
-    from bid_evaluation_spark.operators.quality import gopher_quality_flags
+    from bid_evaluation_ext.operators.quality import gopher_quality_flags
 
     run = build_prep_pipeline({"steps": [
         {"op": "gopher_filter", "min_words": 20, "min_stopword_hits": 1}]})

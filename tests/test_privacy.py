@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.privacy import (
+from bid_evaluation_ext.operators.privacy import (
     dp_noisy_counts,
     k_anonymity_report,
 )

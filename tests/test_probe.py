@@ -4,7 +4,7 @@ no-decode guarantee (truncated bodies still probe), corrupt→null."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.probe import probe_media, probe_payload
+from bid_evaluation_ext.operators.probe import probe_media, probe_payload
 
 
 def _img(w=12, h=8):
@@ -13,17 +13,17 @@ def _img(w=12, h=8):
 
 
 def test_probe_all_containers():
-    from bid_evaluation_spark.operators.adpcm import encode_wav_adpcm
-    from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-    from bid_evaluation_spark.operators.flac import encode_flac
-    from bid_evaluation_spark.operators.g711 import encode_wav_g711
-    from bid_evaluation_spark.operators.gif import encode_gif
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-    from bid_evaluation_spark.operators.netpbm import encode_pgm, encode_ppm
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.wav import encode_wav
-    from bid_evaluation_spark.operators.y4m import encode_y4m
-    from bid_evaluation_spark.sources.webdataset import encode_tar_shard
+    from bid_evaluation_ext.operators.adpcm import encode_wav_adpcm
+    from bid_evaluation_ext.operators.avi import encode_avi_mjpeg
+    from bid_evaluation_ext.operators.flac import encode_flac
+    from bid_evaluation_ext.operators.g711 import encode_wav_g711
+    from bid_evaluation_ext.operators.gif import encode_gif
+    from bid_evaluation_ext.operators.jpeg import encode_jpeg
+    from bid_evaluation_ext.operators.netpbm import encode_pgm, encode_ppm
+    from bid_evaluation_ext.operators.png import encode_png
+    from bid_evaluation_ext.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.y4m import encode_y4m
+    from bid_evaluation_ext.sources.webdataset import encode_tar_shard
 
     img = _img()
     sq = np.tile([0.5, -0.5], 400)
@@ -98,8 +98,8 @@ def test_probe_mp3_headers():
 def test_probe_is_header_only():
     """Truncating the BODY must not break the probe — that's the whole
     point: dims/rates come from headers, not decodes."""
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.y4m import encode_y4m
+    from bid_evaluation_ext.operators.png import encode_png
+    from bid_evaluation_ext.operators.y4m import encode_y4m
 
     png = encode_png(_img()[:, :, None])
     got = probe_payload(png[:40])  # magic + IHDR only
@@ -111,7 +111,7 @@ def test_probe_is_header_only():
 
 
 def test_probe_media_kernel(spark):
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     df = spark.createDataFrame(
         [(1, bytearray(encode_wav(np.zeros(800), rate=16000))),

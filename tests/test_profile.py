@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.profile import column_profile, numeric_histogram
+from bid_evaluation_ext.operators.profile import column_profile, numeric_histogram
 
 
 @pytest.fixture
@@ -56,7 +56,7 @@ def test_numeric_histogram_edges_and_empty_buckets(spark, frame):
 
 
 def test_validate_rules_counts(spark):
-    from bid_evaluation_spark.operators.profile import validate_rules
+    from bid_evaluation_ext.operators.profile import validate_rules
 
     df = spark.createDataFrame(
         [(1, "en", 10), (2, "en", -5), (2, "xx", 10), (4, None, 2000),
@@ -83,7 +83,7 @@ def test_validate_rules_counts(spark):
 
 def test_validate_rules_contract_errors(spark):
     import pytest
-    from bid_evaluation_spark.operators.profile import validate_rules
+    from bid_evaluation_ext.operators.profile import validate_rules
 
     df = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError, match="non-empty"):
@@ -99,7 +99,7 @@ def test_validate_rules_contract_errors(spark):
 
 
 def test_key_skew_report(spark):
-    from bid_evaluation_spark.operators.profile import key_skew_report
+    from bid_evaluation_ext.operators.profile import key_skew_report
 
     rows = ([("hot",)] * 80 + [("warm",)] * 15 + [(None,)] * 4 + [("cold",)])
     df = spark.createDataFrame(rows, "k string")
@@ -118,7 +118,7 @@ class TestCorrelationMatrix:
     def test_matches_numpy(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.profile import correlation_matrix
+        from bid_evaluation_ext.operators.profile import correlation_matrix
 
         rng = np.random.RandomState(4)
         a = rng.normal(0, 1, 200)
@@ -136,7 +136,7 @@ class TestCorrelationMatrix:
         assert got[("a", "b")] > 0.9 and abs(got[("a", "c")]) < 0.3
 
     def test_constant_column_null_and_listwise(self, spark):
-        from bid_evaluation_spark.operators.profile import correlation_matrix
+        from bid_evaluation_ext.operators.profile import correlation_matrix
 
         df = spark.createDataFrame(
             [(1.0, 5.0, 1.0), (2.0, 5.0, None), (3.0, 5.0, 3.0)],
@@ -156,7 +156,7 @@ class TestTableFingerprint:
         return spark.createDataFrame(rows, "id long, v string")
 
     def test_identical_tables_no_diff(self, spark):
-        from bid_evaluation_spark.operators.profile import (
+        from bid_evaluation_ext.operators.profile import (
             fingerprint_diff, table_fingerprint)
 
         a = self._df(spark, [(i, f"v{i}") for i in range(100)])
@@ -168,7 +168,7 @@ class TestTableFingerprint:
         assert fingerprint_diff(fa, fb).count() == 0  # order-insensitive
 
     def test_single_row_change_localizes(self, spark):
-        from bid_evaluation_spark.operators.profile import (
+        from bid_evaluation_ext.operators.profile import (
             fingerprint_diff, table_fingerprint)
 
         a = self._df(spark, [(i, f"v{i}") for i in range(100)])
@@ -182,7 +182,7 @@ class TestTableFingerprint:
         assert total.agg(F.sum("n_rows")).collect()[0][0] == 100
 
     def test_null_vs_literal_null_string_differ(self, spark):
-        from bid_evaluation_spark.operators.profile import (
+        from bid_evaluation_ext.operators.profile import (
             fingerprint_diff, table_fingerprint)
 
         a = self._df(spark, [(1, None)])
@@ -200,7 +200,7 @@ class TestBenford:
     def test_benford_sample_fits_and_uniform_fails(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.profile import benford_deviation
+        from bid_evaluation_ext.operators.profile import benford_deviation
 
         rng = np.random.RandomState(5)
         # log-uniform values follow Benford; uniform values don't
@@ -218,7 +218,7 @@ class TestBenford:
         assert chi_u > 500         # wildly off
 
     def test_digit_extraction_and_exclusions(self, spark):
-        from bid_evaluation_spark.operators.profile import benford_deviation
+        from bid_evaluation_ext.operators.profile import benford_deviation
 
         df = spark.createDataFrame(
             [(912.34,), (0.07,), (-70.0,), (0.0,), (None,)], "v double")

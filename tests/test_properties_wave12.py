@@ -30,7 +30,7 @@ SET = settings(
 )
 def test_vp8l_roundtrip_is_bit_exact(h, w, ch, seed, subtract_green,
                                      predictor, cache_bits, use_lz77):
-    from bid_evaluation_spark.operators.vp8l import (
+    from bid_evaluation_ext.operators.vp8l import (
         decode_webp_lossless, encode_webp_lossless)
 
     rng = np.random.default_rng(seed)
@@ -53,7 +53,7 @@ def test_vp8l_roundtrip_is_bit_exact(h, w, ch, seed, subtract_green,
     n_colors=st.integers(min_value=1, max_value=20),
 )
 def test_vp8l_palette_roundtrip(seed, n_colors):
-    from bid_evaluation_spark.operators.vp8l import (
+    from bid_evaluation_ext.operators.vp8l import (
         decode_webp_lossless, encode_webp_lossless)
 
     rng = np.random.default_rng(seed)
@@ -115,7 +115,7 @@ _SWITCHED = st.fixed_dictionaries({
                  min_size=2, max_size=2),
 )
 def test_mp3_side_info_roundtrips_every_field(nch, mdb, scfsi, grs):
-    from bid_evaluation_spark.operators.mp3dec import (
+    from bid_evaluation_ext.operators.mp3dec import (
         build_side_info, parse_side_info)
 
     info = {"main_data_begin": mdb, "private_bits": 0,
@@ -151,9 +151,9 @@ def test_funnel_manifest_int_columns_never_float(spark):
     # coerce hash/feature columns to float64 (which corrupts 64-bit
     # dhashes) — decode one real image alongside nulls and assert the
     # exact hash survives
-    from bid_evaluation_spark.operators.mediafunnel import (
+    from bid_evaluation_ext.operators.mediafunnel import (
         _route_row, funnel_manifest)
-    from bid_evaluation_spark.operators.png import encode_png
+    from bid_evaluation_ext.operators.png import encode_png
 
     grad = ((np.add.outer(np.arange(12) * 23, np.arange(16) * 41)
              * 7) % 211).astype(np.uint8)

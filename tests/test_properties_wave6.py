@@ -29,7 +29,7 @@ vals = st.lists(
        b=st.floats(min_value=0.1, max_value=10, allow_nan=False))
 def test_ols_affine_equivariance(spark, ys, a, b):
     """y -> a + b*y maps (b0,b1,b2) -> (a + b*b0, b*b1, b*b2), same R^2."""
-    from bid_evaluation_spark.operators.regress import ols2
+    from bid_evaluation_ext.operators.regress import ols2
 
     rows = [("g", float(i), float((i * i) % 5), float(y))
             for i, y in enumerate(ys)]
@@ -50,7 +50,7 @@ def test_ols_affine_equivariance(spark, ys, a, b):
 @given(ys=vals)
 def test_ridge_shrinkage_monotone_in_lambda(spark, ys):
     """Slope norm never grows as lambda grows."""
-    from bid_evaluation_spark.operators.regress import ridge2
+    from bid_evaluation_ext.operators.regress import ridge2
 
     rows = [("g", float(i % 7), float((i * 3) % 5), float(y))
             for i, y in enumerate(ys)]
@@ -70,7 +70,7 @@ def test_ridge_shrinkage_monotone_in_lambda(spark, ys):
 def test_scd2_intervals_partition_and_pit_roundtrip(spark, data):
     """History intervals tile each key's timeline; PIT of every original
     log row at its own timestamp returns that row's attribute."""
-    from bid_evaluation_spark.operators.cdc import pit_join, scd2_history
+    from bid_evaluation_ext.operators.cdc import pit_join, scd2_history
 
     rows = [(f"k{k}", int(t), i, attr) for i, (k, t, attr) in enumerate(data)]
     df = spark.createDataFrame(rows, "k string, ts long, id long, a string")
@@ -107,7 +107,7 @@ def test_scd2_intervals_partition_and_pit_roundtrip(spark, data):
                              allow_nan=False, width=32),
                    min_size=6, max_size=16))
 def test_changepoint_gain_nonneg_and_bounded_split(spark, ys):
-    from bid_evaluation_spark.operators.timeseries import changepoint_by_key
+    from bid_evaluation_ext.operators.timeseries import changepoint_by_key
 
     rows = [("k", i, float(v)) for i, v in enumerate(ys)]
     df = spark.createDataFrame(rows, "k string, t long, v double")
@@ -124,7 +124,7 @@ def test_changepoint_gain_nonneg_and_bounded_split(spark, ys):
 @given(ks=st.lists(st.integers(0, 30), min_size=2, max_size=6),
        n_extra=st.integers(0, 20))
 def test_wilson_interval_contains_rate_and_is_proper(spark, ks, n_extra):
-    from bid_evaluation_spark.operators.analytics import wilson_by_group
+    from bid_evaluation_ext.operators.analytics import wilson_by_group
 
     rows = []
     for g, k in enumerate(ks):
@@ -139,7 +139,7 @@ def test_wilson_interval_contains_rate_and_is_proper(spark, ks, n_extra):
 @given(da=st.lists(st.integers(1, 40), min_size=4, max_size=12),
        db=st.lists(st.integers(1, 40), min_size=4, max_size=12))
 def test_logrank_antisymmetric_under_group_swap(spark, da, db):
-    from bid_evaluation_spark.operators.timeseries import logrank_test
+    from bid_evaluation_ext.operators.timeseries import logrank_test
 
     rows = ([(float(d), True, "a") for d in da]
             + [(float(d), True, "b") for d in db])
@@ -154,7 +154,7 @@ def test_logrank_antisymmetric_under_group_swap(spark, da, db):
 @SET
 @given(rels=st.lists(st.integers(0, 3), min_size=1, max_size=8))
 def test_ndcg_unit_interval_and_perfect_ranking(spark, rels):
-    from bid_evaluation_spark.operators.metrics import ndcg_mrr
+    from bid_evaluation_ext.operators.metrics import ndcg_mrr
 
     ordered = sorted(rels, reverse=True)
     rows = ([("run", i + 1, float(v)) for i, v in enumerate(rels)]
@@ -178,7 +178,7 @@ def test_huber_convex_and_bounded_influence(spark, body, outlier):
     hypothesis found): (a) the estimate is a convex combination of the
     data; (b) influence saturates — magnifying the outlier 10x barely
     moves the estimate while the mean chases it."""
-    from bid_evaluation_spark.operators.analytics import huber_mean_by_group
+    from bid_evaluation_ext.operators.analytics import huber_mean_by_group
 
     values = [float(v) for v in body] + [float(outlier)]
     df = spark.createDataFrame([("g", v) for v in values],
@@ -199,7 +199,7 @@ def test_huber_convex_and_bounded_influence(spark, body, outlier):
                     min_size=5, max_size=25, unique=True),
        min_pts=st.integers(2, 4))
 def test_dbscan_role_invariants(spark, pts, min_pts):
-    from bid_evaluation_spark.operators.spatial import dbscan
+    from bid_evaluation_ext.operators.spatial import dbscan
 
     rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)]
     df = spark.createDataFrame(rows, "id long, x double, y double")

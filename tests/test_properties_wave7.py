@@ -42,8 +42,8 @@ def test_pit_join_equals_asof_on_scd2_history(spark, data, fact_ts):
     backward as-of join on valid_from pick the SAME version for every
     fact (intervals tile, so 'latest valid_from ≤ ts' is inside its
     interval iff any version matches)."""
-    from bid_evaluation_spark.operators.asof import asof_join
-    from bid_evaluation_spark.operators.cdc import pit_join, scd2_history
+    from bid_evaluation_ext.operators.asof import asof_join
+    from bid_evaluation_ext.operators.cdc import pit_join, scd2_history
 
     rows = [(f"k{k}", int(t), i, a) for i, (k, t, a) in enumerate(data)]
     log = spark.createDataFrame(rows, "k string, ts long, id long, a string")
@@ -75,7 +75,7 @@ def test_pit_join_equals_asof_on_scd2_history(spark, data, fact_ts):
 def test_ivm_refresh_equals_full_recompute(spark, a, da, b, db):
     """refresh_join(a ⋈ b, Δ...) multiset-equals (a+Δa) ⋈ (b+Δb) for
     random insert batches, including empty deltas and duplicate rows."""
-    from bid_evaluation_spark.operators.ivm import refresh_join
+    from bid_evaluation_ext.operators.ivm import refresh_join
 
     mk = lambda rows, col: spark.createDataFrame(  # noqa: E731
         [(k, v) for k, v in rows] or [(None, None)],
@@ -99,7 +99,7 @@ def test_mahalanobis_affine_invariance_with_big_offset(spark, pts, sx, sy):
     """d² is invariant under per-axis scale + a 1e6 offset (the map is
     invertible affine). The old raw avg(x²)−avg(x)² covariance lost the
     variance entirely at this offset; stable co-moments keep d²."""
-    from bid_evaluation_spark.operators.profile import mahalanobis_outliers
+    from bid_evaluation_ext.operators.profile import mahalanobis_outliers
 
     rows = [("g", float(x), float(y)) for x, y in pts]
     df = spark.createDataFrame(rows, "g string, x double, y double")
@@ -125,7 +125,7 @@ def test_knn_prediction_invariant_under_corpus_duplication(spark, seed):
     doubles, majorities and smallest-label tie-breaks are preserved."""
     import random
 
-    from bid_evaluation_spark.operators.classify import knn_classify
+    from bid_evaluation_ext.operators.classify import knn_classify
 
     rng = random.Random(seed)
     dim, n = 4, 14
@@ -165,7 +165,7 @@ def test_knn_prediction_invariant_under_corpus_duplication(spark, seed):
 def test_active_users_window1_equals_daily_distinct(spark, events):
     """au_1 per observed day == the plain distinct-user count that day
     (the window-1 degenerate case of the contribution expansion)."""
-    from bid_evaluation_spark.operators.timeseries import active_users
+    from bid_evaluation_ext.operators.timeseries import active_users
 
     rows = [(u, f"2024-03-{d + 1:02d} 0{u % 10}:00:00") for u, d in events]
     df = spark.createDataFrame(rows, "user_id long, ts_s string") \
@@ -193,7 +193,7 @@ def test_trend_slope_invariant_under_big_x_offset(spark, xs):
     """grouped_linear_fit: shifting x by 1e6 must leave slope and r²
     unchanged (intercept maps by −slope·1e6). Raw moments lose the
     slope entirely at this offset."""
-    from bid_evaluation_spark.operators.analytics import grouped_linear_fit
+    from bid_evaluation_ext.operators.analytics import grouped_linear_fit
 
     rows = [("g", float(i), float(x) + 0.5 * i) for i, x in enumerate(xs)]
     df = spark.createDataFrame(rows, "g string, x double, y double")
@@ -211,7 +211,7 @@ def test_trend_slope_invariant_under_big_x_offset(spark, xs):
 def test_welch_t_invariant_under_big_metric_offset(spark, ys):
     """Welch t and dof are offset-invariant (variances and the mean
     difference are); only the means move."""
-    from bid_evaluation_spark.operators.analytics import welch_t_test
+    from bid_evaluation_ext.operators.analytics import welch_t_test
 
     rows = [(i % 2, float(y) + (i % 2)) for i, y in enumerate(ys)]
     assume(len({r[0] for r in rows}) == 2)
@@ -240,7 +240,7 @@ def test_welch_t_invariant_under_big_metric_offset(spark, ys):
 def test_cuped_invariant_under_big_covariate_offset(spark, xs):
     """cuped_adjust: θ and x̄ both absorb a covariate offset, so the
     ADJUSTED METRIC is identical — the end-to-end conditioning check."""
-    from bid_evaluation_spark.operators.analytics import cuped_adjust
+    from bid_evaluation_ext.operators.analytics import cuped_adjust
 
     rows = [(i, float(x), float(x) * 0.7 + (i % 3)) for i, x in
             enumerate(xs)]
@@ -263,7 +263,7 @@ def test_cuped_invariant_under_big_covariate_offset(spark, xs):
 def test_ols_invariant_under_big_regressor_offset(spark, xs):
     """ols2: shifting x1 by 1e6 leaves b1, b2, r² unchanged (b0 maps by
     −b1·1e6) — the centered-Gram conditioning fix, end to end."""
-    from bid_evaluation_spark.operators.regress import ols2
+    from bid_evaluation_ext.operators.regress import ols2
 
     rows = [("g", float(i), float((i * i) % 5), float(x))
             for i, x in enumerate(xs)]
@@ -285,7 +285,7 @@ def test_ols_invariant_under_big_regressor_offset(spark, xs):
 def test_correlation_invariant_under_big_offset(spark, xs):
     """correlation_matrix at offset 1e6: the direct stress for the
     round-7 F.corr fix (raw moments drifted and could leave [−1, 1])."""
-    from bid_evaluation_spark.operators.profile import correlation_matrix
+    from bid_evaluation_ext.operators.profile import correlation_matrix
 
     rows = [(float(x), float(x) * 2 + (i % 3), float(i))
             for i, x in enumerate(xs)]
@@ -323,7 +323,7 @@ def test_winnow_coverage_theorem(spark, shared, pre, post):
     """Schleimer et al. guarantee: two documents sharing a token run of
     length >= k + w - 1 (k=3, w=4 -> 6) share >= 1 winnow fingerprint,
     for ANY surrounding context."""
-    from bid_evaluation_spark.operators.text import winnow_fingerprints
+    from bid_evaluation_ext.operators.text import winnow_fingerprints
 
     d1 = " ".join(shared)
     d2 = " ".join(pre + shared + post)
@@ -341,7 +341,7 @@ def test_winnow_coverage_theorem(spark, shared, pre, post):
                            max_size=8), min_size=1, max_size=5))
 def test_corpus_overlap_symmetry(spark, a, b):
     """jaccard is symmetric; containments swap; counts are consistent."""
-    from bid_evaluation_spark.operators.dedup import corpus_overlap
+    from bid_evaluation_ext.operators.dedup import corpus_overlap
 
     da = spark.createDataFrame(
         [(i, " ".join(t)) for i, t in enumerate(a)],
@@ -367,7 +367,7 @@ def test_mmr_rank_count_and_no_repeats(spark, seed, lam):
     repeats a document, and rank 1 is always the max-relevance doc."""
     import random
 
-    from bid_evaluation_spark.operators.retrieval import mmr_rerank
+    from bid_evaluation_ext.operators.retrieval import mmr_rerank
 
     rng = random.Random(seed)
     rows = []

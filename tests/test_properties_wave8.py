@@ -53,7 +53,7 @@ def _copy_corpus(texts, copies):
                        min_size=0, max_size=4))
 def test_neardup_flags_every_copy_and_is_order_invariant(spark, texts,
                                                          copies):
-    from bid_evaluation_spark.operators.dedup import neardup_mark_ordered
+    from bid_evaluation_ext.operators.dedup import neardup_mark_ordered
 
     rows = _copy_corpus(texts, copies)
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -94,8 +94,8 @@ def test_streaming_filter_matches_batch_twin_on_any_split(spark, tmp_path,
     """Exact copies collide with their cluster minimum on every band, so
     representative filtering == pairwise marking — for ANY id-ordered
     batch partition of the corpus."""
-    from bid_evaluation_spark.operators.dedup import neardup_mark_ordered
-    from bid_evaluation_spark.streaming.neardup import StreamingNearDup
+    from bid_evaluation_ext.operators.dedup import neardup_mark_ordered
+    from bid_evaluation_ext.streaming.neardup import StreamingNearDup
 
     rows = sorted(_copy_corpus(texts, copies))
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -142,7 +142,7 @@ def _py_winnow(text, k=3, w=4):
 def test_winnow_fold_equals_python_reference(spark, text, k, w):
     from pyspark.sql import functions as F
 
-    from bid_evaluation_spark.operators.text import winnow_fingerprints
+    from bid_evaluation_ext.operators.text import winnow_fingerprints
 
     df = spark.createDataFrame([(text,)], "text string")
     (got,) = df.select(
@@ -160,7 +160,7 @@ def test_winnow_fold_equals_python_reference(spark, text, k, w):
     min_size=2, max_size=6),
     threshold=st.sampled_from([0.2, 0.5, 0.8]))
 def test_recall_report_truth_equals_bruteforce(spark, texts, threshold):
-    from bid_evaluation_spark.operators.dedup import lsh_recall_report
+    from bid_evaluation_ext.operators.dedup import lsh_recall_report
 
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "doc_id long, text string")

@@ -18,13 +18,13 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from bid_evaluation_spark.operators.adpcm import (
+from bid_evaluation_ext.operators.adpcm import (
     decode_wav_adpcm,
     encode_wav_adpcm,
 )
-from bid_evaluation_spark.operators.audiofp import pack_bits64
-from bid_evaluation_spark.operators.avi import decode_avi, encode_avi_mjpeg
-from bid_evaluation_spark.operators.g711 import (
+from bid_evaluation_ext.operators.audiofp import pack_bits64
+from bid_evaluation_ext.operators.avi import decode_avi, encode_avi_mjpeg
+from bid_evaluation_ext.operators.g711 import (
     alaw_decode,
     alaw_encode,
     ulaw_decode,
@@ -122,7 +122,7 @@ def test_avi_mjpeg_identity_on_block_frames(nf, wb, hb, base, fps):
 # bitstream must round-trip whatever the quantizer ladder produced, and
 # decode length is the documented closed form of the input length.
 
-from bid_evaluation_spark.operators import mp2
+from bid_evaluation_ext.operators import mp2
 
 
 @given(st.integers(0, 2**32 - 1), st.integers(33, 4000),

@@ -4,7 +4,7 @@ cross-corpus line dedup — semantics on small controlled corpora."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators import quality as Q
+from bid_evaluation_ext.operators import quality as Q
 
 
 @pytest.fixture
@@ -174,8 +174,8 @@ def test_drop_repeated_lines_bad_policy(lined):
 
 
 def test_quality_scorecard_rollup(spark):
-    from bid_evaluation_spark.operators.quality import quality_scorecard
-    from bid_evaluation_spark.operators.text import quality_score
+    from bid_evaluation_ext.operators.quality import quality_scorecard
+    from bid_evaluation_ext.operators.text import quality_score
     from pyspark.sql import functions as F
 
     rows = [("s1", "the quick brown fox jumps over the lazy dog and runs"),

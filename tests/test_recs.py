@@ -6,8 +6,8 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.graph import link_prediction
-from bid_evaluation_spark.operators.recs import item_item_cosine
+from bid_evaluation_ext.operators.graph import link_prediction
+from bid_evaluation_ext.operators.recs import item_item_cosine
 
 
 @pytest.fixture
@@ -138,7 +138,7 @@ def test_link_prediction_kernel_matches_join(rand_inc):
 def test_pair_kernels_force_distributed_env(rand_inc, monkeypatch):
     # SPARK_GRAFT_FORCE_DISTRIBUTED=1 zeroes every dispatch cap: auto
     # must take the join route and still produce identical values
-    from bid_evaluation_spark.dispatch import local_cap
+    from bid_evaluation_ext.dispatch import local_cap
     monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
     assert local_cap("SPARK_GRAFT_REC_LOCAL_MAX_ROWS", 4_000_000) == 0
     kw = dict(k=4, max_user_items=10, min_common=2)

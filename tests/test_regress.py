@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.regress import ols2, ridge2
+from bid_evaluation_ext.operators.regress import ols2, ridge2
 
 
 def _frame(spark, rows):

@@ -5,7 +5,7 @@ convention, dispatch + null paths."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.resample import (
+from bid_evaluation_ext.operators.resample import (
     resample_audio,
     resample_poly,
 )
@@ -40,8 +40,8 @@ def test_dc_gain_and_alias_suppression():
 
 
 def test_resample_audio_kernel(spark):
-    from bid_evaluation_spark.operators.flac import encode_flac
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.flac import encode_flac
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     t = np.arange(2000) / 8000.0
     x = 0.5 * np.sin(2 * np.pi * 200 * t)

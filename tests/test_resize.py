@@ -5,7 +5,7 @@ kernel dispatch + null paths."""
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.resize import (
+from bid_evaluation_ext.operators.resize import (
     bilinear_resize,
     letterbox,
     resize_bilinear_features,
@@ -54,8 +54,8 @@ def test_letterbox_geometry_and_fill():
 
 
 def test_kernel_dispatch_and_nulls(spark):
-    from bid_evaluation_spark.operators.jpeg import encode_jpeg
-    from bid_evaluation_spark.operators.png import encode_png
+    from bid_evaluation_ext.operators.jpeg import encode_jpeg
+    from bid_evaluation_ext.operators.png import encode_png
 
     img = _affine(16, 8, base=5).astype(np.uint8)
     df = spark.createDataFrame(

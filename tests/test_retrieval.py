@@ -5,7 +5,7 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators import retrieval as R
+from bid_evaluation_ext.operators import retrieval as R
 
 
 @pytest.fixture
@@ -89,7 +89,7 @@ class TestRRFFusion:
         return a, b
 
     def test_known_values(self, spark):
-        from bid_evaluation_spark.operators.retrieval import rrf_fuse
+        from bid_evaluation_ext.operators.retrieval import rrf_fuse
 
         a, b = self._lists(spark)
         rows = {r["doc_id"]: r for r in rrf_fuse([a, b], k=60).collect()}
@@ -102,7 +102,7 @@ class TestRRFFusion:
         assert rows[3]["best_rank"] == 1
 
     def test_ordering_and_topn(self, spark):
-        from bid_evaluation_spark.operators.retrieval import rrf_fuse
+        from bid_evaluation_ext.operators.retrieval import rrf_fuse
 
         a, b = self._lists(spark)
         out = rrf_fuse([a, b], k=60, top_n=2).collect()
@@ -113,14 +113,14 @@ class TestRRFFusion:
         assert scores == sorted(scores, reverse=True)
 
     def test_single_list_is_monotone(self, spark):
-        from bid_evaluation_spark.operators.retrieval import rrf_fuse
+        from bid_evaluation_ext.operators.retrieval import rrf_fuse
 
         a, _ = self._lists(spark)
         out = rrf_fuse([a], k=10).collect()
         assert [r["doc_id"] for r in out] == [1, 2, 3]
 
     def test_validation(self, spark):
-        from bid_evaluation_spark.operators.retrieval import rrf_fuse
+        from bid_evaluation_ext.operators.retrieval import rrf_fuse
         import pytest as _pt
 
         a, _ = self._lists(spark)
@@ -132,7 +132,7 @@ class TestRRFFusion:
 
 class TestInvertedPostings:
     def test_positions_tf_and_min_df(self, spark):
-        from bid_evaluation_spark.operators.retrieval import (
+        from bid_evaluation_ext.operators.retrieval import (
             inverted_postings)
 
         df = spark.createDataFrame(
@@ -145,7 +145,7 @@ class TestInvertedPostings:
         assert out[("cat", 1)]["positions"] == [2]
         assert out[("the", 2)]["tf"] == 1
         # min_df=2 keeps only 'the' (2 docs)
-        from bid_evaluation_spark.operators.retrieval import (
+        from bid_evaluation_ext.operators.retrieval import (
             inverted_postings as ip)
         terms = {r["term"] for r in ip(df, min_df=2).collect()}
         assert terms == {"the"}
@@ -154,7 +154,7 @@ class TestInvertedPostings:
             ip(df, min_df=0)
 
     def test_lowercases(self, spark):
-        from bid_evaluation_spark.operators.retrieval import (
+        from bid_evaluation_ext.operators.retrieval import (
             inverted_postings)
 
         df = spark.createDataFrame([(1, "The THE the")],
@@ -165,7 +165,7 @@ class TestInvertedPostings:
 
 class TestPhraseSearch:
     def _hits(self, spark, docs, phrase):
-        from bid_evaluation_spark.operators.retrieval import phrase_search
+        from bid_evaluation_ext.operators.retrieval import phrase_search
 
         df = spark.createDataFrame(docs, "doc_id long, text string")
         return {r["doc_id"]: r["n_matches"]
@@ -191,7 +191,7 @@ class TestPhraseSearch:
         docs = [(1, "x y z")]
         assert self._hits(spark, docs, "y x") == {}
         import pytest as _pt
-        from bid_evaluation_spark.operators.retrieval import phrase_search
+        from bid_evaluation_ext.operators.retrieval import phrase_search
         df = spark.createDataFrame(docs, "doc_id long, text string")
         with _pt.raises(ValueError):
             phrase_search(df, "   ")

@@ -3,7 +3,7 @@ agent groups, crawl-delay, fail-open-to-null, kernel path."""
 
 import pytest
 
-from bid_evaluation_spark.operators.robots import (
+from bid_evaluation_ext.operators.robots import (
     robots_decision,
     robots_filter,
 )

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.streaming.rollup import StreamingRollup
+from bid_evaluation_ext.streaming.rollup import StreamingRollup
 
 
 def _batches(spark):
@@ -99,7 +99,7 @@ def test_live_stream_attach(spark, tmp_path):
 def test_merge_rollup_states(spark, tmp_path):
     """Two independently-maintained rollups merge into the rollup of the
     concatenated data — the cross-corpus algebra, no history rescan."""
-    from bid_evaluation_spark.streaming.rollup import merge_rollup_states
+    from bid_evaluation_ext.streaming.rollup import merge_rollup_states
 
     batches, full = _batches(spark)
     r1 = StreamingRollup(spark, str(tmp_path / "m1"), ["day", "et"], ["v"])
@@ -125,7 +125,7 @@ def test_empty_state_group_schema_types(spark, tmp_path):
     a typed merge raises instead of silently coercing."""
     from pyspark.sql.types import LongType, StringType
 
-    from bid_evaluation_spark.streaming.rollup import merge_rollup_states
+    from bid_evaluation_ext.streaming.rollup import merge_rollup_states
 
     typed_rows = spark.createDataFrame(
         [(1, "click", 2.0), (2, "view", 3.0)],

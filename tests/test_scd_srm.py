@@ -6,9 +6,9 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.analytics import srm_check
-from bid_evaluation_spark.operators.cdc import scd2_history
-from bid_evaluation_spark.operators.privacy import l_diversity_report
+from bid_evaluation_ext.operators.analytics import srm_check
+from bid_evaluation_ext.operators.cdc import scd2_history
+from bid_evaluation_ext.operators.privacy import l_diversity_report
 
 
 def test_scd2_basic_runs(spark):

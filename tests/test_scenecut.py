@@ -7,12 +7,12 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.scenecut import (
+from bid_evaluation_ext.operators.scenecut import (
     cut_positions,
     frame_histogram,
     scene_cuts,
 )
-from bid_evaluation_spark.operators.y4m import encode_y4m
+from bid_evaluation_ext.operators.y4m import encode_y4m
 
 
 def _flat(v, w=32, h=24):
@@ -66,6 +66,6 @@ def test_scene_cuts_kernel(spark):
 def test_frame_histogram_rejects_empty_frame():
     import numpy as np
     import pytest
-    from bid_evaluation_spark.operators.scenecut import frame_histogram
+    from bid_evaluation_ext.operators.scenecut import frame_histogram
     with pytest.raises(ValueError):
         frame_histogram(np.zeros((0, 0)))

@@ -4,12 +4,12 @@ semantics, and pre-trained-centroid reuse."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.dedup import (
+from bid_evaluation_ext.operators.dedup import (
     embedding_near_duplicates,
     semantic_dedup,
     semantic_dedup_pairs,
 )
-from bid_evaluation_spark.operators.similarity import (
+from bid_evaluation_ext.operators.similarity import (
     assign_clusters,
     kmeans_centroids,
 )

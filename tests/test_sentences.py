@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.sentences import (
+from bid_evaluation_ext.operators.sentences import (
     explode_sentences_udtf,
     split_sentences,
 )

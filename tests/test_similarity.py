@@ -3,7 +3,7 @@
 # ------------------------------------------------------ hard-negative mining
 
 def test_hard_negatives_are_cross_label_topk(spark):
-    from bid_evaluation_spark.operators.similarity import hard_negatives
+    from bid_evaluation_ext.operators.similarity import hard_negatives
     rows = [
         (0, [1.0, 0.0], 0),
         (1, [0.99, 0.14], 1),      # hardest cross-label for 0
@@ -21,7 +21,7 @@ def test_hard_negatives_are_cross_label_topk(spark):
 
 
 def test_hard_negatives_max_cosine_routes_out_mislabeled_dups(spark):
-    from bid_evaluation_spark.operators.similarity import hard_negatives
+    from bid_evaluation_ext.operators.similarity import hard_negatives
     rows = [
         (0, [1.0, 0.0], 0),
         (1, [1.0, 0.001], 1),      # near-identical, different label
@@ -41,7 +41,7 @@ def test_hard_negatives_kernel_matches_join_engine(spark):
     bit-identical, same tie-breaks) on a messy corpus: multiple dims,
     null vectors, null labels, heavy ties, with and without a ceiling."""
     import random
-    from bid_evaluation_spark.operators.similarity import hard_negatives
+    from bid_evaluation_ext.operators.similarity import hard_negatives
     rng = random.Random(12)
     rows = []
     for i in range(240):
@@ -77,7 +77,7 @@ def test_cosine_topk_kernel_matches_join_engine(spark, monkeypatch):
     neighbors — under both exclude_self settings; the env cap must
     route auto back to the join engine."""
     import random
-    from bid_evaluation_spark.operators.similarity import cosine_topk
+    from bid_evaluation_ext.operators.similarity import cosine_topk
     rng = random.Random(7)
     rows = []
     for i in range(150):
@@ -110,7 +110,7 @@ def test_cosine_topk_kernel_matches_join_engine(spark, monkeypatch):
 
 
 def test_hard_negatives_auto_falls_back_above_anchor_cap(spark):
-    from bid_evaluation_spark.operators.similarity import hard_negatives
+    from bid_evaluation_ext.operators.similarity import hard_negatives
     rows = [(i, [1.0, float(i)], i % 2) for i in range(8)]
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label int")

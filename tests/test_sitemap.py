@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import gzip
 
-from bid_evaluation_spark.operators.sitemap import (
+from bid_evaluation_ext.operators.sitemap import (
     parse_sitemap,
     sitemap_entries,
     write_sitemapindex,
@@ -99,7 +99,7 @@ def test_sitemap_entries_kernel(spark):
 
 
 def test_writer_escapes_special_chars_roundtrip():
-    from bid_evaluation_spark.operators.sitemap import (
+    from bid_evaluation_ext.operators.sitemap import (
         parse_sitemap, write_sitemapindex, write_urlset)
     urls = [{"loc": "https://e.com/s?a=1&b=<2>", "changefreq": "daily"},
             {"loc": 'https://e.com/"q"&x'}]

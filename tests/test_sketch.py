@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.sketch import (
+from bid_evaluation_ext.operators.sketch import (
     cms_build, cms_lookup, cms_topk, hll_distinct,
 )
 
@@ -120,7 +120,7 @@ def test_hll_validates_b(spark):
 def test_hll_by_group_matches_per_group_global(spark):
     """The grouped sketch must equal the global sketch run on each group's
     subset — same registers, same estimate."""
-    from bid_evaluation_spark.operators.sketch import (
+    from bid_evaluation_ext.operators.sketch import (
         hll_distinct, hll_distinct_by_group)
 
     rows = [(f"g{i % 3}", f"k{(i * 7) % 40}") for i in range(500)]
@@ -143,7 +143,7 @@ def test_hll_by_group_matches_per_group_global(spark):
 def test_cms_topk_by_group_matches_per_group_global(spark):
     """Grouped CMS top-k must equal the global cms_topk run on each
     group's subset (same cells, same estimates, same ranking)."""
-    from bid_evaluation_spark.operators.sketch import (
+    from bid_evaluation_ext.operators.sketch import (
         cms_topk, cms_topk_by_group)
 
     rows = [("g0", "alpha beta alpha gamma alpha beta"),
@@ -169,7 +169,7 @@ class TestHllOverlap:
                                      "k string")
 
     def test_estimates_track_exact_overlap(self, spark):
-        from bid_evaluation_spark.operators.sketch import hll_overlap
+        from bid_evaluation_ext.operators.sketch import hll_overlap
 
         a = self._corpus(spark, 0, 3000)       # |A|=3000
         b = self._corpus(spark, 2000, 5000)    # |B|=3000, overlap 1000
@@ -182,7 +182,7 @@ class TestHllOverlap:
         assert out["jaccard"] == pytest.approx(want_j, abs=0.08)
 
     def test_disjoint_and_identical(self, spark):
-        from bid_evaluation_spark.operators.sketch import hll_overlap
+        from bid_evaluation_ext.operators.sketch import hll_overlap
 
         a = self._corpus(spark, 0, 2000)
         d = self._corpus(spark, 10000, 12000)

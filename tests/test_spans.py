@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from bid_evaluation_spark.operators.spans import (
+from bid_evaluation_ext.operators.spans import (
     duplicated_span_stats,
     span_occurrences,
 )
@@ -100,7 +100,7 @@ def test_keep_first_position_order_within_huge_doc(spark):
 
 
 def test_removal_cuts_exactly_the_covered_tokens(spark):
-    from bid_evaluation_spark.operators.spans import (
+    from bid_evaluation_ext.operators.spans import (
         remove_duplicated_spans)
     rows = [
         (0, "a b c d e f g h"),                 # first occurrence kept
@@ -123,7 +123,7 @@ def test_removal_cuts_exactly_the_covered_tokens(spark):
 
 
 def test_removal_intra_doc_repeat_keeps_first_copy(spark):
-    from bid_evaluation_spark.operators.spans import (
+    from bid_evaluation_ext.operators.spans import (
         remove_duplicated_spans)
     # the SAME 4-gram twice inside one doc: the first stays, the
     # second is cut (keep-first is positional, not per-document)
@@ -136,7 +136,7 @@ def test_removal_intra_doc_repeat_keeps_first_copy(spark):
 
 
 def test_removal_is_plan_native(spark):
-    from bid_evaluation_spark.operators.spans import (
+    from bid_evaluation_ext.operators.spans import (
         remove_duplicated_spans)
     df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
     plan = remove_duplicated_spans(df)._jdf.queryExecution() \

@@ -5,7 +5,7 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.spatial import radius_join
+from bid_evaluation_ext.operators.spatial import radius_join
 
 
 def _pairs(spark, pts, r):
@@ -60,7 +60,7 @@ def test_nulls_excluded_and_validation(spark):
 
 
 def test_dbscan_two_blobs_and_noise(spark):
-    from bid_evaluation_spark.operators.spatial import dbscan
+    from bid_evaluation_ext.operators.spatial import dbscan
 
     rows = []
     # blob A: 5 tight points at (0,0); blob B: 5 at (100,100); 1 outlier
@@ -82,7 +82,7 @@ def test_dbscan_two_blobs_and_noise(spark):
 
 
 def test_dbscan_border_attaches_to_min_cluster(spark):
-    from bid_evaluation_spark.operators.spatial import dbscan
+    from bid_evaluation_ext.operators.spatial import dbscan
 
     # 3 cores in a row (cluster), one point reachable from one core only
     rows = [(1, 0.0, 0.0), (2, 0.5, 0.0), (3, 1.0, 0.0),
@@ -98,7 +98,7 @@ def test_dbscan_border_attaches_to_min_cluster(spark):
 
 
 def test_dbscan_no_cores_all_noise(spark):
-    from bid_evaluation_spark.operators.spatial import dbscan
+    from bid_evaluation_ext.operators.spatial import dbscan
 
     rows = [(1, 0.0, 0.0), (2, 50.0, 0.0), (3, 100.0, 0.0)]
     df = spark.createDataFrame(rows, "id long, x double, y double")
@@ -118,7 +118,7 @@ def _hav(a, b):
 
 
 def test_geo_radius_join_matches_bruteforce(spark):
-    from bid_evaluation_spark.operators.spatial import geo_radius_join
+    from bid_evaluation_ext.operators.spatial import geo_radius_join
 
     pts = [(i, ((i * 13) % 140) - 70.0 + (i % 7) * 0.01,
             ((i * 29) % 360) - 180.0 + (i % 5) * 0.01)
@@ -132,7 +132,7 @@ def test_geo_radius_join_matches_bruteforce(spark):
 
 
 def test_geo_radius_join_antimeridian_and_distance(spark):
-    from bid_evaluation_spark.operators.spatial import geo_radius_join
+    from bid_evaluation_ext.operators.spatial import geo_radius_join
 
     pts = [(1, 0.0, 179.9), (2, 0.0, -179.9),   # ~22 km across the seam
            (3, 0.0, 0.0)]
@@ -154,7 +154,7 @@ def test_geo_radius_join_high_latitude_band_edge(spark):
     2·asin(sin(d/2R)/cos φ) exceeds it, and an in-radius pair could land
     2 cells apart and silently drop. Dense lat~80° grid at the 100-km
     band edges, brute-force differential."""
-    from bid_evaluation_spark.operators.spatial import geo_radius_join
+    from bid_evaluation_ext.operators.spatial import geo_radius_join
 
     pts = []
     i = 0
@@ -179,7 +179,7 @@ def test_dbscan_string_ids_no_core_pairs(spark):
     """Round-7 regression (ADVICE): with no core-core pairs the empty
     clusters frame must inherit the input's id TYPE — a hardcoded long
     schema broke the join for string ids."""
-    from bid_evaluation_spark.operators.spatial import dbscan
+    from bid_evaluation_ext.operators.spatial import dbscan
 
     rows = [("a", 0.0, 0.0), ("b", 50.0, 0.0), ("c", 100.0, 0.0)]
     df = spark.createDataFrame(rows, "id string, x double, y double")
@@ -200,7 +200,7 @@ def test_dbscan_string_ids_no_core_pairs(spark):
 
 
 def test_geo_radius_join_excludes_poles(spark):
-    from bid_evaluation_spark.operators.spatial import geo_radius_join
+    from bid_evaluation_ext.operators.spatial import geo_radius_join
 
     pts = [(1, 89.0, 0.0), (2, 89.0, 10.0), (3, 50.0, 0.0),
            (4, 50.0, 0.1)]

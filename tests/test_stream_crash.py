@@ -21,11 +21,11 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.streaming.hashdup import StreamingHashNearDup
-from bid_evaluation_spark.streaming.ivf import StreamingIVFIndex
-from bid_evaluation_spark.streaming.neardup import StreamingNearDup
-from bid_evaluation_spark.streaming.rollup import StreamingRollup
-from bid_evaluation_spark.streaming.sketch import StreamingSketch
+from bid_evaluation_ext.streaming.hashdup import StreamingHashNearDup
+from bid_evaluation_ext.streaming.ivf import StreamingIVFIndex
+from bid_evaluation_ext.streaming.neardup import StreamingNearDup
+from bid_evaluation_ext.streaming.rollup import StreamingRollup
+from bid_evaluation_ext.streaming.sketch import StreamingSketch
 
 
 class _Crash(RuntimeError):

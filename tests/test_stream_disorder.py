@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from bid_evaluation_spark.streaming.disorder import (DisorderMonitor,
+from bid_evaluation_ext.streaming.disorder import (DisorderMonitor,
                                                      disorder_monitor_stream)
 
 
@@ -27,7 +27,7 @@ def test_monitor_lateness_vs_prebatch_mark(spark):
 
 def test_monitor_matches_batch_profiler_at_batch_granularity(spark):
     """Concatenated emissions == event_disorder with arrival = batch idx."""
-    from bid_evaluation_spark.operators.timeseries import event_disorder
+    from bid_evaluation_ext.operators.timeseries import event_disorder
 
     batches = [
         [("a", 100.0), ("a", 90.0), ("b", 5.0)],
@@ -122,7 +122,7 @@ def test_state_store_variant_survives_checkpoint_restart(spark, tmp_path):
     """streaming_disorder_by_key: the high-water mark persists in the
     state store, so a stop/restart replay measures post-restart lateness
     against the PRE-restart mark — no under-report after resume."""
-    from bid_evaluation_spark.streaming.stateful import (
+    from bid_evaluation_ext.streaming.stateful import (
         streaming_disorder_by_key)
 
     src = str(tmp_path / "src")

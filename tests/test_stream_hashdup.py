@@ -6,7 +6,7 @@ foreachBatch path."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.streaming.hashdup import (
+from bid_evaluation_ext.streaming.hashdup import (
     StreamingHashNearDup,
     hash_neardup_mark_ordered,
 )

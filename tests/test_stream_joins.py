@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.streaming.joins import interval_join
+from bid_evaluation_ext.streaming.joins import interval_join
 
 
 def _ts(m, s=0):

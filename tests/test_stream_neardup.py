@@ -5,8 +5,8 @@ the manifest, shape validation, and the live foreachBatch path."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.dedup import neardup_mark_ordered
-from bid_evaluation_spark.streaming.neardup import StreamingNearDup
+from bid_evaluation_ext.operators.dedup import neardup_mark_ordered
+from bid_evaluation_ext.streaming.neardup import StreamingNearDup
 
 BASES = [
     "the quick brown fox jumps over the lazy dog again and again today",

@@ -5,8 +5,8 @@ foreachBatch path."""
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.sketch import cms_lookup, cms_topk
-from bid_evaluation_spark.streaming.sketch import StreamingSketch
+from bid_evaluation_ext.operators.sketch import cms_lookup, cms_topk
+from bid_evaluation_ext.streaming.sketch import StreamingSketch
 
 
 def _tok_df(spark, texts):
@@ -24,7 +24,7 @@ def test_incremental_merge_equals_one_shot(spark, tmp_path):
         sk.process_batch(_tok_df(spark, texts), batch_id=i)
 
     whole = _tok_df(spark, [t for b in batches for t in b])
-    from bid_evaluation_spark.operators.sketch import cms_build
+    from bid_evaluation_ext.operators.sketch import cms_build
     oneshot = cms_build(whole, "key", depth=3, width=64, seed="s")
     merged = sk.cms()
     assert (merged.exceptAll(oneshot).count() == 0

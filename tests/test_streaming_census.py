@@ -6,16 +6,16 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.mediatype import (
+from bid_evaluation_ext.operators.mediatype import (
     census_counts,
     media_census,
 )
-from bid_evaluation_spark.streaming.census import StreamingMediaCensus
+from bid_evaluation_ext.streaming.census import StreamingMediaCensus
 
 
 def _payload(i: int) -> bytes:
-    from bid_evaluation_spark.operators.png import encode_png
-    from bid_evaluation_spark.operators.wav import encode_wav
+    from bid_evaluation_ext.operators.png import encode_png
+    from bid_evaluation_ext.operators.wav import encode_wav
 
     img = np.full((8, 8), 100, dtype=np.uint8)
     x = 0.2 * np.sin(2 * np.pi * 400 * np.arange(2000) / 8000.0)

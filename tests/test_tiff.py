@@ -8,7 +8,7 @@ import struct
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.tiff import (
+from bid_evaluation_ext.operators.tiff import (
     decode_tiff,
     encode_tiff,
     is_tiff,
@@ -106,8 +106,8 @@ def test_is_tiff_rejects_other_magics():
 
 
 def test_probe_and_image_feature_dispatch(spark):
-    from bid_evaluation_spark.operators.probe import probe_payload
-    from bid_evaluation_spark.operators.multimodal import (
+    from bid_evaluation_ext.operators.probe import probe_payload
+    from bid_evaluation_ext.operators.multimodal import (
         extract_image_features)
     gray = encode_tiff(_gray(12, 18), packbits=True)
     got = probe_payload(gray)
@@ -124,7 +124,7 @@ def test_probe_and_image_feature_dispatch(spark):
 
 
 def test_orientation_tag_roundtrip_and_ifd0():
-    from bid_evaluation_spark.operators.tiff import (
+    from bid_evaluation_ext.operators.tiff import (
         T_ORIENTATION, tiff_ifd0)
     img = _gray(6, 9)
     data = encode_tiff(img, orientation=6, packbits=True)

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.timeseries import (
+from bid_evaluation_ext.operators.timeseries import (
     bucket_aggregate, gapfill, time_bucket)
 
 
@@ -105,7 +105,7 @@ def test_gapfill_fill_validation(series):
 
 
 def test_retention_cohorts_golden(spark):
-    from bid_evaluation_spark.operators.timeseries import retention_cohorts
+    from bid_evaluation_ext.operators.timeseries import retention_cohorts
     from datetime import datetime
 
     def t(day):
@@ -139,7 +139,7 @@ class TestConcurrencyTimeline:
         return {t: sum(1 for s, e in intervals if s <= t <= e) for t in ts}
 
     def test_crafted_and_random(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             concurrency_timeline)
         import random
 
@@ -159,7 +159,7 @@ class TestConcurrencyTimeline:
             assert got == self._brute(intervals)
 
     def test_invalid_rows_dropped(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             concurrency_timeline)
 
         df = spark.createDataFrame(
@@ -183,7 +183,7 @@ class TestMergeIntervals:
         return sorted((s, e, n) for s, e, n in out)
 
     def test_crafted_and_random(self, spark):
-        from bid_evaluation_spark.operators.timeseries import merge_intervals
+        from bid_evaluation_ext.operators.timeseries import merge_intervals
         import random
 
         crafted = {"a": [(0.0, 5.0), (5.0, 9.0),       # touching -> merge
@@ -207,7 +207,7 @@ class TestMergeIntervals:
                 assert sorted(got[k]) == self._brute(ivs), k
 
     def test_invalid_rows_dropped(self, spark):
-        from bid_evaluation_spark.operators.timeseries import merge_intervals
+        from bid_evaluation_ext.operators.timeseries import merge_intervals
 
         df = spark.createDataFrame(
             [("a", 0.0, 5.0), ("a", 9.0, 1.0), ("a", None, 3.0)],
@@ -220,7 +220,7 @@ def test_ewma_by_key(spark):
     """EWMA recurrence vs a python replay; nulls excluded; bad alpha."""
     import pytest as _pytest
 
-    from bid_evaluation_spark.operators.timeseries import ewma_by_key
+    from bid_evaluation_ext.operators.timeseries import ewma_by_key
 
     rows = [(1, float(i), i, v) for i, v in
             enumerate([10.0, 20.0, 5.0, None, 40.0])]
@@ -249,8 +249,8 @@ def test_streaming_ewma_matches_batch(spark, tmp_path):
     arrive in time order — one double of state crosses the boundary."""
     import time as _time
 
-    from bid_evaluation_spark.operators.timeseries import ewma_by_key
-    from bid_evaluation_spark.streaming.stateful import streaming_ewma_by_key
+    from bid_evaluation_ext.operators.timeseries import ewma_by_key
+    from bid_evaluation_ext.streaming.stateful import streaming_ewma_by_key
 
     schema = "user_id long, ts double, event_id long, value double"
     rows = [(1, float(i), i, float(v)) for i, v in
@@ -285,7 +285,7 @@ class TestCusumByKey:
             rows, "k string, ts double, eid long, v double")
 
     def test_known_recurrence(self, spark):
-        from bid_evaluation_spark.operators.timeseries import cusum_by_key
+        from bid_evaluation_ext.operators.timeseries import cusum_by_key
 
         # target 10, slack 1: x-11 on the upside, 9-x on the downside
         df = self._events(spark, [10, 14, 14, 6, 6, 6])
@@ -301,7 +301,7 @@ class TestCusumByKey:
             [False, False, True, False, True, True]
 
     def test_in_control_stays_flat(self, spark):
-        from bid_evaluation_spark.operators.timeseries import cusum_by_key
+        from bid_evaluation_ext.operators.timeseries import cusum_by_key
 
         df = self._events(spark, [10.0, 10.4, 9.7, 10.2, 9.9] * 4)
         out = cusum_by_key(df, "k", "ts", "v", "eid",
@@ -311,7 +311,7 @@ class TestCusumByKey:
                    for r in out)
 
     def test_small_persistent_shift_alarms(self, spark):
-        from bid_evaluation_spark.operators.timeseries import cusum_by_key
+        from bid_evaluation_ext.operators.timeseries import cusum_by_key
 
         # +2 shift, under the slack+z radar per-point, accumulates
         df = self._events(spark, [10.0] * 5 + [12.0] * 20)
@@ -324,7 +324,7 @@ class TestCusumByKey:
     def test_keys_independent_and_validation(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.timeseries import cusum_by_key
+        from bid_evaluation_ext.operators.timeseries import cusum_by_key
 
         a = self._events(spark, [100.0] * 3, key="a")
         b = self._events(spark, [0.0] * 3, key="b")
@@ -346,8 +346,8 @@ def test_streaming_cusum_matches_batch(spark, tmp_path):
     arrive in time order — two doubles of state cross the boundary."""
     import time as _time
 
-    from bid_evaluation_spark.operators.timeseries import cusum_by_key
-    from bid_evaluation_spark.streaming.stateful import (
+    from bid_evaluation_ext.operators.timeseries import cusum_by_key
+    from bid_evaluation_ext.streaming.stateful import (
         streaming_cusum_by_key)
 
     schema = "user_id long, ts double, event_id long, value double"
@@ -384,7 +384,7 @@ def test_streaming_cusum_matches_batch(spark, tmp_path):
 
 class TestSeasonalNaiveBacktest:
     def test_known_values(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             seasonal_naive_backtest)
 
         # season 2 over [1,2,3,4,5,6]: forecasts 1,2,3,4 for rows 3..6
@@ -398,7 +398,7 @@ class TestSeasonalNaiveBacktest:
         assert out["mase"] == pytest.approx(2.0)  # naive errors are 1
 
     def test_perfectly_seasonal_series_scores_zero(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             seasonal_naive_backtest)
 
         pattern = [10.0, 20.0, 30.0]
@@ -412,7 +412,7 @@ class TestSeasonalNaiveBacktest:
     def test_short_and_constant_keys(self, spark):
         import pytest as _pt
 
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             seasonal_naive_backtest)
 
         rows = ([("short", float(i), i, float(i)) for i in range(2)]
@@ -436,7 +436,7 @@ class TestEventTransitions:
             rows, "k string, ts double, eid long, state string")
 
     def test_known_counts_and_probs(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             event_transitions)
 
         df = self._chain(spark, ["a", "b", "a", "b", "b"])
@@ -450,7 +450,7 @@ class TestEventTransitions:
         assert ("b", None) not in out
 
     def test_no_cross_key_transitions(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             event_transitions)
 
         a = self._chain(spark, ["x", "x"], key="a")
@@ -463,7 +463,7 @@ class TestEventTransitions:
     def test_entropy_rate_extremes(self, spark):
         import math
 
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             event_transitions, transition_entropy_rate)
 
         # deterministic cycle -> entropy 0
@@ -484,7 +484,7 @@ class TestEventTransitions:
 class TestKaplanMeier:
     def test_textbook_curve(self, spark):
         """Classic small example: events at 1, 3; censor at 2."""
-        from bid_evaluation_spark.operators.timeseries import kaplan_meier
+        from bid_evaluation_ext.operators.timeseries import kaplan_meier
 
         rows = [(1.0, True), (2.0, False), (3.0, True), (3.0, True),
                 (4.0, False)]
@@ -503,7 +503,7 @@ class TestKaplanMeier:
         assert out[4.0]["survival"] == pytest.approx(0.8 / 3)
 
     def test_no_censoring_matches_empirical(self, spark):
-        from bid_evaluation_spark.operators.timeseries import kaplan_meier
+        from bid_evaluation_ext.operators.timeseries import kaplan_meier
 
         durs = [1.0, 2.0, 2.0, 3.0, 5.0]
         df = spark.createDataFrame([(d, True) for d in durs],
@@ -517,7 +517,7 @@ class TestKaplanMeier:
     def test_monotone_nonincreasing(self, spark):
         import numpy as np
 
-        from bid_evaluation_spark.operators.timeseries import kaplan_meier
+        from bid_evaluation_ext.operators.timeseries import kaplan_meier
 
         rng = np.random.RandomState(4)
         rows = [(float(rng.randint(1, 30)), bool(rng.rand() < 0.7))
@@ -532,7 +532,7 @@ class TestKaplanMeier:
 
 class TestKmSummary:
     def test_known_curve(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             kaplan_meier, km_summary)
 
         # no censoring, durations 1..4: S = .75, .5, .25, 0
@@ -545,7 +545,7 @@ class TestKmSummary:
         assert out["rmst"] == pytest.approx(2.5)
 
     def test_heavy_censoring_median_null_rmst_defined(self, spark):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             kaplan_meier, km_summary)
 
         # one early event among many censored: S never reaches 0.5
@@ -562,7 +562,7 @@ class TestKmSummary:
 
 class TestAcfByKey:
     def _acf(self, spark, rows, lags=(1, 2)):
-        from bid_evaluation_spark.operators.timeseries import acf_by_key
+        from bid_evaluation_ext.operators.timeseries import acf_by_key
 
         df = spark.createDataFrame(rows, "k string, t long, v double")
         return {(r["k"], r["lag"]): (r["n_pairs"], r["acf"])
@@ -609,7 +609,7 @@ class TestAcfByKey:
 
 class TestHoltByKey:
     def _holt(self, spark, vals, alpha=0.3, beta=0.1):
-        from bid_evaluation_spark.operators.timeseries import holt_by_key
+        from bid_evaluation_ext.operators.timeseries import holt_by_key
 
         rows = [("k", float(t), t, v) for t, v in enumerate(vals)]
         df = spark.createDataFrame(rows,
@@ -657,7 +657,7 @@ class TestHoltByKey:
                              len(rows), rnd.uniform(-50, 50)))
         rnd.shuffle(rows)
         df = spark.createDataFrame(rows, "u int, ts double, e long, v double")
-        from bid_evaluation_spark.operators.timeseries import holt_by_key
+        from bid_evaluation_ext.operators.timeseries import holt_by_key
         got = {r["e"]: (r["level"], r["trend"], r["forecast_next"])
                for r in holt_by_key(df, "u", "ts", "v", "e").collect()}
         a, b = 0.3, 0.1
@@ -677,7 +677,7 @@ class TestHoltByKey:
                 assert got[e] == (lvl, tr, lvl + tr), (k, e)
 
     def test_nulls_excluded_and_validation(self, spark):
-        from bid_evaluation_spark.operators.timeseries import holt_by_key
+        from bid_evaluation_ext.operators.timeseries import holt_by_key
 
         df = spark.createDataFrame(
             [("k", 1.0, 1, None), ("k", 2.0, 2, 4.0)],
@@ -693,7 +693,7 @@ class TestHoltByKey:
 
 class TestTrendTest:
     def _tt(self, spark, rows):
-        from bid_evaluation_spark.operators.timeseries import trend_test
+        from bid_evaluation_ext.operators.timeseries import trend_test
 
         df = spark.createDataFrame(rows, "g string, x double, y double")
         return {r["g"]: r.asDict()
@@ -737,7 +737,7 @@ class TestTrendTest:
         inputs back to the join engine."""
         import random
 
-        from bid_evaluation_spark.operators.timeseries import trend_test
+        from bid_evaluation_ext.operators.timeseries import trend_test
 
         rnd = random.Random(98)
         rows = []
@@ -766,7 +766,7 @@ class TestTrendTest:
 
 class TestSeasonalDecompose:
     def _sd(self, spark, vals, period=3):
-        from bid_evaluation_spark.operators.timeseries import (
+        from bid_evaluation_ext.operators.timeseries import (
             seasonal_decompose)
 
         rows = [("k", t, v) for t, v in enumerate(vals)]
@@ -803,7 +803,7 @@ class TestSeasonalDecompose:
 
 class TestNelsonAalen:
     def test_hand_computed(self, spark):
-        from bid_evaluation_spark.operators.timeseries import nelson_aalen
+        from bid_evaluation_ext.operators.timeseries import nelson_aalen
 
         rows = [(1.0, True), (2.0, True), (2.0, False), (3.0, True)]
         df = spark.createDataFrame(rows, "dur double, ev boolean")
@@ -821,7 +821,7 @@ class TestNelsonAalen:
                                                        abs=1e-4)
 
     def test_censoring_reduces_risk_only(self, spark):
-        from bid_evaluation_spark.operators.timeseries import nelson_aalen
+        from bid_evaluation_ext.operators.timeseries import nelson_aalen
 
         rows = [(1.0, False)] * 3 + [(2.0, True)]
         df = spark.createDataFrame(rows, "dur double, ev boolean")
@@ -839,7 +839,7 @@ def test_ewma_cusum_step_kernels_match_sequential(spark):
     ts ties, shuffled input)."""
     import random
 
-    from bid_evaluation_spark.operators.timeseries import (
+    from bid_evaluation_ext.operators.timeseries import (
         cusum_by_key, ewma_by_key)
 
     rnd = random.Random(1214)
@@ -885,7 +885,7 @@ def test_acf_kernel_matches_agg_engine(spark):
     # (nulls for short/constant/all-null series in both)
     import random
 
-    from bid_evaluation_spark.operators.timeseries import acf_by_key
+    from bid_evaluation_ext.operators.timeseries import acf_by_key
     rng = random.Random(5)
     rows = []
     for k in ("a", "b", "c", "d"):

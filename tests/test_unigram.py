@@ -7,7 +7,7 @@ import math
 
 import pytest
 
-from bid_evaluation_spark.operators.unigram import (
+from bid_evaluation_ext.operators.unigram import (
     _forward_backward,
     unigram_token_stats,
     unigram_train,
@@ -83,7 +83,7 @@ def test_token_stats_kernel(planted, spark):
 
 
 def test_driver_vocab_cap_guards_collects(planted):
-    from bid_evaluation_spark.operators.unigram import unigram_train
+    from bid_evaluation_ext.operators.unigram import unigram_train
     # the planted corpus has ~15 distinct chars + multi-char pieces:
     # a cap of 10 must trip on the seed vocabulary, not melt the driver
     with pytest.raises(ValueError, match="driver_vocab_cap"):
@@ -116,7 +116,7 @@ def test_local_train_matches_distributed(planted, spark, monkeypatch):
 
 
 def test_seed_vocab_local_matches_sql(planted, spark, monkeypatch):
-    from bid_evaluation_spark.operators.unigram import (
+    from bid_evaluation_ext.operators.unigram import (
         _seed_vocab_local, _words, seed_vocab)
 
     short = spark.createDataFrame(

@@ -6,18 +6,18 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.melspec import (
+from bid_evaluation_ext.operators.melspec import (
     log_mel_spectrogram,
     mel_features,
     mel_filterbank,
 )
-from bid_evaluation_spark.operators.vad import (
+from bid_evaluation_ext.operators.vad import (
     frame_rms_db,
     speech_segments,
     speech_ratio,
     vad_segments,
 )
-from bid_evaluation_spark.operators.wav import encode_wav
+from bid_evaluation_ext.operators.wav import encode_wav
 
 RATE = 8000
 

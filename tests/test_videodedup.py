@@ -7,13 +7,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-from bid_evaluation_spark.operators.phash import phash64
-from bid_evaluation_spark.operators.videodedup import (
+from bid_evaluation_ext.operators.avi import encode_avi_mjpeg
+from bid_evaluation_ext.operators.phash import phash64
+from bid_evaluation_ext.operators.videodedup import (
     shot_phashes,
     video_neardup,
 )
-from bid_evaluation_spark.operators.y4m import encode_y4m
+from bid_evaluation_ext.operators.y4m import encode_y4m
 
 
 def _textured(bin_idx: int, k: int) -> np.ndarray:
@@ -45,7 +45,7 @@ def test_shot_phashes_manifest_and_hashes(spark):
     assert all(rows[i]["shot_len"] == 3 for i in range(3))
     # hash equals phash64 of the shot's first DECODED frame — recompute
     # through the same codec chain
-    from bid_evaluation_spark.operators.avi import decode_avi
+    from bid_evaluation_ext.operators.avi import decode_avi
     _, _, _, _, frames = decode_avi(payload)
     for i in range(3):
         assert rows[i]["phash"] == phash64(frames[3 * i])
@@ -108,7 +108,7 @@ def test_streaming_shot_dedup_composition(spark, tmp_path):
     the persisted band-bucket state (StreamingHashNearDup) keyed by
     shot_uid — re-ingesting a clip whose shots were already seen flags
     every shot as a duplicate, across batch (and restart) boundaries."""
-    from bid_evaluation_spark.streaming.hashdup import StreamingHashNearDup
+    from bid_evaluation_ext.streaming.hashdup import StreamingHashNearDup
 
     state = StreamingHashNearDup(spark, str(tmp_path / "state"),
                                  id_col="shot_uid", hash_col="phash")

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.videofp import (
+from bid_evaluation_ext.operators.videofp import (
     video_dhash_frames,
     video_neardup_pairs,
     video_signature,
@@ -33,8 +33,8 @@ def test_signature_majority_semantics(spark):
 
 
 def test_container_invariance_and_corrupt(spark):
-    from bid_evaluation_spark.operators.avi import encode_avi_mjpeg
-    from bid_evaluation_spark.operators.y4m import encode_y4m
+    from bid_evaluation_ext.operators.avi import encode_avi_mjpeg
+    from bid_evaluation_ext.operators.y4m import encode_y4m
 
     # MJPEG needs MCU-aligned dims for bit-exactness → use 16x24
     frames = []
@@ -61,9 +61,24 @@ def test_container_invariance_and_corrupt(spark):
 
 
 def test_registry_query_shape(spark):
-    from __spark_entry__ import queries
+    """One signature per document for the 9x8 Y4M corpus the
+    ``mm_video_signature_documents`` registry query used to build:
+    nf = 2 + doc_id % 4 frames of :func:`_frames`."""
+    import pandas as pd
 
-    fn = queries()["mm_video_signature_documents"]
-    out = fn(spark, "/root/testdata/sf0.001").collect()
+    from bid_evaluation_ext.operators.y4m import encode_y4m
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .select("doc_id").repartition(spark.sparkContext.defaultParallelism)
+
+    def gen(batches):
+        for pdf in batches:
+            payloads = [encode_y4m(_frames(2 + int(d) % 4, int(d)),
+                                   fps_num=5, fps_den=1, mono=True)
+                        for d in pdf["doc_id"]]
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    out = video_signature(video_dhash_frames(media, strict=True)).collect()
     assert len(out) == 500
     assert all(r["n_frames"] in (2, 3, 4, 5) for r in out)

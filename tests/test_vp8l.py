@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators.vp8l import (
+from bid_evaluation_ext.operators.vp8l import (
     _DIST_MAP,
     _BitWriter,
     _emit,
@@ -16,7 +16,7 @@ from bid_evaluation_spark.operators.vp8l import (
     decode_webp_lossless,
     encode_webp_lossless,
 )
-from bid_evaluation_spark.operators.webp import build_webp
+from bid_evaluation_ext.operators.webp import build_webp
 
 
 def _expand(e):
@@ -195,8 +195,8 @@ def test_corruption_and_lossy_contracts():
 
 
 def test_image_dispatch_lights_up_for_webp(spark):
-    from bid_evaluation_spark.operators.multimodal import image_dhash
-    from bid_evaluation_spark.operators.png import encode_png
+    from bid_evaluation_ext.operators.multimodal import image_dhash
+    from bid_evaluation_ext.operators.png import encode_png
 
     grad = _grad()
     df = spark.createDataFrame(

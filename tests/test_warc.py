@@ -5,7 +5,7 @@ import gzip
 
 import pytest
 
-from bid_evaluation_spark.sources.warc import (
+from bid_evaluation_ext.sources.warc import (
     decode_warc,
     encode_warc,
     read_warc,

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 def test_winnow_coverage_theorem_and_edges(spark):
     """Any shared token run of k+w-1 yields >= 1 shared fingerprint
     (Schleimer et al. guarantee); short docs degrade gracefully."""
-    from bid_evaluation_spark.operators.text import winnow_fingerprints
+    from bid_evaluation_ext.operators.text import winnow_fingerprints
 
     rows = [(1, "a b c d e f g h"),
             (2, "x y a b c d e f"),       # shares run "a b c d e f" (k+w-1=6)
@@ -32,7 +32,7 @@ def test_winnow_coverage_theorem_and_edges(spark):
 
 
 def test_corpus_overlap_counts_and_containment(spark):
-    from bid_evaluation_spark.operators.dedup import corpus_overlap
+    from bid_evaluation_ext.operators.dedup import corpus_overlap
 
     a = spark.createDataFrame([(1, "a b c d e"), (2, "f g h i")],
                               "doc_id long, text string")
@@ -53,7 +53,7 @@ def test_corpus_overlap_counts_and_containment(spark):
 
 
 def test_script_profile_classes_and_dominant(spark):
-    from bid_evaluation_spark.operators.text import script_profile
+    from bid_evaluation_ext.operators.text import script_profile
 
     rows = [(1, "hello world 123"), (2, "Привет мир"), (3, "你好世界"),
             (4, "!!! ???"), (5, None), (6, "abc абв")]  # latin/cyr tie -> latin
@@ -76,7 +76,7 @@ def test_script_profile_classes_and_dominant(spark):
 
 
 def test_mmr_diversifies_and_bounds(spark):
-    from bid_evaluation_spark.operators.retrieval import mmr_rerank
+    from bid_evaluation_ext.operators.retrieval import mmr_rerank
 
     cands = [
         (1, 10, 0.95, [1.0, 0.0, 0.0]),
@@ -109,7 +109,7 @@ def test_mmr_diversifies_and_bounds(spark):
 def test_mmr_deep_select_k_stays_tractable(spark):
     # per-round localCheckpoint truncates lineage; before it, plan size
     # grew ~exponentially in select_k and k=10 was effectively unrunnable
-    from bid_evaluation_spark.operators.retrieval import mmr_rerank
+    from bid_evaluation_ext.operators.retrieval import mmr_rerank
 
     rows = [(1, i, 1.0 - i * 0.01,
              [float(i % 4 == j) for j in range(4)]) for i in range(12)]
@@ -122,7 +122,7 @@ def test_mmr_deep_select_k_stays_tractable(spark):
 
 
 def test_lsh_recall_report_counts(spark):
-    from bid_evaluation_spark.operators.dedup import lsh_recall_report
+    from bid_evaluation_ext.operators.dedup import lsh_recall_report
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g"),   # J = 5/7 >= 0.5
@@ -167,7 +167,7 @@ def test_lsh_recall_report_counts(spark):
 def test_token_entropy_values_and_edges(spark):
     import math as _m
 
-    from bid_evaluation_spark.operators.text import token_entropy
+    from bid_evaluation_ext.operators.text import token_entropy
 
     docs = spark.createDataFrame(
         [(1, "a a a a"),          # constant -> H = 0, norm null (1 distinct)
@@ -188,7 +188,7 @@ def test_token_entropy_values_and_edges(spark):
 
 
 def test_winnow_candidate_pairs_cap_and_threshold(spark):
-    from bid_evaluation_spark.operators.text import winnow_candidate_pairs
+    from bid_evaluation_ext.operators.text import winnow_candidate_pairs
 
     # docs 1,2 share a long run (many shared fingerprints); 3 is disjoint
     docs = spark.createDataFrame(

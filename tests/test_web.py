@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark.operators.web import domain_counts, with_url_features
+from bid_evaluation_ext.operators.web import domain_counts, with_url_features
 
 
 def _urls(spark):
@@ -90,7 +90,7 @@ def test_domain_counts_top_k(spark):
 
 
 def test_canonical_url_normalizations(spark):
-    from bid_evaluation_spark.operators.web import canonical_url
+    from bid_evaluation_ext.operators.web import canonical_url
 
     df = spark.createDataFrame(
         [
@@ -119,7 +119,7 @@ def test_canonical_url_normalizations(spark):
 
 
 def test_url_dedup_keep_min(spark):
-    from bid_evaluation_spark.operators.web import url_dedup
+    from bid_evaluation_ext.operators.web import url_dedup
 
     df = spark.createDataFrame(
         [

@@ -5,7 +5,7 @@ import tarfile
 
 import pytest
 
-from bid_evaluation_spark.sources.webdataset import (
+from bid_evaluation_ext.sources.webdataset import (
     decode_tar_shard,
     encode_tar_shard,
     read_webdataset,

@@ -3,7 +3,7 @@ census route, kernel."""
 
 from __future__ import annotations
 
-from bid_evaluation_spark.operators.webp import (
+from bid_evaluation_ext.operators.webp import (
     build_webp,
     parse_webp_inventory,
     webp_inventory,
@@ -41,7 +41,7 @@ def test_junk_and_truncation():
 
 
 def test_sniffer_routes_webp():
-    from bid_evaluation_spark.operators.mediatype import sniff_media_type
+    from bid_evaluation_ext.operators.mediatype import sniff_media_type
     assert sniff_media_type(build_webp("lossy")) \
         == ("image", "webp", "lossy")
     assert sniff_media_type(build_webp("extended")) \
@@ -60,7 +60,7 @@ def test_kernel(spark):
 def test_first_chunk_sniff_is_constant_work():
     # ADVICE r11: the census sniff reads only the first chunk fourcc;
     # a truncated chunk body no longer hides the format tier.
-    from bid_evaluation_spark.operators.webp import sniff_webp_format
+    from bid_evaluation_ext.operators.webp import sniff_webp_format
     assert sniff_webp_format(build_webp("lossless")) == "lossless"
     assert sniff_webp_format(build_webp("lossy")[:20]) == "lossy"
     assert sniff_webp_format(b"RIFF\x00\x00\x00\x00WEBPJUNK") is None
@@ -68,7 +68,7 @@ def test_first_chunk_sniff_is_constant_work():
 
 
 def test_animation_timeline_walk():
-    from bid_evaluation_spark.operators.webp import (
+    from bid_evaluation_ext.operators.webp import (
         build_webp_animation, parse_webp_animation)
 
     p = build_webp_animation(
@@ -92,7 +92,7 @@ def test_animation_timeline_walk():
 
 
 def test_animation_kernel(spark):
-    from bid_evaluation_spark.operators.webp import (
+    from bid_evaluation_ext.operators.webp import (
         build_webp_animation, webp_animation_inventory)
 
     rows = [(0, build_webp_animation([(0, 0, 8, 8, 100)] * 2,

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from bid_evaluation_spark.operators import y4m as Y
+from bid_evaluation_ext.operators import y4m as Y
 
 
 def _frames(n=4, w=8, h=6):
