@@ -90,8 +90,6 @@ def main(argv=None, spark=None) -> int:
                                     statistics=evaluator.get_statistics())
             else:
                 raise SystemExit(f"unsupported output format: {args.output}")
-        if args.staged:
-            evaluator.release()
         return 0
     finally:
         if owns_session:

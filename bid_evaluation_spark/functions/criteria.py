@@ -1,12 +1,15 @@
-"""Criterion types as Spark Column-expression factories.
+"""Criterion types as SQL expression emitters.
 
 Reference semantics: ``bid_evaluation/criteria.py`` (six criterion classes that
 transform one pandas Series into weighted 0–100-ish scores). Here each
-criterion is a factory ``(Column, stats) -> Column`` producing a pure Spark
-expression — statistics are pre-computed by one fused aggregation
-(:mod:`..plans.stats`) and inlined as literals, so every criterion's scoring
-stays inside whole-stage codegen. Only :class:`CustomCriterion` (user-supplied
-Python) leaves the JVM, and then via an Arrow-vectorized ``pandas_udf``.
+criterion emits the SQL text of its score, ``(value_sql, stats) -> str``,
+where ``stats`` maps statistic names to SQL text. The plan builder
+(:mod:`..plans.pipeline`) passes window aggregates over the stage's active
+rows there, so a criterion reads its statistics inside the same lazy plan
+that scores, ranks and sorts, and every score stays in whole-stage codegen.
+Python-scored criteria — :class:`CustomCriterion` and formulas outside the
+translatable grammar — are scored per partition group by the builder's
+Arrow step instead (:meth:`CriterionBase.python_score`).
 
 Exact-parity notes (verified against the reference by execution — SURVEY §1.4):
 
@@ -17,92 +20,80 @@ Exact-parity notes (verified against the reference by execution — SURVEY §1.4
   (``criteria.py:36-41``).
 - Threshold: bands are ``[lower, upper)``; unmatched → 0.0; on overlap the
   **last** matching tuple wins (masks applied sequentially, ``criteria.py:70-72``)
-  — so the ``when()`` chain is built with later tuples taking precedence.
+  — so the ``CASE`` chain is built with later tuples taking precedence.
 - Direct: rescale by ``output_scale/input_scale`` only when they differ;
   **no clipping** (a 150 committee score stays 150, ``criteria.py:83-90``).
 - MinimumRatio: ``min/value·100``; requires strictly positive values — the
   reference produces NaN / crashes on zeros (``IntCastingNaNError`` at ranking,
   SURVEY §1.4-8); this engine uses ``try_divide`` so a zero denominator yields
   null cleanly (documented divergence).
-- Formula: see :mod:`.formula` — translated to a native expression when
-  possible, per-row errors → 0.0, then clipped to [0,100] (``criteria.py:123-151``).
+- Formula: see :mod:`.formula` — translated to SQL when possible, per-row
+  errors → 0.0, then clipped to [0,100] (``criteria.py:123-151``).
 - Custom: user fn ``(values: pd.Series, stats: dict) -> pd.Series``, signature
-  preserved exactly; engine passes the collected stats dict into the UDF
-  closure (``criteria.py:154-169``).
+  preserved exactly; it receives the group's active values and their
+  statistics (``criteria.py:154-169``).
 """
 
 from __future__ import annotations
 
-from abc import ABC, abstractmethod
+from abc import ABC
 from typing import Any, Callable, Dict, Mapping, Optional, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
 
-#: statistics may be collected scalars (plain-evaluate: inlined literals that
-#: Catalyst constant-folds) or Columns (batched evaluate: per-batch stats
-#: broadcast-joined back as columns). Criterion expressions are written
-#: uniformly against both.
+from .sql import double, num, value
+
+#: statistic name → SQL text (a window aggregate column in the plan) or a
+#: number; criterion expressions are written against both.
 Stats = Mapping[str, Any]
-
-
-def _lit(v: Any) -> Column:
-    """A double literal/Column; None (empty or all-null column) stays null."""
-    if isinstance(v, Column):
-        return v
-    return F.lit(None).cast("double") if v is None else F.lit(float(v))
-
 
 #: the reference's full statistics bundle (``criteria.py:19-29``)
 ALL_STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
 
 
 class CriterionBase(ABC):
-    """Base criterion: ``(name, weight, **config)`` + a Column factory.
+    """Base criterion: ``(name, weight, **config)`` + a SQL score emitter.
 
     Mirrors the reference's ``CriterionBase`` surface (``criteria.py:10-41``)
-    but produces lazy Column expressions instead of eager Series.
+    but produces lazy SQL expressions instead of eager Series.
     """
 
-    #: whether :meth:`weighted_score` needs the stats bundle (lets the planner
-    #: skip aggregating columns nobody's stats are read from — it still
-    #: computes them for :meth:`Evaluator.get_statistics` parity).
-    needs_stats = True
-
-    #: the statistics this criterion's expression actually reads — the
-    #: ``stats_mode="required"`` scale path aggregates only the union of these
-    #: per column (an exact percentile buffers the whole column, so skipping
-    #: unused quantiles is a real win on wide fact tables). Conservative
-    #: default: everything.
+    #: the statistics this criterion's expression actually reads — the plan
+    #: computes only these. Conservative default: everything.
     required_stat_keys: Sequence[str] = ALL_STAT_KEYS
+
+    #: scored in Python over each partition group (see :meth:`python_score`)
+    #: rather than as a SQL expression
+    python_scored = False
 
     def __init__(self, name: str, weight: float, **config: Any):
         self.name = name
         self.weight = weight
         self.config = config
-        # populated by the evaluator after the stats job, for
-        # get_statistics() parity with reference criteria._statistics
+        # filled by get_statistics(), as reference criteria._statistics
         self._statistics: Dict[str, Optional[float]] = {}
 
-    @abstractmethod
-    def score(self, col: Column, stats: Stats) -> Column:
-        """Unweighted score expression for one column."""
+    def score_sql(self, v: str, stats: Stats) -> str:
+        """Unweighted score of the value column ``v`` (SQL text)."""
+        raise NotImplementedError
 
-    def weighted_score(self, col: Column, stats: Stats) -> Column:
+    def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
+        """Unweighted scores of one group's active ``values``
+        (``python_scored`` criteria only)."""
+        raise NotImplementedError
+
+    def weighted_sql(self, score: str) -> str:
         """Weighted contribution — what lands in ``score_{name}`` columns."""
-        return (self.score(col, stats) * F.lit(float(self.weight))).cast("double")
+        return double(f"({score} * {num(self.weight)})")
 
     @staticmethod
-    def normalize(col: Column, mn: Any, mx: Any, scale: float = 100.0) -> Column:
-        """Min-max normalize to [0, scale]; constant column ⇒ ``scale`` for all
-        (reference ``criteria.py:36-41``). Written as a ``when`` expression so
-        stats may be literals (constant-folded) or per-batch columns."""
-        lo, hi = _lit(mn), _lit(mx)
-        return (
-            F.when(lo.isNull() | hi.isNull() | (hi == lo), F.lit(float(scale)))
-            .otherwise((col - lo) / (hi - lo) * F.lit(float(scale)))
-        )
+    def normalize(v: str, mn: Any, mx: Any, scale: float = 100.0) -> str:
+        """Min-max normalize to [0, scale]; constant or all-null column ⇒
+        ``scale`` for all (reference ``criteria.py:36-41``)."""
+        lo, hi, s = value(mn), value(mx), num(scale)
+        return (f"CASE WHEN ((({lo} IS NULL) OR ({hi} IS NULL)) OR ({hi} = {lo})) THEN {s} "
+                f"ELSE ((({v} - {lo}) / ({hi} - {lo})) * {s}) END")
 
 
 class LinearCriterion(CriterionBase):
@@ -110,17 +101,14 @@ class LinearCriterion(CriterionBase):
 
     required_stat_keys = ("min", "max")
 
-    def score(self, col: Column, stats: Stats) -> Column:
-        higher_is_better = self.config.get("higher_is_better", True)
-        lo, hi = _lit(stats["min"]), _lit(stats["max"])
-        if higher_is_better:
-            return self.normalize(col.cast("double"), lo, hi)
+    def score_sql(self, v: str, stats: Stats) -> str:
+        if self.config.get("higher_is_better", True):
+            return self.normalize(double(v), stats["min"], stats["max"])
         # reference normalizes the negated series: min(-v) = -max(v),
         # max(-v) = -min(v) ⇒ (max - v) / (max - min) * 100
-        return (
-            F.when(lo.isNull() | hi.isNull() | (hi == lo), F.lit(100.0))
-            .otherwise((hi - col.cast("double")) / (hi - lo) * F.lit(100.0))
-        )
+        lo, hi = value(stats["min"]), value(stats["max"])
+        return (f"CASE WHEN ((({lo} IS NULL) OR ({hi} IS NULL)) OR ({hi} = {lo})) THEN 100.0D "
+                f"ELSE ((({hi} - {double(v)}) / ({hi} - {lo})) * 100.0D) END")
 
 
 class ThresholdCriterion(CriterionBase):
@@ -129,19 +117,18 @@ class ThresholdCriterion(CriterionBase):
     Bands are half-open ``[lower, upper)``; values matching no band score 0.0;
     on overlapping bands the last listed tuple wins — the reference applies
     masks sequentially and later writes overwrite earlier ones, so the
-    ``when`` chain here is built by wrapping earlier bands in ``otherwise``.
+    ``CASE`` chain here is built by wrapping earlier bands in ``ELSE``.
     """
 
-    needs_stats = False
     required_stat_keys = ()
 
-    def score(self, col: Column, stats: Stats) -> Column:
+    def score_sql(self, v: str, stats: Stats) -> str:
         thresholds: Sequence[Tuple[float, float, float]] = self.config.get("thresholds", [])
-        expr: Column = F.lit(0.0)
-        v = col.cast("double")
+        expr = "0.0D"
+        x = double(v)
         for lower, upper, band_score in thresholds:
-            mask = (v >= F.lit(float(lower))) & (v < F.lit(float(upper)))
-            expr = F.when(mask, F.lit(float(band_score))).otherwise(expr)
+            mask = f"(({x} >= {num(lower)}) AND ({x} < {num(upper)}))"
+            expr = f"CASE WHEN {mask} THEN {num(band_score)} ELSE {expr} END"
         return expr
 
 
@@ -149,16 +136,14 @@ class DirectScoreCriterion(CriterionBase):
     """Pre-evaluated score, optionally rescaled, never clipped
     (reference ``criteria.py:77-90``)."""
 
-    needs_stats = False
     required_stat_keys = ()
 
-    def score(self, col: Column, stats: Stats) -> Column:
+    def score_sql(self, v: str, stats: Stats) -> str:
         input_scale = self.config.get("input_scale", 100)
         output_scale = self.config.get("output_scale", 100)
-        v = col.cast("double")
         if input_scale != output_scale:
-            v = v * F.lit(float(output_scale) / float(input_scale))
-        return v
+            return f"({double(v)} * {num(float(output_scale) / float(input_scale))})"
+        return double(v)
 
 
 class MinimumRatioCriterion(CriterionBase):
@@ -171,8 +156,8 @@ class MinimumRatioCriterion(CriterionBase):
 
     required_stat_keys = ("min",)
 
-    def score(self, col: Column, stats: Stats) -> Column:
-        return F.try_divide(_lit(stats["min"]), col.cast("double")) * F.lit(100.0)
+    def score_sql(self, v: str, stats: Stats) -> str:
+        return f"(try_divide({value(stats['min'])}, {double(v)}) * 100.0D)"
 
 
 class FormulaCriterion(CriterionBase):
@@ -183,11 +168,11 @@ class FormulaCriterion(CriterionBase):
     ``abs, min, max, sqrt, log, log10, exp, clip``. Per-row evaluation errors
     map to 0.0; results are clipped to [0, 100]; then × weight.
 
-    Execution strategy: translate the formula's AST to a native Column
-    expression (:func:`..functions.formula.formula_to_column`) so it runs
-    JVM-side inside codegen; formulas outside the translatable grammar fall
-    back to an Arrow-batched pandas UDF interpreting the same restricted AST
-    (the reference's simpleeval loop is per-row Python — ``criteria.py:136-149``).
+    Execution strategy: translate the formula's AST to SQL
+    (:func:`..functions.formula.formula_to_sql`) so it runs JVM-side inside
+    codegen; formulas outside the translatable grammar are python-scored by
+    an interpreter of the same restricted AST (the reference's simpleeval
+    loop is per-row Python — ``criteria.py:136-149``).
     """
 
     def __init__(self, name: str, weight: float, formula: str = "value",
@@ -210,30 +195,37 @@ class FormulaCriterion(CriterionBase):
 
     @property
     def translated(self) -> bool:
-        """True when this formula runs on the native Column path; False
-        when :meth:`score` will fall back to the pandas-UDF interpreter
-        (correct either way — this is the observability surface for the
-        silent slow path)."""
+        """True when this formula runs as SQL; False when it is
+        python-scored by the interpreter (correct either way — this is the
+        observability surface for the slow path)."""
         from .formula import formula_translates
 
         if self.config.get("force_udf", False):
             return False
         return formula_translates(self.formula, self.variables)
 
-    def score(self, col: Column, stats: Stats) -> Column:
-        from .formula import formula_score_column
+    @property
+    def python_scored(self) -> bool:  # type: ignore[override]
+        return not self.translated
 
-        return formula_score_column(
-            self.formula, col, stats, self.variables,
-            force_udf=self.config.get("force_udf", False),
-        )
+    def score_sql(self, v: str, stats: Stats) -> str:
+        from .formula import formula_score_sql
+
+        return formula_score_sql(self.formula, v, stats, self.variables)
+
+    def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
+        from .formula import formula_python_scores
+
+        return formula_python_scores(self.formula, values, stats, self.variables)
 
 
 class CustomCriterion(CriterionBase):
     """User-supplied ``(values: pd.Series, stats: dict) -> pd.Series`` function
-    (reference ``criteria.py:154-169``), executed as an Arrow-vectorized
-    pandas UDF with the collected stats dict captured in the closure —
-    the user function body is unchanged from the reference API."""
+    (reference ``criteria.py:154-169``) — the user function body is unchanged
+    from the reference API. The plan calls it once per partition group with
+    the group's active values and their statistics."""
+
+    python_scored = True
 
     def __init__(self, name: str, weight: float,
                  evaluation_function: Callable[[pd.Series, Dict], pd.Series],
@@ -241,47 +233,40 @@ class CustomCriterion(CriterionBase):
         super().__init__(name, weight, **config)
         self.evaluation_function = evaluation_function
 
-    def score(self, col: Column, stats: Stats) -> Column:
-        fn = self.evaluation_function
-        stats_dict = dict(stats)
-
-        @pandas_udf("double")
-        def _score(values: pd.Series) -> pd.Series:
-            return pd.Series(fn(values, stats_dict)).astype("float64")
-
-        return _score(col)
+    def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
+        return pd.Series(self.evaluation_function(values, stats)).astype("float64").to_numpy()
 
 
 # === Built-in named custom functions (reference ``evaluator.py:239-251``) ===
 #
 # The reference exposes these as pandas lambdas behind
-# ``Evaluator.custom(column, weight, '<name>')``; here they are native Column
+# ``Evaluator.custom(column, weight, '<name>')``; here they are SQL
 # expressions — no UDF, no Python in the hot path.
 
-def _builtin_proximity_to_mean(col: Column, stats: Stats) -> Column:
+def _builtin_proximity_to_mean(v: str, stats: Stats) -> str:
     # (100 - abs((v - mean) / mean) * 100).clip(lower=0)
-    m = _lit(stats["mean"])
-    return F.greatest(F.lit(100.0) - F.abs((col.cast("double") - m) / m) * F.lit(100.0), F.lit(0.0))
+    m = value(stats["mean"])
+    return f"greatest((100.0D - (abs((({double(v)} - {m}) / {m})) * 100.0D)), 0.0D)"
 
 
-def _builtin_proximity_to_median(col: Column, stats: Stats) -> Column:
-    m = _lit(stats["median"])
-    return F.greatest(F.lit(100.0) - F.abs((col.cast("double") - m) / m) * F.lit(100.0), F.lit(0.0))
+def _builtin_proximity_to_median(v: str, stats: Stats) -> str:
+    m = value(stats["median"])
+    return f"greatest((100.0D - (abs((({double(v)} - {m}) / {m})) * 100.0D)), 0.0D)"
 
 
-def _builtin_log_scale(col: Column, stats: Stats) -> Column:
+def _builtin_log_scale(v: str, stats: Stats) -> str:
     # (log(v + 1) / log(max + 1)) * 100
-    mx = _lit(stats["max"])
-    return F.log(col.cast("double") + F.lit(1.0)) / F.log(mx + F.lit(1.0)) * F.lit(100.0)
+    mx = value(stats["max"])
+    return f"((log(({double(v)} + 1.0D)) / log(({mx} + 1.0D))) * 100.0D)"
 
 
-def _builtin_inverse_squared(col: Column, stats: Stats) -> Column:
+def _builtin_inverse_squared(v: str, stats: Stats) -> str:
     # ((min / v) ** 2) * 100
-    mn = _lit(stats["min"])
-    return F.pow(F.try_divide(mn, col.cast("double")), F.lit(2.0)) * F.lit(100.0)
+    mn = value(stats["min"])
+    return f"(power(try_divide({mn}, {double(v)}), 2.0D) * 100.0D)"
 
 
-BUILTIN_CUSTOM: Dict[str, Callable[[Column, Stats], Column]] = {
+BUILTIN_CUSTOM: Dict[str, Callable[[str, Stats], str]] = {
     "proximity_to_mean": _builtin_proximity_to_mean,
     "proximity_to_median": _builtin_proximity_to_median,
     "log_scale": _builtin_log_scale,
@@ -298,7 +283,7 @@ _BUILTIN_STAT_KEYS = {
 
 
 class BuiltinCustomCriterion(CriterionBase):
-    """String-named built-in custom function resolved to a native expression."""
+    """String-named built-in custom function resolved to a SQL expression."""
 
     def __init__(self, name: str, weight: float, func_name: str, **config: Any):
         if func_name not in BUILTIN_CUSTOM:
@@ -313,12 +298,12 @@ class BuiltinCustomCriterion(CriterionBase):
     def required_stat_keys(self):  # type: ignore[override]
         return _BUILTIN_STAT_KEYS[self.func_name]
 
-    def score(self, col: Column, stats: Stats) -> Column:
-        return BUILTIN_CUSTOM[self.func_name](col, stats)
+    def score_sql(self, v: str, stats: Stats) -> str:
+        return BUILTIN_CUSTOM[self.func_name](v, stats)
 
 
 class TemplateCriterion(CriterionBase):
-    """Pre-built scoring template resolved to a native expression
+    """Pre-built scoring template resolved to a SQL expression
     (reference ``custom_templates.py``; demo config vocabulary ``template``)."""
 
     def __init__(self, name: str, weight: float, template: str, **params: Any):
@@ -331,20 +316,12 @@ class TemplateCriterion(CriterionBase):
         self.params = params
 
     @property
-    def needs_stats(self) -> bool:  # type: ignore[override]
-        from . import templates as _t
-
-        return _t.TEMPLATES[self.template]["needs_stats"]
-
-    @property
     def required_stat_keys(self):  # type: ignore[override]
         from . import templates as _t
 
-        return _t.TEMPLATES[self.template].get(
-            "stat_keys", ALL_STAT_KEYS if self.needs_stats else ()
-        )
+        return _t.TEMPLATES[self.template]["stat_keys"]
 
-    def score(self, col: Column, stats: Stats) -> Column:
+    def score_sql(self, v: str, stats: Stats) -> str:
         from . import templates as _t
 
-        return _t.apply_template(self.template, col, stats, **self.params)
+        return _t.apply_template(self.template, v, stats, **self.params)

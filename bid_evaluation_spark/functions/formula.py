@@ -1,4 +1,4 @@
-"""Safe formula-expression criterion: AST → native Spark Column translation.
+"""Safe formula-expression criterion: AST → SQL expression text.
 
 Reference semantics (``bid_evaluation/criteria.py:105-151``): the formula is a
 math expression evaluated per row with ``simpleeval``; the namespace exposes
@@ -10,10 +10,12 @@ clipped to [0, 100] and multiplied by the criterion weight.
 
 The reference interprets the formula in a per-row Python loop
 (``criteria.py:136-149``) — its only O(n)-Python scalar operator. This engine
-instead parses the formula once with :mod:`ast` and translates it to a native
-Column expression so it executes JVM-side inside whole-stage codegen:
+instead parses the formula once with :mod:`ast` and translates it to SQL
+text so it executes JVM-side inside whole-stage codegen. Only the
+translator's own output reaches SQL — fixed function names, operators,
+exact literals and plan column names — never the formula string:
 
-- bare ``min``/``max``/``mean``/``median``/``std`` → statistic literals,
+- bare ``min``/``max``/``mean``/``median``/``std`` → the plan's statistics,
 - call-position ``min(`` / ``max(`` → a left fold reproducing Python's
   ``min``/``max`` loop exactly (incl. its order-dependent NaN behavior:
   ``min(nan, 3) == nan`` but ``min(3, nan) == 3``),
@@ -28,7 +30,7 @@ Column expression so it executes JVM-side inside whole-stage codegen:
   iteration yields Python floats), literals, and user variables are plain
   Python numbers whose division by zero raises → per-row 0.0. The translator
   statically classifies each operand as python-typed, numpy-typed, or
-  ambiguous; ambiguous divisions fall back to the interpreter UDF,
+  ambiguous; ambiguous divisions go to the interpreter,
 - comparisons are NaN-guarded to IEEE (any comparison with NaN is False,
   ``!=`` is True — Spark SQL instead orders NaN greatest),
 - per-row errors surface as null and poison the whole expression (including
@@ -41,9 +43,9 @@ Column expression so it executes JVM-side inside whole-stage codegen:
   matching numpy clip of the reference's inf results).
 
 Formulas outside the translatable grammar (compound types, unknown names,
-1-arg ``min``…) fall back to an Arrow-batched pandas UDF interpreting the same
-whitelisted AST with genuine Python per-row semantics — the always-correct
-path, now batched instead of the reference's row loop.
+1-arg ``min``…) are python-scored: :func:`formula_python_scores` interprets
+the same whitelisted AST with genuine Python per-row semantics — the
+always-correct path — inside the plan's grouped Arrow step.
 """
 
 from __future__ import annotations
@@ -54,8 +56,8 @@ from typing import Any, Callable, Dict, Mapping, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
+
+from .sql import NULL_BOOLEAN, NULL_DOUBLE, double, num, value
 
 STAT_NAMES = ("min", "max", "mean", "median", "std")
 
@@ -67,15 +69,12 @@ class FormulaTranslationError(Exception):
     """Formula uses grammar outside the native-translatable subset."""
 
 
-def _lit(v: Any) -> Column:
-    if isinstance(v, Column):
-        return v
-    if v is None:
-        return F.lit(None).cast("double")
-    return F.lit(float(v))
+class StatRef(str):
+    """SQL text of a statistic in the plan. It stands in for the reference's
+    pandas aggregate, so the translator types it as ``np.float64``."""
 
 
-def _null_strict(result: Column, *args: Column) -> Column:
+def _null_strict(result: str, *args: str) -> str:
     """Propagate null through multi-argument translations.
 
     A null operand means "this row errored" (e.g. python-typed ÷0) and must
@@ -85,12 +84,12 @@ def _null_strict(result: Column, *args: Column) -> Column:
     """
     cond = None
     for a in args:
-        c = a.isNull()
-        cond = c if cond is None else (cond | c)
-    return F.when(cond, F.lit(None).cast("double")).otherwise(result)
+        c = f"({a} IS NULL)"
+        cond = c if cond is None else f"({cond} OR {c})"
+    return f"CASE WHEN {cond} THEN {NULL_DOUBLE} ELSE {result} END"
 
 
-def _ieee_div(a: Column, b: Column) -> Column:
+def _ieee_div(a: str, b: str) -> str:
     """numpy-float64 division: ``x/±0 → ±inf`` (sign of the zero respected via
     ``Math.pow(±0, -1)``), ``0/0 → nan``; otherwise exact double division.
 
@@ -98,12 +97,10 @@ def _ieee_div(a: Column, b: Column) -> Column:
     (ANSI), so the zero-divisor branch is rebuilt from ``a * b**-1``, which
     Java evaluates to the correctly-signed infinity / nan.
     """
-    return F.when(b == F.lit(0.0), a * F.pow(b, F.lit(-1.0))).otherwise(
-        F.try_divide(a, b)
-    )
+    return f"CASE WHEN ({b} = 0.0D) THEN ({a} * power({b}, (-1.0D))) ELSE try_divide({a}, {b}) END"
 
 
-def _py_mod(a: Column, b: Column, zero_result: Column) -> Column:
+def _py_mod(a: str, b: str, zero_result: str) -> str:
     """Python floor-sign modulo via Java's truncating ``%`` plus sign fix-up.
 
     ``try_mod`` is Java ``%`` (C-style sign, correct for ±inf operands:
@@ -111,39 +108,37 @@ def _py_mod(a: Column, b: Column, zero_result: Column) -> Column:
     remainder's sign disagrees. ``b == 0`` is the one case where Python
     (raise) and numpy (nan) part ways — the caller passes the right branch.
     """
-    r = F.try_mod(a, b)
-    adj = F.when(
-        (r != F.lit(0.0)) & ((r < F.lit(0.0)) != (b < F.lit(0.0))), r + b
-    ).otherwise(r)
-    return F.when(b == F.lit(0.0), zero_result).otherwise(adj)
+    r = f"try_mod({a}, {b})"
+    adj = (f"CASE WHEN (({r} != 0.0D) AND (({r} < 0.0D) != ({b} < 0.0D))) "
+           f"THEN ({r} + {b}) ELSE {r} END")
+    return f"CASE WHEN ({b} = 0.0D) THEN {zero_result} ELSE {adj} END"
 
 
-def _floor_double(d: Column) -> Column:
+def _floor_double(d: str) -> str:
     """``floor`` that stays in double space: ±inf/nan/huge pass through
     (Spark's ``floor`` returns LONG and overflows on them; doubles ≥ 2^53
     are already integral)."""
-    return F.when(
-        F.isnan(d) | (F.abs(d) >= F.lit(2.0 ** 53)), d
-    ).otherwise(F.floor(d).cast("double"))
+    return (f"CASE WHEN (isnan({d}) OR (abs({d}) >= {num(2.0 ** 53)})) THEN {d} "
+            f"ELSE CAST(floor({d}) AS DOUBLE) END")
 
 
-def _py_min_fold(args: list) -> Column:
+def _py_min_fold(args: list) -> str:
     """Python's ``min(...)`` left fold, NaN order-dependence included:
     the accumulator survives unless a later arg is strictly smaller, and
     ``x < nan_acc`` / ``nan_x < acc`` are both IEEE-False (Spark orders NaN
     greatest, which agrees for the arg side; the acc side needs the guard)."""
     acc = args[0]
     for x in args[1:]:
-        acc = F.when(F.isnan(acc), acc).when(x < acc, x).otherwise(acc)
+        acc = f"CASE WHEN isnan({acc}) THEN {acc} WHEN ({x} < {acc}) THEN {x} ELSE {acc} END"
     return _null_strict(acc, *args)
 
 
-def _py_max_fold(args: list) -> Column:
+def _py_max_fold(args: list) -> str:
     """Python's ``max(...)`` left fold (see :func:`_py_min_fold`); here the
     arg side needs the NaN guard (Spark evaluates ``nan > acc`` as True)."""
     acc = args[0]
     for x in args[1:]:
-        acc = F.when(F.isnan(x), acc).when(x > acc, x).otherwise(acc)
+        acc = f"CASE WHEN isnan({x}) THEN {acc} WHEN ({x} > {acc}) THEN {x} ELSE {acc} END"
     return _null_strict(acc, *args)
 
 
@@ -174,22 +169,16 @@ def _select_taint(*ts: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Native translation: ast → (Column, is_boolean)
+# Native translation: ast → (SQL text, is_boolean)
 # ---------------------------------------------------------------------------
 
-_CMP_OPS = {
-    ast.Lt: lambda a, b: a < b,
-    ast.LtE: lambda a, b: a <= b,
-    ast.Gt: lambda a, b: a > b,
-    ast.GtE: lambda a, b: a >= b,
-    ast.Eq: lambda a, b: a == b,
-    ast.NotEq: lambda a, b: a != b,
-}
+_CMP_OPS = {ast.Lt: "<", ast.LtE: "<=", ast.Gt: ">", ast.GtE: ">=",
+            ast.Eq: "=", ast.NotEq: "!="}
 
 
 class _Translator:
-    def __init__(self, value_col: Column, names: Mapping[str, Any]):
-        self.value_col = value_col
+    def __init__(self, value_sql: str, names: Mapping[str, Any]):
+        self.value_sql = value_sql
         self.names = names
 
     def taint(self, node: ast.AST) -> str:
@@ -204,7 +193,7 @@ class _Translator:
         variables are plain Python numbers. Arithmetic coerces numpy-ward;
         min/max/clip/ternary return one operand unchanged, so mixing makes
         the class data-dependent (``maybe``) — divisions over ``maybe``
-        operands go to the interpreter fallback instead of guessing.
+        operands go to the interpreter instead of guessing.
         """
         if isinstance(node, ast.Expression):
             return self.taint(node.body)
@@ -214,8 +203,8 @@ class _Translator:
             if node.id == "value":
                 return _PY
             v = self.names.get(node.id)
-            if isinstance(v, Column):
-                return _NP  # per-batch stats stand in for pandas aggregates
+            if isinstance(v, StatRef):
+                return _NP  # plan statistics stand in for pandas aggregates
             return _NP if isinstance(v, (np.floating, np.integer, np.bool_)) else _PY
         if isinstance(node, ast.BinOp):
             return _arith_taint(self.taint(node.left), self.taint(node.right))
@@ -255,31 +244,35 @@ class _Translator:
             "ambiguous python/numpy typing for a zero-divisor operation"
         )
 
-    def _num(self, node: ast.AST) -> Column:
+    def _num(self, node: ast.AST) -> str:
         """Translate a subexpression and coerce boolean → double (py True == 1)."""
-        col, is_bool = self.visit(node)
-        return col.cast("double") if is_bool else col
+        sql, is_bool = self.visit(node)
+        return double(sql) if is_bool else sql
 
-    def visit(self, node: ast.AST) -> Tuple[Column, bool]:
+    def visit(self, node: ast.AST) -> Tuple[str, bool]:
         if isinstance(node, ast.Expression):
             return self.visit(node.body)
 
         if isinstance(node, ast.Constant):
             if isinstance(node.value, bool):
-                return F.lit(node.value), True
+                return ("true" if node.value else "false"), True
             if isinstance(node.value, (int, float)):
-                return F.lit(float(node.value)), False
+                return num(node.value), False
             raise FormulaTranslationError(f"non-numeric constant {node.value!r}")
 
         if isinstance(node, ast.Name):
             if node.id == "value":
-                return self.value_col.cast("double"), False
+                return double(self.value_sql), False
             if node.id in self.names:
                 v = self.names[node.id]
+                if isinstance(v, StatRef):
+                    return str(v), False
                 if isinstance(v, (bool, np.bool_)):
-                    return F.lit(bool(v)), True
-                if v is None or isinstance(v, (int, float, np.number, Column)):
-                    return _lit(v), False
+                    return ("true" if v else "false"), True
+                if v is None:
+                    return NULL_DOUBLE, False
+                if isinstance(v, (int, float, np.number)):
+                    return num(v), False
                 raise FormulaTranslationError(f"non-numeric variable {node.id!r}")
             raise FormulaTranslationError(f"unknown name {node.id!r}")
 
@@ -287,50 +280,44 @@ class _Translator:
             left, right = self._num(node.left), self._num(node.right)
             op = node.op
             if isinstance(op, ast.Add):
-                return left + right, False
+                return f"({left} + {right})", False
             if isinstance(op, ast.Sub):
-                return left - right, False
+                return f"({left} - {right})", False
             if isinstance(op, ast.Mult):
-                return left * right, False
+                return f"({left} * {right})", False
             if isinstance(op, ast.Div):
                 if self._div_taint(node) == _NP:
                     return _ieee_div(left, right), False
                 # python ZeroDivisionError → per-row 0.0; try_divide → null → 0.0
-                return F.try_divide(left, right), False
+                return f"try_divide({left}, {right})", False
             if isinstance(op, ast.Pow):
                 if self._div_taint(node) == _NP:
                     # Math.pow ≡ numpy float64 pow on every edge case
                     # (0**-1 → inf, (-0.0)**-1 → -inf, neg**frac → nan)
-                    return F.pow(left, right), False
+                    return f"power({left}, {right})", False
                 # guard 0 ** negative (py: ZeroDivisionError; Spark pow: +inf)
-                return (
-                    F.when((left == F.lit(0.0)) & (right < F.lit(0.0)), F.lit(None).cast("double"))
-                    .otherwise(F.pow(left, right)),
-                    False,
-                )
+                return (f"CASE WHEN (({left} = 0.0D) AND ({right} < 0.0D)) THEN {NULL_DOUBLE} "
+                        f"ELSE power({left}, {right}) END"), False
             if isinstance(op, ast.Mod):
-                zero = (
-                    F.lit(_NAN) if self._div_taint(node) == _NP
-                    else F.lit(None).cast("double")
-                )
+                zero = num(_NAN) if self._div_taint(node) == _NP else NULL_DOUBLE
                 return _py_mod(left, right, zero), False
             if isinstance(op, ast.FloorDiv):
                 if self._div_taint(node) == _NP:
                     # numpy floor_divide(x, 0) → ±inf/nan (floor of IEEE div)
                     return _floor_double(_ieee_div(left, right)), False
-                return _floor_double(F.try_divide(left, right)), False
+                return _floor_double(f"try_divide({left}, {right})"), False
             raise FormulaTranslationError(f"operator {type(op).__name__}")
 
         if isinstance(node, ast.UnaryOp):
             if isinstance(node.op, ast.USub):
-                return -self._num(node.operand), False
+                return f"(- {self._num(node.operand)})", False
             if isinstance(node.op, ast.UAdd):
                 return self._num(node.operand), False
             if isinstance(node.op, ast.Not):
-                col, is_bool = self.visit(node.operand)
+                sql, is_bool = self.visit(node.operand)
                 if not is_bool:
-                    col = col.cast("double") != F.lit(0.0)
-                return ~col, True
+                    sql = f"({double(sql)} != 0.0D)"
+                return f"(NOT {sql})", True
             raise FormulaTranslationError(f"unary {type(node.op).__name__}")
 
         if isinstance(node, ast.Compare):
@@ -357,80 +344,75 @@ class _Translator:
                         "the elements (Python `in` identity semantics)")
                 left = self._num(node.left)
                 elems = [self._num(e) for e in comparator.elts]
-                any_null = left.isNull()
+                any_null = f"({left} IS NULL)"
                 for e in elems:
-                    any_null = any_null | e.isNull()
-                hit: Column = F.lit(False)
+                    any_null = f"({any_null} OR ({e} IS NULL))"
+                hit = "false"
                 for e in elems:
-                    hit = hit | (F.when(F.isnan(left) | F.isnan(e),
-                                        F.lit(False))
-                                 .otherwise(left == e))
+                    hit = (f"({hit} OR CASE WHEN (isnan({left}) OR isnan({e})) THEN false "
+                           f"ELSE ({left} = {e}) END)")
                 if isinstance(node.ops[0], ast.NotIn):
-                    hit = ~hit
-                return (F.when(any_null, F.lit(None).cast("boolean"))
-                        .otherwise(hit), True)
+                    hit = f"(NOT {hit})"
+                return f"CASE WHEN {any_null} THEN {NULL_BOOLEAN} ELSE {hit} END", True
             # IEEE NaN semantics: any comparison with NaN is False (!= is
             # True) — Spark SQL instead orders NaN greatest, so each piece is
             # guarded. Null operands (upstream errors) fall through the guard
-            # (isnan(null) → null skips the when) into the raw compare → null.
+            # (isnan(null) → false skips the branch) into the raw compare → null.
             parts = []
             left = self._num(node.left)
             for op, comparator in zip(node.ops, node.comparators):
-                fn = _CMP_OPS.get(type(op))
-                if fn is None:
+                sym = _CMP_OPS.get(type(op))
+                if sym is None:
                     raise FormulaTranslationError(f"comparison {type(op).__name__}")
                 right = self._num(comparator)
-                nan_result = isinstance(op, ast.NotEq)
-                parts.append(
-                    F.when(F.isnan(left) | F.isnan(right), F.lit(nan_result))
-                    .otherwise(fn(left, right))
-                )
+                nan_result = "true" if isinstance(op, ast.NotEq) else "false"
+                parts.append(f"CASE WHEN (isnan({left}) OR isnan({right})) THEN {nan_result} "
+                             f"ELSE ({left} {sym} {right}) END")
                 left = right
             # python evaluates chain links lazily: a False link short-circuits
             # (even past an erroring comparator); a null link poisons the rest
             out = parts[0]
-            nullb = F.lit(None).cast("boolean")
             for p in parts[1:]:
-                out = F.when(out.isNull(), nullb).when(~out, F.lit(False)).otherwise(p)
+                out = (f"CASE WHEN ({out} IS NULL) THEN {NULL_BOOLEAN} "
+                       f"WHEN (NOT {out}) THEN false ELSE {p} END")
             return out, True
 
         if isinstance(node, ast.BoolOp):
             # restrict to boolean operands (python and/or return operands, not
-            # bools — numeric operands go to the UDF fallback for exactness).
+            # bools — numeric operands go to the interpreter for exactness).
             # Folded to model short-circuit + error poison: a decided prefix
             # ignores later (even erroring) operands; a null prefix poisons.
-            cols = []
+            sqls = []
             for v in node.values:
-                col, is_bool = self.visit(v)
+                sql, is_bool = self.visit(v)
                 if not is_bool:
                     raise FormulaTranslationError("and/or over non-boolean operands")
-                cols.append(col)
-            out = cols[0]
-            nullb = F.lit(None).cast("boolean")
-            for c in cols[1:]:
+                sqls.append(sql)
+            out = sqls[0]
+            for c in sqls[1:]:
                 if isinstance(node.op, ast.And):
-                    out = F.when(out.isNull(), nullb).when(~out, F.lit(False)).otherwise(c)
+                    out = (f"CASE WHEN ({out} IS NULL) THEN {NULL_BOOLEAN} "
+                           f"WHEN (NOT {out}) THEN false ELSE {c} END")
                 else:
-                    out = F.when(out.isNull(), nullb).when(out, F.lit(True)).otherwise(c)
+                    out = (f"CASE WHEN ({out} IS NULL) THEN {NULL_BOOLEAN} "
+                           f"WHEN {out} THEN true ELSE {c} END")
             return out, True
 
         if isinstance(node, ast.IfExp):
             cond, is_bool = self.visit(node.test)
             if not is_bool:
-                cond = cond.cast("double") != F.lit(0.0)
+                cond = f"({double(cond)} != 0.0D)"
             a, a_bool = self.visit(node.body)
             b, b_bool = self.visit(node.orelse)
             if a_bool != b_bool:
-                a = a.cast("double") if a_bool else a
-                b = b.cast("double") if b_bool else b
+                a = double(a) if a_bool else a
+                b = double(b) if b_bool else b
                 a_bool = b_bool = False
             # a null condition is an upstream per-row error: python never
             # reached the branch — poison instead of silently taking orelse
-            null_lit = F.lit(None).cast("boolean" if (a_bool and b_bool) else "double")
-            return (
-                F.when(cond.isNull(), null_lit).when(cond, a).otherwise(b),
-                a_bool and b_bool,
-            )
+            null_lit = NULL_BOOLEAN if (a_bool and b_bool) else NULL_DOUBLE
+            return (f"CASE WHEN ({cond} IS NULL) THEN {null_lit} WHEN {cond} THEN {a} "
+                    f"ELSE {b} END"), a_bool and b_bool
 
         if isinstance(node, ast.Call):
             if not isinstance(node.func, ast.Name) or node.keywords:
@@ -443,7 +425,7 @@ class _Translator:
                     and isinstance(node.args[0], (ast.List, ast.Tuple))):
                 elems = [self._num(e) for e in node.args[0].elts]
                 if not elems:
-                    # min([]) raises per-row in Python → interpreter fallback
+                    # min([]) raises per-row in Python → interpreter
                     raise FormulaTranslationError(f"{fname} of empty list")
                 if len(elems) == 1:
                     return elems[0], False
@@ -451,23 +433,18 @@ class _Translator:
                 return fold(elems), False
             args = [self._num(a) for a in node.args]
             if fname == "abs" and len(args) == 1:
-                return F.abs(args[0]), False
+                return f"abs({args[0]})", False
             if fname == "sqrt" and len(args) == 1:
                 # Math.sqrt(neg) → nan, matching np.sqrt
-                return F.sqrt(args[0]), False
+                return f"sqrt({args[0]})", False
             if fname in ("log", "log10") and len(args) == 1:
                 # np.log(0) → -inf, np.log(neg) → nan; Spark's builtin
                 # returns null for both, which would read as "error" here
                 x = args[0]
-                ln = F.log(x) if fname == "log" else F.log10(x)
-                return (
-                    F.when(x == F.lit(0.0), F.lit(-_INF))
-                    .when(x < F.lit(0.0), F.lit(_NAN))
-                    .otherwise(ln),
-                    False,
-                )
+                return (f"CASE WHEN ({x} = 0.0D) THEN {num(-_INF)} "
+                        f"WHEN ({x} < 0.0D) THEN {num(_NAN)} ELSE {fname}({x}) END"), False
             if fname == "exp" and len(args) == 1:
-                return F.exp(args[0]), False
+                return f"exp({args[0]})", False
             if fname == "min" and len(args) >= 2:
                 return _py_min_fold(args), False
             if fname == "max" and len(args) >= 2:
@@ -476,29 +453,33 @@ class _Translator:
                 x, lo, hi = args
                 # py: max(lo, min(hi, x)) — composed from the same folds so
                 # clip(nan, 0, 100) == 100 exactly as the reference computes
-                inner = F.when(F.isnan(hi), hi).when(x < hi, x).otherwise(hi)
-                outer = F.when(F.isnan(inner), lo).when(inner > lo, inner).otherwise(lo)
+                inner = f"CASE WHEN isnan({hi}) THEN {hi} WHEN ({x} < {hi}) THEN {x} ELSE {hi} END"
+                outer = (f"CASE WHEN isnan({inner}) THEN {lo} WHEN ({inner} > {lo}) "
+                         f"THEN {inner} ELSE {lo} END")
                 return _null_strict(outer, x, lo, hi), False
             raise FormulaTranslationError(f"call {fname}/{len(args)}")
 
         raise FormulaTranslationError(f"node {type(node).__name__}")
 
 
-def formula_to_column(formula: str, value_col: Column, names: Mapping[str, Any]) -> Column:
-    """Translate ``formula`` to a raw Column (no error-mapping/clipping).
+def formula_to_sql(formula: str, value_sql: str, names: Mapping[str, Any]) -> str:
+    """Translate ``formula`` to raw SQL text (no error-mapping/clipping).
 
-    Raises :class:`FormulaTranslationError` when outside the native subset.
+    ``value_sql`` is the value column's SQL text; ``names`` holds the
+    statistics (:class:`StatRef` or numbers) and user variables. Raises
+    :class:`FormulaTranslationError` when outside the native subset — the
+    formula text itself never reaches SQL, only what the translator emits.
     """
     try:
         tree = ast.parse(formula, mode="eval")
     except SyntaxError as e:  # syntactically invalid → per-row error → 0.0
         raise FormulaTranslationError(str(e)) from e
-    col, _ = _Translator(value_col, names).visit(tree)
-    return col
+    sql, _ = _Translator(value_sql, names).visit(tree)
+    return sql
 
 
 # ---------------------------------------------------------------------------
-# Fallback: Arrow-batched restricted-AST interpreter (python semantics)
+# Interpreter: the restricted AST with python semantics
 # ---------------------------------------------------------------------------
 
 _PY_FUNCS: Dict[str, Callable[..., Any]] = {
@@ -681,76 +662,13 @@ def _py_comprehension(node: ast.AST, names: Dict[str, Any]) -> Any:
     return out
 
 
-def formula_fallback_udf(formula: str, names: Dict[str, Any]) -> Callable[[Column], Column]:
-    """Arrow-batched UDF interpreting ``formula`` per row with Python semantics.
-
-    Mirrors the reference loop (``criteria.py:136-149``): per-row errors → 0.0,
-    then ``clip(0, 100)``; NaN results become 0.0 (documented divergence — the
-    reference would crash at ranking's ``astype(int)``).
-    """
-    try:
-        tree: Optional[ast.AST] = ast.parse(formula, mode="eval")
-    except SyntaxError:
-        tree = None
-    base = dict(names)
-
-    @pandas_udf("double")
-    def _formula(values: pd.Series) -> pd.Series:
-        results = []
-        for val in values:
-            if tree is None:
-                results.append(0.0)
-                continue
-            row_names = dict(base)
-            row_names["value"] = val
-            try:
-                results.append(float(_py_eval(tree, row_names)))
-            except Exception:
-                results.append(0.0)
-        out = pd.Series(results, index=values.index).clip(0, 100)
-        return out.fillna(0.0)
-
-    return _formula
-
-
-def formula_translates(
-    formula: str,
-    variables: Optional[Mapping[str, Any]] = None,
-) -> bool:
-    """Dry-run predicate: does ``formula`` stay on the native
-    Column-expression path, or would :func:`formula_score_column` fall
-    back to the pandas-UDF interpreter?
-
-    Observability surface for the silent (and correct) fallback: a
-    grammar regression that pushes a previously-native formula onto the
-    ~10-100x slower interpreter path shows up in a coverage-asserting
-    test instead of a bench (VERDICT r8 task 6).  Uses representative
-    float stats (the five reference stat names) so name resolution
-    matches a real evaluate() call.
-    """
-    names: Dict[str, Any] = {k: np.float64(1.0) for k in STAT_NAMES}
-    names.update(variables or {})
-    try:
-        formula_to_column(formula, F.lit(1.0), names)
-        return True
-    except FormulaTranslationError:
-        return False
-
-
-def formula_score_column(
-    formula: str,
-    col: Column,
-    stats: Mapping[str, Optional[float]],
-    variables: Mapping[str, Any],
-    *,
-    force_udf: bool = False,
-) -> Column:
-    """Full formula-criterion score: translate natively when possible, else
-    fall back to the batched interpreter; errors → 0.0; clipped to [0, 100]."""
-    # statistics enter the namespace as np.float64 — in the reference they are
-    # pandas aggregates (criteria.py:21-28 ``values.min()`` etc.), so e.g.
-    # ``3 / std`` with std == 0 yields inf→clip→100, not ZeroDivisionError→0;
-    # user variables stay as configured (python numbers → raising semantics)
+def _namespace(stats: Mapping[str, Optional[float]],
+               variables: Mapping[str, Any]) -> Dict[str, Any]:
+    """The interpreter's names: statistics enter as np.float64 — in the
+    reference they are pandas aggregates (criteria.py:21-28 ``values.min()``
+    etc.), so e.g. ``3 / std`` with std == 0 yields inf→clip→100, not
+    ZeroDivisionError→0; user variables stay as configured (python numbers →
+    raising semantics)."""
     names: Dict[str, Any] = {}
     for k in STAT_NAMES:
         v = stats.get(k)
@@ -759,22 +677,70 @@ def formula_score_column(
         else:
             names[k] = v
     names.update(variables)
-    has_column_stats = any(isinstance(v, Column) for v in names.values())
+    return names
 
-    if not force_udf or has_column_stats:
+
+def formula_python_scores(formula: str, values: pd.Series,
+                          stats: Mapping[str, Optional[float]],
+                          variables: Mapping[str, Any]) -> np.ndarray:
+    """Score ``values`` by interpreting ``formula`` per row with Python
+    semantics — the path for formulas outside the translatable grammar.
+
+    Mirrors the reference loop (``criteria.py:136-149``): per-row errors →
+    0.0, then ``clip(0, 100)``; NaN results become 0.0 (documented
+    divergence — the reference would crash at ranking's ``astype(int)``).
+    """
+    try:
+        tree: Optional[ast.AST] = ast.parse(formula, mode="eval")
+    except SyntaxError:
+        tree = None
+    base = _namespace(stats, variables)
+    results = []
+    for val in values:
+        if tree is None:
+            results.append(0.0)
+            continue
+        row_names = dict(base)
+        row_names["value"] = val
         try:
-            raw = formula_to_column(formula, col, names).cast("double")
-            cleaned = (
-                F.when(raw.isNull(), F.lit(0.0))
-                .when(F.isnan(raw), F.lit(0.0))
-                .otherwise(raw)
-            )
-            return F.least(F.greatest(cleaned, F.lit(0.0)), F.lit(100.0))
-        except FormulaTranslationError:
-            if has_column_stats:
-                raise NotImplementedError(
-                    "formula is outside the native-translatable grammar and the "
-                    "pandas-UDF fallback cannot capture per-batch (Column) stats"
-                )
+            results.append(float(_py_eval(tree, row_names)))
+        except Exception:
+            results.append(0.0)
+    out = pd.Series(results, dtype="float64").clip(0, 100)
+    return out.fillna(0.0).to_numpy()
 
-    return formula_fallback_udf(formula, names)(col)
+
+def _stat_refs(stats: Mapping[str, Any]) -> Dict[str, StatRef]:
+    return {k: StatRef(value(stats[k]) if k in stats else NULL_DOUBLE) for k in STAT_NAMES}
+
+
+def formula_translates(
+    formula: str,
+    variables: Optional[Mapping[str, Any]] = None,
+) -> bool:
+    """Dry-run predicate: does ``formula`` translate to SQL, or is it
+    python-scored by the interpreter?
+
+    Observability surface for the silent (and correct) slow path: a
+    grammar regression that pushes a previously-native formula onto the
+    ~10-100x slower interpreter shows up in a coverage-asserting test
+    instead of a bench (VERDICT r8 task 6).
+    """
+    names: Dict[str, Any] = dict(_stat_refs({}))
+    names.update(variables or {})
+    try:
+        formula_to_sql(formula, "value", names)
+        return True
+    except FormulaTranslationError:
+        return False
+
+
+def formula_score_sql(formula: str, v: str, stats: Mapping[str, Any],
+                      variables: Mapping[str, Any]) -> str:
+    """Full formula-criterion score as SQL: the translation with errors and
+    NaN → 0.0, clipped to [0, 100]. Raises
+    :class:`FormulaTranslationError` outside the translatable grammar."""
+    names: Dict[str, Any] = dict(_stat_refs(stats))
+    names.update(variables)
+    raw = double(formula_to_sql(formula, v, names))
+    return f"least(greatest(coalesce(nanvl({raw}, 0.0D), 0.0D), 0.0D), 100.0D)"

@@ -1,106 +1,108 @@
-"""Pre-built custom-criteria templates as native Column expressions.
+"""Pre-built custom-criteria templates as SQL expression text.
 
 Reference: ``bid_evaluation/custom_templates.py`` — six pandas template
 functions plus a UI-renderable registry with parameter schemas
-(``custom_templates.py:170-258``). Here every template is a pure Spark Column
-expression (no UDF, stays in whole-stage codegen); the registry preserves the
-same names, defaults and parameter metadata so demo-style configs using the
-``template`` criterion vocabulary work unchanged.
+(``custom_templates.py:170-258``). Here every template emits a SQL
+expression over the value column (no UDF, stays in whole-stage codegen);
+the registry preserves the same names, defaults and parameter metadata so
+demo-style configs using the ``template`` criterion vocabulary work
+unchanged.
 
-All templates return scores clipped to [0, 100] exactly like the reference
-(pandas ``.clip(0, 100)`` ⇒ ``least(greatest(x, 0), 100)``).
+Each template is ``(value_sql, stats, **params) -> str``: ``value_sql`` is the
+value column's SQL text and ``stats`` maps statistic names to SQL text or
+numbers. All templates return scores clipped to [0, 100] exactly like the
+reference (pandas ``.clip(0, 100)`` ⇒ ``least(greatest(x, 0), 100)``, NaN kept).
 """
 
 from __future__ import annotations
 
 from typing import Any, Callable, Dict, Mapping, Optional
 
-from pyspark.sql import Column, functions as F
+from .sql import double, num, value
 
 Stats = Mapping[str, Any]
 
 
-def _lit(v: Any) -> Column:
-    if isinstance(v, Column):
-        return v
-    return F.lit(None).cast("double") if v is None else F.lit(float(v))
+def _clip01_100(x: str) -> str:
+    # pandas clip keeps NaN; Spark's least/greatest order NaN above 100
+    return f"CASE WHEN isnan({x}) THEN {x} ELSE least(greatest({x}, 0.0D), 100.0D) END"
 
 
-def _clip01_100(x: Column) -> Column:
-    return F.least(F.greatest(x, F.lit(0.0)), F.lit(100.0))
+def _above(x: str, t: str, op: str = ">") -> str:
+    # numpy: NaN compares false; Spark orders NaN above every number
+    return f"({x} {op} {t}) AND NOT isnan({x})"
 
 
-def budget_proximity(col: Column, stats: Stats, target: float = 100000) -> Column:
+def budget_proximity(v: str, stats: Stats, target: float = 100000) -> str:
     """Closeness to a target budget (reference ``custom_templates.py:11-25``):
     ``clip((1 - |v - target| / target) * 100, 0, 100)``."""
-    t = F.lit(float(target))
-    deviation = F.abs(col.cast("double") - t) / t
-    return _clip01_100((F.lit(1.0) - deviation) * F.lit(100.0))
+    t = num(target)
+    deviation = f"(abs(({double(v)} - {t})) / {t})"
+    return _clip01_100(f"((1.0D - {deviation}) * 100.0D)")
 
 
-def sweet_spot_range(col: Column, stats: Stats,
-                     min_ideal: float = 30, max_ideal: float = 60) -> Column:
+def sweet_spot_range(v: str, stats: Stats,
+                     min_ideal: float = 30, max_ideal: float = 60) -> str:
     """100 inside [min_ideal, max_ideal], linear falloff outside, clipped
     (reference ``custom_templates.py:28-57``)."""
-    v = col.cast("double")
-    lo, hi = F.lit(float(min_ideal)), F.lit(float(max_ideal))
-    below = _clip01_100(F.lit(100.0) - (lo - v) / lo * F.lit(100.0))
-    above = _clip01_100(F.lit(100.0) - (v - hi) / hi * F.lit(100.0))
-    return F.when(v < lo, below).when(v > hi, above).otherwise(F.lit(100.0))
+    x = double(v)
+    lo, hi = num(min_ideal), num(max_ideal)
+    below = _clip01_100(f"(100.0D - ((({lo} - {x}) / {lo}) * 100.0D))")
+    above = _clip01_100(f"(100.0D - ((({x} - {hi}) / {hi}) * 100.0D))")
+    return (f"CASE WHEN ({x} < {lo}) THEN {below} WHEN ({_above(x, hi)}) THEN {above} "
+            f"ELSE 100.0D END")
 
 
-def penalty_function(col: Column, stats: Stats, base_score: float = 100,
-                     threshold: float = 50, penalty_per_unit: float = 2) -> Column:
+def penalty_function(v: str, stats: Stats, base_score: float = 100,
+                     threshold: float = 50, penalty_per_unit: float = 2) -> str:
     """Base score minus penalties above a threshold, clipped
     (reference ``custom_templates.py:60-82``)."""
-    v = col.cast("double")
-    base, t, p = F.lit(float(base_score)), F.lit(float(threshold)), F.lit(float(penalty_per_unit))
-    return _clip01_100(F.when(v > t, base - (v - t) * p).otherwise(base))
+    x = double(v)
+    base, t, p = num(base_score), num(threshold), num(penalty_per_unit)
+    return _clip01_100(
+        f"CASE WHEN ({_above(x, t)}) THEN ({base} - (({x} - {t}) * {p})) ELSE {base} END")
 
 
-def bonus_tiers(col: Column, stats: Stats, base_score: float = 50,
+def bonus_tiers(v: str, stats: Stats, base_score: float = 50,
                 tier1_threshold: float = 5, tier1_bonus: float = 20,
-                tier2_threshold: float = 10, tier2_bonus: float = 30) -> Column:
+                tier2_threshold: float = 10, tier2_bonus: float = 30) -> str:
     """Base score plus cumulative tier bonuses, clipped
     (reference ``custom_templates.py:85-115``)."""
-    v = col.cast("double")
-    score = (
-        F.lit(float(base_score))
-        + F.when(v >= F.lit(float(tier1_threshold)), F.lit(float(tier1_bonus))).otherwise(F.lit(0.0))
-        + F.when(v >= F.lit(float(tier2_threshold)), F.lit(float(tier2_bonus))).otherwise(F.lit(0.0))
-    )
-    return _clip01_100(score)
+    x = double(v)
+    tier1 = f"CASE WHEN ({_above(x, num(tier1_threshold), '>=')}) THEN {num(tier1_bonus)} ELSE 0.0D END"
+    tier2 = f"CASE WHEN ({_above(x, num(tier2_threshold), '>=')}) THEN {num(tier2_bonus)} ELSE 0.0D END"
+    return _clip01_100(f"(({num(base_score)} + {tier1}) + {tier2})")
 
 
-def percentage_of_best(col: Column, stats: Stats, higher_is_better: bool = True) -> Column:
+def percentage_of_best(v: str, stats: Stats, higher_is_better: bool = True) -> str:
     """Percentage relative to the best value, clipped
     (reference ``custom_templates.py:118-136``)."""
-    v = col.cast("double")
+    x = double(v)
     if higher_is_better:
-        return _clip01_100(F.try_divide(v, _lit(stats["max"])) * F.lit(100.0))
-    return _clip01_100(F.try_divide(_lit(stats["min"]), v) * F.lit(100.0))
+        return _clip01_100(f"(try_divide({x}, {value(stats['max'])}) * 100.0D)")
+    return _clip01_100(f"(try_divide({value(stats['min'])}, {x}) * 100.0D)")
 
 
-def distance_from_mean(col: Column, stats: Stats, prefer_above: bool = True) -> Column:
+def distance_from_mean(v: str, stats: Stats, prefer_above: bool = True) -> str:
     """Z-score mapped to [0,100] via ``(±z + 3) / 6 * 100``; constant column
     (std == 0) ⇒ 100 for all (reference ``custom_templates.py:139-167``)."""
-    mean, std = _lit(stats["mean"]), _lit(stats["std"])
-    z = (col.cast("double") - mean) / std
-    normalized = (z + F.lit(3.0)) / F.lit(6.0) if prefer_above else (-z + F.lit(3.0)) / F.lit(6.0)
-    return (
-        F.when(std.isNull() | (std == F.lit(0.0)), F.lit(100.0))
-        .otherwise(_clip01_100(normalized * F.lit(100.0)))
-    )
+    mean, std = value(stats["mean"]), value(stats["std"])
+    z = f"(({double(v)} - {mean}) / {std})"
+    signed = z if prefer_above else f"(- {z})"
+    normalized = f"(({signed} + 3.0D) / 6.0D)"
+    return (f"CASE WHEN (({std} IS NULL) OR ({std} = 0.0D)) THEN 100.0D "
+            f"ELSE {_clip01_100(f'({normalized} * 100.0D)')} END")
 
 
 #: Registry mirroring the reference's ``TEMPLATES`` dict
 #: (``custom_templates.py:170-227``): same keys, display names, descriptions
-#: and parameter schemas, with Column-factory functions and a ``needs_stats``
-#: flag the planner uses to skip unneeded aggregations.
+#: and parameter schemas, with SQL-emitting functions, a ``needs_stats`` flag
+#: and the ``stat_keys`` each template reads (the plan computes only those).
 TEMPLATES: Dict[str, Dict[str, Any]] = {
     "budget_proximity": {
         "function": budget_proximity,
         "needs_stats": False,
+        "stat_keys": (),
         "name": "Budget Proximity",
         "description": "Score based on closeness to target budget",
         "parameters": {
@@ -110,6 +112,7 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     "sweet_spot_range": {
         "function": sweet_spot_range,
         "needs_stats": False,
+        "stat_keys": (),
         "name": "Sweet Spot Range",
         "description": "Highest score within ideal range, drops outside",
         "parameters": {
@@ -120,6 +123,7 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     "penalty_function": {
         "function": penalty_function,
         "needs_stats": False,
+        "stat_keys": (),
         "name": "Penalty Function",
         "description": "Base score minus penalties for exceeding threshold",
         "parameters": {
@@ -131,6 +135,7 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     "bonus_tiers": {
         "function": bonus_tiers,
         "needs_stats": False,
+        "stat_keys": (),
         "name": "Bonus Tiers",
         "description": "Base score plus bonuses for meeting tier thresholds",
         "parameters": {
@@ -144,6 +149,7 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     "percentage_of_best": {
         "function": percentage_of_best,
         "needs_stats": True,
+        "stat_keys": ("min", "max"),
         "name": "Percentage of Best",
         "description": "Score as percentage relative to the best value",
         "parameters": {
@@ -153,6 +159,7 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     "distance_from_mean": {
         "function": distance_from_mean,
         "needs_stats": True,
+        "stat_keys": ("mean", "std"),
         "name": "Distance from Mean",
         "description": "Score based on distance from mean",
         "parameters": {
@@ -172,10 +179,10 @@ def get_template_info(template_name: str) -> Optional[dict]:
     return TEMPLATES.get(template_name)
 
 
-def apply_template(template_name: str, col: Column, stats: Stats, **kwargs: Any) -> Column:
-    """Apply a template by name (reference ``custom_templates.py:240-258``)."""
+def apply_template(template_name: str, value_sql: str, stats: Stats, **kwargs: Any) -> str:
+    """SQL text of a template by name (reference ``custom_templates.py:240-258``)."""
     template = TEMPLATES.get(template_name)
     if template is None:
         raise ValueError(f"Unknown template: {template_name}")
-    func: Callable[..., Column] = template["function"]
-    return func(col, stats, **kwargs)
+    func: Callable[..., str] = template["function"]
+    return func(value_sql, stats, **kwargs)

@@ -4,37 +4,35 @@ Reference: ``bid_evaluation/evaluator.py`` — fluent interface + config
 factories building a ``{column: criterion}`` map, then an eager pandas
 ``evaluate()``. This engine keeps the identical builder surface (same method
 names, same config vocabulary, same error messages) and re-expresses
-``evaluate`` as a lazy Spark plan:
+``evaluate`` as one lazy Spark plan, a one-stage pipeline of
+:class:`.pipeline.Plan`:
 
-1. ONE fused statistics aggregation job for every criterion column
+1. each criterion column's statistics as window aggregates in the plan
    (the reference runs one pandas pass per criterion — ``evaluator.py:291-295``),
-2. all weighted score columns as literal-parameterized Column expressions in a
-   single projection (``score_{name}`` columns are weight-multiplied
+2. all weighted score columns (``score_{name}`` columns are weight-multiplied
    contributions, reference ``evaluator.py:294-295``),
 3. ``final_score = sum(weighted scores) / total_weight`` when
    ``normalize_weights`` (default), else the raw sum (``evaluator.py:299-312``),
-4. ``ranking`` via ``RANK() OVER (ORDER BY final_score DESC)`` — exactly
-   pandas ``rank(ascending=False, method='min')`` (``evaluator.py:315-317``),
+4. ``ranking`` via ``RANK() OVER (ORDER BY final_score DESC)`` over the bids
+   with a score — pandas ``rank(ascending=False, method='min')``
+   (``evaluator.py:315-317``),
 5. result ordered by ranking (``evaluator.py:319``).
 
-Catalyst fuses (2)–(3) into one whole-stage-codegen span; the only driver
-round-trip is collecting the 1-row stats (SURVEY §3 lifecycle, §4.2).
+``evaluate`` runs no Spark job: the consumer's action runs the whole plan as
+one. :meth:`Evaluator.get_statistics` runs one job when called.
 
-Scale note: a global ``Window.orderBy`` ranks through a single-partition
-exchange — fine for one tender's bid table, wrong for scoring millions of
-tenders at once. For that, :meth:`Evaluator.evaluate_batched` evaluates every
-batch/tender in ONE job: per-batch stats via ``groupBy`` (one shuffle),
-broadcast-joined back, rank windows partitioned by the batch key — no global
-exchange, no driver loop.
+Scale note: one tender's bid table is scored in one partition. For scoring
+many tenders at once, :meth:`Evaluator.evaluate_batched` partitions every
+window by the batch key — one exchange, no driver loop.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Callable, Dict, Optional, Union
+from typing import Any, Callable, Dict, List, Optional, Sequence, Union
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.criteria import (
     BuiltinCustomCriterion,
@@ -47,7 +45,10 @@ from ..functions.criteria import (
     TemplateCriterion,
     ThresholdCriterion,
 )
-from .stats import STAT_KEYS, compute_stats, grouped_stats_df
+from ..functions.sql import double, num
+from .pipeline import Plan
+# re-exported only for perfbench/tracer.py, which wraps these names (ROADMAP item 4)
+from .stats import compute_stats, grouped_stats_df  # noqa: F401
 
 
 class Evaluator:
@@ -63,6 +64,8 @@ class Evaluator:
     def __init__(self, normalize_weights: bool = True):
         self.criteria: Dict[str, CriterionBase] = {}
         self.normalize_weights = normalize_weights
+        # the plan get_statistics() reads, set by the last single-table evaluation
+        self._last_plan: Optional[Plan] = None
 
     # === Factory methods (from config) — reference evaluator.py:34-112 ===
 
@@ -160,9 +163,9 @@ class Evaluator:
                func: Union[str, Callable, None] = None,
                name: Optional[str] = None, **kwargs: Any) -> "Evaluator":
         """Custom criterion: a callable ``(values: pd.Series, stats) -> pd.Series``
-        (runs as an Arrow-vectorized pandas UDF) or a built-in name
+        (python-scored per partition group) or a built-in name
         (``proximity_to_mean``/``proximity_to_median``/``log_scale``/
-        ``inverse_squared`` — native expressions, reference ``evaluator.py:239-251``)."""
+        ``inverse_squared`` — SQL expressions, reference ``evaluator.py:239-251``)."""
         if isinstance(func, str):
             self.add_criterion(column, BuiltinCustomCriterion(name or column, weight,
                                                               func, **kwargs))
@@ -198,26 +201,35 @@ class Evaluator:
 
     # === Evaluation — reference evaluator.py:275-319 ===
 
-    def _check_columns(self, df: DataFrame) -> None:
-        existing = set(df.columns)
+    def _check_columns(self, columns: Sequence[str]) -> None:
+        existing = set(columns)
         for column in self.criteria:
             if column not in existing:
                 # reference raises a plain KeyError at bids_df[column]
                 # (evaluator.py:292) — preserve the exception type
                 raise KeyError(column)
 
-    def _final_score_expr(self, weighted: list) -> Column:
+    def _final_score_sql(self, weighted: List[str]) -> str:
         if not weighted:
-            return F.lit(0).cast("double")
+            return "CAST(0 AS DOUBLE)"
         total = weighted[0]
         for w in weighted[1:]:
-            total = total + w
+            total = f"({total} + {w})"
         if self.normalize_weights:
             total_weight = self.get_total_weight()
             if total_weight > 0:
-                return (total / F.lit(float(total_weight))).cast("double")
-            return F.lit(0).cast("double")
-        return total.cast("double")
+                return double(f"({total} / {num(total_weight)})")
+            return "CAST(0 AS DOUBLE)"
+        return double(total)
+
+    def _plan(self, df: DataFrame, keys: List[str], **options: Any) -> Plan:
+        columns = df.columns
+        self._check_columns(columns)
+        for criterion in self.criteria.values():
+            criterion._statistics = {}
+        plan = Plan(df, columns, keys, [("", self, None, 1.0)], staged=False, **options)
+        self._last_plan = None if keys else plan
+        return plan
 
     def evaluate(self, df: DataFrame, include_details: bool = True,
                  rank_partition_by: Optional[str] = None,
@@ -229,14 +241,12 @@ class Evaluator:
             df: bid table (one row per bid).
             include_details: include per-criterion ``score_{name}`` columns.
             rank_partition_by: optional column to partition the ranking window
-                by (avoids the global single-partition exchange when the table
-                holds many independent evaluation batches).
-            stats_mode: ``"full"`` (default — reference parity: every
-                criterion column gets the whole 7-stat bundle, and
-                :meth:`get_statistics` reports it) or ``"required"`` (the
-                scale path: aggregate only the stats each criterion's
-                expression reads — identical scores, cheaper stats job,
-                partial :meth:`get_statistics`).
+                by (statistics stay over the whole table).
+            stats_mode: what :meth:`get_statistics` reports — ``"full"``
+                (default, reference parity: the whole 7-stat bundle per
+                criterion column) or ``"required"`` (only the stats each
+                criterion's expression reads). Scores are identical: the plan
+                computes only the statistics its expressions read either way.
             approx_percentiles: compute median/q25/q75 with
                 ``percentile_approx`` (O(1) sketch state per column) instead
                 of the reference-exact ``percentile`` (which buffers every
@@ -247,124 +257,37 @@ class Evaluator:
             raise ValueError(
                 f"stats_mode must be 'full' or 'required', got: {stats_mode}"
             )
-        self._check_columns(df)
-
-        stat_cols = list(self.criteria.keys())
-        keys_by_column = None
-        if stats_mode == "required":
-            keys_by_column = {}
-            for column, criterion in self.criteria.items():
-                keys_by_column.setdefault(column, set()).update(
-                    criterion.required_stat_keys
-                )
-        stats = (
-            compute_stats(df, stat_cols, keys_by_column=keys_by_column,
+        plan = self._plan(df, [], rank_by=rank_partition_by, stats_mode=stats_mode,
                           approx_percentiles=approx_percentiles)
-            if stat_cols else {}
-        )
-        for column, criterion in self.criteria.items():
-            criterion._statistics = dict(stats[column])
-
-        score_exprs: Dict[str, Column] = {}
-        for column, criterion in self.criteria.items():
-            score_exprs[f"score_{criterion.name}"] = criterion.weighted_score(
-                F.col(column), stats[column]
-            )
-
-        result = df
-        if include_details and score_exprs:
-            result = result.withColumns(score_exprs)
-            weighted = [F.col(name) for name in score_exprs]
-        else:
-            weighted = list(score_exprs.values())
-
-        result = result.withColumn("final_score", self._final_score_expr(weighted))
-
-        order = [F.desc("final_score")]
-        if rank_partition_by is not None:
-            w = Window.partitionBy(rank_partition_by).orderBy(*order)
-            result = result.withColumn("ranking", F.rank().over(w).cast("long"))
-            return result.orderBy("ranking")
-        w = Window.orderBy(*order)
-        result = result.withColumn("ranking", F.rank().over(w).cast("long"))
-        # ranking ascending ≡ final_score descending (rank derives from this
-        # exact sort; desc puts nulls last, as does ranking) — sorting on the
-        # score lets Spark elide the second sort against the window's output
-        # ordering (measured 18% on the sf0.1 rank query)
-        return result.orderBy(F.desc("final_score"))
+        return plan.result(include_details)
 
     def evaluate_batched(self, df: DataFrame, batch_col: str,
                          include_details: bool = True) -> DataFrame:
         """Evaluate MANY independent bid tables (tenders/batches) in one job.
 
-        The 100-TB path: per-batch statistics via one ``groupBy`` shuffle,
-        broadcast-joined back onto the rows (the stats side has one row per
-        batch — tiny relative to the fact table), scoring expressions read
-        stats from columns instead of collected literals, and all windows
-        partition by the batch key so no global exchange appears anywhere.
-
-        ``CustomCriterion`` (user ``(values, stats) -> scores`` functions,
-        which may be SET-dependent — e.g. rank within the batch) runs as ONE
-        ``applyInPandas`` over the batch key: each group is a whole batch, so
-        the function sees exactly the rows and pandas-computed statistics it
-        would see in a per-batch :meth:`evaluate` loop (bit-identical stats —
-        the reference computes them with pandas too). Cost: one extra
-        exchange on the batch key, the same partitioning the rank window
-        needs anyway.
+        The same plan as :meth:`evaluate` with every window partitioned by
+        ``batch_col``: per-batch statistics, scores and ranks with one
+        exchange on the batch key and no global one. Python-scored criteria
+        (``CustomCriterion``, formulas outside the translatable grammar) run
+        in one grouped Arrow step over the batch key, so a user function
+        sees exactly one batch's rows and statistics, as in a per-batch
+        :meth:`evaluate`. :meth:`get_statistics` is unavailable here
+        (statistics are per batch).
         """
-        self._check_columns(df)
-        custom = {col: c for col, c in self.criteria.items()
-                  if isinstance(c, CustomCriterion)}
-        native = {col: c for col, c in self.criteria.items() if col not in custom}
-
-        stat_cols = list(native.keys())
-        result = df
-        if stat_cols:
-            stats_df = grouped_stats_df(df, batch_col, stat_cols)
-            result = df.join(F.broadcast(stats_df), on=batch_col, how="left")
-
-        score_exprs: Dict[str, Column] = {}
-        for column, criterion in native.items():
-            col_stats = {k: F.col(f"{column}__{k}") for k in STAT_KEYS}
-            score_exprs[f"score_{criterion.name}"] = criterion.weighted_score(
-                F.col(column), col_stats
-            )
-
-        custom_names = [f"score_{c.name}" for c in custom.values()]
-        if (include_details or custom) and score_exprs:
-            result = result.withColumns(score_exprs)
-            weighted = [F.col(name) for name in score_exprs]
-        else:
-            weighted = list(score_exprs.values())
-
-        stats_cols_flat = [f"{c}__{k}" for c in dict.fromkeys(stat_cols)
-                           for k in STAT_KEYS]
-        if custom:
-            # native scores are materialized columns by now — drop the
-            # broadcast stats columns BEFORE the Arrow exchange so the Python
-            # worker never serializes 7×|native| per-row-constant columns
-            result = result.drop(*stats_cols_flat)
-            items = [
-                (col, f"score_{c.name}", float(c.weight), c.evaluation_function)
-                for col, c in custom.items()
-            ]
-            result = _apply_custom_batched(result, batch_col, items)
-            weighted = weighted + [F.col(n) for n in custom_names]
-
-        result = result.withColumn("final_score", self._final_score_expr(weighted))
-        w = Window.partitionBy(batch_col).orderBy(F.desc("final_score"))
-        result = result.withColumn("ranking", F.rank().over(w).cast("long"))
-
-        drop_cols = list(stats_cols_flat)
-        if not include_details:
-            drop_cols += list(score_exprs) + custom_names
-        return result.drop(*drop_cols).orderBy(batch_col, "ranking")
+        return self._plan(df, [batch_col]).result(include_details)
 
     # === Introspection — reference evaluator.py:321-344 ===
 
     def get_statistics(self) -> Dict[str, Dict[str, Any]]:
-        """Statistics computed during the last ``evaluate`` call, keyed by
-        criterion name (reference ``evaluator.py:321-329``)."""
+        """Statistics of the last ``evaluate`` call, keyed by criterion name
+        (reference ``evaluator.py:321-329``). Computed on the first call —
+        one Spark job — over the same rows the scores used."""
+        plan = self._last_plan
+        if plan is not None:
+            stage = next(i for i, st in enumerate(plan.stages) if st[1] is self)
+            stats = plan.statistics()[stage]
+            for column, criterion in self.criteria.items():
+                criterion._statistics = stats.get(column, {})
         statistics = {}
         for column, criterion in self.criteria.items():
             if criterion._statistics:
@@ -385,62 +308,3 @@ class Evaluator:
                 "normalized_weight": criterion.weight / total if total > 0 else 0,
             })
         return pd.DataFrame(data)
-
-
-def _apply_custom_batched(df: DataFrame, batch_col: str, items,
-                          active_null_col: Optional[str] = None) -> DataFrame:
-    """Score ``CustomCriterion`` columns per batch with ONE ``applyInPandas``.
-
-    Each group handed to the pandas function is a complete batch, so the user
-    ``(values, stats) -> scores`` function sees exactly what a per-batch
-    :meth:`Evaluator.evaluate` would give it: the batch's own rows, and the
-    reference's seven-stat bundle computed over those rows with pandas
-    (``min/max/mean/median/std(ddof=1)/q25/q75`` — reference
-    ``criteria.py:19-29``; numerically equivalent to the Spark exact aggs the
-    non-custom path uses: ``stddev_samp`` ≡ ddof=1, exact ``percentile`` ≡
-    pandas linear-interpolated ``quantile``).
-
-    Args:
-        items: ``(input column, output score column, weight, user fn)``
-            tuples — one per custom criterion.
-        active_null_col: staged-pipeline hook — when set, only rows where
-            this column is null are scored (statistics computed over those
-            rows only); eliminated rows keep a null score, matching the
-            ``F.when(active, ...)`` contract of native staged scoring.
-
-    Scale shape: one exchange on the batch key — the same partitioning the
-    downstream rank window requires, so AQE reuses it; state is bounded by the
-    largest single batch (identical bound to the rank window itself).
-    """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(out, DoubleType()) for _, out, _, _ in items]
-    )
-
-    def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        mask = pdf[active_null_col].isna() if active_null_col else None
-        for col, out, weight, fn in items:
-            vals = (pdf[col] if mask is None else pdf.loc[mask, col]).astype(
-                "float64"
-            )
-            out_vals = pd.Series(float("nan"), index=pdf.index, dtype="float64")
-            if len(vals):
-                stats = {
-                    "min": vals.min(), "max": vals.max(), "mean": vals.mean(),
-                    "median": vals.median(), "std": vals.std(),
-                    "q25": vals.quantile(0.25), "q75": vals.quantile(0.75),
-                }
-                scored = (
-                    pd.Series(fn(vals, stats)).astype("float64").to_numpy()
-                    * weight
-                )
-                if mask is None:
-                    out_vals = pd.Series(scored, index=pdf.index)
-                else:
-                    out_vals[mask.to_numpy()] = scored
-            pdf[out] = out_vals
-        return pdf
-
-    return df.groupBy(batch_col).applyInPandas(_score_batch, schema=schema)

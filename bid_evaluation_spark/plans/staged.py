@@ -4,35 +4,27 @@ Reference: ``bid_evaluation/staged.py`` — sequential stages, each scoring the
 surviving bids with its own inner :class:`Evaluator`, then eliminating bids via
 a ``score_threshold`` or ``top_n`` filter before the next stage. Stage
 statistics are computed over **survivors only** (reference ``staged.py:317-320``,
-verified SURVEY §1.4-10), which makes the stage loop inherently sequential; it
-stays a driver-side loop here with ~1 Spark job per stage (the fused stats agg).
+verified SURVEY §1.4-10).
 
-Spark-native design decisions (vs. the reference's pandas-index machinery):
+Spark-native design (vs. the reference's pandas-index machinery): the whole
+pipeline is ONE lazy plan (:class:`.pipeline.Plan`) in which stages chain
+windows — no driver loop of jobs, no persist, no join:
 
-- **No row index.** The reference uses the pandas index as bid identity
-  (``staged.py:292-333``). This engine expresses elimination as a column
-  (``eliminated_at_stage``, which the reference also materializes —
-  ``staged.py:291,339``) and never needs a key: stage scores are computed
-  **in place** on the full frame as ``WHEN active THEN expr`` projections, so
-  there is no per-stage join at all (SURVEY §2.3-J1 lists the join-based
-  alternative; the predicate form avoids the shuffle entirely).
-- **Survivor ranking without a join**: ``RANK() OVER (PARTITION BY is_active
-  ORDER BY score DESC)`` masked to active rows — eliminated rows sit in their
-  own window partition and never disturb the ranks (SURVEY §2.5-W3).
-- **top_n tie policy via windows** (SURVEY §2.5-W4, §1.4-12): the cutoff score
-  (value at row_number n), the population count and the ≥-cutoff count are all
-  unbounded window aggregates over the active partition — single pass, no
-  driver round-trip, no ``collect``.
-- **Narrow per-stage persist**: each stage caches a WORK frame holding only
-  the union of criterion columns plus the elimination state — never the
-  payload (at 100 TB the payload dwarfs the criteria; caching it per stage
-  was round-1 VERDICT's one perf-weak flag). The work frame drives the
-  survivor-stats jobs and elimination decisions; the full-width result
-  replays the identical deterministic expressions lazily (rank/tie-cutoff
-  windows are tie-stable, stats are literals collected once) and is
-  materialized exactly once by the consumer. Work caches are freed on
-  return (single-table path) or on :meth:`release` (batched path, where
-  stats broadcasts materialize lazily inside the consumer's action).
+- **No row index.** Elimination is a column (``eliminated_at_stage``, which
+  the reference also materializes — ``staged.py:291,339``); stage scores are
+  computed in place as ``CASE WHEN active THEN expr END`` projections.
+- **Survivor-only statistics** are window aggregates over the rows still
+  active at the stage, ``min(CASE WHEN active THEN v END) OVER (...)``.
+- **Survivor ranking**: ``RANK() OVER (PARTITION BY active ORDER BY score
+  DESC)`` masked to scored rows (SURVEY §2.5-W3).
+- **top_n tie policy via windows** (SURVEY §2.5-W4, §1.4-12): the cutoff
+  score (value at row_number n), the population count and the ≥-cutoff count
+  are unbounded window aggregates over the active partition.
+
+:meth:`StagedEvaluator.evaluate` runs one eager job: it counts the active
+rows per stage over the lazy plan, which drives the reference's
+all-eliminated warning (same text, raised during ``evaluate``) and answers
+empty input. Everything else runs in the consumer's action.
 
 Exact-parity semantics preserved (all verified against the reference —
 SURVEY §1.4): survivor-only statistics; eliminated bids keep the scores of
@@ -52,10 +44,12 @@ from dataclasses import dataclass
 from typing import Any, Callable, Dict, List, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .evaluator import Evaluator
-from .stats import compute_stats
+from .pipeline import ELIM_COL, Plan, safe_name
+# re-exported only for perfbench/tracer.py, which wraps this name (ROADMAP item 4)
+from .stats import compute_stats  # noqa: F401
 
 
 @dataclass
@@ -97,8 +91,8 @@ class StageResult:
     """Results of one stage (reference ``staged.py:50-57``).
 
     Spark has no row index, so instead of index sets this carries lazy
-    DataFrames: the stage-scored survivor frame, the advancing rows and the
-    rows eliminated *by this stage's filter* (None for skipped stages).
+    DataFrames: the rows the stage scored, the advancing rows and the rows
+    eliminated *by this stage's filter* (None for skipped stages).
     """
 
     name: str
@@ -115,7 +109,7 @@ class StagedEvaluator:
     the last stage, plus ``from_config/from_yaml/from_json``.
     """
 
-    ELIM_COL = "eliminated_at_stage"
+    ELIM_COL = ELIM_COL
 
     def __init__(self, final_score_mode: str = "last_stage"):
         if final_score_mode not in ("last_stage", "weighted_combination"):
@@ -125,9 +119,8 @@ class StagedEvaluator:
             )
         self.final_score_mode = final_score_mode
         self._stages: List[StageDefinition] = []
-        self._stage_results: List[StageResult] = []
         self._evaluated = False
-        self._persisted: List[DataFrame] = []
+        self._last_plan: Optional[Plan] = None
 
     # === Factory methods (reference staged.py:86-159) ===
 
@@ -239,462 +232,79 @@ class StagedEvaluator:
 
     # === Evaluation (reference staged.py:271-375) ===
 
+    def _plan(self, df: DataFrame, keys: List[str], **options: Any) -> Plan:
+        if not self._stages:
+            raise RuntimeError("No stages defined. Add stages before evaluating.")
+        columns = df.columns
+        for stage in self._stages:
+            stage.evaluator._check_columns(columns)
+            for criterion in stage.evaluator.criteria.values():
+                criterion._statistics = {}
+        stages = [(s.name, s.evaluator, s.filter, s.weight) for s in self._stages]
+        plan = Plan(df, columns, keys, stages, staged=True,
+                    final_mode=self.final_score_mode, **options)
+        for stage in self._stages:
+            stage.evaluator._last_plan = None if keys else plan
+        self._last_plan = plan
+        return plan
+
     def evaluate(self, df: DataFrame, include_details: bool = True,
                  stats_mode: str = "full",
                  approx_percentiles: bool = False) -> DataFrame:
-        """Run all stages sequentially over ``df`` → scored/eliminated/ranked frame.
+        """Run all stages over ``df`` → scored/eliminated/ranked frame (lazy).
 
-        Driver-side loop, one fused stats+count aggregation job per stage; all
-        scoring stays lazy Column expressions on the running frame.
-        ``stats_mode="required"`` aggregates only each criterion's needed
-        stats per stage (identical scores; partial :meth:`get_statistics`);
-        ``approx_percentiles`` swaps exact quantiles for sketch-state
-        ``percentile_approx`` (the 100-TB path — see ``plans/stats.py``).
+        One eager job counts the active rows per stage (the all-eliminated
+        warning and empty input); the stages themselves run in the
+        consumer's action. ``stats_mode`` chooses what
+        :meth:`get_statistics` reports (``"required"``: only the stats each
+        criterion reads); ``approx_percentiles`` swaps exact quantiles for
+        sketch-state ``percentile_approx`` (see ``plans/stats.py``).
         """
         if stats_mode not in ("full", "required"):
             raise ValueError(
                 f"stats_mode must be 'full' or 'required', got: {stats_mode}"
             )
-        if not self._stages:
-            raise RuntimeError("No stages defined. Add stages before evaluating.")
-
-        if df.isEmpty():
+        plan = self._plan(df, [], stats_mode=stats_mode,
+                          approx_percentiles=approx_percentiles)
+        counts = plan.active_counts()
+        if counts[0] == 0:
             return self._empty_result(df)
-
-        elim = F.col(self.ELIM_COL)
-
-        # Narrow WORK frame — the only thing persisted per stage (VERDICT
-        # round-1: don't cache payload columns nobody reads). It carries just
-        # the union of all stages' criterion columns plus the elimination
-        # state; each stage's stats job and elimination decision run on it.
-        # The wide RESULT frame applies the *same* deterministic expressions
-        # lazily (rank/cutoff windows are tie-stable, statistics are inlined
-        # literals collected once from work) and is materialized exactly once
-        # by the consumer — so both frames agree bit-for-bit while the cache
-        # holds only |criteria|+1 columns. If the input df is itself an
-        # expensive derived frame, the caller should persist it (it is
-        # scanned once for work and once for the final result).
-        crit_cols: List[str] = []
-        for stage in self._stages:
-            for c in stage.evaluator.criteria:
-                if c not in crit_cols:
-                    crit_cols.append(c)
-        work = df.select(*crit_cols).withColumn(
-            self.ELIM_COL, F.lit(None).cast("string")
-        )
-        result = df.withColumn(self.ELIM_COL, F.lit(None).cast("string"))
-        self.release()
-        self._stage_results = []
-        produced: List[str] = []  # stages (safe names) whose score column exists
-
-        for i, stage in enumerate(self._stages):
-            is_last = i == len(self._stages) - 1
-            safe = self._safe_name(stage.name)
-            active = elim.isNull()
-            stage.evaluator._check_columns(df)
-
-            # cache this stage's narrow frame: its stats agg materializes it,
-            # and the next stage's agg re-reads it
-            work = work.persist()
-            self._persisted.append(work)
-
-            stat_cols = list(stage.evaluator.criteria.keys())
-            keys_by_column = None
-            if stats_mode == "required":
-                keys_by_column = {}
-                for column, criterion in stage.evaluator.criteria.items():
-                    keys_by_column.setdefault(column, set()).update(
-                        criterion.required_stat_keys
-                    )
-            stats = compute_stats(work.filter(active), stat_cols,
-                                  with_count=True,
-                                  keys_by_column=keys_by_column,
-                                  approx_percentiles=approx_percentiles)
-            n_active = stats.pop("__count__")
-            for prev in self._persisted[:-1]:
-                prev.unpersist()
-            del self._persisted[:-1]
-
+        for stage, n_active in zip(self._stages, counts):
             if n_active == 0:
                 # all bids eliminated — same warning text as reference staged.py:300-307
                 warnings.warn(
                     f"All bids were eliminated before stage '{stage.name}'. "
                     f"Skipping this and subsequent stages."
                 )
-                self._stage_results.append(StageResult(stage.name, None, None, None))
-                continue
-
-            for column, criterion in stage.evaluator.criteria.items():
-                criterion._statistics = dict(stats[column])
-
-            # per-criterion weighted contributions, masked to active rows
-            score_exprs: Dict[str, Column] = {}
-            for column, criterion in stage.evaluator.criteria.items():
-                expr = F.when(
-                    active, criterion.weighted_score(F.col(column), stats[column])
-                ).cast("double")
-                score_exprs[f"{safe}_{criterion.name}"] = expr
-
-            raw_weighted = list(score_exprs.values())
-            stage_final_raw = stage.evaluator._final_score_expr(raw_weighted)
-
-            if include_details and score_exprs:
-                result = result.withColumns(score_exprs)
-                weighted = [F.col(c) for c in score_exprs]
-                stage_final = stage.evaluator._final_score_expr(weighted)
-            else:
-                stage_final = stage_final_raw
-
-            score_col = f"{safe}_score"
-            result = result.withColumn(
-                score_col, F.when(active, stage_final).cast("double")
-            )
-            produced.append(safe)
-
-            # stage ranking: RANK over the active partition only (W2/W3)
-            result = result.withColumn("_bes_active", active.cast("int"))
-            w_rank = Window.partitionBy("_bes_active").orderBy(F.desc(score_col))
-            result = result.withColumn(
-                f"{safe}_ranking",
-                F.when(active, F.rank().over(w_rank)).cast("long"),
-            ).drop("_bes_active")
-
-            stage_frame = result.filter(active)
-
-            if not is_last and stage.filter is not None:
-                # elimination decided on BOTH frames with identical
-                # expressions; work's transient score column feeds the next
-                # stage's survivor-stats job, then drops out of the cache
-                work = work.withColumn(
-                    score_col, F.when(active, stage_final_raw).cast("double")
-                )
-                work, w_pred, w_helpers = self._advanced_predicate(
-                    work, score_col, stage.filter, active
-                )
-                work = work.withColumn(
-                    self.ELIM_COL,
-                    F.when(active & ~w_pred, F.lit(stage.name)).otherwise(elim),
-                ).drop(*w_helpers, score_col)
-
-                result, adv_pred, helper_cols = self._advanced_predicate(
-                    result, score_col, stage.filter, active
-                )
-                result = result.withColumn(
-                    self.ELIM_COL,
-                    F.when(active & ~adv_pred, F.lit(stage.name)).otherwise(elim),
-                ).drop(*helper_cols)
-                advanced_df = result.filter(elim.isNull())
-                eliminated_df = result.filter(elim == stage.name)
-            else:
-                advanced_df = stage_frame
-                eliminated_df = result.filter(F.lit(False))
-
-            self._stage_results.append(
-                StageResult(stage.name, stage_frame, advanced_df, eliminated_df)
-            )
-
-        result = self._with_final_score(result, produced)
-
-        # final ranking: only non-eliminated bids (reference staged.py:357-365)
-        result = result.withColumn("_bes_ranked", elim.isNull().cast("int"))
-        w_final = Window.partitionBy("_bes_ranked").orderBy(F.desc("final_score"))
-        result = result.withColumn(
-            "ranking", F.when(elim.isNull(), F.rank().over(w_final)).cast("long")
-        ).drop("_bes_ranked")
-
-        # output ordering contract (reference staged.py:367-372)
-        result = result.orderBy(
-            F.asc_nulls_last("ranking"), F.desc_nulls_last("final_score")
-        )
-
-        # the last stats collect was the final reader of the narrow work
-        # caches — the returned result's lineage never touches them
-        self.release()
-
+        plan.skipped = {i for i, n in enumerate(counts) if n == 0}
         self._evaluated = True
-        return result
+        return plan.result(include_details)
 
     def evaluate_batched(self, df: DataFrame, batch_col: str,
                          include_details: bool = True) -> DataFrame:
-        """Staged evaluation of MANY independent bid tables in one pipeline.
+        """Staged evaluation of MANY independent bid tables in one plan.
 
-        The 100-TB path for "score a million tenders through the same stage
-        pipeline": the driver loop runs once per STAGE (not per tender) —
-        per-batch survivor statistics come from one ``groupBy(batch)``
-        aggregation per stage, broadcast-joined back (one row per batch);
-        scoring/elimination/top-N windows all partition by the batch key, so
-        no global single-partition exchange exists anywhere and every tender's
-        semantics match a standalone :meth:`evaluate` over just its rows
-        (differentially tested).
+        The same plan as :meth:`evaluate` with every window partitioned by
+        ``batch_col``, so each tender's semantics match a standalone
+        :meth:`evaluate` over just its rows (differentially tested) with one
+        exchange on the batch key and no global one.
 
         Divergences from :meth:`evaluate` (which mirrors the single-table
-        reference): no all-eliminated warning (a batch whose bids are all
-        eliminated simply stops producing scores; other batches continue),
-        and :meth:`get_statistics` is unavailable (statistics are per-batch
-        Columns, not collected scalars). ``CustomCriterion`` runs as one
-        ``applyInPandas`` over the batch key per stage that has one: each
-        group is a whole batch, the user fn sees only that batch's ACTIVE
-        rows and their pandas-computed stats bundle — exactly the per-batch
+        reference): no eager job and no all-eliminated warning (a batch whose
+        bids are all eliminated simply stops producing scores; other batches
+        continue), and :meth:`get_statistics` is unavailable (statistics are
+        per batch). ``CustomCriterion`` runs in one grouped Arrow step over
+        the batch key per stage that has one: the user fn sees only that
+        batch's ACTIVE rows and their statistics — exactly the per-batch
         :meth:`evaluate` contract; eliminated rows keep null scores.
         """
-        from ..functions.criteria import CustomCriterion as _CC
-        from .evaluator import _apply_custom_batched
-        from .stats import STAT_KEYS, grouped_stats_df
-
-        if not self._stages:
-            raise RuntimeError("No stages defined. Add stages before evaluating.")
-
-        elim = F.col(self.ELIM_COL)
-
-        # Narrow WORK frame, as in :meth:`evaluate`: batch key + criterion
-        # columns + elimination state. Work frames are the only persisted
-        # plans; they stay cached until :meth:`release` because (unlike the
-        # single-table path, whose per-stage stats collect is an eager
-        # action) every per-stage broadcast here materializes lazily during
-        # the consumer's final action — freeing them earlier would force
-        # each stage's stats to recompute the whole upstream chain.
-        crit_cols: List[str] = []
-        for stage in self._stages:
-            for c in stage.evaluator.criteria:
-                if c not in crit_cols:
-                    crit_cols.append(c)
-        work = df.select(batch_col, *crit_cols).withColumn(
-            self.ELIM_COL, F.lit(None).cast("string")
-        )
-        result = df.withColumn(self.ELIM_COL, F.lit(None).cast("string"))
-        self.release()
-        self._stage_results = []
-        produced: List[str] = []
-
-        for i, stage in enumerate(self._stages):
-            is_last = i == len(self._stages) - 1
-            safe = self._safe_name(stage.name)
-            active = elim.isNull()
-            stage.evaluator._check_columns(df)
-
-            work = work.persist()
-            self._persisted.append(work)
-
-            custom = {col: c for col, c in stage.evaluator.criteria.items()
-                      if isinstance(c, _CC)}
-            native = {col: c for col, c in stage.evaluator.criteria.items()
-                      if col not in custom}
-
-            stat_cols = list(dict.fromkeys(native.keys()))
-            stats_cols_flat = [f"{c}__{k}" for c in stat_cols
-                               for k in STAT_KEYS]
-            stats_df = None
-            if stat_cols:
-                stats_df = grouped_stats_df(work.filter(active), batch_col,
-                                            stat_cols)
-                result = result.join(F.broadcast(stats_df), on=batch_col,
-                                     how="left")
-                work = work.join(F.broadcast(stats_df), on=batch_col,
-                                 how="left")
-
-            score_exprs: Dict[str, Column] = {}
-            for column, criterion in native.items():
-                col_stats = {k: F.col(f"{column}__{k}") for k in STAT_KEYS}
-                score_exprs[f"{safe}_{criterion.name}"] = F.when(
-                    active, criterion.weighted_score(F.col(column), col_stats)
-                ).cast("double")
-
-            raw_weighted = list(score_exprs.values())
-            custom_names = [f"{safe}_{c.name}" for c in custom.values()]
-            custom_items = [
-                (col, f"{safe}_{c.name}", float(c.weight), c.evaluation_function)
-                for col, c in custom.items()
-            ]
-
-            if (include_details or custom) and score_exprs:
-                result = result.withColumns(score_exprs)
-                weighted = [F.col(c) for c in score_exprs]
-            else:
-                weighted = list(score_exprs.values())
-
-            if custom:
-                # native stage scores are materialized — drop the broadcast
-                # stats columns before the Arrow exchange (see evaluator.py)
-                if stat_cols:
-                    result = result.drop(*stats_cols_flat)
-                result = _apply_custom_batched(
-                    result, batch_col, custom_items,
-                    active_null_col=self.ELIM_COL,
-                )
-                weighted = weighted + [F.col(n) for n in custom_names]
-
-            score_col = f"{safe}_score"
-            stage_final = stage.evaluator._final_score_expr(weighted)
-            result = result.withColumn(
-                score_col, F.when(active, stage_final).cast("double")
-            )
-            if stat_cols and not custom:
-                result = result.drop(*stats_cols_flat)
-            if not include_details:
-                result = result.drop(*list(score_exprs) + custom_names)
-            produced.append(safe)
-
-            # same score/elimination expressions on the narrow work frame
-            # (deterministic — see evaluate()); transient columns drop out
-            # before the next persist so the cache stays narrow
-            if not is_last and stage.filter is not None:
-                if custom:
-                    # materialize native scores, then shed the broadcast
-                    # stats columns BEFORE the Arrow exchange — same
-                    # per-row-constant serialization saving as the result
-                    # frame's path above
-                    w_weighted = []
-                    if score_exprs:
-                        work = work.withColumns(score_exprs)
-                        w_weighted = [F.col(c) for c in score_exprs]
-                    work = work.drop(*stats_cols_flat)
-                    work = _apply_custom_batched(
-                        work, batch_col, custom_items,
-                        active_null_col=self.ELIM_COL,
-                    )
-                    w_weighted = w_weighted + [F.col(n) for n in custom_names]
-                else:
-                    w_weighted = raw_weighted
-                work = work.withColumn(
-                    score_col,
-                    F.when(active,
-                           stage.evaluator._final_score_expr(w_weighted)
-                           ).cast("double"),
-                )
-                work, w_pred, w_helpers = self._advanced_predicate(
-                    work, score_col, stage.filter, active,
-                    extra_partition_cols=[batch_col],
-                )
-                work = work.withColumn(
-                    self.ELIM_COL,
-                    F.when(active & ~w_pred, F.lit(stage.name)).otherwise(elim),
-                ).drop(*w_helpers, score_col, *stats_cols_flat, *custom_names,
-                       *list(score_exprs))
-            elif stat_cols:
-                # no elimination this stage — just shed the joined stats so
-                # the next stage's cache (and join) stays collision-free
-                work = work.drop(*stats_cols_flat)
-
-            result = result.withColumn("_bes_active", active.cast("int"))
-            w_rank = Window.partitionBy(batch_col, "_bes_active").orderBy(
-                F.desc(score_col)
-            )
-            result = result.withColumn(
-                f"{safe}_ranking",
-                F.when(active, F.rank().over(w_rank)).cast("long"),
-            ).drop("_bes_active")
-
-            stage_frame = result.filter(active)
-
-            if not is_last and stage.filter is not None:
-                result, adv_pred, helper_cols = self._advanced_predicate(
-                    result, score_col, stage.filter, active,
-                    extra_partition_cols=[batch_col],
-                )
-                result = result.withColumn(
-                    self.ELIM_COL,
-                    F.when(active & ~adv_pred, F.lit(stage.name)).otherwise(elim),
-                ).drop(*helper_cols)
-                advanced_df = result.filter(elim.isNull())
-                eliminated_df = result.filter(elim == stage.name)
-            else:
-                advanced_df = stage_frame
-                eliminated_df = result.filter(F.lit(False))
-
-            self._stage_results.append(
-                StageResult(stage.name, stage_frame, advanced_df, eliminated_df)
-            )
-
-        result = self._with_final_score(result, produced)
-        result = result.withColumn("_bes_ranked", elim.isNull().cast("int"))
-        w_final = Window.partitionBy(batch_col, "_bes_ranked").orderBy(
-            F.desc("final_score")
-        )
-        result = result.withColumn(
-            "ranking", F.when(elim.isNull(), F.rank().over(w_final)).cast("long")
-        ).drop("_bes_ranked")
-
-        result = result.orderBy(
-            F.col(batch_col),
-            F.asc_nulls_last("ranking"), F.desc_nulls_last("final_score"),
-        )
+        plan = self._plan(df, [batch_col])
         self._evaluated = True
-        return result
-
-    def _advanced_predicate(
-        self, result: DataFrame, score_col: str, stage_filter: StageFilter,
-        active: Column, extra_partition_cols: Optional[List[str]] = None,
-    ):
-        """Predicate selecting rows that advance past this stage's filter.
-
-        Returns ``(result_with_helpers, predicate, helper_cols_to_drop)``.
-        score_threshold: ``score >= t`` (reference ``staged.py:383-385``).
-        top_n (reference ``staged.py:387-411``, truth table SURVEY §1.4-12):
-        cutoff = score at descending position n;
-        'include' → RANK ≤ n (advances all ties at the cutoff);
-        'exclude' → all advance when population ≤ n; when more than n rows
-        score ≥ cutoff, only rows strictly above the cutoff advance; else
-        rows ≥ cutoff advance.
-        """
-        if stage_filter.type == "score_threshold":
-            return result, F.col(score_col) >= F.lit(float(stage_filter.threshold)), []
-
-        n = int(stage_filter.top_n)
-        result = result.withColumn("_bes_active", active.cast("int"))
-        wp = Window.partitionBy(*(extra_partition_cols or []), "_bes_active")
-        wo = wp.orderBy(F.desc(score_col))
-        result = (
-            result.withColumn("_bes_rk", F.rank().over(wo))
-            .withColumn("_bes_rn", F.row_number().over(wo))
-        )
-        helpers = ["_bes_active", "_bes_rk", "_bes_rn"]
-
-        if stage_filter.on_tie == "include":
-            return result, F.col("_bes_rk") <= F.lit(n), helpers
-
-        result = (
-            result.withColumn(
-                "_bes_cutoff",
-                F.max(F.when(F.col("_bes_rn") == n, F.col(score_col))).over(wp),
-            )
-            .withColumn("_bes_total", F.count(F.lit(1)).over(wp))
-        )
-        result = result.withColumn(
-            "_bes_ge",
-            F.count(F.when(F.col(score_col) >= F.col("_bes_cutoff"), 1)).over(wp),
-        )
-        helpers += ["_bes_cutoff", "_bes_total", "_bes_ge"]
-        pred = (
-            F.when(F.col("_bes_total") <= n, F.lit(True))
-            .when(F.col("_bes_ge") > n, F.col(score_col) > F.col("_bes_cutoff"))
-            .otherwise(F.col(score_col) >= F.col("_bes_cutoff"))
-        )
-        return result, pred, helpers
-
-    def _with_final_score(self, result: DataFrame, produced: List[str]) -> DataFrame:
-        """``final_score`` per mode (reference ``staged.py:415-453``)."""
-        null_d = F.lit(None).cast("double")
-        if self.final_score_mode == "last_stage":
-            last_safe = self._safe_name(self._stages[-1].name)
-            final = F.col(f"{last_safe}_score") if last_safe in produced else null_d
-        else:  # weighted_combination
-            total_weight = sum(s.weight for s in self._stages)
-            if total_weight == 0 or not produced:
-                final = null_d
-            else:
-                final = F.lit(0.0)
-                for stage in self._stages:
-                    safe = self._safe_name(stage.name)
-                    if safe in produced:
-                        final = final + (
-                            F.coalesce(F.col(f"{safe}_score"), F.lit(0.0))
-                            * F.lit(stage.weight / total_weight)
-                        )
-        return result.withColumn("final_score", final.cast("double"))
+        return plan.result(include_details)
 
     def _safe_name(self, name: str) -> str:
         """Stage name → column-name fragment (reference ``staged.py:455-457``)."""
-        return name.lower().replace(" ", "_").replace("-", "_")
+        return safe_name(name)
 
     def _empty_result(self, df: DataFrame) -> DataFrame:
         """Empty input → empty frame with contract columns
@@ -706,13 +316,8 @@ class StagedEvaluator:
         )
 
     def release(self) -> None:
-        """Release per-stage caches held from the last ``evaluate`` call.
-
-        Safe to call once the returned result has been consumed (the plan
-        remains valid — it just recomputes if re-executed)."""
-        for p in self._persisted:
-            p.unpersist()
-        self._persisted = []
+        """Kept for callers of earlier versions, which cached per-stage
+        frames: evaluation persists nothing, so there is nothing to release."""
 
     # === Informational methods (reference staged.py:469-511) ===
 
@@ -738,11 +343,18 @@ class StagedEvaluator:
         return pd.DataFrame(rows)
 
     def get_statistics(self) -> Dict[str, Dict[str, Any]]:
+        """Per stage, the statistics of the stage's active rows (one job,
+        when first called)."""
         if not self._evaluated:
             raise RuntimeError("Call evaluate() before get_statistics().")
         return {s.name: s.evaluator.get_statistics() for s in self._stages}
 
     def get_stage_results(self) -> List[StageResult]:
+        """Per stage, lazy frames of its scored, advancing and eliminated
+        rows (all with the full output columns)."""
         if not self._evaluated:
             raise RuntimeError("Call evaluate() before get_stage_results().")
-        return list(self._stage_results)
+        plan = self._last_plan
+        return [StageResult(s.name, None, None, None) if i in plan.skipped
+                else StageResult(s.name, *plan.stage_frames(i))
+                for i, s in enumerate(self._stages)]

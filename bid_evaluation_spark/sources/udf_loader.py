@@ -7,7 +7,7 @@ is ``(values, stats)`` or ``(values)`` as a user scoring function
 
 Here the same contract feeds :class:`~bid_evaluation_spark.CustomCriterion`:
 each loaded function is a pandas-native ``(pd.Series, stats_dict) -> pd.Series``
-kernel that the engine executes as an Arrow-vectorized pandas UDF, so a
+kernel that the engine runs in its grouped Arrow step (per tender), so a
 hot-loaded file behaves identically on a 1000-executor cluster (the closure is
 pickled to executors; no driver-side loop).
 """

@@ -232,7 +232,7 @@ def test_templates_differential(spark, pdf_bids5):
         got = {
             r["vendor"]: r["s"]
             for r in sdf.select(
-                "vendor", stpl.apply_template(name, F.col(column), stats, **params).alias("s")
+                "vendor", F.expr(stpl.apply_template(name, f"`{column}`", stats, **params)).alias("s")
             ).collect()
         }
         for i, v in enumerate(pdf_bids5["vendor"]):

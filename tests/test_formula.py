@@ -7,7 +7,7 @@ import pytest
 from bid_evaluation_spark import Evaluator
 from bid_evaluation_spark.functions.formula import (
     FormulaTranslationError,
-    formula_to_column,
+    formula_to_sql,
 )
 from tests.conftest import rows_by
 
@@ -211,14 +211,14 @@ def test_membership_native_translation_boundary(spark):
     for f in ["value in [1, 2, 3]", "value not in (4, 5)",
               "value in {5, 8}", "max([value, 50])",
               "min((value, 6, max))"]:
-        formula_to_column(f, F.col("x"), names)
+        formula_to_sql(f, "x", names)
     # still outside: non-literal containers, chained membership, min([]),
     # and the left operand appearing among the elements (identity semantics)
     for f in ["value in max", "1 < value in [2]", "min([])",
               "value in [1, [2][0]]", "value in [value, 1]",
               "value not in (1, value)"]:
         with pytest.raises(FormulaTranslationError):
-            formula_to_column(f, F.col("x"), names)
+            formula_to_sql(f, "x", names)
 
 
 def test_membership_identity_nan(spark):
@@ -271,11 +271,11 @@ def test_native_translation_used_when_possible(spark):
     for f in ["value * 10", "(value - min) / (max - min) * 100",
               "clip(value, 0, 100)", "max(value, 50)", "100 if value > 3 else 0",
               "value % 3", "value // 2", "value ** 2"]:
-        formula_to_column(f, F.col("x"), {"min": 1.0, "max": 2.0})
+        formula_to_sql(f, "x", {"min": 1.0, "max": 2.0})
     # these must NOT translate (fallback handles them)
     for f in ["[1,2][0]", "min(value)", "foo(value)", "value & 3"]:
         with pytest.raises(FormulaTranslationError):
-            formula_to_column(f, F.col("x"), {"min": 1.0, "max": 2.0})
+            formula_to_sql(f, "x", {"min": 1.0, "max": 2.0})
 
 
 @pytest.mark.parametrize("force_udf", [False, True])
@@ -342,8 +342,8 @@ def test_ambiguous_division_falls_back(spark):
     import numpy as np
 
     with pytest.raises(FormulaTranslationError):
-        formula_to_column("3 / min(7, std)", F.col("x"),
-                          {"std": np.float64(1.0)})
+        formula_to_sql("3 / min(7, std)", "x",
+                       {"std": np.float64(1.0)})
     # end-to-end: still evaluates (via fallback), identical either way
     df = spark.createDataFrame([("A", 5.0), ("B", 5.0)], "vendor string, x double")
     a = eval_formula(df, "3 / min(7, std)", force_udf=False)
