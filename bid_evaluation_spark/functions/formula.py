@@ -710,10 +710,6 @@ def formula_python_scores(formula: str, values: pd.Series,
     return out.fillna(0.0).to_numpy()
 
 
-def _stat_refs(stats: Mapping[str, Any]) -> Dict[str, StatRef]:
-    return {k: StatRef(value(stats[k]) if k in stats else NULL_DOUBLE) for k in STAT_NAMES}
-
-
 def formula_translates(
     formula: str,
     variables: Optional[Mapping[str, Any]] = None,
@@ -726,10 +722,8 @@ def formula_translates(
     ~10-100x slower interpreter shows up in a coverage-asserting test
     instead of a bench (VERDICT r8 task 6).
     """
-    names: Dict[str, Any] = dict(_stat_refs({}))
-    names.update(variables or {})
     try:
-        formula_to_sql(formula, "value", names)
+        formula_score_sql(formula, "value", {}, variables or {})
         return True
     except FormulaTranslationError:
         return False
@@ -740,7 +734,8 @@ def formula_score_sql(formula: str, v: str, stats: Mapping[str, Any],
     """Full formula-criterion score as SQL: the translation with errors and
     NaN → 0.0, clipped to [0, 100]. Raises
     :class:`FormulaTranslationError` outside the translatable grammar."""
-    names: Dict[str, Any] = dict(_stat_refs(stats))
+    names: Dict[str, Any] = {k: StatRef(value(stats[k]) if k in stats else NULL_DOUBLE)
+                             for k in STAT_NAMES}
     names.update(variables)
     raw = double(formula_to_sql(formula, v, names))
     return f"least(greatest(coalesce(nanvl({raw}, 0.0D), 0.0D), 0.0D), 100.0D)"

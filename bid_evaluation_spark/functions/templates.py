@@ -96,12 +96,11 @@ def distance_from_mean(v: str, stats: Stats, prefer_above: bool = True) -> str:
 
 #: Registry mirroring the reference's ``TEMPLATES`` dict
 #: (``custom_templates.py:170-227``): same keys, display names, descriptions
-#: and parameter schemas, with SQL-emitting functions, a ``needs_stats`` flag
-#: and the ``stat_keys`` each template reads (the plan computes only those).
+#: and parameter schemas, with SQL-emitting functions and the ``stat_keys``
+#: each template reads (the plan computes only those).
 TEMPLATES: Dict[str, Dict[str, Any]] = {
     "budget_proximity": {
         "function": budget_proximity,
-        "needs_stats": False,
         "stat_keys": (),
         "name": "Budget Proximity",
         "description": "Score based on closeness to target budget",
@@ -111,7 +110,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "sweet_spot_range": {
         "function": sweet_spot_range,
-        "needs_stats": False,
         "stat_keys": (),
         "name": "Sweet Spot Range",
         "description": "Highest score within ideal range, drops outside",
@@ -122,7 +120,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "penalty_function": {
         "function": penalty_function,
-        "needs_stats": False,
         "stat_keys": (),
         "name": "Penalty Function",
         "description": "Base score minus penalties for exceeding threshold",
@@ -134,7 +131,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "bonus_tiers": {
         "function": bonus_tiers,
-        "needs_stats": False,
         "stat_keys": (),
         "name": "Bonus Tiers",
         "description": "Base score plus bonuses for meeting tier thresholds",
@@ -148,7 +144,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "percentage_of_best": {
         "function": percentage_of_best,
-        "needs_stats": True,
         "stat_keys": ("min", "max"),
         "name": "Percentage of Best",
         "description": "Score as percentage relative to the best value",
@@ -158,7 +153,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "distance_from_mean": {
         "function": distance_from_mean,
-        "needs_stats": True,
         "stat_keys": ("mean", "std"),
         "name": "Distance from Mean",
         "description": "Score based on distance from mean",
