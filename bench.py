@@ -58,7 +58,6 @@ def bench_staged_orders(spark, sf_dir):
         .min_ratio("o_totalprice", 1.0)
     )
     _force(st.evaluate(df, stats_mode="required"))
-    st.release()
 
 
 def bench_batched_eval_orders(spark, sf_dir):

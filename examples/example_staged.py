@@ -38,5 +38,4 @@ result.select(
     F.round("technical_score", 2).alias("tech"),
     F.round("final_score", 2).alias("final_score"), "ranking",
 ).show()
-staged.release()
 spark.stop()
