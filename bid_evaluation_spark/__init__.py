@@ -10,13 +10,15 @@ A from-scratch Spark engine with the query/data-processing capabilities of the
   (reference computes N separate pandas passes — ``criteria.py:19-29``),
 - a plain :class:`Evaluator` (reference: ``bid_evaluation/evaluator.py``) and a
   multi-stage :class:`StagedEvaluator` with elimination filters
-  (reference: ``bid_evaluation/staged.py``), both built as ONE lazy plan,
+  (reference: ``bid_evaluation/staged.py``), both built as ONE plan,
 - pre-built scoring templates (reference: ``bid_evaluation/custom_templates.py``).
 
-Every evaluation is one SQL plan, so Catalyst performs column pruning and
-whole-stage codegen across statistics, scores, ranks and the sort; Python
-only runs on the driver (building the plan text) and in one grouped Arrow
-step per stage for user-supplied scoring functions.
+Every evaluation is one SQL plan, so Catalyst performs column pruning across
+statistics, scores, ranks and the sort. A small driver-local bid table is
+scored at call time with the plan interpreted (no Java compiled per tender);
+any other input gets a lazy plan with whole-stage codegen. Python only runs
+on the driver (building the plan text) and in one grouped Arrow step per
+stage for user-supplied scoring functions.
 """
 
 __version__ = "0.1.0"

@@ -5,8 +5,8 @@ transform one pandas Series into weighted 0–100-ish scores). Here each
 criterion emits the SQL text of its score, ``(value_sql, stats) -> str``,
 where ``stats`` maps statistic names to SQL text. The plan builder
 (:mod:`..plans.pipeline`) passes window aggregates over the stage's active
-rows there, so a criterion reads its statistics inside the same lazy plan
-that scores, ranks and sorts, and every score stays in whole-stage codegen.
+rows there, so a criterion reads its statistics inside the same plan
+that scores, ranks and sorts, and every score stays a JVM expression.
 Python-scored criteria — :class:`CustomCriterion` and formulas outside the
 translatable grammar — are scored per partition group by the builder's
 Arrow step instead (:meth:`CriterionBase.python_score`).

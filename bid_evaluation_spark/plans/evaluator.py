@@ -4,7 +4,7 @@ Reference: ``bid_evaluation/evaluator.py`` — fluent interface + config
 factories building a ``{column: criterion}`` map, then an eager pandas
 ``evaluate()``. This engine keeps the identical builder surface (same method
 names, same config vocabulary, same error messages) and re-expresses
-``evaluate`` as one lazy Spark plan, a one-stage pipeline of
+``evaluate`` as one Spark plan, a one-stage pipeline of
 :class:`.pipeline.Plan`:
 
 1. each criterion column's statistics as window aggregates in the plan
@@ -18,8 +18,10 @@ names, same config vocabulary, same error messages) and re-expresses
    (``evaluator.py:315-317``),
 5. result ordered by ranking (``evaluator.py:319``).
 
-``evaluate`` runs no Spark job: the consumer's action runs the whole plan as
-one. :meth:`Evaluator.get_statistics` runs one job when called.
+``evaluate`` over a small driver-local input runs the plan at call time, as
+one interpreted job (see :mod:`.pipeline`); over any other input it runs no
+Spark job, and the consumer's action runs the whole plan as one.
+:meth:`Evaluator.get_statistics` runs one job when called.
 
 Scale note: one tender's bid table is scored in one partition. For scoring
 many tenders at once, :meth:`Evaluator.evaluate_batched` partitions every
@@ -55,7 +57,7 @@ class Evaluator:
     """Weighted multi-criteria scoring engine with fluent + config interfaces.
 
     Builder parity with reference ``Evaluator`` (``evaluator.py:21-273``);
-    execution is lazy Spark. Criteria are keyed by **column name** exactly like
+    execution is Spark. Criteria are keyed by **column name** exactly like
     the reference (``evaluator.py:255-257``) — adding a second criterion on the
     same column silently replaces the first (documented reference trap,
     SURVEY §1.4-1).
@@ -235,7 +237,13 @@ class Evaluator:
                  rank_partition_by: Optional[str] = None,
                  stats_mode: str = "full",
                  approx_percentiles: bool = False) -> DataFrame:
-        """Evaluate all bids → scored, ranked, sorted DataFrame (lazy).
+        """Evaluate all bids → scored, ranked, sorted DataFrame.
+
+        A driver-local ``df`` (``df.isLocal()``, e.g. from
+        ``createDataFrame(pandas_df)``) of at most
+        :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
+        interpreted job: the result is a local frame in ``df``'s session,
+        and errors surface here. Any other input gets a lazy frame.
 
         Args:
             df: bid table (one row per bid).

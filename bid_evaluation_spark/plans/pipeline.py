@@ -1,4 +1,4 @@
-"""One lazy plan per evaluation, built from SQL text.
+"""One plan per evaluation, built from SQL text.
 
 All four entry points — :meth:`Evaluator.evaluate` / ``evaluate_batched`` and
 :meth:`StagedEvaluator.evaluate` / ``evaluate_batched`` — build their result
@@ -8,8 +8,7 @@ is a one-stage pipeline. Per stage the plan computes:
 
 1. statistics as window aggregates over the stage's active rows,
    ``min(CASE WHEN <active> AND NOT isnan(v) THEN v END) OVER (PARTITION BY
-   keys)`` (:mod:`.stats`) — nothing is collected, and Catalyst prunes any
-   statistic nothing reads;
+   keys)`` (:mod:`.stats`) — Catalyst prunes any statistic nothing reads;
 2. python-scored criteria (custom functions, formulas outside the
    translatable grammar) in ONE grouped Arrow step over the keys, each group
    handing the function its active values and their statistics;
@@ -17,20 +16,38 @@ is a one-stage pipeline. Per stage the plan computes:
 4. the stage score (NaN → null), the stage rank and the ``top_n`` helpers;
 5. the elimination state ``_bes_e<i>``: the index of the eliminating stage,
    null while a bid is alive — so stages chain windows, and survivor-only
-   statistics are aggregates over the next stage's active rows.
+   statistics are aggregates over the next stage's active rows. A bid whose
+   filter predicate is null (a null stage score) is eliminated, as pandas'
+   NaN comparisons are False.
 
 Then the final score, the rank over the alive bids with a score, and the
 sort. The plan is SQL text, analyzed by one ``spark.sql`` call over a
 temporary view of the input: built from Column objects, every function call
 and operator is a Python→JVM round trip (~1,800 per plain tender, ~3,800 per
 staged one), while text costs one call. Names and numbers enter the text only
-through :mod:`..functions.sql`.
+through :mod:`..functions.sql`. With keys ``[]`` the input is coalesced to one
+partition, so every window shares it and the final sort needs no range
+exchange. Nothing is persisted.
 
-With keys ``[]`` the input is coalesced to one partition, so every window
-shares it, the final sort needs no range exchange, and a plain evaluation is
-one Spark job. Nothing is persisted; a staged single-table evaluation runs
-one eager job, :meth:`Plan.active_counts`, for the reference's
-all-eliminated warning.
+The same text runs one of two ways:
+
+- **Interpreted, now** — a single-table evaluation whose input is a
+  driver-local relation (``df.isLocal()``, e.g. ``createDataFrame(pandas)``)
+  of at most :data:`LOCAL_ROWS` rows. Spark would generate and compile
+  ~11–65 Java classes for such a tender, none reusable by the next one (its
+  literals differ), which costs more than the tender's data. So the plan runs
+  in a clone of the caller's session (``cloneSession()``: its runtime confs,
+  temporary views and functions) with code generation off, as one job
+  (``collectAsList``), and its rows, which never leave the JVM, become a
+  local relation in the caller's session: :meth:`Plan.result` returns data,
+  and the consumer's action runs no job. A staged evaluation counts its
+  active rows per stage (the all-eliminated warning) in the same rows,
+  through a hidden elimination index column, so it too runs one job.
+- **Compiled, lazy** — every other input (parquet, ``evaluate_batched``,
+  larger local tables): :meth:`Plan.result` is a lazy frame, whose
+  consumer's action runs the plan as one job with whole-stage codegen. A
+  staged single-table evaluation runs one eager job first,
+  :meth:`Plan.active_counts`.
 """
 
 from __future__ import annotations
@@ -40,13 +57,24 @@ from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.sql import NULL_DOUBLE, double, ident, num, string
 from .stats import STAT_KEYS, _Q_IDX, collect_stats, stat_aggregates, stat_input, stat_refs
 
 ELIM_COL = "eliminated_at_stage"
+
+#: Most rows of a driver-local input scored interpreted. Interpreted and
+#: compiled plans reach parity near this size; above it, compiled is faster.
+LOCAL_ROWS = 5_000
+
+#: Session confs of the interpreted path: no Java generated or compiled
+_INTERPRETED = {"spark.sql.codegen.wholeStage": "false",
+                "spark.sql.codegen.factoryMode": "NO_CODEGEN"}
+
+#: Hidden column of a local staged plan's rows: the eliminating stage's index
+_ELIM_IDX = "_bes_elim"
 
 
 def safe_name(name: str) -> str:
@@ -59,13 +87,38 @@ def _alive(elim: Optional[str]) -> Optional[str]:
     return None if elim is None else f"({elim} IS NULL)"
 
 
+def _interpreted(df: DataFrame) -> Optional[DataFrame]:
+    """``df`` in a clone of its session that runs without code generation,
+    when ``df`` is a driver-local relation of at most :data:`LOCAL_ROWS` rows;
+    else None. The row count is read from the relation, without a job."""
+    if not df.isLocal():
+        return None
+    qe = df._jdf.queryExecution()
+    rows = qe.analyzed().maxRows()
+    if not rows.isDefined() or rows.get() > LOCAL_ROWS:
+        return None
+    caller = df.sparkSession
+    # a private JVM API (pinned by a test): copies runtime confs, temp views
+    # and functions, so the clone sees what the caller sees
+    jclone = caller._jsparkSession.cloneSession()
+    conf = jclone.conf()
+    for key, value in _INTERPRETED.items():
+        conf.set(key, value)
+    clone = SparkSession(caller.sparkContext, jclone)
+    dataset = getattr(caller._jvm, "org.apache.spark.sql.classic.Dataset")
+    return DataFrame(dataset.ofRows(jclone, qe.logical()), clone)
+
+
 class Plan:
-    """The lazy plan of one evaluation.
+    """The plan of one evaluation.
 
     ``stages`` holds ``(name, evaluator, filter, weight)`` per stage;
     ``staged`` selects the staged output contract (elimination column,
     per-stage score and ranking columns, ``final_mode``) over the plain one
-    (``score_<name>`` columns, ``final_score``, ``ranking``).
+    (``score_<name>`` columns, ``final_score``, ``ranking``). A single-table
+    plan over a small driver-local input is *local*: it runs interpreted in a
+    clone of the caller's session, and its outputs are delivered now (see
+    the module docstring).
     """
 
     def __init__(self, df: DataFrame, columns: Sequence[str], keys: Sequence[str],
@@ -80,6 +133,13 @@ class Plan:
         self.approx = approx_percentiles
         self.stats_mode = stats_mode
         self.skipped: set = set()  # stages no bid reached (set by the caller)
+        # a local plan: the caller's session, and the (select, rows) it delivered
+        self._caller: Optional[SparkSession] = None
+        self._delivered: Optional[Tuple[List[Tuple[str, str]], DataFrame]] = None
+        if not self.keys:
+            interpreted = _interpreted(df)
+            if interpreted is not None:
+                self._caller, df = df.sparkSession, interpreted
         self._frame = df
         self._coalesce = not self.keys
         self._layers: List[List[str]] = []
@@ -181,7 +241,7 @@ class Plan:
         if flt is not None and flt.type == "score_threshold":
             advances = f"({s} >= {num(flt.threshold)})"
         elif flt is not None and flt.on_tie == "include":
-            advances = f"(rank() {ordered} <= {int(flt.top_n)})"
+            advances = f"({s} IS NOT NULL AND (rank() {ordered} <= {int(flt.top_n)}))"
         elif flt is not None:
             # on_tie="exclude": cutoff = score at descending position n; all
             # advance when the population is <= n; when more than n rows
@@ -198,6 +258,8 @@ class Plan:
                         f"WHEN ({ge} > {n}) THEN ({s} > _bes_{i}_cut) "
                         f"ELSE ({s} >= _bes_{i}_cut) END")
         if advances is not None:
+            # a null predicate (null stage score) eliminates: pandas compares NaN as False
+            advances = f"coalesce({advances}, false)"
             cond = f"(NOT {advances})" if active is None else f"({active} AND (NOT {advances}))"
             e = f"_bes_e{i + 1}"
             layer[e] = f"CASE WHEN {cond} THEN {i} ELSE {self._elim or 'CAST(NULL AS INT)'} END"
@@ -246,7 +308,8 @@ class Plan:
 
     # --- output -----------------------------------------------------------
 
-    def _outputs(self, include_details: bool) -> str:
+    def _outputs(self, include_details: bool) -> List[Tuple[str, str]]:
+        """The output columns as ``(name, select item)`` pairs."""
         outputs: Dict[str, str] = {}
         if self.staged:
             cases = " ".join(f"WHEN {i} THEN {string(name)}"
@@ -270,27 +333,55 @@ class Plan:
             k = by_lower.get(c.lower())
             if k is not None and k not in used:
                 used.add(k)
-                select.append(f"{outputs[k]} AS {ident(k)}")
+                select.append((k, f"{outputs[k]} AS {ident(k)}"))
             else:
-                select.append(ident(c))
-        select += [f"{e} AS {ident(k)}" for k, e in outputs.items() if k not in used]
-        return ", ".join(select)
+                select.append((c, ident(c)))
+        select += [(k, f"{e} AS {ident(k)}") for k, e in outputs.items() if k not in used]
+        return select
 
-    def result(self, include_details: bool = True) -> DataFrame:
-        """The evaluation's output, sorted by the output contract."""
+    def _order(self) -> str:
         keys = [f"{ident(k)} ASC" for k in self.keys]
         if self.staged:
-            order = keys + ["`ranking` ASC NULLS LAST", "`final_score` DESC NULLS LAST"]
-        elif keys or self.rank_by:
-            order = keys + ["`ranking` ASC NULLS LAST"]
-        else:
-            # ranking ascending ≡ final_score descending, and the rank window
-            # already delivers this order, so the sort is elided
-            order = ["`final_score` DESC"]
-        return self._run(self._outputs(include_details), f"ORDER BY {', '.join(order)}")
+            return ", ".join(keys + ["`ranking` ASC NULLS LAST", "`final_score` DESC NULLS LAST"])
+        if keys or self.rank_by:
+            return ", ".join(keys + ["`ranking` ASC NULLS LAST"])
+        # ranking ascending ≡ final_score descending, and the rank window
+        # already delivers this order, so the sort is elided
+        return "`final_score` DESC"
 
-    def active_counts(self) -> List[int]:
-        """Active rows per stage — one job over the lazy plan."""
+    def _local(self, outputs: List[Tuple[str, str]]) -> DataFrame:
+        """A local plan's sorted rows with the columns ``outputs``, as a
+        local frame in the caller's session: one interpreted job, whose rows
+        stay in the JVM, unless the rows last delivered already hold every
+        such column. A staged plan's rows also carry the hidden elimination
+        index."""
+        if self._delivered is None or not set(outputs) <= set(self._delivered[0]):
+            hidden = [(_ELIM_IDX, f"{self._elim or 'CAST(NULL AS INT)'} AS {_ELIM_IDX}")]
+            select = outputs + (hidden if self.staged else [])
+            jdf = self._run(_items(select), f"ORDER BY {self._order()}")._jdf
+            rows = self._caller._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+            self._delivered = (select, DataFrame(rows, self._caller))
+        select, rows = self._delivered
+        if select == outputs:
+            return rows
+        return rows.select(*[ident(name) for name, _ in outputs])
+
+    def result(self, include_details: bool = True) -> DataFrame:
+        """The evaluation's output, sorted by the output contract: lazy, or
+        for a local plan scored now."""
+        outputs = self._outputs(include_details)
+        if self._caller is None:
+            return self._run(_items(outputs), f"ORDER BY {self._order()}")
+        return self._local(outputs)
+
+    def active_counts(self, include_details: bool = True) -> List[int]:
+        """Active rows per stage. A local plan counts them in the rows
+        :meth:`result` then delivers (the same ``include_details``), so the
+        evaluation stays one job; otherwise one job over the lazy plan."""
+        if self._caller is not None:
+            self._local(self._outputs(include_details))
+            elim = [r[0] for r in self._delivered[1].select(_ELIM_IDX).collect()]
+            return [sum(e is None or e >= i for e in elim) for i in range(len(self.stages))]
         counts = ", ".join("count(1)" if e is None else f"count(CASE WHEN {e} IS NULL THEN 1 END)"
                            for e in self.elim_before)
         return list(self._run(counts).first())
@@ -315,14 +406,25 @@ class Plan:
         return self._statistics
 
     def stage_frames(self, i: int, include_details: bool = True):
-        """``(stage rows, advancing rows, rows this stage eliminated)``."""
-        select = self._outputs(include_details)
+        """``(stage rows, advancing rows, rows this stage eliminated)``: lazy,
+        or for a local plan filters of its delivered rows."""
+        outputs = self._outputs(include_details)
+        if self._caller is not None:
+            self._local(outputs)
+            rows, e, names = self._delivered[1], _ELIM_IDX, [ident(n) for n, _ in outputs]
+            return tuple(rows.where(cond).select(*names) for cond in
+                         (f"{e} IS NULL OR {e} >= {i}", f"{e} IS NULL OR {e} > {i}", f"{e} = {i}"))
+        select = _items(outputs)
         before, after = self.elim_before[i], self.elim_after[i]
         frame = self._run(select, f"WHERE {before} IS NULL" if before else "")
         if after == before:
             return frame, frame, self._run(select, "WHERE false")
         return (frame, self._run(select, f"WHERE {after} IS NULL"),
                 self._run(select, f"WHERE {after} = {i}"))
+
+
+def _items(outputs: List[Tuple[str, str]]) -> str:
+    return ", ".join(item for _, item in outputs)
 
 
 def _sql(frame: DataFrame, query: Callable[[str], str]) -> DataFrame:

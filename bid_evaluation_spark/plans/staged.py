@@ -7,7 +7,7 @@ statistics are computed over **survivors only** (reference ``staged.py:317-320``
 verified SURVEY §1.4-10).
 
 Spark-native design (vs. the reference's pandas-index machinery): the whole
-pipeline is ONE lazy plan (:class:`.pipeline.Plan`) in which stages chain
+pipeline is ONE plan (:class:`.pipeline.Plan`) in which stages chain
 windows — no driver loop of jobs, no persist, no join:
 
 - **No row index.** Elimination is a column (``eliminated_at_stage``, which
@@ -19,12 +19,15 @@ windows — no driver loop of jobs, no persist, no join:
   DESC)`` masked to scored rows (SURVEY §2.5-W3).
 - **top_n tie policy via windows** (SURVEY §2.5-W4, §1.4-12): the cutoff
   score (value at row_number n), the population count and the ≥-cutoff count
-  are unbounded window aggregates over the active partition.
+  are unbounded window aggregates over the active partition. A null stage
+  score fails every filter, as a pandas NaN comparison does.
 
-:meth:`StagedEvaluator.evaluate` runs one eager job: it counts the active
-rows per stage over the lazy plan, which drives the reference's
-all-eliminated warning (same text, raised during ``evaluate``) and answers
-empty input. Everything else runs in the consumer's action.
+:meth:`StagedEvaluator.evaluate` needs the active rows per stage, which
+drive the reference's all-eliminated warning (same text, raised during
+``evaluate``) and answer empty input. A small driver-local input is scored
+right there, in one interpreted job whose rows also give the counts; any
+other input runs one eager counting job, and the stages run in the
+consumer's action.
 
 Exact-parity semantics preserved (all verified against the reference —
 SURVEY §1.4): survivor-only statistics; eliminated bids keep the scores of
@@ -90,7 +93,7 @@ class StageDefinition:
 class StageResult:
     """Results of one stage (reference ``staged.py:50-57``).
 
-    Spark has no row index, so instead of index sets this carries lazy
+    Spark has no row index, so instead of index sets this carries
     DataFrames: the rows the stage scored, the advancing rows and the rows
     eliminated *by this stage's filter* (None for skipped stages).
     """
@@ -251,11 +254,15 @@ class StagedEvaluator:
     def evaluate(self, df: DataFrame, include_details: bool = True,
                  stats_mode: str = "full",
                  approx_percentiles: bool = False) -> DataFrame:
-        """Run all stages over ``df`` → scored/eliminated/ranked frame (lazy).
+        """Run all stages over ``df`` → scored/eliminated/ranked frame.
 
-        One eager job counts the active rows per stage (the all-eliminated
-        warning and empty input); the stages themselves run in the
-        consumer's action. ``stats_mode`` chooses what
+        A driver-local ``df`` (``df.isLocal()``) of at most
+        :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
+        interpreted job: the result is a local frame in ``df``'s session, and
+        errors surface here. Any other input gets a lazy frame, after one
+        eager job that counts the active rows per stage. Either way the
+        counts drive the all-eliminated warning and answer empty input.
+        ``stats_mode`` chooses what
         :meth:`get_statistics` reports (``"required"``: only the stats each
         criterion reads); ``approx_percentiles`` swaps exact quantiles for
         sketch-state ``percentile_approx`` (see ``plans/stats.py``).
@@ -266,7 +273,7 @@ class StagedEvaluator:
             )
         plan = self._plan(df, [], stats_mode=stats_mode,
                           approx_percentiles=approx_percentiles)
-        counts = plan.active_counts()
+        counts = plan.active_counts(include_details)
         if counts[0] == 0:
             return self._empty_result(df)
         for stage, n_active in zip(self._stages, counts):
@@ -350,8 +357,10 @@ class StagedEvaluator:
         return {s.name: s.evaluator.get_statistics() for s in self._stages}
 
     def get_stage_results(self) -> List[StageResult]:
-        """Per stage, lazy frames of its scored, advancing and eliminated
-        rows (all with the full output columns)."""
+        """Per stage, frames of its scored, advancing and eliminated rows
+        (all with the full output columns), in the caller's session: slices
+        of the delivered rows when :meth:`evaluate` scored a small local
+        input at call time, else lazy."""
         if not self._evaluated:
             raise RuntimeError("Call evaluate() before get_stage_results().")
         plan = self._last_plan

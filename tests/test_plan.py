@@ -1,17 +1,23 @@
-"""The evaluation plan: what it costs (Python→JVM calls, Spark jobs, cached
-frames), NaN and ±inf at the statistics and ranking boundary, python-scored
+"""The evaluation plan: what it costs (Python→JVM calls, Spark jobs, Java
+classes compiled, cached frames), its two ways to run (interpreted for a small
+driver-local input, compiled and lazy otherwise) and their agreement, NaN and
+±inf at the statistics, ranking and elimination boundary, python-scored
 criteria on the batched path, and SQL-text safety for hostile names and
 literals. Expected scores are computed with pandas in each test."""
 
 import math
+import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from bid_evaluation_spark import Evaluator, StagedEvaluator
 from bid_evaluation_spark.functions.formula import FormulaTranslationError, formula_to_sql
+from bid_evaluation_spark.plans.pipeline import LOCAL_ROWS
 
 
 def _same(got, want):
@@ -26,6 +32,25 @@ def _pandas_linear(values):
     lo, hi = s.min(), s.max()
     with np.errstate(invalid="ignore"):
         return (s - lo) / (hi - lo) * 100.0
+
+
+def _paths(df):
+    """The same rows as a driver-local input (scored interpreted) and as a
+    non-local one (``select("*")``: compiled, lazy)."""
+    assert df.isLocal()
+    compiled = df.select("*")
+    assert not compiled.isLocal()
+    return [df, compiled]
+
+
+def _local(spark, rows, schema):
+    """A driver-local input (an Arrow table: NaN and null stay distinct)."""
+    return spark.createDataFrame(spark.createDataFrame(rows, schema).toArrow())
+
+
+def _fresh():
+    """A weight no earlier plan in this JVM used, so Spark's code cache misses."""
+    return 1.0 + uuid.uuid4().int % 10**9 / 1e10
 
 
 def _check_ranked(rows, key, scores):
@@ -132,17 +157,18 @@ def _three_stages():
 
 
 def test_evaluate_call_budget(tender, py4j_calls):
-    ev = _six(Evaluator())
-    py4j_calls["on"] = True
-    ev.evaluate(tender)
-    py4j_calls["on"] = False
-    assert py4j_calls["n"] <= 100, py4j_calls["n"]
+    for frame in _paths(tender):
+        ev = _six(Evaluator())
+        py4j_calls.update(on=True, n=0)
+        ev.evaluate(frame)
+        py4j_calls["on"] = False
+        assert py4j_calls["n"] <= 100, py4j_calls["n"]
 
-    st = _three_stages()
-    py4j_calls.update(on=True, n=0)
-    st.evaluate(tender)
-    py4j_calls["on"] = False
-    assert py4j_calls["n"] <= 300, py4j_calls["n"]
+        staged = _three_stages()
+        py4j_calls.update(on=True, n=0)
+        staged.evaluate(frame)
+        py4j_calls["on"] = False
+        assert py4j_calls["n"] <= 300, py4j_calls["n"]
 
 
 def _jobs(spark, action):
@@ -159,8 +185,144 @@ def _jobs(spark, action):
 
 
 def test_job_counts(spark, tender):
-    assert _jobs(spark, lambda: _six(Evaluator()).evaluate(tender).collect()) == 1
-    assert _jobs(spark, lambda: _three_stages().evaluate(tender).collect()) <= 2
+    local, compiled = _paths(tender)
+    assert _jobs(spark, lambda: _six(Evaluator()).evaluate(local).collect()) == 1
+    assert _jobs(spark, lambda: _three_stages().evaluate(local).collect()) == 1
+    assert _jobs(spark, lambda: _six(Evaluator()).evaluate(compiled).collect()) == 1
+    assert _jobs(spark, lambda: _three_stages().evaluate(compiled).collect()) <= 2
+
+
+def _compiled_classes(spark, action):
+    """Java classes Spark compiled (Janino) while ``action`` ran."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = metric.getCount()
+    action()
+    return metric.getCount() - before
+
+
+def _fresh_plain():
+    return (Evaluator().linear("price", _fresh(), higher_is_better=False)
+            .threshold("days", _fresh(), [(0, 30, 100), (30, _fresh() * 40, 60)])
+            .min_ratio("quality", _fresh()))
+
+
+def _fresh_staged():
+    return (StagedEvaluator()
+            .add_stage("screen", filter_type="score_threshold", threshold=_fresh() * 20)
+            .linear("price", _fresh(), higher_is_better=False).direct("quality", _fresh())
+            .add_stage("short", filter_type="top_n", top_n=10, on_tie="exclude")
+            .linear("experience", _fresh())
+            .add_stage("award").min_ratio("price", _fresh()))
+
+
+def test_no_java_compiled_for_small_local_tenders(spark, tender):
+    local, compiled = _paths(tender)
+    for build in (_fresh_plain, _fresh_staged):
+        build().evaluate(local).collect()  # warm the path once
+        assert _compiled_classes(spark, lambda: build().evaluate(local).collect()) == 0
+        assert _compiled_classes(spark, lambda: build().evaluate(compiled).collect()) > 0
+
+    rng = np.random.default_rng(3)
+    n = LOCAL_ROWS + 1
+    big = spark.createDataFrame(pd.DataFrame({
+        "price": rng.uniform(1, 100, n), "quality": rng.uniform(1, 100, n),
+        "days": rng.integers(0, 90, n), "experience": rng.integers(0, 30, n)}))
+    assert big.isLocal()
+    assert _compiled_classes(spark, lambda: _fresh_plain().evaluate(big).collect()) > 0
+    at_cap = spark.createDataFrame(big.limit(LOCAL_ROWS).toPandas())
+    # the first collect of a new output schema compiles one row projection
+    # (Spark's code cache then reuses it), so warm that once
+    _fresh_plain().evaluate(at_cap).collect()
+    assert _compiled_classes(spark, lambda: _fresh_plain().evaluate(at_cap).collect()) == 0
+
+
+def test_local_result_lives_in_callers_session(spark, tender):
+    result = _six(Evaluator()).evaluate(tender)
+    staged = _three_stages()
+    staged_result = staged.evaluate(tender)
+    frames = [result, staged_result] + [f for r in staged.get_stage_results()
+                                        for f in (r.result_df, r.advanced_df, r.eliminated_df)]
+    assert all(f.sparkSession is spark for f in frames)
+    view = f"bes_result_{uuid.uuid4().hex}"
+    result.createOrReplaceTempView(view)
+    try:
+        assert spark.sql(f"SELECT count(*) AS n FROM {view}").first()["n"] == 40
+    finally:
+        spark.catalog.dropTempView(view)
+    # the interpreted clone's confs stay off the caller's session
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+
+
+def test_stage_results_agree_across_paths(tender):
+    got = []
+    for frame in _paths(tender):
+        staged = _three_stages()
+        staged.evaluate(frame, include_details=False)
+        got.append([sorted(map(_row_key, f.collect())) for r in staged.get_stage_results()
+                    for f in (r.result_df, r.advanced_df, r.eliminated_df)])
+    assert got[0] == got[1]
+    scored, advanced, eliminated = got[0][:3]
+    assert len(scored) == 40 and len(advanced) + len(eliminated) == 40
+
+
+def test_runtime_conf_of_caller_applies_on_both_paths(spark):
+    df = spark.createDataFrame(pd.DataFrame({"a": [1.0, 5.0, 3.0], "A": [9.0, 8.0, 7.0]}))
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        outs = [Evaluator().linear("a", 1.0).evaluate(f).collect() for f in _paths(df)]
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+    assert outs[0] == outs[1]
+    assert [r["a"] for r in outs[0]] == [5.0, 3.0, 1.0]
+    errors = []
+    for frame in _paths(df):  # case-insensitive: `a` is ambiguous on both paths
+        with pytest.raises(AnalysisException) as caught:
+            Evaluator().linear("a", 1.0).evaluate(frame).collect()
+        errors.append(caught.value.getCondition())
+    assert errors[0] == errors[1]
+
+
+def test_clone_session_copies_confs_and_views(spark):
+    # the interpreted path relies on this private JVM API
+    view = f"bes_view_{uuid.uuid4().hex}"
+    spark.createDataFrame([(1,)], "x long").createOrReplaceTempView(view)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        clone = spark._jsparkSession.cloneSession()
+        assert clone.conf().get("spark.sql.caseSensitive") == "true"
+        assert clone.catalog().tableExists(view)
+        clone.conf().set("spark.sql.codegen.wholeStage", "false")
+        assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+        spark.catalog.dropTempView(view)
+
+
+def test_local_errors_surface_in_evaluate(spark, tender):
+    def broken(values, stats):
+        raise ValueError("broken scorer")
+
+    local, compiled = _paths(tender)
+    lazy = Evaluator().custom("tech", 1.0, broken).evaluate(compiled)
+    with pytest.raises(Exception, match="broken scorer"):
+        lazy.collect()
+    with pytest.raises(Exception, match="broken scorer"):
+        Evaluator().custom("tech", 1.0, broken).evaluate(local)
+
+
+def test_passthrough_columns_round_trip(spark):
+    import datetime as dt
+    from decimal import Decimal
+
+    df = _local(
+        spark, [("x", dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5, 678901), Decimal("1.25"),
+          [1, 2], {"k": 1.5}, b"\x00\x01", 3.0),
+         (None, None, None, None, None, None, None, 1.0)],
+        "s string, d date, t timestamp, m decimal(10, 2), a array<int>, "
+        "p map<string, double>, b binary, v double")
+    outs = [Evaluator().linear("v", 1.0).evaluate(f) for f in _paths(df)]
+    assert outs[0].schema == outs[1].schema
+    assert outs[0].collect() == outs[1].collect()
 
 
 def test_no_cached_frames(spark, tender):
@@ -176,6 +338,139 @@ def test_no_cached_frames(spark, tender):
     with pytest.raises(KeyError):
         broken.evaluate(tender)
     assert persistent() <= before
+
+
+# --- a null stage score fails every filter, as a pandas NaN comparison ----
+
+
+def _pandas_advances(scores, filter_type, threshold=None, top_n=None, on_tie="include"):
+    """The reference's stage filter over the active rows' stage scores."""
+    if filter_type == "score_threshold":
+        return scores >= threshold
+    if on_tie == "include":
+        return scores.rank(ascending=False, method="min") <= top_n
+    if len(scores) <= top_n:
+        return pd.Series(True, index=scores.index)
+    cutoff = scores.sort_values(ascending=False).iloc[top_n - 1]
+    return scores > cutoff if int((scores >= cutoff).sum()) > top_n else scores >= cutoff
+
+
+@pytest.mark.parametrize("flt", [
+    {"filter_type": "score_threshold", "threshold": 50},
+    {"filter_type": "top_n", "top_n": 3, "on_tie": "include"},
+    {"filter_type": "top_n", "top_n": 4, "on_tie": "include"},
+    {"filter_type": "top_n", "top_n": 3, "on_tie": "exclude"},
+    {"filter_type": "top_n", "top_n": 4, "on_tie": "exclude"},  # population <= n: all advance
+], ids=["threshold", "include3", "include4", "exclude3", "exclude4"])
+def test_null_stage_score_is_eliminated(spark, flt):
+    q = [90.0, float("nan"), 10.0, 60.0]
+    df = _local(spark, [(i, v, 1.0 + i) for i, v in enumerate(q)], "id long, q double, w double")
+    advances = _pandas_advances(pd.Series(q), **flt)
+    want = [None if a else "S1" for a in advances]
+    for frame in _paths(df):
+        st = (StagedEvaluator().add_stage("S1", **flt).direct("q", 1.0)
+              .add_stage("S2").direct("w", 1.0))
+        rows = {r["id"]: r for r in st.evaluate(frame).collect()}
+        assert [rows[i]["eliminated_at_stage"] for i in range(4)] == want
+        assert rows[1]["s1_score"] is None and rows[1]["s1_ranking"] is None
+
+
+# --- the interpreted and the compiled path agree --------------------------
+
+_CELL = st.one_of(
+    st.sampled_from([float("nan"), float("inf"), -float("inf"), None, 0.0, 1.0]),
+    st.floats(min_value=-1e3, max_value=1e3, allow_nan=False))
+
+
+@st.composite
+def _columns(draw):
+    n = draw(st.integers(min_value=0, max_value=6))
+    cols = {}
+    for c in ("a", "b", "c"):
+        shape = draw(st.sampled_from(["mixed", "constant", "tied"]))
+        if shape == "constant":
+            cols[c] = [draw(_CELL)] * n
+        elif shape == "tied":
+            cols[c] = draw(st.lists(st.sampled_from([2.0, 5.0]), min_size=n, max_size=n))
+        else:
+            cols[c] = draw(st.lists(_CELL, min_size=n, max_size=n))
+    return cols
+
+
+_KINDS = ["linear", "linear_low", "min_ratio", "threshold", "direct", "formula",
+          "template", "builtin", "custom", "untranslatable"]
+
+
+def _add(ev, kind, col, w):
+    if kind == "linear":
+        return ev.linear(col, w)
+    if kind == "linear_low":
+        return ev.linear(col, w, higher_is_better=False)
+    if kind == "min_ratio":
+        return ev.min_ratio(col, w)
+    if kind == "threshold":
+        return ev.threshold(col, w, [(-1e9, 2.0, 30), (2.0, 1e9, 80)])
+    if kind == "direct":
+        return ev.direct(col, w)
+    if kind == "formula":
+        return ev.formula(col, w, "(value - min) / (max - min) * 100")
+    if kind == "template":
+        return ev.template(col, w, "distance_from_mean")
+    if kind == "builtin":
+        return ev.custom(col, w, "proximity_to_median")
+    if kind == "custom":
+        return ev.custom(col, w, lambda v, s: (v - s["min"]) * 2.0)
+    return ev.formula(col, w, "[10, 20, 30][1] + value * 0 + (value - mean) / 10")
+
+
+_CRITERIA = st.lists(st.tuples(st.sampled_from(_KINDS), st.sampled_from("abc"),
+                               st.sampled_from([0.5, 1.0, 2.0])), min_size=1, max_size=3)
+_FILTERS = st.one_of(
+    st.none(),
+    st.fixed_dictionaries({"filter_type": st.just("score_threshold"),
+                           "threshold": st.sampled_from([0.0, 40.0, 80.0])}),
+    st.fixed_dictionaries({"filter_type": st.just("top_n"),
+                           "top_n": st.integers(min_value=1, max_value=4),
+                           "on_tie": st.sampled_from(["include", "exclude"])}))
+_STAGES = st.lists(st.tuples(_CRITERIA, _FILTERS), min_size=1, max_size=3)
+
+
+def _plain(criteria):
+    ev = Evaluator()
+    for kind, col, w in criteria:
+        _add(ev, kind, col, w)
+    return ev
+
+
+def _staged(stages, final_mode):
+    se = StagedEvaluator(final_score_mode=final_mode)
+    for k, (criteria, flt) in enumerate(stages):
+        se.add_stage(f"S{k}", **(flt or {}))
+        for kind, col, w in criteria:
+            _add(se, kind, col, w)
+    return se
+
+
+def _row_key(row):
+    """A row with NaN made comparable (NaN and null stay distinct)."""
+    return tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in row)
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(cols=_columns(), plain=_CRITERIA, stages=_STAGES,
+       final_mode=st.sampled_from(["last_stage", "weighted_combination"]),
+       use_staged=st.booleans())
+def test_interpreted_and_compiled_paths_agree(spark, cols, plain, stages, final_mode, use_staged):
+    n = len(cols["a"])
+    df = _local(spark, [(i, *(cols[c][i] for c in "abc")) for i in range(n)],
+                "id long, a double, b double, c double")
+    got = []
+    for frame in _paths(df):
+        ev = _staged(stages, final_mode) if use_staged else _plain(plain)
+        result = ev.evaluate(frame)
+        got.append((result.columns, [_row_key(r) for r in result.collect()]))
+    assert got[0] == got[1]
 
 
 # --- python-scored criteria on the batched path ---------------------------
@@ -207,57 +502,57 @@ HOSTILE = ["a`b", "x y", "p.q", "r-s", "1st", "select", "größe"]
 def test_hostile_column_and_criterion_names(spark):
     rng = np.random.default_rng(11)
     pdf = pd.DataFrame({c: rng.uniform(0, 100, 6) for c in HOSTILE})
-    df = spark.createDataFrame(pdf)
-    ev = Evaluator()
-    for k, c in enumerate(HOSTILE):
-        ev.linear(c, k + 1.0, name=HOSTILE[-1 - k])
-    rows = ev.evaluate(df).collect()
     total = sum(k + 1.0 for k in range(len(HOSTILE)))
     want = sum(_pandas_linear(pdf[c]) * (k + 1.0) for k, c in enumerate(HOSTILE)) / total
-    by_first = {r[HOSTILE[0]]: r for r in rows}
-    for i, v in pdf[HOSTILE[0]].items():
-        r = by_first[v]
-        assert r["final_score"] == pytest.approx(want[i], rel=1e-12)
+    for df in _paths(spark.createDataFrame(pdf)):
+        ev = Evaluator()
         for k, c in enumerate(HOSTILE):
-            assert r[f"score_{HOSTILE[-1 - k]}"] == pytest.approx(
-                _pandas_linear(pdf[c])[i] * (k + 1.0), rel=1e-12)
+            ev.linear(c, k + 1.0, name=HOSTILE[-1 - k])
+        by_first = {r[HOSTILE[0]]: r for r in ev.evaluate(df).collect()}
+        for i, v in pdf[HOSTILE[0]].items():
+            r = by_first[v]
+            assert r["final_score"] == pytest.approx(want[i], rel=1e-12)
+            for k, c in enumerate(HOSTILE):
+                assert r[f"score_{HOSTILE[-1 - k]}"] == pytest.approx(
+                    _pandas_linear(pdf[c])[i] * (k + 1.0), rel=1e-12)
 
 
 def test_hostile_stage_names(spark):
     names = ["it's `one`", "back\\slash -2", "select", "ünï.code"]
     pdf = pd.DataFrame({"v": [90.0, 70.0, 50.0, 30.0, 10.0], "w": [5.0, 4.0, 3.0, 2.0, 1.0]})
-    st = StagedEvaluator()
-    for k, name in enumerate(names):
-        last = k == len(names) - 1
-        st.add_stage(name, filter_type=None if last else "top_n", top_n=4 - k)
-        st.direct("v" if k % 2 == 0 else "w", 1.0)
-    rows = {r["v"]: r for r in st.evaluate(spark.createDataFrame(pdf)).collect()}
-    # top_n 4, 3, 2 on v, w, v: the lowest remaining bid leaves at each stage
-    assert [rows[v]["eliminated_at_stage"] for v in pdf["v"]] == [None, None] + names[2::-1]
-    assert rows[90.0]["ranking"] == 1 and rows[70.0]["ranking"] == 2
-    assert rows[90.0]["ünï.code_score"] == pytest.approx(5.0)
-    assert rows[70.0]["back\\slash__2_ranking"] == 2
+    for df in _paths(spark.createDataFrame(pdf)):
+        staged = StagedEvaluator()
+        for k, name in enumerate(names):
+            last = k == len(names) - 1
+            staged.add_stage(name, filter_type=None if last else "top_n", top_n=4 - k)
+            staged.direct("v" if k % 2 == 0 else "w", 1.0)
+        rows = {r["v"]: r for r in staged.evaluate(df).collect()}
+        # top_n 4, 3, 2 on v, w, v: the lowest remaining bid leaves at each stage
+        assert [rows[v]["eliminated_at_stage"] for v in pdf["v"]] == [None, None] + names[2::-1]
+        assert rows[90.0]["ranking"] == 1 and rows[70.0]["ranking"] == 2
+        assert rows[90.0]["ünï.code_score"] == pytest.approx(5.0)
+        assert rows[70.0]["back\\slash__2_ranking"] == 2
 
 
 def test_hostile_literals(spark):
     inf = float("inf")
     values = [1e308, -0.0, 0.1, -5.0]
     bands = [(-inf, 0.0, 10.0), (0.0, 0.1, 50.0), (0.1, inf, 90.0)]
-    df = spark.createDataFrame(list(enumerate(values)), "id long, v double")
+    pdf = pd.DataFrame({"id": range(len(values)), "v": values, "v2": values})
     s = pd.Series(values)
     band = pd.Series(0.0, index=s.index)
     for lo, hi, score in bands:
         band[(s >= lo) & (s < hi)] = score
     want = (band * 2.0 + s.clip(0, 100) * 1.0) / 3.0
-    rows = {r["id"]: r for r in (Evaluator().threshold("v", 2.0, bands)
-                                 .formula("v2", 1.0, "value")
-                                 .evaluate(df.withColumn("v2", F.col("v"))).collect())}
-    _check_ranked(rows, "final_score", want)
+    for df in _paths(spark.createDataFrame(pdf)):
+        rows = {r["id"]: r for r in (Evaluator().threshold("v", 2.0, bands)
+                                     .formula("v2", 1.0, "value").evaluate(df).collect())}
+        _check_ranked(rows, "final_score", want)
 
-    # a NaN target makes every score NaN: all null, none ranked
-    nan_target = Evaluator().template("v", 1.0, "budget_proximity", target=float("nan"))
-    assert all(r["final_score"] is None and r["ranking"] is None
-               for r in nan_target.evaluate(df).collect())
+        # a NaN target makes every score NaN: all null, none ranked
+        nan_target = Evaluator().template("v", 1.0, "budget_proximity", target=float("nan"))
+        assert all(r["final_score"] is None and r["ranking"] is None
+                   for r in nan_target.evaluate(df).collect())
 
 
 def test_formula_text_never_reaches_sql(spark, monkeypatch):
