@@ -8,7 +8,7 @@
 
 Query-key prefixes map to the SURVEY §2 inventory:
 F1-F13 scalar scoring transforms, A1 statistics bundles, W1/W5 windows,
-P4/P5 staged filters (inside ``staged_*``), J3 stats broadcast, O2 ordering
+P4/P5 staged filters (inside ``staged_*``), J3 stats onto rows, O2 ordering
 (inside ``staged_*``), batched evaluation (``batched_*``), S1 parquet source
 (all queries).
 
@@ -526,7 +526,7 @@ FROM sc
 
 
 # ---------------------------------------------------------------------------
-# A1/J3: statistics bundle & stats broadcast
+# A1/J3: statistics bundle & stats onto every row
 # ---------------------------------------------------------------------------
 
 def _q_a1_stats_bundle_lineitem(spark, sf_dir):
@@ -734,9 +734,9 @@ FROM s2r
 
 def _q_staged_batched_orders(spark, sf_dir):
     """Batched staged pipeline: every o_orderpriority batch runs the same
-    two-stage screen→value pipeline in ONE job — per-batch survivor stats via
-    grouped agg + broadcast join, all windows partitioned by the batch key
-    (no global exchange, driver loop per stage not per batch)."""
+    two-stage screen→value pipeline in ONE plan — per-batch survivor stats
+    as window aggregates, all windows partitioned by the batch key (no
+    global exchange, no driver loop)."""
     from bid_evaluation_spark import StagedEvaluator
 
     df = _t(spark, sf_dir, "orders")
@@ -954,9 +954,9 @@ FROM supplier, stats
 
 def _q_batched_linear_orders(spark, sf_dir):
     """Many-tender scale path: ``evaluate_batched`` scores every
-    o_orderpriority batch in ONE job — per-batch stats via one groupBy,
-    broadcast-joined back, rank windows partitioned by the batch key
-    (no global exchange, no driver loop)."""
+    o_orderpriority batch in ONE job — per-batch stats as window
+    aggregates, rank windows partitioned by the batch key (no global
+    exchange, no driver loop)."""
     from bid_evaluation_spark import Evaluator
 
     df = _t(spark, sf_dir, "orders")
@@ -997,11 +997,11 @@ FROM orders JOIN stats ON o_orderpriority = p
 
 def _q_a1_grouped_stats_orders(spark, sf_dir):
     """Per-group statistics bundle (plans/stats.py grouped_stats_df): the
-    seven-stat reference bundle per order priority in ONE shuffle — the
-    machinery behind batched evaluation's broadcast-stats join, here
-    value-checked directly (batched_linear_orders only exercises it
-    through the final scores). Exact percentile with a SHARED quantile
-    buffer per column; stddev_samp = pandas ddof=1."""
+    seven-stat reference bundle per order priority in ONE shuffle, the
+    grouped twin of the per-batch window statistics of batched evaluation
+    (which batched_linear_orders checks only through the final scores).
+    Exact percentile with a SHARED quantile buffer per column; stddev_samp
+    = pandas ddof=1."""
     from bid_evaluation_spark.plans.stats import grouped_stats_df
 
     df = _t(spark, sf_dir, "orders")

@@ -223,7 +223,9 @@ class CustomCriterion(CriterionBase):
     """User-supplied ``(values: pd.Series, stats: dict) -> pd.Series`` function
     (reference ``criteria.py:154-169``) — the user function body is unchanged
     from the reference API. The plan calls it once per partition group with
-    the group's active values and their statistics."""
+    the group's active values and their statistics; a statistic that is null
+    (no non-NaN value, or ``std`` of one value) reaches it as NaN, as pandas
+    computes it."""
 
     python_scored = True
 
@@ -234,6 +236,7 @@ class CustomCriterion(CriterionBase):
         self.evaluation_function = evaluation_function
 
     def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
+        stats = {k: np.nan if v is None else v for k, v in stats.items()}
         return pd.Series(self.evaluation_function(values, stats)).astype("float64").to_numpy()
 
 

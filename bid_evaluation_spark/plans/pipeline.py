@@ -21,11 +21,11 @@ is a one-stage pipeline. Per stage the plan computes:
    NaN comparisons are False.
 
 Then the final score, the rank over the alive bids with a score, and the
-sort. The plan is SQL text, analyzed by one ``spark.sql`` call over a
-temporary view of the input: built from Column objects, every function call
-and operator is a Python→JVM round trip (~1,800 per plain tender, ~3,800 per
-staged one), while text costs one call. Names and numbers enter the text only
-through :mod:`..functions.sql`. With keys ``[]`` the input is coalesced to one
+sort. The plan is SQL text, analyzed by ``spark.sql`` over a temporary view
+of the input: built from Column objects, every function call and operator is
+a Python→JVM round trip (~1,800 per plain tender, ~3,800 per staged one),
+while text costs one call. Names and numbers enter the text only through
+:mod:`..functions.sql`. With keys ``[]`` the input is coalesced to one
 partition, so every window shares it and the final sort needs no range
 exchange. Nothing is persisted.
 
@@ -37,17 +37,24 @@ The same text runs one of two ways:
   ~11–65 Java classes for such a tender, none reusable by the next one (its
   literals differ), which costs more than the tender's data. So the plan runs
   in a clone of the caller's session (``cloneSession()``: its runtime confs,
-  temporary views and functions) with code generation off, as one job
-  (``collectAsList``), and its rows, which never leave the JVM, become a
-  local relation in the caller's session: :meth:`Plan.result` returns data,
-  and the consumer's action runs no job. A staged evaluation counts its
-  active rows per stage (the all-eliminated warning) in the same rows,
-  through a hidden elimination index column, so it too runs one job.
+  temporary views and functions) with code generation and adaptive execution
+  off. The whole text — layers, output select and ``ORDER BY`` — is one
+  ``spark.sql`` call over one view of the input (the view is left in the
+  clone, which is thrown away with the plan), so it is analyzed once and
+  runs as one SQL execution and one job (``collectAsList``). Its rows, which
+  never leave the JVM, become a local relation in the caller's session:
+  :meth:`Plan.result` returns data, and the consumer's action runs no job.
+  A staged evaluation counts its active rows per stage (the all-eliminated
+  warning) in the same job, as an observed metric over a hidden elimination
+  index column that the JVM drops before the rows are delivered. A
+  python-scored criterion adds one view and one analysis: its grouped step
+  reads the layers before it.
 - **Compiled, lazy** — every other input (parquet, ``evaluate_batched``,
   larger local tables): :meth:`Plan.result` is a lazy frame, whose
   consumer's action runs the plan as one job with whole-stage codegen. A
   staged single-table evaluation runs one eager job first,
-  :meth:`Plan.active_counts`.
+  :meth:`Plan.active_counts`. The layers are analyzed once into a plan that
+  every result shares; views are dropped from the caller's session.
 """
 
 from __future__ import annotations
@@ -57,7 +64,7 @@ from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.sql import NULL_DOUBLE, double, ident, num, string
@@ -69,12 +76,17 @@ ELIM_COL = "eliminated_at_stage"
 #: compiled plans reach parity near this size; above it, compiled is faster.
 LOCAL_ROWS = 5_000
 
-#: Session confs of the interpreted path: no Java generated or compiled
+#: Session confs of the interpreted path: no Java generated or compiled, and
+#: no adaptive execution (a local plan has no exchange to adapt)
 _INTERPRETED = {"spark.sql.codegen.wholeStage": "false",
-                "spark.sql.codegen.factoryMode": "NO_CODEGEN"}
+                "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+                "spark.sql.adaptive.enabled": "false"}
 
 #: Hidden column of a local staged plan's rows: the eliminating stage's index
 _ELIM_IDX = "_bes_elim"
+
+#: Name of the observed metric holding a local staged plan's active rows per stage
+_ACTIVE = "_bes_active"
 
 
 def safe_name(name: str) -> str:
@@ -133,9 +145,11 @@ class Plan:
         self.approx = approx_percentiles
         self.stats_mode = stats_mode
         self.skipped: set = set()  # stages no bid reached (set by the caller)
-        # a local plan: the caller's session, and the (select, rows) it delivered
+        # a local plan: the caller's session, the (select, rows) it delivered
+        # and the active rows per stage counted while delivering them
         self._caller: Optional[SparkSession] = None
         self._delivered: Optional[Tuple[List[Tuple[str, str]], DataFrame]] = None
+        self._active: Optional[List[int]] = None
         if not self.keys:
             interpreted = _interpreted(df)
             if interpreted is not None:
@@ -174,21 +188,40 @@ class Plan:
             spec += f" ORDER BY {order}"
         return f"OVER ({spec.strip()})"
 
+    def _chain(self, view: str) -> str:
+        """The layers so far over ``view``, a view of the current input."""
+        query = f"SELECT {'/*+ COALESCE(1) */ ' if self._coalesce else ''}* FROM {view}"
+        for n, layer in enumerate(self._layers):
+            query = f"SELECT {', '.join(layer)} FROM ({query}) AS _bes_q{n}"
+        return query
+
+    def _sql(self, frame: DataFrame, query: Callable[[str], str]) -> DataFrame:
+        """``spark.sql(query(view))`` over a temporary view of ``frame``. The
+        view is dropped from the caller's session; a local plan's clone is
+        thrown away with the plan, views and all."""
+        spark = frame.sparkSession
+        view = f"_bes_src_{uuid.uuid4().hex}"
+        frame.createOrReplaceTempView(view)
+        try:
+            return spark.sql(query(view))
+        finally:
+            if self._caller is None:
+                spark.catalog.dropTempView(view)
+
     def _hidden(self) -> DataFrame:
         """The plan so far, hidden columns included, analyzed once."""
         if self._hidden_df is None:
-            def chain(view: str) -> str:
-                query = f"SELECT {'/*+ COALESCE(1) */ ' if self._coalesce else ''}* FROM {view}"
-                for n, layer in enumerate(self._layers):
-                    query = f"SELECT {', '.join(layer)} FROM ({query}) AS _bes_q{n}"
-                return query
-
-            self._hidden_df = _sql(self._frame, chain)
+            self._hidden_df = self._sql(self._frame, self._chain)
         return self._hidden_df
 
     def _run(self, select: str, tail: str = "") -> DataFrame:
-        """``SELECT <select> FROM <the plan so far> <tail>``."""
-        return _sql(self._hidden(), lambda view: f"SELECT {select} FROM {view} {tail}")
+        """``SELECT <select> FROM <the plan so far> <tail>``. A local plan
+        analyzes this whole text once; a lazy plan's results share the
+        analyzed :meth:`_hidden` plan."""
+        if self._caller is not None:
+            return self._sql(self._frame, lambda view: (
+                f"SELECT {select} FROM ({self._chain(view)}) AS _bes_out {tail}"))
+        return self._sql(self._hidden(), lambda view: f"SELECT {select} FROM {view} {tail}")
 
     # --- stages -----------------------------------------------------------
 
@@ -349,22 +382,36 @@ class Plan:
         # already delivers this order, so the sort is elided
         return "`final_score` DESC"
 
-    def _local(self, outputs: List[Tuple[str, str]]) -> DataFrame:
-        """A local plan's sorted rows with the columns ``outputs``, as a
-        local frame in the caller's session: one interpreted job, whose rows
-        stay in the JVM, unless the rows last delivered already hold every
-        such column. A staged plan's rows also carry the hidden elimination
-        index."""
-        if self._delivered is None or not set(outputs) <= set(self._delivered[0]):
-            hidden = [(_ELIM_IDX, f"{self._elim or 'CAST(NULL AS INT)'} AS {_ELIM_IDX}")]
-            select = outputs + (hidden if self.staged else [])
-            jdf = self._run(_items(select), f"ORDER BY {self._order()}")._jdf
+    def _local(self, outputs: List[Tuple[str, str]], hidden: bool = False) -> DataFrame:
+        """A local plan's sorted rows with the columns ``outputs`` (and, if
+        ``hidden``, the elimination index), as a local frame in the caller's
+        session: one interpreted job, whose rows stay in the JVM, unless the
+        rows last delivered already hold every such column. A staged plan
+        counts its active rows per stage in the same job, as an observed
+        metric over the elimination index, which the JVM then drops unless
+        ``hidden``."""
+        index = (_ELIM_IDX, f"{self._elim or 'CAST(NULL AS INT)'} AS {_ELIM_IDX}")
+        select = outputs + [index] if hidden else outputs
+        if self._delivered is None or not set(select) <= set(self._delivered[0]):
+            order = f"ORDER BY {self._order()}"
+            if self.staged:
+                counts = ", ".join(f"CAST(count(CASE WHEN {_ELIM_IDX} IS NULL OR {_ELIM_IDX} >= {i} "
+                                   f"THEN 1 END) AS STRING)" for i in range(len(self.stages)))
+                jdf = (self._run(_items(outputs + [index]), order)
+                       .observe(_ACTIVE, F.expr(f"concat_ws(',', {counts})"))._jdf)
+                if not hidden:
+                    jdf = jdf.drop(_ELIM_IDX)
+            else:
+                jdf = self._run(_items(outputs), order)._jdf
             rows = self._caller._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+            if self.staged:
+                counted = jdf.queryExecution().observedMetrics().get(_ACTIVE).get().getString(0)
+                self._active = [int(n) for n in counted.split(",")]
             self._delivered = (select, DataFrame(rows, self._caller))
-        select, rows = self._delivered
-        if select == outputs:
+        delivered, rows = self._delivered
+        if delivered == select:
             return rows
-        return rows.select(*[ident(name) for name, _ in outputs])
+        return rows.select(*[ident(name) for name, _ in select])
 
     def result(self, include_details: bool = True) -> DataFrame:
         """The evaluation's output, sorted by the output contract: lazy, or
@@ -375,13 +422,13 @@ class Plan:
         return self._local(outputs)
 
     def active_counts(self, include_details: bool = True) -> List[int]:
-        """Active rows per stage. A local plan counts them in the rows
-        :meth:`result` then delivers (the same ``include_details``), so the
-        evaluation stays one job; otherwise one job over the lazy plan."""
+        """Active rows per stage. A local plan counts them in the job that
+        delivers the rows of :meth:`result` (the same ``include_details``),
+        so the evaluation stays one job; otherwise one job over the lazy
+        plan."""
         if self._caller is not None:
             self._local(self._outputs(include_details))
-            elim = [r[0] for r in self._delivered[1].select(_ELIM_IDX).collect()]
-            return [sum(e is None or e >= i for e in elim) for i in range(len(self.stages))]
+            return self._active
         counts = ", ".join("count(1)" if e is None else f"count(CASE WHEN {e} IS NULL THEN 1 END)"
                            for e in self.elim_before)
         return list(self._run(counts).first())
@@ -407,11 +454,11 @@ class Plan:
 
     def stage_frames(self, i: int, include_details: bool = True):
         """``(stage rows, advancing rows, rows this stage eliminated)``: lazy,
-        or for a local plan filters of its delivered rows."""
+        or for a local plan filters of rows delivered with the elimination
+        index (one more interpreted job, the first time)."""
         outputs = self._outputs(include_details)
         if self._caller is not None:
-            self._local(outputs)
-            rows, e, names = self._delivered[1], _ELIM_IDX, [ident(n) for n, _ in outputs]
+            rows, e, names = self._local(outputs, hidden=True), _ELIM_IDX, [ident(n) for n, _ in outputs]
             return tuple(rows.where(cond).select(*names) for cond in
                          (f"{e} IS NULL OR {e} >= {i}", f"{e} IS NULL OR {e} > {i}", f"{e} = {i}"))
         select = _items(outputs)
@@ -425,17 +472,6 @@ class Plan:
 
 def _items(outputs: List[Tuple[str, str]]) -> str:
     return ", ".join(item for _, item in outputs)
-
-
-def _sql(frame: DataFrame, query: Callable[[str], str]) -> DataFrame:
-    """``spark.sql(query(view))`` over a temporary view of ``frame``."""
-    spark = frame.sparkSession
-    view = f"_bes_src_{uuid.uuid4().hex}"
-    frame.createOrReplaceTempView(view)
-    try:
-        return spark.sql(query(view))
-    finally:
-        spark.catalog.dropTempView(view)
 
 
 def _group_scorer(items, elim: Optional[str]):

@@ -25,9 +25,9 @@ windows — no driver loop of jobs, no persist, no join:
 :meth:`StagedEvaluator.evaluate` needs the active rows per stage, which
 drive the reference's all-eliminated warning (same text, raised during
 ``evaluate``) and answer empty input. A small driver-local input is scored
-right there, in one interpreted job whose rows also give the counts; any
-other input runs one eager counting job, and the stages run in the
-consumer's action.
+right there, in one interpreted job that also counts them (observed
+metrics); any other input runs one eager counting job, and the stages run
+in the consumer's action.
 
 Exact-parity semantics preserved (all verified against the reference —
 SURVEY §1.4): survivor-only statistics; eliminated bids keep the scores of
@@ -358,9 +358,10 @@ class StagedEvaluator:
 
     def get_stage_results(self) -> List[StageResult]:
         """Per stage, frames of its scored, advancing and eliminated rows
-        (all with the full output columns), in the caller's session: slices
-        of the delivered rows when :meth:`evaluate` scored a small local
-        input at call time, else lazy."""
+        (all with the full output columns), in the caller's session: when
+        :meth:`evaluate` scored a small local input at call time, slices of
+        rows delivered with the elimination index (one more interpreted job,
+        on the first call), else lazy."""
         if not self._evaluated:
             raise RuntimeError("Call evaluate() before get_stage_results().")
         plan = self._last_plan

@@ -1,12 +1,14 @@
-"""The evaluation plan: what it costs (Python→JVM calls, Spark jobs, Java
-classes compiled, cached frames), its two ways to run (interpreted for a small
-driver-local input, compiled and lazy otherwise) and their agreement, NaN and
-±inf at the statistics, ranking and elimination boundary, python-scored
-criteria on the batched path, and SQL-text safety for hostile names and
-literals. Expected scores are computed with pandas in each test."""
+"""The evaluation plan: what it costs (Python→JVM calls, Spark jobs, SQL
+executions, Java classes compiled, cached frames, temporary views), its two
+ways to run (interpreted for a small driver-local input, compiled and lazy
+otherwise) and their agreement, NaN and ±inf at the statistics, ranking and
+elimination boundary, python-scored criteria on the batched path, and
+SQL-text safety for hostile names and literals. Expected scores are computed
+with pandas in each test."""
 
 import math
 import uuid
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -102,6 +104,17 @@ def test_inf_bid_under_linear_is_unranked(spark):
     assert [r["id"] for r in Evaluator().linear("v", 1.0).evaluate(df).collect()][-1] == 1
 
 
+def test_custom_function_gets_nan_for_missing_statistics(spark):
+    # pandas' min of an all-NaN column and std of one value are NaN, where
+    # Spark's aggregates are null; the function must not see None
+    df = _local(spark, [(0, float("nan"), 1.0), (1, float("nan"), None)],
+                "id long, v double, w double")
+    for frame in _paths(df):
+        ev = (Evaluator().custom("v", 1.0, lambda v, s: v - s["min"])
+              .custom("w", 1.0, lambda v, s: v * 0 + s["std"]))
+        assert [r["final_score"] for r in ev.evaluate(frame).collect()] == [None, None]
+
+
 # --- what an evaluation costs ---------------------------------------------
 
 
@@ -190,6 +203,34 @@ def test_job_counts(spark, tender):
     assert _jobs(spark, lambda: _three_stages().evaluate(local).collect()) == 1
     assert _jobs(spark, lambda: _six(Evaluator()).evaluate(compiled).collect()) == 1
     assert _jobs(spark, lambda: _three_stages().evaluate(compiled).collect()) <= 2
+
+
+def _executions(spark, action):
+    """SQL executions Spark started while ``action`` ran (execution ids are
+    consecutive; the status store may have dropped old executions, never
+    the newest)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return store.executionsList().last().executionId()
+
+    before = newest()
+    action()
+    return newest() - before
+
+
+def test_sql_executions_per_local_evaluation(spark, tender):
+    # the input view, the interpreted job and the consumer's collect; a
+    # python-scored criterion adds the view its grouped step reads
+    def custom():
+        return (Evaluator().linear("price", 1.0)
+                .custom("tech", 1.0, lambda v, s: (v - s["min"]) * 2.0))
+
+    for build, budget in ((lambda: _six(Evaluator()), 3), (_three_stages, 3), (custom, 4)):
+        build().evaluate(tender).collect()  # warm the path once
+        assert _executions(spark, lambda: build().evaluate(tender).collect()) <= budget
+        assert _jobs(spark, lambda: build().evaluate(tender).collect()) == 1
 
 
 def _compiled_classes(spark, action):
@@ -323,6 +364,45 @@ def test_passthrough_columns_round_trip(spark):
     outs = [Evaluator().linear("v", 1.0).evaluate(f) for f in _paths(df)]
     assert outs[0].schema == outs[1].schema
     assert outs[0].collect() == outs[1].collect()
+
+
+def _bes_views(session):
+    return {t.name for t in session.catalog.listTables() if t.name.startswith("_bes_")}
+
+
+def test_no_temp_views_left_in_callers_session(spark, tender):
+    def broken(values, stats):
+        raise ValueError("broken scorer")
+
+    ambiguous = spark.createDataFrame(pd.DataFrame({"a": [1.0, 5.0], "A": [9.0, 8.0]}))
+    before = _bes_views(spark)
+    for frame, clash in zip(_paths(tender), _paths(ambiguous)):
+        ev = _six(Evaluator())
+        ev.evaluate(frame).collect()
+        ev.get_statistics()
+        staged = _three_stages()
+        staged.evaluate(frame).collect()
+        staged.get_statistics()
+        for r in staged.get_stage_results():
+            r.eliminated_df.collect()
+        assert _bes_views(spark) == before
+        failing = StagedEvaluator().add_stage("one").custom("tech", 1.0, broken)
+        with pytest.raises(Exception, match="broken scorer"):
+            failing.evaluate(frame).collect()
+        with pytest.raises(AnalysisException):  # `a` is ambiguous: analysis fails
+            Evaluator().linear("a", 1.0).evaluate(clash).collect()
+        assert _bes_views(spark) == before
+    # a lazy evaluation whose statistics job fails
+    lazy = Evaluator().custom("tech", 1.0, broken)
+    lazy.evaluate(_paths(tender)[1])
+    with pytest.raises(Exception, match="broken scorer"):
+        lazy.get_statistics()
+    assert _bes_views(spark) == before
+    # a local plan's views live in its clone only
+    ev = _six(Evaluator())
+    ev.evaluate(tender)
+    clone = ev._last_plan._frame.sparkSession
+    assert clone is not spark and _bes_views(clone) and _bes_views(spark) == before
 
 
 def test_no_cached_frames(spark, tender):
@@ -468,8 +548,13 @@ def test_interpreted_and_compiled_paths_agree(spark, cols, plain, stages, final_
     got = []
     for frame in _paths(df):
         ev = _staged(stages, final_mode) if use_staged else _plain(plain)
-        result = ev.evaluate(frame)
-        got.append((result.columns, [_row_key(r) for r in result.collect()]))
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            result = ev.evaluate(frame)
+        # the local plan's observed counts, the lazy plan's counting job
+        counts = ev._last_plan.active_counts() if use_staged else None
+        eliminated = [str(w.message) for w in caught if "were eliminated" in str(w.message)]
+        got.append((result.columns, [_row_key(r) for r in result.collect()], counts, eliminated))
     assert got[0] == got[1]
 
 
