@@ -49,7 +49,7 @@ from .sql import double, num, value
 Stats = Mapping[str, Any]
 
 #: the reference's full statistics bundle (``criteria.py:19-29``)
-ALL_STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
+STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
 
 
 class CriterionBase(ABC):
@@ -61,7 +61,7 @@ class CriterionBase(ABC):
 
     #: the statistics this criterion's expression actually reads — the plan
     #: computes only these. Conservative default: everything.
-    required_stat_keys: Sequence[str] = ALL_STAT_KEYS
+    required_stat_keys: Sequence[str] = STAT_KEYS
 
     #: scored in Python over each partition group (see :meth:`python_score`)
     #: rather than as a SQL expression

@@ -234,40 +234,33 @@ class Evaluator:
         return plan
 
     def evaluate(self, df: DataFrame, include_details: bool = True,
-                 rank_partition_by: Optional[str] = None,
-                 stats_mode: str = "full",
-                 approx_percentiles: bool = False) -> DataFrame:
+                 stats_mode: str = "full") -> DataFrame:
         """Evaluate all bids → scored, ranked, sorted DataFrame.
 
-        A driver-local ``df`` (``df.isLocal()``, e.g. from
+        The result is the plan's one output frame (see :mod:`.pipeline`),
+        less the detail columns when ``include_details`` is false. A
+        driver-local ``df`` (``df.isLocal()``, e.g. from
         ``createDataFrame(pandas_df)``) of at most
         :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
         interpreted job: the result is a local frame in ``df``'s session,
-        and errors surface here. Any other input gets a lazy frame.
+        and errors surface here. Any other input gets a lazy frame, which
+        its consumer's action runs as one job.
 
         Args:
             df: bid table (one row per bid).
             include_details: include per-criterion ``score_{name}`` columns.
-            rank_partition_by: optional column to partition the ranking window
-                by (statistics stay over the whole table).
             stats_mode: what :meth:`get_statistics` reports — ``"full"``
                 (default, reference parity: the whole 7-stat bundle per
                 criterion column) or ``"required"`` (only the stats each
                 criterion's expression reads). Scores are identical: the plan
                 computes only the statistics its expressions read either way.
-            approx_percentiles: compute median/q25/q75 with
-                ``percentile_approx`` (O(1) sketch state per column) instead
-                of the reference-exact ``percentile`` (which buffers every
-                value) — the 100-TB quantile path; ≤0.01% rank error,
-                min/max/mean/std stay exact. Documented divergence.
         """
         if stats_mode not in ("full", "required"):
             raise ValueError(
                 f"stats_mode must be 'full' or 'required', got: {stats_mode}"
             )
-        plan = self._plan(df, [], rank_by=rank_partition_by, stats_mode=stats_mode,
-                          approx_percentiles=approx_percentiles)
-        return plan.result(include_details)
+        plan = self._plan(df, [], include_details=include_details, stats_mode=stats_mode)
+        return plan.result()
 
     def evaluate_batched(self, df: DataFrame, batch_col: str,
                          include_details: bool = True) -> DataFrame:
@@ -282,7 +275,7 @@ class Evaluator:
         :meth:`evaluate`. :meth:`get_statistics` is unavailable here
         (statistics are per batch).
         """
-        return self._plan(df, [batch_col]).result(include_details)
+        return self._plan(df, [batch_col], include_details=include_details).result()
 
     # === Introspection — reference evaluator.py:321-344 ===
 

@@ -29,38 +29,44 @@ while text costs one call. Names and numbers enter the text only through
 partition, so every window shares it and the final sort needs no range
 exchange. Nothing is persisted.
 
-The same text runs one of two ways:
+An evaluation is one text, analyzed once: the layers, every output column
+(details included), for a staged plan the elimination index ``_bes_elim``
+(the eliminating stage, null while a bid is alive), and the ``ORDER BY``.
+Every result is derived from its output frame: :meth:`Plan.result` drops
+the index, the columns of stages no bid reached and, without details, the
+detail columns; :meth:`Plan.stage_frames` filters on the index;
+:meth:`Plan.active_counts` and :meth:`Plan.statistics` aggregate over it,
+stage ``i``'s active rows being ``_bes_elim IS NULL OR _bes_elim >= i``.
+
+The two ways to run the text differ only in how the frame's rows are
+delivered:
 
 - **Interpreted, now** — a single-table evaluation whose input is a
   driver-local relation (``df.isLocal()``, e.g. ``createDataFrame(pandas)``)
   of at most :data:`LOCAL_ROWS` rows. Spark would generate and compile
   ~11–65 Java classes for such a tender, none reusable by the next one (its
-  literals differ), which costs more than the tender's data. So the plan runs
-  in a clone of the caller's session (``cloneSession()``: its runtime confs,
-  temporary views and functions) with code generation and adaptive execution
-  off. The whole text — layers, output select and ``ORDER BY`` — is one
-  ``spark.sql`` call over one view of the input (the view is left in the
-  clone, which is thrown away with the plan), so it is analyzed once and
-  runs as one SQL execution and one job (``collectAsList``). Its rows, which
-  never leave the JVM, become a local relation in the caller's session:
-  :meth:`Plan.result` returns data, and the consumer's action runs no job.
-  A staged evaluation counts its active rows per stage (the all-eliminated
-  warning) in the same job, as an observed metric over a hidden elimination
-  index column that the JVM drops before the rows are delivered. A
-  python-scored criterion adds one view and one analysis: its grouped step
-  reads the layers before it.
+  literals differ), which costs more than the tender's data. So the text
+  runs in a clone of the caller's session (``cloneSession()``: its runtime
+  confs, temporary views and functions) with code generation and adaptive
+  execution off, over a view left in the clone (thrown away with the plan),
+  as one SQL execution and one job (``collectAsList``) when the plan is
+  built. Its rows, index included, never leave the JVM: they become a local
+  relation in the caller's session, so every result is data, and its
+  consumer's action runs no job. A staged plan counts its active rows per
+  stage in the same job, as an observed metric. A python-scored criterion
+  adds one view and one analysis: its grouped step reads the layers before
+  it.
 - **Compiled, lazy** — every other input (parquet, ``evaluate_batched``,
-  larger local tables): :meth:`Plan.result` is a lazy frame, whose
-  consumer's action runs the plan as one job with whole-stage codegen. A
-  staged single-table evaluation runs one eager job first,
-  :meth:`Plan.active_counts`. The layers are analyzed once into a plan that
-  every result shares; views are dropped from the caller's session.
+  larger local tables): the frame is lazy, and its consumer's action runs it
+  as one job with whole-stage codegen. A staged single-table evaluation runs
+  one eager job first, :meth:`Plan.active_counts`. Views are dropped from
+  the caller's session.
 """
 
 from __future__ import annotations
 
 import uuid
-from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -82,7 +88,7 @@ _INTERPRETED = {"spark.sql.codegen.wholeStage": "false",
                 "spark.sql.codegen.factoryMode": "NO_CODEGEN",
                 "spark.sql.adaptive.enabled": "false"}
 
-#: Hidden column of a local staged plan's rows: the eliminating stage's index
+#: Hidden column of a staged plan's output frame: the eliminating stage's index
 _ELIM_IDX = "_bes_elim"
 
 #: Name of the observed metric holding a local staged plan's active rows per stage
@@ -97,6 +103,11 @@ def safe_name(name: str) -> str:
 def _alive(elim: Optional[str]) -> Optional[str]:
     """Rows not eliminated under elimination column ``elim`` (None: all)."""
     return None if elim is None else f"({elim} IS NULL)"
+
+
+def _active_at(i: int) -> str:
+    """Rows of the output frame active at stage ``i``: not eliminated before it."""
+    return f"({_ELIM_IDX} IS NULL OR {_ELIM_IDX} >= {i})"
 
 
 def _interpreted(df: DataFrame) -> Optional[DataFrame]:
@@ -116,9 +127,13 @@ def _interpreted(df: DataFrame) -> Optional[DataFrame]:
     conf = jclone.conf()
     for key, value in _INTERPRETED.items():
         conf.set(key, value)
-    clone = SparkSession(caller.sparkContext, jclone)
-    dataset = getattr(caller._jvm, "org.apache.spark.sql.classic.Dataset")
-    return DataFrame(dataset.ofRows(jclone, qe.logical()), clone)
+    return _rebind(qe.logical(), SparkSession(caller.sparkContext, jclone))
+
+
+def _rebind(plan, session: SparkSession) -> DataFrame:
+    """A frame of the JVM logical ``plan`` in ``session``."""
+    dataset = getattr(session._jvm, "org.apache.spark.sql.classic.Dataset")
+    return DataFrame(dataset.ofRows(session._jsparkSession, plan), session)
 
 
 class Plan:
@@ -127,28 +142,27 @@ class Plan:
     ``stages`` holds ``(name, evaluator, filter, weight)`` per stage;
     ``staged`` selects the staged output contract (elimination column,
     per-stage score and ranking columns, ``final_mode``) over the plain one
-    (``score_<name>`` columns, ``final_score``, ``ranking``). A single-table
-    plan over a small driver-local input is *local*: it runs interpreted in a
-    clone of the caller's session, and its outputs are delivered now (see
-    the module docstring).
+    (``score_<name>`` columns, ``final_score``, ``ranking``);
+    ``include_details`` keeps the per-criterion columns in :meth:`result`.
+    A single-table plan over a small driver-local input is *local*: it runs
+    interpreted in a clone of the caller's session, and its output frame is
+    delivered as data when the plan is built (see the module docstring).
     """
 
     def __init__(self, df: DataFrame, columns: Sequence[str], keys: Sequence[str],
                  stages: Sequence[Tuple[str, Any, Any, float]], *, staged: bool,
-                 final_mode: str = "last_stage", rank_by: Optional[str] = None,
-                 approx_percentiles: bool = False, stats_mode: str = "full"):
+                 final_mode: str = "last_stage", include_details: bool = True,
+                 stats_mode: str = "full"):
         self.columns = list(columns)
         self.keys = list(keys)
         self.stages = list(stages)
         self.staged = staged
-        self.rank_by = rank_by
-        self.approx = approx_percentiles
+        self.include_details = include_details
         self.stats_mode = stats_mode
         self.skipped: set = set()  # stages no bid reached (set by the caller)
-        # a local plan: the caller's session, the (select, rows) it delivered
-        # and the active rows per stage counted while delivering them
+        # a local plan: the caller's session, and the active rows per stage
+        # counted while delivering the output frame
         self._caller: Optional[SparkSession] = None
-        self._delivered: Optional[Tuple[List[Tuple[str, str]], DataFrame]] = None
         self._active: Optional[List[int]] = None
         if not self.keys:
             interpreted = _interpreted(df)
@@ -158,16 +172,15 @@ class Plan:
         self._coalesce = not self.keys
         self._layers: List[List[str]] = []
         self._cols = list(self.columns)
-        self._hidden_df: Optional[DataFrame] = None
         self._statistics: Optional[List[Dict[str, Dict]]] = None
         self._elim: Optional[str] = None
-        # elimination column before and after each stage (None: no filter yet)
-        self.elim_before: List[Optional[str]] = []
-        self.elim_after: List[Optional[str]] = []
         self.details: List[Dict[str, str]] = []  # output name → hidden column
         for i, stage in enumerate(self.stages):
             self._stage(i, *stage, last=i == len(self.stages) - 1)
         self._final(final_mode)
+        self._out = self._select(self._outputs(), f"ORDER BY {self._order()}")
+        if self._caller is not None:
+            self._out = self._deliver(self._out)
 
     # --- SQL text ---------------------------------------------------------
 
@@ -176,11 +189,9 @@ class Plan:
         if exprs:
             self._layers.append(["*"] + [f"{e} AS {n}" for n, e in exprs.items()])
             self._cols += list(exprs)
-            self._hidden_df = None
 
-    def _over(self, extra: Optional[str] = None, order: Optional[str] = None,
-              keys: Optional[Sequence[str]] = None) -> str:
-        parts = [ident(k) for k in (self.keys if keys is None else keys)]
+    def _over(self, extra: Optional[str] = None, order: Optional[str] = None) -> str:
+        parts = [ident(k) for k in self.keys]
         if extra:
             parts.append(extra)
         spec = f"PARTITION BY {', '.join(parts)}" if parts else ""
@@ -188,46 +199,27 @@ class Plan:
             spec += f" ORDER BY {order}"
         return f"OVER ({spec.strip()})"
 
-    def _chain(self, view: str) -> str:
-        """The layers so far over ``view``, a view of the current input."""
+    def _select(self, select: str, tail: str = "") -> DataFrame:
+        """``SELECT <select> FROM <the layers so far> <tail>``, analyzed once
+        by ``spark.sql`` over a temporary view of the current input. The view
+        is dropped from the caller's session; a local plan's clone is thrown
+        away with the plan, views and all."""
+        spark = self._frame.sparkSession
+        view = f"_bes_src_{uuid.uuid4().hex}"
         query = f"SELECT {'/*+ COALESCE(1) */ ' if self._coalesce else ''}* FROM {view}"
         for n, layer in enumerate(self._layers):
             query = f"SELECT {', '.join(layer)} FROM ({query}) AS _bes_q{n}"
-        return query
-
-    def _sql(self, frame: DataFrame, query: Callable[[str], str]) -> DataFrame:
-        """``spark.sql(query(view))`` over a temporary view of ``frame``. The
-        view is dropped from the caller's session; a local plan's clone is
-        thrown away with the plan, views and all."""
-        spark = frame.sparkSession
-        view = f"_bes_src_{uuid.uuid4().hex}"
-        frame.createOrReplaceTempView(view)
+        self._frame.createOrReplaceTempView(view)
         try:
-            return spark.sql(query(view))
+            return spark.sql(f"SELECT {select} FROM ({query}) AS _bes_out {tail}")
         finally:
             if self._caller is None:
                 spark.catalog.dropTempView(view)
-
-    def _hidden(self) -> DataFrame:
-        """The plan so far, hidden columns included, analyzed once."""
-        if self._hidden_df is None:
-            self._hidden_df = self._sql(self._frame, self._chain)
-        return self._hidden_df
-
-    def _run(self, select: str, tail: str = "") -> DataFrame:
-        """``SELECT <select> FROM <the plan so far> <tail>``. A local plan
-        analyzes this whole text once; a lazy plan's results share the
-        analyzed :meth:`_hidden` plan."""
-        if self._caller is not None:
-            return self._sql(self._frame, lambda view: (
-                f"SELECT {select} FROM ({self._chain(view)}) AS _bes_out {tail}"))
-        return self._sql(self._hidden(), lambda view: f"SELECT {select} FROM {view} {tail}")
 
     # --- stages -----------------------------------------------------------
 
     def _stage(self, i: int, name: str, evaluator, flt, weight: float, last: bool) -> None:
         active = _alive(self._elim)
-        self.elim_before.append(self._elim)
         crits = list(evaluator.criteria.items())
         windows: Dict[str, str] = {}
         refs: Dict[str, Dict[str, str]] = {}
@@ -235,7 +227,7 @@ class Plan:
         for j, (col, crit) in enumerate(crits):
             keys = crit.required_stat_keys
             cols = {}
-            for k, agg in stat_aggregates(stat_input(ident(col), active), keys, self.approx).items():
+            for k, agg in stat_aggregates(stat_input(ident(col), active), keys).items():
                 cols[k] = f"_bes_{i}_{j}_{k}"
                 windows[cols[k]] = f"{agg} {self._over()}"
             refs[col] = stat_refs(cols, keys)
@@ -298,7 +290,6 @@ class Plan:
             layer[e] = f"CASE WHEN {cond} THEN {i} ELSE {self._elim or 'CAST(NULL AS INT)'} END"
             self._elim = e
         self._add(layer)
-        self.elim_after.append(self._elim)
 
     def _python(self, items) -> None:
         """Score python criteria in one grouped Arrow step over the keys.
@@ -307,7 +298,7 @@ class Plan:
         every column name) and as Arrow data, so payload values — NaN
         included — pass through untouched."""
         pos = {c: f"_bes_p{k}" for k, c in enumerate(self._cols)}
-        frame = self._run(", ".join(f"{ident(c)} AS {p}" for c, p in pos.items()))
+        frame = self._select(", ".join(f"{ident(c)} AS {p}" for c, p in pos.items()))
         outs = [out for out, _, _, _ in items]
         schema = StructType(frame.schema.fields + [StructField(o, DoubleType()) for o in outs])
         scorer = _group_scorer([(out, pos[col], {k: (pos[c], idx) for k, (c, idx) in sc.items()}, crit)
@@ -316,7 +307,6 @@ class Plan:
         self._coalesce = False
         self._layers = [[f"{p} AS {ident(c)}" for c, p in pos.items()] + outs]
         self._cols += outs
-        self._hidden_df = None
 
     def _final(self, final_mode: str) -> None:
         if not self.staged:
@@ -335,108 +325,115 @@ class Plan:
             self._add({self._f: final})
         alive = _alive(self._elim)
         ranked = f"{self._f} IS NOT NULL" if alive is None else f"({alive} AND {self._f} IS NOT NULL)"
-        keys = self.keys + ([self.rank_by] if self.rank_by else [])
         self._add({"_bes_rank": f"CASE WHEN {ranked} THEN CAST(rank() "
-                                f"{self._over(alive, f'{self._f} DESC', keys)} AS BIGINT) END"})
+                                f"{self._over(alive, f'{self._f} DESC')} AS BIGINT) END"})
 
     # --- output -----------------------------------------------------------
 
-    def _outputs(self, include_details: bool) -> List[Tuple[str, str]]:
-        """The output columns as ``(name, select item)`` pairs."""
+    def _outputs(self) -> str:
+        """The output frame's select list: the input columns (an output named
+        like one replaces it in place), every output column, and the hidden
+        columns no result shows — a staged plan's elimination index, and a
+        copy of each criterion column an output replaced, for
+        :meth:`statistics`. Records which output columns a result may drop."""
         outputs: Dict[str, str] = {}
+        stage_of: Dict[str, Tuple[int, bool]] = {}  # output → (stage, is a detail)
         if self.staged:
             cases = " ".join(f"WHEN {i} THEN {string(name)}"
                              for i, (name, _, _, _) in enumerate(self.stages))
             outputs[ELIM_COL] = (f"CASE {self._elim} {cases} END" if self._elim
                                  else "CAST(NULL AS STRING)")
+        inputs = {c.lower() for c in self.columns}
         for i, (name, _, _, _) in enumerate(self.stages):
-            if i in self.skipped:
-                continue
-            if include_details:
-                outputs.update(self.details[i])
+            for out, col in self.details[i].items():
+                # without details, an input column named like one stays as it is
+                if self.include_details or out.lower() not in inputs:
+                    outputs[out], stage_of[out] = col, (i, True)
             if self.staged:
-                outputs[f"{safe_name(name)}_score"] = f"_bes_{i}_s"
-                outputs[f"{safe_name(name)}_ranking"] = f"_bes_{i}_r"
+                for out, col in ((f"{safe_name(name)}_score", f"_bes_{i}_s"),
+                                 (f"{safe_name(name)}_ranking", f"_bes_{i}_r")):
+                    outputs[out], stage_of[out] = col, (i, False)
         outputs["final_score"] = self._f
         outputs["ranking"] = "_bes_rank"
-        # an output named like an input column replaces it in place
         by_lower = {k.lower(): k for k in outputs}
+        criteria = {col for _, evaluator, _, _ in self.stages for col in evaluator.criteria}
         select, used = [], set()
+        self._inputs: Dict[str, str] = {}  # replaced criterion column → its copy
         for c in self.columns:
             k = by_lower.get(c.lower())
             if k is not None and k not in used:
                 used.add(k)
-                select.append((k, f"{outputs[k]} AS {ident(k)}"))
+                select.append(f"{outputs[k]} AS {ident(k)}")
+                if c in criteria:
+                    self._inputs[c] = f"_bes_in{len(self._inputs)}"
             else:
-                select.append((c, ident(c)))
-        select += [(k, f"{e} AS {ident(k)}") for k, e in outputs.items() if k not in used]
-        return select
+                select.append(ident(c))
+        select += [f"{e} AS {ident(k)}" for k, e in outputs.items() if k not in used]
+        select += [f"{ident(c)} AS {n}" for c, n in self._inputs.items()]
+        self._hidden = list(self._inputs.values())
+        if self.staged:
+            select.append(f"{self._elim or 'CAST(NULL AS INT)'} AS {_ELIM_IDX}")
+            self._hidden.append(_ELIM_IDX)
+        # an input column, like the contract's own columns, is in every result
+        kept = used | {ELIM_COL, "final_score", "ranking"}
+        self._droppable = {k: at for k, at in stage_of.items() if k not in kept}
+        return ", ".join(select)
 
     def _order(self) -> str:
         keys = [f"{ident(k)} ASC" for k in self.keys]
         if self.staged:
             return ", ".join(keys + ["`ranking` ASC NULLS LAST", "`final_score` DESC NULLS LAST"])
-        if keys or self.rank_by:
+        if keys:
             return ", ".join(keys + ["`ranking` ASC NULLS LAST"])
         # ranking ascending ≡ final_score descending, and the rank window
         # already delivers this order, so the sort is elided
         return "`final_score` DESC"
 
-    def _local(self, outputs: List[Tuple[str, str]], hidden: bool = False) -> DataFrame:
-        """A local plan's sorted rows with the columns ``outputs`` (and, if
-        ``hidden``, the elimination index), as a local frame in the caller's
-        session: one interpreted job, whose rows stay in the JVM, unless the
-        rows last delivered already hold every such column. A staged plan
-        counts its active rows per stage in the same job, as an observed
-        metric over the elimination index, which the JVM then drops unless
-        ``hidden``."""
-        index = (_ELIM_IDX, f"{self._elim or 'CAST(NULL AS INT)'} AS {_ELIM_IDX}")
-        select = outputs + [index] if hidden else outputs
-        if self._delivered is None or not set(select) <= set(self._delivered[0]):
-            order = f"ORDER BY {self._order()}"
-            if self.staged:
-                counts = ", ".join(f"CAST(count(CASE WHEN {_ELIM_IDX} IS NULL OR {_ELIM_IDX} >= {i} "
-                                   f"THEN 1 END) AS STRING)" for i in range(len(self.stages)))
-                jdf = (self._run(_items(outputs + [index]), order)
-                       .observe(_ACTIVE, F.expr(f"concat_ws(',', {counts})"))._jdf)
-                if not hidden:
-                    jdf = jdf.drop(_ELIM_IDX)
-            else:
-                jdf = self._run(_items(outputs), order)._jdf
-            rows = self._caller._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
-            if self.staged:
-                counted = jdf.queryExecution().observedMetrics().get(_ACTIVE).get().getString(0)
-                self._active = [int(n) for n in counted.split(",")]
-            self._delivered = (select, DataFrame(rows, self._caller))
-        delivered, rows = self._delivered
-        if delivered == select:
-            return rows
-        return rows.select(*[ident(name) for name, _ in select])
+    def _counts(self) -> str:
+        """Active rows per stage over the output frame, as one string."""
+        counts = ", ".join(f"CAST(count(CASE WHEN {_active_at(i)} THEN 1 END) AS STRING)"
+                           for i in range(len(self.stages)))
+        return f"concat_ws(',', {counts})"
 
-    def result(self, include_details: bool = True) -> DataFrame:
+    def _deliver(self, frame: DataFrame) -> DataFrame:
+        """A local plan's output frame as data in the caller's session: one
+        interpreted job in the clone, whose rows stay in the JVM. A staged
+        plan counts its active rows per stage in the same job, as an
+        observed metric."""
+        if self.staged:
+            frame = frame.observe(_ACTIVE, F.expr(self._counts()))
+        jdf = frame._jdf
+        rows = self._caller._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+        if self.staged:
+            counted = jdf.queryExecution().observedMetrics().get(_ACTIVE).get().getString(0)
+            self._active = [int(n) for n in counted.split(",")]
+        return DataFrame(rows, self._caller)
+
+    def _without(self, frame: DataFrame, details: bool) -> DataFrame:
+        """``frame`` without the hidden columns, the columns of stages no bid
+        reached and, unless ``details``, the detail columns."""
+        names = self._hidden + [k for k, (i, detail) in self._droppable.items()
+                                if i in self.skipped or (detail and not details)]
+        return frame.drop(*names) if names else frame
+
+    def result(self) -> DataFrame:
         """The evaluation's output, sorted by the output contract: lazy, or
-        for a local plan scored now."""
-        outputs = self._outputs(include_details)
-        if self._caller is None:
-            return self._run(_items(outputs), f"ORDER BY {self._order()}")
-        return self._local(outputs)
+        for a local plan data."""
+        return self._without(self._out, self.include_details)
 
-    def active_counts(self, include_details: bool = True) -> List[int]:
-        """Active rows per stage. A local plan counts them in the job that
-        delivers the rows of :meth:`result` (the same ``include_details``),
-        so the evaluation stays one job; otherwise one job over the lazy
-        plan."""
-        if self._caller is not None:
-            self._local(self._outputs(include_details))
-            return self._active
-        counts = ", ".join("count(1)" if e is None else f"count(CASE WHEN {e} IS NULL THEN 1 END)"
-                           for e in self.elim_before)
-        return list(self._run(counts).first())
+    def active_counts(self) -> List[int]:
+        """Active rows per stage: counted while a local plan's rows were
+        delivered, else by one job over the lazy output frame."""
+        if self._active is None:
+            counted = self._out.selectExpr(self._counts()).first()[0]
+            self._active = [int(n) for n in counted.split(",")]
+        return self._active
 
     def statistics(self) -> List[Dict[str, Dict[str, Optional[float]]]]:
         """Per stage ``{column: stats}`` as reported by ``get_statistics()``:
-        one job when first called; ``stats_mode`` chooses the bundle. Empty
-        for batched plans, whose statistics are per batch."""
+        one job over the output frame, in the plan's session (a local plan's
+        clone runs it interpreted), when first called; ``stats_mode`` chooses
+        the bundle. Empty for batched plans, whose statistics are per batch."""
         if self._statistics is None:
             requests, where = [], []
             for i, (_, evaluator, _, _) in enumerate(self.stages):
@@ -444,34 +441,28 @@ class Plan:
                     continue
                 for col, crit in evaluator.criteria.items():
                     keys = STAT_KEYS if self.stats_mode == "full" else crit.required_stat_keys
-                    requests.append((ident(col), _alive(self.elim_before[i]), keys))
+                    requests.append((self._inputs.get(col, ident(col)),
+                                     _active_at(i) if i else None, keys))
                     where.append((i, col))
-            values = collect_stats(self._hidden(), requests, self.approx) if requests else []
+            values = []
+            if requests:
+                out = self._out._jdf.queryExecution().analyzed()
+                values = collect_stats(_rebind(out, self._frame.sparkSession), requests)
             self._statistics = [{} for _ in self.stages]
             for (i, col), st in zip(where, values):
                 self._statistics[i][col] = st
         return self._statistics
 
-    def stage_frames(self, i: int, include_details: bool = True):
-        """``(stage rows, advancing rows, rows this stage eliminated)``: lazy,
-        or for a local plan filters of rows delivered with the elimination
-        index (one more interpreted job, the first time)."""
-        outputs = self._outputs(include_details)
-        if self._caller is not None:
-            rows, e, names = self._local(outputs, hidden=True), _ELIM_IDX, [ident(n) for n, _ in outputs]
-            return tuple(rows.where(cond).select(*names) for cond in
-                         (f"{e} IS NULL OR {e} >= {i}", f"{e} IS NULL OR {e} > {i}", f"{e} = {i}"))
-        select = _items(outputs)
-        before, after = self.elim_before[i], self.elim_after[i]
-        frame = self._run(select, f"WHERE {before} IS NULL" if before else "")
-        if after == before:
-            return frame, frame, self._run(select, "WHERE false")
-        return (frame, self._run(select, f"WHERE {after} IS NULL"),
-                self._run(select, f"WHERE {after} = {i}"))
-
-
-def _items(outputs: List[Tuple[str, str]]) -> str:
-    return ", ".join(item for _, item in outputs)
+    def stage_frames(self, i: int) -> Tuple[DataFrame, DataFrame, DataFrame]:
+        """``(stage rows, advancing rows, rows this stage eliminated)``, with
+        details: filters of the output frame on the elimination index."""
+        e = _ELIM_IDX
+        # the last stage and a stage without a filter eliminate no row: a
+        # false filter lets the optimizer skip the job
+        eliminates = self.stages[i][2] is not None and i < len(self.stages) - 1
+        return tuple(self._without(self._out.where(cond), True)
+                     for cond in (_active_at(i), f"{e} IS NULL OR {e} > {i}",
+                                  f"{e} = {i}" if eliminates else "false"))
 
 
 def _group_scorer(items, elim: Optional[str]):

@@ -26,8 +26,8 @@ windows — no driver loop of jobs, no persist, no join:
 drive the reference's all-eliminated warning (same text, raised during
 ``evaluate``) and answer empty input. A small driver-local input is scored
 right there, in one interpreted job that also counts them (observed
-metrics); any other input runs one eager counting job, and the stages run
-in the consumer's action.
+metrics); any other input runs one eager counting job over the lazy output
+frame, and the stages run in the consumer's action.
 
 Exact-parity semantics preserved (all verified against the reference —
 SURVEY §1.4): survivor-only statistics; eliminated bids keep the scores of
@@ -252,28 +252,27 @@ class StagedEvaluator:
         return plan
 
     def evaluate(self, df: DataFrame, include_details: bool = True,
-                 stats_mode: str = "full",
-                 approx_percentiles: bool = False) -> DataFrame:
+                 stats_mode: str = "full") -> DataFrame:
         """Run all stages over ``df`` → scored/eliminated/ranked frame.
 
-        A driver-local ``df`` (``df.isLocal()``) of at most
+        The stages build one output frame (see :mod:`.pipeline`); the
+        result and :meth:`get_stage_results` are derived from it. A
+        driver-local ``df`` (``df.isLocal()``) of at most
         :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
-        interpreted job: the result is a local frame in ``df``'s session, and
-        errors surface here. Any other input gets a lazy frame, after one
-        eager job that counts the active rows per stage. Either way the
-        counts drive the all-eliminated warning and answer empty input.
-        ``stats_mode`` chooses what
-        :meth:`get_statistics` reports (``"required"``: only the stats each
-        criterion reads); ``approx_percentiles`` swaps exact quantiles for
-        sketch-state ``percentile_approx`` (see ``plans/stats.py``).
+        interpreted job that also counts the active rows per stage: the
+        result is a local frame in ``df``'s session, and errors surface here.
+        Any other input gets a lazy frame, after one eager job over it that
+        counts the active rows per stage. Either way the counts drive the
+        all-eliminated warning and answer empty input. ``stats_mode``
+        chooses what :meth:`get_statistics` reports (``"required"``: only
+        the stats each criterion reads).
         """
         if stats_mode not in ("full", "required"):
             raise ValueError(
                 f"stats_mode must be 'full' or 'required', got: {stats_mode}"
             )
-        plan = self._plan(df, [], stats_mode=stats_mode,
-                          approx_percentiles=approx_percentiles)
-        counts = plan.active_counts(include_details)
+        plan = self._plan(df, [], include_details=include_details, stats_mode=stats_mode)
+        counts = plan.active_counts()
         if counts[0] == 0:
             return self._empty_result(df)
         for stage, n_active in zip(self._stages, counts):
@@ -285,7 +284,7 @@ class StagedEvaluator:
                 )
         plan.skipped = {i for i, n in enumerate(counts) if n == 0}
         self._evaluated = True
-        return plan.result(include_details)
+        return plan.result()
 
     def evaluate_batched(self, df: DataFrame, batch_col: str,
                          include_details: bool = True) -> DataFrame:
@@ -305,9 +304,9 @@ class StagedEvaluator:
         batch's ACTIVE rows and their statistics — exactly the per-batch
         :meth:`evaluate` contract; eliminated rows keep null scores.
         """
-        plan = self._plan(df, [batch_col])
+        plan = self._plan(df, [batch_col], include_details=include_details)
         self._evaluated = True
-        return plan.result(include_details)
+        return plan.result()
 
     def _safe_name(self, name: str) -> str:
         """Stage name → column-name fragment (reference ``staged.py:455-457``)."""
@@ -358,10 +357,10 @@ class StagedEvaluator:
 
     def get_stage_results(self) -> List[StageResult]:
         """Per stage, frames of its scored, advancing and eliminated rows
-        (all with the full output columns), in the caller's session: when
-        :meth:`evaluate` scored a small local input at call time, slices of
-        rows delivered with the elimination index (one more interpreted job,
-        on the first call), else lazy."""
+        (all with the full output columns, details included), in the
+        caller's session: filters of the evaluation's output frame on its
+        elimination index. They run no job here: when :meth:`evaluate`
+        scored a small local input at call time they are data, else lazy."""
         if not self._evaluated:
             raise RuntimeError("Call evaluate() before get_stage_results().")
         plan = self._last_plan

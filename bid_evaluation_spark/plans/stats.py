@@ -28,18 +28,13 @@ from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.criteria import STAT_KEYS
 from ..functions.sql import double, ident
-
-STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
 
 _AGG = {"min": "min", "max": "max", "mean": "avg", "std": "stddev_samp"}
 
 #: position of each quantile stat inside the fused ``q`` array
 _Q_IDX = {"q25": 0, "median": 1, "q75": 2}
-
-#: accuracy for approximate percentiles (~1/accuracy relative rank error);
-#: 10000 ⇒ ≤0.01% rank error with a few KB of sketch state per column
-APPROX_PERCENTILE_ACCURACY = 10000
 
 
 def stat_input(value_sql: str, active: Optional[str] = None) -> str:
@@ -50,18 +45,14 @@ def stat_input(value_sql: str, active: Optional[str] = None) -> str:
     return f"CASE WHEN {cond} THEN {x} END"
 
 
-def stat_aggregates(x: str, keys: Iterable[str], approx: bool = False) -> Dict[str, str]:
+def stat_aggregates(x: str, keys: Iterable[str]) -> Dict[str, str]:
     """Aggregate SQL for the requested stat ``keys`` of input ``x``: one entry
     per min/max/mean/std key, plus ``"q"`` — the fused quantile array — when
-    any quantile is requested. With ``approx``, quantiles use
-    ``percentile_approx`` (O(1) sketch state instead of buffering every
-    value; documented divergence, min/max/mean/std stay exact)."""
+    any quantile is requested."""
     keys = set(keys)
     out = {k: f"{agg}({x})" for k, agg in _AGG.items() if k in keys}
     if keys & _Q_IDX.keys():
-        qs = "array(0.25D, 0.5D, 0.75D)"
-        out["q"] = (f"percentile_approx({x}, {qs}, {APPROX_PERCENTILE_ACCURACY})"
-                    if approx else f"percentile({x}, {qs})")
+        out["q"] = f"percentile({x}, array(0.25D, 0.5D, 0.75D))"
     return out
 
 
@@ -85,15 +76,15 @@ def _unpack(row: Mapping, cols: Mapping[str, str], keys) -> Dict[str, Optional[f
     return out
 
 
-def collect_stats(df: DataFrame, requests: Sequence[Tuple[str, Optional[str], Iterable[str]]],
-                  approx: bool = False) -> List[Dict[str, Optional[float]]]:
+def collect_stats(df: DataFrame, requests: Sequence[Tuple[str, Optional[str], Iterable[str]]]
+                  ) -> List[Dict[str, Optional[float]]]:
     """Statistics for each ``(value_sql, active_sql, keys)`` request in ONE
     job: a single global aggregate over ``df``, collected as one row."""
     aggs: List[str] = []
     names: List[Dict[str, str]] = []
     for i, (v, active, keys) in enumerate(requests):
         cols = {}
-        for k, agg in stat_aggregates(stat_input(v, active), keys, approx).items():
+        for k, agg in stat_aggregates(stat_input(v, active), keys).items():
             cols[k] = f"_bes_{i}_{k}"
             aggs.append(f"{agg} AS {cols[k]}")
         names.append(cols)
@@ -106,7 +97,6 @@ def compute_stats(
     columns: Sequence[str],
     *,
     keys_by_column: Optional[Mapping[str, Iterable[str]]] = None,
-    approx_percentiles: bool = False,
 ) -> Dict[str, Dict[str, Optional[float]]]:
     """The reference's statistics bundle for ``columns`` in ONE job.
 
@@ -118,8 +108,7 @@ def compute_stats(
     uniq = list(dict.fromkeys(columns))
     keysets = [STAT_KEYS if keys_by_column is None else tuple(keys_by_column.get(c, STAT_KEYS))
                for c in uniq]
-    stats = collect_stats(df, [(ident(c), None, ks) for c, ks in zip(uniq, keysets)],
-                          approx_percentiles)
+    stats = collect_stats(df, [(ident(c), None, ks) for c, ks in zip(uniq, keysets)])
     return dict(zip(uniq, stats))
 
 

@@ -314,37 +314,6 @@ def test_evaluate_batched_custom_matches_per_batch(spark):
         {v["final_score"] for v in rb.values()}
 
 
-def test_approx_percentiles_close_to_exact(spark):
-    """approx_percentiles: same ranking, quantile stats within sketch error
-    (exact min/max/mean/std); the 100-TB quantile path."""
-    import random
-
-    rng = random.Random(7)
-    df = spark.createDataFrame(
-        [(i, rng.uniform(0, 1000)) for i in range(2000)],
-        "vendor long, x double",
-    )
-
-    def build():
-        # criteria are keyed by column — one criterion, median-reading
-        return Evaluator().custom("x", 1.0, "proximity_to_median")
-
-    exact = build()
-    r_exact = {r["vendor"]: r["final_score"]
-               for r in exact.evaluate(df).collect()}
-    approx = build()
-    r_approx = {r["vendor"]: r["final_score"]
-                for r in approx.evaluate(df, approx_percentiles=True).collect()}
-
-    st_e, st_a = exact.get_statistics()["x"], approx.get_statistics()["x"]
-    for k in ("min", "max", "mean", "std"):
-        assert st_a[k] == pytest.approx(st_e[k])  # non-quantiles stay exact
-    for k in ("median", "q25", "q75"):
-        assert st_a[k] == pytest.approx(st_e[k], rel=0.01)
-    for v, s in r_exact.items():
-        assert r_approx[v] == pytest.approx(s, rel=0.02, abs=0.5)
-
-
 def test_stats_mode_required_identical_scores(bids_3):
     ev = lambda: (Evaluator()
                   .linear("experience", 0.4)

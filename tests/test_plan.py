@@ -203,6 +203,11 @@ def test_job_counts(spark, tender):
     assert _jobs(spark, lambda: _three_stages().evaluate(local).collect()) == 1
     assert _jobs(spark, lambda: _six(Evaluator()).evaluate(compiled).collect()) == 1
     assert _jobs(spark, lambda: _three_stages().evaluate(compiled).collect()) <= 2
+    # a local staged evaluation's stage results are slices of its delivered rows
+    staged = _three_stages()
+    staged.evaluate(local)
+    assert _jobs(spark, lambda: [f.collect() for r in staged.get_stage_results()
+                                 for f in (r.result_df, r.advanced_df, r.eliminated_df)]) == 0
 
 
 def _executions(spark, action):
@@ -231,6 +236,15 @@ def test_sql_executions_per_local_evaluation(spark, tender):
         build().evaluate(tender).collect()  # warm the path once
         assert _executions(spark, lambda: build().evaluate(tender).collect()) <= budget
         assert _jobs(spark, lambda: build().evaluate(tender).collect()) == 1
+
+
+def test_sql_executions_per_lazy_evaluation(spark, tender):
+    # the input view and the consumer's action; a staged evaluation adds its
+    # counting job
+    compiled = _paths(tender)[1]
+    for build, budget in ((lambda: _six(Evaluator()), 2), (_three_stages, 3)):
+        build().evaluate(compiled).collect()  # warm the path once
+        assert _executions(spark, lambda: build().evaluate(compiled).collect()) <= budget
 
 
 def _compiled_classes(spark, action):
@@ -364,6 +378,20 @@ def test_passthrough_columns_round_trip(spark):
     outs = [Evaluator().linear("v", 1.0).evaluate(f) for f in _paths(df)]
     assert outs[0].schema == outs[1].schema
     assert outs[0].collect() == outs[1].collect()
+
+
+def test_input_columns_named_like_outputs(spark):
+    # re-scoring an earlier result: its `final_score` is a criterion column,
+    # replaced in place by the new one; its `score_v`, named like a detail
+    # column, stays as it is when details are left out
+    pdf = pd.DataFrame({"v": [90.0, 70.0, 50.0], "final_score": [5.0, 6.0, 7.0],
+                        "score_v": [0.5, 0.6, 0.7]})
+    for df in _paths(spark.createDataFrame(pdf)):
+        ev = Evaluator().linear("v", 1.0).linear("final_score", 1.0)
+        result = ev.evaluate(df, include_details=False)
+        assert result.columns == ["v", "final_score", "score_v", "ranking"]
+        assert sorted(r["score_v"] for r in result.collect()) == [0.5, 0.6, 0.7]
+        assert ev.get_statistics()["final_score"]["mean"] == 6.0
 
 
 def _bes_views(session):
