@@ -161,9 +161,9 @@ class Plan:
         self.stats_mode = stats_mode
         self.skipped: set = set()  # stages no bid reached (set by the caller)
         # a local plan: the caller's session, and the active rows per stage
-        # counted while delivering the output frame
+        # counted while delivering the output frame (see :meth:`_counts`)
         self._caller: Optional[SparkSession] = None
-        self._active: Optional[List[int]] = None
+        self._counted: Optional[str] = None
         if not self.keys:
             interpreted = _interpreted(df)
             if interpreted is not None:
@@ -405,8 +405,7 @@ class Plan:
         jdf = frame._jdf
         rows = self._caller._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
         if self.staged:
-            counted = jdf.queryExecution().observedMetrics().get(_ACTIVE).get().getString(0)
-            self._active = [int(n) for n in counted.split(",")]
+            self._counted = jdf.queryExecution().observedMetrics().get(_ACTIVE).get().getString(0)
         return DataFrame(rows, self._caller)
 
     def _without(self, frame: DataFrame, details: bool) -> DataFrame:
@@ -424,10 +423,9 @@ class Plan:
     def active_counts(self) -> List[int]:
         """Active rows per stage: counted while a local plan's rows were
         delivered, else by one job over the lazy output frame."""
-        if self._active is None:
-            counted = self._out.selectExpr(self._counts()).first()[0]
-            self._active = [int(n) for n in counted.split(",")]
-        return self._active
+        if self._counted is None:
+            self._counted = self._out.selectExpr(self._counts()).first()[0]
+        return [int(n) for n in self._counted.split(",")]
 
     def statistics(self) -> List[Dict[str, Dict[str, Optional[float]]]]:
         """Per stage ``{column: stats}`` as reported by ``get_statistics()``:
