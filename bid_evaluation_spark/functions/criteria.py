@@ -71,8 +71,6 @@ class CriterionBase(ABC):
         self.name = name
         self.weight = weight
         self.config = config
-        # filled by get_statistics(), as reference criteria._statistics
-        self._statistics: Dict[str, Optional[float]] = {}
 
     def score_sql(self, v: str, stats: Stats) -> str:
         """Unweighted score of the value column ``v`` (SQL text)."""
@@ -225,13 +223,17 @@ class CustomCriterion(CriterionBase):
     from the reference API. The plan calls it once per partition group with
     the group's active values and their statistics; a statistic that is null
     (no non-NaN value, or ``std`` of one value) reaches it as NaN, as pandas
-    computes it."""
+    computes it. A function that is not callable (``custom(col, w)``, or a
+    misspelt keyword such as ``fn=f``) is rejected here, not in the worker."""
 
     python_scored = True
 
     def __init__(self, name: str, weight: float,
                  evaluation_function: Callable[[pd.Series, Dict], pd.Series],
                  **config: Any):
+        if not callable(evaluation_function):
+            raise TypeError(f"custom criterion '{name}' needs a callable scoring function, "
+                            f"got {evaluation_function!r}")
         super().__init__(name, weight, **config)
         self.evaluation_function = evaluation_function
 

@@ -720,7 +720,7 @@ def formula_translates(
     Observability surface for the silent (and correct) slow path: a
     grammar regression that pushes a previously-native formula onto the
     ~10-100x slower interpreter shows up in a coverage-asserting test
-    instead of a bench (VERDICT r8 task 6).
+    instead of only as a slower benchmark.
     """
     try:
         formula_score_sql(formula, "value", {}, variables or {})

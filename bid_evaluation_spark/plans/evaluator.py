@@ -1,4 +1,5 @@
-"""Plain (single-stage) evaluation engine.
+"""Plain (single-stage) evaluation engine, and the evaluation path it shares
+with :class:`.staged.StagedEvaluator`.
 
 Reference: ``bid_evaluation/evaluator.py`` — fluent interface + config
 factories building a ``{column: criterion}`` map, then an eager pandas
@@ -18,20 +19,27 @@ names, same config vocabulary, same error messages) and re-expresses
    (``evaluator.py:315-317``),
 5. result ordered by ranking (``evaluator.py:319``).
 
+Both evaluators derive from :class:`_EvaluatorBase`, which holds what they
+share: the seven fluent criterion methods (an ``Evaluator`` adds to itself, a
+``StagedEvaluator`` to its last stage), the one ``evaluate`` /
+``evaluate_batched`` path that builds a :class:`.pipeline.Plan` from their
+stages, and the mapping of the plan's statistics to criterion names for
+``get_statistics()``. The plan owns everything an evaluation finds out:
+statistics, survivor counts and the stages no bid reached.
+
 ``evaluate`` over a small driver-local input runs the plan at call time, as
-one interpreted job (see :mod:`.pipeline`); over any other input it runs no
-Spark job, and the consumer's action runs the whole plan as one.
-:meth:`Evaluator.get_statistics` runs one job when called.
+one interpreted job (see :mod:`.pipeline`); over any other input a plain
+evaluation runs no Spark job, and the consumer's action runs the whole plan
+as one. :meth:`Evaluator.get_statistics` runs one job when called.
 
 Scale note: one tender's bid table is scored in one partition. For scoring
 many tenders at once, :meth:`Evaluator.evaluate_batched` partitions every
-window by the batch key — one exchange, no driver loop.
-"""
+window by the batch key — one exchange, no driver loop."""
 
 from __future__ import annotations
 
 import json
-from typing import Any, Callable, Dict, List, Optional, Sequence, Union
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -53,7 +61,151 @@ from .pipeline import Plan
 from .stats import compute_stats, grouped_stats_df  # noqa: F401
 
 
-class Evaluator:
+def _read(filepath: str, parse: Callable) -> Any:
+    """The content of a config file, parsed by ``parse``."""
+    with open(filepath, "r") as f:
+        return parse(f)
+
+
+class _EvaluatorBase:
+    """What :class:`Evaluator` and :class:`.staged.StagedEvaluator` share: the
+    fluent criterion methods, the evaluation path and the statistics report.
+
+    A subclass says where the fluent methods add criteria
+    (:meth:`_target`) and which stages it evaluates (:meth:`_pipeline`).
+    """
+
+    #: the plan of the last evaluation, which every later report reads
+    _last_plan: Optional[Plan] = None
+
+    def _target(self) -> Dict[str, CriterionBase]:
+        """The ``{column: criterion}`` map the fluent methods add to."""
+        raise NotImplementedError
+
+    def _pipeline(self) -> Tuple[List[Tuple[str, "Evaluator", Any, float]], Dict[str, Any]]:
+        """``(stages, Plan options)``: ``(name, evaluator, filter, weight)`` per stage."""
+        raise NotImplementedError
+
+    # === Fluent interface — reference evaluator.py:116-237, staged.py:163-267 ===
+
+    def linear(self, column: str, weight: float, name: Optional[str] = None,
+               higher_is_better: bool = True):
+        self._target()[column] = LinearCriterion(name or column, weight,
+                                                 higher_is_better=higher_is_better)
+        return self
+
+    def threshold(self, column: str, weight: float, thresholds: list,
+                  name: Optional[str] = None):
+        self._target()[column] = ThresholdCriterion(name or column, weight, thresholds=thresholds)
+        return self
+
+    def direct(self, column: str, weight: float, name: Optional[str] = None,
+               input_scale: float = 100):
+        self._target()[column] = DirectScoreCriterion(name or column, weight,
+                                                      input_scale=input_scale)
+        return self
+
+    def min_ratio(self, column: str, weight: float, name: Optional[str] = None):
+        self._target()[column] = MinimumRatioCriterion(name or column, weight)
+        return self
+
+    def formula(self, column: str, weight: float, formula: str = "value",
+                variables: Optional[dict] = None, name: Optional[str] = None):
+        self._target()[column] = FormulaCriterion(name or column, weight,
+                                                  formula=formula, variables=variables)
+        return self
+
+    def custom(self, column: str, weight: float,
+               func: Union[str, Callable, None] = None,
+               name: Optional[str] = None, **kwargs: Any):
+        """Custom criterion: a callable ``(values: pd.Series, stats) -> pd.Series``
+        (python-scored per partition group) or a built-in name
+        (``proximity_to_mean``/``proximity_to_median``/``log_scale``/
+        ``inverse_squared`` — SQL expressions, reference ``evaluator.py:239-251``)."""
+        kind = BuiltinCustomCriterion if isinstance(func, str) else CustomCriterion
+        self._target()[column] = kind(name or column, weight, func, **kwargs)
+        return self
+
+    def template(self, column: str, weight: float, template: str,
+                 name: Optional[str] = None, **params: Any):
+        """Pre-built scoring template criterion (demo vocabulary extension)."""
+        self._target()[column] = TemplateCriterion(name or column, weight, template, **params)
+        return self
+
+    # === Evaluation — reference evaluator.py:275-319, staged.py:271-375 ===
+
+    def _plan(self, df: DataFrame, keys: List[str], **options: Any) -> Plan:
+        stages, plan_options = self._pipeline()
+        columns = df.columns
+        for _, evaluator, _, _ in stages:
+            evaluator._check_columns(columns)
+        self._last_plan = Plan(df, columns, keys, stages, **plan_options, **options)
+        return self._last_plan
+
+    def evaluate(self, df: DataFrame, include_details: bool = True,
+                 stats_mode: str = "full") -> DataFrame:
+        """Evaluate all bids → scored, ranked, sorted DataFrame.
+
+        The result is the plan's one output frame (see :mod:`.pipeline`),
+        less the detail columns when ``include_details`` is false and, for a
+        staged evaluation, less the columns of stages no bid reached. A
+        driver-local ``df`` (``df.isLocal()``, e.g. from
+        ``createDataFrame(pandas_df)``) of at most
+        :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
+        interpreted job: the result is a local frame in ``df``'s session,
+        and errors surface here. Any other input gets a lazy frame, which
+        its consumer's action runs as one job; a staged evaluation first
+        runs one job that counts the active rows per stage. The plan's
+        counts raise the reference's all-eliminated warning here, and an
+        empty staged input leaves the evaluator un-evaluated, as the
+        reference's early return does.
+
+        Args:
+            df: bid table (one row per bid).
+            include_details: include the per-criterion score columns.
+            stats_mode: what ``get_statistics()`` reports — ``"full"``
+                (default, reference parity: the whole 7-stat bundle per
+                criterion column) or ``"required"`` (only the stats each
+                criterion's expression reads). Scores are identical: the plan
+                computes only the statistics its expressions read either way.
+        """
+        if stats_mode not in ("full", "required"):
+            raise ValueError(
+                f"stats_mode must be 'full' or 'required', got: {stats_mode}"
+            )
+        return self._plan(df, [], include_details=include_details,
+                          stats_mode=stats_mode).result()
+
+    def evaluate_batched(self, df: DataFrame, batch_col: str,
+                         include_details: bool = True) -> DataFrame:
+        """Evaluate MANY independent bid tables (tenders/batches) in one plan.
+
+        The same plan as :meth:`evaluate` with every window partitioned by
+        ``batch_col``: per-batch statistics, scores and ranks with one
+        exchange on the batch key and no global one, so each tender's rows
+        match a standalone :meth:`evaluate` over just those rows
+        (differentially tested). Python-scored criteria (``CustomCriterion``,
+        formulas outside the translatable grammar) run in one grouped Arrow
+        step over the batch key per stage, so a user function sees exactly
+        one batch's active rows and statistics.
+
+        Divergences from :meth:`evaluate`: no eager job and no all-eliminated
+        warning (a batch whose bids are all eliminated stops producing
+        scores; other batches continue), and ``get_statistics()`` reports
+        nothing (statistics are per batch).
+        """
+        return self._plan(df, [batch_col], include_details=include_details).result()
+
+    def _statistics(self) -> List[Dict[str, Dict[str, Any]]]:
+        """Per stage of the last plan, its statistics keyed by criterion name
+        (one job, when first read)."""
+        plan = self._last_plan
+        return [{crit.name: stats[col] for col, crit in evaluator.criteria.items()
+                 if stats.get(col)}
+                for (_, evaluator, _, _), stats in zip(plan.stages, plan.statistics())]
+
+
+class Evaluator(_EvaluatorBase):
     """Weighted multi-criteria scoring engine with fluent + config interfaces.
 
     Builder parity with reference ``Evaluator`` (``evaluator.py:21-273``);
@@ -66,8 +218,6 @@ class Evaluator:
     def __init__(self, normalize_weights: bool = True):
         self.criteria: Dict[str, CriterionBase] = {}
         self.normalize_weights = normalize_weights
-        # the plan get_statistics() reads, set by the last single-table evaluation
-        self._last_plan: Optional[Plan] = None
 
     # === Factory methods (from config) — reference evaluator.py:34-112 ===
 
@@ -119,69 +269,15 @@ class Evaluator:
         (reference ``evaluator.py:78-99``)."""
         import yaml
 
-        with open(filepath, "r") as f:
-            data = yaml.safe_load(f)
-        return cls.from_config(data.get("criteria", {}), normalize_weights)
+        return cls.from_config(_read(filepath, yaml.safe_load).get("criteria", {}),
+                               normalize_weights)
 
     @classmethod
     def from_json(cls, filepath: str, normalize_weights: bool = True) -> "Evaluator":
         """Build from a JSON file with a top-level ``criteria`` key
         (reference ``evaluator.py:101-112``)."""
-        with open(filepath, "r") as f:
-            data = json.load(f)
-        return cls.from_config(data.get("criteria", {}), normalize_weights)
-
-    # === Fluent interface — reference evaluator.py:116-237 ===
-
-    def linear(self, column: str, weight: float, name: Optional[str] = None,
-               higher_is_better: bool = True) -> "Evaluator":
-        self.add_criterion(column, LinearCriterion(name or column, weight,
-                                                   higher_is_better=higher_is_better))
-        return self
-
-    def threshold(self, column: str, weight: float, thresholds: list,
-                  name: Optional[str] = None) -> "Evaluator":
-        self.add_criterion(column, ThresholdCriterion(name or column, weight,
-                                                      thresholds=thresholds))
-        return self
-
-    def direct(self, column: str, weight: float, name: Optional[str] = None,
-               input_scale: float = 100) -> "Evaluator":
-        self.add_criterion(column, DirectScoreCriterion(name or column, weight,
-                                                        input_scale=input_scale))
-        return self
-
-    def min_ratio(self, column: str, weight: float, name: Optional[str] = None) -> "Evaluator":
-        self.add_criterion(column, MinimumRatioCriterion(name or column, weight))
-        return self
-
-    def formula(self, column: str, weight: float, formula: str = "value",
-                variables: Optional[dict] = None, name: Optional[str] = None) -> "Evaluator":
-        self.add_criterion(column, FormulaCriterion(name or column, weight,
-                                                    formula=formula, variables=variables))
-        return self
-
-    def custom(self, column: str, weight: float,
-               func: Union[str, Callable, None] = None,
-               name: Optional[str] = None, **kwargs: Any) -> "Evaluator":
-        """Custom criterion: a callable ``(values: pd.Series, stats) -> pd.Series``
-        (python-scored per partition group) or a built-in name
-        (``proximity_to_mean``/``proximity_to_median``/``log_scale``/
-        ``inverse_squared`` — SQL expressions, reference ``evaluator.py:239-251``)."""
-        if isinstance(func, str):
-            self.add_criterion(column, BuiltinCustomCriterion(name or column, weight,
-                                                              func, **kwargs))
-        else:
-            self.add_criterion(column, CustomCriterion(name or column, weight,
-                                                       func, **kwargs))
-        return self
-
-    def template(self, column: str, weight: float, template: str,
-                 name: Optional[str] = None, **params: Any) -> "Evaluator":
-        """Pre-built scoring template criterion (demo vocabulary extension)."""
-        self.add_criterion(column, TemplateCriterion(name or column, weight,
-                                                     template, **params))
-        return self
+        return cls.from_config(_read(filepath, json.load).get("criteria", {}),
+                               normalize_weights)
 
     # === Core methods — reference evaluator.py:255-273 ===
 
@@ -202,6 +298,12 @@ class Evaluator:
         return {name: c.weight / total for name, c in self.criteria.items()}
 
     # === Evaluation — reference evaluator.py:275-319 ===
+
+    def _target(self) -> Dict[str, CriterionBase]:
+        return self.criteria
+
+    def _pipeline(self):
+        return [("", self, None, 1.0)], {"staged": False}
 
     def _check_columns(self, columns: Sequence[str]) -> None:
         existing = set(columns)
@@ -224,76 +326,13 @@ class Evaluator:
             return "CAST(0 AS DOUBLE)"
         return double(total)
 
-    def _plan(self, df: DataFrame, keys: List[str], **options: Any) -> Plan:
-        columns = df.columns
-        self._check_columns(columns)
-        for criterion in self.criteria.values():
-            criterion._statistics = {}
-        plan = Plan(df, columns, keys, [("", self, None, 1.0)], staged=False, **options)
-        self._last_plan = None if keys else plan
-        return plan
-
-    def evaluate(self, df: DataFrame, include_details: bool = True,
-                 stats_mode: str = "full") -> DataFrame:
-        """Evaluate all bids → scored, ranked, sorted DataFrame.
-
-        The result is the plan's one output frame (see :mod:`.pipeline`),
-        less the detail columns when ``include_details`` is false. A
-        driver-local ``df`` (``df.isLocal()``, e.g. from
-        ``createDataFrame(pandas_df)``) of at most
-        :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
-        interpreted job: the result is a local frame in ``df``'s session,
-        and errors surface here. Any other input gets a lazy frame, which
-        its consumer's action runs as one job.
-
-        Args:
-            df: bid table (one row per bid).
-            include_details: include per-criterion ``score_{name}`` columns.
-            stats_mode: what :meth:`get_statistics` reports — ``"full"``
-                (default, reference parity: the whole 7-stat bundle per
-                criterion column) or ``"required"`` (only the stats each
-                criterion's expression reads). Scores are identical: the plan
-                computes only the statistics its expressions read either way.
-        """
-        if stats_mode not in ("full", "required"):
-            raise ValueError(
-                f"stats_mode must be 'full' or 'required', got: {stats_mode}"
-            )
-        plan = self._plan(df, [], include_details=include_details, stats_mode=stats_mode)
-        return plan.result()
-
-    def evaluate_batched(self, df: DataFrame, batch_col: str,
-                         include_details: bool = True) -> DataFrame:
-        """Evaluate MANY independent bid tables (tenders/batches) in one job.
-
-        The same plan as :meth:`evaluate` with every window partitioned by
-        ``batch_col``: per-batch statistics, scores and ranks with one
-        exchange on the batch key and no global one. Python-scored criteria
-        (``CustomCriterion``, formulas outside the translatable grammar) run
-        in one grouped Arrow step over the batch key, so a user function
-        sees exactly one batch's rows and statistics, as in a per-batch
-        :meth:`evaluate`. :meth:`get_statistics` is unavailable here
-        (statistics are per batch).
-        """
-        return self._plan(df, [batch_col], include_details=include_details).result()
-
     # === Introspection — reference evaluator.py:321-344 ===
 
     def get_statistics(self) -> Dict[str, Dict[str, Any]]:
         """Statistics of the last ``evaluate`` call, keyed by criterion name
-        (reference ``evaluator.py:321-329``). Computed on the first call —
-        one Spark job — over the same rows the scores used."""
-        plan = self._last_plan
-        if plan is not None:
-            stage = next(i for i, st in enumerate(plan.stages) if st[1] is self)
-            stats = plan.statistics()[stage]
-            for column, criterion in self.criteria.items():
-                criterion._statistics = stats.get(column, {})
-        statistics = {}
-        for column, criterion in self.criteria.items():
-            if criterion._statistics:
-                statistics[criterion.name] = criterion._statistics
-        return statistics
+        (reference ``evaluator.py:321-329``); empty before it. Computed on the
+        first call — one Spark job — over the same rows the scores used."""
+        return self._statistics()[0] if self._last_plan is not None else {}
 
     def summary(self) -> pd.DataFrame:
         """Driver-side summary of configured criteria (reference

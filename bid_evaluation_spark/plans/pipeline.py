@@ -38,6 +38,16 @@ detail columns; :meth:`Plan.stage_frames` filters on the index;
 :meth:`Plan.active_counts` and :meth:`Plan.statistics` aggregate over it,
 stage ``i``'s active rows being ``_bes_elim IS NULL OR _bes_elim >= i``.
 
+A staged single-table plan decides which stages ran. It counts the active
+rows per stage when it is built (:meth:`Plan._skip`), with the work the
+delivery already does: the observed metric of a local plan's one job, or one
+counting job over a lazy output frame. Stages with no active row are
+:attr:`Plan.skipped`; the plan raises the reference's all-eliminated warning
+for them, unless the input is empty, in which case every stage is skipped
+and the result is the input columns plus ``eliminated_at_stage``,
+``final_score`` and ``ranking``. The evaluators only read what the plan
+found: results, skipped stages and statistics.
+
 The two ways to run the text differ only in how the frame's rows are
 delivered:
 
@@ -58,14 +68,16 @@ delivered:
   it.
 - **Compiled, lazy** — every other input (parquet, ``evaluate_batched``,
   larger local tables): the frame is lazy, and its consumer's action runs it
-  as one job with whole-stage codegen. A staged single-table evaluation runs
-  one eager job first, :meth:`Plan.active_counts`. Views are dropped from
-  the caller's session.
+  as one job with whole-stage codegen. A staged single-table plan runs one
+  eager job when it is built, :meth:`Plan.active_counts`. Views are dropped
+  from the caller's session. Each frame derived from the lazy output frame
+  runs the whole plan again when its consumer collects it.
 """
 
 from __future__ import annotations
 
 import uuid
+import warnings
 from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -146,7 +158,8 @@ class Plan:
     ``include_details`` keeps the per-criterion columns in :meth:`result`.
     A single-table plan over a small driver-local input is *local*: it runs
     interpreted in a clone of the caller's session, and its output frame is
-    delivered as data when the plan is built (see the module docstring).
+    delivered as data when the plan is built (see the module docstring). A
+    staged single-table plan sets :attr:`skipped` when it is built.
     """
 
     def __init__(self, df: DataFrame, columns: Sequence[str], keys: Sequence[str],
@@ -159,7 +172,7 @@ class Plan:
         self.staged = staged
         self.include_details = include_details
         self.stats_mode = stats_mode
-        self.skipped: set = set()  # stages no bid reached (set by the caller)
+        self.skipped: set = set()  # stages no bid reached (see :meth:`_skip`)
         # a local plan: the caller's session, and the active rows per stage
         # counted while delivering the output frame (see :meth:`_counts`)
         self._caller: Optional[SparkSession] = None
@@ -181,6 +194,8 @@ class Plan:
         self._out = self._select(self._outputs(), f"ORDER BY {self._order()}")
         if self._caller is not None:
             self._out = self._deliver(self._out)
+        if self.staged and not self.keys:
+            self._skip()
 
     # --- SQL text ---------------------------------------------------------
 
@@ -408,6 +423,20 @@ class Plan:
             self._counted = jdf.queryExecution().observedMetrics().get(_ACTIVE).get().getString(0)
         return DataFrame(rows, self._caller)
 
+    def _skip(self) -> None:
+        """Skip the stages no bid reached, from the active rows per stage.
+        When bids were eliminated before a stage, warn as the reference does
+        (``staged.py:300-307``, same text); an empty input skips every stage
+        without a warning, as the reference returns early."""
+        counts = self.active_counts()
+        for (name, _, _, _), n_active in zip(self.stages, counts):
+            if n_active == 0 and counts[0]:
+                warnings.warn(
+                    f"All bids were eliminated before stage '{name}'. "
+                    f"Skipping this and subsequent stages."
+                )
+        self.skipped = {i for i, n in enumerate(counts) if n == 0}
+
     def _without(self, frame: DataFrame, details: bool) -> DataFrame:
         """``frame`` without the hidden columns, the columns of stages no bid
         reached and, unless ``details``, the detail columns."""
@@ -422,7 +451,8 @@ class Plan:
 
     def active_counts(self) -> List[int]:
         """Active rows per stage: counted while a local plan's rows were
-        delivered, else by one job over the lazy output frame."""
+        delivered, else by one job over the lazy output frame, on the first
+        call (a staged single-table plan's constructor)."""
         if self._counted is None:
             self._counted = self._out.selectExpr(self._counts()).first()[0]
         return [int(n) for n in self._counted.split(",")]

@@ -22,12 +22,18 @@ windows — no driver loop of jobs, no persist, no join:
   are unbounded window aggregates over the active partition. A null stage
   score fails every filter, as a pandas NaN comparison does.
 
-:meth:`StagedEvaluator.evaluate` needs the active rows per stage, which
-drive the reference's all-eliminated warning (same text, raised during
-``evaluate``) and answer empty input. A small driver-local input is scored
-right there, in one interpreted job that also counts them (observed
-metrics); any other input runs one eager counting job over the lazy output
-frame, and the stages run in the consumer's action.
+The stages' plan also decides which stages ran: for a single-table
+evaluation :class:`.pipeline.Plan` counts the active rows per stage with the
+work it already does (an observed metric of a small local input's one job,
+else one eager counting job over the lazy output frame), raises the
+reference's all-eliminated warning from those counts (same text, during
+``evaluate``), and drops the columns of the stages no bid reached. An empty
+input is the case where no stage ran: the result keeps only the input and
+contract columns.
+
+The fluent criterion methods, ``evaluate`` and ``evaluate_batched`` are
+:class:`.evaluator.Evaluator`'s, through their shared base; the fluent
+methods add to the last stage's evaluator.
 
 Exact-parity semantics preserved (all verified against the reference —
 SURVEY §1.4): survivor-only statistics; eliminated bids keep the scores of
@@ -42,15 +48,14 @@ final_score DESC NULLS LAST)``; stage→column naming ``{safe}_score``,
 from __future__ import annotations
 
 import json
-import warnings
 from dataclasses import dataclass
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Dict, List, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from .evaluator import Evaluator
-from .pipeline import ELIM_COL, Plan, safe_name
+from .evaluator import Evaluator, _EvaluatorBase, _read
+from .pipeline import ELIM_COL, Plan
 # re-exported only for perfbench/tracer.py, which wraps this name (ROADMAP item 4)
 from .stats import compute_stats  # noqa: F401
 
@@ -104,11 +109,11 @@ class StageResult:
     eliminated_df: Optional[DataFrame]
 
 
-class StagedEvaluator:
+class StagedEvaluator(_EvaluatorBase):
     """Sequential multi-stage evaluation with inter-stage elimination.
 
     Builder surface mirrors the reference ``StagedEvaluator``
-    (``staged.py:60-267``): ``add_stage`` + fluent criterion methods routing to
+    (``staged.py:60-267``): ``add_stage`` + fluent criterion methods adding to
     the last stage, plus ``from_config/from_yaml/from_json``.
     """
 
@@ -122,8 +127,6 @@ class StagedEvaluator:
             )
         self.final_score_mode = final_score_mode
         self._stages: List[StageDefinition] = []
-        self._evaluated = False
-        self._last_plan: Optional[Plan] = None
 
     # === Factory methods (reference staged.py:86-159) ===
 
@@ -160,15 +163,11 @@ class StagedEvaluator:
     def from_yaml(cls, filepath: str) -> "StagedEvaluator":
         import yaml
 
-        with open(filepath, "r") as f:
-            data = yaml.safe_load(f)
-        return cls.from_config(data)
+        return cls.from_config(_read(filepath, yaml.safe_load))
 
     @classmethod
     def from_json(cls, filepath: str) -> "StagedEvaluator":
-        with open(filepath, "r") as f:
-            data = json.load(f)
-        return cls.from_config(data)
+        return cls.from_config(_read(filepath, json.load))
 
     # === Fluent interface (reference staged.py:163-267) ===
 
@@ -192,134 +191,26 @@ class StagedEvaluator:
         )
         return self
 
-    def _current_evaluator(self) -> Evaluator:
+    def _target(self) -> Dict[str, Any]:
         if not self._stages:
             raise RuntimeError("No stages defined. Call add_stage() first.")
-        return self._stages[-1].evaluator
-
-    def linear(self, column: str, weight: float, name: Optional[str] = None,
-               higher_is_better: bool = True) -> "StagedEvaluator":
-        self._current_evaluator().linear(column, weight, name, higher_is_better)
-        return self
-
-    def threshold(self, column: str, weight: float, thresholds: list,
-                  name: Optional[str] = None) -> "StagedEvaluator":
-        self._current_evaluator().threshold(column, weight, thresholds, name)
-        return self
-
-    def direct(self, column: str, weight: float, name: Optional[str] = None,
-               input_scale: float = 100) -> "StagedEvaluator":
-        self._current_evaluator().direct(column, weight, name, input_scale)
-        return self
-
-    def min_ratio(self, column: str, weight: float,
-                  name: Optional[str] = None) -> "StagedEvaluator":
-        self._current_evaluator().min_ratio(column, weight, name)
-        return self
-
-    def formula(self, column: str, weight: float, formula: str = "value",
-                variables: Optional[dict] = None,
-                name: Optional[str] = None) -> "StagedEvaluator":
-        self._current_evaluator().formula(column, weight, formula, variables, name)
-        return self
-
-    def custom(self, column: str, weight: float, func: Optional[Callable] = None,
-               name: Optional[str] = None, **kwargs: Any) -> "StagedEvaluator":
-        self._current_evaluator().custom(column, weight, func, name, **kwargs)
-        return self
-
-    def template(self, column: str, weight: float, template: str,
-                 name: Optional[str] = None, **params: Any) -> "StagedEvaluator":
-        self._current_evaluator().template(column, weight, template, name, **params)
-        return self
+        return self._stages[-1].evaluator.criteria
 
     # === Evaluation (reference staged.py:271-375) ===
 
-    def _plan(self, df: DataFrame, keys: List[str], **options: Any) -> Plan:
+    def _pipeline(self):
         if not self._stages:
             raise RuntimeError("No stages defined. Add stages before evaluating.")
-        columns = df.columns
-        for stage in self._stages:
-            stage.evaluator._check_columns(columns)
-            for criterion in stage.evaluator.criteria.values():
-                criterion._statistics = {}
-        stages = [(s.name, s.evaluator, s.filter, s.weight) for s in self._stages]
-        plan = Plan(df, columns, keys, stages, staged=True,
-                    final_mode=self.final_score_mode, **options)
-        for stage in self._stages:
-            stage.evaluator._last_plan = None if keys else plan
-        self._last_plan = plan
+        return ([(s.name, s.evaluator, s.filter, s.weight) for s in self._stages],
+                {"staged": True, "final_mode": self.final_score_mode})
+
+    def _evaluated(self, method: str) -> Plan:
+        """The last plan, unless there is none or no stage ran in it (empty
+        input: the reference returns before recording results)."""
+        plan = self._last_plan
+        if plan is None or len(plan.skipped) == len(plan.stages):
+            raise RuntimeError(f"Call evaluate() before {method}().")
         return plan
-
-    def evaluate(self, df: DataFrame, include_details: bool = True,
-                 stats_mode: str = "full") -> DataFrame:
-        """Run all stages over ``df`` → scored/eliminated/ranked frame.
-
-        The stages build one output frame (see :mod:`.pipeline`); the
-        result and :meth:`get_stage_results` are derived from it. A
-        driver-local ``df`` (``df.isLocal()``) of at most
-        :data:`~.pipeline.LOCAL_ROWS` rows is scored at call time, in one
-        interpreted job that also counts the active rows per stage: the
-        result is a local frame in ``df``'s session, and errors surface here.
-        Any other input gets a lazy frame, after one eager job over it that
-        counts the active rows per stage. Either way the counts drive the
-        all-eliminated warning and answer empty input. ``stats_mode``
-        chooses what :meth:`get_statistics` reports (``"required"``: only
-        the stats each criterion reads).
-        """
-        if stats_mode not in ("full", "required"):
-            raise ValueError(
-                f"stats_mode must be 'full' or 'required', got: {stats_mode}"
-            )
-        plan = self._plan(df, [], include_details=include_details, stats_mode=stats_mode)
-        counts = plan.active_counts()
-        if counts[0] == 0:
-            return self._empty_result(df)
-        for stage, n_active in zip(self._stages, counts):
-            if n_active == 0:
-                # all bids eliminated — same warning text as reference staged.py:300-307
-                warnings.warn(
-                    f"All bids were eliminated before stage '{stage.name}'. "
-                    f"Skipping this and subsequent stages."
-                )
-        plan.skipped = {i for i, n in enumerate(counts) if n == 0}
-        self._evaluated = True
-        return plan.result()
-
-    def evaluate_batched(self, df: DataFrame, batch_col: str,
-                         include_details: bool = True) -> DataFrame:
-        """Staged evaluation of MANY independent bid tables in one plan.
-
-        The same plan as :meth:`evaluate` with every window partitioned by
-        ``batch_col``, so each tender's semantics match a standalone
-        :meth:`evaluate` over just its rows (differentially tested) with one
-        exchange on the batch key and no global one.
-
-        Divergences from :meth:`evaluate` (which mirrors the single-table
-        reference): no eager job and no all-eliminated warning (a batch whose
-        bids are all eliminated simply stops producing scores; other batches
-        continue), and :meth:`get_statistics` is unavailable (statistics are
-        per batch). ``CustomCriterion`` runs in one grouped Arrow step over
-        the batch key per stage that has one: the user fn sees only that
-        batch's ACTIVE rows and their statistics — exactly the per-batch
-        :meth:`evaluate` contract; eliminated rows keep null scores.
-        """
-        plan = self._plan(df, [batch_col], include_details=include_details)
-        self._evaluated = True
-        return plan.result()
-
-    def _safe_name(self, name: str) -> str:
-        """Stage name → column-name fragment (reference ``staged.py:455-457``)."""
-        return safe_name(name)
-
-    def _empty_result(self, df: DataFrame) -> DataFrame:
-        """Empty input → empty frame with contract columns
-        (reference ``staged.py:459-465``)."""
-        return (
-            df.withColumn(self.ELIM_COL, F.lit(None).cast("string"))
-            .withColumn("final_score", F.lit(None).cast("double"))
-            .withColumn("ranking", F.lit(None).cast("long"))
-        )
 
     def release(self) -> None:
         """Kept for callers of earlier versions, which cached per-stage
@@ -349,21 +240,20 @@ class StagedEvaluator:
         return pd.DataFrame(rows)
 
     def get_statistics(self) -> Dict[str, Dict[str, Any]]:
-        """Per stage, the statistics of the stage's active rows (one job,
-        when first called)."""
-        if not self._evaluated:
-            raise RuntimeError("Call evaluate() before get_statistics().")
-        return {s.name: s.evaluator.get_statistics() for s in self._stages}
+        """Per stage, the statistics of the stage's active rows, keyed by
+        criterion name (one job, when first called)."""
+        plan = self._evaluated("get_statistics")
+        return {name: stats for (name, _, _, _), stats in zip(plan.stages, self._statistics())}
 
     def get_stage_results(self) -> List[StageResult]:
         """Per stage, frames of its scored, advancing and eliminated rows
         (all with the full output columns, details included), in the
         caller's session: filters of the evaluation's output frame on its
-        elimination index. They run no job here: when :meth:`evaluate`
-        scored a small local input at call time they are data, else lazy."""
-        if not self._evaluated:
-            raise RuntimeError("Call evaluate() before get_stage_results().")
-        plan = self._last_plan
+        elimination index (None for a stage no bid reached). Getting them
+        runs no job. When :meth:`evaluate` scored a small local input at call
+        time they are data; otherwise each is lazy, and every frame its
+        consumer collects runs the whole plan again."""
+        plan = self._evaluated("get_stage_results")
         return [StageResult(s.name, None, None, None) if i in plan.skipped
                 else StageResult(s.name, *plan.stage_frames(i))
                 for i, s in enumerate(self._stages)]

@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bid_evaluation_spark import Evaluator
+from bid_evaluation_spark import CustomCriterion, Evaluator, StagedEvaluator
 from tests.conftest import rows_by
 
 
@@ -364,3 +364,19 @@ def test_partial_null_column(spark):
     assert res["A"] == 0.0 and res["C"] == 100.0 and res["B"] is None
     st = ev.get_statistics()["v"]
     assert st["min"] == 10.0 and st["max"] == 20.0 and st["mean"] == 15.0
+
+
+def test_custom_without_callable_is_rejected_at_build():
+    """A missing or misspelt scoring function fails when the criterion is
+    built, not inside the Python worker."""
+    builds = [lambda: Evaluator().custom("v", 1.0),
+              lambda: Evaluator().custom("v", 1.0, fn=lambda v, s: v),
+              lambda: StagedEvaluator().add_stage("s").custom("v", 1.0, fn=lambda v, s: v),
+              lambda: CustomCriterion("v", 1.0, None),
+              lambda: CustomCriterion("v", 1.0, 3.0)]
+    for build in builds:
+        with pytest.raises(TypeError, match="callable scoring function"):
+            build()
+    # extra keyword config is still accepted next to a function
+    ev = Evaluator().custom("v", 1.0, lambda v, s: v, note="kept")
+    assert ev.criteria["v"].config == {"note": "kept"}

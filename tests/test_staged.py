@@ -1,6 +1,7 @@
 """Staged-pipeline semantics, ported from the reference's tests
 (``tests/test_staged.py``) and FIXTURES.md golden facts."""
 
+import inspect
 import warnings
 
 import pytest
@@ -197,12 +198,28 @@ def test_all_eliminated_warning(bids_5):
 
 
 def test_empty_input(spark, bids_5):
-    st = two_stage("score_threshold", threshold=65)
-    empty = bids_5.filter(F.lit(False))
-    out = st.evaluate(empty)
-    assert out.count() == 0
-    for c in ("eliminated_at_stage", "final_score", "ranking"):
-        assert c in out.columns
+    """Empty input, driver-local (scored at call time) and lazy, in both final
+    modes: the input columns then the contract columns, no warning, and the
+    evaluator stays un-evaluated (reference early return, SURVEY §1.4-16)."""
+    expected = bids_5.dtypes + [("eliminated_at_stage", "string"),
+                                ("final_score", "double"), ("ranking", "bigint")]
+    lazy = bids_5.filter(F.lit(False))
+    inputs = {"local": spark.createDataFrame(lazy.toArrow()), "lazy": lazy}
+    assert inputs["local"].isLocal() and not inputs["lazy"].isLocal()
+    for mode in ("last_stage", "weighted_combination"):
+        for path, empty in inputs.items():
+            st = two_stage("score_threshold", threshold=65, final_score_mode=mode)
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                out = st.evaluate(empty)
+                assert out.count() == 0
+            # (py4j's unclosed-socket ResourceWarnings are not the engine's)
+            assert [str(w.message) for w in caught
+                    if issubclass(w.category, UserWarning)] == [], (mode, path)
+            assert out.dtypes == expected, (mode, path)
+            for method in (st.get_statistics, st.get_stage_results):
+                with pytest.raises(RuntimeError, match=r"Call evaluate\(\) before"):
+                    method()
 
 
 def test_output_column_contract(bids_5):
@@ -283,6 +300,65 @@ def test_config_equals_fluent(bids_5):
     for v in rf:
         assert rc[v]["final_score"] == pytest.approx(rf[v]["final_score"], abs=1e-9)
         assert rc[v]["eliminated_at_stage"] == rf[v]["eliminated_at_stage"]
+
+
+_FLUENT = ("linear", "threshold", "direct", "min_ratio", "formula", "custom", "template")
+
+
+@pytest.mark.parametrize("method", _FLUENT)
+def test_fluent_signatures_match(method):
+    def params(cls):
+        return [(p.name, p.kind, p.default)
+                for p in inspect.signature(getattr(cls, method)).parameters.values()]
+
+    assert params(Evaluator) == params(StagedEvaluator)
+
+
+def test_config_equals_fluent_every_criterion_type(bids_5):
+    """Every config-supported criterion type, built fluently on the current
+    stage, gives the same rows as the same stages from config."""
+    config = {
+        "final_score_mode": "weighted_combination",
+        "stages": [
+            {
+                "name": "Technical",
+                "weight": 0.6,
+                "filter": {"type": "top_n", "top_n": 4, "on_tie": "exclude"},
+                "criteria": {
+                    "quality_score": {"type": "linear", "weight": 0.4},
+                    "experience": {"type": "threshold", "weight": 0.3,
+                                   "thresholds": [[0, 6, 40], [6, 100, 90]]},
+                    "delivery_days": {"type": "formula", "weight": 0.3,
+                                      "formula": "100 - value"},
+                },
+            },
+            {
+                "name": "Economic",
+                "weight": 0.4,
+                "criteria": {
+                    "bid_amount": {"type": "min_ratio", "weight": 0.5},
+                    "quality_score": {"type": "direct", "weight": 0.2, "input_scale": 90},
+                    "delivery_days": {"type": "template", "weight": 0.3,
+                                      "template": "sweet_spot_range",
+                                      "min_ideal": 30, "max_ideal": 40},
+                },
+            },
+        ],
+    }
+    fluent = (StagedEvaluator(final_score_mode="weighted_combination")
+              .add_stage("Technical", filter_type="top_n", top_n=4, on_tie="exclude",
+                         weight=0.6)
+              .linear("quality_score", 0.4)
+              .threshold("experience", 0.3, thresholds=[(0, 6, 40), (6, 100, 90)])
+              .formula("delivery_days", 0.3, "100 - value")
+              .add_stage("Economic", weight=0.4)
+              .min_ratio("bid_amount", 0.5)
+              .direct("quality_score", 0.2, input_scale=90)
+              .template("delivery_days", 0.3, "sweet_spot_range", min_ideal=30, max_ideal=40))
+    rc = StagedEvaluator.from_config(config).evaluate(bids_5)
+    rf = fluent.evaluate(bids_5)
+    assert rc.columns == rf.columns
+    assert rc.collect() == rf.collect()
 
 
 def test_config_yaml(tmp_path, bids_5):

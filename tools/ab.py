@@ -14,17 +14,28 @@ from the root of a checkout::
 Progress goes to standard error. The last line of standard output is one JSON
 object with, for every metric the runs report: per side the runs, their
 median and interquartile range (linear quartiles); the median of the
-per-pair ratios ``change / base``; how many pairs the change won (by
-``better`` in ``BENCHMARK.json``; lower when the metric is not listed); and
-whether the medians differ by more than the base's IQR. It also gives each
-side's failed operations, summed over its runs. The worktrees live in a
-temporary directory, removed afterwards.
+per-pair ratios ``change / base`` with a seeded bootstrap 95% confidence
+interval; how many pairs the change won (by ``better`` in ``BENCHMARK.json``;
+lower when the metric is not listed); and whether the medians differ by more
+than the base's IQR. Each end-to-end metric, which carries a ``bound``, also
+gets a no-regression verdict:
+
+- ``unresolved`` when the base's IQR / median exceeds the bound, so the runs
+  cannot tell a regression of that size from noise, unless every change run
+  beats every base run;
+- else ``worse`` when the change's median is worse than the base's by more
+  than the bound;
+- else ``within_bound``.
+
+It also gives each side's failed operations, summed over its runs. The
+worktrees live in a temporary directory, removed afterwards.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import random
 import statistics
 import subprocess
 import sys
@@ -57,13 +68,33 @@ def summary(values) -> dict:
             "iqr": q3 - q1}
 
 
-def compare(base, change, lower: bool) -> dict:
+def bootstrap_ci(ratios, resamples: int = 2000, seed: int = 0) -> list:
+    """95% percentile-bootstrap interval of the median of ``ratios``."""
+    rng = random.Random(seed)
+    medians = sorted(statistics.median(rng.choices(ratios, k=len(ratios)))
+                     for _ in range(resamples))
+    return [medians[int(0.025 * resamples)], medians[int(0.975 * resamples) - 1]]
+
+
+def compare(base, change, lower: bool, bound=None) -> dict:
+    """Paired comparison of one metric's runs; with a ``bound`` (an end-to-end
+    metric), also the verdict described in the module docstring."""
     b, c = summary(base), summary(change)
     gap = b["median"] - c["median"]
-    return {"base": b, "change": c,
-            "ratio_median": statistics.median(y / x for x, y in zip(base, change)),
-            "change_better": sum((y < x) if lower else (y > x) for x, y in zip(base, change)),
-            "gap_exceeds_base_iqr": (gap if lower else -gap) > b["iqr"]}
+    ratios = [y / x for x, y in zip(base, change)]
+    out = {"base": b, "change": c,
+           "ratio_median": statistics.median(ratios),
+           "ratio_ci95": bootstrap_ci(ratios),
+           "change_better": sum((y < x) if lower else (y > x) for x, y in zip(base, change)),
+           "gap_exceeds_base_iqr": (gap if lower else -gap) > b["iqr"]}
+    if bound is not None:
+        dominates = max(change) < min(base) if lower else min(change) > max(base)
+        worse_by = (c["median"] / b["median"] - 1) * (1 if lower else -1)
+        if b["iqr"] / b["median"] > bound and not dominates:
+            out["verdict"] = "unresolved"
+        else:
+            out["verdict"] = "worse" if worse_by > bound else "within_bound"
+    return out
 
 
 def main(argv=None) -> int:
@@ -102,9 +133,10 @@ def main(argv=None) -> int:
         parent.rmdir()
 
     lower = {m["name"]: m["better"] == "lower" for m in spec["end_to_end"] + spec["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     metrics = {name: compare([r["metrics"][name]["value"] for r in runs["base"]],
                              [r["metrics"][name]["value"] for r in runs["change"]],
-                             lower.get(name, True))
+                             lower.get(name, True), bounds.get(name))
                for name in runs["base"][0]["metrics"]}
     print(json.dumps({
         "workload": args.workload, "seed": args.seed, "seconds": spec["run_seconds"],
