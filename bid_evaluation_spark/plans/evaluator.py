@@ -34,7 +34,8 @@ as one. :meth:`Evaluator.get_statistics` runs one job when called.
 
 Scale note: one tender's bid table is scored in one partition. For scoring
 many tenders at once, :meth:`Evaluator.evaluate_batched` partitions every
-window by the batch key — one exchange, no driver loop."""
+window by the batch key — one exchange, no driver loop.
+"""
 
 from __future__ import annotations
 
@@ -196,13 +197,12 @@ class _EvaluatorBase:
         """
         return self._plan(df, [batch_col], include_details=include_details).result()
 
-    def _statistics(self) -> List[Dict[str, Dict[str, Any]]]:
+    def _named_statistics(self) -> List[Dict[str, Dict[str, Any]]]:
         """Per stage of the last plan, its statistics keyed by criterion name
         (one job, when first read)."""
         plan = self._last_plan
-        return [{crit.name: stats[col] for col, crit in evaluator.criteria.items()
-                 if stats.get(col)}
-                for (_, evaluator, _, _), stats in zip(plan.stages, plan.statistics())]
+        return [{crit.name: stats[col] for col, crit in criteria.items() if stats.get(col)}
+                for (_, criteria, _, _), stats in zip(plan.stages, plan.statistics())]
 
 
 class Evaluator(_EvaluatorBase):
@@ -332,7 +332,7 @@ class Evaluator(_EvaluatorBase):
         """Statistics of the last ``evaluate`` call, keyed by criterion name
         (reference ``evaluator.py:321-329``); empty before it. Computed on the
         first call — one Spark job — over the same rows the scores used."""
-        return self._statistics()[0] if self._last_plan is not None else {}
+        return self._named_statistics()[0] if self._last_plan is not None else {}
 
     def summary(self) -> pd.DataFrame:
         """Driver-side summary of configured criteria (reference

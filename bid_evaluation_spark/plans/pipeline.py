@@ -151,8 +151,11 @@ def _rebind(plan, session: SparkSession) -> DataFrame:
 class Plan:
     """The plan of one evaluation.
 
-    ``stages`` holds ``(name, evaluator, filter, weight)`` per stage;
-    ``staged`` selects the staged output contract (elimination column,
+    ``stages`` holds ``(name, evaluator, filter, weight)`` per stage; the
+    plan keeps ``(name, criteria, filter, weight)``, not the evaluator, so an
+    evaluator holding its last plan forms no reference cycle with it (the
+    plan's Java objects are released with the evaluator, not by a later
+    garbage collection); ``staged`` selects the staged output contract (elimination column,
     per-stage score and ranking columns, ``final_mode``) over the plain one
     (``score_<name>`` columns, ``final_score``, ``ranking``);
     ``include_details`` keeps the per-criterion columns in :meth:`result`.
@@ -168,7 +171,7 @@ class Plan:
                  stats_mode: str = "full"):
         self.columns = list(columns)
         self.keys = list(keys)
-        self.stages = list(stages)
+        self.stages = [(name, ev.criteria, flt, w) for name, ev, flt, w in stages]
         self.staged = staged
         self.include_details = include_details
         self.stats_mode = stats_mode
@@ -188,7 +191,7 @@ class Plan:
         self._statistics: Optional[List[Dict[str, Dict]]] = None
         self._elim: Optional[str] = None
         self.details: List[Dict[str, str]] = []  # output name → hidden column
-        for i, stage in enumerate(self.stages):
+        for i, stage in enumerate(stages):
             self._stage(i, *stage, last=i == len(self.stages) - 1)
         self._final(final_mode)
         self._out = self._select(self._outputs(), f"ORDER BY {self._order()}")
@@ -371,7 +374,7 @@ class Plan:
         outputs["final_score"] = self._f
         outputs["ranking"] = "_bes_rank"
         by_lower = {k.lower(): k for k in outputs}
-        criteria = {col for _, evaluator, _, _ in self.stages for col in evaluator.criteria}
+        criteria = {col for _, crits, _, _ in self.stages for col in crits}
         select, used = [], set()
         self._inputs: Dict[str, str] = {}  # replaced criterion column → its copy
         for c in self.columns:
@@ -464,10 +467,10 @@ class Plan:
         the bundle. Empty for batched plans, whose statistics are per batch."""
         if self._statistics is None:
             requests, where = [], []
-            for i, (_, evaluator, _, _) in enumerate(self.stages):
+            for i, (_, crits, _, _) in enumerate(self.stages):
                 if i in self.skipped or self.keys:
                     continue
-                for col, crit in evaluator.criteria.items():
+                for col, crit in crits.items():
                     keys = STAT_KEYS if self.stats_mode == "full" else crit.required_stat_keys
                     requests.append((self._inputs.get(col, ident(col)),
                                      _active_at(i) if i else None, keys))

@@ -22,18 +22,13 @@ windows — no driver loop of jobs, no persist, no join:
   are unbounded window aggregates over the active partition. A null stage
   score fails every filter, as a pandas NaN comparison does.
 
-The stages' plan also decides which stages ran: for a single-table
-evaluation :class:`.pipeline.Plan` counts the active rows per stage with the
-work it already does (an observed metric of a small local input's one job,
-else one eager counting job over the lazy output frame), raises the
-reference's all-eliminated warning from those counts (same text, during
-``evaluate``), and drops the columns of the stages no bid reached. An empty
-input is the case where no stage ran: the result keeps only the input and
-contract columns.
-
-The fluent criterion methods, ``evaluate`` and ``evaluate_batched`` are
-:class:`.evaluator.Evaluator`'s, through their shared base; the fluent
-methods add to the last stage's evaluator.
+The plan also decides which stages ran (see :mod:`.pipeline`): a
+single-table plan counts its active rows per stage with work it already
+does, raises the reference's all-eliminated warning (same text, during
+``evaluate``) and drops the columns of the stages no bid reached; an empty
+input runs no stage. The fluent criterion methods and ``evaluate`` /
+``evaluate_batched`` are shared with :class:`.evaluator.Evaluator`; the
+fluent methods add to the last stage.
 
 Exact-parity semantics preserved (all verified against the reference —
 SURVEY §1.4): survivor-only statistics; eliminated bids keep the scores of
@@ -243,7 +238,8 @@ class StagedEvaluator(_EvaluatorBase):
         """Per stage, the statistics of the stage's active rows, keyed by
         criterion name (one job, when first called)."""
         plan = self._evaluated("get_statistics")
-        return {name: stats for (name, _, _, _), stats in zip(plan.stages, self._statistics())}
+        return {name: stats for (name, _, _, _), stats
+                in zip(plan.stages, self._named_statistics())}
 
     def get_stage_results(self) -> List[StageResult]:
         """Per stage, frames of its scored, advancing and eliminated rows

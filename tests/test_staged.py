@@ -301,22 +301,8 @@ def test_config_equals_fluent(bids_5):
         assert rc[v]["final_score"] == pytest.approx(rf[v]["final_score"], abs=1e-9)
         assert rc[v]["eliminated_at_stage"] == rf[v]["eliminated_at_stage"]
 
-
-_FLUENT = ("linear", "threshold", "direct", "min_ratio", "formula", "custom", "template")
-
-
-@pytest.mark.parametrize("method", _FLUENT)
-def test_fluent_signatures_match(method):
-    def params(cls):
-        return [(p.name, p.kind, p.default)
-                for p in inspect.signature(getattr(cls, method)).parameters.values()]
-
-    assert params(Evaluator) == params(StagedEvaluator)
-
-
-def test_config_equals_fluent_every_criterion_type(bids_5):
-    """Every config-supported criterion type, built fluently on the current
-    stage, gives the same rows as the same stages from config."""
+    # every config-supported criterion type, built fluently on the current
+    # stage, gives the same rows as the same stages from config
     config = {
         "final_score_mode": "weighted_combination",
         "stages": [
@@ -359,6 +345,18 @@ def test_config_equals_fluent_every_criterion_type(bids_5):
     rf = fluent.evaluate(bids_5)
     assert rc.columns == rf.columns
     assert rc.collect() == rf.collect()
+
+
+_FLUENT = ("linear", "threshold", "direct", "min_ratio", "formula", "custom", "template")
+
+
+@pytest.mark.parametrize("method", _FLUENT)
+def test_fluent_signatures_match(method):
+    def params(cls):
+        return [(p.name, p.kind, p.default)
+                for p in inspect.signature(getattr(cls, method)).parameters.values()]
+
+    assert params(Evaluator) == params(StagedEvaluator)
 
 
 def test_config_yaml(tmp_path, bids_5):
