@@ -19,13 +19,10 @@ names, same config vocabulary, same error messages) and re-expresses
    (``evaluator.py:315-317``),
 5. result ordered by ranking (``evaluator.py:319``).
 
-Both evaluators derive from :class:`_EvaluatorBase`, which holds what they
-share: the seven fluent criterion methods (an ``Evaluator`` adds to itself, a
-``StagedEvaluator`` to its last stage), the one ``evaluate`` /
-``evaluate_batched`` path that builds a :class:`.pipeline.Plan` from their
-stages, and the mapping of the plan's statistics to criterion names for
-``get_statistics()``. The plan owns everything an evaluation finds out:
-statistics, survivor counts and the stages no bid reached.
+Both evaluators share :class:`_EvaluatorBase`: the seven fluent criterion
+methods, the one ``evaluate`` / ``evaluate_batched`` path and the naming of
+the plan's statistics. What an evaluation finds out (statistics, survivor
+counts, the stages no bid reached) belongs to its plan.
 
 ``evaluate`` over a small driver-local input runs the plan at call time, as
 one interpreted job (see :mod:`.pipeline`); over any other input a plain

@@ -38,15 +38,10 @@ detail columns; :meth:`Plan.stage_frames` filters on the index;
 :meth:`Plan.active_counts` and :meth:`Plan.statistics` aggregate over it,
 stage ``i``'s active rows being ``_bes_elim IS NULL OR _bes_elim >= i``.
 
-A staged single-table plan decides which stages ran. It counts the active
-rows per stage when it is built (:meth:`Plan._skip`), with the work the
-delivery already does: the observed metric of a local plan's one job, or one
-counting job over a lazy output frame. Stages with no active row are
-:attr:`Plan.skipped`; the plan raises the reference's all-eliminated warning
-for them, unless the input is empty, in which case every stage is skipped
-and the result is the input columns plus ``eliminated_at_stage``,
-``final_score`` and ``ranking``. The evaluators only read what the plan
-found: results, skipped stages and statistics.
+A staged single-table plan decides which stages ran (:meth:`Plan._skip`)
+from its active rows per stage: stages with none are skipped, with the
+reference's all-eliminated warning unless the input is empty. With every
+stage skipped, the result is the input plus the three contract columns.
 
 The two ways to run the text differ only in how the frame's rows are
 delivered:
@@ -155,9 +150,10 @@ class Plan:
     plan keeps ``(name, criteria, filter, weight)``, not the evaluator, so an
     evaluator holding its last plan forms no reference cycle with it (the
     plan's Java objects are released with the evaluator, not by a later
-    garbage collection); ``staged`` selects the staged output contract (elimination column,
-    per-stage score and ranking columns, ``final_mode``) over the plain one
-    (``score_<name>`` columns, ``final_score``, ``ranking``);
+    garbage collection). ``staged`` selects the staged output contract
+    (elimination column, per-stage score and ranking columns,
+    ``final_mode``) over the plain one (``score_<name>`` columns,
+    ``final_score``, ``ranking``);
     ``include_details`` keeps the per-criterion columns in :meth:`result`.
     A single-table plan over a small driver-local input is *local*: it runs
     interpreted in a clone of the caller's session, and its output frame is
