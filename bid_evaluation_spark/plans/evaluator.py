@@ -37,7 +37,7 @@ window by the batch key — one exchange, no driver loop.
 from __future__ import annotations
 
 import json
-from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple, Union
+from typing import Any, Callable, Dict, List, Optional, Tuple, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -53,7 +53,6 @@ from ..functions.criteria import (
     TemplateCriterion,
     ThresholdCriterion,
 )
-from ..functions.sql import double, num
 from .pipeline import Plan
 # re-exported only for perfbench/tracer.py, which wraps these names (ROADMAP item 4)
 from .stats import compute_stats, grouped_stats_df  # noqa: F401
@@ -80,8 +79,10 @@ class _EvaluatorBase:
         """The ``{column: criterion}`` map the fluent methods add to."""
         raise NotImplementedError
 
-    def _pipeline(self) -> Tuple[List[Tuple[str, "Evaluator", Any, float]], Dict[str, Any]]:
-        """``(stages, Plan options)``: ``(name, evaluator, filter, weight)`` per stage."""
+    def _pipeline(self) -> Tuple[List[Tuple[str, Dict[str, CriterionBase], Any, float, bool]],
+                                 Dict[str, Any]]:
+        """``(stages, Plan options)``: ``(name, criteria, filter, weight,
+        normalize_weights)`` per stage."""
         raise NotImplementedError
 
     # === Fluent interface — reference evaluator.py:116-237, staged.py:163-267 ===
@@ -134,10 +135,7 @@ class _EvaluatorBase:
 
     def _plan(self, df: DataFrame, keys: List[str], **options: Any) -> Plan:
         stages, plan_options = self._pipeline()
-        columns = df.columns
-        for _, evaluator, _, _ in stages:
-            evaluator._check_columns(columns)
-        self._last_plan = Plan(df, columns, keys, stages, **plan_options, **options)
+        self._last_plan = Plan(df, df.columns, keys, stages, **plan_options, **options)
         return self._last_plan
 
     def evaluate(self, df: DataFrame, include_details: bool = True,
@@ -199,7 +197,7 @@ class _EvaluatorBase:
         (one job, when first read)."""
         plan = self._last_plan
         return [{crit.name: stats[col] for col, crit in criteria.items() if stats.get(col)}
-                for (_, criteria, _, _), stats in zip(plan.stages, plan.statistics())]
+                for (_, criteria, _, _, _), stats in zip(plan.stages, plan.statistics())]
 
 
 class Evaluator(_EvaluatorBase):
@@ -300,28 +298,7 @@ class Evaluator(_EvaluatorBase):
         return self.criteria
 
     def _pipeline(self):
-        return [("", self, None, 1.0)], {"staged": False}
-
-    def _check_columns(self, columns: Sequence[str]) -> None:
-        existing = set(columns)
-        for column in self.criteria:
-            if column not in existing:
-                # reference raises a plain KeyError at bids_df[column]
-                # (evaluator.py:292) — preserve the exception type
-                raise KeyError(column)
-
-    def _final_score_sql(self, weighted: List[str]) -> str:
-        if not weighted:
-            return "CAST(0 AS DOUBLE)"
-        total = weighted[0]
-        for w in weighted[1:]:
-            total = f"({total} + {w})"
-        if self.normalize_weights:
-            total_weight = self.get_total_weight()
-            if total_weight > 0:
-                return double(f"({total} / {num(total_weight)})")
-            return "CAST(0 AS DOUBLE)"
-        return double(total)
+        return [("", self.criteria, None, 1.0, self.normalize_weights)], {"staged": False}
 
     # === Introspection — reference evaluator.py:321-344 ===
 

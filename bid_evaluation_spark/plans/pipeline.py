@@ -4,24 +4,28 @@ All four entry points — :meth:`Evaluator.evaluate` / ``evaluate_batched`` and
 :meth:`StagedEvaluator.evaluate` / ``evaluate_batched`` — build their result
 here, as one plan parameterised by partition keys: ``[]`` for one bid table,
 ``[batch_col]`` for many independent tenders at once. A plain ``Evaluator``
-is a one-stage pipeline. Per stage the plan computes:
+is a one-stage pipeline. A stage is four projections:
 
 1. statistics as window aggregates over the stage's active rows,
    ``min(CASE WHEN <active> AND NOT isnan(v) THEN v END) OVER (PARTITION BY
-   keys)`` (:mod:`.stats`) — Catalyst prunes any statistic nothing reads;
-2. python-scored criteria (custom functions, formulas outside the
-   translatable grammar) in ONE grouped Arrow step over the keys, each group
-   handing the function its active values and their statistics;
-3. weighted criterion scores, masked to the active rows;
-4. the stage score (NaN → null), the stage rank and the ``top_n`` helpers;
-5. the elimination state ``_bes_e<i>``: the index of the eliminating stage,
-   null while a bid is alive — so stages chain windows, and survivor-only
-   statistics are aggregates over the next stage's active rows. A bid whose
-   filter predicate is null (a null stage score) is eliminated, as pandas'
-   NaN comparisons are False.
+   keys)`` (:mod:`.stats`) — Catalyst prunes any statistic nothing reads
+   (python-scored criteria — custom functions, formulas outside the
+   translatable grammar — then run in ONE grouped Arrow step over the keys,
+   each group handing the function its active values and their statistics);
+2. weighted criterion scores, masked to the active rows;
+3. the stage score (NaN → null);
+4. the stage rank ``_bes_<i>_r`` and the elimination state ``_bes_e<i>``:
+   the index of the eliminating stage, null while a bid is alive — so
+   stages chain windows, and survivor-only statistics are aggregates over
+   the next stage's active rows. Every filter is one windowed predicate;
+   ``top_n`` with ``on_tie="exclude"`` advances a bid when at most ``n``
+   bids score at least as high. A bid whose predicate is null (a null stage
+   score) is eliminated, as pandas' NaN comparisons are False.
 
-Then the final score, the rank over the alive bids with a score, and the
-sort. The plan is SQL text, analyzed by ``spark.sql`` over a temporary view
+The final score and ranking are the last stage's (it has no filter, so its
+rank is the rank over the alive bids), unless stage scores are combined:
+then the combination joins the last stage's projection and one more ranks
+it. Then the sort. The plan is SQL text, analyzed by ``spark.sql`` over a temporary view
 of the input: built from Column objects, every function call and operator is
 a Python→JVM round trip (~1,800 per plain tender, ~3,800 per staged one),
 while text costs one call. Names and numbers enter the text only through
@@ -117,6 +121,18 @@ def _active_at(i: int) -> str:
     return f"({_ELIM_IDX} IS NULL OR {_ELIM_IDX} >= {i})"
 
 
+def _stage_score(weighted: List[str], criteria: Dict[str, Any], normalize: bool) -> str:
+    """A stage's score: the sum of its weighted criterion scores, divided by
+    the criteria's total weight when ``normalize`` (0 unless that is positive)."""
+    if not weighted:
+        return "CAST(0 AS DOUBLE)"
+    total = f"({' + '.join(weighted)})"
+    if not normalize:
+        return double(total)
+    total_weight = sum(c.weight for c in criteria.values())
+    return double(f"({total} / {num(total_weight)})") if total_weight > 0 else "CAST(0 AS DOUBLE)"
+
+
 def _interpreted(df: DataFrame) -> Optional[DataFrame]:
     """``df`` in a clone of its session that runs without code generation,
     when ``df`` is a driver-local relation of at most :data:`LOCAL_ROWS` rows;
@@ -146,11 +162,12 @@ def _rebind(plan, session: SparkSession) -> DataFrame:
 class Plan:
     """The plan of one evaluation.
 
-    ``stages`` holds ``(name, evaluator, filter, weight)`` per stage; the
-    plan keeps ``(name, criteria, filter, weight)``, not the evaluator, so an
-    evaluator holding its last plan forms no reference cycle with it (the
-    plan's Java objects are released with the evaluator, not by a later
-    garbage collection). ``staged`` selects the staged output contract
+    ``stages`` holds ``(name, criteria, filter, weight, normalize_weights)``
+    per stage: the criteria map, not the evaluator, so an evaluator holding
+    its last plan forms no reference cycle with it (the plan's Java objects
+    are released with the evaluator, not by a later garbage collection). A
+    criterion column missing from ``columns`` raises ``KeyError(column)``.
+    ``staged`` selects the staged output contract
     (elimination column, per-stage score and ranking columns,
     ``final_mode``) over the plain one (``score_<name>`` columns,
     ``final_score``, ``ranking``);
@@ -162,12 +179,15 @@ class Plan:
     """
 
     def __init__(self, df: DataFrame, columns: Sequence[str], keys: Sequence[str],
-                 stages: Sequence[Tuple[str, Any, Any, float]], *, staged: bool,
+                 stages: Sequence[Tuple[str, Dict[str, Any], Any, float, bool]], *, staged: bool,
                  final_mode: str = "last_stage", include_details: bool = True,
                  stats_mode: str = "full"):
+        missing = [c for _, criteria, _, _, _ in stages for c in criteria if c not in columns]
+        if missing:  # the reference raises a plain KeyError at bids_df[column]
+            raise KeyError(missing[0])
         self.columns = list(columns)
         self.keys = list(keys)
-        self.stages = [(name, ev.criteria, flt, w) for name, ev, flt, w in stages]
+        self.stages = list(stages)
         self.staged = staged
         self.include_details = include_details
         self.stats_mode = stats_mode
@@ -187,9 +207,20 @@ class Plan:
         self._statistics: Optional[List[Dict[str, Dict]]] = None
         self._elim: Optional[str] = None
         self.details: List[Dict[str, str]] = []  # output name → hidden column
-        for i, stage in enumerate(stages):
-            self._stage(i, *stage, last=i == len(self.stages) - 1)
-        self._final(final_mode)
+        # the final score and ranking are the last stage's, unless stage
+        # scores are combined
+        last = len(self.stages) - 1
+        self._f, self._rank = f"_bes_{last}_s", f"_bes_{last}_r"
+        if staged and final_mode == "weighted_combination":
+            self._f = "_bes_f"
+        for i, stage in enumerate(self.stages):
+            self._stage(i, *stage, last=i == last)
+        if self._f == "_bes_f":
+            alive = _alive(self._elim)
+            ranked = "_bes_f IS NOT NULL" if alive is None else f"({alive} AND _bes_f IS NOT NULL)"
+            self._rank = "_bes_rank"
+            self._add({self._rank: f"CASE WHEN {ranked} THEN CAST(rank() "
+                                   f"{self._over(alive, '_bes_f DESC')} AS BIGINT) END"})
         self._out = self._select(self._outputs(), f"ORDER BY {self._order()}")
         if self._caller is not None:
             self._out = self._deliver(self._out)
@@ -232,9 +263,10 @@ class Plan:
 
     # --- stages -----------------------------------------------------------
 
-    def _stage(self, i: int, name: str, evaluator, flt, weight: float, last: bool) -> None:
+    def _stage(self, i: int, name: str, criteria: Dict[str, Any], flt, weight: float,
+               normalize: bool, last: bool) -> None:
         active = _alive(self._elim)
-        crits = list(evaluator.criteria.items())
+        crits = list(criteria.items())
         windows: Dict[str, str] = {}
         refs: Dict[str, Dict[str, str]] = {}
         python = []
@@ -265,16 +297,15 @@ class Plan:
         self.details.append(details)
 
         s = f"_bes_{i}_s"
-        total = evaluator._final_score_sql(list(details.values()))
+        total = _stage_score(list(details.values()), criteria, normalize)
         if active is not None:
             total = double(f"CASE WHEN {active} THEN {total} END")
         self._add({s: f"nanvl({total}, {NULL_DOUBLE})"})
 
-        # stage rank and elimination: windows over the active rows by score
+        # stage rank and elimination, one projection: windows over the
+        # active rows, ordered by score
         ordered = self._over(active, f"{s} DESC")
-        layer: Dict[str, str] = {}
-        if self.staged:
-            layer[f"_bes_{i}_r"] = f"CASE WHEN {s} IS NOT NULL THEN CAST(rank() {ordered} AS BIGINT) END"
+        layer = {f"_bes_{i}_r": f"CASE WHEN {s} IS NOT NULL THEN CAST(rank() {ordered} AS BIGINT) END"}
         flt = None if last else flt
         advances = None
         if flt is not None and flt.type == "score_threshold":
@@ -282,20 +313,14 @@ class Plan:
         elif flt is not None and flt.on_tie == "include":
             advances = f"({s} IS NOT NULL AND (rank() {ordered} <= {int(flt.top_n)}))"
         elif flt is not None:
-            # on_tie="exclude": cutoff = score at descending position n; all
-            # advance when the population is <= n; when more than n rows
-            # score >= cutoff, only rows strictly above it advance
+            # on_tie="exclude": all advance when the population is <= n; else
+            # a bid advances when the n-th score exists and at most n bids
+            # score >= its own (the ordered window's frame includes ties)
             n = int(flt.top_n)
             everyone = self._over(active)
-            layer[f"_bes_{i}_rn"] = f"row_number() {ordered}"
-            self._add(layer)
-            layer = {}
-            self._add({f"_bes_{i}_cut": f"max(CASE WHEN _bes_{i}_rn = {n} THEN {s} END) {everyone}",
-                       f"_bes_{i}_tot": f"count(1) {everyone}"})
-            ge = f"count(CASE WHEN ({s} >= _bes_{i}_cut) THEN 1 END) {everyone}"
-            advances = (f"CASE WHEN (_bes_{i}_tot <= {n}) THEN true "
-                        f"WHEN ({ge} > {n}) THEN ({s} > _bes_{i}_cut) "
-                        f"ELSE ({s} >= _bes_{i}_cut) END")
+            advances = (f"CASE WHEN (count(1) {everyone} <= {n}) THEN true "
+                        f"ELSE ((count({s}) {everyone} >= {n}) AND ({s} IS NOT NULL) "
+                        f"AND (count(1) {ordered} <= {n})) END")
         if advances is not None:
             # a null predicate (null stage score) eliminates: pandas compares NaN as False
             advances = f"coalesce({advances}, false)"
@@ -303,6 +328,8 @@ class Plan:
             e = f"_bes_e{i + 1}"
             layer[e] = f"CASE WHEN {cond} THEN {i} ELSE {self._elim or 'CAST(NULL AS INT)'} END"
             self._elim = e
+        if last and self._f == "_bes_f":
+            layer["_bes_f"] = self._combined()
         self._add(layer)
 
     def _python(self, items) -> None:
@@ -322,25 +349,16 @@ class Plan:
         self._layers = [[f"{p} AS {ident(c)}" for c, p in pos.items()] + outs]
         self._cols += outs
 
-    def _final(self, final_mode: str) -> None:
-        if not self.staged:
-            self._f = "_bes_0_s"
-        elif final_mode == "last_stage":
-            self._f = f"_bes_{len(self.stages) - 1}_s"
-        else:
-            total_weight = sum(w for _, _, _, w in self.stages)
-            final = NULL_DOUBLE
-            if total_weight != 0:
-                final = "0.0D"
-                for i, (_, _, _, w) in enumerate(self.stages):
-                    final = f"({final} + (coalesce(_bes_{i}_s, 0.0D) * {num(w / total_weight)}))"
-                final = f"nanvl({double(final)}, {NULL_DOUBLE})"
-            self._f = "_bes_f"
-            self._add({self._f: final})
-        alive = _alive(self._elim)
-        ranked = f"{self._f} IS NOT NULL" if alive is None else f"({alive} AND {self._f} IS NOT NULL)"
-        self._add({"_bes_rank": f"CASE WHEN {ranked} THEN CAST(rank() "
-                                f"{self._over(alive, f'{self._f} DESC')} AS BIGINT) END"})
+    def _combined(self) -> str:
+        """The weighted combination of the stage scores (a stage score that
+        is null counts as 0)."""
+        total_weight = sum(w for _, _, _, w, _ in self.stages)
+        if total_weight == 0:
+            return NULL_DOUBLE
+        final = "0.0D"
+        for i, (_, _, _, w, _) in enumerate(self.stages):
+            final = f"({final} + (coalesce(_bes_{i}_s, 0.0D) * {num(w / total_weight)}))"
+        return f"nanvl({double(final)}, {NULL_DOUBLE})"
 
     # --- output -----------------------------------------------------------
 
@@ -354,11 +372,11 @@ class Plan:
         stage_of: Dict[str, Tuple[int, bool]] = {}  # output → (stage, is a detail)
         if self.staged:
             cases = " ".join(f"WHEN {i} THEN {string(name)}"
-                             for i, (name, _, _, _) in enumerate(self.stages))
+                             for i, (name, _, _, _, _) in enumerate(self.stages))
             outputs[ELIM_COL] = (f"CASE {self._elim} {cases} END" if self._elim
                                  else "CAST(NULL AS STRING)")
         inputs = {c.lower() for c in self.columns}
-        for i, (name, _, _, _) in enumerate(self.stages):
+        for i, (name, _, _, _, _) in enumerate(self.stages):
             for out, col in self.details[i].items():
                 # without details, an input column named like one stays as it is
                 if self.include_details or out.lower() not in inputs:
@@ -368,9 +386,9 @@ class Plan:
                                  (f"{safe_name(name)}_ranking", f"_bes_{i}_r")):
                     outputs[out], stage_of[out] = col, (i, False)
         outputs["final_score"] = self._f
-        outputs["ranking"] = "_bes_rank"
+        outputs["ranking"] = self._rank
         by_lower = {k.lower(): k for k in outputs}
-        criteria = {col for _, crits, _, _ in self.stages for col in crits}
+        criteria = {col for _, crits, _, _, _ in self.stages for col in crits}
         select, used = [], set()
         self._inputs: Dict[str, str] = {}  # replaced criterion column → its copy
         for c in self.columns:
@@ -428,7 +446,7 @@ class Plan:
         (``staged.py:300-307``, same text); an empty input skips every stage
         without a warning, as the reference returns early."""
         counts = self.active_counts()
-        for (name, _, _, _), n_active in zip(self.stages, counts):
+        for (name, _, _, _, _), n_active in zip(self.stages, counts):
             if n_active == 0 and counts[0]:
                 warnings.warn(
                     f"All bids were eliminated before stage '{name}'. "
@@ -463,7 +481,7 @@ class Plan:
         the bundle. Empty for batched plans, whose statistics are per batch."""
         if self._statistics is None:
             requests, where = [], []
-            for i, (_, crits, _, _) in enumerate(self.stages):
+            for i, (_, crits, _, _, _) in enumerate(self.stages):
                 if i in self.skipped or self.keys:
                     continue
                 for col, crit in crits.items():

@@ -17,10 +17,12 @@ windows — no driver loop of jobs, no persist, no join:
   active at the stage, ``min(CASE WHEN active THEN v END) OVER (...)``.
 - **Survivor ranking**: ``RANK() OVER (PARTITION BY active ORDER BY score
   DESC)`` masked to scored rows (SURVEY §2.5-W3).
-- **top_n tie policy via windows** (SURVEY §2.5-W4, §1.4-12): the cutoff
-  score (value at row_number n), the population count and the ≥-cutoff count
-  are unbounded window aggregates over the active partition. A null stage
-  score fails every filter, as a pandas NaN comparison does.
+- **top_n tie policy via windows** (SURVEY §2.5-W4, §1.4-12): one predicate
+  in the stage's rank projection. ``include`` keeps ranks <= n; ``exclude``
+  keeps every bid when the active population is <= n; else, when at least
+  n bids have a score, each bid with at most n bids scoring as high or
+  higher. A null stage score fails every filter, as a pandas NaN comparison
+  does.
 
 The plan also decides which stages ran (see :mod:`.pipeline`): a
 single-table plan counts its active rows per stage with work it already
@@ -196,7 +198,8 @@ class StagedEvaluator(_EvaluatorBase):
     def _pipeline(self):
         if not self._stages:
             raise RuntimeError("No stages defined. Add stages before evaluating.")
-        return ([(s.name, s.evaluator, s.filter, s.weight) for s in self._stages],
+        return ([(s.name, s.evaluator.criteria, s.filter, s.weight, s.evaluator.normalize_weights)
+                 for s in self._stages],
                 {"staged": True, "final_mode": self.final_score_mode})
 
     def _evaluated(self, method: str) -> Plan:
@@ -238,7 +241,7 @@ class StagedEvaluator(_EvaluatorBase):
         """Per stage, the statistics of the stage's active rows, keyed by
         criterion name (one job, when first called)."""
         plan = self._evaluated("get_statistics")
-        return {name: stats for (name, _, _, _), stats
+        return {name: stats for (name, _, _, _, _), stats
                 in zip(plan.stages, self._named_statistics())}
 
     def get_stage_results(self) -> List[StageResult]:
