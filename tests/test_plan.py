@@ -14,7 +14,7 @@ import warnings
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
@@ -538,8 +538,9 @@ def test_null_stage_score_is_eliminated(spark, flt):
         assert rows[1]["s1_score"] is None and rows[1]["s1_ranking"] is None
 
 
-_STAGE_SCORE = st.one_of(st.sampled_from([None, float("nan"), 0.0, 50.0, 50.0, 100.0]),
-                        st.floats(min_value=0.0, max_value=100.0))
+# half null or NaN, so that fewer than n bids often have a score
+_STAGE_SCORE = st.one_of(st.none(), st.just(float("nan")), st.sampled_from([0.0, 50.0, 100.0]),
+                         st.floats(min_value=0.0, max_value=100.0))
 
 
 @st.composite
@@ -566,6 +567,9 @@ def _score_bids(spark, scores, batch=None):
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(first=_scores_and_filter(), other=st.lists(_STAGE_SCORE, max_size=8))
+# more bids than n, but fewer than n with a score: the n-th score is null
+@example(first=([None, 50.0, None], {"filter_type": "top_n", "on_tie": "exclude", "top_n": 2}),
+         other=[50.0, None, 10.0])
 def test_stage_filter_matches_reference(spark, first, other):
     scores, flt = first
 
