@@ -1,8 +1,10 @@
 """The evaluation plan: what it costs (Python→JVM calls, Spark jobs, SQL
-executions, Java classes compiled, cached frames, temporary views), its two
-ways to run (interpreted for a small driver-local input, compiled and lazy
-otherwise) and their agreement, NaN and ±inf at the statistics, ranking and
-elimination boundary, python-scored criteria on the batched path, and
+executions, Java classes compiled, cached frames, temporary views), its shape
+(layers, helper columns, exchanges), its two ways to run (interpreted for a
+small driver-local input, compiled and lazy otherwise) and their agreement,
+NaN and ±inf at the statistics, ranking and elimination boundary, the stage
+filter against the reference rule, python-scored criteria on the batched
+path, and
 SQL-text safety for hostile names and literals. Expected scores are computed
 with pandas in each test."""
 
