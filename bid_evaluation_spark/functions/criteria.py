@@ -3,13 +3,15 @@
 Reference semantics: ``bid_evaluation/criteria.py`` (six criterion classes that
 transform one pandas Series into weighted 0–100-ish scores). Here each
 criterion emits the SQL text of its score, ``(value_sql, stats) -> str``,
-where ``stats`` maps statistic names to SQL text. The plan builder
-(:mod:`..plans.pipeline`) passes window aggregates over the stage's active
-rows there, so a criterion reads its statistics inside the same plan
-that scores, ranks and sorts, and every score stays a JVM expression.
-Python-scored criteria — :class:`CustomCriterion` and formulas outside the
-translatable grammar — are scored per partition group by the builder's
-Arrow step instead (:meth:`CriterionBase.python_score`).
+where ``stats`` maps every statistic name to SQL text. The plan builder
+(:mod:`..plans.pipeline`) passes references to window aggregates over the
+stage's active rows there and computes the statistics the returned text
+names, so a criterion declares nothing: it reads its statistics inside the
+same plan that scores, ranks and sorts, and every score stays a JVM
+expression. Python-scored criteria — :class:`CustomCriterion` and formulas
+outside the translatable grammar — get the whole bundle and are scored per
+partition group by the builder's Arrow step instead
+(:meth:`CriterionBase.python_score`).
 
 Exact-parity notes (verified against the reference by execution — SURVEY §1.4):
 
@@ -48,9 +50,6 @@ from .sql import double, num, value
 #: number; criterion expressions are written against both.
 Stats = Mapping[str, Any]
 
-#: the reference's full statistics bundle (``criteria.py:19-29``)
-STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
-
 
 class CriterionBase(ABC):
     """Base criterion: ``(name, weight, **config)`` + a SQL score emitter.
@@ -58,10 +57,6 @@ class CriterionBase(ABC):
     Mirrors the reference's ``CriterionBase`` surface (``criteria.py:10-41``)
     but produces lazy SQL expressions instead of eager Series.
     """
-
-    #: the statistics this criterion's expression actually reads — the plan
-    #: computes only these. Conservative default: everything.
-    required_stat_keys: Sequence[str] = STAT_KEYS
 
     #: scored in Python over each partition group (see :meth:`python_score`)
     #: rather than as a SQL expression
@@ -76,8 +71,9 @@ class CriterionBase(ABC):
         """Unweighted score of the value column ``v`` (SQL text)."""
         raise NotImplementedError
 
-    def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
-        """Unweighted scores of one group's active ``values``
+    def python_score(self, values: pd.Series, stats: Dict[str, float]) -> np.ndarray:
+        """Unweighted scores of one group's active ``values`` given their
+        whole statistics bundle, NaN where pandas computes NaN
         (``python_scored`` criteria only)."""
         raise NotImplementedError
 
@@ -96,8 +92,6 @@ class CriterionBase(ABC):
 
 class LinearCriterion(CriterionBase):
     """Min-max linear normalization ×100 (reference ``criteria.py:44-56``)."""
-
-    required_stat_keys = ("min", "max")
 
     def score_sql(self, v: str, stats: Stats) -> str:
         if self.config.get("higher_is_better", True):
@@ -118,8 +112,6 @@ class ThresholdCriterion(CriterionBase):
     ``CASE`` chain here is built by wrapping earlier bands in ``ELSE``.
     """
 
-    required_stat_keys = ()
-
     def score_sql(self, v: str, stats: Stats) -> str:
         thresholds: Sequence[Tuple[float, float, float]] = self.config.get("thresholds", [])
         expr = "0.0D"
@@ -133,8 +125,6 @@ class ThresholdCriterion(CriterionBase):
 class DirectScoreCriterion(CriterionBase):
     """Pre-evaluated score, optionally rescaled, never clipped
     (reference ``criteria.py:77-90``)."""
-
-    required_stat_keys = ()
 
     def score_sql(self, v: str, stats: Stats) -> str:
         input_scale = self.config.get("input_scale", 100)
@@ -151,8 +141,6 @@ class MinimumRatioCriterion(CriterionBase):
     Divergence: a zero denominator yields null (via ``try_divide``) instead of
     the reference's NaN→``IntCastingNaNError`` crash (SURVEY §1.4-8).
     """
-
-    required_stat_keys = ("min",)
 
     def score_sql(self, v: str, stats: Stats) -> str:
         return f"(try_divide({value(stats['min'])}, {double(v)}) * 100.0D)"
@@ -180,18 +168,6 @@ class FormulaCriterion(CriterionBase):
         self.variables = variables or {}
 
     @property
-    def required_stat_keys(self):  # type: ignore[override]
-        # the reference formula namespace exposes exactly these five stats
-        # (criteria.py:137-145); a bare-word scan over-includes harmlessly
-        # when e.g. `min(` is the function form
-        import re as _re
-
-        return tuple(
-            k for k in ("min", "max", "mean", "median", "std")
-            if _re.search(rf"\b{k}\b", self.formula)
-        )
-
-    @property
     def translated(self) -> bool:
         """True when this formula runs as SQL; False when it is
         python-scored by the interpreter (correct either way — this is the
@@ -211,7 +187,7 @@ class FormulaCriterion(CriterionBase):
 
         return formula_score_sql(self.formula, v, stats, self.variables)
 
-    def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
+    def python_score(self, values: pd.Series, stats: Dict[str, float]) -> np.ndarray:
         from .formula import formula_python_scores
 
         return formula_python_scores(self.formula, values, stats, self.variables)
@@ -237,8 +213,7 @@ class CustomCriterion(CriterionBase):
         super().__init__(name, weight, **config)
         self.evaluation_function = evaluation_function
 
-    def python_score(self, values: pd.Series, stats: Dict[str, Optional[float]]) -> np.ndarray:
-        stats = {k: np.nan if v is None else v for k, v in stats.items()}
+    def python_score(self, values: pd.Series, stats: Dict[str, float]) -> np.ndarray:
         return pd.Series(self.evaluation_function(values, stats)).astype("float64").to_numpy()
 
 
@@ -279,14 +254,6 @@ BUILTIN_CUSTOM: Dict[str, Callable[[str, Stats], str]] = {
 }
 
 
-_BUILTIN_STAT_KEYS = {
-    "proximity_to_mean": ("mean",),
-    "proximity_to_median": ("median",),
-    "log_scale": ("max",),
-    "inverse_squared": ("min",),
-}
-
-
 class BuiltinCustomCriterion(CriterionBase):
     """String-named built-in custom function resolved to a SQL expression."""
 
@@ -298,10 +265,6 @@ class BuiltinCustomCriterion(CriterionBase):
             )
         super().__init__(name, weight, **config)
         self.func_name = func_name
-
-    @property
-    def required_stat_keys(self):  # type: ignore[override]
-        return _BUILTIN_STAT_KEYS[self.func_name]
 
     def score_sql(self, v: str, stats: Stats) -> str:
         return BUILTIN_CUSTOM[self.func_name](v, stats)
@@ -319,12 +282,6 @@ class TemplateCriterion(CriterionBase):
             raise ValueError(f"Unknown template: {template}")
         self.template = template
         self.params = params
-
-    @property
-    def required_stat_keys(self):  # type: ignore[override]
-        from . import templates as _t
-
-        return _t.TEMPLATES[self.template]["stat_keys"]
 
     def score_sql(self, v: str, stats: Stats) -> str:
         from . import templates as _t

@@ -16,6 +16,8 @@ translator's own output reaches SQL — fixed function names, operators,
 exact literals and plan column names — never the formula string:
 
 - bare ``min``/``max``/``mean``/``median``/``std`` → the plan's statistics,
+  a null one as NaN (pandas' value for ``std`` of one bid or any statistic
+  of no non-NaN value),
 - call-position ``min(`` / ``max(`` → a left fold reproducing Python's
   ``min``/``max`` loop exactly (incl. its order-dependent NaN behavior:
   ``min(nan, 3) == nan`` but ``min(3, nan) == 3``),
@@ -732,9 +734,11 @@ def formula_translates(
 def formula_score_sql(formula: str, v: str, stats: Mapping[str, Any],
                       variables: Mapping[str, Any]) -> str:
     """Full formula-criterion score as SQL: the translation with errors and
-    NaN → 0.0, clipped to [0, 100]. Raises
-    :class:`FormulaTranslationError` outside the translatable grammar."""
-    names: Dict[str, Any] = {k: StatRef(value(stats[k]) if k in stats else NULL_DOUBLE)
+    NaN → 0.0, clipped to [0, 100]. A null statistic (``std`` of one value,
+    any statistic of no non-NaN value) enters as NaN, as pandas computes it,
+    not as an error. Raises :class:`FormulaTranslationError` outside the
+    translatable grammar."""
+    names: Dict[str, Any] = {k: StatRef(f"coalesce({value(stats.get(k))}, {num(_NAN)})")
                              for k in STAT_NAMES}
     names.update(variables)
     raw = double(formula_to_sql(formula, v, names))

@@ -96,12 +96,11 @@ def distance_from_mean(v: str, stats: Stats, prefer_above: bool = True) -> str:
 
 #: Registry mirroring the reference's ``TEMPLATES`` dict
 #: (``custom_templates.py:170-227``): same keys, display names, descriptions
-#: and parameter schemas, with SQL-emitting functions and the ``stat_keys``
-#: each template reads (the plan computes only those).
+#: and parameter schemas, with SQL-emitting functions (the plan computes the
+#: statistics a template's text reads).
 TEMPLATES: Dict[str, Dict[str, Any]] = {
     "budget_proximity": {
         "function": budget_proximity,
-        "stat_keys": (),
         "name": "Budget Proximity",
         "description": "Score based on closeness to target budget",
         "parameters": {
@@ -110,7 +109,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "sweet_spot_range": {
         "function": sweet_spot_range,
-        "stat_keys": (),
         "name": "Sweet Spot Range",
         "description": "Highest score within ideal range, drops outside",
         "parameters": {
@@ -120,7 +118,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "penalty_function": {
         "function": penalty_function,
-        "stat_keys": (),
         "name": "Penalty Function",
         "description": "Base score minus penalties for exceeding threshold",
         "parameters": {
@@ -131,7 +128,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "bonus_tiers": {
         "function": bonus_tiers,
-        "stat_keys": (),
         "name": "Bonus Tiers",
         "description": "Base score plus bonuses for meeting tier thresholds",
         "parameters": {
@@ -144,7 +140,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "percentage_of_best": {
         "function": percentage_of_best,
-        "stat_keys": ("min", "max"),
         "name": "Percentage of Best",
         "description": "Score as percentage relative to the best value",
         "parameters": {
@@ -153,7 +148,6 @@ TEMPLATES: Dict[str, Dict[str, Any]] = {
     },
     "distance_from_mean": {
         "function": distance_from_mean,
-        "stat_keys": ("mean", "std"),
         "name": "Distance from Mean",
         "description": "Score based on distance from mean",
         "parameters": {

@@ -161,9 +161,10 @@ class _EvaluatorBase:
             include_details: include the per-criterion score columns.
             stats_mode: what ``get_statistics()`` reports — ``"full"``
                 (default, reference parity: the whole 7-stat bundle per
-                criterion column) or ``"required"`` (only the stats each
-                criterion's expression reads). Scores are identical: the plan
-                computes only the statistics its expressions read either way.
+                criterion column) or ``"required"`` (exactly the stats each
+                criterion's SQL text reads; a Python-scored criterion reads
+                the whole bundle). Scores are identical: the plan computes
+                only the statistics its expressions read either way.
         """
         if stats_mode not in ("full", "required"):
             raise ValueError(

@@ -8,10 +8,12 @@ is a one-stage pipeline. A stage is four projections:
 
 1. statistics as window aggregates over the stage's active rows,
    ``min(CASE WHEN <active> AND NOT isnan(v) THEN v END) OVER (PARTITION BY
-   keys)`` (:mod:`.stats`) — Catalyst prunes any statistic nothing reads
+   keys)`` (:mod:`.stats`): those a criterion's SQL text names, as each
+   criterion's score is written against references to the whole bundle
    (python-scored criteria — custom functions, formulas outside the
-   translatable grammar — then run in ONE grouped Arrow step over the keys,
-   each group handing the function its active values and their statistics);
+   translatable grammar — get the whole bundle and then run in ONE grouped
+   Arrow step over the keys, each group handing the function its active
+   values and their statistics, a null one as NaN);
 2. weighted criterion scores, masked to the active rows;
 3. the stage score (NaN → null);
 4. the stage rank ``_bes_<i>_r`` and the elimination state ``_bes_e<i>``:
@@ -85,7 +87,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.sql import NULL_DOUBLE, double, ident, num, string
-from .stats import STAT_KEYS, _Q_IDX, collect_stats, stat_aggregates, stat_input, stat_refs
+from .stats import STAT_KEYS, collect_stats, stat_aggregates, stat_input, stat_refs, unpack
 
 ELIM_COL = "eliminated_at_stage"
 
@@ -205,6 +207,7 @@ class Plan:
         self._layers: List[List[str]] = []
         self._cols = list(self.columns)
         self._statistics: Optional[List[Dict[str, Dict]]] = None
+        self._stat_keys: List[Dict[str, Tuple[str, ...]]] = []  # per stage: column → stats read
         self._elim: Optional[str] = None
         self.details: List[Dict[str, str]] = []  # output name → hidden column
         # the final score and ranking are the last stage's, unless stage
@@ -268,19 +271,24 @@ class Plan:
         active = _alive(self._elim)
         crits = list(criteria.items())
         windows: Dict[str, str] = {}
-        refs: Dict[str, Dict[str, str]] = {}
+        texts: List[str] = []  # each criterion's score: SQL text, or its Python step's column
+        keys: Dict[str, Tuple[str, ...]] = {}
         python = []
         for j, (col, crit) in enumerate(crits):
-            keys = crit.required_stat_keys
-            cols = {}
-            for k, agg in stat_aggregates(stat_input(ident(col), active), keys).items():
-                cols[k] = f"_bes_{i}_{j}_{k}"
-                windows[cols[k]] = f"{agg} {self._over()}"
-            refs[col] = stat_refs(cols, keys)
+            p = f"_bes_{i}_{j}"
+            x = stat_input(ident(col), active)
             if crit.python_scored:
-                stat_cols = {k: (cols["q"], _Q_IDX[k]) if k in _Q_IDX else (cols[k], None)
-                             for k in STAT_KEYS if k in set(keys)}
-                python.append((f"_bes_{i}_{j}_py", col, stat_cols, crit))
+                texts.append(f"{p}_py")
+                keys[col] = STAT_KEYS
+                python.append((texts[-1], col, p, list(stat_aggregates(x, p)), crit))
+            else:
+                # the stats a criterion reads are those its text names
+                refs = stat_refs(p)
+                texts.append(crit.score_sql(ident(col), refs))
+                keys[col] = tuple(k for k, ref in refs.items() if ref in texts[-1])
+            for c, agg in stat_aggregates(x, p, keys[col]).items():
+                windows[c] = f"{agg} {self._over()}"
+        self._stat_keys.append(keys)
         self._add(windows)
         if python:
             self._python(python)
@@ -288,8 +296,7 @@ class Plan:
         prefix = f"{safe_name(name)}_" if self.staged else "score_"
         details: Dict[str, str] = {}
         scores: Dict[str, str] = {}
-        for j, (col, crit) in enumerate(crits):
-            score = f"_bes_{i}_{j}_py" if crit.python_scored else crit.score_sql(ident(col), refs[col])
+        for j, ((col, crit), score) in enumerate(zip(crits, texts)):
             w = crit.weighted_sql(score)
             scores[f"_bes_{i}_{j}_w"] = w if active is None else double(f"CASE WHEN {active} THEN {w} END")
             details[prefix + crit.name] = f"_bes_{i}_{j}_w"
@@ -340,10 +347,10 @@ class Plan:
         included — pass through untouched."""
         pos = {c: f"_bes_p{k}" for k, c in enumerate(self._cols)}
         frame = self._select(", ".join(f"{ident(c)} AS {p}" for c, p in pos.items()))
-        outs = [out for out, _, _, _ in items]
+        outs = [out for out, _, _, _, _ in items]
         schema = StructType(frame.schema.fields + [StructField(o, DoubleType()) for o in outs])
-        scorer = _group_scorer([(out, pos[col], {k: (pos[c], idx) for k, (c, idx) in sc.items()}, crit)
-                                for out, col, sc, crit in items], pos.get(self._elim))
+        scorer = _group_scorer([(out, pos[col], p, {c: pos[c] for c in cols}, crit)
+                                for out, col, p, cols, crit in items], pos.get(self._elim))
         self._frame = frame.groupBy(*[pos[k] for k in self.keys]).applyInArrow(scorer, schema)
         self._coalesce = False
         self._layers = [[f"{p} AS {ident(c)}" for c, p in pos.items()] + outs]
@@ -478,14 +485,15 @@ class Plan:
         """Per stage ``{column: stats}`` as reported by ``get_statistics()``:
         one job over the output frame, in the plan's session (a local plan's
         clone runs it interpreted), when first called; ``stats_mode`` chooses
-        the bundle. Empty for batched plans, whose statistics are per batch."""
+        the full bundle or the statistics each criterion reads, as the plan
+        derived them. Empty for batched plans, whose statistics are per batch."""
         if self._statistics is None:
             requests, where = [], []
             for i, (_, crits, _, _, _) in enumerate(self.stages):
                 if i in self.skipped or self.keys:
                     continue
-                for col, crit in crits.items():
-                    keys = STAT_KEYS if self.stats_mode == "full" else crit.required_stat_keys
+                for col in crits:
+                    keys = STAT_KEYS if self.stats_mode == "full" else self._stat_keys[i][col]
                     requests.append((self._inputs.get(col, ident(col)),
                                      _active_at(i) if i else None, keys))
                     where.append((i, col))
@@ -512,21 +520,20 @@ class Plan:
 
 def _group_scorer(items, elim: Optional[str]):
     """The grouped Arrow step's function: scores each python criterion over
-    one partition group's active rows, with statistics read from the
-    group's window-statistic columns."""
+    one partition group's active rows, with the whole statistics bundle read
+    from the group's window-statistic columns (null as NaN, as pandas
+    computes it)."""
 
     def score(table):
         n = table.num_rows
         active = (np.ones(n, dtype=bool) if elim is None
                   else table.column(elim).is_null().to_numpy(zero_copy_only=False))
-        for out, col, stat_cols, crit in items:
+        for out, col, prefix, stat_cols, crit in items:
             scores = np.full(n, np.nan)
             if active.any():
                 first = int(np.argmax(active))
-                stats = {}
-                for k, (c, idx) in stat_cols.items():
-                    v = table.column(c)[first].as_py()
-                    stats[k] = v[idx] if idx is not None and v is not None else v
+                row = {c: table.column(p)[first].as_py() for c, p in stat_cols.items()}
+                stats = {k: np.nan if v is None else v for k, v in unpack(row, prefix).items()}
                 values = table.column(col).to_pandas().astype("float64")[active]
                 scores[active] = crit.python_score(values.reset_index(drop=True), stats)
             table = table.append_column(out, pa.array(scores, type=pa.float64(), mask=~active))

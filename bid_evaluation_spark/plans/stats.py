@@ -17,9 +17,12 @@ Spark mapping (SURVEY §2.4-A1, §1.4-17):
 
 Inside an evaluation these aggregates are window functions over the stage's
 active rows, ``min(x) OVER (PARTITION BY keys)``, emitted by the plan builder
-(:mod:`.pipeline`): nothing is collected, and Catalyst prunes any statistic
-that no expression reads. The eager helpers below serve
-``get_statistics()`` (one job, when called) and the query registry.
+(:mod:`.pipeline`): nothing is collected. The plan hands each criterion the
+whole bundle's references (:func:`stat_refs`) and emits the aggregates of
+those its SQL text names. This module alone knows the bundle's keys, its
+columns and the quantile packing; :func:`unpack` reads one row of them,
+for ``get_statistics()`` (one job, when called), the query registry and the
+plan's Python step.
 """
 
 from __future__ import annotations
@@ -28,8 +31,10 @@ from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.criteria import STAT_KEYS
 from ..functions.sql import double, ident
+
+#: the reference's full statistics bundle (``criteria.py:19-29``)
+STAT_KEYS = ("min", "max", "mean", "median", "std", "q25", "q75")
 
 _AGG = {"min": "min", "max": "max", "mean": "avg", "std": "stddev_samp"}
 
@@ -45,34 +50,37 @@ def stat_input(value_sql: str, active: Optional[str] = None) -> str:
     return f"CASE WHEN {cond} THEN {x} END"
 
 
-def stat_aggregates(x: str, keys: Iterable[str]) -> Dict[str, str]:
-    """Aggregate SQL for the requested stat ``keys`` of input ``x``: one entry
-    per min/max/mean/std key, plus ``"q"`` — the fused quantile array — when
-    any quantile is requested."""
+def stat_aggregates(x: str, prefix: str, keys: Iterable[str] = STAT_KEYS) -> Dict[str, str]:
+    """Aggregate SQL of input ``x`` for the stats in ``keys``, by column name:
+    ``<prefix>_<stat>`` per min/max/mean/std, and ``<prefix>_q`` — the fused
+    quantile array — when any quantile is requested."""
     keys = set(keys)
-    out = {k: f"{agg}({x})" for k, agg in _AGG.items() if k in keys}
+    out = {f"{prefix}_{k}": f"{agg}({x})" for k, agg in _AGG.items() if k in keys}
     if keys & _Q_IDX.keys():
-        out["q"] = f"percentile({x}, array(0.25D, 0.5D, 0.75D))"
+        out[f"{prefix}_q"] = f"percentile({x}, array(0.25D, 0.5D, 0.75D))"
     return out
 
 
-def stat_refs(cols: Mapping[str, str], keys: Iterable[str]) -> Dict[str, str]:
-    """SQL text of each stat in ``keys``, given the columns ``cols`` holding
-    :func:`stat_aggregates` results (quantiles index the ``q`` array)."""
-    return {k: f"{cols['q']}[{_Q_IDX[k]}]" if k in _Q_IDX else cols[k]
-            for k in STAT_KEYS if k in set(keys)}
+def stat_refs(prefix: str) -> Dict[str, str]:
+    """SQL text of every stat of the bundle held in the
+    :func:`stat_aggregates` columns of ``prefix``. Each is a name no other
+    prefix's text contains, so the stats an expression reads are those whose
+    reference its text contains."""
+    return {k: f"{prefix}_q[{_Q_IDX[k]}]" if k in _Q_IDX else f"{prefix}_{k}"
+            for k in STAT_KEYS}
 
 
-def _unpack(row: Mapping, cols: Mapping[str, str], keys) -> Dict[str, Optional[float]]:
+def unpack(row: Mapping, prefix: str, keys: Iterable[str] = STAT_KEYS
+           ) -> Dict[str, Optional[float]]:
+    """The stats in ``keys`` from ``row``, a mapping of the
+    :func:`stat_aggregates` columns of ``prefix`` to their values."""
     out: Dict[str, Optional[float]] = {}
     for k in STAT_KEYS:
-        if k not in keys:
-            continue
-        if k in _Q_IDX:
-            q = row[cols["q"]]
+        if k in _Q_IDX and k in keys:
+            q = row[f"{prefix}_q"]
             out[k] = q[_Q_IDX[k]] if q is not None else None
-        else:
-            out[k] = row[cols[k]]
+        elif k in keys:
+            out[k] = row[f"{prefix}_{k}"]
     return out
 
 
@@ -80,36 +88,18 @@ def collect_stats(df: DataFrame, requests: Sequence[Tuple[str, Optional[str], It
                   ) -> List[Dict[str, Optional[float]]]:
     """Statistics for each ``(value_sql, active_sql, keys)`` request in ONE
     job: a single global aggregate over ``df``, collected as one row."""
-    aggs: List[str] = []
-    names: List[Dict[str, str]] = []
-    for i, (v, active, keys) in enumerate(requests):
-        cols = {}
-        for k, agg in stat_aggregates(stat_input(v, active), keys).items():
-            cols[k] = f"_bes_{i}_{k}"
-            aggs.append(f"{agg} AS {cols[k]}")
-        names.append(cols)
+    aggs = [f"{agg} AS {c}" for i, (v, active, keys) in enumerate(requests)
+            for c, agg in stat_aggregates(stat_input(v, active), f"_bes_{i}", keys).items()]
     row = df.selectExpr(*aggs).first() if aggs else {}
-    return [_unpack(row, cols, set(keys)) for cols, (_, _, keys) in zip(names, requests)]
+    return [unpack(row, f"_bes_{i}", set(keys)) for i, (_, _, keys) in enumerate(requests)]
 
 
-def compute_stats(
-    df: DataFrame,
-    columns: Sequence[str],
-    *,
-    keys_by_column: Optional[Mapping[str, Iterable[str]]] = None,
-) -> Dict[str, Dict[str, Optional[float]]]:
-    """The reference's statistics bundle for ``columns`` in ONE job.
-
-    Returns ``{column: {min,max,mean,median,std,q25,q75}}`` (floats or None for
-    empty/all-null input). ``keys_by_column`` limits the stats per column
-    (columns may map to an empty set — they then cost nothing); omitted
-    columns get the full bundle.
-    """
+def compute_stats(df: DataFrame, columns: Sequence[str]) -> Dict[str, Dict[str, Optional[float]]]:
+    """The reference's statistics bundle for ``columns`` in ONE job:
+    ``{column: {min,max,mean,median,std,q25,q75}}`` (floats, or None for
+    empty/all-null input)."""
     uniq = list(dict.fromkeys(columns))
-    keysets = [STAT_KEYS if keys_by_column is None else tuple(keys_by_column.get(c, STAT_KEYS))
-               for c in uniq]
-    stats = collect_stats(df, [(ident(c), None, ks) for c, ks in zip(uniq, keysets)])
-    return dict(zip(uniq, stats))
+    return dict(zip(uniq, collect_stats(df, [(ident(c), None, STAT_KEYS) for c in uniq])))
 
 
 def _bundle_select(columns: Iterable[str]) -> Tuple[List[str], List[str]]:
@@ -117,11 +107,9 @@ def _bundle_select(columns: Iterable[str]) -> Tuple[List[str], List[str]]:
     flattening them to ``{col}__{stat}`` columns."""
     aggs, flat = [], []
     for i, c in enumerate(columns):
-        cols = {}
-        for k, agg in stat_aggregates(stat_input(ident(c)), STAT_KEYS).items():
-            cols[k] = f"_bes_{i}_{k}"
-            aggs.append(f"{agg} AS {cols[k]}")
-        flat += [f"{ref} AS {ident(f'{c}__{k}')}" for k, ref in stat_refs(cols, STAT_KEYS).items()]
+        p = f"_bes_{i}"
+        aggs += [f"{agg} AS {n}" for n, agg in stat_aggregates(stat_input(ident(c)), p).items()]
+        flat += [f"{ref} AS {ident(f'{c}__{k}')}" for k, ref in stat_refs(p).items()]
     return aggs, flat
 
 

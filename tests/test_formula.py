@@ -2,9 +2,10 @@
 FormulaCriterion tests (``tests/test_criteria.py:76-216``), run through BOTH
 the native-translation path and the pandas-UDF fallback."""
 
+import pandas as pd
 import pytest
 
-from bid_evaluation_spark import Evaluator
+from bid_evaluation_spark import Evaluator, StagedEvaluator
 from bid_evaluation_spark.functions.formula import (
     FormulaTranslationError,
     formula_to_sql,
@@ -409,3 +410,42 @@ def test_translated_surface_reports_known_fallbacks():
     # plain membership stays native
     assert FormulaCriterion(
         "x", 1.0, formula="value in [1, 2, 3]").translated
+
+
+# --- a statistic pandas computes as NaN is NaN to a formula, not an error ---
+
+# each reads std, which pandas computes as NaN for one bid; the last is
+# outside the translatable grammar, so it is interpreted either way
+_NAN_STAT_FORMULAS = ["100 if value > std else 50", "50 if std != std else 100",
+                      "clip(std, 0, 100)", "[100, 50][0 if value > std else 1]"]
+
+
+def _reference_scores(formula, values):
+    """Pandas statistics, then the formula evaluated per row in plain Python
+    and clipped to [0, 100], as the reference does."""
+    s = pd.Series(values, dtype="float64")
+    names = {"min": s.min(), "max": s.max(), "mean": s.mean(), "median": s.median(),
+             "std": s.std(), "clip": lambda x, lo, hi: max(lo, min(hi, x))}
+    return [min(max(float(eval(formula, {"__builtins__": {}}, dict(names, value=v))), 0.0), 100.0)
+            for v in values]
+
+
+@pytest.mark.parametrize("force_udf", [False, True])
+@pytest.mark.parametrize("formula", _NAN_STAT_FORMULAS)
+def test_nan_statistic_is_nan_not_an_error(spark, formula, force_udf):
+    want, = _reference_scores(formula, [7.0])
+    assert want in (50.0, 100.0)
+    one_bid = spark.createDataFrame(pd.DataFrame({"vendor": ["A"], "x": [7.0]}))
+    for df in (one_bid, one_bid.select("*")):  # interpreted, compiled
+        assert eval_formula(df, formula, force_udf=force_udf)["A"]["score_x"] == want
+
+    # a top_n stage leaves one survivor, whose std over the survivors is NaN
+    bids = spark.createDataFrame(pd.DataFrame(
+        {"vendor": ["A", "B", "C"], "q": [90.0, 60.0, 30.0], "x": [7.0, 3.0, 5.0]}))
+    for df in (bids, bids.select("*")):
+        se = (StagedEvaluator().add_stage("S1", filter_type="top_n", top_n=1).direct("q", 1.0)
+              .add_stage("S2").formula("x", 1.0, formula))
+        se._target()["x"].config["force_udf"] = force_udf
+        rows = rows_by(se.evaluate(df))
+        assert rows["A"]["s2_score"] == want
+        assert rows["B"]["eliminated_at_stage"] == rows["C"]["eliminated_at_stage"] == "S1"

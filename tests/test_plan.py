@@ -233,6 +233,39 @@ def test_plan_shape(tender, sql_texts, build, layers, combined):
         assert ("_bes_rank" in text) == combined
 
 
+_BUNDLE = {"min", "max", "mean", "median", "std", "q25", "q75"}
+
+
+def _forced_udf_formula(ev):
+    ev.formula("price", 1.0, "value * 2")
+    ev.criteria["price"].config["force_udf"] = True
+    return ev
+
+
+@pytest.mark.parametrize("build, windows, report", [
+    (lambda ev: ev.template("price", 1.0, "percentage_of_best", higher_is_better=True),
+     {"max"}, {"price": {"max"}}),
+    (lambda ev: ev.formula("price", 1.0, "max(value - 5, min)"), {"min"}, {"price": {"min"}}),
+    (lambda ev: ev.threshold("days", 1.0, [(0, 60, 100)]).direct("quality", 1.0),
+     set(), {}),  # a criterion that reads no statistic is not reported
+    (lambda ev: ev.custom("price", 1.0, lambda v, s: v * 0 + s["median"]),
+     {"min", "max", "mean", "std", "q"}, {"price": _BUNDLE}),
+    (_forced_udf_formula, {"min", "max", "mean", "std", "q"}, {"price": _BUNDLE}),
+], ids=["percentage_of_best", "formula_min_fold", "threshold_direct", "custom", "force_udf"])
+def test_statistics_are_those_the_text_reads(tender, sql_texts, build, windows, report):
+    # a SQL criterion's statistics are those its text names; a python-scored
+    # one gets the whole bundle
+    for frame in _paths(tender):
+        sql_texts.clear()
+        ev = build(Evaluator())
+        ev.evaluate(frame, stats_mode="required")
+        text = " ".join(sql_texts)
+        assert set(re.findall(r" AS _bes_0_\d+_(min|max|mean|std|q)\b", text)) == windows
+        if not windows:  # no statistics layer: scores, stage score, rank
+            assert len(re.findall(r"\) AS _bes_q\d+\b", text)) == 3
+        assert {n: set(s) for n, s in ev.get_statistics().items()} == report
+
+
 def test_no_exchange_in_lazy_single_table_plans(tender):
     compiled = _paths(tender)[1]
     custom = Evaluator().linear("price", 1.0).custom("tech", 1.0, lambda v, s: (v - s["min"]) * 2.0)

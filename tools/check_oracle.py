@@ -41,29 +41,14 @@ def _git_head() -> str:
         return "unknown"
 
 
-#: regenerated GATE ARTIFACTS — these are the sweep's own outputs (and
-#: sibling gate outputs), so modifying them must not mark the verified
-#: tree dirty; only source/test/doc modifications invalidate the
-#: header's HEAD claim
-_ARTIFACT_PREFIXES = ("ORACLE_", "BENCHWAVE_", "BENCH_", "artifacts/")
-
-
 def _git_dirty() -> bool:
-    # untracked files are ignored (the in-progress output is untracked
-    # on its first round); tracked gate artifacts are ignored too (they
-    # are regenerated BY the gates) — anything else dirty is a real
-    # unverified change
+    """Whether a tracked file differs from HEAD."""
     try:
-        out = subprocess.check_output(
+        return bool(subprocess.check_output(
             ["git", "status", "--porcelain", "--untracked-files=no"],
-            cwd=_REPO, stderr=subprocess.DEVNULL).decode()
+            cwd=_REPO, stderr=subprocess.DEVNULL).strip())
     except Exception:
         return False
-    for line in out.splitlines():
-        path = line[3:].strip()
-        if not path.startswith(_ARTIFACT_PREFIXES):
-            return True
-    return False
 
 
 def normalize(rows, columns):
@@ -86,6 +71,15 @@ def normalize(rows, columns):
     return [sorted(columns), out]
 
 
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table in ``sf_dir``."""
+    con = duckdb.connect()
+    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        t = os.path.basename(path)[: -len(".parquet")]
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
 def main():
     argv = sys.argv[1:]
     families = []
@@ -102,23 +96,13 @@ def main():
     only = set(args[1:])
 
     spark = get_spark("check-oracle")
-    con = duckdb.connect()
-    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        t = os.path.basename(path)[: -len(".parquet")]
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-        )
+    con = duckdb_views(sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
     n_oracled = sum(1 for k in qs if oracles.get(k) is not None)
-    # machine-printed registry count — docs quote THIS header, never a
-    # hand count (the r6 close-out docs drifted to 280 vs the real 279)
-    # HEAD hash in the header makes each committed sweep artifact
-    # provably cover a specific tree (r9 judge task: a post-sweep source
-    # commit left the shipped tree formally unverified); "+dirty" flags
-    # uncommitted changes so the artifact can't masquerade as covering
-    # any commit at all.
+    # the registry count as printed here, and the commit checked ("+dirty"
+    # when a tracked file differs from it)
     head = _git_head()[:12] + ("+dirty" if _git_dirty() else "")
     print(f"registry: {len(qs)} queries, {n_oracled} with value oracles, "
           f"{len(qs) - n_oracled} rows-only; sf_dir={sf_dir}; "
